@@ -1,10 +1,14 @@
 """spark-submit entry: recommend a watermark delay from measured lateness.
 
-Usage::
+Usage (cluster; spark-submit takes the job's script path)::
 
-    spark-submit --py-files sdv.zip -m spanner_data_validator_spark.jobs.recommend_watermark \
+    spark-submit --py-files sdv.zip \
+        spanner_data_validator_spark/jobs/recommend_watermark.py \
         --input /data/transcripts --arrival ingest_seq --ts ts \
         --pcts 95,99,100 [--json out.json]
+
+Usage (local): ``python -m spanner_data_validator_spark.jobs.recommend_watermark``
+with the same arguments.
 
 Reads a parquet table carrying an arrival-order column (an ingest sequence
 number, Kafka offset, or file drop index — anything unique and increasing

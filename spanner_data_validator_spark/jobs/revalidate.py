@@ -163,9 +163,7 @@ def revalidate_delta_report(spark: SparkSession, sink, checkpoint: str,
     revalidation of the current directories (the oracle law)."""
     changed = delta_ranges(spark, checkpoint, src_dir, tgt_dir)
     rid = (F.col("conv_id").cast("long") % n_ranges).cast("int")
-    prior_rows = (sink.read_rows(spark) if hasattr(sink, "read_rows")
-                  else sink.rows_sink.read_committed(spark))
-    prior = (prior_rows.withColumn("range_id", rid)
+    prior = (sink.read_rows(spark).withColumn("range_id", rid)
              .where(~F.col("range_id").isin(*changed) if changed
                     else F.lit(True))
              .groupBy("range_id", "status").agg(F.count("*").alias("n")))
@@ -182,14 +180,17 @@ def main(argv: list[str] | None = None) -> None:
     """spark-submit surface for the nightly delta re-check::
 
         spark-submit --py-files sdv.zip \
-            -m spanner_data_validator_spark.jobs.revalidate \
+            spanner_data_validator_spark/jobs/revalidate.py \
             --source /path/src --target /path/tgt \
             --checkpoint /path/ckpt --prior-out /path/out \
             --report /path/delta_report
 
-    ``--checkpoint`` / ``--prior-out`` are the previous streaming
-    validation run's checkpoint and sink directory; the merged
-    per-(range, status) report lands under ``--report``.
+    (``python -m spanner_data_validator_spark.jobs.revalidate`` for local
+    runs.) ``--checkpoint`` / ``--prior-out`` are the previous streaming
+    validation run's checkpoint and sink directory; ``--prior-out`` must be
+    a ``TallyForeachBatch`` directory in the one-marker layout
+    (``<out>/_commits/<id>``). The merged per-(range, status) report lands
+    under ``--report``.
     """
     import argparse
 

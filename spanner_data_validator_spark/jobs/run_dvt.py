@@ -11,11 +11,14 @@ Mirrors JDBCToSpannerDVTWithHash.runDVT (JDBCToSpannerDVTWithHash.java:852-880):
   fingerprint → classify → tally, jobs/query_spec_runner) and write the
   combined ComparerResult table to ``--out``.
 
-Usage::
+Usage (cluster; spark-submit takes the job's script path)::
 
-    spark-submit --py-files sdv.zip -m spanner_data_validator_spark.jobs.run_dvt \\
+    spark-submit --py-files sdv.zip spanner_data_validator_spark/jobs/run_dvt.py \\
         --session-file session.json --table-spec-json overrides.json \\
         --source-url jdbc:mysql://... --target-url jdbc:... --out /path/report
+
+Usage (local): ``python -m spanner_data_validator_spark.jobs.run_dvt`` with
+the same arguments.
 """
 
 from __future__ import annotations

@@ -7,15 +7,25 @@ Streaming dataflow (the north-star pipeline):
     target stream ─ fingerprint ─┘                (or applyInPandasWithState)│
                                                                             ▼
                      exactly-once foreachBatch sink (classified rows,
-                     per-window tallies, mismatch rows — batch-id fenced)
+                     per-window tallies, mismatch rows — one commit marker)
+
+The streaming sink (``streaming/sink.TallyForeachBatch``) stages each
+micro-batch as ``<out>/{classified,tallies,mismatches}/batch=<id>`` and
+publishes all three with the one marker ``<out>/_commits/<id>``.
 
 Batch mode runs the identical classify expression on static DataFrames —
 used by tests to prove stream/batch count equality on the same input.
 
-Usage (cluster):
-    spark-submit --py-files sdv.zip -m spanner_data_validator_spark.jobs.validate_transcripts \
+Usage (cluster; spark-submit takes the job's script path):
+    spark-submit --py-files sdv.zip \
+        spanner_data_validator_spark/jobs/validate_transcripts.py \
         --source /path/src --target /path/tgt --out /path/out \
         --checkpoint /path/ckpt --watermark "10 minutes" --band "2 hours"
+
+Usage (local):
+    python -m spanner_data_validator_spark.jobs.validate_transcripts \
+        --source /path/src --target /path/tgt --out /path/out \
+        --checkpoint /path/ckpt
 
 Watermark note: an idle file stream never advances its watermark past
 ``max(ts) - delay``, so the final keys' outer/timeout results stay in state
@@ -117,7 +127,6 @@ def run_streaming_validation(
     dedup_keys: bool = False,
     state_store: str | None = None,
     projected_state_keys: int | None = None,
-    atomic_sink: bool = False,
 ) -> TallyForeachBatch:
     """Run the streaming pipeline; returns the sink for result readback.
 
@@ -174,15 +183,7 @@ def run_streaming_validation(
         classified = classify_stream(s, t, band=band)
     classified = classified.where(sentinel_filter())
 
-    # atomic_sink: ONE commit marker covers classified/tallies/mismatches
-    # (both-or-neither publication, streaming/sink.AtomicTallySink); the
-    # default TallyForeachBatch fences per table and heals torn batches on
-    # replay instead
-    if atomic_sink:
-        from spanner_data_validator_spark.streaming.sink import AtomicTallySink
-        sink = AtomicTallySink(out_dir, window_duration=window_duration)
-    else:
-        sink = TallyForeachBatch(out_dir, window_duration=window_duration)
+    sink = TallyForeachBatch(out_dir, window_duration=window_duration)
     sink.state_store = next(
         (name for name, cls in STATE_STORE_CLASSES.items()
          if cls == spark.conf.get(provider_key, "")), None)

@@ -1603,8 +1603,7 @@ def _shuffle_partitions(spark, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None,
-                       atomic: bool = False):
+def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
     import tempfile
 
     from spanner_data_validator_spark.jobs.validate_transcripts import (
@@ -1635,13 +1634,10 @@ def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None,
     try:
         sink = run_streaming_validation(
             spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
-            watermark="10 minutes", band="2 hours", engine=engine,
-            atomic_sink=atomic)
+            watermark="10 minutes", band="2 hours", engine=engine)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    res = (sink.read_rows(spark) if atomic
-           else sink.rows_sink.read_committed(spark))
-    return res.groupBy("status").agg(F.count("*").alias("n"))
+    return sink.read_rows(spark).groupBy("status").agg(F.count("*").alias("n"))
 
 
 @register("validate_stream_totals", _ev_transcript_cte())
@@ -1654,13 +1650,13 @@ def q_validate_stream_totals(spark, sf_dir):
 
 @register("validate_stream_atomic_totals", _ev_transcript_cte())
 def q_validate_stream_atomic_totals(spark, sf_dir):
-    """The streaming validator landing through the ATOMIC multi-table sink
-    (streaming/sink.AtomicTallySink): one commit marker covers classified
-    rows, per-window tallies, and mismatch rows — both-or-neither
-    publication (crash-window law pinned in tests/test_atomic_sink.py).
-    Totals must equal the batch full-outer oracle exactly, like the
-    default-sink twin validate_stream_totals."""
-    return _run_stream_totals(spark, sf_dir, "join", atomic=True)
+    """Registry twin of validate_stream_totals: the same streaming run
+    through the same sink (streaming/sink.TallyForeachBatch, one commit
+    marker over classified rows, per-window tallies and mismatch rows —
+    both-or-neither, pinned in tests/test_atomic_sink.py). Kept registered
+    because CORRECTNESS_r05.json names it; totals must equal the batch
+    full-outer oracle exactly."""
+    return _run_stream_totals(spark, sf_dir, "join")
 
 
 def _revalidate_oracle() -> str:

@@ -9,7 +9,7 @@ from spanner_data_validator_spark.streaming.validate_stream import (  # noqa: F4
 from spanner_data_validator_spark.streaming.stateful import classify_stateful  # noqa: F401
 from spanner_data_validator_spark.streaming.sink import (  # noqa: F401
     AtomicMultiParquetSink,
-    AtomicTallySink,
+    CommitLedger,
     ExactlyOnceParquetSink,
     TallyForeachBatch,
     merge_into_iceberg,

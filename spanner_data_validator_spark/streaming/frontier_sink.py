@@ -12,8 +12,8 @@ survives in the union survived in each side, so summing per-(x, y)
 Exactly-once via the same chain-of-immutable-versions fencing as
 ``ivm_sink.ViewMaintenanceSink``: a replayed batch id recomputes from the
 same committed predecessor and lands in the same directory behind an
-atomic marker, so double-apply is impossible (critical here — n_points
-would double).
+atomic ``streaming.sink.CommitLedger`` marker, so double-apply is
+impossible (critical here — n_points would double).
 
 At 100 TB the per-batch work is one distributed local-prune over the
 batch (operators/skyline.pareto_frontier stage 1) plus a merge against a
@@ -23,7 +23,6 @@ cost is proportional to the FRONTIER, never the corpus.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -34,6 +33,7 @@ from spanner_data_validator_spark.operators.skyline import (
     pareto_frontier,
     sweep_collapsed,
 )
+from spanner_data_validator_spark.streaming.sink import CommitLedger
 
 __all__ = ["FrontierMaintenanceSink"]
 
@@ -47,39 +47,25 @@ class FrontierMaintenanceSink:
         self.spark = spark
         self.out_dir = out_dir
         self.x_col, self.y_col = x_col, y_col
-        os.makedirs(os.path.join(out_dir, "_commits"), exist_ok=True)
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_commits", str(batch_id))
-
-    def is_committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._marker(batch_id))
-
-    def _committed_ids(self) -> list[int]:
-        d = os.path.join(self.out_dir, "_commits")
-        return sorted(int(x) for x in os.listdir(d) if x.isdigit())
+        self.ledger = CommitLedger(out_dir)
 
     def _path(self, batch_id: int) -> str:
         return os.path.join(self.out_dir, "frontier", f"batch={batch_id}")
 
-    def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "x bigint, y bigint, n_points bigint")
+    def _version(self, batch_id: int | None) -> DataFrame:
+        """The committed frontier at ``batch_id`` (empty for None)."""
+        if batch_id is None:
+            return self.spark.createDataFrame(
+                [], "x bigint, y bigint, n_points bigint")
+        return self.spark.read.parquet(self._path(batch_id))
 
     def latest(self) -> DataFrame:
-        ids = self._committed_ids()
-        return (self.spark.read.parquet(self._path(ids[-1]))
-                if ids else self._empty())
-
-    def _before(self, batch_id: int) -> DataFrame:
-        ids = [i for i in self._committed_ids() if i < batch_id]
-        return (self.spark.read.parquet(self._path(ids[-1]))
-                if ids else self._empty())
+        return self._version(self.ledger.latest_before())
 
     def __call__(self, batch_df: DataFrame | None, batch_id: int) -> None:
-        if self.is_committed(batch_id):
+        if self.ledger.is_committed(batch_id):
             return  # replay of a committed batch: exactly-once no-op
-        prev = self._before(batch_id)
+        prev = self._version(self.ledger.latest_before(batch_id))
         if batch_df is None or batch_df.isEmpty():
             new = prev
         else:
@@ -95,7 +81,4 @@ class FrontierMaintenanceSink:
         target = self._path(batch_id)
         shutil.rmtree(target, ignore_errors=True)  # failed-attempt debris
         new.coalesce(1).write.mode("overwrite").parquet(target)
-        tmp = self._marker(batch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._marker(batch_id))  # atomic commit point
+        self.ledger.commit(batch_id)

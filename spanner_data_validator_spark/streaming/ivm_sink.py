@@ -3,9 +3,9 @@ a materialized aggregate, exactly-once.
 
 Each micro-batch produces view_N = apply_changes(view_{N-1}, batch_N)
 (operators/ivm.py) written to an immutable per-batch directory, committed by
-an atomic marker — the same fencing discipline as
-``streaming.sink.ExactlyOnceParquetSink`` but for REPLACED state rather than
-appended rows:
+an atomic ``streaming.sink.CommitLedger`` marker — the same fencing
+discipline as ``streaming.sink.ExactlyOnceParquetSink`` but for REPLACED
+state rather than appended rows:
 
 * Structured Streaming replays a failed batch under the SAME batch_id; the
   replay recomputes from the same immutable predecessor view and overwrites
@@ -26,7 +26,6 @@ here is the jar-free equivalent.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.operators.ivm import apply_changes
+from spanner_data_validator_spark.streaming.sink import CommitLedger
 
 __all__ = ["ViewMaintenanceSink"]
 
@@ -49,45 +49,26 @@ class ViewMaintenanceSink:
         self.keys = list(keys)
         self.measure_col = measure_col
         self.key_ddl = key_ddl  # e.g. "event_type string"
-        os.makedirs(os.path.join(out_dir, "_commits"), exist_ok=True)
-
-    # -- commit ledger ------------------------------------------------------
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_commits", str(batch_id))
-
-    def is_committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._marker(batch_id))
-
-    def _committed_ids(self) -> list[int]:
-        d = os.path.join(self.out_dir, "_commits")
-        return sorted(int(x) for x in os.listdir(d) if x.isdigit())
+        self.ledger = CommitLedger(out_dir)
 
     def _view_path(self, batch_id: int) -> str:
         return os.path.join(self.out_dir, "view", f"batch={batch_id}")
 
-    # -- view access --------------------------------------------------------
-    def _empty_view(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], f"{self.key_ddl}, n_rows bigint, m_sum bigint")
+    def _view(self, batch_id: int | None) -> DataFrame:
+        """The committed view at ``batch_id`` (empty for None)."""
+        if batch_id is None:
+            return self.spark.createDataFrame(
+                [], f"{self.key_ddl}, n_rows bigint, m_sum bigint")
+        return self.spark.read.parquet(self._view_path(batch_id))
 
     def latest(self) -> DataFrame:
         """The current maintained view (empty before the first commit)."""
-        ids = self._committed_ids()
-        if not ids:
-            return self._empty_view()
-        return self.spark.read.parquet(self._view_path(ids[-1]))
+        return self._view(self.ledger.latest_before())
 
-    def _view_before(self, batch_id: int) -> DataFrame:
-        ids = [i for i in self._committed_ids() if i < batch_id]
-        if not ids:
-            return self._empty_view()
-        return self.spark.read.parquet(self._view_path(ids[-1]))
-
-    # -- foreachBatch -------------------------------------------------------
     def __call__(self, batch_df: DataFrame | None, batch_id: int) -> None:
-        if self.is_committed(batch_id):
+        if self.ledger.is_committed(batch_id):
             return  # replay of a committed batch: exactly-once no-op
-        prev = self._view_before(batch_id)
+        prev = self._view(self.ledger.latest_before(batch_id))
         if batch_df is None:
             new = prev
         else:
@@ -96,7 +77,4 @@ class ViewMaintenanceSink:
         target = self._view_path(batch_id)
         shutil.rmtree(target, ignore_errors=True)  # failed-attempt debris
         new.coalesce(1).write.mode("overwrite").parquet(target)
-        tmp = self._marker(batch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._marker(batch_id))  # atomic commit point
+        self.ledger.commit(batch_id)

@@ -10,17 +10,23 @@ join (the silent failure mode of an undersized watermark; CLAUDE.md's
 waves lesson is this exact mechanism observed from the outside).
 
 Mechanics: input rows carry a ``wave`` column — a delivery-batch sequence
-number (file drop index, Kafka epoch); waves must arrive in order (the
-sink enforces it — a violated contract raises rather than mis-attributing
-lag). Per micro-batch, two bounded passes: per-wave event-time maxima
-plus a carry-in scan over them (tiny — same shape as
-``lateness.arrival_lag``'s bucket scan, here per-batch waves), then the
-per-(wave, ceil-second-lag) tallies against each wave's carried-in
-high-water mark. Partials land in an ``ExactlyOnceParquetSink`` keyed by
-batch id, so replays are no-ops and the cross-batch high-water mark is
-recovered from committed partials on restart (heal-on-replay, the
-``TallyForeachBatch`` protocol). The published histogram is the read-side
-sum of committed partials — no driver-held global state.
+number (file drop index, Kafka epoch). Contract: waves arrive in order,
+and one wave never spans two micro-batches — every wave of a batch must be
+newer than every wave already seen, so a wave delivered as several files
+needs them in ONE trigger (e.g. one file per wave under
+``maxFilesPerTrigger``). The sink enforces it: a batch holding a wave at
+or below the last seen one raises ``ValueError("wave order violated
+...")`` rather than mis-attributing lag (pinned by
+tests/test_lag_monitor.py: ``test_wave_order_violation_raises``,
+``test_wave_split_across_batches_raises``). Per micro-batch, two bounded
+passes: per-wave event-time maxima plus a carry-in scan over them (tiny —
+same shape as ``lateness.arrival_lag``'s bucket scan, here per-batch
+waves), then the per-(wave, ceil-second-lag) tallies against each wave's
+carried-in high-water mark. Partials land in an
+``ExactlyOnceParquetSink`` keyed by batch id, so a replayed batch id is a
+no-op, and on restart the cross-batch high-water mark and last wave are
+rebuilt from the committed partials. The published histogram is the
+read-side sum of committed partials — no driver-held global state.
 
 Scale: the shuffle after the streamed scan carries (wave, lag_s) groups —
 bounded by waves x distinct lag seconds — never rows; the per-batch
@@ -40,7 +46,9 @@ _PARTIAL_SCHEMA = ("wave long, lag_s long, n long, wave_hw_us long")
 
 
 class LagMonitorSink:
-    """``foreachBatch`` callable tallying delivery lag per wave."""
+    """``foreachBatch`` callable tallying delivery lag per wave. Waves must
+    arrive in order and one wave must not span two micro-batches (module
+    docstring); a batch that breaks this raises ``ValueError``."""
 
     def __init__(self, out_dir: str, *, wave_col: str = "wave",
                  ts_col: str = "ts"):

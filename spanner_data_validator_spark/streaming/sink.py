@@ -7,20 +7,30 @@ crash re-merges the same keys and the table converges to the same state
 append-only BigQuery STORAGE_WRITE_API sink,
 JDBCToSpannerDVTWithHash.java:191-246, which is NOT exactly-once).
 
-Sandbox implementation (no Iceberg jar available): the same ``foreachBatch``
-driver with two standard exactly-once techniques that need no table format:
+Jar-free implementation (no Iceberg catalog on the session): the same
+``foreachBatch`` driver fenced by batch id, needing no table format. On
+disk::
 
-* **batch-id fencing** — Structured Streaming replays a failed micro-batch
-  with the SAME ``batch_id``. Each batch writes to ``<out>/data/batch=<id>/``
-  with overwrite, then atomically creates a ``<out>/_commits/<id>`` marker.
-  A replay overwrites the very same directory and re-creates the marker —
-  idempotent. Readers (``read_committed``) only see marker-backed batches,
-  so a crash between write and marker is invisible.
+    <out>/_commits/<id>           one JSON marker per committed batch
+    <out>/<table>/batch=<id>/     that batch's parquet, one dir per table
+
+* **one marker per batch** — Structured Streaming replays a failed
+  micro-batch with the SAME ``batch_id``. A batch first stages every
+  table's directory (overwrite), then :class:`CommitLedger` publishes
+  ``_commits/<id>`` with one atomic ``os.replace``. Readers only see
+  marker-backed batches, so a crash anywhere before the marker leaves
+  every table of the batch invisible, and a replay of a committed id is a
+  no-op.
 * the directory layout doubles as the MERGE key space: one row per
   (conv_id, turn_idx) ever reaches the sink in append mode (the outer join
   emits each key's final classification exactly once), so key-level merge
   reduces to batch-level idempotent append.
 
+:class:`TallyForeachBatch` is the validation stream's sink (classified
+rows, per-window tallies and mismatch rows under one marker);
+:class:`ExactlyOnceParquetSink` is the one-table case. The reference
+writes its report and conflicting rows as two independent sinks
+(JDBCToSpannerDVTWithHash.java:393-415, 468-469) with no such atomicity.
 ``merge_into_iceberg`` is the real-cluster path, exercised when an Iceberg
 catalog is configured on the session.
 """
@@ -28,92 +38,67 @@ catalog is configured on the session.
 from __future__ import annotations
 
 import json
-import shutil
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
-class ExactlyOnceParquetSink:
-    """``foreachBatch`` callable writing batch-fenced parquet partitions."""
+class CommitLedger:
+    """The ``<out>/_commits/`` marker directory of one exactly-once sink.
 
-    def __init__(self, out_dir: str, *, coalesce: int | None = None):
-        self.out_dir = out_dir
-        self.coalesce = coalesce
-        os.makedirs(os.path.join(out_dir, "_commits"), exist_ok=True)
+    A batch is committed iff ``_commits/<id>`` exists. Markers are
+    published atomically (``<id>.tmp`` then ``os.replace``) and carry a
+    metadata dict; only all-digit names count as markers, so in-flight
+    ``.tmp`` files and foreign files (NFS ``.nfs*`` handles, editor
+    backups) are ignored.
+    """
+
+    def __init__(self, out_dir: str):
+        self.dir = os.path.join(out_dir, "_commits")
+        os.makedirs(self.dir, exist_ok=True)
 
     def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_commits", str(batch_id))
+        return os.path.join(self.dir, str(batch_id))
 
     def is_committed(self, batch_id: int) -> bool:
         return os.path.exists(self._marker(batch_id))
 
-    def committed_rows(self, batch_id: int) -> int | None:
-        """Row count recorded at commit time, or None if not committed."""
+    def committed_ids(self) -> list[int]:
+        return sorted(int(n) for n in os.listdir(self.dir) if n.isdecimal())
+
+    def commit(self, batch_id: int, meta: dict | None = None) -> None:
+        tmp = self._marker(batch_id) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"batch_id": batch_id, **(meta or {})}, f)
+        os.replace(tmp, self._marker(batch_id))  # the ONE atomic commit point
+
+    def meta(self, batch_id: int) -> dict | None:
+        """The metadata committed with ``batch_id``, or None if uncommitted."""
         try:
             with open(self._marker(batch_id)) as f:
-                return json.load(f)["rows"]
+                return json.load(f)
         except FileNotFoundError:
             return None
 
-    def batch_paths(self, batch_id: int) -> list[str]:
-        return [os.path.join(self.out_dir, "data", f"batch={batch_id}")]
-
-    def __call__(self, batch_df: DataFrame | None, batch_id: int) -> int | None:
-        """Write one micro-batch; returns rows written, or None on a
-        replayed already-committed batch (skipped — exactly-once)."""
-        if self.is_committed(batch_id):
-            return None
-        n = 0
-        if batch_df is not None:
-            # single pass: write, then count from the written parquet footers
-            # (metadata-cheap) instead of a second pass through the plan
-            df = batch_df.coalesce(self.coalesce) if self.coalesce else batch_df
-            target = self.batch_paths(batch_id)[0]
-            df.write.mode("overwrite").parquet(target)
-            n = df.sparkSession.read.parquet(target).count()
-            if n == 0:
-                shutil.rmtree(target, ignore_errors=True)
-        tmp = self._marker(batch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "rows": n}, f)
-        os.replace(tmp, self._marker(batch_id))  # atomic commit point
-        return n
-
-    def read_committed(self, spark: SparkSession) -> DataFrame | None:
-        """Read exactly the committed batches (uncommitted dirs are ignored)."""
-        commits_dir = os.path.join(self.out_dir, "_commits")
-        paths = []
-        for name in sorted(os.listdir(commits_dir)):
-            if name.endswith(".tmp"):
-                continue
-            with open(os.path.join(commits_dir, name)) as f:
-                meta = json.load(f)
-            if meta["rows"] > 0:
-                paths.append(os.path.join(self.out_dir, "data", f"batch={name}"))
-        if not paths:
-            return None
-        return spark.read.parquet(*paths)
+    def latest_before(self, batch_id: int | None = None) -> int | None:
+        """The newest committed id below ``batch_id`` (below none when
+        ``batch_id`` is None), or None if there is none."""
+        ids = [i for i in self.committed_ids()
+               if batch_id is None or i < batch_id]
+        return ids[-1] if ids else None
 
 
 class AtomicMultiParquetSink:
-    """Batch-fenced parquet sink where ONE commit marker covers N logical
-    tables — the atomic-two-table upgrade (VERDICT r4 #5).
+    """Batch-fenced parquet sink where ONE commit marker covers N tables.
 
-    ``ExactlyOnceParquetSink`` fences each table separately, so a crash
-    between the report commit and the conflict-rows commit publishes a
-    report whose conflict rows are missing until the batch replays
-    (``TallyForeachBatch`` heals on replay, but a reader in the crash
-    window sees the torn state). Here every table's batch directory is
-    STAGED first and the single ``_commits/<id>`` marker — one atomic
-    ``os.replace`` — is the only publication point: readers gate every
-    table on that marker, so all tables of a batch become visible
-    together or not at all. Replays overwrite the same staged dirs and
-    re-create the same marker — idempotent. The reference writes its
-    report + conflicting-rows as two independent sinks
-    (JDBCToSpannerDVTWithHash.java:393-415, 468-469) with no such
-    atomicity; on Iceberg the equivalent is a single multi-table
-    transaction (or one table with a type column).
+    Every table's batch directory is STAGED first, then the single
+    ``_commits/<id>`` marker is the only publication point: readers gate
+    every table on it, so all tables of a batch become visible together or
+    not at all. Replays overwrite the same staged dirs and re-create the
+    same marker — idempotent. On Iceberg the equivalent is a single
+    multi-table transaction (or one table with a type column).
     """
 
     def __init__(self, out_dir: str, tables: list[str]):
@@ -121,26 +106,20 @@ class AtomicMultiParquetSink:
             raise ValueError("at least one table is required")
         self.out_dir = out_dir
         self.tables = list(tables)
-        os.makedirs(os.path.join(out_dir, "_commits"), exist_ok=True)
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_commits", str(batch_id))
+        self.ledger = CommitLedger(out_dir)
 
     def is_committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._marker(batch_id))
+        return self.ledger.is_committed(batch_id)
 
     def data_path(self, table: str, batch_id: int) -> str:
         return os.path.join(self.out_dir, table, f"batch={batch_id}")
 
     def committed_rows(self, batch_id: int) -> dict[str, int] | None:
-        try:
-            with open(self._marker(batch_id)) as f:
-                return json.load(f)["rows"]
-        except FileNotFoundError:
-            return None
+        meta = self.ledger.meta(batch_id)
+        return None if meta is None else meta["rows"]
 
-    # write/commit split so tests can prove both-or-neither by crashing
-    # between the two steps
+    # stage/commit split so callers can derive tables from staged ones and
+    # tests can prove both-or-neither by crashing between the two steps
     def _write_data(self, batch_id: int,
                     frames: dict[str, DataFrame | None]) -> dict[str, int]:
         unknown = set(frames) - set(self.tables)
@@ -154,18 +133,15 @@ class AtomicMultiParquetSink:
             n = 0
             target = self.data_path(table, batch_id)
             if df is not None:
+                # single pass: write, then count from the written parquet
+                # footers (metadata-cheap) instead of a second pass through
+                # the plan
                 df.write.mode("overwrite").parquet(target)
                 n = df.sparkSession.read.parquet(target).count()
                 if n == 0:
                     shutil.rmtree(target, ignore_errors=True)
             rows[table] = n
         return rows
-
-    def _commit(self, batch_id: int, rows: dict[str, int]) -> None:
-        tmp = self._marker(batch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "rows": rows}, f)
-        os.replace(tmp, self._marker(batch_id))  # the ONE atomic commit point
 
     def write_batch(self, batch_id: int,
                     frames: dict[str, DataFrame | None]) -> dict[str, int] | None:
@@ -174,7 +150,7 @@ class AtomicMultiParquetSink:
         if self.is_committed(batch_id):
             return None
         rows = self._write_data(batch_id, frames)
-        self._commit(batch_id, rows)
+        self.ledger.commit(batch_id, {"rows": rows})
         return rows
 
     def read_committed(self, spark: SparkSession,
@@ -183,66 +159,84 @@ class AtomicMultiParquetSink:
         marker is missing is invisible for EVERY table."""
         if table not in self.tables:
             raise ValueError(f"unknown table: {table}")
-        commits_dir = os.path.join(self.out_dir, "_commits")
-        paths = []
-        for name in sorted(os.listdir(commits_dir)):
-            if not name.isdigit():
-                continue
-            with open(os.path.join(commits_dir, name)) as f:
-                meta = json.load(f)
-            if meta["rows"].get(table, 0) > 0:
-                paths.append(self.data_path(table, int(name)))
+        paths = [self.data_path(table, i)
+                 for i in self.ledger.committed_ids()
+                 if self.committed_rows(i).get(table, 0) > 0]
         if not paths:
             return None
         return spark.read.parquet(*paths)
 
 
-class AtomicTallySink:
-    """``TallyForeachBatch`` under ONE fence: classified rows, per-window
-    tallies, and mismatch rows of a micro-batch become visible together
-    or not at all. Same derivation discipline — one pass over the
-    streamed join output (write rows, then derive tallies/mismatches from
-    the just-written columnar batch, which is readable pre-commit because
-    staging is by directory, publication by marker)."""
+class ExactlyOnceParquetSink(AtomicMultiParquetSink):
+    """``foreachBatch`` callable appending each micro-batch to
+    ``<out>/data/batch=<id>`` — the one-table case of
+    :class:`AtomicMultiParquetSink`."""
+
+    def __init__(self, out_dir: str):
+        super().__init__(out_dir, ["data"])
+
+    def __call__(self, batch_df: DataFrame | None, batch_id: int) -> int | None:
+        """Write one micro-batch; returns rows written, or None on a
+        replayed already-committed batch (skipped — exactly-once)."""
+        rows = self.write_batch(batch_id, {"data": batch_df})
+        return None if rows is None else rows["data"]
+
+    def read_committed(self, spark: SparkSession,
+                       table: str = "data") -> DataFrame | None:
+        return super().read_committed(spark, table)
+
+
+class TallyForeachBatch(AtomicMultiParquetSink):
+    """The validation stream's ``foreachBatch`` sink: classified rows,
+    per-window tallies and mismatch rows of a micro-batch under ONE commit
+    marker, visible together or not at all.
+
+    ONE pass over the (expensive) streamed join output: write the rows, then
+    derive tallies/mismatches from the just-written columnar batch, which is
+    readable before the commit because staging is by directory and
+    publication by marker — far cheaper than persist() + three more passes
+    through the stateful plan.
+
+    Because the append-mode outer join emits each (conv_id, turn_idx) exactly
+    once across the query's lifetime, summing per-batch partial tallies over
+    committed batches yields the global ComparerResult counts — a two-phase
+    (per-batch partial → read-side final) aggregation that never holds global
+    state on the driver.
+    """
 
     def __init__(self, out_dir: str, *, window_duration: str = "1 hour"):
-        self.sink = AtomicMultiParquetSink(
-            out_dir, ["classified", "tallies", "mismatches"])
+        super().__init__(out_dir, ["classified", "tallies", "mismatches"])
         self.window_duration = window_duration
+        self.state_store: str | None = None  # set by run_streaming_validation
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if self.sink.is_committed(batch_id):
-            return
-        rows = self.sink._write_data(batch_id, {"classified": batch_df})
+        if self.is_committed(batch_id):
+            return  # replay of a committed batch: exactly-once no-op
+        rows = self._write_data(batch_id, {"classified": batch_df})
         if rows["classified"] == 0:
-            self.sink._commit(batch_id, {**rows, "tallies": 0,
-                                         "mismatches": 0})
-            return
-        spark = batch_df.sparkSession
-        stored = spark.read.parquet(
-            self.sink.data_path("classified", batch_id))
-        tallies = (
-            stored.groupBy(F.window("ts", self.window_duration).alias("w"),
-                           "status")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "status", "n"))
-        rows.update(self.sink._write_data(
-            batch_id, {"tallies": tallies,
-                       "mismatches": stored.where(F.col("status") != "MATCH")}))
-        self.sink._commit(batch_id, rows)
+            rows.update(tallies=0, mismatches=0)
+        else:
+            stored = batch_df.sparkSession.read.parquet(
+                self.data_path("classified", batch_id))
+            tallies = (
+                stored.groupBy(F.window("ts", self.window_duration).alias("w"),
+                               "status")
+                .agg(F.count("*").alias("n"))
+                .select(F.col("w.start").alias("window_start"), "status", "n"))
+            rows.update(self._write_data(
+                batch_id, {"tallies": tallies,
+                           "mismatches": stored.where(F.col("status") != "MATCH")}))
+        self.ledger.commit(batch_id, {"rows": rows})
 
     def read_rows(self, spark: SparkSession) -> DataFrame | None:
-        return self.sink.read_committed(spark, "classified")
+        return self.read_committed(spark, "classified")
 
     def read_mismatches(self, spark: SparkSession) -> DataFrame | None:
-        return self.sink.read_committed(spark, "mismatches")
+        return self.read_committed(spark, "mismatches")
 
     def report(self, spark: SparkSession) -> DataFrame | None:
-        from pyspark.sql import functions as F
-
-        partials = self.sink.read_committed(spark, "tallies")
+        """Final per-window tallies = sum of committed partials."""
+        partials = self.read_committed(spark, "tallies")
         if partials is None:
             return None
         return partials.groupBy("window_start", "status").agg(
@@ -311,64 +305,3 @@ def merge_into_iceberg(
     view = f"__merge_src_{abs(hash(table)) % 10_000}"
     batch_df.createOrReplaceTempView(view)
     spark.sql(build_merge_sql(table, view, key_cols))
-
-
-class TallyForeachBatch:
-    """foreachBatch that writes classified rows AND per-window tallies, both
-    batch-fenced.
-
-    Because the append-mode outer join emits each (conv_id, turn_idx) exactly
-    once across the query's lifetime, summing per-batch partial tallies over
-    committed batches yields the global ComparerResult counts — a two-phase
-    (per-batch partial → read-side final) aggregation that never holds global
-    state on the driver.
-    """
-
-    def __init__(self, out_dir: str, *, window_duration: str = "1 hour"):
-        self.rows_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "classified"))
-        self.tally_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "tallies"))
-        self.mismatch_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "mismatches"))
-        self.window_duration = window_duration
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        # ONE pass over the (expensive) streamed join output: write it, then
-        # derive tallies/mismatches by re-reading the just-written columnar
-        # batch — far cheaper than persist() + three more passes through the
-        # stateful plan, and the rows write doubles as the count
-        written = self.rows_sink(batch_df, batch_id)
-        if written is None:
-            # rows were committed by a previous attempt — but a crash between
-            # the rows commit and the tally/mismatch commits would otherwise
-            # lose this batch's downstream outputs forever (report() would
-            # silently undercount). Recompute them from the durable rows
-            # parquet; if both are already committed this is a no-op return.
-            if (self.tally_sink.is_committed(batch_id)
-                    and self.mismatch_sink.is_committed(batch_id)):
-                return
-            written = self.rows_sink.committed_rows(batch_id) or 0
-        if written == 0:
-            self.tally_sink(None, batch_id)
-            self.mismatch_sink(None, batch_id)
-            return
-        spark = batch_df.sparkSession
-        stored = spark.read.parquet(
-            *self.rows_sink.batch_paths(batch_id)
-        )
-        tallies = (
-            stored.groupBy(F.window("ts", self.window_duration).alias("w"), "status")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "status", "n")
-        )
-        self.tally_sink(tallies, batch_id)
-        self.mismatch_sink(stored.where(F.col("status") != "MATCH"), batch_id)
-
-    def report(self, spark: SparkSession) -> DataFrame | None:
-        """Final per-window tallies = sum of committed partials."""
-        from pyspark.sql import functions as F
-
-        partials = self.tally_sink.read_committed(spark)
-        if partials is None:
-            return None
-        return partials.groupBy("window_start", "status").agg(F.sum("n").alias("n"))

@@ -1,11 +1,11 @@
 """Atomic multi-table exactly-once sinks: both-or-neither under a crash
 between the per-table writes (VERDICT r4 #5).
 
-The separate-fence sinks (TallyForeachBatch / two JdbcExactlyOnceSinks)
-heal a torn batch on replay but expose a crash window where one table's
-batch is published and the other's is not; these tests prove the atomic
-variants publish nothing at all until the single commit point, and that
-the replay then publishes everything.
+Separate per-table fences (e.g. two JdbcExactlyOnceSinks) expose a crash
+window where one table's batch is published and the other's is not; these
+tests prove the one-marker sinks (TallyForeachBatch,
+AtomicMultiParquetSink, JdbcAtomicMultiSink) publish nothing at all until
+the single commit point, and that the replay then publishes everything.
 """
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from spanner_data_validator_spark.streaming.jdbc_sink import (
     JdbcAtomicMultiSink)
 from spanner_data_validator_spark.streaming.sink import (
-    AtomicMultiParquetSink, AtomicTallySink)
+    AtomicMultiParquetSink, TallyForeachBatch)
 
 
 def _batch(spark):
@@ -30,13 +30,13 @@ def _batch(spark):
 
 def test_parquet_crash_between_writes_publishes_nothing(spark, tmp_path,
                                                         monkeypatch):
-    sink = AtomicTallySink(str(tmp_path / "out"), window_duration="1 hour")
+    sink = TallyForeachBatch(str(tmp_path / "out"), window_duration="1 hour")
 
-    def crash(batch_id, rows):
+    def crash(batch_id, meta=None):
         raise RuntimeError("simulated crash before the single commit")
 
     # crash AFTER all three tables' data dirs are staged, BEFORE the marker
-    monkeypatch.setattr(sink.sink, "_commit", crash)
+    monkeypatch.setattr(sink.ledger, "commit", crash)
     with pytest.raises(RuntimeError):
         sink(_batch(spark), 0)
     # both-or-neither: NO table shows the batch — not even the rows that
@@ -55,14 +55,14 @@ def test_parquet_crash_between_writes_publishes_nothing(spark, tmp_path,
 
 
 def test_parquet_replay_of_committed_batch_is_noop(spark, tmp_path):
-    sink = AtomicTallySink(str(tmp_path / "out2"))
+    sink = TallyForeachBatch(str(tmp_path / "out2"))
     sink(_batch(spark), 0)
     sink(_batch(spark), 0)  # replay of a committed batch
     assert sink.read_rows(spark).count() == 3
     # empty batch commits all-zero but still fences the id
     sink(_batch(spark).where(F.lit(False)), 1)
-    assert sink.sink.is_committed(1)
-    assert sink.sink.committed_rows(1) == {
+    assert sink.is_committed(1)
+    assert sink.committed_rows(1) == {
         "classified": 0, "tallies": 0, "mismatches": 0}
     assert sink.read_rows(spark).count() == 3
 

@@ -51,7 +51,7 @@ def test_crash_between_write_and_marker_recomputes_cleanly(spark, tmp_path):
     # simulate a failed attempt of batch 1: data written, marker missing
     target = sink._path(1)
     _pts(spark, [(9, 9)]).write.mode("overwrite").parquet(target)
-    assert not sink.is_committed(1)
+    assert not sink.ledger.is_committed(1)
     assert _frontier(sink) == {(4, 4, 2)}  # debris invisible (committed id)
     sink(_pts(spark, [(1, 5)]), 1)  # the replay
     assert _frontier(sink) == {(4, 4, 2), (1, 5, 1)}
@@ -114,4 +114,4 @@ def test_engine_restart_resumes_version_chain(spark, tmp_path):
                                        F.col("x"), F.col("y")).collect()}
     assert _frontier(sink) == expect
     # the chain advanced: at least two committed versions exist
-    assert len(sink._committed_ids()) >= 2
+    assert len(sink.ledger.committed_ids()) >= 2

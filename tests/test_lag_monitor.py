@@ -69,6 +69,14 @@ def test_wave_order_violation_raises(spark, tmp_path):
         monitor(_waved(spark, [r for r in ROWS if r[0] == 0]), 1)
 
 
+def test_wave_split_across_batches_raises(spark, tmp_path):
+    """One wave must not span two micro-batches: its second half raises."""
+    monitor = LagMonitorSink(str(tmp_path / "mon"))
+    monitor(_waved(spark, [ROWS[0]]), 0)
+    with pytest.raises(ValueError, match="wave order"):
+        monitor(_waved(spark, [ROWS[1]]), 1)
+
+
 def test_empty_batch_is_committed_noop(spark, tmp_path):
     monitor = LagMonitorSink(str(tmp_path / "mon"))
     monitor(_waved(spark, [r for r in ROWS if r[0] == 0]), 0)

@@ -57,7 +57,7 @@ def test_stream_counts_match_expected_and_batch(spark, tmp_path, engine):
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
         watermark="10 minutes", band="2 hours", engine=engine)
-    res = sink.rows_sink.read_committed(spark)
+    res = sink.read_rows(spark)
     assert _status_counts(res) == pair.expected
     # exactly one emission per key
     assert res.count() == res.select("conv_id", "turn_idx").distinct().count()
@@ -74,7 +74,7 @@ def test_join_engine_dedup_keys_collapses_duplicates(spark, tmp_path):
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
         watermark="10 minutes", band="2 hours", engine="join", dedup_keys=True)
-    res = sink.rows_sink.read_committed(spark)
+    res = sink.read_rows(spark)
     assert _status_counts(res) == pair.expected
     assert res.count() == res.select("conv_id", "turn_idx").distinct().count()
 
@@ -93,11 +93,11 @@ def test_continuous_trigger_path_commits_batches(spark, tmp_path):
     try:
         deadline = time.time() + 60
         while time.time() < deadline:
-            res = sink.rows_sink.read_committed(spark)
+            res = sink.read_rows(spark)
             if res is not None and res.count() > 0:
                 break
             time.sleep(1)
-        res = sink.rows_sink.read_committed(spark)
+        res = sink.read_rows(spark)
         assert res is not None and res.count() > 0
         # every emitted row carries a valid classification
         assert res.where(~F.col("status").isin(
@@ -126,7 +126,7 @@ def test_late_data_beyond_band_splits_pair(spark, tmp_path):
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
         watermark="10 minutes", band="2 hours", engine="join")
-    got = _status_counts(sink.rows_sink.read_committed(spark))
+    got = _status_counts(sink.read_rows(spark))
     n = pair.expected["MATCH"]
     assert got == {"MATCH": n - 10, "SOURCE_ONLY": 10, "TARGET_ONLY": 10}
     batch = run_batch_validation(spark, src_dir, tgt_dir)
@@ -150,7 +150,7 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, out, ckpt,
         watermark="10 minutes", band="2 hours", engine="join")
-    committed_first = len(os.listdir(os.path.join(out, "classified", "_commits")))
+    committed_first = len(sink.ledger.committed_ids())
 
     # second drop + sentinel, then RESUME from the same checkpoint
     write_transcripts(tgt_sorted.iloc[cut:], spark, tgt_dir, n_files=2,
@@ -160,10 +160,10 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
         spark, src_dir, tgt_dir, out, ckpt,
         watermark="10 minutes", band="2 hours", engine="join")
 
-    res = sink.rows_sink.read_committed(spark)
+    res = sink.read_rows(spark)
     assert _status_counts(res) == pair.expected
     assert res.count() == res.select("conv_id", "turn_idx").distinct().count()
-    committed_total = len(os.listdir(os.path.join(out, "classified", "_commits")))
+    committed_total = len(sink.ledger.committed_ids())
     assert committed_total > committed_first  # resume produced new batches
 
 
@@ -188,7 +188,7 @@ def test_stateful_engine_checkpoint_resume(spark, tmp_path):
     sink = run_streaming_validation(spark, src_dir, tgt_dir, out, ckpt,
                                     watermark="10 minutes", band="2 hours",
                                     engine="stateful")
-    res = sink.rows_sink.read_committed(spark)
+    res = sink.read_rows(spark)
     assert _status_counts(res) == pair.expected
     assert res.count() == res.select("conv_id", "turn_idx").distinct().count()
 
@@ -202,7 +202,7 @@ def test_empty_streams_commit_cleanly(spark, tmp_path):
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
         watermark="10 minutes", band="2 hours")
-    assert sink.rows_sink.read_committed(spark) is None
+    assert sink.read_rows(spark) is None
     assert sink.report(spark) is None
 
 
@@ -215,35 +215,6 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
     out = sink.read_committed(spark)
     assert out.count() == 10
     assert sink.is_committed(0) and sink.is_committed(1)
-
-
-def test_tally_replay_recovers_lost_downstream_commits(spark, tmp_path):
-    """Crash window between the rows commit and the tally/mismatch commits:
-    a replay of the same batch_id must RECOMPUTE tallies and mismatches from
-    the durable rows parquet, not return early (ADVICE r01: report() silently
-    undercounted otherwise)."""
-    import shutil
-
-    from spanner_data_validator_spark.streaming.sink import TallyForeachBatch
-
-    sink = TallyForeachBatch(str(tmp_path / "out"), window_duration="1 hour")
-    df = spark.createDataFrame(
-        [("c1", 0, "MATCH", datetime.fromisoformat("2025-01-01 00:00:00")),
-         ("c1", 1, "MISMATCH", datetime.fromisoformat("2025-01-01 00:10:00"))],
-        "conv_id string, turn_idx int, status string, ts timestamp")
-    sink(df, 0)
-    # simulate the crash: rows are committed, downstream commits are lost
-    for s in (sink.tally_sink, sink.mismatch_sink):
-        os.remove(s._marker(0))
-        shutil.rmtree(s.batch_paths(0)[0], ignore_errors=True)
-    assert sink.report(spark) is None
-    sink(df, 0)  # structured streaming replays the same batch_id
-    report = {r["status"]: r["n"] for r in sink.report(spark).collect()}
-    assert report == {"MATCH": 1, "MISMATCH": 1}
-    assert sink.mismatch_sink.read_committed(spark).count() == 1
-    # and a replay with everything committed stays a no-op
-    sink(df, 0)
-    assert sum(r["n"] for r in sink.report(spark).collect()) == 2
 
 
 def test_windowed_tallies_match_batch(spark, tmp_path):
@@ -262,7 +233,7 @@ def test_windowed_tallies_match_batch(spark, tmp_path):
     want = {(r["window_start"], r["status"]): r["n"] for r in expect.collect()}
     assert got == want
     # mismatch sink carries exactly the non-MATCH rows
-    mm = sink.mismatch_sink.read_committed(spark)
+    mm = sink.read_mismatches(spark)
     assert mm.count() == sum(v for k, v in pair.expected.items() if k != "MATCH")
 
 

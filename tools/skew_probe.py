@@ -78,7 +78,7 @@ def _run_flagship(spark, work, name, src_dir, tgt_dir):
         watermark="10 minutes", band="2 hours",
         max_files_per_trigger=2)
     wall = time.perf_counter() - t0
-    n = sink.rows_sink.read_committed(spark).count()
+    n = sink.read_rows(spark).count()
     state = _join_state_shares(spark, f"{work}/{name}_ckpt")
     return {"wall_s": round(wall, 3), "rows": n, "join_state": state}
 
