@@ -17,8 +17,8 @@ sequentially. Each round is one self-equi-join keyed by node id, lineage
 truncated; products stay BIGINT-exact (order-independent, engine-exact).
 
 The oracle in plans/demo_queries replays the same semantics as the
-root-down recursive CTE (which Spark 4.1 can also run natively —
-see the recursive_cte_native query).
+root-down recursive CTE (which Spark 4.1 can also run natively as
+``WITH RECURSIVE``).
 """
 
 from __future__ import annotations

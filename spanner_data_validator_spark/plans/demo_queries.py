@@ -2956,260 +2956,6 @@ def q_stream_hll_window_users(spark, sf_dir):
     return spark.read.parquet(f"{work}/out")
 
 
-@register("stream_salted_conv_counts", """
-WITH e AS (
-  SELECT ts,
-         CASE WHEN event_id % 2 = 0 THEN 'hot'
-              ELSE 'c' || CAST(user_id AS VARCHAR) END AS conv
-  FROM events
-)
-SELECT epoch_ms(date_trunc('hour', ts)) AS ws_ms, conv,
-       CAST(count(*) AS BIGINT) AS n
-FROM e GROUP BY 1, 2
-""")
-def q_stream_salted_conv_counts(spark, sf_dir):
-    """Hot-key-salted TWO-PHASE streaming aggregation — the
-    conv_id-salting pattern for 10^12-turn hot conversations: phase 1
-    groups by (window, conv, salt=16) so the 'hot' conversation (half of
-    all events) spreads its state and shuffle across 16 keys; phase 2 is a
-    CHAINED stateful aggregation (window-on-window, Spark's multiple
-    stateful operators support) summing the partials per (window, conv).
-    Emitted counts equal the unsalted batch aggregate exactly — the oracle
-    is the plain per-conv hourly count."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.when(F.col("event_id") % 2 == 0, "hot")
-         .otherwise(F.concat(F.lit("c"), F.col("user_id"))).alias("conv"),
-        (F.col("event_id") % 16).alias("salt"))
-    work = tempfile.mkdtemp(prefix="sdv_q_salted_stream_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1)
-     .select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-             F.lit("zz").alias("conv"), F.lit(0).cast("long").alias("salt"))
-     .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    partial = (stream
-               .groupBy(F.window("ts", "1 hour").alias("w"), "conv", "salt")
-               .agg(F.count(F.lit(1)).alias("pc")))
-    final = (partial
-             .groupBy(F.window(F.col("w"), "1 hour").alias("w2"), "conv")
-             .agg(F.sum("pc").alias("n")))
-    with _shuffle_partitions(spark, 8):
-        q = (final.select(F.unix_millis(F.col("w2.start")).alias("ws_ms"),
-                          "conv", "n")
-             .writeStream.format("parquet").option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
-            .where(F.col("conv") != "zz"))
-
-
-@register("session_windows_dynamic", """
-WITH e AS (
-  SELECT user_id, epoch_ms(ts) AS t, event_id,
-         CASE WHEN event_type = 'error' THEN 1800000 ELSE 7200000 END AS gap
-  FROM events
-),
-o AS (
-  SELECT *, max(t + gap) OVER (
-      PARTITION BY user_id ORDER BY t, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-  FROM e
-),
-b AS (SELECT *, CASE WHEN prev_end IS NULL OR t >= prev_end
-                     THEN 1 ELSE 0 END AS brk
-      FROM o),
-s AS (SELECT *, sum(brk) OVER (
-          PARTITION BY user_id ORDER BY t, event_id) AS sid
-      FROM b)
-SELECT user_id,
-       CAST(min(t) AS BIGINT) AS session_start_ms,
-       CAST(max(t + gap) AS BIGINT) AS session_end_ms,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN gap = 1800000 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_errors
-FROM s GROUP BY user_id, sid
-""")
-def q_session_windows_dynamic(spark, sf_dir):
-    """REAL streaming session windows with a DYNAMIC per-event gap:
-    ``session_window(ts, CASE event_type)`` — error events extend their
-    session only 30 minutes, everything else 2 hours, so a session's
-    horizon depends on its members (the adaptive-timeout semantics fixed
-    gaps cannot express). Spark merges overlapping [ts, ts+gap) intervals
-    in the state store; the oracle replays the merge relationally (running
-    max of interval ends, break when a gap opens). Far-future sentinel
-    flushes all real sessions; its own session can never close, so it
-    never reaches the append sink."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_type")
-    work = tempfile.mkdtemp(prefix="sdv_q_sess_dyn_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1).select(F.lit(-1).cast("long").alias("user_id"),
-                           F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit("view").alias("event_type"))
-          .write.mode("append").parquet(in_dir))
-
-    gap = (F.when(F.col("event_type") == "error", F.lit("30 minutes"))
-           .otherwise(F.lit("2 hours")))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    agg = (stream
-           .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-           .agg(F.count(F.lit(1)).alias("n_events"),
-                F.sum((F.col("event_type") == "error").cast("long"))
-                 .alias("n_errors"))
-           .select("user_id",
-                   F.unix_millis(F.col("w.start")).alias("session_start_ms"),
-                   F.unix_millis(F.col("w.end")).alias("session_end_ms"),
-                   "n_events", "n_errors"))
-    with _shuffle_partitions(spark, 8):
-        q = (agg.writeStream.format("parquet")
-             .option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
-            .where(F.col("user_id") >= 0))
-
-
-@register("stream_scd2_enrich", """
-WITH dim AS (
-  SELECT c_custkey AS k, c_mktsegment AS segment,
-         TIMESTAMP '2024-01-01' AS valid_from,
-         CASE WHEN c_custkey % 4 = 0 THEN TIMESTAMP '2024-01-15'
-              ELSE TIMESTAMP '2100-01-01' END AS valid_to
-  FROM customer
-  UNION ALL
-  SELECT c_custkey AS k, c_mktsegment || '+V2' AS segment,
-         TIMESTAMP '2024-01-15' AS valid_from,
-         TIMESTAMP '2100-01-01' AS valid_to
-  FROM customer WHERE c_custkey % 4 = 0
-),
-ev AS (SELECT ts, user_id * 7 AS k FROM events),
-j AS (
-  SELECT d.segment, ev.k
-  FROM ev JOIN dim d
-    ON ev.k = d.k AND ev.ts >= d.valid_from AND ev.ts < d.valid_to
-)
-SELECT segment, CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT k) AS BIGINT) AS n_users
-FROM j GROUP BY segment
-""")
-def q_stream_scd2_enrich(spark, sf_dir):
-    """Temporal (as-of) stream enrichment against an SCD2 dimension: every
-    micro-batch probes the broadcast dimension with a NON-EQUI range
-    condition (key equality + ts within [valid_from, valid_to)), so each
-    event picks the dimension VERSION that was current at its event time —
-    customers divisible by 4 switch segment mid-month and their events
-    split across versions. The join is stateless (static side broadcast,
-    no watermark, no state store), the streaming form of scd2_dimension's
-    point-in-time semantics; rows land in an append sink and aggregate
-    after."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("ts").cast("timestamp").alias("ts"),
-        (F.col("user_id") * 7).alias("k"))
-    work = tempfile.mkdtemp(prefix="sdv_q_scd2_stream_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    v1 = cust.select(
-        F.col("c_custkey").alias("dk"),
-        F.col("c_mktsegment").alias("segment"),
-        F.lit("2024-01-01").cast("timestamp").alias("valid_from"),
-        F.when(F.col("c_custkey") % 4 == 0,
-               F.lit("2024-01-15").cast("timestamp"))
-         .otherwise(F.lit("2100-01-01").cast("timestamp")).alias("valid_to"))
-    v2 = (cust.where(F.col("c_custkey") % 4 == 0)
-          .select(F.col("c_custkey").alias("dk"),
-                  F.concat(F.col("c_mktsegment"), F.lit("+V2"))
-                   .alias("segment"),
-                  F.lit("2024-01-15").cast("timestamp").alias("valid_from"),
-                  F.lit("2100-01-01").cast("timestamp").alias("valid_to")))
-    dim = v1.unionByName(v2)
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir))
-    joined = stream.join(
-        F.broadcast(dim),
-        (F.col("k") == F.col("dk")) & (F.col("ts") >= F.col("valid_from"))
-        & (F.col("ts") < F.col("valid_to")))
-    q = (joined.select("segment", "k")
-         .writeStream.format("parquet").option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
-            .groupBy("segment")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.countDistinct("k").alias("n_users")))
-
-
-@register("stream_static_enrich", """
-WITH ev AS (SELECT ts, user_id % 25 AS k FROM events),
-j AS (
-  SELECT epoch_ms(date_trunc('hour', ev.ts)) AS window_start_ms, n.n_name AS nation
-  FROM ev JOIN nation n ON ev.k = n.n_nationkey
-)
-SELECT window_start_ms, nation, CAST(count(*) AS BIGINT) AS n
-FROM j GROUP BY 1, 2
-""")
-def q_stream_static_enrich(spark, sf_dir):
-    """REAL stream-static join run: a watermarked event stream broadcast-
-    joined against the static nation dimension (the streaming enrichment
-    pattern — the static side never shuffles, each micro-batch probes the
-    broadcast), then a tumbling 1h window count per nation in append mode.
-    A far-future sentinel row flushes every real window; its own window can
-    never close and is filtered after the sink (CLAUDE.md gotcha: never
-    filter between source and aggregation — Catalyst would push the
-    predicate below EventTimeWatermark)."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("ts").cast("timestamp").alias("ts"),
-        (F.col("user_id") % 25).alias("k"))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_static_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(0).cast("long").alias("k"))
-          .write.mode("append").parquet(in_dir))
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
-        F.col("n_nationkey").cast("long").alias("k"),
-        F.col("n_name").alias("nation"))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    agg = (stream.join(F.broadcast(nation), "k")
-                 .groupBy(F.window("ts", "1 hour").alias("w"), "nation")
-                 .agg(F.count("*").alias("n"))
-                 .select(F.col("w.start").alias("ws"), "nation", "n"))
-    q = (agg.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    return (spark.read.parquet(f"{work}/out")
-            .where(F.col("ws") < F.lit("2090-01-01").cast("timestamp"))
-            .select(F.unix_millis("ws").alias("window_start_ms"),
-                    "nation", "n"))
-
-
 # ---------------------------------------------------------------------------
 # incremental (recurring) validation: per-range digests → drift → row-level
 # classify of drifted ranges only (operators/digest.py)
@@ -3367,43 +3113,6 @@ def q_epoch_shuffle_order(spark, sf_dir):
     out = epoch_shuffle(docs, "doc_id", seed=0, n_shards=8,
                         hash_fn=portable_hash60)
     return out.where(F.col("pos") < 5).select("doc_id", "shard", "pos")
-
-
-@register("corpus_token_stats", """
-WITH t AS (
-  SELECT lang,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
-  FROM documents
-)
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       round(avg(n_tokens), 4) AS avg_tokens,
-       CAST(min(n_tokens) AS BIGINT) AS min_tokens,
-       CAST(max(n_tokens) AS BIGINT) AS max_tokens,
-       round(quantile_cont(n_tokens, 0.5), 4) AS p50_tokens,
-       round(quantile_cont(n_tokens, 0.9), 4) AS p90_tokens
-FROM t GROUP BY lang
-""")
-def q_corpus_token_stats(spark, sf_dir):
-    """Per-language corpus profile — the mix-design dashboard numbers (doc
-    counts, token totals, length distribution incl. exact p50/p90). One
-    map-side-combined hash aggregate; the exchange carries one partial row
-    per (partition, lang). Exact `percentile` (sort-based per group) matches
-    DuckDB's quantile_cont interpolation bit-for-bit on integer inputs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.size(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit("")))
-    t = docs.select("lang", toks.alias("n_tokens"))
-    return (t.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
-        F.min("n_tokens").cast("long").alias("min_tokens"),
-        F.max("n_tokens").cast("long").alias("max_tokens"),
-        F.round(F.percentile("n_tokens", F.lit(0.5)), 4).alias("p50_tokens"),
-        F.round(F.percentile("n_tokens", F.lit(0.9)), 4).alias("p90_tokens"),
-    ))
 
 
 @register("line_dedup_clean", """
@@ -3931,95 +3640,6 @@ def q_agg_tolerance_validate(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# packing planner input: token-length histogram with cumulative coverage
-# ---------------------------------------------------------------------------
-
-@register("token_len_histogram", """
-WITH t AS (
-  SELECT len(list_filter(string_split(text, ' '), x -> x <> '')) AS n
-  FROM documents
-),
-b AS (
-  SELECT least(15, CAST(floor(n / 8) AS INT)) AS bucket,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n) AS BIGINT) AS total_tokens
-  FROM t GROUP BY 1
-)
-SELECT bucket, bucket * 8 AS lo_tokens, n_docs, total_tokens,
-       CAST(sum(n_docs) OVER (ORDER BY bucket) AS BIGINT) AS cum_docs
-FROM b
-""")
-def q_token_len_histogram(spark, sf_dir):
-    """Document-length histogram (8-token buckets, top bucket open-ended) +
-    cumulative doc coverage — the input a sequence-packing planner needs to
-    pick max_len / bin size. One map-side-combined hash aggregate; the
-    cumulative window runs over the 16 POST-aggregation rows, so the sort is
-    free at any corpus size. Bucketing is a manual least/floor expression —
-    engine-portable, unlike width_bucket variants."""
-    from pyspark.sql import Window
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.size(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit("")))
-    t = docs.select(toks.alias("n"))
-    b = (t.groupBy(F.least(F.lit(15), F.floor(F.col("n") / 8)).cast("int")
-                   .alias("bucket"))
-          .agg(F.count(F.lit(1)).alias("n_docs"),
-               F.sum("n").cast("long").alias("total_tokens")))
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    return b.select(
-        "bucket", (F.col("bucket") * 8).alias("lo_tokens"),
-        "n_docs", "total_tokens",
-        F.sum("n_docs").over(w).cast("long").alias("cum_docs"))
-
-
-# ---------------------------------------------------------------------------
-# transcript integrity: role-transition conformance (agent-loop sanity)
-# ---------------------------------------------------------------------------
-
-@register("transcript_conformance", _ev_transcript_cte().split(",\ntgt AS")[0] + """,
-lagged AS (
-  SELECT conv_id,
-         CASE WHEN lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) = role
-              THEN 1 ELSE 0 END AS is_repeat
-  FROM src
-),
-per_conv AS (
-  SELECT conv_id, count(*) AS n_turns, sum(is_repeat) AS reps
-  FROM lagged GROUP BY conv_id
-)
-SELECT CAST(count(*) AS BIGINT) AS n_convs,
-       CAST(sum(n_turns) AS BIGINT) AS n_turns,
-       CAST(sum(reps) AS BIGINT) AS repeat_violations,
-       CAST(sum(CASE WHEN reps > 0 THEN 1 ELSE 0 END) AS BIGINT) AS convs_with_repeat
-FROM per_conv
-""")
-def q_transcript_conformance(spark, sf_dir):
-    """Role-transition conformance over transcripts: consecutive turns by the
-    same role flagged via lag() within (conv_id ORDER BY turn_idx) — the
-    structural sanity check an agent-transcript pipeline runs before
-    training (double-emission / dropped-interlocutor detection). The lag
-    window and the per-conv aggregate share the conv_id partitioning, so the
-    whole check is ONE exchange; the final fold is a single row."""
-    from pyspark.sql import Window
-
-    src = transcripts_from_events(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    lagged = src.select(
-        "conv_id",
-        F.when(F.lag("role").over(w) == F.col("role"), F.lit(1))
-         .otherwise(F.lit(0)).alias("is_repeat"))
-    per_conv = lagged.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("n_turns"), F.sum("is_repeat").alias("reps"))
-    return per_conv.agg(
-        F.count(F.lit(1)).cast("long").alias("n_convs"),
-        F.sum("n_turns").cast("long").alias("n_turns"),
-        F.sum("reps").cast("long").alias("repeat_violations"),
-        F.sum((F.col("reps") > 0).cast("long")).cast("long")
-         .alias("convs_with_repeat"))
-
-
-# ---------------------------------------------------------------------------
 # streaming windowed heavy hitters: trending terms per tumbling window
 # ---------------------------------------------------------------------------
 
@@ -4476,59 +4096,6 @@ def q_interval_bucket_join(spark, sf_dir):
         F.count(F.lit(1)).alias("n_points"))
 
 
-@register("stream_interval_join", """
-WITH v AS (
-  SELECT user_id, ts, event_id AS view_id FROM events WHERE event_type = 'view'
-),
-p AS (
-  SELECT user_id, ts, event_id AS purchase_id FROM events
-  WHERE event_type = 'purchase'
-)
-SELECT v.user_id, view_id, purchase_id
-FROM v JOIN p ON v.user_id = p.user_id
-             AND p.ts >= v.ts
-             AND p.ts < v.ts + INTERVAL 30 MINUTE
-""")
-def q_stream_interval_join(spark, sf_dir):
-    """REAL stream-stream interval join: purchases matched to views of the
-    same user within 30 minutes, both sides watermarked so the join state
-    is evicted once the watermark passes the time bound (state per side is
-    O(rate x (watermark + interval)), not O(stream)). Inner joins emit on
-    match — no sentinel flush needed; availableNow drains the backlog."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"),
-        "event_id", "event_type")
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_ivj_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir))
-    views = (stream.where(F.col("event_type") == "view")
-             .select("user_id", F.col("ts").alias("v_ts"),
-                     F.col("event_id").alias("view_id"))
-             .withWatermark("v_ts", "1 hour"))
-    purchases = (stream.where(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("ts").alias("p_ts"),
-                         F.col("event_id").alias("purchase_id"))
-                 .withWatermark("p_ts", "1 hour"))
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user")) &
-        (F.col("p_ts") >= F.col("v_ts")) &
-        (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner").select("user_id", "view_id", "purchase_id")
-    q = (joined.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(f"{work}/out")
-
-
 # ---------------------------------------------------------------------------
 # SCD2 history build + salted skew join + collocations
 # ---------------------------------------------------------------------------
@@ -4670,69 +4237,7 @@ def q_kmv_distinct_by_type(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# grouping sets + set operators (SURVEY §2.10 gap-fills)
-# ---------------------------------------------------------------------------
-
-@register("corpus_rollup_stats", """
-SELECT lang, source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents
-GROUP BY ROLLUP(lang, source)
-""")
-def q_corpus_rollup_stats(spark, sf_dir):
-    """ROLLUP grouping sets over the corpus: per-(lang, source), per-lang,
-    and grand-total doc/char counts in ONE aggregation pass (Spark expands
-    grouping sets map-side — one shuffle, not three jobs). The reference
-    has no grouping-set surface at all (SURVEY §2.10); Spark's native
-    rollup is the idiomatic fill."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (docs.rollup("lang", "source")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.sum("n_chars").cast("long").alias("total_chars")))
-
-
-@register("corpus_set_diff", """
-WITH src AS (SELECT doc_id, text FROM documents),
-tgt AS (SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 3
-        UNION ALL
-        SELECT doc_id, text || ' (edited)' FROM documents WHERE doc_id % 11 = 7),
-gone AS (SELECT doc_id, text FROM src EXCEPT SELECT doc_id, text FROM tgt),
-added AS (SELECT doc_id, text FROM tgt EXCEPT SELECT doc_id, text FROM src),
-kept AS (SELECT doc_id, text FROM src INTERSECT SELECT doc_id, text FROM tgt)
-SELECT 'gone' AS side, CAST(count(*) AS BIGINT) AS n FROM gone
-UNION ALL SELECT 'added', CAST(count(*) AS BIGINT) FROM added
-UNION ALL SELECT 'kept', CAST(count(*) AS BIGINT) FROM kept
-""")
-def q_corpus_set_diff(spark, sf_dir):
-    """Set-operator corpus diff (EXCEPT / INTERSECT — absent from the
-    reference, SURVEY §2.10): rows gone from, added to, and kept across a
-    re-ingested snapshot. Spark plans EXCEPT/INTERSECT as left-anti /
-    left-semi hash joins over the distinct sets — same shuffle shape as
-    the fingerprint classify, declared in two lines. The row-granular
-    classify (validate_*) stays the tool when you need WHICH rows; this is
-    the two-line summary when you need HOW MANY."""
-    # docs fans out into 5 branches (src x3 set ops + 2 tgt synth arms)
-    # — pin it or each branch re-scans the text corpus (plan_audit
-    # caught 9 scans; multi-branch rescan trap)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-                     .select("doc_id", "text").localCheckpoint(eager=True)
-    src = docs
-    tgt = (docs.where(F.col("doc_id") % 11 != 3)
-               .unionByName(docs.where(F.col("doc_id") % 11 == 7)
-                                .withColumn("text", F.concat(F.col("text"),
-                                                             F.lit(" (edited)")))))
-    # subtract/intersect = EXCEPT/INTERSECT **DISTINCT**, matching the SQL
-    # set operators (exceptAll is bag semantics — a different operator)
-    gone = src.subtract(tgt).select(F.lit("gone").alias("side"))
-    added = tgt.subtract(src).select(F.lit("added").alias("side"))
-    kept = src.intersect(tgt).select(F.lit("kept").alias("side"))
-    return (gone.unionByName(added).unionByName(kept)
-                .groupBy("side").agg(F.count(F.lit(1)).alias("n")))
-
-
-# ---------------------------------------------------------------------------
-# layout, pivot, skew profile, ntile sharding
+# layout + skew profile
 # ---------------------------------------------------------------------------
 
 from spanner_data_validator_spark.operators.layout import (  # noqa: E402
@@ -4897,60 +4402,6 @@ def q_join_skew_profile(spark, sf_dir):
     return key_skew_profile(ev, "user_id", top_n=10)
 
 
-_PIVOT_SOURCES = [f"src{i}" for i in range(20)]
-_PIVOT_ORACLE_COLS = ",\n       ".join(
-    f"CAST(count(*) FILTER (WHERE source = '{s}') AS BIGINT) AS {s}"
-    for s in _PIVOT_SOURCES)
-
-
-@register("lang_source_pivot", f"""
-SELECT lang,
-       {_PIVOT_ORACLE_COLS}
-FROM documents GROUP BY lang
-""")
-def q_lang_source_pivot(spark, sf_dir):
-    """PIVOT (crosstab) doc counts: lang rows x source columns. Passing the
-    explicit value list to pivot() keeps the plan single-pass (no
-    distinct-values pre-query) and single-shuffle: Spark rewrites it to one
-    hash aggregate with count(CASE WHEN source=v) per value — the same
-    conditional aggregation the oracle spells out. Missing cells filled 0
-    to match SQL's count-over-empty-filter."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (docs.groupBy("lang")
-                .pivot("source", _PIVOT_SOURCES)
-                .agg(F.count(F.lit(1)))
-                .na.fill(0, _PIVOT_SOURCES))
-
-
-@register("length_shard_ntile", """
-WITH d AS (SELECT lang, n_chars, doc_id,
-                  NTILE(8) OVER (PARTITION BY lang
-                                 ORDER BY n_chars ASC, doc_id ASC) AS shard
-           FROM documents)
-SELECT lang, shard,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(min(n_chars) AS BIGINT) AS min_chars,
-       CAST(max(n_chars) AS BIGINT) AS max_chars
-FROM d GROUP BY lang, shard
-""")
-def q_length_shard_ntile(spark, sf_dir):
-    """Equal-count length sharding via NTILE(8) per language — the exact
-    boundary assignment for length-balanced training shards (each shard gets
-    n/8 +- 1 docs). Deterministic under the total order (n_chars, doc_id);
-    NTILE's ceil-division fill rule is SQL-standard, so both engines agree.
-    Scale note: ntile sorts each lang partition — at 10^11 docs/lang use
-    profile.quantiles_by_rank to pick boundaries then bin with pure
-    expressions; this operator is the exact-assignment tool."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    w = Window.partitionBy("lang").orderBy(F.col("n_chars").asc(),
-                                           F.col("doc_id").asc())
-    return (docs.withColumn("shard", F.ntile(8).over(w))
-                .groupBy("lang", "shard")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.min("n_chars").alias("min_chars"),
-                     F.max("n_chars").alias("max_chars")))
-
-
 # ---------------------------------------------------------------------------
 # structural integrity + declarative constraint suite
 # ---------------------------------------------------------------------------
@@ -5107,55 +4558,6 @@ def q_jsonl_ingest_parity(spark, sf_dir):
                                .alias("n_quarantined"))))
 
 
-@register("json_props_extract", """
-WITH p AS (
-  SELECT event_type,
-         CASE WHEN event_id % 13 = 0 THEN substr(props, 1, 3) ELSE props END
-           AS props
-  FROM events
-),
-x AS (
-  SELECT event_type,
-         CASE WHEN json_valid(props)
-              THEN CAST(props->>'k' AS BIGINT) END AS k
-  FROM p
-)
-SELECT event_type,
-       CAST(count(k) AS BIGINT) AS n_valid,
-       CAST(count(*) - count(k) AS BIGINT) AS n_invalid,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       round(CAST(sum(k) AS DOUBLE) / CAST(count(k) AS DOUBLE), 4) AS avg_k,
-       CAST(min(k) AS BIGINT) AS min_k,
-       CAST(max(k) AS BIGINT) AS max_k
-FROM x GROUP BY event_type
-""")
-def q_json_props_extract(spark, sf_dir):
-    """Semi-structured extraction with a quarantine-grade null path: the
-    props JSON column (with planted truncation for every 13th event) is
-    parsed per row — get_json_object returns NULL on malformed input, the
-    DuckDB oracle guards with json_valid — and typed k values aggregate per
-    event_type. avg is computed as exact integer sum / count (both engines
-    divide the same two integers; a native avg() could accumulate partial
-    doubles in engine-specific order)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    p = ev.select(
-        "event_type",
-        F.when(F.col("event_id") % 13 == 0,
-               F.substring("props", 1, 3)).otherwise(F.col("props"))
-         .alias("props"))
-    k = F.get_json_object("props", "$.k").cast("long")
-    x = p.select("event_type", k.alias("k"))
-    return (x.groupBy("event_type")
-            .agg(F.count("k").cast("long").alias("n_valid"),
-                 (F.count(F.lit(1)) - F.count("k")).cast("long")
-                 .alias("n_invalid"),
-                 F.sum("k").cast("long").alias("sum_k"),
-                 F.round(F.sum("k").cast("double")
-                         / F.count("k").cast("double"), 4).alias("avg_k"),
-                 F.min("k").cast("long").alias("min_k"),
-                 F.max("k").cast("long").alias("max_k")))
-
-
 @register("stream_observed_quality", """
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)
@@ -5204,44 +4606,6 @@ def q_stream_observed_quality(spark, sf_dir):
           m["n_batches_with_data"], sink_rows)],
         "n_rows long, n_error long, value_cents long, max_event_id long, "
         "n_batches_with_data long, sink_rows long")
-
-
-@register("orc_roundtrip_parity", """
-SELECT l_returnflag,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-         AS sum_price_cents
-FROM lineitem
-WHERE l_shipdate >= DATE '1995-01-01' AND l_shipdate < DATE '1996-01-01'
-GROUP BY l_returnflag
-""")
-def q_orc_roundtrip_parity(spark, sf_dir):
-    """Columnar-format breadth: lineitem re-materialized as ORC (Spark's
-    second native columnar format), read back with a shipdate-range filter
-    + 4-column projection, and aggregate parity proved against the parquet
-    original. Spark's native ORC reader pushes the predicate and prunes
-    columns exactly like parquet (vectorized reader, footer stats), so a
-    validator can sit on either lake format; sums stay integer (cents) for
-    cross-engine exactness."""
-    import os
-    import tempfile
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_returnflag", "l_quantity", "l_extendedprice", "l_shipdate")
-    work = tempfile.mkdtemp(prefix="sdv_q_orc_")
-    odir = os.path.join(work, "lineitem_orc")
-    li.write.mode("overwrite").orc(odir)
-    orc = spark.read.orc(odir)
-    return (orc
-            .where((F.col("l_shipdate") >= F.lit("1995-01-01").cast("date"))
-                   & (F.col("l_shipdate") < F.lit("1996-01-01").cast("date")))
-            .groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                 F.sum(F.col("l_quantity").cast("long")).cast("long")
-                  .alias("sum_qty"),
-                 F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-                  .cast("long").alias("sum_price_cents")))
 
 
 @register("header_detail_reconcile", """
@@ -5559,49 +4923,6 @@ def q_embedding_quantize_stats(spark, sf_dir):
     from spanner_data_validator_spark.operators.quantize import quantize_stats
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return quantize_stats(emb, "embedding", "label")
-
-
-@register("validate_classify_pure_sql", _CLS_CTE + """
-SELECT CAST(key % 16 AS BIGINT) AS range_id, status,
-       CAST(count(*) AS BIGINT) AS n
-FROM cls GROUP BY 1, 2
-""")
-def q_validate_classify_pure_sql(spark, sf_dir):
-    """The flagship classify expressed as ONE spark.sql() string — proof the
-    engine's hot path is reachable from the pure SQL API (temp view + SQL
-    text, xxhash64 fingerprints, full-outer classify, per-range tally) with
-    no DataFrame code. Catalyst plans it identically to classify_pair."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.createOrReplaceTempView("sdv_sql_events")
-    return spark.sql("""
-WITH src AS (
-  SELECT event_id AS key,
-         xxhash64(concat_ws('|', coalesce(event_type, ''),
-                            coalesce(props, ''),
-                            coalesce(CAST(user_id AS STRING), ''))) AS fp
-  FROM sdv_sql_events
-),
-tgt AS (
-  SELECT key,
-         CASE WHEN key % 50 = 0 THEN xxhash64(CAST(fp AS STRING), '#mut')
-              ELSE fp END AS fp
-  FROM src WHERE key % 50 <> 1
-  UNION ALL
-  SELECT key + 100000000 AS key, fp FROM src WHERE key % 50 = 2
-),
-cls AS (
-  SELECT coalesce(s.key, t.key) AS key,
-         CASE WHEN s.fp IS NOT NULL AND t.fp IS NOT NULL AND s.fp = t.fp
-                THEN 'MATCH'
-              WHEN s.fp IS NOT NULL AND t.fp IS NOT NULL THEN 'MISMATCH'
-              WHEN t.fp IS NULL THEN 'SOURCE_ONLY'
-              ELSE 'TARGET_ONLY' END AS status
-  FROM src s FULL OUTER JOIN tgt t ON s.key = t.key
-)
-SELECT CAST(key % 16 AS BIGINT) AS range_id, status,
-       CAST(count(*) AS BIGINT) AS n
-FROM cls GROUP BY 1, 2
-""")
 
 
 @register("pseudonymize_users", """
@@ -7615,46 +6936,8 @@ def q_snapshot_schema_evolution(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# transcript shape analytics: role-transition matrix
+# text shape analytics: per-document character diversity
 # ---------------------------------------------------------------------------
-
-@register("role_transition_matrix", """
-WITH tr AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1
-           AS turn_idx,
-         coalesce(event_type, '') AS role, ts, event_id
-  FROM events
-),
-steps AS (
-  SELECT conv_id,
-         lag(role) OVER (PARTITION BY conv_id
-                         ORDER BY turn_idx) AS from_role,
-         role AS to_role
-  FROM tr
-)
-SELECT from_role, to_role, CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-FROM steps WHERE from_role IS NOT NULL
-GROUP BY from_role, to_role
-""")
-def q_role_transition_matrix(spark, sf_dir):
-    """Conversation-shape analytics: the role-transition count matrix over
-    the transcript corpus (which role follows which — the Markov skeleton
-    a transcript-conformance monitor alerts on; e.g. assistant->assistant
-    double-turns). lag() shares ONE conv-keyed exchange with the turn
-    numbering — the same single-sort discipline as transcript_conformance;
-    integer counts, engine-exact."""
-    tr = transcripts_from_events(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    steps = tr.select("conv_id",
-                      F.lag("role").over(w).alias("from_role"),
-                      F.col("role").alias("to_role"))
-    return (steps.where(F.col("from_role").isNotNull())
-            .groupBy("from_role", "to_role")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.countDistinct("conv_id").alias("n_convs")))
-
 
 @register("char_diversity_extremes", """
 WITH chars AS (
@@ -8033,34 +7316,6 @@ def q_heavy_hitters_tri(spark, sf_dir):
     return heavy_hitters_exact(ev, item, 256)
 
 
-@register("variant_extract_rollup", """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS n_k,
-       CAST(sum(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS k_sum,
-       CAST(count(DISTINCT CAST(props ->> 'k' AS BIGINT)) AS BIGINT)
-         AS k_distinct
-FROM events GROUP BY event_type
-""")
-def q_variant_extract_rollup(spark, sf_dir):
-    """Semi-structured rollup through Spark 4's VariantType:
-    try_parse_json -> VARIANT -> variant_get('$.k', bigint) -> aggregate.
-    Variant's binary encoding is the 100 TB path for ragged JSON — parsed
-    once at ingest, fields extracted without per-query string re-parsing
-    (vs json_props_extract, which exercises the string-side
-    get_json_object path). try_parse_json quarantines malformed payloads
-    as NULL instead of failing the job; DuckDB's ->> replays the same
-    extraction."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.variant_get(F.try_parse_json(F.col("props")), "$.k", "bigint")
-    return (ev.withColumn("k", k)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.count("k").alias("n_k"),
-                 F.sum("k").alias("k_sum"),
-                 F.countDistinct("k").alias("k_distinct")))
-
-
 @register("ledger_first_divergence", """
 WITH src AS (
   SELECT user_id, ts, event_id,
@@ -8271,212 +7526,6 @@ def q_sorted_neighborhood_linkage(spark, sf_dir):
         src.unionByName(tgt), "key", "id", window=4, max_distance=1)
 
 
-# ---------------------------------------------------------------------------
-# SQL-surface parity suite: ranks, bag set ops, NULL semantics, SQL UDFs
-# ---------------------------------------------------------------------------
-
-@register("window_rank_suite", """
-WITH r AS (
-  SELECT o_orderpriority AS grp,
-         CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS cents,
-         o_orderkey,
-         CAST(rank() OVER w AS BIGINT) AS rnk,
-         CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-         percent_rank() OVER w AS prnk,
-         cume_dist() OVER w AS cdist
-  FROM orders
-  WINDOW w AS (PARTITION BY o_orderpriority ORDER BY
-               CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT))
-)
-SELECT grp, CAST(count(*) AS BIGINT) AS n,
-       CAST(max(rnk) AS BIGINT) AS max_rank,
-       CAST(max(drnk) AS BIGINT) AS n_distinct_ranks,
-       max(prnk) AS max_percent_rank,
-       min(cdist) AS min_cume_dist,
-       CAST(sum(CASE WHEN rnk <> drnk THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_tied_positions
-FROM r GROUP BY grp
-""")
-def q_window_rank_suite(spark, sf_dir):
-    """The full ANSI ranking-function family in one pass — rank,
-    dense_rank, percent_rank, cume_dist over integer cents (ties are
-    REAL, so rank vs dense_rank genuinely diverge). percent_rank =
-    (rank-1)/(n-1) and cume_dist = n_le/n are single double divisions of
-    exact integers — engine-identical. One group-keyed exchange shared
-    by all four functions (same window spec => one sort)."""
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-    w = Window.partitionBy("grp").orderBy("cents")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    r = (orders.select(F.col("o_orderpriority").alias("grp"),
-                       cents.alias("cents"), "o_orderkey")
-         .withColumn("rnk", F.rank().over(w).cast("long"))
-         .withColumn("drnk", F.dense_rank().over(w).cast("long"))
-         .withColumn("prnk", F.percent_rank().over(w))
-         .withColumn("cdist", F.cume_dist().over(w)))
-    return (r.groupBy("grp")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.max("rnk").alias("max_rank"),
-                 F.max("drnk").alias("n_distinct_ranks"),
-                 F.max("prnk").alias("max_percent_rank"),
-                 F.min("cdist").alias("min_cume_dist"),
-                 F.sum((F.col("rnk") != F.col("drnk")).cast("long"))
-                 .alias("n_tied_positions")))
-
-
-@register("bag_set_ops_parity", """
-WITH a AS (SELECT event_type, CAST(user_id % 20 AS BIGINT) AS ub
-           FROM events WHERE event_id % 3 <> 0),
-b AS (SELECT event_type, CAST(user_id % 20 AS BIGINT) AS ub
-      FROM events WHERE event_id % 2 <> 0),
-i AS (SELECT * FROM a INTERSECT ALL SELECT * FROM b),
-x AS (SELECT * FROM a EXCEPT ALL SELECT * FROM b),
-id AS (SELECT * FROM a INTERSECT SELECT * FROM b),
-xd AS (SELECT * FROM a EXCEPT SELECT * FROM b)
-SELECT CAST((SELECT count(*) FROM i) AS BIGINT) AS n_intersect_all,
-       CAST((SELECT count(*) FROM x) AS BIGINT) AS n_except_all,
-       CAST((SELECT count(*) FROM id) AS BIGINT) AS n_intersect_distinct,
-       CAST((SELECT count(*) FROM xd) AS BIGINT) AS n_except_distinct
-""")
-def q_bag_set_ops_parity(spark, sf_dir):
-    """Bag vs set semantics of INTERSECT/EXCEPT: ALL variants preserve
-    multiplicities (min / difference of per-row counts), DISTINCT
-    variants collapse them — the四 counts pin Spark's
-    intersectAll/exceptAll/intersect/exceptAll DataFrame ops to the ANSI
-    behavior DuckDB implements; the four counts pin them down. Both
-    overlapping multisets derive from events by co-prime id filters so
-    every multiplicity case (0,1,2+) occurs."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    proj = [F.col("event_type"), (F.col("user_id") % 20).alias("ub")]
-    a = ev.where(F.col("event_id") % 3 != 0).select(*proj)
-    b = ev.where(F.col("event_id") % 2 != 0).select(*proj)
-    counts = [
-        a.intersectAll(b).count(), a.exceptAll(b).count(),
-        a.intersect(b).count(), a.subtract(b).count(),
-    ]
-    return spark.createDataFrame(
-        [tuple(counts)],
-        "n_intersect_all long, n_except_all long, "
-        "n_intersect_distinct long, n_except_distinct long")
-
-
-@register("null_semantics_audit", """
-WITH e AS (
-  SELECT event_type,
-         CASE WHEN event_id % 7 = 0 THEN NULL ELSE props END AS p,
-         CASE WHEN event_id % 5 = 0 THEN NULL
-              ELSE CAST(user_id % 10 AS BIGINT) END AS ub,
-         CAST(user_id % 10 AS BIGINT) AS ub_raw
-  FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(p) AS BIGINT) AS n_p,
-       CAST(count(DISTINCT ub) AS BIGINT) AS nd_ub,
-       CAST(sum(CASE WHEN p IS NULL AND ub IS NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_both_null,
-       CAST(sum(CASE WHEN ub IS NOT DISTINCT FROM ub_raw
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_nullsafe_eq,
-       CAST(sum(CASE WHEN coalesce(ub, -1) = -1 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_coalesced
-FROM e GROUP BY event_type
-""")
-def q_null_semantics_audit(spark, sf_dir):
-    """NULL-semantics parity in one aggregate: count(*) vs count(col),
-    count(DISTINCT) null-skipping, null-safe equality (<=> / IS NOT
-    DISTINCT FROM), and coalesce defaults — the comparison-layer
-    behaviors a validator's classify join depends on
-    (operators/comparator uses eqNullSafe for exactly this reason).
-    Planted NULLs on two co-prime cycles exercise every combination."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    p = F.when(F.col("event_id") % 7 == 0, F.lit(None)) \
-         .otherwise(F.col("props"))
-    ub = F.when(F.col("event_id") % 5 == 0, F.lit(None).cast("long")) \
-          .otherwise(F.col("user_id") % 10)
-    e = ev.select("event_type", p.alias("p"), ub.alias("ub"),
-                  (F.col("user_id") % 10).alias("ub_raw"))
-    return (e.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.count("p").alias("n_p"),
-                 F.countDistinct("ub").alias("nd_ub"),
-                 F.sum((F.col("p").isNull() & F.col("ub").isNull())
-                       .cast("long")).alias("n_both_null"),
-                 F.sum(F.col("ub").eqNullSafe(F.col("ub_raw"))
-                       .cast("long")).alias("n_nullsafe_eq"),
-                 F.sum((F.coalesce(F.col("ub"), F.lit(-1)) == -1)
-                       .cast("long")).alias("n_coalesced")))
-
-
-@register("sql_udf_cents_rollup", """
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT))
-            AS BIGINT) AS cents_sum,
-       CAST(max(CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT))
-            AS BIGINT) AS cents_max
-FROM orders GROUP BY o_orderpriority
-""")
-def q_sql_udf_cents_rollup(spark, sf_dir):
-    """Spark 4 SQL UDF surface: CREATE TEMPORARY FUNCTION ... RETURN
-    <expr> defines the money-to-cents normalization ONCE in catalog-level
-    SQL (no Python round trip — the body inlines into the plan and stays
-    inside WholeStageCodegen), then an aggregate uses it. The oracle
-    inlines the same expression; a catalog UDF is exactly a named
-    expression, which is the point."""
-    spark.sql("""
-        CREATE OR REPLACE TEMPORARY FUNCTION sdv_cents(x DOUBLE)
-        RETURNS BIGINT RETURN CAST(floor(x * 100.0 + 0.5) AS BIGINT)
-    """)
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("sdv_udf_orders")
-    return spark.sql("""
-        SELECT o_orderpriority,
-               count(*) AS n,
-               sum(sdv_cents(o_totalprice)) AS cents_sum,
-               max(sdv_cents(o_totalprice)) AS cents_max
-        FROM sdv_udf_orders GROUP BY o_orderpriority
-    """)
-
-
-@register("unpivot_measure_audit", """
-WITH long_form AS (
-  SELECT l_returnflag, measure,
-         CAST(floor(v * 1.0e6 + 5.0e-1) AS BIGINT) AS micro
-  FROM (UNPIVOT (SELECT l_returnflag, l_quantity, l_extendedprice,
-                        l_discount, l_tax
-                 FROM lineitem)
-        ON l_quantity, l_extendedprice, l_discount, l_tax
-        INTO NAME measure VALUE v)
-)
-SELECT l_returnflag, measure,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(micro) AS BIGINT) AS micro_sum,
-       CAST(min(micro) AS BIGINT) AS micro_min,
-       CAST(max(micro) AS BIGINT) AS micro_max
-FROM long_form GROUP BY l_returnflag, measure
-""")
-def q_unpivot_measure_audit(spark, sf_dir):
-    """UNPIVOT/melt parity: lineitem's four numeric measures rotate to
-    long form (Spark's native ``DataFrame.unpivot`` vs ANSI UNPIVOT),
-    then a per-(flag, measure) profile aggregates in exact integer
-    micro-units so double sums can't diverge on aggregation order. The
-    rotation is a zero-shuffle Expand (4 output rows per input inside
-    the scan stage); the only exchange is the final 12-group aggregate —
-    the wide-to-long step a column-profile audit runs over every
-    numeric column at once."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    measures = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    long_form = li.select("l_returnflag", *measures).unpivot(
-        ["l_returnflag"], measures, "measure", "v")
-    micro = F.floor(F.col("v") * F.lit(1.0e6) + F.lit(0.5)).cast("long")
-    return (long_form.select("l_returnflag", "measure",
-                             micro.alias("micro"))
-            .groupBy("l_returnflag", "measure")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("micro").alias("micro_sum"),
-                 F.min("micro").alias("micro_min"),
-                 F.max("micro").alias("micro_max")))
-
-
 @register("basket_pair_lift", """
 WITH items AS (
   SELECT DISTINCT l_orderkey AS grp, l_partkey AS it FROM lineitem
@@ -8547,9 +7596,9 @@ def q_hop_distance_levels(spark, sf_dir):
     round: frontier-edge equi-join + anti-join of the visited set,
     lineage truncated); the oracle is the same reachability as a
     WITH RECURSIVE UNION with a d<4 guard, re-expressed as a bounded
-    iterative DataFrame loop (Spark 4.1's native WITH RECURSIVE — see
-    recursive_cte_native — would also run it; the loop keeps explicit
-    per-round lineage truncation for scale).
+    iterative DataFrame loop (Spark 4.1's native WITH RECURSIVE would
+    also run it; the loop keeps explicit per-round lineage truncation for
+    scale).
     Levels are summarized per hop (count/sum/min/max of node ids)."""
     from spanner_data_validator_spark.operators.graph import hop_distance
 
@@ -9026,167 +8075,6 @@ def q_stream_benford_monitor(spark, sf_dir):
                      (dev * dev / expected).alias("chi_term"))
 
 
-@register("arrow_group_histogram", """
-WITH c AS (
-  SELECT event_type,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) // 2048 AS bin
-  FROM events WHERE value IS NOT NULL
-)
-SELECT event_type, CAST(bin AS BIGINT) AS bin,
-       CAST(count(*) AS BIGINT) AS cnt
-FROM c GROUP BY 1, 2
-""")
-def q_arrow_group_histogram(spark, sf_dir):
-    """groupBy().applyInArrow surface: per-event-type equi-width
-    histograms computed INSIDE pyarrow C++ kernels (shift_right +
-    value_counts on the Arrow buffers — zero pandas materialization,
-    zero per-row Python), the per-GROUP twin of the mapInArrow per-BATCH
-    path (arrow_substr_stats). Bins are integer cents >> 11, so the
-    histogram is bit-exact in any engine."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def hist(tbl: pa.Table) -> pa.Table:
-        et = tbl.column("event_type")[0].as_py()
-        cents = pc.cast(pc.floor(
-            pc.add(pc.multiply(tbl.column("value"), pa.scalar(100.0)),
-                   pa.scalar(0.5))), pa.int64())
-        bins = pc.shift_right(cents, pa.scalar(11, pa.int64()))
-        vc = pc.value_counts(bins)
-        return pa.table({
-            "event_type": pa.array([et] * len(vc), pa.string()),
-            "bin": vc.field("values"),
-            "cnt": pc.cast(vc.field("counts"), pa.int64()),
-        })
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("value").isNotNull())
-          .select("event_type", "value"))
-    return ev.groupBy("event_type").applyInArrow(
-        hist, schema="event_type string, bin long, cnt long")
-
-
-@register("csv_roundtrip_parity", """
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT))
-            AS BIGINT) AS cents_sum,
-       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_custs
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-GROUP BY o_orderpriority
-""")
-def q_csv_roundtrip_parity(spark, sf_dir):
-    """Row-format breadth: orders re-materialized as headered CSV — the
-    interchange format every migration source eventually exports — read
-    back with an EXPLICIT schema (inference re-reads the data and can
-    retype columns between runs) and timestamp round-trip format pinned,
-    then aggregate parity proved against the parquet original. Doubles
-    survive the text round trip via Spark's shortest-roundtrip rendering;
-    cents extraction still happens in numeric space after the re-parse."""
-    import os
-    import tempfile
-
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_csv_")
-    cdir = os.path.join(work, "orders_csv")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    (od.write.mode("overwrite")
-       .option("header", True).option("timestampFormat", fmt)
-       .csv(cdir))
-    csv = (spark.read.schema(od.schema)
-           .option("header", True).option("timestampFormat", fmt)
-           .csv(cdir))
-    return (csv
-            .where(F.col("o_orderdate")
-                   >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)
-                               + F.lit(0.5))).alias("cents_sum"),
-                 F.countDistinct("o_custkey").alias("n_custs")))
-
-
-@register("xml_roundtrip_parity", """
-SELECT o_orderstatus,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT))
-            AS BIGINT) AS cents_sum,
-       CAST(max(o_orderkey) AS BIGINT) AS max_key
-FROM orders
-GROUP BY o_orderstatus
-""")
-def q_xml_roundtrip_parity(spark, sf_dir):
-    """Row-format breadth: orders re-materialized as XML (Spark 4's
-    built-in StaxXML source — the format B2B/EDI migrations still
-    arrive in), read back with an EXPLICIT schema and pinned timestamp
-    format, aggregate parity proved against the parquet original. XML
-    is a text format with per-record framing: no pushdown, no column
-    pruning — the docstring is the warning; it belongs at the INGEST
-    edge only, converted to parquet before anything scans it twice."""
-    import os
-    import tempfile
-
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_xml_")
-    xdir = os.path.join(work, "orders_xml")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    (od.write.mode("overwrite").format("xml")
-       .option("rootTag", "orders").option("rowTag", "order")
-       .option("timestampFormat", fmt)
-       .save(xdir))
-    xml = (spark.read.schema(od.schema).format("xml")
-           .option("rowTag", "order").option("timestampFormat", fmt)
-           .load(xdir))
-    return (xml.groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)
-                               + F.lit(0.5))).alias("cents_sum"),
-                 F.max("o_orderkey").alias("max_key")))
-
-
-@register("collation_dedup_audit", """
-WITH v AS (
-  SELECT n_name FROM nation
-  UNION ALL
-  SELECT upper(substr(n_name, 1, 1)) || lower(substr(n_name, 2))
-  FROM nation
-),
-n AS (SELECT lower(n_name) AS k, n_name FROM v)
-SELECT CAST(count(DISTINCT n_name) AS BIGINT) AS n_raw,
-       CAST(count(DISTINCT k) AS BIGINT) AS n_folded,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       min(n_name) AS first_name
-FROM n
-""")
-def q_collation_dedup_audit(spark, sf_dir):
-    """Spark 4 collation surface: COLLATE UTF8_LCASE makes
-    case-insensitive distinct/grouping a TYPE property enforced in
-    every operator (joins, aggs, set ops) instead of a lower() sprayed
-    per expression — the migration-validator use case is key columns
-    that differ only by case between engines. Title-Case twins are
-    planted so the fold genuinely collapses pairs (n_raw = 2x
-    n_folded). The oracle folds
-    explicitly with lower(); the Spark side counts DISTINCT over the
-    collated column, proving the two are equivalent. min() runs on the
-    BINARY (default) collation on both sides so the picked value is
-    byte-deterministic."""
-    na = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    # plant Title-Case twins: every name then exists in two casings, so
-    # the folded count proves the collation actually collapses them
-    na = na.select("n_name").unionAll(na.select(
-        F.concat(F.upper(F.substring("n_name", 1, 1)),
-                 F.lower(F.expr("substr(n_name, 2)"))).alias("n_name")))
-    return na.select(
-        F.expr("n_name COLLATE UTF8_LCASE").alias("k"),
-        F.col("n_name")
-    ).agg(
-        F.countDistinct("n_name").alias("n_raw"),
-        F.countDistinct("k").alias("n_folded"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("n_name").alias("first_name"))
-
-
 @register("grid_neighbor_pairs", """
 WITH p AS (
   SELECT event_id AS id, CAST(user_id % 1000 AS BIGINT) AS x,
@@ -9349,257 +8237,9 @@ def q_gini_revenue_by_type(spark, sf_dir):
     return gini_coefficient(base, "event_type", F.col("v"))
 
 
-@register("hof_array_parity", """
-WITH b AS (
-  SELECT event_type, CAST(user_id % 50 AS BIGINT) AS x, event_id
-  FROM events
-),
-r AS (
-  SELECT event_type, x,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY x, event_id) AS i,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM b
-),
-pal AS (
-  SELECT a.event_type, CAST(sum(a.x * c.x) AS BIGINT) AS pal_sum
-  FROM r a JOIN r c
-    ON a.event_type = c.event_type AND c.i = a.n + 1 - a.i
-  GROUP BY a.event_type
-)
-SELECT r.event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(x) AS BIGINT) AS agg_sum,
-       CAST(sum(CASE WHEN x % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_even,
-       CAST(sum(x * x) AS BIGINT) AS sq_sum,
-       CAST(max(pal_sum) AS BIGINT) AS pal_sum
-FROM r JOIN pal ON r.event_type = pal.event_type
-GROUP BY r.event_type
-""")
-def q_hof_array_parity(spark, sf_dir):
-    """Higher-order-function surface pinned to plain-SQL semantics: per
-    type, the sorted value array is folded with aggregate(), filtered
-    with filter(), mapped with transform(), and paired with its
-    reverse via zip_with() (a palindrome product — position-sensitive,
-    so it proves ORDER, not just multiset, equality). The oracle
-    computes the same four quantities with window arithmetic and a
-    rank-reversal self-join. Integer-only lambdas; the array comes off
-    a groupBy output so no Catalyst lambda re-evaluation of an
-    expensive subplan (the HOF inlining trap) can occur."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    b = ev.select("event_type", (F.col("user_id") % 50).alias("x"),
-                  "event_id")
-    arrs = (b.groupBy("event_type")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("x", "event_id"))).alias("ps"))
-            .select("event_type",
-                    F.expr("transform(ps, p -> p.x)").alias("arr")))
-    return arrs.select(
-        "event_type",
-        F.size("arr").cast("long").alias("n"),
-        F.expr("aggregate(arr, 0L, (acc, v) -> acc + v)")
-         .alias("agg_sum"),
-        F.size(F.expr("filter(arr, v -> v % 2 = 0)")).cast("long")
-         .alias("n_even"),
-        F.expr("aggregate(transform(arr, v -> v * v), 0L, "
-               "(acc, v) -> acc + v)").alias("sq_sum"),
-        F.expr("aggregate(zip_with(arr, reverse(arr), (a, c) -> a * c),"
-               " 0L, (acc, v) -> acc + v)").alias("pal_sum"))
-
-
-@register("longest_daily_streak", """
-WITH d AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-  FROM events
-),
-r AS (
-  SELECT user_id, day,
-         day - row_number() OVER (PARTITION BY user_id ORDER BY day)
-           AS anchor
-  FROM d
-),
-s AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS streak
-  FROM r GROUP BY user_id, anchor
-),
-m AS (SELECT user_id, max(streak) AS best FROM s GROUP BY user_id)
-SELECT CAST(best AS BIGINT) AS streak_days,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(min(user_id) AS BIGINT) AS min_user
-FROM m GROUP BY best
-""")
-def q_longest_daily_streak(spark, sf_dir):
-    """Longest consecutive-active-day streak per user, reported as a
-    streak-length histogram — integer gaps-and-islands via the anchor
-    trick (day - dense row number is CONSTANT along a consecutive run,
-    so one group-by closes every island; no iterative pass, no
-    interval merge needed when the domain is integer days). Two
-    user-keyed exchanges total; the distinct collapses event rows to
-    user-days map-side first."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    d = ev.select("user_id", day.alias("day")).distinct()
-    w = Window.partitionBy("user_id").orderBy("day")
-    r = d.withColumn("anchor",
-                     F.col("day") - F.row_number().over(w))
-    s = (r.groupBy("user_id", "anchor")
-         .agg(F.count(F.lit(1)).alias("streak")))
-    m = s.groupBy("user_id").agg(F.max("streak").alias("best"))
-    return (m.groupBy(F.col("best").alias("streak_days"))
-            .agg(F.count(F.lit(1)).alias("n_users"),
-                 F.min("user_id").alias("min_user")))
-
-
-@register("lateral_topn_parity", """
-WITH t AS (
-  SELECT c.c_mktsegment, l.o_orderkey, l.cents
-  FROM customer c, LATERAL (
-    SELECT o_orderkey,
-           CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS cents
-    FROM orders
-    WHERE orders.o_custkey = c.c_custkey
-    ORDER BY cents DESC, o_orderkey
-    LIMIT 2
-  ) l
-)
-SELECT c_mktsegment,
-       CAST(count(*) AS BIGINT) AS n_top_orders,
-       CAST(sum(cents) AS BIGINT) AS cents_sum,
-       CAST(max(cents) AS BIGINT) AS cents_max,
-       CAST(sum(o_orderkey) AS BIGINT) AS key_checksum
-FROM t GROUP BY c_mktsegment
-""")
-def q_lateral_topn_parity(spark, sf_dir):
-    """Correlated LATERAL join parity: each customer's top-2 orders by
-    exact cents (deterministic (cents desc, key) order inside the
-    lateral subquery), rolled up per market segment. Spark plans the
-    correlated LIMIT as a per-key rank under a LateralJoin —
-    semantically the window top-n, declared relationally; DuckDB runs
-    the same SQL shape. The checksum column pins WHICH orders were
-    picked, not just how many."""
-    spark.read.parquet(f"{sf_dir}/customer.parquet") \
-        .createOrReplaceTempView("sdv_lat_customer")
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("sdv_lat_orders")
-    return spark.sql("""
-      WITH t AS (
-        SELECT c.c_mktsegment, l.o_orderkey, l.cents
-        FROM sdv_lat_customer c JOIN LATERAL (
-          SELECT o_orderkey,
-                 CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)
-                   AS cents
-          FROM sdv_lat_orders o
-          WHERE o.o_custkey = c.c_custkey
-          ORDER BY cents DESC, o_orderkey
-          LIMIT 2
-        ) l
-      )
-      SELECT c_mktsegment,
-             count(*) AS n_top_orders,
-             sum(cents) AS cents_sum,
-             max(cents) AS cents_max,
-             sum(o_orderkey) AS key_checksum
-      FROM t GROUP BY c_mktsegment
-    """)
-
-
-@register("hive_partition_prune", """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM events
-WHERE event_type IN ('click', 'purchase')
-GROUP BY event_type
-""")
-def q_hive_partition_prune(spark, sf_dir):
-    """Hive-style partitioned layout: events written partitionBy
-    (event_type), read back with a partition-column predicate. The
-    filter must become a PartitionFilter (directory pruning — the
-    non-matching partitions are never opened, the scan cost at 100 TB),
-    not a data filter; tests/test_plans assertions pin
-    ``PartitionFilters`` in the executed plan. Aggregates prove the
-    partitioned copy is lossless."""
-    import os
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_hivepart_")
-    pdir = os.path.join(work, "events_part")
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(pdir)
-    part = spark.read.parquet(pdir)
-    return (part.where(F.col("event_type").isin("click", "purchase"))
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.countDistinct("user_id").alias("n_users")))
-
-
 # ---------------------------------------------------------------------------
-# transcript mismatch forensics + latency analytics
+# transcript latency analytics
 # ---------------------------------------------------------------------------
-
-@register("mismatch_char_divergence", """
-WITH src AS (
-  SELECT CAST(user_id AS STRING) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              - 1 AS INT) AS turn_idx,
-         coalesce(props, '') AS text
-  FROM events
-),
-tgt AS (
-  SELECT conv_id, turn_idx,
-         CASE WHEN (CAST(conv_id AS BIGINT) * 31 + turn_idx) % 50 = 0
-              THEN text || '#mut' ELSE text END AS text
-  FROM src WHERE (CAST(conv_id AS BIGINT) * 31 + turn_idx) % 50 <> 1
-),
-mism AS (
-  SELECT s.conv_id, s.turn_idx, s.text AS a, t.text AS b
-  FROM src s JOIN tgt t
-    ON s.conv_id = t.conv_id AND s.turn_idx = t.turn_idx
-  WHERE s.text <> t.text
-)
-SELECT conv_id, turn_idx,
-       CAST(min(i) AS BIGINT) AS first_diff_pos,
-       CAST(min(length(a)) AS BIGINT) AS len_src,
-       CAST(min(length(b)) AS BIGINT) AS len_tgt
-FROM mism,
-     unnest(generate_series(1, greatest(length(a), length(b)))) AS u(i)
-WHERE substr(a, CAST(i AS INT), 1) <> substr(b, CAST(i AS INT), 1)
-GROUP BY conv_id, turn_idx
-""")
-def q_mismatch_char_divergence(spark, sf_dir):
-    """Mismatch forensics: for every MISMATCH turn in the planted dual
-    transcript stream, the exact character position where source and
-    target text first part ways (plus both lengths) — what a migration
-    operator reads to tell an encoding bug (diverges early) from an
-    append artifact (diverges at len+1, as the planted '#mut' suffix
-    does). Position scan is explode(sequence) over MISMATCHED rows only
-    — never the matched corpus; substring-past-end yields '' in both
-    engines, which makes the length-extension case exact."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    src = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        F.coalesce(F.col("props"), F.lit("")).alias("text"))
-    h = (F.col("conv_id").cast("long") * 31 + F.col("turn_idx")) % 50
-    tgt = (src.where(h != 1)
-           .withColumn("text",
-                       F.when(h == 0, F.concat("text", F.lit("#mut")))
-                        .otherwise(F.col("text"))))
-    mism = (src.withColumnRenamed("text", "a")
-            .join(tgt.withColumnRenamed("text", "b"),
-                  ["conv_id", "turn_idx"])
-            .where(F.col("a") != F.col("b")))
-    i = F.explode(F.sequence(
-        F.lit(1), F.greatest(F.length("a"), F.length("b")))).alias("i")
-    pos = (mism.select("conv_id", "turn_idx", "a", "b", i)
-           .where(F.col("a").substr(F.col("i"), F.lit(1))
-                  != F.col("b").substr(F.col("i"), F.lit(1))))
-    return (pos.groupBy("conv_id", "turn_idx")
-            .agg(F.min("i").cast("long").alias("first_diff_pos"),
-                 F.min(F.length("a")).cast("long").alias("len_src"),
-                 F.min(F.length("b")).cast("long").alias("len_tgt")))
-
 
 @register("turn_latency_quantiles", """
 WITH tr AS (
@@ -9809,161 +8449,6 @@ def q_mode_props_by_type(spark, sf_dir):
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return deterministic_mode(ev, "event_type", F.col("props"))
-
-
-# ---------------------------------------------------------------------------
-# round-4 session-5: remaining SQL surfaces — multi-dimensional grouping,
-# value-range window frames, ANSI percentile family
-# ---------------------------------------------------------------------------
-
-@register("cube_grouping_audit", """
-SELECT CAST(grouping(o_orderstatus) AS INT) AS g_status,
-       CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-       o_orderstatus, o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT))
-            AS BIGINT) AS cents_sum
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-""")
-def q_cube_grouping_audit(spark, sf_dir):
-    """Multi-dimensional aggregation parity: CUBE(status, priority) with
-    GROUPING() markers distinguishing subtotal NULLs from data NULLs —
-    the reconciliation shape for validating a migrated reporting cube at
-    every margin in one pass. One Expand + one hash aggregate: the cube
-    costs one shuffle regardless of how many margins it emits, vs four
-    separate GROUP BYs (and at 100 TB the Expand's 4x row inflation is
-    map-side, collapsing into partial aggregates before the exchange).
-    Spark and DuckDB agree on grouping() bit values (probed: 0=data row,
-    1=subtotal, listed-column order)."""
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    return (od.cube("o_orderstatus", "o_orderpriority")
-            .agg(F.grouping("o_orderstatus").cast("int").alias("g_status"),
-                 F.grouping("o_orderpriority").cast("int").alias("g_prio"),
-                 F.count(F.lit(1)).alias("n"),
-                 F.sum(cents).alias("cents_sum"))
-            .select("g_status", "g_prio", "o_orderstatus", "o_orderpriority",
-                    "n", "cents_sum"))
-
-
-@register("grouping_sets_custom_audit", """
-SELECT CAST(grouping(o_orderstatus) AS INT) AS g_status,
-       CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-       o_orderstatus, o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(min(o_orderkey) AS BIGINT) AS first_key
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-""")
-def q_grouping_sets_custom_audit(spark, sf_dir):
-    """GROUPING SETS with a non-cube set list ((status), (priority)) via
-    the Spark 4 DataFrame `groupingSets` API — two independent rollup
-    margins in ONE scan + ONE aggregate instead of a UNION ALL of two
-    GROUP BYs (which would scan the fact table twice at 100 TB)."""
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (od.groupingSets([["o_orderstatus"], ["o_orderpriority"]],
-                            "o_orderstatus", "o_orderpriority")
-            .agg(F.grouping("o_orderstatus").cast("int").alias("g_status"),
-                 F.grouping("o_orderpriority").cast("int").alias("g_prio"),
-                 F.count(F.lit(1)).alias("n"),
-                 F.min("o_orderkey").alias("first_key"))
-            .select("g_status", "g_prio", "o_orderstatus", "o_orderpriority",
-                    "n", "first_key"))
-
-
-@register("range_frame_hourly_rate", """
-WITH w AS (
-  SELECT event_type,
-         count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                        RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-           AS wcnt,
-         sum(CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT))
-           OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                 RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-           AS wcents
-  FROM events
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(max(wcnt) AS BIGINT) AS max_hour_cnt,
-       CAST(sum(wcnt) AS BIGINT) AS sum_hour_cnt,
-       CAST(max(wcents) AS BIGINT) AS max_hour_cents,
-       CAST(sum(wcents) AS BIGINT) AS sum_hour_cents
-FROM w GROUP BY event_type
-""")
-def q_range_frame_hourly_rate(spark, sf_dir):
-    """Value-range window frames (RANGE BETWEEN <interval> PRECEDING):
-    per user, the trailing-hour event count and cents volume at every
-    event — the burst/rate-limit signal a row-fingerprint validator
-    can't see. The frame is defined on unix_micros(ts) VALUES, so peers
-    (equal timestamps) are included deterministically in both engines
-    regardless of intra-peer order — this is the order-stable way to
-    window by time, where a ROWS frame would be tie-ambiguous.
-    Partitioned by user_id (high cardinality — scales; no global sort),
-    summarized per event_type in exact BIGINTs."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.round(F.col("value") * 100).cast("long")
-    # ts is TIMESTAMP_NTZ (unix_micros rejects NTZ); timestampdiff from the
-    # NTZ epoch is tz-free and equals DuckDB's epoch_us exactly.
-    micros = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
-    w = (Window.partitionBy("user_id").orderBy(micros)
-         .rangeBetween(-3600_000_000, Window.currentRow))
-    t = ev.select("event_type",
-                  F.count(F.lit(1)).over(w).alias("wcnt"),
-                  F.sum(cents).over(w).alias("wcents"))
-    return (t.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.max("wcnt").alias("max_hour_cnt"),
-                 F.sum("wcnt").alias("sum_hour_cnt"),
-                 F.max("wcents").alias("max_hour_cents"),
-                 F.sum("wcents").alias("sum_hour_cents")))
-
-
-@register("percentile_family_by_type", """
-WITH c AS (
-  SELECT event_type,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS cents
-  FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(percentile_cont(CAST(0.25 AS DOUBLE)) WITHIN GROUP (ORDER BY cents)
-            AS DOUBLE) AS pc25,
-       CAST(percentile_cont(CAST(0.5 AS DOUBLE)) WITHIN GROUP (ORDER BY cents)
-            AS DOUBLE) AS pc50,
-       CAST(percentile_disc(CAST(0.25 AS DOUBLE)) WITHIN GROUP (ORDER BY cents)
-            AS BIGINT) AS pd25,
-       CAST(percentile_disc(CAST(0.75 AS DOUBLE)) WITHIN GROUP (ORDER BY cents)
-            AS BIGINT) AS pd75
-FROM c GROUP BY event_type
-""")
-def q_percentile_family_by_type(spark, sf_dir):
-    """ANSI percentile family parity per group: percentile_cont (linear
-    interpolation at index p*(n-1) — probed identical in both engines)
-    and percentile_disc (first value at cume_dist >= p). Interpolation
-    runs on integer cents, so every intermediate (frac k/4 times an
-    integer diff) is exact in double — no representability drift (the
-    r3 quantiles_by_rank lesson). disc results are integers by
-    construction and CAST to BIGINT on both sides (Spark returns them
-    as DOUBLE, which would canon-mismatch DuckDB's exact int)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.round(F.col("value") * 100).cast("long")
-    t = ev.select("event_type", cents.alias("cents"))
-    t.createOrReplaceTempView("_pctl_cents")
-    return spark.sql("""
-      SELECT event_type,
-             count(*) AS n,
-             CAST(percentile_cont(CAST(0.25 AS DOUBLE))
-                  WITHIN GROUP (ORDER BY cents) AS DOUBLE) AS pc25,
-             CAST(percentile_cont(CAST(0.5 AS DOUBLE))
-                  WITHIN GROUP (ORDER BY cents) AS DOUBLE) AS pc50,
-             CAST(percentile_disc(CAST(0.25 AS DOUBLE))
-                  WITHIN GROUP (ORDER BY cents) AS BIGINT) AS pd25,
-             CAST(percentile_disc(CAST(0.75 AS DOUBLE))
-                  WITHIN GROUP (ORDER BY cents) AS BIGINT) AS pd75
-      FROM _pctl_cents GROUP BY event_type
-    """)
 
 
 @register("shortest_path_weighted", """
@@ -10195,317 +8680,6 @@ def q_stream_pareto_frontier(spark, sf_dir):
     return sink.latest()
 
 
-@register("calendar_edge_audit", """
-WITH d AS (SELECT CAST(o_orderdate AS DATE) AS d FROM orders),
-c AS (
-  SELECT strftime(d, '%Y-%m') AS ym,
-         CAST(d + INTERVAL 1 MONTH AS DATE) AS am,
-         weekofyear(d) AS iso_w,
-         dayofweek(d) + 1 AS dow1,          -- normalize: 1 = Sunday
-         last_day(d) AS ld,
-         CAST(date_trunc('week', d) AS DATE) AS wk,
-         d
-  FROM d
-)
-SELECT ym, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN day(am) < day(d) THEN 1 ELSE 0 END) AS BIGINT)
-         AS clamp_hits,
-       CAST(sum(iso_w) AS BIGINT) AS iso_w_sum,
-       CAST(sum(dow1) AS BIGINT) AS dow_sum,
-       CAST(sum(date_diff('day', d, ld)) AS BIGINT) AS ld_gap_sum,
-       CAST(min(wk) AS DATE) AS wk_min
-FROM c GROUP BY ym
-""")
-def q_calendar_edge_audit(spark, sf_dir):
-    """Calendar-edge parity audit over seven years of order dates
-    (1995-2001, two leap years incl. the century leap 2000): month-end
-    clamping of add_months (day shrinks when the target month is
-    shorter), ISO week numbers (both engines are ISO — week 53 spillover
-    included), day-of-week normalized to 1=Sunday (Spark is 1-based,
-    DuckDB 0-based — the off-by-one a migrated report silently absorbs),
-    last_day gaps, and Monday-start week truncation. Pure column
-    expressions, one scan, one aggregate."""
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    d = F.col("o_orderdate").cast("date")
-    c = od.select(
-        F.date_format(d, "yyyy-MM").alias("ym"),
-        F.add_months(d, 1).alias("am"),
-        F.weekofyear(d).alias("iso_w"),
-        F.dayofweek(d).alias("dow1"),
-        F.last_day(d).alias("ld"),
-        F.date_trunc("week", d).cast("date").alias("wk"),
-        d.alias("d"))
-    return (c.groupBy("ym")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.when(F.dayofmonth("am") < F.dayofmonth("d"), 1)
-                       .otherwise(0)).alias("clamp_hits"),
-                 F.sum("iso_w").alias("iso_w_sum"),
-                 F.sum("dow1").alias("dow_sum"),
-                 F.sum(F.datediff("ld", "d")).alias("ld_gap_sum"),
-                 F.min("wk").alias("wk_min")))
-
-
-@register("decimal_exact_totals", """
-WITH c AS (
-  SELECT l_returnflag,
-         CAST(floor(l_extendedprice * 1.0e2 + 5.0e-1) AS BIGINT) AS cents
-  FROM lineitem
-),
-dec AS (
-  SELECT l_returnflag,
-         CAST(cents AS DECIMAL(18,4)) * CAST(0.01 AS DECIMAL(6,2)) AS price
-  FROM c
-)
-SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(price) AS DECIMAL(38,6)) AS price_sum,
-       CAST(sum(price * CAST(1.05 AS DECIMAL(4,2))) AS DECIMAL(38,6))
-         AS taxed_sum,
-       CAST(CAST(sum(CAST(price AS DECIMAL(38,6))) * 1000000 AS BIGINT)
-            // count(*) AS BIGINT) AS avg_microunits
-FROM dec GROUP BY l_returnflag
-""")
-def q_decimal_exact_totals(spark, sf_dir):
-    """Exact-DECIMAL migration totals: prices rebuilt as DECIMAL from
-    integer cents (never a double->decimal cast — that rounds at
-    representability edges), summed and tax-multiplied in decimal
-    arithmetic, which is EXACT and aggregation-order-independent in both
-    engines (unlike double sums). The mean is emitted as floor-divided
-    integer micro-units because decimal AVG is where engines diverge
-    (Spark keeps decimal with scale+4 HALF_UP; DuckDB returns DOUBLE) —
-    the engine-portable form is (sum * 10^6) div n in exact integers.
-    All outputs CAST to a fixed scale so the textual canon matches."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dec = li.select(
-        "l_returnflag",
-        (cents.cast("decimal(18,4)")
-         * F.lit("0.01").cast("decimal(6,2)")).alias("price"))
-    return (dec.groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("price").cast("decimal(38,6)").alias("price_sum"),
-                 F.sum(F.col("price")
-                       * F.lit("1.05").cast("decimal(4,2)"))
-                 .cast("decimal(38,6)").alias("taxed_sum"),
-                 ((F.sum(F.col("price").cast("decimal(38,6)"))
-                   .cast("decimal(38,6)") * 1000000)
-                  .cast("long").alias("_tmp"))
-            ).withColumn(
-                "avg_microunits",
-                F.expr("_tmp div n")).drop("_tmp"))
-
-
-@register("dynamic_partition_overwrite", """
-WITH c AS (
-  SELECT o_orderstatus, o_orderkey,
-         CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT)
-           + CASE WHEN o_orderstatus = 'F' THEN 7 ELSE 0 END AS cents
-  FROM orders
-)
-SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(cents) AS BIGINT) AS cents_sum,
-       CAST(min(o_orderkey) AS BIGINT) AS key_min
-FROM c GROUP BY o_orderstatus
-""")
-def q_dynamic_partition_overwrite(spark, sf_dir):
-    """Dynamic partition overwrite (partitionOverwriteMode=dynamic): a
-    corrected feed for ONE partition ('F' rows, cents + 7) overwrites
-    only the partitions it contains — untouched statuses keep their
-    original files (the backfill primitive: re-land one day/status
-    without rewriting — or read-locking — the other 10^4 partitions of a
-    100 TB table). In static mode the same write would TRUNCATE the
-    whole table to just 'F'. The oracle is the post-backfill law: every
-    status present, only 'F' rows shifted."""
-    import tempfile
-
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderstatus", "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-    work = tempfile.mkdtemp(prefix="sdv_q_dpo_")
-    tbl = f"{work}/t"
-    od.write.partitionBy("o_orderstatus").parquet(tbl)
-
-    fixed = (od.where(F.col("o_orderstatus") == "F")
-             .withColumn("cents", F.col("cents") + 7))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (fixed.write.mode("overwrite")
-         .partitionBy("o_orderstatus").parquet(tbl))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    return (spark.read.parquet(tbl)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("cents").alias("cents_sum"),
-                 F.min("o_orderkey").alias("key_min")))
-
-
-@register("stream_semi_join_converted", """
-WITH v AS (
-  SELECT user_id, ts, event_id AS view_id FROM events
-  WHERE event_type = 'view'
-),
-p AS (
-  SELECT user_id, ts FROM events WHERE event_type = 'purchase'
-)
-SELECT v.user_id, v.view_id
-FROM v WHERE EXISTS (
-  SELECT 1 FROM p
-  WHERE p.user_id = v.user_id
-    AND p.ts >= v.ts AND p.ts < v.ts + INTERVAL 30 MINUTE
-)
-""")
-def q_stream_semi_join_converted(spark, sf_dir):
-    """Stream-stream LEFT SEMI join: views that converted to a purchase
-    by the same user within 30 minutes — each view emitted AT MOST ONCE
-    regardless of how many purchases match (the dedup-on-emit the inner
-    interval join can't give without a downstream distinct, which in
-    streaming would need its own state). Same bounded state as the inner
-    variant: O(rate x (watermark + interval)) per side, evicted by
-    watermark; emission is eager on first match, so append mode needs no
-    sentinel flush for matched rows."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"),
-        "event_id", "event_type")
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_semi_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-
-    # one micro-batch: multi-batch join delivery is already exercised by
-    # stream_interval_join / stream_left_outer_interval; this entry pays
-    # for the SEMI semantics, not for batch cadence.
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 4).parquet(in_dir))
-    views = (stream.where(F.col("event_type") == "view")
-             .select("user_id", F.col("ts").alias("v_ts"),
-                     F.col("event_id").alias("view_id"))
-             .withWatermark("v_ts", "1 hour"))
-    purchases = (stream.where(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("ts").alias("p_ts"))
-                 .withWatermark("p_ts", "1 hour"))
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user")) &
-        (F.col("p_ts") >= F.col("v_ts")) &
-        (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_semi").select("user_id", "view_id")
-    q = (joined.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.read.parquet(f"{work}/out")
-
-
-@register("k_anonymity_audit", """
-WITH q AS (
-  SELECT event_type,
-         CAST(date_trunc('day', ts) AS DATE) AS day,
-         CAST(floor(value / 50.0e0) AS BIGINT) AS value_band,
-         user_id
-  FROM events
-),
-g AS (
-  SELECT event_type, day, value_band,
-         CAST(count(*) AS BIGINT) AS grp_n,
-         CAST(count(DISTINCT user_id) AS BIGINT) AS grp_users
-  FROM q GROUP BY 1, 2, 3
-)
-SELECT CAST(count(*) AS BIGINT) AS n_classes,
-       CAST(min(grp_n) AS BIGINT) AS k_anonymity,
-       CAST(sum(CASE WHEN grp_n < 5 THEN 1 ELSE 0 END) AS BIGINT)
-         AS classes_below_5,
-       CAST(sum(CASE WHEN grp_n < 5 THEN grp_n ELSE 0 END) AS BIGINT)
-         AS rows_below_5,
-       CAST(min(grp_users) AS BIGINT) AS min_distinct_users
-FROM g
-""")
-def q_k_anonymity_audit(spark, sf_dir):
-    """k-anonymity audit before a data release: equivalence classes over
-    the quasi-identifier tuple (event_type, day, 50-unit value band) —
-    the dataset's k IS the smallest class, and every class below the
-    k=5 policy threshold is a re-identification surface (its rows are
-    pinpointable by attributes a released dataset keeps). One scan, one
-    hash aggregate over the QI tuple, one scalar rollup; at 100 TB the
-    QI cardinality, not the row count, sizes the shuffle. value banding
-    uses floor(x/50) — the engine-portable binning (CAST truncates in
-    Spark but rounds in DuckDB)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    g = (ev.select("event_type",
-                   F.date_trunc("day", "ts").cast("date").alias("day"),
-                   F.floor(F.col("value") / 50.0).alias("value_band"),
-                   "user_id")
-         .groupBy("event_type", "day", "value_band")
-         .agg(F.count(F.lit(1)).alias("grp_n"),
-              F.countDistinct("user_id").alias("grp_users")))
-    return g.agg(
-        F.count(F.lit(1)).alias("n_classes"),
-        F.min("grp_n").alias("k_anonymity"),
-        F.sum(F.when(F.col("grp_n") < 5, 1).otherwise(0))
-         .alias("classes_below_5"),
-        F.sum(F.when(F.col("grp_n") < 5, F.col("grp_n")).otherwise(0))
-         .alias("rows_below_5"),
-        F.min("grp_users").alias("min_distinct_users"))
-
-
-_RECURSIVE_BOM_SQL = """
-WITH RECURSIVE n AS (
-  SELECT p_partkey AS node,
-         CASE WHEN p_partkey >= 8
-              THEN CAST(floor(p_partkey / 8.0e0) AS BIGINT) END AS parent,
-         CAST(p_partkey % 5 + 1 AS BIGINT) AS qty
-  FROM part
-),
-r AS (
-  SELECT node, node AS root, CAST(1 AS BIGINT) AS prod, 0 AS depth
-  FROM n WHERE parent IS NULL
-  UNION ALL
-  SELECT n.node, r.root, r.prod * n.qty AS prod, r.depth + 1 AS depth
-  FROM r JOIN n ON n.parent = r.node
-),
-lf AS (
-  SELECT root, CAST(count(*) AS BIGINT) AS n_leaves,
-         CAST(sum(prod) AS BIGINT) AS leaf_qty_sum
-  FROM r WHERE NOT EXISTS (SELECT 1 FROM n WHERE n.parent = r.node)
-  GROUP BY root
-),
-agg AS (
-  SELECT root, CAST(count(*) AS BIGINT) AS n_nodes,
-         CAST(max(depth) AS INT) AS max_depth
-  FROM r GROUP BY root
-)
-SELECT agg.root, agg.n_nodes, agg.max_depth,
-       coalesce(lf.n_leaves, 0) AS n_leaves,
-       coalesce(lf.leaf_qty_sum, 0) AS leaf_qty_sum
-FROM agg LEFT JOIN lf ON agg.root = lf.root
-"""
-
-
-@register("recursive_cte_native", _RECURSIVE_BOM_SQL)
-def q_recursive_cte_native(spark, sf_dir):
-    """NATIVE recursive CTE (Spark 4.1 UnionLoop): the BOM rollup
-    executed from the IDENTICAL ``WITH RECURSIVE`` text in both engines
-    — no dialect translation at all (floor-division spelled
-    floor(x/8.0e0) because `div`/`//` differ). Complements
-    ``bom_rollup_parts``: same forest, same answers, but recursion is
-    engine-managed here (per-iteration UnionLoopRef materialization)
-    versus the pointer-doubling loop, which stays the 100 TB path —
-    log2(depth) rounds instead of depth iterations, and each round
-    explicitly checkpointed/bucketable. Depth stats (max_depth) come
-    free from the recursion, which the doubling formulation doesn't
-    track."""
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
-    pt.createOrReplaceTempView("part")
-    return spark.sql(_RECURSIVE_BOM_SQL)
-
-
 @register("pq_quantize_stats", """
 WITH v AS (
   SELECT vec_id,
@@ -10580,110 +8754,6 @@ def q_pq_quantize_stats(spark, sf_dir):
                  F.min("vec_id").alias("first_vec")))
 
 
-@register("stream_left_outer_interval", """
-WITH v AS (
-  SELECT user_id, ts, event_id AS view_id FROM events
-  WHERE event_type = 'view'
-),
-p AS (
-  SELECT user_id AS p_user, ts AS p_ts, event_id AS purchase_id FROM events
-  WHERE event_type = 'purchase'
-)
-SELECT v.user_id, v.view_id, p.purchase_id
-FROM v LEFT JOIN p
-  ON v.user_id = p.p_user
- AND p.p_ts >= v.ts AND p.p_ts < v.ts + INTERVAL 30 MINUTE
-""")
-def q_stream_left_outer_interval(spark, sf_dir):
-    """Stream-stream LEFT OUTER interval join: every view emits — joined
-    rows eagerly on match, the unmatched ones with NULL purchase_id only
-    once the watermark proves no purchase can still arrive (the outer
-    row's emission is a STATE-EXPIRY event, not a data event). A finite
-    run therefore needs the far-future sentinel on BOTH input filters to
-    push the watermark past the horizon — the same discipline as the
-    flagship full-outer validator (jobs/validate_transcripts); sentinel
-    rows are filtered AFTER the join, never between source and join."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"),
-        "event_id", "event_type")
-    sent = spark.createDataFrame(
-        [(-1, "2100-01-01 00:00:00", -1, "view"),
-         (-1, "2100-01-01 00:00:00", -2, "purchase")],
-        "user_id long, ts_s string, event_id long, event_type string"
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"),
-             "event_id", "event_type")
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_loj_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    # the sentinel wave must arrive LAST (event-time-ordered waves).
-    # repartition(1), NOT coalesce(1): the sentinel is a python-local
-    # relation in defaultParallelism slices, and coalesce makes ONE task
-    # evaluate all of them serially (~4 s measured; CLAUDE.md gotcha)
-    sent.repartition(1).write.mode("append").parquet(f"{in_dir}/zz_sentinel")
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 4).parquet(f"{in_dir}/*"))
-    views = (stream.where(F.col("event_type") == "view")
-             .select("user_id", F.col("ts").alias("v_ts"),
-                     F.col("event_id").alias("view_id"))
-             .withWatermark("v_ts", "1 hour"))
-    purchases = (stream.where(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("ts").alias("p_ts"),
-                         F.col("event_id").alias("purchase_id"))
-                 .withWatermark("p_ts", "1 hour"))
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user")) &
-        (F.col("p_ts") >= F.col("v_ts")) &
-        (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer").select("user_id", "view_id", "purchase_id")
-    q = (joined.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
-            .where(F.col("view_id") >= 0))  # sentinel filtered post-join
-
-
-@register("sql_pipe_syntax_parity", """
-WITH c AS (
-  SELECT o_orderpriority,
-         CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS cents
-  FROM orders WHERE o_orderstatus <> 'P'
-),
-g AS (
-  SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents) AS BIGINT) AS cents_sum,
-         CAST(max(cents) AS BIGINT) AS cents_max
-  FROM c GROUP BY o_orderpriority
-)
-SELECT * FROM g WHERE n > 100
-""")
-def q_sql_pipe_syntax_parity(spark, sf_dir):
-    """SQL pipe syntax (Spark 4 ``|>`` operators): the same
-    filter -> extend -> aggregate -> having flow written as a linear
-    pipeline instead of inside-out nested SQL. Pipe stages compile to
-    the identical logical plan as the nested form — this entry proves
-    the surface end-to-end against a standard-SQL oracle (DuckDB has no
-    pipe syntax; equivalence IS the point)."""
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    od.createOrReplaceTempView("_pipe_orders")
-    return spark.sql("""
-      FROM _pipe_orders
-      |> WHERE o_orderstatus <> 'P'
-      |> EXTEND CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-      |> AGGREGATE count(*) AS n, sum(cents) AS cents_sum,
-                   max(cents) AS cents_max
-         GROUP BY o_orderpriority
-      |> WHERE n > 100
-      |> SELECT o_orderpriority, n, cents_sum, cents_max
-    """)
-
-
 @register("pareto_front_continuous", """
 WITH c AS (
   SELECT CAST(floor(p_retailprice * 1.0e2 + 5.0e-1) AS BIGINT) AS x,
@@ -10717,44 +8787,6 @@ def q_pareto_front_continuous(spark, sf_dir):
     return pareto_frontier_wide(
         pt, F.round(F.col("p_retailprice") * 100).cast("long"),
         F.col("p_size").cast("long"))
-
-
-@register("stream_anti_join_blocklist", """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_allowed,
-       CAST(sum(CAST(user_id AS BIGINT)) AS BIGINT) AS user_sum
-FROM events
-WHERE user_id % 13 <> 0
-GROUP BY event_type
-""")
-def q_stream_anti_join_blocklist(spark, sf_dir):
-    """Stream-static LEFT ANTI join — the ingest blocklist guard: rows
-    whose user is on a static denylist never reach the sink. Completes
-    the streamed join-type matrix (inner/semi/left-outer/full-outer
-    stream-stream + inner/anti stream-static). The static side stays
-    broadcast-small; the anti join is stateless (no watermark, no state
-    store) so it adds zero streaming state — the filter shape to prefer
-    over a stateful join whenever one side is bounded."""
-    import tempfile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_type")
-    blocked = (ev.select("user_id").distinct()
-               .where(F.col("user_id") % 13 == 0))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_anti_")
-    ev.repartition(2).write.parquet(f"{work}/in")
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
-    allowed = stream.join(F.broadcast(blocked), "user_id", "left_anti")
-    q = (allowed.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_allowed"),
-                 F.sum("user_id").alias("user_sum")))
 
 
 # ---------------------------------------------------------------------------

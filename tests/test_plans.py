@@ -178,5 +178,4 @@ def test_multibranch_queries_scan_input_once(spark):
     qs = entry.queries()
     sf = "/root/testdata/sf0.001"
     assert _final_plan_scans(qs["three_way_vote"](spark, sf)) == 0
-    assert _final_plan_scans(qs["corpus_set_diff"](spark, sf)) == 0
     assert _final_plan_scans(qs["basket_pair_lift"](spark, sf)) == 0

@@ -15,8 +15,8 @@ turns, vs a uniform twin at the same total-turn count. Three measurements:
    per-partition processed-row share (the same Murmur3 ``hash()`` the
    shuffle uses) + stream wall time.
 3. **Salted two-phase twin** — phase 1 groups by (window, conv, salt=16),
-   phase 2 chains window-on-window summing partials (the
-   stream_salted_conv_counts pattern): placement flattened; equal output.
+   phase 2 chains window-on-window summing partials: placement flattened;
+   equal output.
 
 Usage: python tools/skew_probe.py [--turns 40000] [--partitions 8]
 Prints one JSON line; BENCH.md records the measured numbers.
