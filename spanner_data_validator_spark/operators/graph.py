@@ -190,7 +190,7 @@ def hop_distance(edges: DataFrame, seeds: DataFrame, *,
     Cross-engine parity: the same levels are what a SQL engine's
     ``WITH RECURSIVE ... UNION`` computes with a ``d < max_hops`` guard
     (the UNION-distinct bounds cyclic blowup at (node, d) granularity);
-    see the ``hop_distance_levels`` oracle in plans/demo_queries.
+    see the ``hop_distance_levels`` oracle in plans/analytics_queries.
     """
     e = edges.select(F.col("src"), F.col("dst"))
     if undirected:

@@ -16,7 +16,7 @@ rounds — 5 joins for depth 32 — resolve the deepest tree, vs D joins
 sequentially. Each round is one self-equi-join keyed by node id, lineage
 truncated; products stay BIGINT-exact (order-independent, engine-exact).
 
-The oracle in plans/demo_queries replays the same semantics as the
+The bom_rollup_parts oracle in plans/analytics_queries replays the same semantics as the
 root-down recursive CTE (which Spark 4.1 can also run natively as
 ``WITH RECURSIVE``).
 """

@@ -8,7 +8,7 @@ or an adjacent cell, so candidates come from an EQUI-join of each point's
 candidate count ~ points x local density, exact distance verified on
 candidates only. The same shape at 100 TB is how lakehouse engines run
 proximity joins (geohash/S2 bucketing); 1-D interval analogue:
-``plans/demo_queries.interval_bucket_join``.
+``plans/analytics_queries.interval_bucket_join``.
 
 All arithmetic is integer (cell = floor-div, distance stays squared) so
 a SQL oracle reproduces results bit-for-bit — no sqrt, no floats.

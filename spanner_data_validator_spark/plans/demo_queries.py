@@ -1,6 +1,6 @@
 """Oracle-paired demo queries over the driver's testdata parquet corpus.
 
-Each entry here is an operator from SURVEY.md §2 (or a training-data-pipeline
+Each registered query is an operator from SURVEY.md §2 (or a training-data-pipeline
 extension) exercised end-to-end on `/root/testdata/sf*/` tables, with a DuckDB
 ANSI-SQL oracle that computes the *same* result. The validator queries derive
 a deterministic dual-stream (source, target) pair from the `events` table with
@@ -20,6 +20,12 @@ functions/fingerprint.py).
 
 Registry contract: QUERIES[name](spark, sf_dir) -> DataFrame, ORACLES[name]
 is DuckDB SQL over pre-registered views. Names/aliases match column-for-column.
+
+This module holds the registry (``QUERIES``, ``ORACLES``, ``register``) and
+the derivations several query modules share. The queries live by domain in
+``validator_queries``, ``streaming_queries``, ``curation_queries`` and
+``analytics_queries``; they are imported at the end of this module, so
+importing it fills the registry.
 """
 
 from __future__ import annotations
@@ -28,31 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.functions.fingerprint import fingerprint_expr
-from spanner_data_validator_spark.functions.text import (
-    lang_id_heuristic,
-    quality_score,
-    substr_hits,
-    token_count_regex,
-    token_count_ws,
-)
-from spanner_data_validator_spark.operators.ann import cosine_topk, embedding_near_dups
-from spanner_data_validator_spark.operators.comparator import (
-    MATCH,
-    MISMATCH,
-    SOURCE_ONLY,
-    TARGET_ONLY,
-    apply_timestamp_threshold,
-    classify_pair,
-    tally_report,
-)
-from spanner_data_validator_spark.operators.dedup import (
-    assign_components,
-    exact_dedup,
-    jaccard_pairs,
-    minhash_lsh_pairs,
-    simhash_near_dups,
-)
-from spanner_data_validator_spark.operators.ranges import long_ranges_df
+from spanner_data_validator_spark.operators.comparator import classify_pair
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -147,1371 +129,9 @@ cls AS (
 
 
 # ---------------------------------------------------------------------------
-# validator queries (SURVEY.md §2.3-2.6: J1 match join, C1 classify, A1/A2 tally)
-# ---------------------------------------------------------------------------
-
-@register("validate_classify", _CLS_CTE + "SELECT key, status FROM cls")
-def q_validate_classify(spark, sf_dir):
-    """J1+C1: full-outer fingerprint match → per-key status rows."""
-    return classified_events(spark, sf_dir).select("key", "status")
-
-
-@register("validate_totals", _CLS_CTE + """
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
-""")
-def q_validate_totals(spark, sf_dir):
-    """C1 classification totals — the headline MATCH/MISMATCH/*_ONLY counts."""
-    return (classified_events(spark, sf_dir)
-            .groupBy("status").agg(F.count("*").alias("n")))
-
-
-@register("validate_report", _CLS_CTE + """
-SELECT CAST(key % 16 AS STRING) AS range,
-       CAST(count(*) FILTER (WHERE status = 'MATCH') AS BIGINT) AS match_count,
-       CAST(count(*) FILTER (WHERE status IN ('MATCH','MISMATCH','SOURCE_ONLY')) AS BIGINT) AS source_count,
-       CAST(count(*) FILTER (WHERE status IN ('MATCH','MISMATCH','TARGET_ONLY')) AS BIGINT) AS target_count,
-       CAST(count(*) FILTER (WHERE status IN ('MISMATCH','SOURCE_ONLY')) AS BIGINT) AS source_conflict_count,
-       CAST(count(*) FILTER (WHERE status IN ('MISMATCH','TARGET_ONLY')) AS BIGINT) AS target_conflict_count
-FROM cls GROUP BY 1
-""")
-def q_validate_report(spark, sf_dir):
-    """A1+A2: per-range ComparerResult with the reference count identity
-    (match/source/target/source_conflict/target_conflict)."""
-    cls = classified_events(spark, sf_dir)
-    return tally_report(cls, F.pmod(F.col("key"), F.lit(16)))
-
-
-@register("validate_sharded", _CLS_CTE + """
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
-""")
-def q_validate_sharded(spark, sf_dir):
-    """J3: per-shard source streams (user_id % 3) flattened by unionByName —
-    totals must be identical to the unsharded run."""
-    return (classified_events(spark, sf_dir, shards=3)
-            .groupBy("status").agg(F.count("*").alias("n")))
-
-
-@register("validate_sharded_config", _CLS_CTE + """
-SELECT 'shard-' || CAST(k.user_id % 3 AS STRING) AS migration_shard_id,
-       c.status, CAST(count(*) AS BIGINT) AS n
-FROM cls c JOIN (SELECT event_id AS key, user_id FROM events) k USING (key)
-WHERE c.key < 100000000
-GROUP BY 1, 2
-""")
-def q_validate_sharded_config(spark, sf_dir):
-    """S9 sharded-config surface end-to-end: a shardConfigurationBulk JSON is
-    parsed by the REAL reader (sources/shard_config.read_sharding_config),
-    each parsed ShardSpec drives one source partition (user_id % n_shards ==
-    shard_index — the sandbox stand-in for per-shard JDBC URLs), and the
-    union carries migration_shard_id through the validation, tallied per
-    shard (CustomTransformationDoFn.java:97-98 forwards the same column).
-    Inserted target-only keys (key >= 1e8) have no source shard and are
-    excluded from the per-shard tally on both sides."""
-    import json as _json
-    import tempfile
-
-    from spanner_data_validator_spark.sources.shard_config import (
-        read_sharding_config,
-        read_sharded_union,
-    )
-
-    n_shards = 3
-    cfg = {"shardConfigurationBulk": {"dataShards": [{
-        "host": "h1.sandbox", "user": "u", "password": "pw", "port": 0,
-        "databases": [{"dbName": f"db{i}", "databaseId": f"shard-{i}"}
-                      for i in range(n_shards)],
-    }]}}
-    with tempfile.NamedTemporaryFile("w", suffix=".json") as f:
-        _json.dump(cfg, f)
-        f.flush()
-        shards = read_sharding_config(f.name)
-
-    def read_one(spark_, shard):
-        return (events_source(spark_, sf_dir)
-                .where(F.col("user_id") % n_shards == shard.shard_index))
-
-    src = read_sharded_union(spark, shards, read_one)
-    tgt = (events_target(events_source(spark, sf_dir))
-           .withColumn("migration_shard_id", F.lit(None).cast("string")))
-
-    def prep(df):
-        return df.select("key", fingerprint_expr(F.col("payload")).alias("fingerprint"),
-                         "migration_shard_id")
-
-    cls = classify_pair(prep(src), prep(tgt), ["key"],
-                        carry_cols=["migration_shard_id"])
-    return (cls.where(F.col("key") < 100_000_000)
-               .groupBy(F.col("src_migration_shard_id").alias("migration_shard_id"),
-                        "status")
-               .agg(F.count("*").alias("n")))
-
-
-@register("timestamp_threshold", _CLS_CTE + """
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls
-WHERE epoch_ms(ts) >= epoch_ms(TIMESTAMP '2024-01-04 00:00:00')
-  AND epoch_ms(ts) <= epoch_ms(TIMESTAMP '2024-01-05 00:00:00')
-GROUP BY status
-""")
-def q_timestamp_threshold(spark, sf_dir):
-    """P2: post-join timestamp-threshold window (CountMatchesDoFn.java:47-65),
-    threshold 2024-01-05, delta -1440 min → [2024-01-04, 2024-01-05]."""
-    cls = classified_events(spark, sf_dir, with_ts=True)
-    th = 1_704_412_800_000  # 2024-01-05T00:00:00Z epoch millis
-    filtered = apply_timestamp_threshold(cls, threshold_millis=th, delta_mins=-1440)
-    return filtered.groupBy("status").agg(F.count("*").alias("n"))
-
-
-@register("coverage_sample", _CLS_CTE + """
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls
-WHERE key % 10 = 0 GROUP BY status
-""")
-def q_coverage_sample(spark, sf_dir):
-    """P4: deterministic 10%-coverage key sampling (same subset on both sides)."""
-    return (classified_events(spark, sf_dir)
-            .where(F.col("key") % 10 == 0)
-            .groupBy("status").agg(F.count("*").alias("n")))
-
-
-@register("partition_filter", _CLS_CTE + """
-SELECT CAST(key % 16 AS STRING) AS range, CAST(count(*) AS BIGINT) AS n
-FROM cls WHERE key % 16 % 4 = 0 GROUP BY 1
-""")
-def q_partition_filter(spark, sf_dir):
-    """P5: keep every 4th reporting partition (partitionFilterRatio analogue)."""
-    cls = classified_events(spark, sf_dir).withColumn(
-        "range", F.pmod(F.col("key"), F.lit(16)).cast("string"))
-    return (cls.where(F.pmod(F.col("key"), F.lit(16)) % 4 == 0)
-            .groupBy("range").agg(F.count("*").alias("n")))
-
-
-def _uuid_assign_oracle() -> str:
-    """Oracle for K1-generic: the R4 range starts are deterministic, so they
-    inline as VALUES; floor assignment = max partition_id with start <= key."""
-    from spanner_data_validator_spark.operators.ranges import uuid_ranges
-
-    ranges = uuid_ranges("00000000-0000-0000-0000-000000000000",
-                         "ffffffff-ffff-ffff-ffff-ffffffffffff", 16)
-    starts = sorted(r.start.lower() for r in ranges)
-    values = ", ".join(f"({i}, '{s}')" for i, s in enumerate(starts))
-    return f"""
-WITH starts(pid, s) AS (VALUES {values}),
-k AS (
-  SELECT md5(CAST(event_id AS VARCHAR)) AS h FROM events
-),
-u AS (
-  SELECT substr(h,1,8) || '-' || substr(h,9,4) || '-' || substr(h,13,4) || '-'
-         || substr(h,17,4) || '-' || substr(h,21,12) AS key
-  FROM k
-)
-SELECT CAST((SELECT max(pid) FROM starts WHERE s <= u.key) AS INT) AS partition_id,
-       CAST(count(*) AS BIGINT) AS n
-FROM u GROUP BY 1
-"""
-
-
-@register("uuid_range_assign", _uuid_assign_oracle())
-def q_uuid_range_assign(spark, sf_dir):
-    """K1 generic broadcast sorted-range assignment (MapWithRangeFn floor
-    lookup, dofns/MapWithRangeFn.java:151-166) over the full 128-bit UUID key
-    space: deterministic md5-derived UUID keys bucketed into 16 R4 ranges."""
-    from spanner_data_validator_spark.operators.ranges import (
-        uuid_ranges,
-        with_range_partition,
-    )
-
-    ranges = uuid_ranges("00000000-0000-0000-0000-000000000000",
-                         "ffffffff-ffff-ffff-ffff-ffffffffffff", 16)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    h = F.md5(F.col("event_id").cast("string"))
-    key = F.concat_ws(
-        "-", F.substring(h, 1, 8), F.substring(h, 9, 4), F.substring(h, 13, 4),
-        F.substring(h, 17, 4), F.substring(h, 21, 12))
-    return (with_range_partition(ev.select(F.col("event_id")), key, ranges, "UUID")
-            .groupBy("partition_id").agg(F.count("*").alias("n")))
-
-
-@register("long_range_assign_join", """
-WITH r AS (SELECT event_id % 10000 AS k FROM events)
-SELECT CAST(CASE WHEN k >= 9671 THEN 31
-            ELSE CAST(floor(k / 312) AS INT) END AS INT) AS partition_id,
-       CAST(count(*) AS BIGINT) AS n
-FROM r GROUP BY 1
-""")
-def q_long_range_assign_join(spark, sf_dir):
-    """K1 large-list path: broadcast range JOIN assignment
-    (ranges.assign_range_via_join) of every key into 32 uniform LONG ranges —
-    one BroadcastNestedLoopJoin, no shuffle of the fact side. The oracle is
-    the closed-form uniform floor (step 312) with the reference's last-range
-    overlap quirk (bucket 31 starts at the previous range's END, 9671)."""
-    from spanner_data_validator_spark.operators.ranges import (
-        assign_range_via_join,
-        long_ranges,
-    )
-
-    ranges = long_ranges(0, 10_000, 32)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        (F.col("event_id") % 10_000).alias("k"))
-    return (assign_range_via_join(ev, ranges, "LONG", "k")
-            .groupBy("partition_id").agg(F.count("*").alias("n")))
-
-
-@register("range_key_modes", """
-WITH r AS (
-  SELECT event_id, event_id % 10000 AS k FROM events WHERE event_id % 97 = 0
-),
-p AS (
-  SELECT event_id,
-         CASE WHEN k >= 9671 THEN 31 ELSE CAST(floor(k / 312) AS INT) END AS pid
-  FROM r
-)
-SELECT CAST(CASE WHEN pid = 31 THEN 9671 ELSE pid * 312 END AS STRING)
-       || '|' ||
-       CAST(CASE WHEN pid = 31 THEN 10000 ELSE pid * 312 + 311 END AS STRING)
-       || '|' || CAST(event_id AS STRING) AS range_key
-FROM p
-""")
-def q_range_key_modes(spark, sf_dir):
-    """K1 composite grouping keys (MapWithRangeFn.java:99-116): the
-    RANGE_PLUS_HASH-style 'start|end|<key>' rendering over uniform LONG
-    ranges, oracle-checked against the closed-form range bounds including
-    the last-range overlap quirk."""
-    from spanner_data_validator_spark.operators.ranges import (
-        long_ranges,
-        map_with_range_key,
-    )
-
-    ranges = long_ranges(0, 10_000, 32)
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("event_id") % 97 == 0)
-          .select((F.col("event_id") % 10_000).alias("k"),
-                  F.col("event_id").cast("string").alias("h")))
-    out = map_with_range_key(ev, ranges, "LONG", "k",
-                             mapping_type="RANGE_PLUS_HASH", hash_col="h")
-    return out.select("range_key")
-
-
-@register("long_ranges", """
-SELECT CAST(i AS INT) AS partition_id,
-       CASE WHEN i = 63 THEN 0 + i * 1562 - 1 ELSE 0 + i * 1562 END AS start_long,
-       CASE WHEN i = 63 THEN 100000 ELSE 0 + i * 1562 + 1561 END AS end_long
-FROM (SELECT range AS i FROM range(64))
-""")
-def q_long_ranges(spark, sf_dir):
-    """R2: distributed LONG partition-range generation over [0, 100000] × 64,
-    preserving the reference's last-range overlap quirk."""
-    return long_ranges_df(spark, 0, 100_000, 64)
-
-
-_ORDERS_SQL = """
-WITH src AS (
-  SELECT o.o_orderkey AS key,
-         concat_ws('|', coalesce(o.o_orderstatus,''),
-                   coalesce(CAST(o.o_totalprice AS STRING),''),
-                   coalesce(c.c_mktsegment,'')) AS payload
-  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-),
-tgt AS (
-  SELECT key,
-         CASE WHEN key % 50 = 0 THEN payload || '#mut' ELSE payload END AS payload
-  FROM src WHERE key % 50 <> 1
-  UNION ALL
-  SELECT key + 100000000 AS key, payload FROM src WHERE key % 50 = 2
-),
-cls AS (
-  SELECT CASE WHEN s.payload IS NOT NULL AND t.payload IS NOT NULL THEN
-                CASE WHEN s.payload = t.payload THEN 'MATCH' ELSE 'MISMATCH' END
-              WHEN t.payload IS NULL THEN 'SOURCE_ONLY' ELSE 'TARGET_ONLY' END AS status
-  FROM src s FULL OUTER JOIN tgt t ON s.key = t.key
-)
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
-"""
-
-
-@register("validate_orders_enriched", _ORDERS_SQL)
-def q_validate_orders_enriched(spark, sf_dir):
-    """Dimension-enriched validation: the payload joins in a broadcast lookup
-    (customer market segment) BEFORE fingerprinting — the custom-transform-
-    with-lookup pattern at fact-vs-dim scale. The dim side is explicitly
-    broadcast, so the fact table is never shuffled for the enrichment; the
-    only exchange remains the validation join itself."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_mktsegment")
-    enriched = orders.join(F.broadcast(cust),
-                           orders.o_custkey == cust.c_custkey, "left")
-    payload = F.concat_ws(
-        "|",
-        F.coalesce(F.col("o_orderstatus"), F.lit("")),
-        F.coalesce(F.col("o_totalprice").cast("string"), F.lit("")),
-        F.coalesce(F.col("c_mktsegment"), F.lit("")))
-    src = enriched.select(F.col("o_orderkey").alias("key"), payload.alias("payload"))
-    tgt = events_target(src)
-
-    def prep(df):
-        return df.select("key", fingerprint_expr(F.col("payload")).alias("fingerprint"))
-
-    return (classify_pair(prep(src), prep(tgt), ["key"])
-            .groupBy("status").agg(F.count("*").alias("n")))
-
-
-_SUMMARY_SQL = """
-WITH src AS (
-  SELECT o_orderkey AS key, o_orderpriority AS grp, o_totalprice AS val FROM orders
-),
-tgt AS (
-  SELECT key, grp,
-         CASE WHEN key % 50 = 0 THEN val + 1 ELSE val END AS val
-  FROM src WHERE key % 50 <> 1
-  UNION ALL
-  SELECT key + 100000000 AS key, grp, val FROM src WHERE key % 50 = 2
-),
-a AS (SELECT grp, CAST(count(*) AS BIGINT) AS src_n,
-             round(sum(val), 2) AS src_sum FROM src GROUP BY grp),
-b AS (SELECT grp, CAST(count(*) AS BIGINT) AS tgt_n,
-             round(sum(val), 2) AS tgt_sum FROM tgt GROUP BY grp)
-SELECT coalesce(a.grp, b.grp) AS grp, a.src_n, b.tgt_n,
-       CASE WHEN a.src_n = b.tgt_n AND a.src_sum = b.tgt_sum
-            THEN 'MATCH' ELSE 'MISMATCH' END AS status
-FROM a FULL OUTER JOIN b ON a.grp = b.grp
-"""
-
-
-@register("summary_validation", _SUMMARY_SQL)
-def q_summary_validation(spark, sf_dir):
-    """Aggregate (summary) reconciliation — the count/sum mode of standard
-    data-validation tooling, complementing the reference's row-level mode:
-    per-group counts and sums computed on each side independently (pure
-    map-side-combine hash aggregates, no row-level join at all), then one
-    tiny group-level comparison. At 100 TB this validates with ZERO
-    row-granular shuffle — the exchange carries one row per group."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    src = orders.select(F.col("o_orderkey").alias("key"),
-                        F.col("o_orderpriority").alias("grp"),
-                        F.col("o_totalprice").alias("val"))
-    mutated = (src.where(F.col("key") % 50 != 1)
-                  .withColumn("val", F.when(F.col("key") % 50 == 0,
-                                            F.col("val") + 1).otherwise(F.col("val"))))
-    inserted = src.where(F.col("key") % 50 == 2).withColumn(
-        "key", F.col("key") + F.lit(100_000_000))
-    tgt = mutated.unionByName(inserted)
-
-    def summarize(df, n, s):
-        return df.groupBy("grp").agg(F.count("*").alias(n),
-                                     F.round(F.sum("val"), 2).alias(s))
-
-    a = summarize(src, "src_n", "src_sum")
-    b = summarize(tgt, "tgt_n", "tgt_sum")
-    status = F.when((F.col("src_n") == F.col("tgt_n"))
-                    & (F.col("src_sum") == F.col("tgt_sum")), "MATCH") \
-              .otherwise("MISMATCH")
-    return (a.join(b, "grp", "full_outer")
-             .select("grp", "src_n", "tgt_n", status.alias("status")))
-
-
-_LINEITEM_KEYS = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"]
-_LINEITEM_PAYLOAD = ["l_quantity", "l_extendedprice", "l_returnflag",
-                     "l_linestatus", "l_shipdate"]
-_LI_H = "(l_orderkey*31 + l_partkey*7 + l_suppkey*3 + l_linenumber) % 50"
-
-_LINEITEM_SQL = f"""
-WITH src AS (
-  SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
-         l_extendedprice, l_returnflag, l_linestatus, l_shipdate
-  FROM lineitem
-),
-tgt AS (
-  SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-         CASE WHEN {_LI_H} = 0 THEN l_quantity + 1 ELSE l_quantity END AS l_quantity,
-         l_extendedprice, l_returnflag, l_linestatus, l_shipdate
-  FROM src WHERE {_LI_H} <> 1
-  UNION ALL
-  SELECT l_orderkey, l_partkey, l_suppkey,
-         CAST(l_linenumber + 1000000 AS INT) AS l_linenumber,
-         l_quantity, l_extendedprice, l_returnflag, l_linestatus, l_shipdate
-  FROM src WHERE {_LI_H} = 2
-),
-cls AS (
-  SELECT CASE WHEN s.l_orderkey IS NOT NULL AND t.l_orderkey IS NOT NULL THEN
-                CASE WHEN s.l_quantity = t.l_quantity
-                      AND s.l_extendedprice = t.l_extendedprice
-                      AND s.l_returnflag = t.l_returnflag
-                      AND s.l_linestatus = t.l_linestatus
-                      AND s.l_shipdate = t.l_shipdate
-                     THEN 'MATCH' ELSE 'MISMATCH' END
-              WHEN t.l_orderkey IS NULL THEN 'SOURCE_ONLY' ELSE 'TARGET_ONLY' END AS status
-  FROM src s FULL OUTER JOIN tgt t
-    ON s.l_orderkey = t.l_orderkey AND s.l_partkey = t.l_partkey
-   AND s.l_suppkey = t.l_suppkey AND s.l_linenumber = t.l_linenumber
-)
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
-"""
-
-
-@register("validate_lineitem", _LINEITEM_SQL)
-def q_validate_lineitem(spark, sf_dir):
-    """Composite-key validation over a relational fact table: 4-column key
-    (order, part, supplier, line number), payload spanning doubles, strings,
-    and timestamps, through the standard fingerprint → full-outer classify
-    plan — the reference's multi-column PK case (SURVEY §2.2) on TPC-H-shaped
-    data instead of transcripts. The oracle compares raw columns; Spark
-    compares normalized fingerprints — identical classifications because both
-    serializations are injective on these domains."""
-    from spanner_data_validator_spark.functions.fingerprint import fingerprint_turns
-    from spanner_data_validator_spark.operators.comparator import classify_pair
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        *_LINEITEM_KEYS, *_LINEITEM_PAYLOAD)
-    h = (F.col("l_orderkey") * 31 + F.col("l_partkey") * 7
-         + F.col("l_suppkey") * 3 + F.col("l_linenumber")) % 50
-    mutated = (li.where(h != 1)
-                 .withColumn("l_quantity",
-                             F.when(h == 0, F.col("l_quantity") + 1)
-                              .otherwise(F.col("l_quantity"))))
-    inserted = li.where(h == 2).withColumn(
-        "l_linenumber", (F.col("l_linenumber") + 1_000_000).cast("int"))
-    tgt = mutated.unionByName(inserted)
-
-    s = fingerprint_turns(li, _LINEITEM_KEYS, _LINEITEM_PAYLOAD)
-    t = fingerprint_turns(tgt, _LINEITEM_KEYS, _LINEITEM_PAYLOAD)
-    cls = classify_pair(s, t, _LINEITEM_KEYS)
-    return cls.groupBy("status").agg(F.count("*").alias("n"))
-
-
-# ---------------------------------------------------------------------------
-# windowed aggregation (streaming ops in their batch-equivalent form)
-# ---------------------------------------------------------------------------
-
-@register("tumbling_mismatch_counts", _CLS_CTE + """
-SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms, status,
-       CAST(count(*) AS BIGINT) AS n
-FROM cls GROUP BY 1, 2
-""")
-def q_tumbling_mismatch_counts(spark, sf_dir):
-    """A1-streaming analogue: tumbling 1h event-time windows × status counts."""
-    cls = classified_events(spark, sf_dir, with_ts=True)
-    ts = F.timestamp_millis(F.coalesce(F.col("tgt_ts_millis"), F.col("src_ts_millis")))
-    return (cls.groupBy(F.window(ts, "1 hour").alias("w"), "status")
-               .agg(F.count("*").alias("n"))
-               .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-                       "status", "n"))
-
-
-@register("session_windows", """
-WITH o AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   >= INTERVAL 30 MINUTE OR
-                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-s AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM o
-)
-SELECT user_id, epoch_ms(min(ts)) AS session_start_ms, CAST(count(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, session_id
-""")
-def q_session_windows(spark, sf_dir):
-    """Session windows (gap 30 min) per user over the events stream — the
-    batch form of the streaming session_window aggregation."""
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp")))
-    return (ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-              .agg(F.count("*").alias("n_events"))
-              .select("user_id", F.unix_millis(F.col("w.start")).alias("session_start_ms"),
-                      "n_events"))
-
-
-# ---------------------------------------------------------------------------
-# training-data pipeline: dedup / similarity / text analysis
-# ---------------------------------------------------------------------------
-
-_DOC_DUP_CORPUS = """
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-)
-"""
-
-@register("dedup_exact", "WITH " + _DOC_DUP_CORPUS + """
-SELECT CAST(min(doc_id) AS BIGINT) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies
-FROM corpus GROUP BY text
-""")
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup by text fingerprint over a corpus with planted duplicates."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.where(F.col("doc_id") % 10 == 0)
-            .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    return exact_dedup(corpus, "doc_id", "text")
-
-
-_NEARDUP_CORPUS = """
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, 'XX ' || text FROM documents WHERE doc_id % 20 = 0
-)
-"""
-
-# stopword-gram pruning (max_shingle_df=8) is part of BOTH engines' plans:
-# shingles appearing in more than 8 docs are dropped before sizing/joining —
-# the skew control that bounds the inverted-index blowup at 100 TB.
-_MAX_SHINGLE_DF = 8
-
-_JACCARD_CTES = _NEARDUP_CORPUS + f""",
-sh AS (
-  SELECT doc_id,
-         array_to_string(list_slice(string_split(text,' '), i, i+2), ' ') AS shingle
-  FROM corpus, UNNEST(range(1, len(string_split(text,' ')) - 1)) AS t(i)
-  WHERE len(string_split(text,' ')) >= 3
-),
-d0 AS (SELECT DISTINCT doc_id, shingle FROM sh),
-keep AS (SELECT shingle FROM d0 GROUP BY shingle HAVING count(*) <= {_MAX_SHINGLE_DF}),
-d AS (SELECT d0.doc_id, d0.shingle FROM d0 JOIN keep USING (shingle)),
-sizes AS (SELECT doc_id, count(*) AS n FROM d GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS k
-  FROM d a JOIN d b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-"""
-
-_JACCARD_SELECT = """
-SELECT i.a, i.b, CAST(i.k AS DOUBLE) / (sa.n + sb.n - i.k) AS jaccard
-FROM inter i JOIN sizes sa ON i.a = sa.doc_id JOIN sizes sb ON i.b = sb.doc_id
-WHERE CAST(i.k AS DOUBLE) / (sa.n + sb.n - i.k) >= 0.7
-"""
-
-_JACCARD_SQL = "WITH " + _JACCARD_CTES + _JACCARD_SELECT
-
-
-def _neardup_corpus(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    corpus = docs.unionByName(
-        docs.where(F.col("doc_id") % 20 == 0)
-            .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                    F.concat(F.lit("XX "), F.col("text")).alias("text")))
-    # the sketch pipelines do their heavy per-doc work (shingle explode,
-    # hashing, signature bit sums) in the SCAN stage; the test corpus is two
-    # parquet files, which would pin that stage to 2 cores. A real 100 TB
-    # table arrives in thousands of splits and skips this.
-    par = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < par:
-        corpus = corpus.repartition(par)
-    return corpus
-
-
-@register("ngram_jaccard_pairs", _JACCARD_SQL)
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    """Exact 3-gram Jaccard near-dup pairs (inverted-index join, no n²),
-    with stopword-gram pruning (max_shingle_df) bounding hot-shingle skew."""
-    return jaccard_pairs(_neardup_corpus(spark, sf_dir), "doc_id", "text",
-                         n=3, threshold=0.7, max_shingle_df=_MAX_SHINGLE_DF)
-
-
-@register("minhash_lsh_pairs", _JACCARD_SQL)
-def q_minhash_lsh_pairs(spark, sf_dir):
-    """MinHash(32 perms)+LSH(16 bands) candidates, exact-Jaccard verification
-    of ONLY the candidates (operators/dedup.verify_candidate_pairs). With 2
-    rows per band, recall on >=0.7-Jaccard pairs is total on this corpus, so
-    the exact-Jaccard oracle applies verbatim (and pytest asserts equality)."""
-    return minhash_lsh_pairs(_neardup_corpus(spark, sf_dir), "doc_id", "text",
-                             n=3, num_perm=32, bands=16, threshold=0.7,
-                             max_shingle_df=_MAX_SHINGLE_DF)
-
-
-# Connected components over the near-dup pair graph: the clustering step that
-# turns pairwise matches into dup GROUPS so exactly one canonical doc per
-# group survives. The oracle computes the same min-label components with a
-# recursive CTE: (v, s) is reachable iff some path s->v keeps every later
-# node > s — always true when s is the component minimum, so min(label) per
-# node IS the component min.
-_COMPONENTS_SQL = "WITH RECURSIVE " + _JACCARD_CTES + f""",
-pairs AS ({_JACCARD_SELECT}),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-walk(node, label) AS (
-  SELECT doc_id, doc_id FROM corpus
-  UNION
-  SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node WHERE w.label < e.v
-)
-SELECT node AS doc_id, MIN(label) AS component FROM walk GROUP BY node
-"""
-
-
-@register("dedup_components", _COMPONENTS_SQL)
-def q_dedup_components(spark, sf_dir):
-    """Near-dup clustering: exact-Jaccard pairs -> alternating large/small-star
-    connected components (operators/dedup.connected_components) -> every corpus
-    doc labeled with its dup-group id (component = min doc_id; singletons label
-    themselves)."""
-    corpus = _neardup_corpus(spark, sf_dir)
-    pairs = jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.7,
-                          max_shingle_df=_MAX_SHINGLE_DF)
-    return (assign_components(corpus, pairs, "doc_id")
-            .select("doc_id", "component"))
-
-
-_PACK_CAPACITY, _PACK_SHARDS = 256, 8
-
-
-def _pack_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH RECURSIVE t AS (
-  SELECT doc_id,
-         CAST({h} % {_PACK_SHARDS} AS INT) AS shard,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         row_number() OVER (
-           PARTITION BY CAST({h} % {_PACK_SHARDS} AS INT) ORDER BY doc_id) AS rn
-  FROM documents
-),
-pack(shard, rn, doc_id, n_tokens, bin_id, fill) AS (
-  SELECT shard, rn, doc_id, n_tokens, CAST(0 AS BIGINT), n_tokens
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.shard, t.rn, t.doc_id, t.n_tokens,
-         CASE WHEN p.fill + t.n_tokens <= {_PACK_CAPACITY}
-              THEN p.bin_id ELSE p.bin_id + 1 END,
-         CASE WHEN p.fill + t.n_tokens <= {_PACK_CAPACITY}
-              THEN p.fill + t.n_tokens ELSE t.n_tokens END
-  FROM pack p JOIN t ON t.shard = p.shard AND t.rn = p.rn + 1
-)
-SELECT doc_id, shard, n_tokens, bin_id, fill - n_tokens AS bin_offset FROM pack
-"""
-
-
-@register("pack_greedy_bins", _pack_oracle())
-def q_pack_greedy_bins(spark, sf_dir):
-    """Greedy sequence packing into 256-token training bins, shard-parallel
-    (operators/packing.pack_greedy): hash-shard docs, order by doc_id within
-    the shard, fill bins sequentially inside one applyInPandas group per
-    shard. The oracle replays the identical walk with a recursive CTE."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.packing import pack_greedy
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", token_count_ws("text").alias("n_tokens")))
-    return pack_greedy(docs, "doc_id", F.col("n_tokens"),
-                       capacity=_PACK_CAPACITY, n_shards=_PACK_SHARDS,
-                       hash_fn=portable_hash60) \
-        .select("doc_id", "shard", "n_tokens", "bin_id", "bin_offset")
-
-
-_CHUNK_CTX = 512
-
-
-def _chunk_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         CAST({h} % {_PACK_SHARDS} AS INT) AS shard,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-  FROM documents
-),
-s AS (
-  SELECT doc_id, shard, n_tokens,
-         CAST(coalesce(SUM(n_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS tok_start
-  FROM t
-)
-SELECT doc_id, shard, n_tokens, tok_start,
-       CAST(floor(tok_start / {_CHUNK_CTX}) AS BIGINT) AS first_chunk,
-       CAST(floor((tok_start + greatest(n_tokens, 1) - 1) / {_CHUNK_CTX})
-            AS BIGINT) AS last_chunk,
-       CAST(floor((tok_start + greatest(n_tokens, 1) - 1) / {_CHUNK_CTX})
-            - floor(tok_start / {_CHUNK_CTX}) + 1 AS BIGINT) AS n_chunks
-FROM s
-"""
-
-
-@register("pack_concat_chunks", _chunk_oracle())
-def q_pack_concat_chunks(spark, sf_dir):
-    """Concat-and-chunk packing (operators/packing.pack_concat_chunks): each
-    shard's doc stream split into fixed 512-token training sequences, docs
-    straddling boundaries — pure per-shard window arithmetic, zero Python."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.packing import pack_concat_chunks
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", token_count_ws("text").alias("n_tokens")))
-    return pack_concat_chunks(docs, "doc_id", F.col("n_tokens"),
-                              context_len=_CHUNK_CTX, n_shards=_PACK_SHARDS,
-                              hash_fn=portable_hash60) \
-        .select("doc_id", "shard", "n_tokens", "tok_start",
-                "first_chunk", "last_chunk", "n_chunks")
-
-
-# dyadic rates (k/2^20 exact) so rate*2^20 is integral in both engines —
-# double->long casts truncate in Spark but round in DuckDB.
-_MIX_RATES = {"en": 0.75, "de": 0.5, "zh": 0.25}
-_MIX_DEFAULT, _MIX_SEED = 0.125, 7
-
-
-def _mix_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-    from spanner_data_validator_spark.operators.sampling import SAMPLE_MODULUS
-
-    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)", _MIX_SEED)
-    cases = " ".join(f"WHEN '{k}' THEN {v}" for k, v in _MIX_RATES.items())
-    return f"""
-SELECT doc_id, lang FROM documents
-WHERE {h} % {SAMPLE_MODULUS} <
-      CAST(floor((CASE lang {cases} ELSE {_MIX_DEFAULT} END) * {SAMPLE_MODULUS})
-           AS BIGINT)
-"""
-
-
-@register("stratified_sample_mix", _mix_oracle())
-def q_stratified_sample_mix(spark, sf_dir):
-    """Deterministic per-language mix sampling (operators/sampling
-    .stratified_sample): keyed-hash keep decision per doc, per-stratum rates
-    from a data-mix recipe — a pure codegen filter, reproducible across runs."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.sampling import stratified_sample
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return stratified_sample(docs, "doc_id", "lang", _MIX_RATES,
-                             default_rate=_MIX_DEFAULT, seed=_MIX_SEED,
-                             hash_fn=portable_hash60).select("doc_id", "lang")
-
-
-# simhash demo parameters: one 60-bit portable-hash word, 6 blocks of 10 bits,
-# hamming <= 3 -> C(6,3)=20 combination probes keyed on 30 bits. The LIBRARY
-# default is the 128-bit/8-block xxhash64 config (operators/dedup.py) — this
-# query pins the md5-derived portable family so DuckDB computes the identical
-# signature end-to-end (verdict r2 item 2: zero no_oracle rows).
-_SIMHASH_BITS, _SIMHASH_BLOCKS, _SIMHASH_H = 60, 6, 3
-
-
-def _simhash_oracle() -> str:
-    """DuckDB replica of the blocked-SimHash pipeline: same shingles, same
-    portable 60-bit hash, same ±1 bit sums, same block-combination probing."""
-    from itertools import combinations
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    bits, b, h = _SIMHASH_BITS, _SIMHASH_BLOCKS, _SIMHASH_H
-    width = bits // b
-    mask = (1 << width) - 1
-    bit_sums = ",\n         ".join(
-        f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}"
-        for j in range(bits))
-    sig_expr = " + ".join(
-        f"(CASE WHEN b{j} > 0 THEN {1 << j}::BIGINT ELSE 0 END)"
-        for j in range(bits))
-    probes = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, s, {ci} AS combo, "
-        + " || '_' || ".join(f"CAST((s >> {blk * width}) & {mask} AS VARCHAR)"
-                             for blk in combo)
-        + " AS key FROM sig"
-        for ci, combo in enumerate(combinations(range(b), b - h)))
-    return ("WITH " + _NEARDUP_CORPUS + f""",
-sh AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(string_split(text,' '), i, i+2), ' ') AS shingle
-  FROM corpus, UNNEST(range(1, len(string_split(text,' ')) - 1)) AS t(i)
-  WHERE len(string_split(text,' ')) >= 3
-),
-hashed AS (SELECT doc_id, {portable_hash60_sql('shingle')} AS h FROM sh),
-sums AS (
-  SELECT doc_id,
-         {bit_sums}
-  FROM hashed GROUP BY doc_id
-),
-sig AS (SELECT doc_id, ({sig_expr}) AS s FROM sums),
-probes AS (
-{probes}
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b, l.s AS sa, r.s AS sb
-  FROM probes l JOIN probes r ON l.combo = r.combo AND l.key = r.key
-  WHERE l.doc_id < r.doc_id
-)
-SELECT a, b, CAST(bit_count(xor(sa, sb)) AS INT) AS hamming
-FROM cand WHERE bit_count(xor(sa, sb)) <= {h}
-""")
-
-
-@register("simhash_near_dups", _simhash_oracle())
-def q_simhash_near_dups(spark, sf_dir):
-    """Blocked SimHash near-dups (operators/dedup.simhash_near_dups) on the
-    portable md5-derived 60-bit hash family so the whole pipeline — shingles,
-    signature bit sums, C(6,3) combination probes, hamming verify — is
-    oracle-checked. Production default is 128-bit xxhash64 (pytest-covered)."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-
-    out = simhash_near_dups(_neardup_corpus(spark, sf_dir), "doc_id", "text",
-                            n=3, max_hamming=_SIMHASH_H, bits=_SIMHASH_BITS,
-                            n_blocks=_SIMHASH_BLOCKS, word_bits=_SIMHASH_BITS,
-                            hash_fn=portable_hash60)
-    return out.withColumn("hamming", F.col("hamming").cast("int"))
-
-
-@register("ann_cosine_topk", """
-WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 100 = 0),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                CAST(e.embedding AS DOUBLE[])) AS sim
-  FROM q JOIN embeddings e ON e.vec_id <> q.query_id
-),
-r AS (
-  SELECT query_id, neighbor_id, sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, round(sim, 3) AS sim
-FROM r WHERE rank <= 3
-""")
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-3 for query vectors (vec_id % 100 = 0)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = cosine_topk(emb, emb.where(F.col("vec_id") % 100 == 0), 3)
-    return out.withColumn("sim", F.round(F.col("sim"), 3))
-
-
-def _rhp_oracle(n_planes: int = 8, dim: int = 64, seed: int = 42) -> str:
-    """Sign-bucket LSH is pure arithmetic over literal hyperplanes, so the
-    whole multi-probe pipeline (bucket, flip-one-bit probes, bucket-local
-    cosine, top-k) is DuckDB-expressible with the planes inlined."""
-    from spanner_data_validator_spark.operators.ann import make_planes
-
-    planes = make_planes(dim, n_planes, seed)
-    bucket = " + ".join(
-        "CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ["
-        + ",".join(repr(float(x)) for x in p) + f"]) > 0 THEN {1 << j} ELSE 0 END"
-        for j, p in enumerate(planes))
-    probe_list = ", ".join(["0"] + [str(1 << j) for j in range(n_planes)])
-    return f"""
-WITH it AS (
-  SELECT vec_id, embedding, ({bucket}) AS b FROM embeddings
-),
-q0 AS (
-  SELECT vec_id AS query_id, embedding AS qv, b
-  FROM it WHERE vec_id % 100 = 0
-),
-probes AS (
-  SELECT query_id, qv, xor(b, p) AS b FROM q0, UNNEST([{probe_list}]) AS t(p)
-),
-scored AS (
-  SELECT p.query_id, it.vec_id AS neighbor_id,
-         list_cosine_similarity(CAST(p.qv AS DOUBLE[]),
-                                CAST(it.embedding AS DOUBLE[])) AS sim
-  FROM probes p JOIN it ON it.b = p.b AND it.vec_id <> p.query_id
-),
-r AS (
-  SELECT query_id, neighbor_id, sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, round(sim, 3) AS sim
-FROM r WHERE rank <= 3
-"""
-
-
-@register("ann_rhp_lsh_topk", _rhp_oracle())
-def q_ann_rhp_lsh_topk(spark, sf_dir):
-    """Multi-probe random-hyperplane LSH top-3: sign buckets over 8 literal
-    planes, each query probes its bucket plus the 8 one-bit-flip buckets,
-    scoring bucket-local (operators/ann.rhp_lsh_topk)."""
-    from spanner_data_validator_spark.operators.ann import rhp_lsh_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
-    out = rhp_lsh_topk(emb, emb.where(F.col("vec_id") % 100 == 0), 3,
-                       dim=64, n_planes=8, seed=42, multi_probe=True)
-    return out.withColumn("sim", F.round(F.col("sim"), 3))
-
-
-@register("embedding_near_dups", """
-WITH corpus AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0
-)
-SELECT a.vec_id AS a, b.vec_id AS b
-FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                             CAST(b.embedding AS DOUBLE[])) >= 0.999
-""")
-def q_embedding_near_dups(spark, sf_dir):
-    """Cosine >= 0.999 near-dup pairs over a corpus with planted duplicate
-    vectors (vec_id % 50 = 0 copied at +1000000)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.unionByName(
-        emb.where(F.col("vec_id") % 50 == 0)
-           .withColumn("vec_id", F.col("vec_id") + F.lit(1_000_000)))
-    dim = 64
-    return embedding_near_dups(corpus, threshold=0.999, dim=dim).select("a", "b")
-
-
-@register("text_quality", """
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       CAST((length(text) - length(replace(text, 'row', ''))) / 3 AS BIGINT) AS stop_hits,
-       CAST(len(string_split(text, ' ')) AS DOUBLE) / greatest(length(text), 1) AS quality
-FROM documents
-""")
-def q_text_quality(spark, sf_dir):
-    """Per-doc quality metrics: token count, stopword hits, density score."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id",
-        token_count_ws("text").alias("n_tokens"),
-        substr_hits("text", "row").alias("stop_hits"),
-        quality_score("text").alias("quality"))
-
-
-@register("token_count_regex", """
-SELECT doc_id, CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS BIGINT) AS n_tokens
-FROM documents
-""")
-def q_token_count_regex(spark, sf_dir):
-    """BPE-ish regex tokenizer count per doc."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", token_count_regex("text").alias("n_tokens"))
-
-
-@register("lang_id", """
-SELECT doc_id,
-       CASE WHEN (CASE WHEN text LIKE '%data%' THEN 1 ELSE 0 END +
-                  CASE WHEN text LIKE '%table%' THEN 1 ELSE 0 END +
-                  CASE WHEN text LIKE '%spark%' THEN 1 ELSE 0 END) >= 2
-            THEN 'en' ELSE 'und' END AS pred_lang,
-       lang
-FROM documents
-""")
-def q_lang_id(spark, sf_dir):
-    """Marker-word language-ID heuristic vs the labeled lang column."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", lang_id_heuristic("text").alias("pred_lang"), "lang")
-
-
-_LANG_NGRAM_SQL = r"""
-WITH norm AS (
-  SELECT doc_id, lang, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS t
-  FROM documents
-),
-tg AS (
-  SELECT lang, substr(t, CAST(u.i AS INT), 3) AS gram
-  FROM (SELECT lang, t FROM norm WHERE doc_id % 5 = 0) tr,
-       unnest(generate_series(1, length(t) - 2)) AS u(i)
-),
-prof AS (
-  SELECT lang, gram, CAST(65 - rnk AS BIGINT) AS weight FROM (
-    SELECT lang, gram,
-           row_number() OVER (PARTITION BY lang
-                              ORDER BY count(*) DESC, gram) AS rnk
-    FROM tg GROUP BY lang, gram)
-  WHERE rnk <= 64
-),
-dg AS (
-  SELECT doc_id, substr(t, CAST(u.i AS INT), 3) AS gram
-  FROM (SELECT doc_id, t FROM norm WHERE doc_id % 5 <> 0) te,
-       unnest(generate_series(1, length(t) - 2)) AS u(i)
-),
-sc AS (
-  SELECT doc_id, lang, CAST(sum(weight) AS BIGINT) AS score
-  FROM dg JOIN prof USING (gram) GROUP BY doc_id, lang
-),
-best AS (
-  SELECT doc_id, lang AS pred_lang, score,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, lang) AS rn
-  FROM sc
-)
-SELECT n.doc_id, coalesce(b.pred_lang, 'und') AS pred_lang,
-       CAST(coalesce(b.score, 0) AS BIGINT) AS score
-FROM (SELECT doc_id FROM norm WHERE doc_id % 5 <> 0) n
-LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-"""
-
-
-@register("lang_id_ngram", _LANG_NGRAM_SQL)
-def q_lang_id_ngram(spark, sf_dir):
-    """Char-trigram profile language ID (functions/text.train_lang_profiles +
-    lang_id_ngram): train Cavnar–Trenkle integer-rank profiles on the
-    doc_id%5==0 split, score the held-out docs. Integer rank weights make
-    every score an exact BIGINT, so the full train+score pipeline is
-    hash-matched against DuckDB; real multilingual accuracy is asserted in
-    tests/test_text.py on a planted 4-language fixture (this corpus's lang
-    labels are synthetic and share one vocabulary)."""
-    from spanner_data_validator_spark.functions.text import (
-        lang_id_ngram,
-        train_lang_profiles,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    prof = train_lang_profiles(docs.where(F.col("doc_id") % 5 == 0),
-                               "lang", "text", n=3, top_k=64)
-    return lang_id_ngram(docs.where(F.col("doc_id") % 5 != 0), prof,
-                         id_col="doc_id", text_col="text", n=3)
-
-
-@register("doc_repetition", """
-WITH wnz AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-  WHERE w <> ''
-),
-wc AS (SELECT doc_id, w, count(*) AS c FROM wnz GROUP BY doc_id, w),
-ws AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-              count(*) AS n_distinct, max(c) AS top_c
-       FROM wc GROUP BY doc_id),
-g AS (
-  SELECT doc_id, array_to_string(list_slice(string_split(text, ' '), i, i + 2),
-                                 ' ') AS g
-  FROM documents, UNNEST(range(1, len(string_split(text, ' ')) - 1)) AS t(i)
-  WHERE len(string_split(text, ' ')) >= 3
-),
-gc AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY doc_id, g),
-gs AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-              count(*) AS n_distinct_grams
-       FROM gc GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(coalesce(ws.n_words, 0) AS BIGINT) AS n_words,
-       CASE WHEN coalesce(ws.n_words, 0) > 0
-            THEN 1.0 - ws.n_distinct / ws.n_words ELSE 0.0 END AS dup_word_frac,
-       CASE WHEN coalesce(ws.n_words, 0) > 0
-            THEN ws.top_c / ws.n_words ELSE 0.0 END AS top_word_frac,
-       CASE WHEN coalesce(gs.n_grams, 0) > 0
-            THEN 1.0 - gs.n_distinct_grams / gs.n_grams ELSE 0.0 END AS dup_ngram_frac
-FROM documents d LEFT JOIN ws USING (doc_id) LEFT JOIN gs USING (doc_id)
-""")
-def q_doc_repetition(spark, sf_dir):
-    """Gopher-style repetition quality metrics (operators/quality
-    .repetition_metrics): duplicate-word / top-word / duplicate-3-gram
-    fractions per document, exploded-groupBy shape (bounded shuffle rows)."""
-    from spanner_data_validator_spark.operators.quality import repetition_metrics
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return repetition_metrics(docs, "doc_id", "text", n=3)
-
-
-_PII_PLANT_SQL = """
-  SELECT doc_id,
-         text
-         || CASE WHEN doc_id % 7 = 0
-                 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                 ELSE '' END
-         || CASE WHEN doc_id % 11 = 0
-                 THEN ' host 10.0.' || CAST(doc_id % 250 AS VARCHAR) || '.'
-                      || CAST((doc_id * 7) % 250 AS VARCHAR)
-                 ELSE '' END
-         || CASE WHEN doc_id % 13 = 0 THEN ' call +1 555-123-4567'
-                 ELSE '' END AS text
-  FROM documents
-"""
-
-
-def _pii_oracle() -> str:
-    from spanner_data_validator_spark.functions.text import PII_PATTERNS
-
-    expr = "text"
-    for _, pat, repl in PII_PATTERNS:
-        expr = f"regexp_replace({expr}, '{pat}', '{repl}', 'g')"
-    return f"""
-WITH planted AS ({_PII_PLANT_SQL}),
-red AS (SELECT doc_id, {expr} AS redacted FROM planted)
-SELECT doc_id, redacted,
-       contains(redacted, '<EMAIL>') AS had_email,
-       contains(redacted, '<IP>') AS had_ip,
-       contains(redacted, '<PHONE>') AS had_phone
-FROM red
-"""
-
-
-@register("pii_redaction", _pii_oracle())
-def q_pii_redaction(spark, sf_dir):
-    """PII scrub (functions/text.redact_pii): emails / IPv4 / phone-like
-    digit runs planted deterministically into the corpus, redacted by the
-    shared Java-regex∩RE2 pattern chain — the full redacted TEXT is
-    hash-compared against DuckDB, so pattern drift between engines fails
-    the gate."""
-    from spanner_data_validator_spark.functions.text import redact_pii
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    planted = docs.select(
-        did,
-        F.concat(
-            F.col("text"),
-            F.when(did % 7 == 0,
-                   F.concat(F.lit(" contact user"), did.cast("string"),
-                            F.lit("@example.com"))).otherwise(""),
-            F.when(did % 11 == 0,
-                   F.concat(F.lit(" host 10.0."), (did % 250).cast("string"),
-                            F.lit("."), ((did * 7) % 250).cast("string")))
-             .otherwise(""),
-            F.when(did % 13 == 0, F.lit(" call +1 555-123-4567")).otherwise(""),
-        ).alias("text"))
-    red = planted.select("doc_id", redact_pii("text").alias("redacted"))
-    return red.select(
-        "doc_id", "redacted",
-        F.col("redacted").contains("<EMAIL>").alias("had_email"),
-        F.col("redacted").contains("<IP>").alias("had_ip"),
-        F.col("redacted").contains("<PHONE>").alias("had_phone"))
-
-
-@register("contamination_overlap", """
-WITH bg AS (
-  SELECT DISTINCT array_to_string(list_slice(string_split(text, ' '), i, i + 7),
-                                  ' ') AS g
-  FROM documents, UNNEST(range(1, len(string_split(text, ' ')) - 6)) AS t(i)
-  WHERE doc_id % 97 = 0 AND len(string_split(text, ' ')) >= 8
-),
-dg AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(string_split(text, ' '), i, i + 7), ' ') AS g
-  FROM documents, UNNEST(range(1, len(string_split(text, ' ')) - 6)) AS t(i)
-  WHERE doc_id % 97 <> 0 AND len(string_split(text, ' ')) >= 8
-),
-sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
-          FROM dg GROUP BY doc_id),
-hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         FROM dg JOIN bg USING (g) GROUP BY doc_id)
-SELECT s.doc_id, s.n_shingles,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       coalesce(h.n_hits, 0) / s.n_shingles AS overlap_frac
-FROM sizes s LEFT JOIN hits h USING (doc_id)
-""")
-def q_contamination_overlap(spark, sf_dir):
-    """Benchmark-contamination screen (operators/quality
-    .contamination_overlap): share of each doc's distinct 8-gram shingles
-    that appear in the doc_id%97==0 'eval set'; the benchmark gram table
-    broadcasts, the corpus is never gram-shuffled."""
-    from spanner_data_validator_spark.operators.quality import (
-        contamination_overlap,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return contamination_overlap(
-        docs.where(F.col("doc_id") % 97 != 0),
-        docs.where(F.col("doc_id") % 97 == 0),
-        id_col="doc_id", text_col="text", n=8, threshold=0.0)
-
-
-@register("doc_fingerprint", """
-SELECT doc_id,
-       CAST(list_reduce(
-              list_transform(string_split(text, ''), c -> ascii(c)::HUGEINT),
-              (acc, b) -> (acc * 256 + b) % 2305843009213693951
-            ) AS BIGINT) AS fingerprint
-FROM documents
-""")
-def q_doc_fingerprint(spark, sf_dir):
-    """Rolling (polynomial) document fingerprint via Arrow pandas UDF.
-
-    Oracle: the same base-256 polynomial mod 2^61-1 as a per-character
-    HUGEINT fold (list_reduce with no init starts acc at the first byte —
-    exactly the polynomial's Horner form; docs are ASCII, so chars==bytes).
-    The prefix variant below additionally checks the closed form."""
-    from spanner_data_validator_spark.functions.text import rolling_fingerprint_udf
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", rolling_fingerprint_udf(F.col("text")).alias("fingerprint"))
-
-
-def _prefix_fp_oracle(n: int = 8) -> str:
-    """The rolling hash of the first ``n`` ASCII bytes is a closed-form
-    polynomial: sum(byte_i * 256^(n-1-i)) mod 2^61-1 — expressible in DuckDB
-    with HUGEINT arithmetic, turning the UDF's hash family oracle-checkable."""
-    terms = " + ".join(
-        f"CAST(ascii(substr(text, {i + 1}, 1)) AS HUGEINT) * {256 ** (n - 1 - i)}"
-        for i in range(n))
-    return f"""
-SELECT doc_id, CAST(({terms}) % 2305843009213693951 AS BIGINT) AS fingerprint
-FROM documents
-"""
-
-
-@register("doc_fingerprint_prefix", _prefix_fp_oracle())
-def q_doc_fingerprint_prefix(spark, sf_dir):
-    """Same UDF, first-8-bytes prefix — the DuckDB-checkable slice of the
-    rolling-hash family (docs are ASCII word-salad, so chars == bytes)."""
-    from spanner_data_validator_spark.functions.text import rolling_fingerprint_udf
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id",
-        rolling_fingerprint_udf(F.substring(F.col("text"), 1, 8)).alias("fingerprint"))
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing (operators/multimodal.py — decode kernels stubbed,
-# Spark-side schema/batching/partitioning real)
-# ---------------------------------------------------------------------------
-
-def _media_from_documents(spark, sf_dir):
-    """Deterministic media table. Image rows (doc_id % 3 = 0) carry REAL
-    binary-PPM payloads synthesized from the closed-form pixel law
-    ``v(x,y,c) = (id + 3x + 5y + 11c) % 256`` at ``w = 16 + id % 8``,
-    ``h = 12 + id % 5`` (operators/multimodal.synth_ppm); audio/video rows
-    keep the doc text bytes as an opaque payload."""
-    import pandas as pd
-
-    from spanner_data_validator_spark.operators.multimodal import (
-        PPM_MIME,
-        synth_ppm,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kind = F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                        (F.col("doc_id") % 3 + 1).cast("int"))
-
-    ppm_payload = F.pandas_udf(
-        lambda ids: ids.map(lambda i: synth_ppm(int(i), 16 + int(i) % 8,
-                                                12 + int(i) % 5)),
-        "binary")
-
-    is_img = F.col("doc_id") % 3 == 0
-    w = (F.lit(16) + F.col("doc_id") % 8).cast("int")
-    h = (F.lit(12) + F.col("doc_id") % 5).cast("int")
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        kind.alias("kind"),
-        F.when(is_img, F.lit(PPM_MIME))
-         .otherwise(F.lit("application/octet-stream")).alias("mime"),
-        F.when(is_img, ppm_payload(F.col("doc_id")))
-         .otherwise(F.encode(F.col("text"), "UTF-8")).alias("payload"),
-        F.struct(
-            F.when(is_img, w).otherwise(F.lit(64)).cast("int").alias("width"),
-            F.when(is_img, h).otherwise(F.lit(64)).cast("int").alias("height"),
-            ((F.col("doc_id") % 5) * 1000 + 500).cast("long").alias("duration_ms"),
-            F.lit(16000).cast("int").alias("sample_rate"),
-        ).alias("meta"))
-
-
-# shared oracle CTE: per-image dims + the pixel law, recomputed in SQL
-_PPM_IMG_CTE = """
-WITH img AS (
-  SELECT doc_id, 16 + doc_id % 8 AS w, 12 + doc_id % 5 AS h
-  FROM documents WHERE doc_id % 3 = 0
-)"""
-
-
-@register("media_feature_extract", """
-SELECT doc_id AS media_id,
-       CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-       CAST(CASE WHEN doc_id % 3 = 0
-                 THEN 9 + length(CAST(16 + doc_id % 8 AS VARCHAR))
-                        + length(CAST(12 + doc_id % 5 AS VARCHAR))
-                        + 3 * (16 + doc_id % 8) * (12 + doc_id % 5)
-                 ELSE octet_length(encode(text)) END AS BIGINT) AS n_bytes
-FROM documents
-""")
-def q_media_feature_extract(spark, sf_dir):
-    """mapInPandas decode/feature stage over binary payloads (REAL PPM decode
-    for images since r4); the oracle recomputes each PPM's exact encoded size
-    (header '|P6\\n| |w h\\n| |255\\n|' = 9 + digits, + 3wh raster) and the
-    opaque byte counts; pixel-law parity is media_pixel_stats."""
-    from spanner_data_validator_spark.operators.multimodal import extract_features
-
-    media = _media_from_documents(spark, sf_dir)
-    return extract_features(media, dim=8).select("media_id", "kind", "n_bytes")
-
-
-@register("media_pixel_stats", _PPM_IMG_CTE + """,
-px AS (
-  SELECT doc_id, w, h, xs.x AS x, ys.y AS y
-  FROM img, LATERAL (SELECT unnest(range(0, w)) AS x) xs,
-            LATERAL (SELECT unnest(range(0, h)) AS y) ys
-),
-vals AS (
-  SELECT doc_id, w * h AS n,
-         (doc_id + 3 * x + 5 * y) % 256 AS v0,
-         (doc_id + 3 * x + 5 * y + 11) % 256 AS v1,
-         (doc_id + 3 * x + 5 * y + 22) % 256 AS v2
-  FROM px)
-SELECT doc_id AS media_id,
-       sum(v0) / any_value(n) AS mean_r,
-       sum(v1) / any_value(n) AS mean_g,
-       sum(v2) / any_value(n) AS mean_b,
-       sum(v0 * v0) / any_value(n) - (sum(v0) / any_value(n)) * (sum(v0) / any_value(n)) AS var_r,
-       sum(v1 * v1) / any_value(n) - (sum(v1) / any_value(n)) * (sum(v1) / any_value(n)) AS var_g,
-       sum(v2 * v2) / any_value(n) - (sum(v2) / any_value(n)) * (sum(v2) / any_value(n)) AS var_b
-FROM vals GROUP BY doc_id
-""")
-def q_media_pixel_stats(spark, sf_dir):
-    """REAL pixel math end-to-end: synthesize PPM payloads, decode them in
-    the Arrow kernel, compute per-channel mean/variance — DuckDB re-derives
-    the same moments directly from the closed-form pixel law over an
-    unnested (x, y) grid. Integer-exact float64 sums make the doubles
-    bit-identical across engines."""
-    from spanner_data_validator_spark.operators.multimodal import extract_features
-
-    media = _media_from_documents(spark, sf_dir).where(F.col("kind") == "image")
-    feats = extract_features(media, dim=8)
-    f = F.col("feature")
-    return feats.select(
-        "media_id",
-        f[0].cast("double").alias("mean_r"),
-        f[1].cast("double").alias("mean_g"),
-        f[2].cast("double").alias("mean_b"),
-        f[3].cast("double").alias("var_r"),
-        f[4].cast("double").alias("var_g"),
-        f[5].cast("double").alias("var_b"))
-
-
-@register("media_resize", _PPM_IMG_CTE + """,
-px AS (
-  SELECT doc_id, w, h, xs.x AS x, ys.y AS y
-  FROM img, LATERAL (SELECT unnest(range(0, 32)) AS x) xs,
-            LATERAL (SELECT unnest(range(0, 32)) AS y) ys
-),
-src AS (
-  SELECT doc_id, (x * w) // 32 AS sx, (y * h) // 32 AS sy FROM px)
-SELECT doc_id AS media_id,
-       CAST(32 AS INT) AS width, CAST(32 AS INT) AS height,
-       CAST(sum((doc_id + 3 * sx + 5 * sy) % 256
-              + (doc_id + 3 * sx + 5 * sy + 11) % 256
-              + (doc_id + 3 * sx + 5 * sy + 22) % 256) AS BIGINT) AS pixel_sum
-FROM src GROUP BY doc_id
-""")
-def q_media_resize(spark, sf_dir):
-    """mapInPandas image-resize stage — REAL nearest-neighbor resize since
-    r4: the oracle maps every output pixel back to its floor-law source
-    coordinate and recomputes the resized raster's exact pixel sum."""
-    from spanner_data_validator_spark.operators.multimodal import (
-        ppm_pixel_sum_udf,
-        resize_media,
-    )
-
-    media = _media_from_documents(spark, sf_dir)
-    out = resize_media(media, 32, 32)
-    return (out.where(F.col("kind") == "image")
-               .select("media_id", "width", "height",
-                       ppm_pixel_sum_udf(F.col("payload")).alias("pixel_sum")))
-
-
-@register("media_frame_sample", """
-SELECT doc_id AS media_id, CAST(f AS BIGINT) AS frame_ts_ms
-FROM documents, UNNEST(range(0, (doc_id % 5) * 1000 + 501, 1000)) AS t(f)
-WHERE doc_id % 3 = 2
-""")
-def q_media_frame_sample(spark, sf_dir):
-    """Video frame-sampling plan: metadata-only sequence explode — the scan
-    never touches the payload column (parquet column pruning)."""
-    from spanner_data_validator_spark.operators.multimodal import frame_sample_plan
-
-    media = _media_from_documents(spark, sf_dir)
-    return frame_sample_plan(media, every_ms=1000)
-
-
-# ---------------------------------------------------------------------------
-# streaming validation registered against the DuckDB oracle: a REAL
-# structured-streaming run (availableNow) over an events-derived dual stream
+# dual-stream transcript derivation from `events`: the conversation-shaped
+# twin of the rule above, shared by validator, streaming and analytics
+# queries
 # ---------------------------------------------------------------------------
 
 def transcripts_from_events(spark, sf_dir, *, user_mod: int | None = None):
@@ -1578,5502 +198,10 @@ SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
 """
 
 
-# the stateful engine is the SEMANTICS spec (~15x slower than the join
-# engine by design, BENCH.md) — it validates a reduced corpus: every 10th
-# conversation, whole conversations so turn numbering is unchanged
-_STATEFUL_USER_MOD = 10
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _shuffle_partitions(spark, n: int):
-    """Scope the state/shuffle partition count for small streaming demos:
-    every micro-batch commits one state store PER PARTITION per stateful
-    operator, so a 20k-row demo at 32 partitions pays 32x(ops) store
-    commits per trigger for empty partitions (measured: the snapshot
-    validate demo dropped 51.5 s -> much less at 8). Production sizes this
-    to rate x state, not to the session default."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
-    import tempfile
-
-    from spanner_data_validator_spark.jobs.validate_transcripts import (
-        append_sentinel,
-        run_streaming_validation,
-    )
-    from spanner_data_validator_spark.sources.transcript_source import (
-        write_transcripts,
-    )
-
-    # Fixture staging, not engine work (production validates two REAL tables):
-    # target derives from source, and its union has two branches — persist the
-    # derived source so the events scan + rank window run once, not three times
-    src = transcripts_from_events(spark, sf_dir, user_mod=user_mod).persist()
-    tgt = _events_transcript_target(src)
-    work = tempfile.mkdtemp(prefix=f"sdv_q_stream_{engine}_")
-    src_dir, tgt_dir = f"{work}/src", f"{work}/tgt"
-    try:
-        write_transcripts(src, spark, src_dir, n_files=4)
-        write_transcripts(tgt, spark, tgt_dir, n_files=4)
-    finally:
-        src.unpersist()
-    append_sentinel(spark, src_dir, tgt_dir)
-
-    # keep state partitioning sane even under a foreign session's defaults
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        sink = run_streaming_validation(
-            spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
-            watermark="10 minutes", band="2 hours", engine=engine)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink.read_rows(spark).groupBy("status").agg(F.count("*").alias("n"))
-
-
-@register("validate_stream_totals", _ev_transcript_cte())
-def q_validate_stream_totals(spark, sf_dir):
-    """REAL structured-streaming run: events-derived dual transcript streams →
-    watermarked full-outer stream-stream join (availableNow) → committed
-    classification totals. Oracle is the equivalent batch full-outer join."""
-    return _run_stream_totals(spark, sf_dir, "join")
-
-
-@register("validate_stream_atomic_totals", _ev_transcript_cte())
-def q_validate_stream_atomic_totals(spark, sf_dir):
-    """Registry twin of validate_stream_totals: the same streaming run
-    through the same sink (streaming/sink.TallyForeachBatch, one commit
-    marker over classified rows, per-window tallies and mismatch rows —
-    both-or-neither, pinned in tests/test_atomic_sink.py). Kept registered
-    because CORRECTNESS_r05.json names it; totals must equal the batch
-    full-outer oracle exactly."""
-    return _run_stream_totals(spark, sf_dir, "join")
-
-
-def _revalidate_oracle() -> str:
-    base = _ev_transcript_cte().split("cls AS (")[0]
-    return base + """cls AS (
-  SELECT CAST(CAST(coalesce(s.conv_id, t.conv_id) AS BIGINT) % 8 AS INT)
-           AS range_id,
-         CASE WHEN s.text IS NOT NULL AND t.text IS NOT NULL THEN
-                CASE WHEN s.role = t.role AND s.text = t.text
-                     THEN 'MATCH' ELSE 'MISMATCH' END
-              WHEN t.text IS NULL THEN 'SOURCE_ONLY' ELSE 'TARGET_ONLY' END AS status
-  FROM src s FULL OUTER JOIN tgt t
-    ON s.conv_id = t.conv_id AND s.turn_idx = t.turn_idx
-)
-SELECT range_id, status, CAST(count(*) AS BIGINT) AS n
-FROM cls GROUP BY range_id, status
-"""
-
-
-@register("revalidate_delta", _revalidate_oracle())
-def q_revalidate_delta(spark, sf_dir):
-    """Incremental revalidation driven by checkpoint lineage
-    (jobs/revalidate): a streaming validation run covers the initial
-    corpus (all conversations except conv % 40 = 5); a nightly drop then
-    lands the held-out conversations — all in range 5 (conv % 8) — as new
-    files. ``delta_ranges`` diffs the checkpoint WAL's committed file
-    manifests against the directory listing, finds exactly range 5 dirty,
-    and ONLY that range's files are re-read and re-classified (scan-scope
-    law pinned in tests/test_revalidate.py); unchanged ranges reuse the
-    sink's committed results. The merged per-(range, status) report must
-    equal a FULL revalidation of the final corpus — which is the oracle."""
-    import tempfile
-
-    from spanner_data_validator_spark.jobs.revalidate import (
-        revalidate_delta_report, write_ranged_transcripts)
-    from spanner_data_validator_spark.jobs.validate_transcripts import (
-        append_sentinel, run_streaming_validation)
-
-    src = transcripts_from_events(spark, sf_dir).persist()
-    tgt = _events_transcript_target(src)
-    is_delta = F.col("conv_id").cast("long") % 40 == 5
-    work = tempfile.mkdtemp(prefix="sdv_q_revalidate_")
-    src_dir, tgt_dir = f"{work}/src", f"{work}/tgt"
-    try:
-        write_ranged_transcripts(src.where(~is_delta), spark, src_dir,
-                                 tag="init")
-        write_ranged_transcripts(tgt.where(~is_delta), spark, tgt_dir,
-                                 tag="init")
-        append_sentinel(spark, src_dir, tgt_dir)
-        with _shuffle_partitions(spark, 16):
-            sink = run_streaming_validation(
-                spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
-                watermark="10 minutes", band="2 hours")
-        # the nightly drop: whole new conversations, all in range 5
-        write_ranged_transcripts(src.where(is_delta), spark, src_dir,
-                                 tag="delta")
-        write_ranged_transcripts(tgt.where(is_delta), spark, tgt_dir,
-                                 tag="delta")
-        return revalidate_delta_report(spark, sink, f"{work}/ckpt",
-                                       src_dir, tgt_dir)
-    finally:
-        src.unpersist()
-
-
-@register("validate_stream_stateful_totals", _ev_transcript_cte(_STATEFUL_USER_MOD))
-def q_validate_stream_stateful_totals(spark, sf_dir):
-    """Same streaming run through the applyInPandasWithState classifier
-    (reference-exact emission timing, dofns/CountMatchesDoFn.java:67-122),
-    over the reduced corpus — it's the semantics spec, never the bulk path."""
-    return _run_stream_totals(spark, sf_dir, "stateful",
-                              user_mod=_STATEFUL_USER_MOD)
-
-
-@register("stream_snapshot_validate", _ev_transcript_cte(5))
-def q_stream_snapshot_validate(spark, sf_dir):
-    """THE north-star wiring end-to-end: source and migrated-target
-    transcripts live in two SNAPSHOT-VERSIONED tables (sources/
-    snapshots.py), each arriving in three commits plus a sentinel commit;
-    two incremental-scan STREAMS tail them by snapshot version (sources/
-    snapshot_stream.py — offsets are durable manifest versions, batches
-    are file-set differences), feed the vectorized fingerprint reduction,
-    and meet in the watermarked stateful full-outer join classifier.
-    Totals equal the batch full-outer oracle exactly — the same validation
-    the file-stream flagship runs, now over the table format the north
-    star names."""
-    import tempfile
-
-    from spanner_data_validator_spark.jobs.validate_transcripts import (
-        SENTINEL_CONV,
-        sentinel_filter,
-    )
-    from spanner_data_validator_spark.sources import snapshot_stream as st
-    from spanner_data_validator_spark.sources import snapshots as snap
-    from spanner_data_validator_spark.streaming.validate_stream import (
-        classify_stream,
-        fingerprint_stream,
-    )
-
-    src = transcripts_from_events(spark, sf_dir, user_mod=5).persist()
-    tgt = _events_transcript_target(src)
-    work = tempfile.mkdtemp(prefix="sdv_q_snapstream_")
-    src_t, tgt_t = f"{work}/src_t", f"{work}/tgt_t"
-    # commits must be EVENT-TIME-ordered (like real incremental ingest):
-    # conv-keyed waves each span the whole month, so the watermark races to
-    # month-end after commit 1 and the join drops later commits' rows as
-    # late (measured: exactly one wave of matches vanished) — day-ranged
-    # waves keep every commit ahead of the watermark the previous one set
-    wave = F.floor((F.dayofmonth("ts") - 1) / F.lit(10))
-    try:
-        for m in (0, 1, 2):
-            snap.commit(src.where(wave == m), src_t)
-            snap.commit(tgt.where(wave == m), tgt_t)
-    finally:
-        src.unpersist()
-    sent = spark.range(1).select(
-        F.lit(SENTINEL_CONV).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("system").alias("role"), F.lit("sentinel").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2100-01-01").cast("timestamp").alias("ts"))
-    snap.commit(sent, src_t)
-    snap.commit(sent, tgt_t)
-
-    st.register(spark)
-    ddl = ("conv_id string, turn_idx int, role string, text string, "
-           "tool string, ts timestamp")
-
-    def tail(table):
-        # two snapshots per micro-batch: same incremental semantics, half
-        # the trigger/state-commit overhead on the demo corpus
-        return (spark.readStream.format(st.SOURCE_NAME)
-                .option("table_dir", table).option("schema", ddl)
-                .option("versions_per_trigger", 2)
-                .option("cursor_file", f"{table}.cursor").load()
-                .withWatermark("ts", "10 minutes"))
-
-    out = (classify_stream(fingerprint_stream(tail(src_t)),
-                           fingerprint_stream(tail(tgt_t)),
-                           band="2 hours")
-           .where(sentinel_filter()))
-    with _shuffle_partitions(spark, 8):
-        q = (out.select("status")
-             .writeStream.format("parquet").option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append")
-             .trigger(processingTime="200 milliseconds").start())
-    # drain: BOTH sources at v4 and a no-data trigger after (so the
-    # sentinel-advanced watermark has emitted the outer-join timeouts)
-    import ast as _ast
-    import time as _time
-    deadline = _time.time() + 300
-    while _time.time() < deadline:
-        if q.exception():
-            raise q.exception()
-        p = q.lastProgress
-        if p is not None and (p["numInputRows"] or 0) == 0:
-            ends = []
-            for s in p["sources"]:
-                e = s.get("endOffset")
-                ends.append(int(_ast.literal_eval(e)["v"])
-                            if isinstance(e, str) else
-                            (int(e["v"]) if e else 0))
-            if ends and min(ends) >= 4:
-                break
-        _time.sleep(0.25)
-    else:
-        q.stop()
-        raise TimeoutError("snapshot validate stream did not drain")
-    q.stop()
-    return (spark.read.parquet(f"{work}/out")
-            .groupBy("status").agg(F.count(F.lit(1)).alias("n")))
-
-
-@register("stream_dedup_lang_counts", """
-WITH corpus AS (
-  SELECT doc_id, text, lang FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text, lang FROM documents WHERE doc_id % 10 = 0
-)
-SELECT lang, CAST(count(DISTINCT text) AS BIGINT) AS n_docs
-FROM corpus GROUP BY lang
-""")
-def q_stream_dedup_lang_counts(spark, sf_dir):
-    """REAL structured-streaming dedup run: a doc stream with planted repeats
-    (every 10th doc arrives twice, in different micro-batches) through
-    dropDuplicatesWithinWatermark keyed on the 8-byte text fingerprint
-    (streaming/dedup_stream.dedup_text_stream), append-sinked, then counted
-    per language. The watermark horizon (2h) exceeds the event-time spread
-    (10 min), so the streaming result equals batch distinct-text counts.
-    Dedup state is keyed (lang, text_fp): per-language dedup — a GLOBAL
-    key would let arrival order pick which language keeps a text that
-    appears under several (7 such texts at sf0.1), which no batch oracle
-    can replay."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.dedup_stream import (
-        dedup_text_stream,
-    )
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "text", "lang"))
-    corpus = docs.unionByName(
-        docs.where(F.col("doc_id") % 10 == 0)
-            .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                    "text", "lang"))
-    corpus = corpus.withColumn(
-        "ts", (F.lit(1_600_000_000) + F.col("doc_id") % 600).cast("timestamp"))
-
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_dedup_")
-    in_dir = f"{work}/in"
-    corpus.repartition(4).write.parquet(in_dir)
-
-    stream = (spark.readStream.schema(corpus.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    deduped = dedup_text_stream(stream, "text", ts_col="ts", delay="2 hours",
-                                scope_cols=["lang"])
-    q = (deduped.select("lang", "text_fp")
-         .writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    return (spark.read.parquet(f"{work}/out")
-            .groupBy("lang").agg(F.count("*").alias("n_docs")))
-
-
 # ---------------------------------------------------------------------------
-# custom transformation (P6) + sliding windows
+# Benford first-digit expectation, shared by the batch and streaming
+# Benford oracles
 # ---------------------------------------------------------------------------
-
-@register("custom_transform", """
-SELECT event_id AS key, upper(coalesce(event_type, '')) AS role_u
-FROM events WHERE event_id % 7 <> 0
-""")
-def q_custom_transform(spark, sf_dir):
-    """P6: user mapInPandas transformation (uppercase + row filter) applied
-    before validation (dofns/CustomTransformationDoFn.java:90-133)."""
-    from spanner_data_validator_spark.operators.transform import (
-        apply_custom_transformation,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("event_id").alias("key"),
-        F.coalesce(F.col("event_type"), F.lit("")).alias("role_u"))
-
-    def user_fn(pdf):
-        out = pdf[pdf["key"] % 7 != 0].copy()
-        out["role_u"] = out["role_u"].str.upper()
-        return out
-
-    return apply_custom_transformation(ev, user_fn)
-
-
-@register("sliding_mismatch_counts", _CLS_CTE + """
-SELECT epoch_ms(date_trunc('hour', ts) - k * INTERVAL 1 HOUR) AS window_start_ms,
-       status, CAST(count(*) AS BIGINT) AS n
-FROM cls, UNNEST([0, 1]) AS t(k)
-GROUP BY 1, 2
-""")
-def q_sliding_mismatch_counts(spark, sf_dir):
-    """Sliding event-time windows (2h window, 1h slide) × status counts —
-    every row lands in exactly two overlapping windows."""
-    cls = classified_events(spark, sf_dir, with_ts=True)
-    ts = F.timestamp_millis(F.coalesce(F.col("tgt_ts_millis"), F.col("src_ts_millis")))
-    return (cls.groupBy(F.window(ts, "2 hours", "1 hour").alias("w"), "status")
-               .agg(F.count("*").alias("n"))
-               .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-                       "status", "n"))
-
-
-_IVF_CENT_CACHE: dict[str, tuple] = {}
-_IVF_CENT_CACHE_MAX = 2  # corpora cached concurrently; evictees are unpersisted
-
-
-def _ivf_cache_put(sf_dir: str, entry: tuple) -> None:
-    """FIFO-bounded insert: unpersist the evicted corpus's index so repeated
-    bench loops over many sf_dirs can't leak executor storage (ADVICE r2)."""
-    while len(_IVF_CENT_CACHE) >= _IVF_CENT_CACHE_MAX:
-        oldest = next(iter(_IVF_CENT_CACHE))
-        _, old_idx = _IVF_CENT_CACHE.pop(oldest)
-        old_idx.unpersist()
-    _IVF_CENT_CACHE[sf_dir] = entry
-
-_IVF_SQL = """
-WITH cent AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS list_id, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8)
-),
-it AS (
-  SELECT neighbor_id, iv, list_id FROM (
-    SELECT e.vec_id AS neighbor_id, e.embedding AS iv, c.list_id,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(c.cv AS DOUBLE[])), c.list_id) AS rn
-    FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-),
-q AS (
-  SELECT query_id, qv, list_id FROM (
-    SELECT e.vec_id AS query_id, e.embedding AS qv, c.list_id,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(c.cv AS DOUBLE[])), c.list_id) AS rn
-    FROM embeddings e CROSS JOIN cent c WHERE e.vec_id % 100 = 0)
-  WHERE rn <= 2
-),
-scored AS (
-  SELECT q.query_id, it.neighbor_id,
-         list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(it.iv AS DOUBLE[])) AS sim
-  FROM q JOIN it USING (list_id) WHERE it.neighbor_id <> q.query_id
-),
-r AS (
-  SELECT query_id, neighbor_id, sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, round(sim, 3) AS sim
-FROM r WHERE rank <= 3
-"""
-
-
-@register("ann_ivf_topk", _IVF_SQL)
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF ANN scale path: deterministic data-sampled coarse quantizer (the 8
-    lowest-id vectors with vec_id % 61 = 3), shuffle-free expression-only list
-    assignment, bucket-local cosine top-k. The sampling rule is plain SQL, so
-    the whole pipeline is oracle-checked; the k-means quantizer variant
-    (train_centroids) is pytest-covered for recall instead."""
-    from spanner_data_validator_spark.operators.ann import (
-        centroids_from_items,
-        ivf_topk,
-    )
-
-    from spanner_data_validator_spark.operators.ann import ivf_index
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # index-build artifacts (quantizer + assigned/persisted item index) are
-    # computed once per corpus and reused across query batches — the standard
-    # IVF amortization; queries probe the cached index
-    cached = _IVF_CENT_CACHE.get(sf_dir)
-    if cached is None:
-        cents = centroids_from_items(emb, modulus=61, residue=3, n_lists=8)
-        idx = ivf_index(emb, cents).persist()
-        idx.count()
-        cached = (cents, idx)
-        _ivf_cache_put(sf_dir, cached)
-    cents, idx = cached
-    out = ivf_topk(None, emb.where(F.col("vec_id") % 100 == 0), 3,
-                   nprobe=2, centroids=cents, index=idx)
-    return out.withColumn("sim", F.round(F.col("sim"), 3))
-
-
-def _d2sql(a: str, b: str) -> str:
-    """Exact integer squared L2 between two BIGINT lists (DuckDB)."""
-    return (f"list_sum(list_transform(list_zip({a}, {b}), "
-            f"p -> (p[1] - p[2]) * (p[1] - p[2])))")
-
-
-def _ivfpq_core_sql() -> str:
-    """Shared IVF-PQ pipeline CTEs: fixed-point vectors, data-derived coarse
-    quantizer + residual codebook, exact-integer assignments, ADC scoring.
-    Ends with CTE ``appr`` = (query_id, neighbor_id, rank, adist)."""
-    sub = "list_slice({v}, t.s * 16 + 1, t.s * 16 + 16)"
-    d2_sub = _d2sql(sub.format(v="{a}"), sub.format(v="{b}"))
-    return f"""
-WITH fx AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5e0)
-                                  AS BIGINT)) AS vi
-  FROM embeddings
-),
-cent AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS list_id,
-         vi AS cv
-  FROM (SELECT vec_id, vi FROM fx WHERE vec_id % 61 = 3
-        ORDER BY vec_id LIMIT 8)
-),
-samp AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code,
-         vi AS sv
-  FROM (SELECT vec_id, vi FROM fx WHERE vec_id % 61 = 5
-        ORDER BY vec_id LIMIT 8)
-),
-cb AS (
-  SELECT code, list_transform(list_zip(sv, cv), p -> p[1] - p[2]) AS ci
-  FROM (
-    SELECT s.code, s.sv, c.cv,
-           row_number() OVER (PARTITION BY s.code
-             ORDER BY {_d2sql('s.sv', 'c.cv')}, c.list_id) AS rn
-    FROM samp s CROSS JOIN cent c) WHERE rn = 1
-),
-it0 AS (
-  SELECT vec_id AS neighbor_id, list_id,
-         list_transform(list_zip(vi, cv), p -> p[1] - p[2]) AS rv
-  FROM (
-    SELECT f.vec_id, f.vi, c.list_id, c.cv,
-           row_number() OVER (PARTITION BY f.vec_id
-             ORDER BY {_d2sql('f.vi', 'c.cv')}, c.list_id) AS rn
-    FROM fx f CROSS JOIN cent c) WHERE rn = 1
-),
-itc AS (
-  SELECT neighbor_id, list_id, s, code FROM (
-    SELECT i.neighbor_id, i.list_id, t.s, b.code,
-           row_number() OVER (PARTITION BY i.neighbor_id, t.s
-             ORDER BY {d2_sub.format(a='i.rv', b='b.ci')}, b.code) AS rn
-    FROM it0 i CROSS JOIN UNNEST([0, 1, 2, 3]) AS t(s) CROSS JOIN cb b)
-  WHERE rn = 1
-),
-qa AS (
-  SELECT vec_id AS query_id, list_id,
-         list_transform(list_zip(vi, cv), p -> p[1] - p[2]) AS rq
-  FROM (
-    SELECT f.vec_id, f.vi, c.list_id, c.cv,
-           row_number() OVER (PARTITION BY f.vec_id
-             ORDER BY {_d2sql('f.vi', 'c.cv')}, c.list_id) AS rn
-    FROM fx f CROSS JOIN cent c WHERE f.vec_id % 100 = 0) WHERE rn <= 2
-),
-lut AS (
-  SELECT q.query_id, q.list_id, t.s, b.code,
-         CAST({d2_sub.format(a='q.rq', b='b.ci')} AS BIGINT) AS ld
-  FROM qa q CROSS JOIN UNNEST([0, 1, 2, 3]) AS t(s) CROSS JOIN cb b
-),
-adc AS (
-  SELECT q.query_id, i.neighbor_id, CAST(sum(l.ld) AS BIGINT) AS adist
-  FROM qa q
-  JOIN itc i ON i.list_id = q.list_id AND i.neighbor_id <> q.query_id
-  JOIN lut l ON l.query_id = q.query_id AND l.list_id = q.list_id
-            AND l.s = i.s AND l.code = i.code
-  GROUP BY q.query_id, i.neighbor_id
-),
-appr AS (
-  SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adist FROM (
-    SELECT query_id, neighbor_id, adist,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adist, neighbor_id) AS rank
-    FROM adc) WHERE rank <= 3
-)"""
-
-
-_IVFPQ_CACHE: dict[str, tuple] = {}
-
-
-def _ivfpq_setup(spark, sf_dir):
-    """Fixed-point vectors + driver-side coarse/codebook derivation (16 rows
-    collected — k-sized, the documented bound; the literals then bake into
-    every plan via quantize.intmat_literal)."""
-    cached = _IVFPQ_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # DOUBLE cast before the multiply: see q_pq_quantize_stats (DuckDB
-    # FLOAT*INT stays FLOAT; Spark widens — divergent at sf0.1 scale)
-    fx = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"))
-    vecs = emb.select("vec_id", fx.alias("vi"))
-    coarse = [list(r[0]) for r in
-              vecs.where(F.col("vec_id") % 61 == 3).orderBy("vec_id")
-              .limit(8).select("vi").collect()]
-    samp = [list(r[0]) for r in
-            vecs.where(F.col("vec_id") % 61 == 5).orderBy("vec_id")
-            .limit(8).select("vi").collect()]
-
-    def _nearest(v):
-        return min(range(len(coarse)),
-                   key=lambda i: (sum((a - b) * (a - b)
-                                      for a, b in zip(v, coarse[i])), i))
-
-    codebook = [[a - b for a, b in zip(v, coarse[_nearest(v)])] for v in samp]
-    _IVFPQ_CACHE.clear()  # one corpus at a time; entries are plain lists
-    _IVFPQ_CACHE[sf_dir] = (vecs, coarse, codebook)
-    return vecs, coarse, codebook
-
-
-@register("ann_ivfpq_topk", _ivfpq_core_sql() + """
-SELECT query_id, neighbor_id, rank, adist FROM appr
-""")
-def q_ann_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ ANN (operators/ann.ivfpq_topk — Jégou et al. 2011): coarse
-    inverted lists (8 data-derived centroids, vec_id % 61 = 3), RESIDUAL
-    product quantization (4 subspaces x 16 dims, 8 codes = residuals of
-    the vec_id % 61 = 5 samples vs their own centroid), asymmetric
-    distance scoring. Every step fixed-point BIGINT-exact, so the oracle
-    replays assignments, ADC sums, and tie-breaks bit-for-bit; the Spark
-    side is expression-only (zero shuffle) for both assignments, with the
-    broadcast query carrying its m x k ADC table."""
-    from spanner_data_validator_spark.operators.ann import ivfpq_topk
-
-    vecs, coarse, codebook = _ivfpq_setup(spark, sf_dir)
-    return ivfpq_topk(vecs, vecs.where(F.col("vec_id") % 100 == 0), 3,
-                      coarse=coarse, codebook=codebook, m=4, sub_dim=16,
-                      nprobe=2)
-
-
-@register("ann_ivfpq_recall", _ivfpq_core_sql() + f"""
-, exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT qf.vec_id AS query_id, f.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY qf.vec_id
-             ORDER BY {_d2sql('f.vi', 'qf.vi')}, f.vec_id) AS rank
-    FROM fx f CROSS JOIN (SELECT vec_id, vi FROM fx
-                          WHERE vec_id % 100 = 0) qf
-    WHERE f.vec_id <> qf.vec_id) WHERE rank <= 3
-)
-SELECT 'ivfpq' AS method,
-       CAST(sum(CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END)
-            AS BIGINT) AS hits,
-       CAST(count(*) AS BIGINT) AS total,
-       CAST(sum(CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END)
-            AS DOUBLE) / count(*) AS recall
-FROM exact e LEFT JOIN appr a USING (query_id, neighbor_id)
-""")
-def q_ann_ivfpq_recall(spark, sf_dir):
-    """recall@3 of the IVF-PQ index against exact brute-force integer-L2
-    top-3 over the same fixed-point vectors — the quantization+probe loss
-    measured as an oracle row (ann_recall_at_k's protocol, same-metric
-    ground truth so the number isolates PQ error from metric mismatch).
-    DuckDB recomputes both pipelines and the recall arithmetic."""
-    from spanner_data_validator_spark.operators.ann import (
-        ivfpq_topk, topk_per_query)
-    from spanner_data_validator_spark.operators.quantize import intmat_literal
-
-    vecs, coarse, codebook = _ivfpq_setup(spark, sf_dir)
-    qs = vecs.where(F.col("vec_id") % 100 == 0)
-    # exact integer-L2 brute force: broadcast queries, one exact distance
-    # expression per candidate, bounded two-phase top-k
-    qb = qs.select(F.col("vec_id").alias("query_id"), F.col("vi").alias("qv"))
-    d2 = F.aggregate(F.zip_with("vi", "qv", lambda a, b: (a - b) * (a - b)),
-                     F.lit(0).cast("long"), lambda acc, x: acc + x)
-    scored = (vecs.join(F.broadcast(qb),
-                        F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      d2.alias("adist")))
-    exact = (topk_per_query(scored, 3, order_col="adist", ascending=True)
-             .select("query_id", "neighbor_id").localCheckpoint())
-    appr = (ivfpq_topk(vecs, qs, 3, coarse=coarse, codebook=codebook,
-                       m=4, sub_dim=16, nprobe=2)
-            .select("query_id", "neighbor_id").withColumn("hit", F.lit(1)))
-    joined = exact.join(appr, ["query_id", "neighbor_id"], "left")
-    return (joined.agg(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"),
-                F.count(F.lit(1)).alias("total"))
-            .select(F.lit("ivfpq").alias("method"), "hits", "total",
-                    (F.col("hits").cast("double") / F.col("total"))
-                    .alias("recall")))
-
-
-# SemDeDup corpus: planted semantic duplicates — scaled copies (x * 1.01)
-# have cosine exactly 1 to their original, far above threshold; the nearest
-# NON-planted within-cluster pair sits at cosine ~0.51, so the 0.95 threshold
-# compare is immune to float-summation drift between engines.
-_SEMDEDUP_SQL = """
-WITH corpus AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000 AS vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]), x -> x * 1.01e0) AS embedding
-  FROM embeddings WHERE vec_id % 25 = 0
-),
-cent AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS list_id, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM corpus
-        WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8)
-),
-it AS (
-  SELECT neighbor_id, iv, list_id FROM (
-    SELECT e.vec_id AS neighbor_id, e.embedding AS iv, c.list_id,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(e.embedding, c.cv), c.list_id) AS rn
-    FROM corpus e CROSS JOIN cent c)
-  WHERE rn = 1
-),
-dups AS (
-  SELECT DISTINCT b.neighbor_id AS b
-  FROM it a JOIN it b ON a.list_id = b.list_id AND a.neighbor_id < b.neighbor_id
-  WHERE list_cosine_similarity(a.iv, b.iv) >= 0.95
-)
-SELECT it.neighbor_id AS vec_id, it.list_id,
-       it.neighbor_id IN (SELECT b FROM dups) AS is_dup
-FROM it
-"""
-
-
-@register("semdedup_prune", _SEMDEDUP_SQL)
-def q_semdedup_prune(spark, sf_dir):
-    """SemDeDup (operators/ann.semdedup, Abbas et al. 2023): coarse-quantizer
-    clustering, cluster-local pairwise cosine, keep-lowest-id pruning — on a
-    corpus with planted scaled copies (cosine exactly 1). The index is
-    localCheckpoint-ed so the pairwise self-join reads the materialized
-    assignment instead of recomputing it per aliased branch (Catalyst does
-    not reuse exchanges across self-join aliases)."""
-    from spanner_data_validator_spark.operators.ann import (
-        centroids_from_items,
-        ivf_index,
-        semdedup,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dbl = F.col("embedding").cast("array<double>")
-    corpus = (emb.select("vec_id", dbl.alias("embedding"))
-                 .unionByName(
-                     emb.where(F.col("vec_id") % 25 == 0)
-                        .select((F.col("vec_id") + 1_000_000).alias("vec_id"),
-                                F.transform(dbl, lambda x: x * F.lit(1.01))
-                                 .alias("embedding"))))
-    cents = centroids_from_items(corpus, modulus=61, residue=3, n_lists=8)
-    idx = ivf_index(corpus, cents).localCheckpoint(eager=True)
-    return semdedup(idx, threshold=0.95)
-
-
-# substring-level dedup (Lee et al. 2022): boilerplate tail planted on every
-# 7th doc gives cross-doc repeated windows; natural in-corpus repeats (if
-# any) are found identically by both engines.
-_SPAN_W = 6
-_SPAN_BOILER = " terms of service apply to all mirrored content here"
-
-
-def _substring_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql(
-        f"array_to_string(list_slice(ws, i, i + {_SPAN_W - 1}), ' ')")
-    return f"""
-WITH corpus AS (
-  SELECT doc_id,
-         text || CASE WHEN doc_id % 7 = 0 THEN '{_SPAN_BOILER}' ELSE '' END AS text
-  FROM documents
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
-wins AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos, {h} AS h
-  FROM toks, UNNEST(range(1, len(ws) - {_SPAN_W - 2})) AS t(i)
-  WHERE len(ws) >= {_SPAN_W}
-),
-marked AS (
-  SELECT doc_id, pos FROM (
-    SELECT doc_id, pos, count(*) OVER (PARTITION BY h) AS c FROM wins)
-  WHERE c >= 2
-),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                   <= {_SPAN_W} THEN 0 ELSE 1 END AS brk
-  FROM marked
-),
-grp AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM isl
-)
-SELECT doc_id, min(pos) AS span_start,
-       max(pos) + {_SPAN_W - 1} AS span_end,
-       count(*) AS n_windows
-FROM grp GROUP BY doc_id, island
-"""
-
-
-@register("substring_dup_spans", _substring_oracle())
-def q_substring_dup_spans(spark, sf_dir):
-    """Duplicated-substring spans (operators/dedup.duplicate_spans) — the
-    Lee-et-al substring dedup pass as rolling window hashes + repeated-window
-    count + gaps-and-islands merge, on a corpus with a planted boilerplate
-    tail on every 7th doc. Portable hash family so the oracle computes the
-    identical windows end-to-end."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.dedup import duplicate_spans
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.select(
-        "doc_id",
-        F.concat(F.col("text"),
-                 F.when(F.col("doc_id") % 7 == 0, F.lit(_SPAN_BOILER))
-                  .otherwise("")).alias("text"))
-    return duplicate_spans(corpus, "doc_id", "text", width=_SPAN_W,
-                           hash_fn=portable_hash60)
-
-
-def _substring_maximal_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql(
-        f"array_to_string(list_slice(ws, i, i + {_SPAN_W - 1}), ' ')")
-    return f"""
-WITH corpus AS (
-  SELECT d.doc_id,
-         CASE WHEN d.doc_id % 11 = 3 AND o.text IS NOT NULL
-              THEN d.text || ' ' ||
-                   array_to_string(list_slice(string_split(o.text, ' '),
-                                              1, 20), ' ')
-              ELSE d.text END AS text
-  FROM documents d LEFT JOIN documents o ON o.doc_id = d.doc_id + 7
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
-wins AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos, {h} AS h
-  FROM toks, UNNEST(range(1, len(ws) - {_SPAN_W - 2})) AS t(i)
-  WHERE len(ws) >= {_SPAN_W}
-),
-ok AS (
-  SELECT doc_id, pos, h FROM (
-    SELECT doc_id, pos, h, count(*) OVER (PARTITION BY h) AS c FROM wins)
-  WHERE c BETWEEN 2 AND 64
-),
-pr AS (
-  SELECT a.doc_id AS id_a, a.pos AS pos_a, b.doc_id AS id_b, b.pos AS pos_b,
-         b.pos - a.pos AS diag
-  FROM ok a JOIN ok b ON a.h = b.h
-   AND (a.doc_id < b.doc_id OR (a.doc_id = b.doc_id AND a.pos < b.pos))
-),
-isl AS (
-  SELECT *, CASE WHEN pos_a - lag(pos_a) OVER
-                      (PARTITION BY id_a, id_b, diag ORDER BY pos_a) = 1
-                 THEN 0 ELSE 1 END AS brk
-  FROM pr
-),
-grp AS (
-  SELECT *, sum(brk) OVER (PARTITION BY id_a, id_b, diag ORDER BY pos_a)
-            AS run FROM isl
-)
-SELECT id_a, min(pos_a) AS a_start, id_b, min(pos_b) AS b_start,
-       CAST(count(*) + {_SPAN_W - 1} AS BIGINT) AS span_len,
-       CAST(count(*) AS BIGINT) AS n_windows
-FROM grp GROUP BY id_a, id_b, diag, run
-HAVING count(*) + {_SPAN_W - 1} >= 10
-"""
-
-
-@register("substring_dup_maximal", _substring_maximal_oracle())
-def q_substring_dup_maximal(spark, sf_dir):
-    """MAXIMAL duplicated spans with pair attribution
-    (operators/dedup.maximal_duplicate_spans): seed-and-chain — matched
-    window pairs grouped by (id_a, id_b, diagonal), maximal consecutive
-    runs merged, exact span extents + lengths reported per occurrence
-    pair (vs substring_dup_spans' per-doc coverage union). Corpus plants
-    a 20-token span from doc (i+7) onto every doc i % 11 == 3, so true
-    cross-doc maximal spans exist with known extent; hot windows (> 64
-    occurrences) are dropped identically in both engines. Portable hash
-    family end-to-end."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.dedup import (
-        maximal_duplicate_spans)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    donor = docs.select(
-        (F.col("doc_id") - 7).alias("doc_id"),
-        F.array_join(F.slice(F.split("text", " "), 1, 20), " ").alias("gift"))
-    corpus = (docs.join(donor, "doc_id", "left")
-              .select("doc_id",
-                      F.when((F.col("doc_id") % 11 == 3)
-                             & F.col("gift").isNotNull(),
-                             F.concat_ws(" ", "text", "gift"))
-                       .otherwise(F.col("text")).alias("text")))
-    return maximal_duplicate_spans(corpus, "doc_id", "text", width=_SPAN_W,
-                                   min_len=10, max_occurrences=64,
-                                   hash_fn=portable_hash60)
-
-
-# Point-in-time validation: each "replica read" (a version re-read 17 min
-# later) is classified against the source version AS OF the read timestamp.
-# The oracle uses DuckDB's native ASOF JOIN — an independent implementation
-# of the same temporal-join semantics, not a transliteration of our plan.
-_ASOF_SQL = """
-WITH versions AS (
-  SELECT user_id, ts, value, event_id FROM (
-    SELECT user_id, ts, value, event_id,
-           row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-    FROM events) WHERE rn = 1
-),
-reads AS (
-  SELECT user_id, event_id, ts + INTERVAL 17 MINUTE AS read_ts,
-         value AS observed_value
-  FROM versions WHERE event_id % 5 = 0
-)
-SELECT r.user_id, r.event_id, epoch_ms(r.read_ts) AS read_ts_ms,
-       r.observed_value, v.value AS asof_value,
-       CASE WHEN v.value IS NULL THEN 'NO_SOURCE'
-            WHEN v.value = r.observed_value THEN 'MATCH'
-            ELSE 'MISMATCH' END AS status
-FROM reads r ASOF LEFT JOIN versions v
-  ON r.user_id = v.user_id AND r.read_ts >= v.ts
-"""
-
-
-@register("asof_point_in_time", _ASOF_SQL)
-def q_asof_point_in_time(spark, sf_dir):
-    """As-of (point-in-time) validation (operators/asof.asof_validate): every
-    5th event version is re-read 17 minutes later and classified against the
-    version the source held AT the read time — MISMATCH iff another version
-    landed in between. One keyed shuffle + carry-forward window; the oracle
-    is DuckDB's native ASOF JOIN."""
-    from pyspark.sql import Window
-
-    from spanner_data_validator_spark.operators.asof import asof_validate
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
-    versions = (ev.withColumn("__rn", F.row_number().over(w))
-                  .where(F.col("__rn") == 1)
-                  .select("user_id", "ts", "value", "event_id"))
-    reads = versions.where(F.col("event_id") % 5 == 0).select(
-        "user_id", "event_id",
-        (F.col("ts") + F.expr("INTERVAL 17 MINUTES")).alias("ts"),
-        F.col("value").alias("observed_value"))
-    out = asof_validate(reads, versions.select("user_id", "ts", "value"),
-                        ["user_id"], observed_col="observed_value",
-                        value_col="value")
-    # parquet ts is TIMESTAMP_NTZ; the session tz is pinned UTC, so the cast
-    # is the exact epoch DuckDB's epoch_ms computes on the same naive value
-    return out.select("user_id", "event_id",
-                      F.unix_millis(F.col("ts").cast("timestamp"))
-                       .alias("read_ts_ms"),
-                      "observed_value", "asof_value", "status")
-
-
-# TF-IDF top terms: rational idf (n_docs / df — one IEEE division, bit-exact
-# across engines, unlike log idf's ~1-ulp drift); score written tf * (N/df)
-# on BOTH sides so the two roundings associate identically.
-_TFIDF_SQL = """
-WITH n AS (SELECT count(*) AS n FROM documents),
-tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM (
-    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents)
-  WHERE term <> '' GROUP BY doc_id, term
-),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         tf.tf * ((SELECT CAST(n AS DOUBLE) FROM n) / CAST(dfreq.df AS DOUBLE))
-           AS score
-  FROM tf JOIN dfreq USING (term)
-),
-r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY score DESC, term) AS rank
-      FROM scored)
-SELECT doc_id, term, tf, df, score, CAST(rank AS INT) AS rank
-FROM r WHERE rank <= 5
-"""
-
-
-@register("tfidf_top_terms", _TFIDF_SQL)
-def q_tfidf_top_terms(spark, sf_dir):
-    """Per-doc top-5 TF-IDF terms (operators/terms.tfidf_top_terms) — the
-    keyword/topic signal for corpus curation. The per-doc top-k reuses the
-    two-phase partial reduce, so the rank exchange stays bounded. The
-    stopword (max_df_frac) prune is unit-tested instead: the synthetic
-    corpus's 31-word vocabulary is almost entirely above any real-world
-    df cutoff, which would degenerate the demo."""
-    from spanner_data_validator_spark.operators.terms import (
-        rational_idf,
-        tfidf_top_terms,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = docs.count()
-    return tfidf_top_terms(docs, "doc_id", "text", k=5, max_df_frac=None,
-                           idf_fn=rational_idf(n), n_docs=n)
-
-
-# End-to-end curation funnel: exact copies (%10) and near-dup variants (%20)
-# planted; the doc_id%97==0 docs double as the leaked "eval set", so stage 5
-# must remove them (and anything sharing an 8-gram with them).
-_FUNNEL_SQL = f"""
-WITH RECURSIVE corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, 'XX ' || text FROM documents WHERE doc_id % 20 = 0
-),
-s1 AS (SELECT min(doc_id) AS doc_id FROM corpus GROUP BY text),
-c1 AS (SELECT c.doc_id, c.text FROM corpus c JOIN s1 USING (doc_id)),
-sh0 AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(string_split(text,' '), i, i+2), ' ') AS shingle
-  FROM c1, UNNEST(range(1, len(string_split(text,' ')) - 1)) AS t(i)
-  WHERE len(string_split(text,' ')) >= 3
-),
-keepsh AS (SELECT shingle FROM sh0 GROUP BY shingle
-           HAVING count(*) <= {_MAX_SHINGLE_DF}),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keepsh USING (shingle)),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS k
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT i.a, i.b FROM inter i
-  JOIN sizes sa ON i.a = sa.doc_id JOIN sizes sb ON i.b = sb.doc_id
-  WHERE CAST(i.k AS DOUBLE) / (sa.n + sb.n - i.k) >= 0.7
-),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-walk(node, label) AS (
-  SELECT doc_id, doc_id FROM c1
-  UNION
-  SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node WHERE w.label < e.v
-),
-comp AS (SELECT node AS doc_id, MIN(label) AS component FROM walk GROUP BY node),
-c2 AS (SELECT c1.doc_id, c1.text FROM c1 JOIN comp USING (doc_id)
-       WHERE comp.component = c1.doc_id),
-wc AS (
-  SELECT doc_id, w, count(*) AS c FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM c2)
-  WHERE w <> '' GROUP BY 1, 2
-),
-wstat AS (SELECT doc_id, sum(c) AS n_words, max(c) AS top_c FROM wc GROUP BY 1),
-c3 AS (SELECT c2.doc_id, c2.text FROM c2 JOIN wstat USING (doc_id)
-       WHERE n_words >= 20 AND top_c * 4 <= n_words),
-bg AS (
-  SELECT DISTINCT array_to_string(list_slice(string_split(text,' '), i, i+7), ' ') AS g
-  FROM documents, UNNEST(range(1, len(string_split(text,' ')) - 6)) AS t(i)
-  WHERE doc_id % 97 = 0 AND len(string_split(text,' ')) >= 8
-),
-dg AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(string_split(text,' '), i, i+7), ' ') AS g
-  FROM c3, UNNEST(range(1, len(string_split(text,' ')) - 6)) AS t(i)
-  WHERE len(string_split(text,' ')) >= 8
-),
-cont AS (SELECT DISTINCT doc_id FROM dg JOIN bg USING (g)),
-c4 AS (SELECT c3.doc_id FROM c3 LEFT JOIN cont USING (doc_id)
-       WHERE cont.doc_id IS NULL)
-SELECT CAST(1 AS INT) AS stage_idx, 'raw' AS stage,
-       (SELECT count(*) FROM corpus) AS n_docs
-UNION ALL SELECT 2, 'exact_dedup', (SELECT count(*) FROM c1)
-UNION ALL SELECT 3, 'neardup_prune', (SELECT count(*) FROM c2)
-UNION ALL SELECT 4, 'quality_gate', (SELECT count(*) FROM c3)
-UNION ALL SELECT 5, 'decontaminated', (SELECT count(*) FROM c4)
-"""
-
-
-@register("curation_funnel", _FUNNEL_SQL)
-def q_curation_funnel(spark, sf_dir):
-    """The full curation pipeline composed end-to-end (operators/curation
-    .curation_funnel): exact dedup → Jaccard near-dup components → integer-
-    exact repetition quality gate → benchmark decontamination, one survivor
-    count per stage. Planted exact copies and near-dup variants must vanish
-    at stages 2-3; the leaked eval docs at stage 5."""
-    from spanner_data_validator_spark.operators.curation import curation_funnel
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    corpus = (docs
-              .unionByName(docs.where(F.col("doc_id") % 10 == 0)
-                           .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                                   "text"))
-              .unionByName(docs.where(F.col("doc_id") % 20 == 0)
-                           .select((F.col("doc_id") + 2_000_000).alias("doc_id"),
-                                   F.concat(F.lit("XX "), F.col("text"))
-                                    .alias("text"))))
-    par = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < par:
-        corpus = corpus.repartition(par)
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    return curation_funnel(corpus, bench, max_shingle_df=_MAX_SHINGLE_DF,
-                           min_words=20, top_word_den=4, contamination_n=8)
-
-
-def _group_sample_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)", seed=7)
-    return f"""
-WITH t AS (
-  SELECT doc_id, lang,
-         row_number() OVER (PARTITION BY lang ORDER BY {h}, doc_id) AS rk
-  FROM documents)
-SELECT doc_id, lang, CAST(rk AS INT) AS rank FROM t WHERE rk <= 10
-"""
-
-
-@register("group_sample_exact", _group_sample_oracle())
-def q_group_sample_exact(spark, sf_dir):
-    """Exactly-k-per-group deterministic sampling (operators/sampling
-    .group_sample_exact): 10 docs per language ranked by keyed hash — the
-    eval-set constructor where rate sampling can't promise exact counts."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.sampling import (
-        group_sample_exact,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
-    return group_sample_exact(docs, "doc_id", "lang", 10, seed=7,
-                              hash_fn=portable_hash60, rank_col="rank")
-
-
-def _snapshot_writer_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import (
-        portable_hash60_sql,
-    )
-
-    x = portable_hash60_sql("CAST(k AS VARCHAR)", 5)
-    return f"""
-WITH s1 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 2 = 0),
-s2 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 2 = 1),
-modes AS (
-  SELECT 'v1' AS mode, CAST(count(*) AS BIGINT) AS n_rows,
-         bit_xor({x}) AS key_xor
-  FROM s1
-  UNION ALL
-  SELECT 'v2', CAST(count(*) AS BIGINT), bit_xor({x})
-  FROM (SELECT k FROM s1 UNION ALL SELECT k FROM s2)
-  UNION ALL
-  SELECT 'incr_1_2', CAST(count(*) AS BIGINT), bit_xor({x}) FROM s2
-)
-SELECT mode, n_rows, key_xor FROM modes
-"""
-
-
-@register("snapshot_writer_roundtrip", _snapshot_writer_oracle())
-def q_snapshot_writer_roundtrip(spark, sf_dir):
-    """The table format's WRITE path through Spark's sink seam
-    (sources/snapshot_sink.py, DataSourceArrowWriter): each save() streams
-    every task's Arrow batches into its own pending parquet file, and the
-    driver's commit registers them as ONE atomic snapshot (two-phase
-    commit; aborted/zombie task files stay invisible because readers
-    resolve scans through manifests only). Two multi-partition writes,
-    then time-travel / current / incremental digests — the same numbers
-    the oracle reconstructs from the slices."""
-    import tempfile
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.sources import snapshot_sink as sk
-    from spanner_data_validator_spark.sources import snapshots as snap
-
-    sk.register(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .select(F.col("o_orderkey").alias("k"))
-    table = tempfile.mkdtemp(prefix="sdv_q_snapsink_") + "/t"
-    for m in (0, 1):
-        (orders.where(F.col("k") % 2 == m).repartition(4)
-         .write.format(sk.SINK_NAME).option("table_dir", table)
-         .mode("append").save())
-
-    def digest(df, mode):
-        return (df.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                       F.bit_xor(portable_hash60(F.col("k").cast("string"), 5))
-                        .alias("key_xor"))
-                .select(F.lit(mode).alias("mode"), "n_rows", "key_xor"))
-
-    return (digest(snap.read_snapshot(spark, table, 1), "v1")
-            .unionByName(digest(snap.read_snapshot(spark, table), "v2"))
-            .unionByName(digest(snap.read_incremental(spark, table, 1, 2),
-                                "incr_1_2")))
-
-
-def _snapshot_compaction_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import (
-        portable_hash60_sql,
-    )
-
-    x = portable_hash60_sql("CAST(k AS VARCHAR)", 5)
-    return f"""
-WITH s1 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 0),
-s2 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 1),
-s3 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 2),
-modes AS (
-  SELECT 'current_v4' AS mode, CAST(count(*) AS BIGINT) AS n_rows,
-         bit_xor({x}) AS key_xor
-  FROM (SELECT k FROM s1 UNION ALL SELECT k FROM s2 UNION ALL SELECT k FROM s3)
-  UNION ALL
-  SELECT 'incr_1_4', CAST(count(*) AS BIGINT), bit_xor({x})
-  FROM (SELECT k FROM s2 UNION ALL SELECT k FROM s3)
-  UNION ALL
-  SELECT 'files_before_compact', CAST(8 AS BIGINT), CAST(0 AS BIGINT)
-  UNION ALL
-  SELECT 'files_after_compact', CAST(2 AS BIGINT), CAST(0 AS BIGINT)
-)
-SELECT mode, n_rows, key_xor FROM modes
-"""
-
-
-@register("snapshot_compaction_scan", _snapshot_compaction_oracle())
-def q_snapshot_compaction_scan(spark, sf_dir):
-    """Table maintenance that consumers never see: two 4-file appends are
-    COMPACTED into one file (a REPLACE snapshot — snapshots.compact), then
-    a third append lands. Time travel sees the new layout (8 files -> 1,
-    +1 from the last append); the incremental scan across the whole range
-    emits ONLY the appended rows — the operation-aware walk skips the
-    rewrite, where a bare manifest set-difference would have re-emitted
-    all compacted rows (the bug class Iceberg's snapshot operations
-    exist to prevent)."""
-    import tempfile
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.sources import snapshots as snap
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .select(F.col("o_orderkey").alias("k"))
-    table = tempfile.mkdtemp(prefix="sdv_q_compact_") + "/t"
-    snap.commit(orders.where(F.col("k") % 3 == 0), table, files=4)
-    snap.commit(orders.where(F.col("k") % 3 == 1), table, files=4)
-    files_before = len(snap.snapshot_files(table, 2))
-    snap.compact(spark, table, files=1)
-    snap.commit(orders.where(F.col("k") % 3 == 2), table)
-    files_after = len(snap.snapshot_files(table, 3)) + 1  # + last append
-
-    def digest(df, mode):
-        return (df.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                       F.bit_xor(portable_hash60(F.col("k").cast("string"), 5))
-                        .alias("key_xor"))
-                .select(F.lit(mode).alias("mode"), "n_rows", "key_xor"))
-
-    counts = spark.createDataFrame(
-        [("files_before_compact", files_before, 0),
-         ("files_after_compact", files_after, 0)],
-        "mode string, n_rows long, key_xor long")
-    return (digest(snap.read_snapshot(spark, table), "current_v4")
-            .unionByName(digest(snap.read_incremental(spark, table, 1, 4),
-                                "incr_1_4"))
-            .unionByName(counts))
-
-
-def _stream_into_snapshot_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import (
-        portable_hash60_sql,
-    )
-
-    x = portable_hash60_sql("CAST(event_id AS VARCHAR)", 5)
-    return f"""
-SELECT CAST(2 AS BIGINT) AS n_versions,
-       CAST(count(*) AS BIGINT) AS total_rows,
-       bit_xor({x}) AS key_xor
-FROM events
-"""
-
-
-@register("stream_into_snapshot_table", _stream_into_snapshot_oracle())
-def q_stream_into_snapshot_table(spark, sf_dir):
-    """STREAMING writes into the table format: every micro-batch commits
-    as one atomic snapshot through the Python DataSource stream writer
-    (sources/snapshot_sink.py), exactly-once via the batch-id fence file —
-    a replayed micro-batch recognizes its own id and drops its fresh files
-    as invisible orphans. Two micro-batches (maxFilesPerTrigger=2 over 4
-    input files) -> snapshot versions 1 and 2; the digest of the final
-    table must equal the batch input exactly, and the version count proves
-    one-commit-per-batch."""
-    import tempfile
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.sources import snapshot_sink as sk
-    from spanner_data_validator_spark.sources import snapshots as snap
-
-    sk.register(spark)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
-    work = tempfile.mkdtemp(prefix="sdv_q_streamsink_")
-    ev.repartition(4).write.parquet(f"{work}/in")
-    table = f"{work}/t"
-    stream = (spark.readStream.schema("event_id long")
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
-    q = (stream.writeStream.format(sk.SINK_NAME)
-         .option("table_dir", table)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    t = snap.read_snapshot(spark, table)
-    return (t.agg(F.count(F.lit(1)).cast("long").alias("total_rows"),
-                  F.bit_xor(portable_hash60(
-                      F.col("event_id").cast("string"), 5)).alias("key_xor"))
-            .select(F.lit(snap.current_version(table)).cast("long")
-                     .alias("n_versions"),
-                    "total_rows", "key_xor"))
-
-
-def _snapshot_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import (
-        portable_hash60_sql,
-    )
-
-    x = portable_hash60_sql("CAST(k AS VARCHAR)", 5)
-    return f"""
-WITH s1 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 0),
-s2 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 1),
-s3 AS (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 3 = 2),
-modes AS (
-  SELECT 'time_travel_v1' AS mode, CAST(count(*) AS BIGINT) AS n_rows,
-         bit_xor({x}) AS key_xor
-  FROM s1
-  UNION ALL
-  SELECT 'current_v3', CAST(count(*) AS BIGINT), bit_xor({x})
-  FROM (SELECT k FROM s1 UNION ALL SELECT k FROM s2 UNION ALL SELECT k FROM s3)
-  UNION ALL
-  SELECT 'incremental_1_to_3', CAST(count(*) AS BIGINT), bit_xor({x})
-  FROM (SELECT k FROM s2 UNION ALL SELECT k FROM s3)
-)
-SELECT mode, n_rows, key_xor FROM modes
-"""
-
-
-@register("snapshot_incremental_scan", _snapshot_oracle())
-def q_snapshot_incremental_scan(spark, sf_dir):
-    """Snapshot-versioned table primitives (sources/snapshots.py — the
-    Iceberg shapes the north-star pipeline consumes, runnable without the
-    runtime jar): three append commits, then (a) time travel to v1, (b)
-    the current table, and (c) the INCREMENTAL scan v1->v3 — a pure
-    file-set difference between two manifests that reads none of the older
-    data (the property that makes continuous validation affordable: each
-    round touches only new files). Counts + key checksums per mode,
-    oracle-reconstructed from the same slices."""
-    import tempfile
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.sources import snapshots as snap
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .select(F.col("o_orderkey").alias("k"))
-    table = tempfile.mkdtemp(prefix="sdv_q_snap_") + "/orders_t"
-    for m in (0, 1, 2):
-        snap.commit(orders.where(F.col("k") % 3 == m), table)
-
-    def digest(df, mode):
-        return (df.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                       F.bit_xor(portable_hash60(F.col("k").cast("string"), 5))
-                        .alias("key_xor"))
-                .select(F.lit(mode).alias("mode"), "n_rows", "key_xor"))
-
-    return (digest(snap.read_snapshot(spark, table, 1), "time_travel_v1")
-            .unionByName(digest(snap.read_snapshot(spark, table),
-                                "current_v3"))
-            .unionByName(digest(snap.read_incremental(spark, table, 1, 3),
-                                "incremental_1_to_3")))
-
-
-def _stream_hll_oracle() -> str:
-    from spanner_data_validator_spark.operators.sketch import (
-        hll_estimate_sql,
-        hll_registers_sql,
-    )
-
-    src = ("SELECT epoch_ms(date_trunc('hour', ts) "
-           "- INTERVAL (EXTRACT(hour FROM ts) % 6) HOUR) AS ws_ms, "
-           "CAST(user_id AS VARCHAR) AS u FROM events")
-    regs = hll_registers_sql(src, "ws_ms", "u")
-    return f"""
-WITH est AS ({hll_estimate_sql(regs, "ws_ms")})
-SELECT ws_ms, nonempty, hll_estimate FROM est
-"""
-
-
-@register("stream_hll_window_users", _stream_hll_oracle())
-def q_stream_hll_window_users(spark, sf_dir):
-    """BOUNDED-STATE streaming distinct counting: per-6h-window distinct
-    users estimated by an in-stream HyperLogLog — phase 1 is a stateful
-    (window, register) max-rank aggregation whose state is windows x m=256
-    rows REGARDLESS of user cardinality (exact streaming distinct is
-    unbounded state — the thing this replaces at 10^12 rows), phase 2
-    chains a second stateful window aggregation folding registers into the
-    estimate. The oracle recomputes the identical register math per window
-    in batch; estimator accuracy itself is characterized by
-    hll_distinct_by_type."""
-    import tempfile
-
-    from spanner_data_validator_spark.operators.sketch import (
-        hll_estimate_expr,
-        hll_reg_rho,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("user_id").cast("string").alias("u"))
-    work = tempfile.mkdtemp(prefix="sdv_q_streamhll_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1)
-     .select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-             F.lit("sentinel").alias("u"))
-     .write.mode("append").parquet(in_dir))
-
-    reg, rho = hll_reg_rho(F.col("u"))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes")
-              .select("ts", reg.alias("reg"), rho.alias("rho")))
-    regs = (stream
-            .groupBy(F.window("ts", "6 hours").alias("w"), "reg")
-            .agg(F.max("rho").alias("mj")))
-    est = (regs
-           .groupBy(F.window(F.col("w"), "6 hours").alias("w2"))
-           .agg(F.count(F.lit(1)).alias("nonempty"),
-                F.sum(F.pow(F.lit(2.0),
-                            (F.lit(51) - F.col("mj")).cast("double"))
-                      .cast("long")).alias("s_num"))
-           .select(F.unix_millis(F.col("w2.start")).alias("ws_ms"),
-                   F.col("nonempty").cast("long").alias("nonempty"),
-                   hll_estimate_expr(F.col("nonempty"), F.col("s_num"))
-                    .alias("hll_estimate")))
-    with _shuffle_partitions(spark, 8):
-        q = (est.writeStream.format("parquet")
-             .option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    # the sentinel's own far-future window never closes, so the sink holds
-    # exactly the real windows
-    return spark.read.parquet(f"{work}/out")
-
-
-# ---------------------------------------------------------------------------
-# incremental (recurring) validation: per-range digests → drift → row-level
-# classify of drifted ranges only (operators/digest.py)
-# ---------------------------------------------------------------------------
-
-def _churned_events(spark, sf_dir):
-    """Localized-churn fixture: payload mutated in key range [1000,1100),
-    rows deleted in [2000,2010), rows inserted past 10^8 from [3000,3010) —
-    every other range digests identical and is skipped by the fast path."""
-    src = events_source(spark, sf_dir)
-    mut = F.col("key").between(1000, 1099)
-    tgt = (src.where(~F.col("key").between(2000, 2009))
-              .withColumn("payload",
-                          F.when(mut, F.concat(F.col("payload"), F.lit("#mut")))
-                           .otherwise(F.col("payload"))))
-    ins = (src.where(F.col("key").between(3000, 3009))
-              .withColumn("key", F.col("key") + F.lit(100_000_000)))
-    return src, tgt.unionByName(ins)
-
-
-_CHURN_CTE = """
-WITH src AS (
-  SELECT event_id AS key,
-         concat_ws('|', coalesce(event_type,''), coalesce(props,''),
-                   coalesce(CAST(user_id AS STRING),'')) AS payload
-  FROM events
-),
-tgt AS (
-  SELECT key,
-         CASE WHEN key BETWEEN 1000 AND 1099 THEN payload || '#mut'
-              ELSE payload END AS payload
-  FROM src WHERE key NOT BETWEEN 2000 AND 2009
-  UNION ALL
-  SELECT key + 100000000 AS key, payload FROM src
-  WHERE key BETWEEN 3000 AND 3009
-),
-"""
-
-
-def _digest_ctes() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    fp = portable_hash60_sql("payload")
-    digest = """
-  SELECT CAST(floor(key / 1000) AS BIGINT) AS range_id,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         bit_xor(fp) AS xor_fp,
-         sum(fp & 4294967295) AS sum_lo,
-         sum(fp >> 32) AS sum_hi
-  FROM {side} GROUP BY 1"""
-    return f"""
-sfp AS (SELECT key, {fp} AS fp FROM src),
-tfp AS (SELECT key, {fp} AS fp FROM tgt),
-sd AS ({digest.format(side='sfp')}),
-td AS ({digest.format(side='tfp')}),
-drift AS (
-  SELECT coalesce(s.range_id, t.range_id) AS range_id,
-         CASE WHEN s.n_rows IS NULL THEN 'RANGE_TARGET_ONLY'
-              WHEN t.n_rows IS NULL THEN 'RANGE_SOURCE_ONLY'
-              ELSE 'RANGE_CHANGED' END AS status,
-         CAST(coalesce(s.n_rows, 0) AS BIGINT) AS src_n,
-         CAST(coalesce(t.n_rows, 0) AS BIGINT) AS tgt_n
-  FROM sd s FULL OUTER JOIN td t ON s.range_id = t.range_id
-  WHERE s.n_rows IS NULL OR t.n_rows IS NULL
-     OR s.n_rows <> t.n_rows OR s.xor_fp <> t.xor_fp
-     OR s.sum_lo <> t.sum_lo OR s.sum_hi <> t.sum_hi
-)"""
-
-
-def _digest_frames(spark, sf_dir):
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-
-    src, tgt = _churned_events(spark, sf_dir)
-    fp = portable_hash60(F.col("payload"))
-    return (src.select("key", fp.alias("fingerprint")),
-            tgt.select("key", fp.alias("fingerprint")))
-
-
-@register("range_digest_drift", _CHURN_CTE + _digest_ctes() + """
-SELECT range_id, status, src_n, tgt_n FROM drift
-""")
-def q_range_digest_drift(spark, sf_dir):
-    """Per-range digest drift (operators/digest.range_digest + digest_drift):
-    each side reduces to one (count, xor-fold, split-sum) row per 1000-key
-    range — the recurring-validation pre-pass that costs O(rows) scan but
-    O(ranges) comparison. Only the three churned ranges surface."""
-    from spanner_data_validator_spark.operators.digest import (
-        digest_drift,
-        range_digest,
-    )
-
-    src_fp, tgt_fp = _digest_frames(spark, sf_dir)
-    rid = F.floor(F.col("key") / F.lit(1000)).cast("long")
-    sd = range_digest(src_fp, rid, F.col("fingerprint"))
-    td = range_digest(tgt_fp, rid, F.col("fingerprint"))
-    return digest_drift(sd, td)
-
-
-@register("incremental_validate_counts", _CHURN_CTE + _digest_ctes() + """,
-cls AS (
-  SELECT CASE WHEN s.fp IS NOT NULL AND t.fp IS NOT NULL AND s.fp = t.fp
-                   THEN 'MATCH'
-              WHEN s.fp IS NOT NULL AND t.fp IS NOT NULL THEN 'MISMATCH'
-              WHEN t.fp IS NULL THEN 'SOURCE_ONLY'
-              ELSE 'TARGET_ONLY' END AS status
-  FROM (SELECT * FROM sfp
-        WHERE CAST(floor(key / 1000) AS BIGINT) IN (SELECT range_id FROM drift)) s
-  FULL OUTER JOIN
-       (SELECT * FROM tfp
-        WHERE CAST(floor(key / 1000) AS BIGINT) IN (SELECT range_id FROM drift)) t
-    ON s.key = t.key
-)
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
-""")
-def q_incremental_validate_counts(spark, sf_dir):
-    """Incremental revalidation fast path (operators/digest.
-    incremental_validate): row-granular classification touches ONLY the
-    ranges whose digests drifted — rows in undrifted ranges are MATCH by
-    digest proof and never re-read. The expensive full-outer join runs over
-    ~3 ranges of churn instead of the whole corpus."""
-    from spanner_data_validator_spark.operators.digest import incremental_validate
-
-    src_fp, tgt_fp = _digest_frames(spark, sf_dir)
-    rid = F.floor(F.col("key") / F.lit(1000)).cast("long")
-    _drift, classified = incremental_validate(src_fp, tgt_fp, ["key"], rid)
-    return classified.groupBy("status").agg(F.count("*").alias("n"))
-
-
-def _epoch_shuffle_oracle(seed: int = 0, n_shards: int = 8) -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)", seed=seed)
-    return f"""
-WITH h AS (SELECT doc_id, {h} AS h FROM documents),
-r AS (
-  SELECT doc_id, CAST(h % {n_shards} AS INT) AS shard,
-         CAST(row_number() OVER (
-              PARTITION BY h % {n_shards} ORDER BY h, doc_id) - 1 AS BIGINT) AS pos
-  FROM h
-)
-SELECT doc_id, shard, pos FROM r WHERE pos < 5
-"""
-
-
-@register("epoch_shuffle_order", _epoch_shuffle_oracle())
-def q_epoch_shuffle_order(spark, sf_dir):
-    """Deterministic epoch shuffle (operators/sampling.epoch_shuffle): seeded
-    pseudo-random training order as (shard, pos) — one hash exchange + a
-    per-shard sort, never a global sort. Emits the first 5 positions of each
-    shard (the rows a loader would read first)."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.sampling import epoch_shuffle
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    out = epoch_shuffle(docs, "doc_id", seed=0, n_shards=8,
-                        hash_fn=portable_hash60)
-    return out.where(F.col("pos") < 5).select("doc_id", "shard", "pos")
-
-
-@register("line_dedup_clean", """
-WITH corpus AS (
-  SELECT doc_id,
-         text || CASE WHEN doc_id % 2 = 0
-                      THEN chr(10) || 'copyright footer boilerplate' ELSE '' END
-              || CASE WHEN doc_id % 3 = 0
-                      THEN chr(10) || 'subscribe to newsletter' ELSE '' END AS text
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, i - 1 AS line_no, string_split(text, chr(10))[i] AS line
-  FROM corpus, UNNEST(range(1, len(string_split(text, chr(10))) + 1)) AS t(i)
-),
-hot AS (
-  SELECT line FROM (SELECT DISTINCT doc_id, line FROM lines)
-  GROUP BY line HAVING count(*) >= 50
-),
-marked AS (
-  SELECT l.doc_id, l.line_no, l.line, h.line IS NOT NULL AS is_hot
-  FROM lines l LEFT JOIN hot h ON l.line = h.line
-)
-SELECT doc_id,
-       coalesce(string_agg(CASE WHEN NOT is_hot THEN line END,
-                           chr(10) ORDER BY line_no), '') AS clean_text,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CASE WHEN is_hot THEN 1 ELSE 0 END) AS BIGINT) AS n_removed
-FROM marked GROUP BY doc_id
-""")
-def q_line_dedup_clean(spark, sf_dir):
-    """Boilerplate line removal (operators/quality.line_dedup, the C4-style
-    line-dedup rule) on a corpus with planted repeated footers: lines in
-    >= 50 distinct docs are dropped, content survives in order. The DF count
-    shuffles 8-byte line hashes, the hot set broadcasts, and the hot mark
-    folds into the reassembly aggregate — no anti-join pass."""
-    from spanner_data_validator_spark.operators.quality import line_dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 2 == 0,
-                   F.lit("\ncopyright footer boilerplate")).otherwise(""),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit("\nsubscribe to newsletter")).otherwise(""),
-        ).alias("text"))
-    return line_dedup(corpus, "doc_id", "text", min_df=50)
-
-
-def _stream_digest_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    fp = portable_hash60_sql("payload")
-    digest = """
-  SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms,
-         CAST(conv_id AS BIGINT) % 64 AS range_id,
-         CAST(count(*) AS BIGINT) AS n_rows, bit_xor(fp) AS xor_fp,
-         sum(fp & 4294967295) AS sum_lo, sum(fp >> 32) AS sum_hi
-  FROM {side} GROUP BY 1, 2"""
-    return f"""
-WITH src AS (
-  SELECT CAST(user_id AS STRING) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INT) AS turn_idx,
-         coalesce(event_type, '') AS role,
-         coalesce(props, '') AS text,
-         ts
-  FROM events
-),
-tgt AS (
-  SELECT conv_id, turn_idx, role,
-         CASE WHEN (CAST(conv_id AS BIGINT) * 31 + turn_idx) % 50 = 0
-              THEN text || '#mut' ELSE text END AS text, ts
-  FROM src WHERE (CAST(conv_id AS BIGINT) * 31 + turn_idx) % 50 <> 1
-  UNION ALL
-  SELECT conv_id, CAST(turn_idx + 100000 AS INT) AS turn_idx, role, text, ts
-  FROM src WHERE (CAST(conv_id AS BIGINT) * 31 + turn_idx) % 50 = 2
-),
-sfp AS (SELECT conv_id, ts, {fp} AS fp FROM
-        (SELECT conv_id, ts, concat_ws('|', role, text) AS payload FROM src)),
-tfp AS (SELECT conv_id, ts, {fp} AS fp FROM
-        (SELECT conv_id, ts, concat_ws('|', role, text) AS payload FROM tgt)),
-sd AS ({digest.format(side='sfp')}),
-td AS ({digest.format(side='tfp')})
-SELECT coalesce(s.window_start_ms, t.window_start_ms) AS window_start_ms,
-       coalesce(s.range_id, t.range_id) AS range_id,
-       CASE WHEN s.n_rows IS NULL THEN 'RANGE_TARGET_ONLY'
-            WHEN t.n_rows IS NULL THEN 'RANGE_SOURCE_ONLY'
-            ELSE 'RANGE_CHANGED' END AS status,
-       CAST(coalesce(s.n_rows, 0) AS BIGINT) AS src_n,
-       CAST(coalesce(t.n_rows, 0) AS BIGINT) AS tgt_n
-FROM sd s FULL OUTER JOIN td t
-  ON s.window_start_ms = t.window_start_ms AND s.range_id = t.range_id
-WHERE s.n_rows IS NULL OR t.n_rows IS NULL
-   OR s.n_rows <> t.n_rows OR s.xor_fp <> t.xor_fp
-   OR s.sum_lo <> t.sum_lo OR s.sum_hi <> t.sum_hi
-"""
-
-
-@register("stream_digest_drift", _stream_digest_oracle())
-def q_stream_digest_drift(spark, sf_dir):
-    """REAL streaming digest-drift monitor run (streaming/digest_stream):
-    both transcript streams fold through ONE watermarked stateful aggregation
-    into per-(1h window, conv%64 range, side) digests — state is windows ×
-    ranges × 2 rows (~40 B each) instead of per-key join state. Closed
-    windows land in an append sink; the batch compare names the drifted
-    (window, range) cells. Oracle replicates digests + drift in SQL."""
-    import tempfile
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.jobs.validate_transcripts import (
-        append_sentinel,
-    )
-    from spanner_data_validator_spark.operators.digest import digest_drift
-    from spanner_data_validator_spark.sources.transcript_source import (
-        stream_transcripts,
-        write_transcripts,
-    )
-    from spanner_data_validator_spark.streaming.digest_stream import (
-        dual_windowed_digest,
-    )
-
-    src = transcripts_from_events(spark, sf_dir).persist()
-    tgt = _events_transcript_target(src)
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_digest_")
-    try:
-        write_transcripts(src, spark, f"{work}/src", n_files=4)
-        write_transcripts(tgt, spark, f"{work}/tgt", n_files=4)
-    finally:
-        src.unpersist()
-    append_sentinel(spark, f"{work}/src", f"{work}/tgt")
-
-    # NO pre-aggregation sentinel filter: Catalyst pushes a conv_id predicate
-    # below the EventTimeWatermark operator into the scan, so the sentinel
-    # would never advance the watermark and the last real window would never
-    # close. Unfiltered, the sentinel advances the watermark while its own
-    # far-future window never closes — it can't reach the append sink; its
-    # NULL range (non-numeric conv_id) is dropped at read time regardless.
-    s = stream_transcripts(spark, f"{work}/src", watermark="10 minutes")
-    t = stream_transcripts(spark, f"{work}/tgt", watermark="10 minutes")
-    fp = portable_hash60(F.concat_ws("|", F.col("role"), F.col("text")))
-    # try_cast: the sentinel's conv_id is non-numeric (ANSI cast would throw);
-    # it maps to a NULL range that never leaves the open far-future window
-    rid = F.pmod(F.col("conv_id").try_cast("long"), F.lit(64))
-    q = (dual_windowed_digest(s, t, rid, fp, window="1 hour")
-         .writeStream.format("parquet")
-         .option("path", f"{work}/digests")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    dig = spark.read.parquet(f"{work}/digests") \
-        .where(F.col("range_id").isNotNull())
-    sd = dig.where(F.col("side") == "source").drop("side")
-    td = dig.where(F.col("side") == "target").drop("side")
-    out = digest_drift(sd, td, range_col=["window_start", "range_id"])
-    return (out.select(F.unix_millis("window_start").alias("window_start_ms"),
-                       "range_id", "status", "src_n", "tgt_n"))
-
-
-@register("validate_upserts", """
-WITH base AS (
-  SELECT event_id AS key,
-         concat_ws('|', coalesce(event_type,''), coalesce(props,''),
-                   coalesce(CAST(user_id AS STRING),'')) AS payload,
-         ts
-  FROM events
-),
-log AS (
-  SELECT key, payload, ts FROM base
-  UNION ALL
-  SELECT key, payload || '#v2' AS payload, ts + INTERVAL 1 HOUR AS ts
-  FROM base WHERE key % 40 = 0
-),
-fin AS (SELECT key, max_by(payload, ts) AS payload FROM log GROUP BY key),
-tgt AS (
-  SELECT key,
-         CASE WHEN key % 50 = 0 THEN payload || '#mut' ELSE payload END AS payload
-  FROM fin WHERE key % 50 <> 1
-  UNION ALL
-  SELECT key + 100000000 AS key, payload FROM fin WHERE key % 50 = 2
-),
-cls AS (
-  SELECT CASE WHEN s.payload IS NOT NULL AND t.payload IS NOT NULL
-                   AND s.payload = t.payload THEN 'MATCH'
-              WHEN s.payload IS NOT NULL AND t.payload IS NOT NULL THEN 'MISMATCH'
-              WHEN t.payload IS NULL THEN 'SOURCE_ONLY'
-              ELSE 'TARGET_ONLY' END AS status
-  FROM fin s FULL OUTER JOIN tgt t ON s.key = t.key
-)
-SELECT status, CAST(count(*) AS BIGINT) AS n FROM cls GROUP BY status
-""")
-def q_validate_upserts(spark, sf_dir):
-    """CDC-style validation: the source is a CHANGE LOG (base rows + later
-    corrections for key%40=0), collapsed to final state by last-writer-wins
-    (comparator.latest_per_key — one max_by hash aggregate, the dual of
-    dedup_first) and classified against the target snapshot. A migration
-    tailing an update stream is validated without materializing history;
-    the %40 keys only MATCH if the collapse picked the correction."""
-    from spanner_data_validator_spark.operators.comparator import latest_per_key
-
-    base = events_source(spark, sf_dir).select("key", "payload", "ts")
-    upd = base.where(F.col("key") % 40 == 0).select(
-        "key", F.concat(F.col("payload"), F.lit("#v2")).alias("payload"),
-        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"))
-    fin = latest_per_key(base.unionByName(upd), ["key"], "ts", ["payload"])
-    tgt = events_target(fin.select("key", "payload"))
-    s = fin.select("key", F.col("payload").alias("src_payload"))
-    t = tgt.select("key", F.col("payload").alias("tgt_payload"))
-    j = s.join(t, "key", "full_outer")
-    status = (
-        F.when(F.col("src_payload").isNotNull() & F.col("tgt_payload").isNotNull(),
-               F.when(F.col("src_payload") == F.col("tgt_payload"), MATCH)
-                .otherwise(MISMATCH))
-         .when(F.col("tgt_payload").isNull(), SOURCE_ONLY)
-         .otherwise(TARGET_ONLY))
-    return (j.select(status.alias("status"))
-             .groupBy("status").agg(F.count("*").alias("n")))
-
-
-# ---------------------------------------------------------------------------
-# conversation-level rollup validation (operators/rollup.py): digest whole
-# conversations, classify at conversation granularity — the coarse tier the
-# row-level validator drills into
-# ---------------------------------------------------------------------------
-
-def _rollup_target(src):
-    """Conversation-granularity planted divergences (sparser than the
-    turn-level %50 rules, which saturate every ~67-turn conversation):
-    conv%31==1 dropped whole (SOURCE_ONLY), conv%31==2 cloned to a new id
-    (TARGET_ONLY), conv%7==0 first turn mutated, conv%13==3 turns 0 and 1
-    REORDERED — the swap only an order-sensitive digest can see; counts and
-    the unordered turn-hash multiset are unchanged."""
-    c = F.col("conv_id").cast("long")
-    kept = src.where(c % 31 != 1)
-    mut = kept.withColumn(
-        "text",
-        F.when((c % 7 == 0) & (F.col("turn_idx") == 0),
-               F.concat(F.col("text"), F.lit("#mut"))).otherwise(F.col("text")))
-    reord = mut.withColumn(
-        "turn_idx",
-        F.when((c % 13 == 3) & (F.col("turn_idx") < 2),
-               F.lit(1) - F.col("turn_idx"))
-         .otherwise(F.col("turn_idx")).cast("int"))
-    extra = src.where(c % 31 == 2).withColumn(
-        "conv_id", (c + F.lit(1_000_000_000)).cast("string"))
-    return reord.unionByName(extra)
-
-
-def _conv_rollup_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    digest = portable_hash60_sql("string_agg(h, ',' ORDER BY turn_idx)")
-    per_side = (
-        "SELECT conv_id, CAST(count(*) AS BIGINT) AS n, {d} AS d "
-        "FROM (SELECT conv_id, turn_idx, "
-        "substr(md5(concat_ws(chr(31), coalesce(role,''), coalesce(text,''))), 1, 15) AS h "
-        "FROM {side}) GROUP BY conv_id").format(d=digest, side="{side}")
-    src_cte = _ev_transcript_cte().split(",\ntgt AS")[0]  # src CTE only
-    return (src_cte + f""",
-tgt AS (
-  SELECT conv_id,
-         CAST(CASE WHEN CAST(conv_id AS BIGINT) % 13 = 3 AND turn_idx < 2
-                   THEN 1 - turn_idx ELSE turn_idx END AS INT) AS turn_idx,
-         role,
-         CASE WHEN CAST(conv_id AS BIGINT) % 7 = 0 AND turn_idx = 0
-              THEN text || '#mut' ELSE text END AS text
-  FROM src WHERE CAST(conv_id AS BIGINT) % 31 <> 1
-  UNION ALL
-  SELECT CAST(CAST(conv_id AS BIGINT) + 1000000000 AS VARCHAR) AS conv_id,
-         turn_idx, role, text
-  FROM src WHERE CAST(conv_id AS BIGINT) % 31 = 2
-),
-sd AS ({per_side.format(side='src')}),
-td AS ({per_side.format(side='tgt')}),
-cls AS (
-  SELECT CASE WHEN s.d IS NOT NULL AND t.d IS NOT NULL THEN
-                CASE WHEN s.d = t.d THEN 'MATCH' ELSE 'MISMATCH' END
-              WHEN t.d IS NULL THEN 'SOURCE_ONLY' ELSE 'TARGET_ONLY' END AS status,
-         s.n AS sn, t.n AS tn
-  FROM sd s FULL OUTER JOIN td t ON s.conv_id = t.conv_id
-)
-SELECT status,
-       CAST(count(*) AS BIGINT) AS n_convs,
-       CAST(sum(sn) AS BIGINT) AS src_turns,
-       CAST(sum(tn) AS BIGINT) AS tgt_turns
-FROM cls GROUP BY status
-""")
-
-
-@register("conv_rollup_validate", _conv_rollup_oracle())
-def q_conv_rollup_validate(spark, sf_dir):
-    """Conversation-granularity validation: each side is reduced to ONE row
-    per conversation (ordered digest + turn count, operators/rollup.py), the
-    full-outer classify joins conversations instead of turns — the join
-    shrinks by the mean conversation length and catches turn SWAPS that a
-    commutative per-row tally cannot. Output: per-status conversation and
-    turn totals (the drill-down feed for row-level classify_pair)."""
-    from spanner_data_validator_spark.operators.rollup import rollup_validate
-
-    src = transcripts_from_events(spark, sf_dir)
-    tgt = _rollup_target(src)
-    cls = rollup_validate(src, tgt, "conv_id", "turn_idx", ["role", "text"])
-    return cls.groupBy("status").agg(
-        F.count(F.lit(1)).alias("n_convs"),
-        F.sum("src_n_turns").cast("long").alias("src_turns"),
-        F.sum("tgt_n_turns").cast("long").alias("tgt_turns"))
-
-
-# ---------------------------------------------------------------------------
-# KMV distinct sketch (operators/sketch.py): constant-size, engine-portable
-# distinct estimation — the scalable COUNT(DISTINCT) for 10^12-row columns
-# ---------------------------------------------------------------------------
-
-def _kmv_oracle(k: int) -> str:
-    from spanner_data_validator_spark.operators.sketch import kmv_distinct_sql
-
-    sketch = kmv_distinct_sql(
-        "SELECT CAST(user_id AS VARCHAR) AS u FROM events", "u", k)
-    return f"""
-WITH sk AS ({sketch}),
-ex AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct FROM events)
-SELECT k_used, kth_hash, est_distinct, exact_distinct FROM sk, ex
-"""
-
-
-@register("kmv_distinct_users", _kmv_oracle(64))
-def q_kmv_distinct_users(spark, sf_dir):
-    """KMV distinct-count sketch over events.user_id (k=64): phase-1 narrow
-    per-partition k-smallest-distinct reduce, <= partitions*k longs exchanged,
-    deterministic portable-hash estimator DuckDB reproduces bit-for-bit. The
-    exact COUNT(DISTINCT) rides along as the demo-scale verification column
-    (it is the thing the sketch REPLACES at 10^12 rows)."""
-    from spanner_data_validator_spark.operators.sketch import kmv_distinct
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("user_id").cast("string").alias("u"))
-    sk = kmv_distinct(ev, F.col("u"), 64)
-    exact = ev.agg(F.count_distinct("u").alias("exact_distinct"))
-    return sk.crossJoin(exact)
-
-
-# ---------------------------------------------------------------------------
-# KMV set operations (operators/sketch.py): union / intersection / Jaccard
-# of two user populations from two constant-size sketches
-# ---------------------------------------------------------------------------
-
-def _kmv_set_ops_oracle(k: int) -> str:
-    from spanner_data_validator_spark.operators.sketch import kmv_set_ops_sql
-
-    src_a = ("SELECT CAST(user_id AS VARCHAR) AS u FROM events "
-             "WHERE event_type = 'click'")
-    src_b = ("SELECT CAST(user_id AS VARCHAR) AS u FROM events "
-             "WHERE event_type = 'purchase'")
-    est = kmv_set_ops_sql(src_a, "u", src_b, "u", k)
-    return f"""
-WITH est AS ({est}),
-exu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_union
-        FROM events WHERE event_type IN ('click', 'purchase')),
-exi AS (SELECT CAST(count(DISTINCT e1.user_id) AS BIGINT) AS exact_inter
-        FROM events e1
-        WHERE e1.event_type = 'click' AND e1.user_id IN (
-          SELECT e2.user_id FROM events e2 WHERE e2.event_type = 'purchase'))
-SELECT k_used, union_est, jaccard_est, inter_est, exact_union, exact_inter
-FROM est, exu, exi
-"""
-
-
-@register("kmv_set_ops", _kmv_set_ops_oracle(128))
-def q_kmv_set_ops(spark, sf_dir):
-    """Set-operation estimates between two user populations (clickers vs
-    purchasers) from two k=128 KMV sketches: union size, Jaccard, and
-    intersection size — computed from the sketches ALONE (no distinct-join
-    of the sides; operators/sketch.kmv_set_ops). Exact union/intersection
-    ride along as demo-scale verification columns; DuckDB replays the
-    sketch math in relational form."""
-    from spanner_data_validator_spark.operators.sketch import kmv_set_ops
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").cast("string").alias("u"))
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").cast("string").alias("u"))
-    est = kmv_set_ops(clicks, F.col("u"), buys, F.col("u"), 128)
-    exact = (clicks.select("u").distinct()
-             .join(buys.select("u").distinct(), "u", "full_outer")
-             .agg(F.count(F.lit(1)).alias("exact_union")))
-    exact_i = (clicks.select("u").distinct()
-               .join(buys.select("u").distinct(), "u")
-               .agg(F.count(F.lit(1)).alias("exact_inter")))
-    return est.crossJoin(exact).crossJoin(exact_i)
-
-
-# ---------------------------------------------------------------------------
-# HyperLogLog with an engine-portable register layout (operators/sketch.py):
-# per-group sketches + a raw-data-free merged rollup
-# ---------------------------------------------------------------------------
-
-def _hll_oracle() -> str:
-    from spanner_data_validator_spark.operators.sketch import (
-        hll_estimate_sql,
-        hll_registers_sql,
-    )
-
-    src = "SELECT event_type, CAST(user_id AS VARCHAR) AS u FROM events"
-    regs = hll_registers_sql(src, "event_type", "u")
-    merged = f"SELECT reg, max(mj) AS mj FROM ({regs}) GROUP BY reg"
-    return f"""
-WITH per_t AS ({hll_estimate_sql(regs, "event_type")}),
-mrg AS ({hll_estimate_sql(merged, "")}),
-ex_t AS (SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct
-         FROM events GROUP BY event_type),
-ex_all AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct FROM events)
-SELECT p.event_type AS event_type, p.nonempty, p.hll_estimate, e.exact_distinct
-FROM per_t p JOIN ex_t e USING (event_type)
-UNION ALL
-SELECT '__ALL__' AS event_type, m.nonempty, m.hll_estimate, a.exact_distinct
-FROM mrg m, ex_all a
-"""
-
-
-@register("hll_distinct_by_type", _hll_oracle())
-def q_hll_distinct_by_type(spark, sf_dir):
-    """HyperLogLog distinct users per event_type (m=256 registers,
-    engine-portable layout: bin-length ranks, scaled-integer harmonic sum —
-    operators/sketch.py). The '__ALL__' row is the MERGED sketch (per-register
-    max over the per-type register tables), i.e. the rollup a 10^12-row
-    pipeline does without rescanning raw data — overlapping users across
-    types make it differ from the sum, which is the point. Exact
-    COUNT(DISTINCT) rides along per group as the demo-scale verification
-    column. DuckDB replays registers, merge, and estimator identically."""
-    from spanner_data_validator_spark.operators.sketch import (
-        hll_estimate,
-        hll_merge,
-        hll_registers,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.col("user_id").cast("string").alias("u"))
-    # the register table feeds two branches (per-type estimate + merged
-    # rollup) and is <= types*m rows — pin it (multi-branch rescan trap)
-    regs = hll_registers(ev, ["event_type"], F.col("u")).localCheckpoint()
-    per_t = hll_estimate(regs, ["event_type"])
-    merged = (hll_estimate(hll_merge(regs, []), [])
-              .select(F.lit("__ALL__").alias("event_type"),
-                      "nonempty", "hll_estimate"))
-    ex_t = (ev.groupBy("event_type")
-            .agg(F.count_distinct("u").alias("exact_distinct")))
-    ex_all = ev.agg(F.count_distinct("u").alias("exact_distinct"))
-    return (per_t.join(ex_t, "event_type")
-            .unionByName(merged.crossJoin(ex_all))
-            .select("event_type", "nonempty", "hll_estimate",
-                    "exact_distinct"))
-
-
-# ---------------------------------------------------------------------------
-# aggregate (column-level) validation with tolerance: the cheapest tier of
-# the validation funnel — two hash aggregates, no row join
-# ---------------------------------------------------------------------------
-
-_AGG_TOL_SQL = """
-WITH src AS (
-  SELECT l_orderkey % 16 AS range_id, l_orderkey,
-         CAST(l_quantity AS DECIMAL(12,2)) AS qty,
-         l_extendedprice AS price
-  FROM lineitem
-),
-tgt AS (
-  SELECT range_id, l_orderkey,
-         CASE WHEN l_orderkey % 97 = 0 THEN qty + 1 ELSE qty END AS qty,
-         price
-  FROM src WHERE l_orderkey % 200 <> 7 AND range_id <> 15
-),
-sa AS (SELECT range_id, CAST(count(l_orderkey) AS BIGINT) AS cnt,
-              CAST(sum(qty) AS DECIMAL(38,2)) AS sum_qty,
-              min(price) AS min_price, max(price) AS max_price
-       FROM src GROUP BY range_id),
-ta AS (SELECT range_id, CAST(count(l_orderkey) AS BIGINT) AS cnt,
-              CAST(sum(qty) AS DECIMAL(38,2)) AS sum_qty,
-              min(price) AS min_price, max(price) AS max_price
-       FROM tgt GROUP BY range_id)
-SELECT s.range_id AS range_id,
-       CASE WHEN t.range_id IS NULL THEN 'SOURCE_ONLY'
-            WHEN abs(CAST(s.cnt AS DOUBLE) - CAST(t.cnt AS DOUBLE)) <= 0.001 * abs(CAST(s.cnt AS DOUBLE))
-                 AND abs(CAST(s.sum_qty AS DOUBLE) - CAST(t.sum_qty AS DOUBLE)) <= 0.001 * abs(CAST(s.sum_qty AS DOUBLE))
-                 AND (s.min_price = t.min_price OR abs(s.min_price - t.min_price) <= 0.001 * abs(s.min_price))
-                 AND (s.max_price = t.max_price OR abs(s.max_price - t.max_price) <= 0.001 * abs(s.max_price))
-            THEN 'MATCH' ELSE 'MISMATCH' END AS status,
-       s.cnt AS src_cnt, t.cnt AS tgt_cnt,
-       s.sum_qty AS src_sum_qty, t.sum_qty AS tgt_sum_qty
-FROM sa s LEFT JOIN ta t ON s.range_id = t.range_id
-"""
-
-
-@register("agg_tolerance_validate", _AGG_TOL_SQL)
-def q_agg_tolerance_validate(spark, sf_dir):
-    """Column-aggregate validation with relative tolerance
-    (comparator.validate_aggregates): per-range COUNT/SUM/MIN/MAX compared at
-    0.1%% tolerance — the coarse no-row-join tier. Planted drift: +1 qty on
-    ~1%% of orders stays under tolerance (MATCH), a 0.5%% row deletion trips
-    the count check (MISMATCH), and one range is missing entirely
-    (SOURCE_ONLY). Sums run over DECIMAL so parallel reduction is exact."""
-    from spanner_data_validator_spark.operators.comparator import validate_aggregates
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    src = li.select(
-        (F.col("l_orderkey") % 16).alias("range_id"),
-        F.col("l_orderkey"),
-        F.col("l_quantity").cast("decimal(12,2)").alias("qty"),
-        F.col("l_extendedprice").alias("price"))
-    tgt = (src.where((F.col("l_orderkey") % 200 != 7) & (F.col("range_id") != 15))
-              .withColumn("qty", F.when(F.col("l_orderkey") % 97 == 0,
-                                        F.col("qty") + 1).otherwise(F.col("qty"))))
-    res = validate_aggregates(
-        src, tgt, ["range_id"],
-        [("count", "l_orderkey"), ("sum", "qty"), ("min", "price"), ("max", "price")],
-        rel_tolerance=0.001)
-    return res.select(
-        "range_id", "status",
-        F.col("src_count_l_orderkey").alias("src_cnt"),
-        F.col("tgt_count_l_orderkey").alias("tgt_cnt"),
-        F.col("src_sum_qty").cast("decimal(38,2)").alias("src_sum_qty"),
-        F.col("tgt_sum_qty").cast("decimal(38,2)").alias("tgt_sum_qty"))
-
-
-# ---------------------------------------------------------------------------
-# streaming windowed heavy hitters: trending terms per tumbling window
-# ---------------------------------------------------------------------------
-
-@register("stream_trending_terms", """
-WITH ev AS (SELECT ts, coalesce(props, '') AS text FROM events),
-terms AS (
-  SELECT epoch_ms(date_trunc('hour', ts)) AS ws,
-         unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-  FROM ev
-),
-c AS (SELECT ws, term, count(*) AS n FROM terms GROUP BY 1, 2),
-r AS (SELECT ws, term, n,
-             row_number() OVER (PARTITION BY ws ORDER BY n DESC, term) AS rank
-      FROM c)
-SELECT ws AS window_start_ms, term, CAST(n AS BIGINT) AS n,
-       CAST(rank AS INT) AS rank
-FROM r WHERE rank <= 3
-""")
-def q_stream_trending_terms(spark, sf_dir):
-    """REAL streaming run: tokenize the text stream (explode AFTER the
-    watermark node, so the far-future sentinel still advances event time even
-    though its empty text yields no term rows), tumbling 1h term counts in
-    append mode, then per-window top-3 via ann.topk_per_query on the tiny
-    post-aggregation sink output. The streaming agg state is (window, term)
-    keyed — heavy-hitter queries at 10^12 turns cap state by pre-filtering
-    terms to a candidate set (e.g. a KMV/CMS-derived hot list); here the term
-    vocabulary is bounded, so the full count is the honest plan."""
-    import tempfile
-
-    from spanner_data_validator_spark.operators.ann import topk_per_query
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.coalesce(F.col("props"), F.lit("")).alias("text"))
-    work = tempfile.mkdtemp(prefix="sdv_q_trending_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit("").alias("text"))
-          .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    terms = stream.select(
-        "ts",
-        F.explode(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit(""))).alias("term"))
-    agg = (terms.groupBy(F.window("ts", "1 hour").alias("w"), "term")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(F.col("w.start").alias("ws"), "term", "n"))
-    q = (agg.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    sink = (spark.read.parquet(f"{work}/out")
-            .where(F.col("ws") < F.lit("2090-01-01").cast("timestamp")))
-    top = topk_per_query(sink, 3, key_col="ws", order_col="n",
-                         tie_col="term", two_phase=False)
-    return top.select(F.unix_millis("ws").alias("window_start_ms"),
-                      "term", F.col("n").cast("long").alias("n"),
-                      F.col("rank").cast("int").alias("rank"))
-
-
-# ---------------------------------------------------------------------------
-# context-length chunking + deterministic dataset split (training export path)
-# ---------------------------------------------------------------------------
-
-@register("chunk_documents", """
-WITH d AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-  FROM documents
-),
-s AS (
-  SELECT doc_id, toks,
-         CAST(unnest(range(0, greatest(len(toks), 1), 24)) AS INT) AS start
-  FROM d
-)
-SELECT doc_id,
-       CAST(start / 24 AS INT) AS chunk_idx,
-       start,
-       CAST(len(list_slice(toks, start + 1, start + 32)) AS INT) AS n_tokens,
-       array_to_string(list_slice(toks, start + 1, start + 32), ' ') AS chunk_text
-FROM s
-""")
-def q_chunk_documents(spark, sf_dir):
-    """Context-length chunking (packing.chunk_tokens): 32-token chunks at
-    stride 24 (8-token overlap). Tokenization runs once per doc behind a
-    Generate barrier; the chunk fan-out is pure expressions with no
-    exchange. DuckDB replays it with generate_series + list_slice."""
-    from spanner_data_validator_spark.operators.packing import chunk_tokens
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return chunk_tokens(docs, "doc_id", "text", chunk_size=32, stride=24)
-
-
-def _split_oracle() -> str:
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)", seed=7)
-    return f"""
-WITH d AS (
-  SELECT lang,
-         CASE WHEN {h} % 1000000 < 800000 THEN 'train'
-              WHEN {h} % 1000000 < 900000 THEN 'val'
-              ELSE 'test' END AS split,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
-  FROM documents
-)
-SELECT lang, split,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-FROM d GROUP BY lang, split
-"""
-
-
-@register("dataset_split_counts", _split_oracle())
-def q_dataset_split_counts(spark, sf_dir):
-    """Deterministic 80/10/10 train/val/test split (sampling.hash_split,
-    portable family so the oracle reproduces the assignment): a pure
-    per-row codegen expression — same doc lands in the same split on every
-    run, re-shard, and backfill, preventing cross-run train/test leakage.
-    One hash aggregate for the per-(lang, split) manifest counts."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.sampling import hash_split
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    split = hash_split(F.col("doc_id").cast("string"),
-                       {"train": 0.8, "val": 0.1, "test": 0.1},
-                       seed=7, hash_fn=portable_hash60)
-    toks = F.size(F.filter(F.split(F.col("text"), " "),
-                           lambda x: x != F.lit("")))
-    return (docs.select("lang", split.alias("split"), toks.alias("n_tokens"))
-                .groupBy("lang", "split")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.sum("n_tokens").cast("long").alias("total_tokens")))
-
-
-# ---------------------------------------------------------------------------
-# column profile + distribution-drift tiers (operators/profile.py)
-# ---------------------------------------------------------------------------
-
-_PROFILE_ORACLE = """
-WITH ev AS (
-  SELECT event_id, user_id, event_type, props, epoch_ms(ts) AS ts_ms FROM events
-)
-SELECT 'event_id' AS col_name, count(event_id) AS n_nonnull,
-       sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS n_null,
-       count(DISTINCT event_id) AS n_distinct,
-       CAST(min(event_id) AS VARCHAR) AS min_repr,
-       CAST(max(event_id) AS VARCHAR) AS max_repr FROM ev
-UNION ALL
-SELECT 'user_id', count(user_id),
-       sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END),
-       count(DISTINCT user_id),
-       CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR) FROM ev
-UNION ALL
-SELECT 'event_type', count(event_type),
-       sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END),
-       count(DISTINCT event_type),
-       CAST(min(event_type) AS VARCHAR), CAST(max(event_type) AS VARCHAR) FROM ev
-UNION ALL
-SELECT 'props', count(props),
-       sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END),
-       count(DISTINCT props),
-       CAST(min(props) AS VARCHAR), CAST(max(props) AS VARCHAR) FROM ev
-UNION ALL
-SELECT 'ts_ms', count(ts_ms),
-       sum(CASE WHEN ts_ms IS NULL THEN 1 ELSE 0 END),
-       count(DISTINCT ts_ms),
-       CAST(min(ts_ms) AS VARCHAR), CAST(max(ts_ms) AS VARCHAR) FROM ev
-"""
-
-
-@register("column_profile_events", _PROFILE_ORACLE)
-def q_column_profile_events(spark, sf_dir):
-    """One-pass column profile of `events` (profile.column_profile): the
-    cheapest validation tier — per-column non-null/null/distinct counts and
-    native-typed min/max rendered after the aggregate. k exact
-    count-distincts run in one scan via Spark's EXPAND; timestamps pre-cast
-    to unix millis so the rendering is engine-portable. Reference analogue:
-    generalizes the A1/J2 tally (one summary row) to per-column statistics."""
-    from spanner_data_validator_spark.operators.profile import column_profile
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "event_type", "props",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"))
-    return column_profile(ev, ["event_id", "user_id", "event_type", "props", "ts_ms"])
-
-
-@register("numeric_hist_drift", """
-WITH b AS (
-  SELECT least(greatest(CAST(floor(n_chars * 16 / 640) AS BIGINT), 0), 15) AS bin,
-         doc_id
-  FROM documents WHERE n_chars IS NOT NULL
-),
-s AS (SELECT bin, count(*) AS src_n FROM b GROUP BY bin),
-t AS (SELECT bin, count(*) AS tgt_n FROM b WHERE doc_id % 10 <> 7 GROUP BY bin)
-SELECT coalesce(s.bin, t.bin) AS bin,
-       coalesce(src_n, 0) AS src_n,
-       coalesce(tgt_n, 0) AS tgt_n,
-       abs(coalesce(src_n, 0) - coalesce(tgt_n, 0)) AS abs_diff
-FROM s FULL OUTER JOIN t ON s.bin = t.bin
-""")
-def q_numeric_hist_drift(spark, sf_dir):
-    """Distribution drift via equi-width histograms (profile.histogram_drift):
-    16 integer bins of doc n_chars, full corpus vs a deterministically
-    degraded re-ingest (doc_id % 10 = 7 dropped). Each side reduces to
-    <= 16 rows map-side before the tiny merge — the whole comparison costs
-    two aggregates regardless of corpus size, and integer bin counts are
-    bit-exact across engines (unlike approx-quantile sketches)."""
-    from spanner_data_validator_spark.operators.profile import histogram_drift
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    src = docs
-    tgt = docs.where(F.col("doc_id") % 10 != 7)
-    return histogram_drift(src, tgt, F.col("n_chars"), lo=0, hi=640, n_bins=16)
-
-
-@register("lang_token_quantiles", """
-WITH d AS (
-  SELECT lang, n_chars,
-         doc_id,
-         row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-         count(*) OVER (PARTITION BY lang) AS n
-  FROM documents
-)
-SELECT lang, p, n_chars AS q_value
-FROM d CROSS JOIN (SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
-                                  CAST(0.99 AS DOUBLE)]) AS p)
-WHERE rn = CAST(ceil(p * n) AS BIGINT)
-""")
-def q_lang_token_quantiles(spark, sf_dir):
-    """Exact discrete per-language length quantiles (profile.quantiles_by_rank):
-    the value at the ceil(p*n)-th ordered row — no interpolation, so the
-    answer is a value that exists in the data and matches any engine
-    bit-for-bit (p*n is the same IEEE double product in both; the oracle
-    pins DOUBLE literals so DuckDB doesn't compute in DECIMAL). One exchange
-    keyed by lang; the sort is within-group, never global."""
-    from spanner_data_validator_spark.operators.profile import quantiles_by_rank
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return quantiles_by_rank(docs, "lang", F.col("n_chars"),
-                             ps=[0.5, 0.9, 0.99], tiebreak=F.col("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# iterative graph algorithm: fixed-point PageRank (operators/graph.py)
-# ---------------------------------------------------------------------------
-
-def _pagerank_oracle() -> str:
-    from spanner_data_validator_spark.operators.graph import pagerank_sql
-
-    edges = """
-SELECT o_custkey AS src, 2000000 + l_suppkey AS dst
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-UNION ALL
-SELECT 2000000 + l_suppkey AS src, o_custkey AS dst
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-"""
-    pr = pagerank_sql(edges, iterations=3)
-    return "WITH " + pr.replace(
-        "SELECT node, rank FROM pr_r3",
-        "SELECT node, rank FROM pr_r3 ORDER BY rank DESC, node LIMIT 20")
-
-
-@register("pagerank_3iter", _pagerank_oracle())
-def q_pagerank_3iter(spark, sf_dir):
-    """Iterative algorithm as a DataFrame loop: 3 PageRank rounds over the
-    symmetrized customer-supplier trade multigraph (edges = lineitems),
-    top-20 hubs. Fixed-point integer ranks make every sum an exact BIGINT
-    fold — bit-identical across partitionings AND engines (naive double
-    PageRank is aggregation-order-dependent) — and each round's rank table
-    is localCheckpointed so the plan does not double per iteration (the
-    classic iterative-Spark failure; operators/graph.py). The oracle
-    unrolls the identical iterations as CTEs."""
-    from spanner_data_validator_spark.operators.graph import (
-        pagerank_fixed_point,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey")
-    trade = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        F.col("o_custkey").alias("cust"),
-        (F.lit(2_000_000) + F.col("l_suppkey")).alias("supp"))
-    edges = (trade.select(F.col("cust").alias("src"),
-                          F.col("supp").alias("dst"))
-             .unionByName(trade.select(F.col("supp").alias("src"),
-                                       F.col("cust").alias("dst"))))
-    ranks = pagerank_fixed_point(edges, iterations=3)
-    return ranks.orderBy(F.desc("rank"), F.asc("node")).limit(20)
-
-
-_HQ_LO, _HQ_HI, _HQ_BINS = 0, 2048, 64
-_HQ_WIDTH = (_HQ_HI - _HQ_LO) / _HQ_BINS
-
-
-@register("hist_token_quantiles", f"""
-WITH h AS (
-  SELECT lang,
-         CAST(least(greatest(floor((n_chars - {_HQ_LO}) * {_HQ_BINS}
-                                   / ({_HQ_HI} - {_HQ_LO})), 0),
-                    {_HQ_BINS - 1}) AS BIGINT) AS bin,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM documents WHERE n_chars IS NOT NULL
-  GROUP BY lang, bin
-),
-c AS (SELECT *, sum(cnt) OVER (PARTITION BY lang ORDER BY bin) AS cum,
-             sum(cnt) OVER (PARTITION BY lang) AS n
-      FROM h),
-e AS (SELECT c.*, p, CAST(ceil(p * n) AS BIGINT) AS target
-      FROM c CROSS JOIN (SELECT unnest([CAST(0.5 AS DOUBLE),
-                                        CAST(0.9 AS DOUBLE),
-                                        CAST(0.99 AS DOUBLE)]) AS p)),
-hit AS (SELECT lang, p, bin, cnt, cum, target FROM e
-        WHERE cum >= target AND cum - cnt < target),
-approx AS (
-  SELECT lang, p,
-         round(CAST({_HQ_LO} AS DOUBLE) + {_HQ_WIDTH!r}
-               * (CAST(bin AS DOUBLE)
-                  + CAST(target - (cum - cnt) AS DOUBLE)
-                    / CAST(cnt AS DOUBLE)), 4) AS est_value
-  FROM hit),
-d AS (
-  SELECT lang, n_chars, doc_id,
-         row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-         count(*) OVER (PARTITION BY lang) AS n
-  FROM documents),
-exact AS (
-  SELECT lang, p, n_chars AS exact_value
-  FROM d CROSS JOIN (SELECT unnest([CAST(0.5 AS DOUBLE),
-                                    CAST(0.9 AS DOUBLE),
-                                    CAST(0.99 AS DOUBLE)]) AS p)
-  WHERE rn = CAST(ceil(p * n) AS BIGINT))
-SELECT a.lang AS lang, a.p AS p, a.est_value,
-       CAST(x.exact_value AS BIGINT) AS exact_value,
-       round(a.est_value - CAST(x.exact_value AS DOUBLE), 4) AS err
-FROM approx a JOIN exact x ON a.lang = x.lang AND a.p = x.p
-""")
-def q_hist_token_quantiles(spark, sf_dir):
-    """Approximate per-language length quantiles from a 64-bin MERGEABLE
-    histogram (profile.hist_quantiles) next to the exact rank quantile —
-    the production shape at 10^12 rows: per-partition bin counts merge by
-    addition, daily histograms roll up without raw data, error bounded by
-    the 32-char bin width. The oracle replays binning, cumulative pick,
-    and interpolation bit-for-bit (shared width literal, explicit floor
-    per the CLAUDE.md cast-rounding trap)."""
-    from spanner_data_validator_spark.operators.profile import (
-        hist_quantiles,
-        quantiles_by_rank,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    approx = hist_quantiles(docs, "lang", F.col("n_chars"),
-                            lo=_HQ_LO, hi=_HQ_HI, n_bins=_HQ_BINS,
-                            ps=[0.5, 0.9, 0.99])
-    exact = quantiles_by_rank(docs, "lang", F.col("n_chars"),
-                              ps=[0.5, 0.9, 0.99], tiebreak=F.col("doc_id"))
-    return (approx.join(exact, ["lang", "p"])
-            .select("lang", "p", "est_value",
-                    F.col("q_value").cast("long").alias("exact_value"),
-                    F.round(F.col("est_value")
-                            - F.col("q_value").cast("double"), 4)
-                     .alias("err")))
-
-
-# ---------------------------------------------------------------------------
-# gap sessionization + bucketed interval (range) join (operators/sessionize.py)
-# ---------------------------------------------------------------------------
-
-@register("batch_sessionize", """
-WITH e AS (
-  SELECT user_id, epoch_ms(ts) AS ts_ms, event_id FROM events
-),
-l AS (
-  SELECT user_id, ts_ms, event_id,
-         lag(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev
-  FROM e
-),
-f AS (
-  SELECT user_id, ts_ms,
-         CASE WHEN prev IS NULL OR ts_ms - prev > 7200000 THEN 1 ELSE 0 END AS brk,
-         event_id
-  FROM l
-),
-s AS (
-  SELECT user_id, ts_ms,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM f
-)
-SELECT user_id, session_idx,
-       CAST(count(*) AS BIGINT) AS n_events,
-       min(ts_ms) AS start_ms, max(ts_ms) AS end_ms,
-       max(ts_ms) - min(ts_ms) AS duration_ms
-FROM s GROUP BY user_id, session_idx
-""")
-def q_batch_sessionize(spark, sf_dir):
-    """Batch gap sessionization (sessionize.session_stats): a session breaks
-    when the per-user gap exceeds 2h. The lag window, the running-sum
-    window, and the per-session aggregate all share ONE exchange keyed by
-    user_id (same partitioning prefix) — shuffle-once + in-partition sort,
-    integer-millisecond arithmetic throughout. The batch complement of the
-    streaming `session_windows` query."""
-    from spanner_data_validator_spark.operators.sessionize import session_stats
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-        "event_id")
-    return session_stats(ev, "user_id", F.col("ts_ms"), gap_ms=7_200_000,
-                         tiebreak=F.col("event_id"))
-
-
-@register("interval_bucket_join", """
-WITH ivl AS (
-  SELECT user_id % 50 AS grp, epoch_ms(ts) AS start_ms,
-         epoch_ms(ts) + 3600000 AS end_ms, event_id AS interval_id
-  FROM events WHERE event_id % 500 = 0
-),
-pts AS (SELECT user_id % 50 AS grp, epoch_ms(ts) AS ts_ms, event_id FROM events)
-SELECT interval_id, CAST(count(*) AS BIGINT) AS n_points
-FROM ivl JOIN pts ON ivl.grp = pts.grp
-                 AND pts.ts_ms >= ivl.start_ms AND pts.ts_ms < ivl.end_ms
-GROUP BY interval_id
-""")
-def q_interval_bucket_join(spark, sf_dir):
-    """Bucketed range join (sessionize.interval_join_bucketed): events
-    matched to 1h key-scoped intervals when the interval table is too large
-    to broadcast. Intervals explode to their covered 1h buckets (fan-out
-    <= 2 here), points map to exactly one bucket, and the match is a plain
-    shuffled equi-join on (grp, bucket) + residual range filter — the plan
-    contains no BroadcastNestedLoopJoin (plan-asserted in tests). The
-    broadcast path for SMALL range lists is `ranges.assign_range_via_join`."""
-    from spanner_data_validator_spark.operators.sessionize import (
-        interval_join_bucketed,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    base = ev.select((F.col("user_id") % 50).alias("grp"),
-                     F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-                     "event_id")
-    ivl = (base.where(F.col("event_id") % 500 == 0)
-               .select("grp", F.col("ts_ms").alias("start_ms"),
-                       (F.col("ts_ms") + 3_600_000).alias("end_ms"),
-                       F.col("event_id").alias("interval_id")))
-    pts = base.select("grp", "ts_ms", F.col("event_id").alias("point_id"))
-    joined = interval_join_bucketed(pts, ivl, ["grp"], "ts_ms",
-                                    "start_ms", "end_ms", bucket_ms=3_600_000)
-    return joined.groupBy("interval_id").agg(
-        F.count(F.lit(1)).alias("n_points"))
-
-
-# ---------------------------------------------------------------------------
-# SCD2 history build + salted skew join + collocations
-# ---------------------------------------------------------------------------
-
-@register("scd2_dimension", """
-WITH r AS (
-  SELECT user_id, epoch_ms(ts) AS ts_ms, event_type AS p, event_id AS tb
-  FROM events
-),
-l AS (
-  SELECT user_id, ts_ms, p, tb,
-         lag(p) OVER (PARTITION BY user_id ORDER BY ts_ms, tb) AS prev,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts_ms, tb) AS rn
-  FROM r
-),
-v AS (
-  SELECT user_id, ts_ms, p, tb FROM l
-  WHERE rn = 1 OR prev IS DISTINCT FROM p
-),
-o AS (
-  SELECT user_id, p, ts_ms,
-         lead(ts_ms) OVER (PARTITION BY user_id ORDER BY ts_ms, tb) AS eff_to,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts_ms, tb) AS version
-  FROM v
-)
-SELECT user_id, p AS payload, ts_ms AS effective_from_ms,
-       eff_to AS effective_to_ms, version, eff_to IS NULL AS is_current
-FROM o
-""")
-def q_scd2_dimension(spark, sf_dir):
-    """Type-2 dimension history from the event log (scd.scd2_build): one row
-    per (user, version) with effective_from/to ranges, no-op updates
-    collapsed null-safely, last-writer-wins at equal timestamps via the
-    event_id tiebreak. ONE user-keyed exchange builds the whole history —
-    the table `asof_point_in_time` then queries. Complements validate_upserts
-    (which keeps only current state)."""
-    from spanner_data_validator_spark.operators.scd import scd2_build
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-        "event_type", "event_id")
-    return scd2_build(ev, ["user_id"], F.col("ts_ms"), F.col("event_type"),
-                      F.col("event_id"))
-
-
-@register("salted_join_totals", """
-WITH dim AS (
-  SELECT DISTINCT event_type,
-         CAST(length(event_type) AS BIGINT) AS weight
-  FROM events
-)
-SELECT e.event_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(weight) AS BIGINT) AS total_weight
-FROM events e JOIN dim USING (event_type)
-GROUP BY e.event_type
-""")
-def q_salted_join_totals(spark, sf_dir):
-    """Skew-salted dimension join (skew.salted_join): the fact side scatters
-    each row into 8 hash-of-event_id salt buckets, the 5-row dim replicates
-    x8, and the hot join key ('event_type' has only 5 values — every key is
-    a hot key) spreads across 40 sub-keys instead of 5 partitions. Results
-    are identical to the plain join — asserted by the oracle, which runs
-    the unsalted equivalent."""
-    from spanner_data_validator_spark.operators.skew import salted_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "event_id")
-    dim = (ev.select("event_type").distinct()
-             .withColumn("weight", F.length("event_type").cast("long")))
-    joined = salted_join(ev, dim, ["event_type"], 8,
-                         big_salt_source=F.col("event_id"))
-    return joined.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("weight").cast("long").alias("total_weight"))
-
-
-@register("collocation_lift", """
-WITH d AS (
-  SELECT list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-  FROM documents
-),
-s AS (
-  SELECT toks, CAST(unnest(range(1, len(toks))) AS INT) AS i FROM d
-),
-bg AS (SELECT toks[i] AS w1, toks[i + 1] AS w2 FROM s),
-pair_counts AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS pair_n FROM bg GROUP BY w1, w2
-),
-uni AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS w_n
-  FROM (SELECT unnest(toks) AS w FROM d) GROUP BY w
-),
-nb AS (SELECT count(*) AS n FROM bg)
-SELECT w1, w2, pair_n, u1.w_n AS w1_n, u2.w_n AS w2_n,
-       (CAST((SELECT n FROM nb) AS DOUBLE) * CAST(pair_n AS DOUBLE))
-       / (CAST(u1.w_n AS DOUBLE) * CAST(u2.w_n AS DOUBLE)) AS lift
-FROM pair_counts
-JOIN uni u1 ON u1.w = w1
-JOIN uni u2 ON u2.w = w2
-WHERE pair_n >= 20
-""")
-def q_collocation_lift(spark, sf_dir):
-    """Bigram collocations with exact-rational PMI lift
-    (terms.bigram_collocations): tokenizes once behind a Generate barrier,
-    one corpus-sized (w1, w2) hash agg, vocabulary-sized unigram joins, and
-    a lift score built from exact integer counts with one multiply + one
-    divide per side so it is bit-identical across engines."""
-    from spanner_data_validator_spark.operators.terms import bigram_collocations
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bigram_collocations(docs, "doc_id", "text", min_count=20)
-
-
-def _kmv_group_oracle(k: int) -> str:
-    from spanner_data_validator_spark.operators.sketch import (
-        kmv_distinct_by_group_sql,
-    )
-
-    return kmv_distinct_by_group_sql(
-        "SELECT event_type, user_id FROM events", "event_type",
-        "CAST(user_id AS VARCHAR)", k)
-
-
-@register("kmv_distinct_by_type", _kmv_group_oracle(32))
-def q_kmv_distinct_by_type(spark, sf_dir):
-    """Per-group KMV distinct sketch (sketch.kmv_distinct_by_group):
-    distinct users per event_type with a k=32 sketch — phase 1 keeps a
-    k-smallest-distinct frame per (partition, group) with NO shuffle; the
-    exchange carries <= partitions*groups*k longs. Deterministic
-    cross-engine estimator (portable hash family, exact-below-k fallback),
-    the per-source cardinality dashboard a 10^12-row corpus can afford."""
-    from spanner_data_validator_spark.operators.sketch import (
-        kmv_distinct_by_group,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return kmv_distinct_by_group(
-        ev, "event_type", F.col("user_id").cast("string"), 32)
-
-
-# ---------------------------------------------------------------------------
-# layout + skew profile
-# ---------------------------------------------------------------------------
-
-from spanner_data_validator_spark.operators.layout import (  # noqa: E402
-    zorder_key,
-    zorder_sql_expr,
-)
-from spanner_data_validator_spark.operators.skew import key_skew_profile  # noqa: E402
-
-_ZORDER_ORACLE_EXPR = zorder_sql_expr(
-    ["(user_id % 256)", "EXTRACT(hour FROM ts)"], bits=8)
-
-
-@register("zorder_layout_buckets", f"""
-WITH z AS (SELECT {_ZORDER_ORACLE_EXPR} AS zkey, user_id FROM events)
-SELECT (zkey >> 6) AS z_bucket,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM z GROUP BY z_bucket
-""")
-def q_zorder_layout_buckets(spark, sf_dir):
-    """Morton (Z-order) key over two dimensions — (user_id mod 256,
-    hour-of-day) — bucketed to show the multi-dim clustering a zordered
-    write gives parquet min/max pruning. The key is bits*k pure-codegen ALU
-    ops per row (layout.zorder_key); the oracle computes the bit-identical
-    interleave via layout.zorder_sql_expr — one generator renders both
-    engines' arithmetic. At 100 TB this key feeds
-    layout.write_zordered's repartitionByRange so every interleaved
-    dimension keeps ~1/k of its pruning power."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    z = ev.select(
-        zorder_key([F.pmod(F.col("user_id"), F.lit(256)),
-                    F.hour("ts").cast("long")], bits=8).alias("zkey"),
-        "user_id")
-    return (z.groupBy(F.shiftright(F.col("zkey"), 6).alias("z_bucket"))
-             .agg(F.count(F.lit(1)).alias("n_events"),
-                  F.countDistinct("user_id").alias("n_users")))
-
-
-# Manifest-based data skipping (layout.file_manifest / skip_scan_summary):
-# the min/max pruning an Iceberg manifest or parquet footer gives a scan,
-# measured for two layouts x two predicates. Layouts: 'append' (files in
-# ingest order -> time clusters, user_id doesn't) and 'zorder' (files by
-# Morton(user, day) -> both dimensions keep ~half their pruning power).
-_MANIFEST_ZEXPR = zorder_sql_expr(
-    ["(user_id % 256)", "EXTRACT(day FROM ts)"], bits=8)
-
-def _manifest_summary_sql(man: str, stat: str, lo: int, hi: int,
-                          layout: str, pred: str) -> str:
-    scanned = f"NOT (max_{stat} < {lo} OR min_{stat} > {hi})"
-    return f"""
-SELECT '{layout}' AS layout, '{pred}' AS predicate,
-       CAST(count(*) AS BIGINT) AS files_total,
-       CAST(sum(CASE WHEN {scanned} THEN 1 ELSE 0 END) AS BIGINT) AS files_scanned,
-       CAST(sum(CASE WHEN {scanned} THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned
-FROM {man}"""
-
-
-@register("manifest_skip_ratio", f"""
-WITH base AS (
-  SELECT event_id, user_id, EXTRACT(day FROM ts) AS day,
-         {_MANIFEST_ZEXPR} AS zkey
-  FROM events),
-wf AS (SELECT *, CAST(floor(event_id / 128) AS BIGINT) AS f_append,
-              (zkey >> 7) AS f_z
-       FROM base),
-man_a AS (SELECT f_append AS file_id, CAST(count(*) AS BIGINT) AS n_rows,
-                 min(user_id) AS min_user_id, max(user_id) AS max_user_id,
-                 min(day) AS min_day, max(day) AS max_day
-          FROM wf GROUP BY f_append),
-man_z AS (SELECT f_z AS file_id, CAST(count(*) AS BIGINT) AS n_rows,
-                 min(user_id) AS min_user_id, max(user_id) AS max_user_id,
-                 min(day) AS min_day, max(day) AS max_day
-          FROM wf GROUP BY f_z),
-mt AS (SELECT CAST(sum(CASE WHEN day BETWEEN 5 AND 7 THEN 1 ELSE 0 END) AS BIGINT) AS m_day,
-              CAST(sum(CASE WHEN user_id BETWEEN 40 AND 55 THEN 1 ELSE 0 END) AS BIGINT) AS m_user
-       FROM base),
-sums AS (
-  {_manifest_summary_sql('man_a', 'day', 5, 7, 'append', 'day_5_7')}
-  UNION ALL
-  {_manifest_summary_sql('man_a', 'user_id', 40, 55, 'append', 'user_40_55')}
-  UNION ALL
-  {_manifest_summary_sql('man_z', 'day', 5, 7, 'zorder', 'day_5_7')}
-  UNION ALL
-  {_manifest_summary_sql('man_z', 'user_id', 40, 55, 'zorder', 'user_40_55')}
-)
-SELECT layout, predicate, files_total, files_scanned, rows_scanned,
-       CASE WHEN predicate = 'day_5_7' THEN m_day ELSE m_user END AS rows_matched,
-       round(1.0 - CAST(files_scanned AS DOUBLE) / CAST(files_total AS DOUBLE), 4)
-         AS skip_ratio,
-       round(CAST(rows_scanned AS DOUBLE) /
-             CAST(greatest(CASE WHEN predicate = 'day_5_7' THEN m_day ELSE m_user END, 1) AS DOUBLE), 2)
-         AS read_amp
-FROM sums, mt
-""")
-def q_manifest_skip_ratio(spark, sf_dir):
-    """File-level data skipping from a min/max manifest (layout.
-    file_manifest + skip_scan_summary — the Iceberg-manifest/parquet-footer
-    pruning rule), measured for append vs Z-order layouts under a time
-    predicate and a user predicate. Append files prune the day window hard
-    and the user window not at all; Morton(user, day) files keep both
-    dimensions prunable — the quantified version of why write_zordered
-    exists. Manifests are O(files) and each feeds two summaries, so they
-    are pinned once (multi-branch rescan trap)."""
-    from spanner_data_validator_spark.operators.layout import (
-        file_manifest,
-        skip_scan_summary,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", F.dayofmonth("ts").alias("day"),
-        zorder_key([F.pmod(F.col("user_id"), F.lit(256)),
-                    F.dayofmonth("ts").cast("long")], bits=8).alias("zkey"))
-    man_a = file_manifest(
-        ev, F.floor(F.col("event_id") / F.lit(128)).cast("long"),
-        ["user_id", "day"]).localCheckpoint()
-    man_z = file_manifest(
-        ev, F.shiftright(F.col("zkey"), 7).cast("long"),
-        ["user_id", "day"]).localCheckpoint()
-
-    def lay(layout, man, pred, stat, lo, hi):
-        return skip_scan_summary(man, stat, lo, hi).select(
-            F.lit(layout).alias("layout"), F.lit(pred).alias("predicate"),
-            "files_total", "files_scanned", "rows_scanned")
-
-    sums = (lay("append", man_a, "day_5_7", "day", 5, 7)
-            .unionByName(lay("append", man_a, "user_40_55", "user_id", 40, 55))
-            .unionByName(lay("zorder", man_z, "day_5_7", "day", 5, 7))
-            .unionByName(lay("zorder", man_z, "user_40_55", "user_id", 40, 55)))
-    mt = ev.agg(
-        F.sum(F.col("day").between(5, 7).cast("long")).alias("m_day"),
-        F.sum(F.col("user_id").between(40, 55).cast("long")).alias("m_user"))
-    matched = F.when(F.col("predicate") == "day_5_7",
-                     F.col("m_day")).otherwise(F.col("m_user"))
-    return sums.crossJoin(mt).select(
-        "layout", "predicate", "files_total", "files_scanned", "rows_scanned",
-        matched.alias("rows_matched"),
-        F.round(F.lit(1.0) - F.col("files_scanned").cast("double")
-                / F.col("files_total").cast("double"), 4).alias("skip_ratio"),
-        F.round(F.col("rows_scanned").cast("double")
-                / F.greatest(matched, F.lit(1)).cast("double"), 2)
-         .alias("read_amp"))
-
-
-@register("join_skew_profile", """
-WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-           FROM events GROUP BY user_id),
-s AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total,
-             CAST(count(*) AS DOUBLE) AS n_keys FROM c)
-SELECT user_id, cnt,
-       CAST(cnt AS DOUBLE) / total AS share,
-       CAST(cnt AS DOUBLE) * n_keys / total AS skew_factor
-FROM c, s
-ORDER BY cnt DESC, user_id ASC
-LIMIT 10
-""")
-def q_join_skew_profile(spark, sf_dir):
-    """Heavy-hitter key profile (skew.key_skew_profile): the pre-flight
-    check before choosing broadcast/salt/plain-hash join strategy. One
-    keyed aggregation + a broadcast 1-row global stat + TakeOrderedAndProject
-    top-N — never a global sort, never a second scan."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return key_skew_profile(ev, "user_id", top_n=10)
-
-
-# ---------------------------------------------------------------------------
-# structural integrity + declarative constraint suite
-# ---------------------------------------------------------------------------
-
-from spanner_data_validator_spark.operators import constraints as C  # noqa: E402
-from spanner_data_validator_spark.operators.integrity import (  # noqa: E402
-    duplicate_examples,
-    orphan_check,
-    uniqueness_check,
-)
-
-
-@register("ri_orphan_check", """
-WITH ck AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n
-            FROM lineitem GROUP BY l_orderkey),
-pk AS (SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 7 <> 3),
-o AS (SELECT ck.* FROM ck LEFT JOIN pk ON ck.l_orderkey = pk.o_orderkey
-      WHERE pk.o_orderkey IS NULL)
-SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS n_orphan_rows,
-       CAST(count(*) AS BIGINT) AS n_orphan_keys,
-       min(CAST(l_orderkey AS VARCHAR)) AS min_orphan_key,
-       max(CAST(l_orderkey AS VARCHAR)) AS max_orphan_key
-FROM o
-""")
-def q_ri_orphan_check(spark, sf_dir):
-    """Referential-integrity check (integrity.orphan_check): lineitems whose
-    order vanished — parent side derives 'orders with o_orderkey % 7 = 3
-    lost in migration'. The child collapses to (key, count) BEFORE the
-    anti-join, so the exchange carries distinct keys, not 10^12 rows."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-              .withColumnRenamed("l_orderkey", "orderkey")
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-              .where(F.col("o_orderkey") % 7 != 3) \
-              .withColumnRenamed("o_orderkey", "orderkey")
-    return orphan_check(li, od, ["orderkey"])
-
-
-@register("pk_uniqueness_check", """
-WITH d AS (SELECT doc_id FROM documents
-           UNION ALL SELECT doc_id FROM documents WHERE doc_id % 97 = 5),
-k AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS cnt FROM d GROUP BY doc_id)
-SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_keys,
-       CAST(sum(cnt) - count(*) AS BIGINT) AS n_dup_rows,
-       CAST(max(cnt) AS BIGINT) AS max_multiplicity
-FROM k
-""")
-def q_pk_uniqueness_check(spark, sf_dir):
-    """Candidate-key multiplicity profile (integrity.uniqueness_check) over
-    a corpus with planted duplicate doc_ids (every doc_id % 97 = 5 doubled).
-    One groupBy + one scalar aggregate — the pre-migration 'is the PK still
-    a PK' gate."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    planted = docs.unionByName(docs.where(F.col("doc_id") % 97 == 5))
-    return uniqueness_check(planted, ["doc_id"])
-
-
-@register("pk_duplicate_examples", """
-WITH d AS (SELECT doc_id FROM documents
-           UNION ALL SELECT doc_id FROM documents WHERE doc_id % 97 = 5),
-k AS (SELECT CAST(doc_id AS VARCHAR) AS key,
-             CAST(count(*) AS BIGINT) AS multiplicity
-      FROM d GROUP BY doc_id)
-SELECT key, multiplicity FROM k WHERE multiplicity > 1
-ORDER BY multiplicity DESC, key ASC LIMIT 10
-""")
-def q_pk_duplicate_examples(spark, sf_dir):
-    """Worst-offender keys for the uniqueness violation above —
-    TakeOrderedAndProject top-N, deterministic (count desc, key asc)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    planted = docs.unionByName(docs.where(F.col("doc_id") % 97 == 5))
-    return duplicate_examples(planted, ["doc_id"], top_n=10)
-
-
-_CONSTRAINT_ORACLE = """
-WITH s AS (SELECT
-  CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v0,
-  CAST(sum(CASE WHEN (NOT (value BETWEEN 0 AND 250)) OR value IS NULL
-           THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-  CAST(sum(CASE WHEN event_type NOT IN ('click','view','purchase','signup')
-                  OR event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-  CAST(sum(CASE WHEN NOT regexp_matches(props, '^\\{"k": [0-9]+\\}$')
-                  OR props IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-  CAST(count(*) - count(DISTINCT event_id) AS BIGINT) AS v4
-FROM events)
-SELECT 0 AS ord, 'not_null(user_id)' AS rule, n_rows,
-       v0 AS n_violations, v0 = 0 AS passed FROM s
-UNION ALL SELECT 1, 'in_range(value,0,250)', n_rows, v1, v1 = 0 FROM s
-UNION ALL SELECT 2, 'accepted_values(event_type)', n_rows, v2, v2 = 0 FROM s
-UNION ALL SELECT 3, 'matches_regex(props)', n_rows, v3, v3 = 0 FROM s
-UNION ALL SELECT 4, 'unique(event_id)', n_rows, v4, v4 = 0 FROM s
-"""
-
-
-@register("constraint_suite_events", _CONSTRAINT_ORACLE)
-def q_constraint_suite_events(spark, sf_dir):
-    """Declarative constraint suite (operators/constraints): five invariant
-    rules over events compiled into ONE aggregate scan (unique() rides the
-    same pass via EXPAND count-distinct) — the Deequ-style zero-join
-    validation tier."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    rules = [
-        C.not_null("user_id"),
-        C.in_range("value", 0, 250),
-        C.accepted_values("event_type",
-                          ["click", "view", "purchase", "signup"]),
-        C.matches_regex("props", '^\\{"k": [0-9]+\\}$'),
-        C.unique("event_id"),
-    ]
-    return C.check_constraints(ev, rules)
-
-
-@register("jsonl_ingest_parity", """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       min(value) AS min_value,
-       max(value) AS max_value,
-       CAST(sum(event_id) AS BIGINT) AS sum_event_id,
-       CAST(7 AS BIGINT) AS n_quarantined
-FROM events
-""")
-def q_jsonl_ingest_parity(spark, sf_dir):
-    """File-drop ingestion round-trip (sources/files): events re-serialized
-    as JSON-lines plus 7 planted garbage lines, strict-read back with the
-    declared schema, quarantine split, and aggregate parity proved against
-    the original table. Exercises schema-enforced parse, corrupt-record
-    capture, and the one-scan good/bad split — the failure mode PERMISSIVE
-    defaults hide. Doubles survive exactly (Spark writes shortest-roundtrip
-    JSON numbers); sums stay integer for cross-engine exactness."""
-    import os
-    import tempfile
-
-    from spanner_data_validator_spark.sources.files import (
-        read_jsonl_strict,
-        split_quarantine,
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_jsonl_")
-    jdir = os.path.join(work, "events_jsonl")
-    ev.write.mode("overwrite").json(jdir)
-    with open(os.path.join(jdir, "zz_bad_lines.json"), "w") as f:
-        for i in range(7):
-            f.write(f"<<not json #{i}>>\n")
-    raw = read_jsonl_strict(spark, jdir, ev.schema)
-    good, bad = split_quarantine(raw)
-    return (good.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                     F.countDistinct("user_id").cast("long").alias("n_users"),
-                     F.min("value").alias("min_value"),
-                     F.max("value").alias("max_value"),
-                     F.sum("event_id").cast("long").alias("sum_event_id"))
-            .crossJoin(bad.agg(F.count(F.lit(1)).cast("long")
-                               .alias("n_quarantined"))))
-
-
-@register("stream_observed_quality", """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_error,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
-       CAST(max(event_id) AS BIGINT) AS max_event_id,
-       CAST(4 AS BIGINT) AS n_batches_with_data,
-       CAST(count(*) AS BIGINT) AS sink_rows
-FROM events
-""")
-def q_stream_observed_quality(spark, sf_dir):
-    """Dataset.observe on a REAL stream (streaming/observe.py): quality
-    counters (row count, error-event count, integer value cents, max id)
-    ride the micro-batches of an events file-stream on the SAME pass that
-    feeds the append sink — no second aggregation, no state, no extra
-    shuffle. Per-batch rows land on progress events; sums-of-sums and
-    maxes-of-maxes are micro-batch-boundary-invariant, which is what the
-    oracle recomputes. The sink row count proves the observed stream and
-    the delivered stream are the same pass."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.observe import fold_observed
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_observe_")
-    ev.repartition(4).write.parquet(f"{work}/in")
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{work}/in"))
-    obs = stream.observe(
-        "quality",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((F.col("event_type") == "error").cast("long")).alias("n_error"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        F.max("event_id").alias("max_event_id"))
-    q = (obs.select("event_id", "event_type")
-         .writeStream.format("parquet").option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    m = fold_observed(q, "quality",
-                      sum_cols=["n_rows", "n_error", "value_cents"],
-                      max_cols=["max_event_id"])
-    sink_rows = spark.read.parquet(f"{work}/out").count()
-    return spark.createDataFrame(
-        [(m["n_rows"], m["n_error"], m["value_cents"], m["max_event_id"],
-          m["n_batches_with_data"], sink_rows)],
-        "n_rows long, n_error long, value_cents long, max_event_id long, "
-        "n_batches_with_data long, sink_rows long")
-
-
-@register("header_detail_reconcile", """
-WITH d AS (SELECT l_orderkey AS orderkey,
-                  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                       AS BIGINT) AS detail_cents
-           FROM lineitem GROUP BY l_orderkey),
-h AS (SELECT o_orderkey AS orderkey,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS head_cents
-      FROM orders),
-j AS (SELECT h.head_cents, d.detail_cents,
-             abs(h.head_cents - d.detail_cents) AS drift
-      FROM h LEFT JOIN d USING (orderkey))
-SELECT CAST(count(*) AS BIGINT) AS n_headers,
-       CAST(sum(CASE WHEN drift <= 100 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_matched,
-       CAST(sum(CASE WHEN drift > 100 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_drifted,
-       CAST(sum(CASE WHEN detail_cents IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_missing_detail,
-       CAST(coalesce(max(drift), 0) AS BIGINT) AS max_abs_drift
-FROM j
-""")
-def q_header_detail_reconcile(spark, sf_dir):
-    """Header-vs-detail reconciliation (integrity.reconcile_header_detail):
-    each order's stored o_totalprice against the sum of its lineitems, in
-    exact integer cents (round(x*100) is the same IEEE multiply + half-up
-    round in both engines; integer sums are reduction-order-independent
-    where double sums are not). Child aggregates BEFORE the join, so the
-    join carries one row per order, not per lineitem."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-                       .withColumnRenamed("o_orderkey", "orderkey")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-                   .withColumnRenamed("l_orderkey", "orderkey")
-    from spanner_data_validator_spark.operators.integrity import (
-        reconcile_header_detail,
-    )
-    return reconcile_header_detail(
-        orders, li, ["orderkey"],
-        header_total=F.round(F.col("o_totalprice") * 100),
-        detail_amount=F.round(F.col("l_extendedprice") * 100).cast("long"),
-        tolerance=100)
-
-
-@register("join_cardinality_estimate", """
-WITH lc AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cl
-            FROM events GROUP BY user_id),
-rc AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cr
-       FROM events WHERE event_type <> 'error' GROUP BY user_id),
-p AS (SELECT cl * cr AS rows_per_key FROM lc JOIN rc USING (user_id))
-SELECT CAST(coalesce(sum(rows_per_key), 0) AS BIGINT) AS est_rows,
-       CAST(count(*) AS BIGINT) AS n_shared_keys,
-       CAST(coalesce(max(rows_per_key), 0) AS BIGINT) AS max_key_rows
-FROM p
-""")
-def q_join_cardinality_estimate(spark, sf_dir):
-    """Pre-flight join-explosion check (skew.join_cardinality): the EXACT
-    row count of events ⋈ events-minus-errors on user_id, computed from
-    (key, count) tables only — never materializing the join. The
-    companion to join_skew_profile: run both before an unfamiliar join at
-    100 TB."""
-    from spanner_data_validator_spark.operators.skew import join_cardinality
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return join_cardinality(
-        ev, ev.where(F.col("event_type") != "error"), ["user_id"])
-
-
-@register("partition_completeness", """
-WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events
-           WHERE EXTRACT(day FROM ts) % 5 <> 0),
-b AS (SELECT min(d) AS lo, max(d) AS hi FROM d),
-e AS (SELECT CAST(unnest(generate_series(CAST(lo AS TIMESTAMP),
-                                         CAST(hi AS TIMESTAMP),
-                                         INTERVAL 1 DAY)) AS DATE) AS d
-      FROM b),
-m AS (SELECT e.d FROM e LEFT JOIN d USING (d) WHERE d.d IS NULL)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_expected_days,
-       (SELECT CAST(count(*) AS BIGINT) FROM d) AS n_actual_days,
-       CAST(count(*) AS BIGINT) AS n_missing_days,
-       min(CAST(m.d AS VARCHAR)) AS min_missing_day,
-       max(CAST(m.d AS VARCHAR)) AS max_missing_day
-FROM m
-""")
-def q_partition_completeness(spark, sf_dir):
-    """Calendar-gap detection (integrity.partition_completeness) over an
-    events feed with planted missing days (day-of-month % 5 = 0 dropped):
-    expected days generated JVM-side from the observed bounds, anti-joined
-    against actual distinct days. The input collapses to distinct days
-    immediately, so everything downstream runs over ~days rows."""
-    from spanner_data_validator_spark.operators.integrity import (
-        partition_completeness,
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-             .where(F.dayofmonth("ts") % 5 != 0)
-    return partition_completeness(ev, F.col("ts"))
-
-
-@register("type_fit_audit", """
-WITH s AS (SELECT
-  CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(sum(CASE WHEN length(text) > 2000 THEN 1 ELSE 0 END) AS BIGINT) AS v0,
-  CAST(sum(CASE WHEN doc_id < -2147483648 OR doc_id > 2147483647
-           THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-  CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v2
-FROM documents)
-SELECT 0 AS ord, 'max_length(text,2000)' AS rule, n_rows,
-       v0 AS n_violations, v0 = 0 AS passed FROM s
-UNION ALL SELECT 1, 'fits_int32(doc_id)', n_rows, v1, v1 = 0 FROM s
-UNION ALL SELECT 2, 'not_null(lang)', n_rows, v2, v2 = 0 FROM s
-""")
-def q_type_fit_audit(spark, sf_dir):
-    """Pre-migration type-fit audit: will the corpus survive the target
-    DDL (VARCHAR(2000), INT32 key, NOT NULL lang)? Same one-scan constraint
-    compiler as constraint_suite_events, with the width/overflow rules a
-    schema migration actually needs."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rules = [
-        C.max_length("text", 2000),
-        C.fits_int32("doc_id"),
-        C.not_null("lang"),
-    ]
-    return C.check_constraints(docs, rules)
-
-
-# ---------------------------------------------------------------------------
-# behavioral analytics: funnel, retention, EWMA
-# ---------------------------------------------------------------------------
-
-from spanner_data_validator_spark.operators.funnel import (  # noqa: E402
-    funnel_stages,
-    retention_cohorts,
-)
-from spanner_data_validator_spark.operators.timeseries import (  # noqa: E402
-    ewma_by_group,
-)
-
-
-@register("funnel_view_click_purchase", """
-WITH s0 AS (SELECT user_id, min(ts) AS t FROM events
-            WHERE event_type = 'view' GROUP BY user_id),
-s1 AS (SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s0 USING (user_id)
-       WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY e.user_id),
-s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s1 USING (user_id)
-       WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY e.user_id)
-SELECT 0 AS stage_idx, 'view' AS stage,
-       (SELECT CAST(count(*) AS BIGINT) FROM s0) AS n_users
-UNION ALL SELECT 1, 'click', (SELECT CAST(count(*) AS BIGINT) FROM s1)
-UNION ALL SELECT 2, 'purchase', (SELECT CAST(count(*) AS BIGINT) FROM s2)
-""")
-def q_funnel_view_click_purchase(spark, sf_dir):
-    """Strictly-ordered conversion funnel (funnel.funnel_stages): users
-    whose click follows their first view, whose purchase follows that
-    click. k stages = k keyed aggs + k-1 user-key joins; every exchange
-    carries one row per user, never per event."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return funnel_stages(ev, user="user_id", ts="ts",
-                         stage_col="event_type",
-                         stages=["view", "click", "purchase"])
-
-
-@register("retention_cohorts_weekly", """
-WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-           FROM events GROUP BY user_id)
-SELECT CAST(cohort_day AS VARCHAR) AS cohort_day,
-       CAST(date_diff('day', cohort_day, CAST(e.ts AS DATE)) AS INTEGER)
-         AS day_offset,
-       CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
-FROM events e JOIN f USING (user_id)
-WHERE date_diff('day', cohort_day, CAST(e.ts AS DATE)) <= 7
-GROUP BY cohort_day, day_offset
-""")
-def q_retention_cohorts_weekly(spark, sf_dir):
-    """First-seen-day cohort retention (funnel.retention_cohorts), offsets
-    0..7. Cohort table is one aggregation; the offset join is a user-key
-    join; distinct-user counts per (cohort, offset) cell."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = retention_cohorts(ev, user="user_id", ts="ts", max_offset_days=7)
-    return out.withColumn("cohort_day", F.col("cohort_day").cast("string"))
-
-
-@register("ewma_daily_events", """
-WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d,
-                      CAST(count(*) AS DOUBLE) AS cnt
-               FROM events GROUP BY event_type, CAST(ts AS DATE)),
-s AS (SELECT event_type, list(cnt ORDER BY d) AS l,
-             CAST(count(*) AS INTEGER) AS n_days,
-             CAST(max(d) AS VARCHAR) AS last_day
-      FROM daily GROUP BY event_type)
-SELECT event_type, n_days, last_day,
-       list_reduce(l, (acc, x) -> acc * CAST(0.5 AS DOUBLE)
-                                  + x * CAST(0.5 AS DOUBLE)) AS ewma
-FROM s
-""")
-def q_ewma_daily_events(spark, sf_dir):
-    """Per-type EWMA of daily event counts (timeseries.ewma_by_group):
-    sorted-fold smoothing that is bit-reproducible across runs,
-    partitionings, and engines — alpha 0.5 keeps every multiply exact in
-    IEEE double, so the oracle comparison is exact equality, not
-    tolerance."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ewma_by_group(ev, "event_type", "ts", alpha=0.5)
-
-
-@register("stream_constraint_monitor", """
-WITH s AS (SELECT
-  CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v0,
-  CAST(sum(CASE WHEN (NOT (value BETWEEN 0 AND 250)) OR value IS NULL
-           THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-  CAST(sum(CASE WHEN length(props) > 9 THEN 1 ELSE 0 END) AS BIGINT) AS v2
-FROM events)
-SELECT 0 AS ord, 'not_null(user_id)' AS rule, n_rows,
-       v0 AS n_violations, v0 = 0 AS passed FROM s
-UNION ALL SELECT 1, 'in_range(value,0,250)', n_rows, v1, v1 = 0 FROM s
-UNION ALL SELECT 2, 'max_length(props,9)', n_rows, v2, v2 = 0 FROM s
-""")
-def q_stream_constraint_monitor(spark, sf_dir):
-    """REAL streaming run of the constraint suite: events replayed as a
-    4-file stream (maxFilesPerTrigger=1 -> 4 micro-batches), each batch
-    evaluated by streaming/constraint_monitor.ConstraintMonitor into the
-    batch-fenced exactly-once sink, totals folded back to the whole-stream
-    answer — which must equal the one-shot batch suite the oracle computes.
-    Stateless streaming: no watermark, per-batch cost is one aggregate
-    scan, sink holds batches x rules tiny rows."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.constraint_monitor import (
-        ConstraintMonitor,
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_cmon_")
-    ev.repartition(4).write.parquet(f"{work}/in")
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{work}/in"))
-    mon = ConstraintMonitor(f"{work}/out", [
-        C.not_null("user_id"),
-        C.in_range("value", 0, 250),
-        C.max_length("props", 9),
-    ])
-    q = (stream.writeStream.foreachBatch(mon)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return mon.totals(spark)
-
-
-@register("linenumber_contiguity", """
-WITH li AS (SELECT l_orderkey, l_linenumber FROM lineitem
-            WHERE NOT (l_linenumber = 2 AND l_orderkey % 13 = 4)),
-per AS (SELECT l_orderkey,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(count(DISTINCT l_linenumber) AS BIGINT) AS nd,
-               CAST(min(l_linenumber) AS BIGINT) AS mn,
-               CAST(max(l_linenumber) AS BIGINT) AS mx
-        FROM li GROUP BY l_orderkey)
-SELECT CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(CASE WHEN n = nd AND mx - mn + 1 = nd AND mn = 1
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_clean,
-       CAST(sum(CASE WHEN n <> nd THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_with_dups,
-       CAST(sum(CASE WHEN mx - mn + 1 <> nd THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_with_gaps,
-       CAST(sum(CASE WHEN mn <> 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_bad_start
-FROM per
-""")
-def q_linenumber_contiguity(spark, sf_dir):
-    """Sequence-number audit (integrity.sequence_contiguity): every order's
-    l_linenumber must be exactly 1..n; a planted defect drops line 2 from
-    every 13th order. Gaps/dups/start fall out of four scalars per group —
-    no sort anywhere; the exchange carries (orderkey, 4 longs)."""
-    from spanner_data_validator_spark.operators.integrity import (
-        sequence_contiguity,
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-             .where(~((F.col("l_linenumber") == 2)
-                      & (F.col("l_orderkey") % 13 == 4)))
-    return sequence_contiguity(li, "l_orderkey", "l_linenumber", start_at=1)
-
-
-@register("embedding_quantize_stats", """
-WITH q AS (
-  SELECT label,
-         CASE WHEN list_max(list_transform(embedding,
-                                           y -> abs(CAST(y AS DOUBLE)))) > 0
-              THEN CAST(127.0 AS DOUBLE)
-                   / list_max(list_transform(embedding,
-                                             y -> abs(CAST(y AS DOUBLE))))
-              ELSE CAST(0.0 AS DOUBLE) END AS scale,
-         embedding
-  FROM embeddings),
-qq AS (
-  SELECT label, scale,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * scale)
-                                  AS BIGINT)) AS qv
-  FROM q)
-SELECT label,
-       CAST(count(*) AS BIGINT) AS n_vecs,
-       CAST(sum(list_sum(qv)) AS BIGINT) AS checksum,
-       CAST(sum(len(list_filter(qv, e -> abs(e) = 127))) AS BIGINT)
-         AS n_saturated,
-       min(scale) AS min_scale,
-       max(scale) AS max_scale
-FROM qq GROUP BY label
-""")
-def q_embedding_quantize_stats(spark, sf_dir):
-    """Symmetric int8 quantization audit (operators/quantize): per-label
-    vector counts, EXACT integer checksum over all quantized values (the
-    cross-engine bit-equality witness — scale divide + element multiply +
-    half-away-from-zero round are IEEE-identical in both engines),
-    saturation counts, scale range. The 4x shrink that fits a 10^9-vector
-    ANN index in executor memory; all pure codegen, scale evaluated once
-    per row behind a Generate barrier."""
-    from spanner_data_validator_spark.operators.quantize import quantize_stats
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return quantize_stats(emb, "embedding", "label")
-
-
-@register("pseudonymize_users", """
-WITH p AS (SELECT substring(sha256('sdv-demo-secret|' ||
-                            CAST(user_id AS VARCHAR)), 1, 16) AS user_token,
-                  event_type
-           FROM events)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_token) AS BIGINT) AS n_tokens,
-       min(user_token) AS min_token
-FROM p GROUP BY event_type
-""")
-def q_pseudonymize_users(spark, sf_dir):
-    """Deterministic keyed pseudonymization (quality.pseudonymize): user_id
-    replaced by a SHA-256(secret|value) token — pure codegen, identical hex
-    in any engine, so the pseudonymized export is itself oracle-comparable.
-    Per-type distinct-token counts must equal distinct-user counts (the
-    join-survival property)."""
-    from spanner_data_validator_spark.operators.quality import pseudonymize
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-             .select("user_id", "event_type")
-    p = pseudonymize(ev, ["user_id"], "sdv-demo-secret", token_len=16)
-    return (p.groupBy("event_type")
-             .agg(F.count(F.lit(1)).alias("n_events"),
-                  F.countDistinct("user_id").alias("n_tokens"),
-                  F.min("user_id").alias("min_token")))
-
-
-@register("udaf_value_dispersion", """
-WITH med AS (SELECT event_type, median(value) AS median_value
-             FROM events GROUP BY event_type),
-dev AS (SELECT e.event_type, abs(e.value - m.median_value) AS ad
-        FROM events e JOIN med m USING (event_type))
-SELECT m.event_type,
-       (SELECT CAST(count(*) AS BIGINT) FROM events e2
-        WHERE e2.event_type = m.event_type) AS n,
-       m.median_value,
-       (SELECT median(d.ad) FROM dev d
-        WHERE d.event_type = m.event_type) AS mad_value
-FROM med m
-""")
-def q_udaf_value_dispersion(spark, sf_dir):
-    """UDAF surface (functions/udx): exact per-type median and median
-    absolute deviation via pandas GROUPED_AGG UDFs — the robust dispersion
-    pair Spark has no exact built-in for. Groups here are the 5 event
-    types, so each Arrow batch is bounded; for high-cardinality groups use
-    profile.quantiles_by_rank (pure shuffle arithmetic) instead."""
-    from spanner_data_validator_spark.functions.udx import (
-        grouped_count,
-        grouped_mad,
-        grouped_median,
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # count also via GROUPED_AGG: Spark refuses to mix pandas and plain
-    # aggregates in one agg() (INVALID_PANDAS_UDF_PLACEMENT)
-    return (ev.groupBy("event_type")
-            .agg(grouped_count(F.col("value")).alias("n"),
-                 grouped_median(F.col("value")).alias("median_value"),
-                 grouped_mad(F.col("value")).alias("mad_value")))
-
-
-@register("udtf_char_chunks", """
-SELECT lang,
-       CAST(sum((length(text) + 39) // 40) AS BIGINT) AS n_chunks,
-       CAST(sum(length(text)) AS BIGINT) AS total_chunk_len
-FROM documents WHERE text IS NOT NULL AND length(text) > 0
-GROUP BY lang
-""")
-def q_udtf_char_chunks(spark, sf_dir):
-    """UDTF surface (functions/udx.CharChunks): one row in, N rows out via
-    a LATERAL table function — fixed-width character chunks whose exact
-    integer geometry the oracle recomputes arithmetically
-    (count = ceil(len/40), sum of chunk lengths = len). The hot-path
-    equivalent is packing.chunk_tokens (pure expressions); this covers the
-    extension point."""
-    from spanner_data_validator_spark.functions.udx import char_chunks_udtf
-    # filter empty/NULL docs on BOTH sides: the comma-LATERAL join is
-    # inner, so a lang whose docs are all empty would vanish from the Spark
-    # result while the oracle's GROUP BY kept it
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-                .where(F.col("text").isNotNull() & (F.length("text") > 0))
-    docs.createOrReplaceTempView("sdv_udtf_docs")
-    spark.udtf.register("sdv_char_chunks", char_chunks_udtf())
-    return spark.sql("""
-        SELECT d.lang,
-               CAST(count(*) AS BIGINT) AS n_chunks,
-               CAST(sum(c.chunk_len) AS BIGINT) AS total_chunk_len
-        FROM sdv_udtf_docs d, LATERAL sdv_char_chunks(d.text, 40) c
-        GROUP BY d.lang
-    """)
-
-
-@register("stream_conflicts_to_jdbc", _CLS_CTE + """
-SELECT status, CAST(count(*) AS BIGINT) AS n
-FROM cls WHERE status <> 'MATCH' GROUP BY status
-""")
-def q_stream_conflicts_to_jdbc(spark, sf_dir):
-    """The conflicting-record sink (SURVEY §2 S8) against a LIVE database:
-    non-MATCH classifications replayed as a 4-file stream land in an
-    embedded-Derby table through streaming/jdbc_sink.JdbcExactlyOnceSink
-    (batch-fenced: fence row inserted last, torn writes invisible and
-    cleaned on replay), then the committed rows are read back and tallied —
-    which must equal the batch classification the oracle computes. The
-    portable stand-in for the reference's BigQuery conflict writers."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.jdbc_sink import (
-        JdbcExactlyOnceSink,
-    )
-    work = tempfile.mkdtemp(prefix="sdv_q_jdbc_sink_")
-    url = f"jdbc:derby:{work}/db;create=true"
-    jvm = spark.sparkContext._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(url)
-    st = conn.createStatement()
-    st.execute("CREATE TABLE conflicts "
-               "(k BIGINT, status VARCHAR(16), batch_id BIGINT)")
-    st.close()
-    conn.close()
-
-    conflicts = (classified_events(spark, sf_dir)
-                 .where(F.col("status") != MATCH)
-                 .select(F.col("key").alias("k"), "status"))
-    conflicts.repartition(4).write.parquet(f"{work}/in")
-    sink = JdbcExactlyOnceSink(url, "conflicts")
-    stream = (spark.readStream.schema(conflicts.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    tally = (sink.read_committed(spark)
-             .groupBy("status").agg(F.count(F.lit(1)).alias("n")))
-    # materialize, then shut this Derby DB down — embedded Derby keeps every
-    # booted database resident in the driver JVM until exit, and bench runs
-    # this query repeatedly
-    rows = tally.collect()
-    from spanner_data_validator_spark.streaming.jdbc_sink import (
-        shutdown_embedded_derby,
-    )
-    shutdown_embedded_derby(spark, url)
-    return spark.createDataFrame(rows, tally.schema)
-
-
-# ---------------------------------------------------------------------------
-# Python DataSource API (sources/pyds.py): pluggable batch + incremental-scan
-# streaming source whose rows are a pure function of the row id — DuckDB
-# recomputes the corpus from scratch, so both queries are fully hash-matched.
-# ---------------------------------------------------------------------------
-
-_PYDS_CONVS, _PYDS_TURNS = 400, 25  # 10,000 rows; ~2 windows/conversation
-
-from spanner_data_validator_spark.functions.hashing import (  # noqa: E402
-    portable_hash60_sql,
-)
-from spanner_data_validator_spark.sources import pyds as _pyds  # noqa: E402
-
-
-@register("pyds_batch_scan", f"""
-WITH {_pyds.rows_oracle_sql(_PYDS_CONVS, _PYDS_TURNS)}
-SELECT role,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-       bit_xor({portable_hash60_sql("CAST(i AS VARCHAR)", 7)}) AS fp_xor,
-       CAST(min(({_pyds.BASE_EPOCH_S} + off_s) * 1000) AS BIGINT) AS min_ts_ms,
-       CAST(max(({_pyds.BASE_EPOCH_S} + off_s) * 1000) AS BIGINT) AS max_ts_ms
-FROM pyds_rows GROUP BY role
-""")
-def q_pyds_batch_scan(spark, sf_dir):
-    """Batch scan through the Python DataSource API (sources/pyds.py): the
-    planner splits the corpus into offset-range partitions, each executor
-    generates its slice as Arrow batches. Per-role checksum aggregate — the
-    xor-folded portable hash proves every generated row (id, order-free)
-    against DuckDB's from-scratch recomputation of the row law."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-
-    _pyds.register(spark)
-    df = (spark.read.format(_pyds.SOURCE_NAME)
-          .option("convs", _PYDS_CONVS).option("turns", _PYDS_TURNS)
-          .option("parts", 8).load())
-    return (df.groupBy("role")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.countDistinct("conv_id").alias("n_convs"),
-                 F.bit_xor(portable_hash60(F.col("i").cast("string"), 7))
-                  .alias("fp_xor"),
-                 F.min(F.unix_millis("ts")).alias("min_ts_ms"),
-                 F.max(F.unix_millis("ts")).alias("max_ts_ms")))
-
-
-@register("pyds_stream_incremental", f"""
-WITH {_pyds.rows_oracle_sql(_PYDS_CONVS, _PYDS_TURNS)}
-SELECT CAST(({_pyds.BASE_EPOCH_S} + off_s // 3600 * 3600) * 1000 AS BIGINT)
-         AS window_start_ms,
-       role, CAST(count(*) AS BIGINT) AS n
-FROM pyds_rows GROUP BY 1, 2
-""")
-def q_pyds_stream_incremental(spark, sf_dir):
-    """REAL micro-batch streaming run over the Python DataSource's
-    incremental-scan reader (offset admission of 3,400 ids per trigger →
-    4 micro-batches): watermarked tumbling 1 h per-role counts into an
-    append parquet sink. The source's far-future sentinel row flushes the
-    final windows (its own window can never close, so it never reaches the
-    sink); Trigger.AvailableNow admits only the FIRST offset poll on a
-    Python streaming source, so the run uses processingTime + drain_stream
-    (see sources/pyds.py). Every closed window is hash-matched against the
-    oracle's arithmetic recomputation."""
-    import tempfile
-
-    _pyds.register(spark)
-    work = tempfile.mkdtemp(prefix="sdv_q_pyds_stream_")
-    stream = (spark.readStream.format(_pyds.SOURCE_NAME)
-              .option("convs", _PYDS_CONVS).option("turns", _PYDS_TURNS)
-              .option("batch_rows", 3400).option("parts", 8)
-              .option("hw_file", f"{work}/hw")
-              .option("sentinel", "true").load())
-    agg = (stream.withWatermark("ts", "10 minutes")
-           .groupBy(F.window("ts", "1 hour").alias("w"), "role")
-           .agg(F.count(F.lit(1)).alias("n"))
-           .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-                   "role", "n"))
-    q = (agg.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(processingTime="0 seconds").start())
-    _pyds.drain_stream(q, _PYDS_CONVS * _PYDS_TURNS + 1)
-    return spark.read.parquet(f"{work}/out")
-
-
-# ---------------------------------------------------------------------------
-# fuzzy key linkage (operators/linkage.py): SymSpell deletion blocking
-# ---------------------------------------------------------------------------
-
-#: deterministic planted drift: keys divisible by 5 lose one character at a
-#: key-dependent position — the same rule rendered in both engines. The
-#: '#partkey' suffix makes keys unique (testdata p_name has only ~64 distinct
-#: values, which would let every drifted key find a dist-0 twin).
-_LK_KEY = "p_name || '#' || CAST(p_partkey AS VARCHAR)"
-_DRIFT_POS = f"CAST(p_partkey % length({_LK_KEY}) AS INT)"
-_DRIFT_SQL = f"""
-lk_src AS (SELECT p_partkey AS id, {_LK_KEY} AS key FROM part),
-lk_tgt AS (
-  SELECT p_partkey AS id,
-         CASE WHEN p_partkey % 5 = 0
-              THEN substr({_LK_KEY}, 1, {_DRIFT_POS})
-                   || substr({_LK_KEY}, {_DRIFT_POS} + 2)
-              ELSE {_LK_KEY} END AS key
-  FROM part)
-"""
-
-
-from spanner_data_validator_spark.operators.linkage import (  # noqa: E402
-    deletion_variants_sql as _del_variants_sql,
-)
-
-
-@register("fuzzy_key_match", f"""
-WITH {_DRIFT_SQL},
-sv AS (SELECT id, key, unnest({_del_variants_sql("key")}) AS v
-       FROM lk_src),
-tv AS (SELECT id, key, unnest({_del_variants_sql("key")}) AS v
-       FROM lk_tgt),
-cand AS (SELECT DISTINCT s.id AS src_id, s.key AS src_key,
-                         t.id AS tgt_id, t.key AS tgt_key
-         FROM sv s JOIN tv t ON s.v = t.v),
-ver AS (SELECT *, levenshtein(src_key, tgt_key) AS dist FROM cand
-        WHERE levenshtein(src_key, tgt_key) <= 1),
-best AS (SELECT *, row_number() OVER (
-           PARTITION BY src_id ORDER BY dist, tgt_key, tgt_id) AS rn
-         FROM ver)
-SELECT dist,
-       CAST(count(*) AS BIGINT) AS n,
-       bit_xor({portable_hash60_sql("src_key || '|' || tgt_key", 13)})
-         AS pair_xor
-FROM best WHERE rn = 1 GROUP BY dist
-""")
-def q_fuzzy_key_match(spark, sf_dir):
-    """Record linkage for drifted identifiers (operators/linkage.py): keys
-    divisible by 5 lose one character in the target; SymSpell deletion-
-    neighborhood blocking finds every levenshtein<=1 pair through an
-    equi-join on variant hashes (no cross product anywhere), verification
-    + deterministic best-match-per-source-key follow. The oracle replays
-    the whole pipeline independently (string-valued variants, window
-    tie-break) — per-distance counts and an xor checksum of the matched
-    pairs must agree."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.linkage import fuzzy_match_keys
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet") \
-        .withColumn("lk_key", F.concat_ws("#", "p_name",
-                                          F.col("p_partkey").cast("string")))
-    src = part.select(F.col("p_partkey").alias("id"),
-                      F.col("lk_key").alias("key"))
-    pos = (F.col("p_partkey") % F.length("lk_key")).cast("int")
-    drifted = F.concat(F.col("lk_key").substr(F.lit(1), pos),
-                       F.col("lk_key").substr(pos + F.lit(2),
-                                              F.length("lk_key")))
-    tgt = part.select(
-        F.col("p_partkey").alias("id"),
-        F.when(F.col("p_partkey") % 5 == 0, drifted)
-         .otherwise(F.col("lk_key")).alias("key"))
-    best = fuzzy_match_keys(src, tgt, "key", "id", max_dist=1)
-    return (best.groupBy("dist")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.bit_xor(portable_hash60(
-                     F.concat_ws("|", "src_key", "tgt_key"), 13))
-                  .alias("pair_xor")))
-
-
-# ---------------------------------------------------------------------------
-# Count-Min Sketch over a stream (operators/sketch.py): bounded-state
-# frequency estimation — windows x depth x width counters instead of a state
-# row per distinct key.
-# ---------------------------------------------------------------------------
-
-_CMS_D, _CMS_W, _CMS_SEED = 3, 64, 5
-
-
-def _cms_fanout_sql(cols: str, expr: str) -> str:
-    from spanner_data_validator_spark.operators.sketch import cms_bucket_sql
-    return " UNION ALL ".join(
-        f"SELECT {cols}, {d} AS d, "
-        f"{cms_bucket_sql(expr, d, _CMS_W, _CMS_SEED)} AS bucket FROM cms_ev"
-        for d in range(_CMS_D))
-
-
-@register("stream_cms_window_counts", f"""
-WITH cms_ev AS (
-  SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms, user_id
-  FROM events WHERE user_id IS NOT NULL),
-fan AS ({_cms_fanout_sql("window_start_ms, user_id", "CAST(user_id AS VARCHAR)")}),
-cms AS (SELECT window_start_ms, d, bucket, count(*) AS n
-        FROM fan GROUP BY 1, 2, 3),
-cand AS (SELECT window_start_ms, user_id,
-                CAST(count(*) AS BIGINT) AS n_true
-         FROM cms_ev WHERE user_id % 13 = 0 GROUP BY 1, 2),
-probe AS (SELECT c.window_start_ms, c.user_id, c.n_true, f.d, f.bucket
-          FROM cand c JOIN fan f USING (window_start_ms, user_id)),
-est AS (SELECT p.window_start_ms, p.user_id, p.n_true,
-               min(coalesce(s.n, 0)) AS est
-        FROM probe p LEFT JOIN cms s
-          ON p.window_start_ms = s.window_start_ms
-         AND p.d = s.d AND p.bucket = s.bucket
-        GROUP BY 1, 2, 3)
-SELECT window_start_ms, user_id, CAST(est AS BIGINT) AS est, n_true
-FROM est
-""")
-def q_stream_cms_window_counts(spark, sf_dir):
-    """REAL streaming Count-Min build: the event stream folds into ONE
-    windowed aggregation over (window, depth, bucket) — state is
-    open_windows x 3 x 64 counters of ~20 B regardless of how many distinct
-    users exist (the per-key exact plan holds a state row per (window, key)).
-    Closed windows land in the append sink; point lookups for the candidate
-    users take min-over-depths. The oracle rebuilds the identical sketch
-    (same portable hash family, same buckets) and the identical estimates;
-    n_true rides along, witnessing the CMS guarantee est >= true. The
-    far-future sentinel flushes the final windows; it carries a dummy
-    non-null user and simply flows through the aggregation (its own window
-    can never close), because filtering it pre-aggregation would push the
-    predicate below EventTimeWatermark — the stream_digest_drift trap."""
-    import tempfile
-
-    from spanner_data_validator_spark.operators.sketch import (
-        cms_build,
-        cms_lookup,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("user_id").isNotNull())
-          .select(F.col("ts").cast("timestamp").alias("ts"), "user_id"))
-    work = tempfile.mkdtemp(prefix="sdv_q_cms_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    # sentinel carries a dummy NON-NULL user: filtering it pre-aggregation
-    # would push the predicate below EventTimeWatermark (the digest-drift
-    # trap) — instead it flows, and its far-future window can never close
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(-1).cast("long").alias("user_id"))
-          .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    windowed = stream.select(F.window("ts", "1 hour").alias("w"),
-                             F.col("user_id"))
-    cms_stream = cms_build(
-        windowed, F.col("user_id"),
-        depth=_CMS_D, width=_CMS_W, seed=_CMS_SEED, extra_group_cols=["w"])
-    q = (cms_stream.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    cms = (spark.read.parquet(f"{work}/out")
-           .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-                   "d", "bucket", "n"))
-    cand = (ev.where(F.col("user_id") % 13 == 0)
-            .groupBy(F.unix_millis(F.date_trunc("hour", "ts"))
-                     .alias("window_start_ms"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_true")))
-    est = cms_lookup(cms, cand, "user_id", depth=_CMS_D, width=_CMS_W,
-                     seed=_CMS_SEED, join_cols=["window_start_ms"])
-    return (est.join(cand, ["window_start_ms", "user_id"])
-            .select("window_start_ms", "user_id",
-                    F.col("est").cast("long").alias("est"), "n_true"))
-
-
-# ---------------------------------------------------------------------------
-# streaming near-duplicate ingest guard (streaming/neardup_stream.py)
-# ---------------------------------------------------------------------------
-
-@register("stream_neardup_guard", """
-WITH hist AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 <> 0),
-inc AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, 'XX ' || text FROM documents
-  WHERE doc_id % 4 <> 0 AND doc_id % 20 = 0),
-hs AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(string_split(text,' '), i, i+2), ' ') AS shingle
-  FROM hist, UNNEST(range(1, len(string_split(text,' ')) - 1)) AS t(i)
-  WHERE len(string_split(text,' ')) >= 3),
-isq AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(list_slice(string_split(text,' '), i, i+2), ' ') AS shingle
-  FROM inc, UNNEST(range(1, len(string_split(text,' ')) - 1)) AS t(i)
-  WHERE len(string_split(text,' ')) >= 3),
-hn AS (SELECT doc_id, count(*) AS n FROM hs GROUP BY 1),
-inn AS (SELECT doc_id, count(*) AS n FROM isq GROUP BY 1),
-inter AS (
-  SELECT i.doc_id AS in_id, h.doc_id AS hist_id, count(*) AS k
-  FROM isq i JOIN hs h ON i.shingle = h.shingle GROUP BY 1, 2)
-SELECT x.in_id, x.hist_id,
-       CAST(x.k AS DOUBLE) / (a.n + b.n - x.k) AS jaccard
-FROM inter x JOIN inn a ON x.in_id = a.doc_id
-             JOIN hn b ON x.hist_id = b.doc_id
-WHERE CAST(x.k AS DOUBLE) / (a.n + b.n - x.k) >= 0.7
-""")
-def q_stream_neardup_guard(spark, sf_dir):
-    """Streaming near-dup ingest guard: historical docs (3 of every 4) are
-    sketched into a static MinHash-LSH index; the remaining quarter plus
-    planted 'XX '-prefixed near-copies ARRIVE AS A STREAM and are screened
-    through two stateless stream-static joins + inline hashed-shingle
-    Jaccard. The only state is the watermark-bounded (in_id, hist_id) dedup
-    (a pair can match through several bands). At (32 perms, 16 bands) recall
-    on >=0.7 pairs is total on this corpus, so the oracle is the exact
-    cross-side Jaccard join — hash-matched row for row."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.neardup_stream import (
-        build_lsh_index,
-        neardup_guard,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-                .select("doc_id", "text")
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    hist = docs.where(F.col("doc_id") % 4 != 0)
-    incoming = (docs.where(F.col("doc_id") % 4 == 0)
-                .unionByName(
-                    hist.where(F.col("doc_id") % 20 == 0)
-                        .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                                F.concat(F.lit("XX "), F.col("text"))
-                                .alias("text")))
-                .withColumn("ts", F.lit("2025-06-01").cast("timestamp")))
-
-    buckets, sets = build_lsh_index(hist, "doc_id", "text",
-                                    num_perm=32, bands=16, materialize=True)
-
-    work = tempfile.mkdtemp(prefix="sdv_q_neardup_guard_")
-    incoming.repartition(4).write.parquet(f"{work}/in")
-    stream = (spark.readStream.schema(incoming.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
-    flagged = neardup_guard(stream, buckets, sets, "doc_id", "text",
-                            ts_col="ts", num_perm=32, bands=16,
-                            threshold=0.7)
-    q = (flagged.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
-            .select(F.col("in_id").cast("long").alias("in_id"),
-                    F.col("hist_id").cast("long").alias("hist_id"),
-                    "jaccard"))
-
-
-# ---------------------------------------------------------------------------
-# PSI distribution drift (operators/profile.psi_terms)
-# ---------------------------------------------------------------------------
-
-@register("psi_value_drift", """
-WITH src AS (SELECT value FROM events WHERE value IS NOT NULL),
-tgt AS (SELECT CASE WHEN user_id % 3 = 0 THEN value * 1.25 ELSE value END
-          AS value
-        FROM events WHERE value IS NOT NULL),
-sb AS (SELECT least(greatest(CAST(floor((value - 0) * 16 / 200) AS BIGINT),
-                             0), 15) AS bin, count(*) AS src_n
-       FROM src GROUP BY 1),
-tb AS (SELECT least(greatest(CAST(floor((value - 0) * 16 / 200) AS BIGINT),
-                             0), 15) AS bin, count(*) AS tgt_n
-       FROM tgt GROUP BY 1),
-m AS (SELECT coalesce(sb.bin, tb.bin) AS bin,
-             coalesce(src_n, 0) AS src_n, coalesce(tgt_n, 0) AS tgt_n
-      FROM sb FULL OUTER JOIN tb ON sb.bin = tb.bin),
-t AS (SELECT m.*, sum(src_n) OVER () AS ts, sum(tgt_n) OVER () AS tt FROM m)
-SELECT bin, CAST(src_n AS BIGINT) AS src_n, CAST(tgt_n AS BIGINT) AS tgt_n,
-       ((CASE WHEN src_n = 0 THEN 0.5 ELSE CAST(src_n AS DOUBLE) END
-           / CAST(ts AS DOUBLE))
-        - (CASE WHEN tgt_n = 0 THEN 0.5 ELSE CAST(tgt_n AS DOUBLE) END
-           / CAST(tt AS DOUBLE)))
-       * ln(((CASE WHEN src_n = 0 THEN 0.5 ELSE CAST(src_n AS DOUBLE) END
-               / CAST(ts AS DOUBLE)))
-            / ((CASE WHEN tgt_n = 0 THEN 0.5 ELSE CAST(tgt_n AS DOUBLE) END
-               / CAST(tt AS DOUBLE)))) AS psi_term
-FROM t
-""")
-def q_psi_value_drift(spark, sf_dir):
-    """Population Stability Index between the source value distribution and
-    a planted shift (every third user's values scaled 1.25x): per-bin PSI
-    contributions from profile.psi_terms — both sides collapse to 16 bins
-    before any join, and the output doubles are single fixed IEEE
-    expressions over integer counts (no cross-row float sum), so the oracle
-    reproduces them bit-for-bit. Total PSI = sum(psi_term) downstream."""
-    from spanner_data_validator_spark.operators.profile import psi_terms
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("value").isNotNull()))
-    src = ev.select("value")
-    tgt = ev.select(
-        F.when(F.col("user_id") % 3 == 0, F.col("value") * 1.25)
-         .otherwise(F.col("value")).alias("value"))
-    return psi_terms(src, tgt, F.col("value"), 0, 200, 16)
-
-
-@register("column_drift_attribution", """
-WITH cd_src AS (
-  SELECT event_id AS k, event_type, props, value, user_id FROM events),
-cd_tgt AS (
-  SELECT event_id AS k,
-         event_type,
-         CASE WHEN event_id % 50 = 0 THEN props || '#mut' ELSE props END AS props,
-         CASE WHEN event_id % 70 = 0 THEN value + 1 ELSE value END AS value,
-         CASE WHEN event_id % 90 = 0 THEN NULL ELSE user_id END AS user_id
-  FROM events WHERE event_id % 50 <> 1
-  UNION ALL
-  SELECT event_id + 100000000 AS k, event_type, props, value, user_id
-  FROM events WHERE event_id % 50 = 2),
-j AS (
-  SELECT s.k IS NOT NULL AS in_src, t.k IS NOT NULL AS in_tgt,
-         NOT (s.event_type IS NOT DISTINCT FROM t.event_type) AS d_event_type,
-         NOT (s.props      IS NOT DISTINCT FROM t.props)      AS d_props,
-         NOT (s.value      IS NOT DISTINCT FROM t.value)      AS d_value,
-         NOT (s.user_id    IS NOT DISTINCT FROM t.user_id)    AS d_user_id
-  FROM cd_src s FULL OUTER JOIN cd_tgt t ON s.k = t.k),
-c AS (
-  SELECT CASE WHEN NOT in_src THEN 'ADDED'
-              WHEN NOT in_tgt THEN 'REMOVED'
-              WHEN d_event_type OR d_props OR d_value OR d_user_id
-                THEN 'CHANGED'
-              ELSE 'UNCHANGED' END AS change,
-         d_event_type, d_props, d_value, d_user_id
-  FROM j)
-SELECT dim, CAST(n AS BIGINT) AS n FROM (
-  SELECT 'col:event_type' AS dim,
-         count(*) FILTER (WHERE change = 'CHANGED' AND d_event_type) AS n FROM c
-  UNION ALL
-  SELECT 'col:props', count(*) FILTER (WHERE change = 'CHANGED' AND d_props) FROM c
-  UNION ALL
-  SELECT 'col:value', count(*) FILTER (WHERE change = 'CHANGED' AND d_value) FROM c
-  UNION ALL
-  SELECT 'col:user_id', count(*) FILTER (WHERE change = 'CHANGED' AND d_user_id) FROM c
-  UNION ALL
-  SELECT 'change:' || change, count(*) FROM c WHERE change <> 'UNCHANGED'
-  GROUP BY change
-) WHERE n > 0
-""")
-def q_column_drift_attribution(spark, sf_dir):
-    """Column-level drift attribution (operators/diff.py): three planted
-    per-column mutations (props suffix, value +1, user_id nulled) plus
-    deletes/inserts; column_diff runs ONE keyed full-outer join with pure
-    codegen null-safe comparisons into a diff_cols array, and only the
-    drifted keys' short arrays leave the join stage. Output: per-column
-    changed-key counts + change-type counts (zero-count columns dropped on
-    both sides)."""
-    from spanner_data_validator_spark.operators.diff import (
-        column_diff,
-        column_drift_summary,
-    )
-
-    cols = ["event_type", "props", "value", "user_id"]
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = ev.select(F.col("event_id").alias("k"), *cols)
-    kept = ev.where(F.col("event_id") % 50 != 1)
-    tgt = (kept.select(
-        F.col("event_id").alias("k"),
-        F.col("event_type"),
-        F.when(F.col("event_id") % 50 == 0,
-               F.concat(F.col("props"), F.lit("#mut")))
-         .otherwise(F.col("props")).alias("props"),
-        F.when(F.col("event_id") % 70 == 0, F.col("value") + 1)
-         .otherwise(F.col("value")).alias("value"),
-        F.when(F.col("event_id") % 90 == 0, F.lit(None).cast("long"))
-         .otherwise(F.col("user_id")).alias("user_id"))
-        .unionByName(ev.where(F.col("event_id") % 50 == 2)
-                     .select((F.col("event_id") + 100_000_000).alias("k"),
-                             *cols)))
-    # the diff feeds two aggregation branches (per-column summary + change
-    # counts) — pin the small drifted-keys-only table once
-    diff = column_diff(src, tgt, ["k"], cols).localCheckpoint()
-    per_col = (column_drift_summary(diff)
-               .select(F.concat(F.lit("col:"), F.col("column")).alias("dim"),
-                       F.col("n_changed").alias("n")))
-    per_change = (diff.groupBy("change")
-                  .agg(F.count(F.lit(1)).alias("n"))
-                  .select(F.concat(F.lit("change:"), F.col("change"))
-                          .alias("dim"), "n"))
-    return per_col.unionByName(per_change).where(F.col("n") > 0)
-
-
-@register("stream_psi_drift", """
-WITH base AS (
-  SELECT least(greatest(CAST(floor(value * 16 / 200) AS BIGINT), 0), 15)
-           AS bin, count(*) AS base_n
-  FROM events WHERE value IS NOT NULL AND user_id % 2 = 0 GROUP BY 1),
-live AS (
-  SELECT epoch_ms(date_trunc('hour', ts)) AS window_start_ms,
-         least(greatest(CAST(floor(value * 16 / 200) AS BIGINT), 0), 15)
-           AS bin, count(*) AS n
-  FROM events WHERE value IS NOT NULL AND user_id % 2 = 1 GROUP BY 1, 2),
-tot AS (
-  SELECT l.*, sum(n) OVER (PARTITION BY window_start_ms) AS wt,
-         (SELECT sum(base_n) FROM base) AS bt
-  FROM live l),
-j AS (SELECT t.window_start_ms, t.bin, t.n, t.wt, t.bt,
-             coalesce(b.base_n, 0) AS base_n
-      FROM tot t LEFT JOIN base b ON t.bin = b.bin)
-SELECT window_start_ms, bin, CAST(n AS BIGINT) AS n,
-       ((CAST(n AS DOUBLE) / CAST(wt AS DOUBLE))
-        - (CASE WHEN base_n = 0 THEN 0.5 ELSE CAST(base_n AS DOUBLE) END
-           / CAST(bt AS DOUBLE)))
-       * ln((CAST(n AS DOUBLE) / CAST(wt AS DOUBLE))
-            / ((CASE WHEN base_n = 0 THEN 0.5 ELSE CAST(base_n AS DOUBLE) END
-               / CAST(bt AS DOUBLE)))) AS psi_term
-FROM j
-""")
-def q_stream_psi_drift(spark, sf_dir):
-    """Streaming distribution-drift monitor: per-hour value histograms fold
-    in ONE windowed aggregation (state = open_windows x 16 bins, the same
-    bounded-state discipline as the CMS monitor), closed windows land in
-    the append sink, and each window's PSI terms against a broadcast
-    baseline histogram (the even-user half of the corpus) are pure
-    arithmetic on the tiny sink output. Live-window bins present in the
-    stream are the PSI support (a bin with live mass but no baseline mass
-    is smoothed; bins with no live mass contribute nothing — the window's
-    live histogram IS the distribution under test). Sentinel flows through
-    the aggregation as always."""
-    import tempfile
-
-    from pyspark.sql import Window as W
-
-    from spanner_data_validator_spark.operators.profile import bin_expr
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("value").isNotNull())
-          .select(F.col("ts").cast("timestamp").alias("ts"),
-                  "value", "user_id"))
-    # baseline feeds two branches (the broadcast join and the bt total) —
-    # pin the <=16-row histogram so the events scan doesn't run per branch
-    baseline = (ev.where(F.col("user_id") % 2 == 0)
-                .groupBy(bin_expr(F.col("value"), 0, 200, 16).alias("bin"))
-                .agg(F.count(F.lit(1)).alias("base_n"))
-                .localCheckpoint())
-
-    work = tempfile.mkdtemp(prefix="sdv_q_psi_stream_")
-    live = ev.where(F.col("user_id") % 2 == 1).drop("user_id")
-    live.repartition(4).write.parquet(f"{work}/in")
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(0.0).alias("value"))
-          .write.mode("append").parquet(f"{work}/in"))
-
-    stream = (spark.readStream.schema(live.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in")
-              .withWatermark("ts", "10 minutes"))
-    hist = (stream.groupBy(F.window("ts", "1 hour").alias("w"),
-                           bin_expr(F.col("value"), 0, 200, 16).alias("bin"))
-            .agg(F.count(F.lit(1)).alias("n")))
-    q = (hist.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    sink = (spark.read.parquet(f"{work}/out")
-            .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-                    "bin", "n"))
-    wt = F.sum("n").over(W.partitionBy("window_start_ms"))
-    sink = sink.withColumn("wt", wt)
-    bt = baseline.agg(F.sum("base_n").alias("bt"))
-    j = (sink.join(F.broadcast(baseline), "bin", "left")
-         .withColumn("base_n", F.coalesce("base_n", F.lit(0)))
-         .crossJoin(F.broadcast(bt)))
-    p = F.col("n").cast("double") / F.col("wt").cast("double")
-    qq = (F.when(F.col("base_n") == 0, F.lit(0.5))
-           .otherwise(F.col("base_n").cast("double"))
-          / F.col("bt").cast("double"))
-    return j.select("window_start_ms", "bin", "n",
-                    ((p - qq) * F.log(p / qq)).alias("psi_term"))
-
-
-@register("priority_sample_docs", f"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN length(text) = 0 THEN 0
-              ELSE len(string_split(text, ' ')) END AS n_tokens
-  FROM documents WHERE text IS NOT NULL),
-p AS (
-  SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         ln((({portable_hash60_sql("CAST(doc_id AS VARCHAR)", 4)}
-              % {2**52}) + 1) / {float(2**52)!r})
-           / CAST(n_tokens AS DOUBLE) AS pr
-  FROM d WHERE n_tokens > 0),
-r AS (SELECT doc_id, n_tokens,
-             row_number() OVER (ORDER BY pr DESC, doc_id) AS rank
-      FROM p)
-SELECT doc_id, n_tokens, CAST(rank AS INT) AS rank FROM r WHERE rank <= 40
-""")
-def q_priority_sample_docs(spark, sf_dir):
-    """Weighted priority sampling (sampling.priority_sample): the top-40
-    documents by Ohlsson/Rosén priority ln(u)/w with w = whitespace token
-    count — the deterministic quality/length-weighted data-selection
-    primitive. u comes from the portable hash folded into 2^52 buckets so
-    every uniform is EXACTLY representable as a double; the oracle computes
-    the identical priorities and ranking. The Spark plan never global-sorts:
-    per-partition top-k reduce, then one <= partitions x 40-row exchange."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.sampling import (
-        priority_sample,
-    )
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where(F.col("text").isNotNull())
-            .select("doc_id", token_count_ws(F.col("text")).alias("n_tokens")))
-    top = priority_sample(docs, "doc_id", F.col("n_tokens"), 40,
-                          seed=4, hash_fn=portable_hash60)
-    return top.select("doc_id", "n_tokens", F.col("rank").cast("int").alias("rank"))
-
-
-@register("stream_session_conv_digest", f"""
-WITH {_pyds.rows_oracle_sql(300, 20)}
-SELECT conv_id,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       bit_xor({portable_hash60_sql("CAST(i AS VARCHAR)", 3)}) AS fp_xor,
-       CAST(min(({_pyds.BASE_EPOCH_S} + off_s) * 1000) AS BIGINT) AS first_ms,
-       CAST(max(({_pyds.BASE_EPOCH_S} + off_s) * 1000) AS BIGINT) AS last_ms
-FROM pyds_rows GROUP BY conv_id
-""")
-def q_stream_session_conv_digest(spark, sf_dir):
-    """Gap-closed per-conversation digests on the RUNNABLE engine path:
-    ``session_window(ts, 30 min)`` keyed by conv_id over the Python
-    DataSource's incremental stream, aggregating the same order-free folds
-    (count / xor fingerprint / first / last) as the transformWithState
-    processor (streaming/tws.py — its runtime needs protobuf, so this
-    session-window twin is the executable evidence of those semantics; the
-    oracle is the identical batch ground truth `tws.batch_equivalent`
-    computes). Turns are 60 s apart within a conversation, so each
-    conversation is exactly one session; the source's far-future sentinel
-    flushes every real session and its own can never close."""
-    import tempfile
-
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-
-    _pyds.register(spark)
-    convs, turns = 300, 20
-    work = tempfile.mkdtemp(prefix="sdv_q_sess_digest_")
-    stream = (spark.readStream.format(_pyds.SOURCE_NAME)
-              .option("convs", convs).option("turns", turns)
-              .option("batch_rows", 2200).option("parts", 8)
-              .option("hw_file", f"{work}/hw")
-              .option("sentinel", "true").load())
-    agg = (stream
-           .withColumn("fp", portable_hash60(F.col("i").cast("string"), 3))
-           .withWatermark("ts", "10 minutes")
-           .groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                    "conv_id")
-           .agg(F.count(F.lit(1)).alias("n_turns"),
-                F.bit_xor("fp").alias("fp_xor"),
-                F.min(F.unix_millis("ts")).alias("first_ms"),
-                F.max(F.unix_millis("ts")).alias("last_ms"))
-           .select("conv_id", "n_turns", "fp_xor", "first_ms", "last_ms"))
-    q = (agg.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(processingTime="0 seconds").start())
-    _pyds.drain_stream(q, convs * turns + 1)
-    return spark.read.parquet(f"{work}/out")
-
-
-# ---------------------------------------------------------------------------
-# Byte-compatible reference fingerprint (VERDICT r3 item 4)
-# ---------------------------------------------------------------------------
-
-@register("reference_hash_parity", """
-SELECT event_id,
-       to_base64(unhex(sha256(
-           coalesce(event_type, '')
-        || coalesce(cast(user_id AS varchar), '')
-        || coalesce(cast(epoch_ms(ts) // 1000 AS varchar), '')
-        || coalesce(props, '')
-       ))) AS ref_hash
-FROM events
-WHERE event_id % 100 < 5
-""")
-def q_reference_hash_parity(spark, sf_dir):
-    """Reference-deployment hash parity: ``Base64(SHA-256(utf8(concat)))``
-    with the no-delimiter concat and per-type rendering of
-    dto/HashResult.java:77-171 + Helpers.java:348-360, recomputed
-    independently by DuckDB's sha256/to_base64 on the same rows. JSON
-    normalization (the one non-SQL-expressible rule) is byte-compat-tested
-    against hand-derived golden vectors in tests/test_fingerprint.py."""
-    from spanner_data_validator_spark.functions.fingerprint import (
-        reference_fingerprint,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("event_id") % 100 < 5)
-          .select("event_id", "event_type", "user_id",
-                  F.col("ts").cast("timestamp").alias("ts"), "props"))
-    return ev.select(
-        "event_id",
-        reference_fingerprint(
-            ev, ["event_type", "user_id", "ts", "props"]).alias("ref_hash"))
-
-
-# ---------------------------------------------------------------------------
-# ANN recall@k, oracle-checked (VERDICT r3 item 6)
-# ---------------------------------------------------------------------------
-
-def _ann_recall_oracle(k: int = 3, n_planes: int = 8, dim: int = 64,
-                       seed: int = 42) -> str:
-    """Composite oracle: exact cosine top-k, the multi-probe RHP-LSH
-    pipeline (literal hyperplanes), and the IVF pipeline (deterministic
-    data-sampled quantizer), then recall = |approx ∩ exact| / |exact| per
-    method — every stage is the same SQL the individual ann_* oracles use."""
-    from spanner_data_validator_spark.operators.ann import make_planes
-
-    planes = make_planes(dim, n_planes, seed)
-    bucket = " + ".join(
-        "CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ["
-        + ",".join(repr(float(x)) for x in p) + f"]) > 0 THEN {1 << j} ELSE 0 END"
-        for j, p in enumerate(planes))
-    probe_list = ", ".join(["0"] + [str(1 << j) for j in range(n_planes)])
-    return f"""
-WITH exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                             CAST(e.embedding AS DOUBLE[])) DESC,
-                      e.vec_id) AS rank
-    FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-    WHERE q.vec_id % 100 = 0)
-  WHERE rank <= {k}
-),
-bkt AS (
-  SELECT vec_id, embedding, ({bucket}) AS b FROM embeddings
-),
-probes AS (
-  SELECT query_id, qv, xor(b, p) AS b FROM (
-    SELECT vec_id AS query_id, embedding AS qv, b
-    FROM bkt WHERE vec_id % 100 = 0), UNNEST([{probe_list}]) AS t(p)
-),
-lsh AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT p.query_id, i.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY p.query_id
-             ORDER BY list_cosine_similarity(CAST(p.qv AS DOUBLE[]),
-                                             CAST(i.embedding AS DOUBLE[])) DESC,
-                      i.vec_id) AS rank
-    FROM probes p JOIN bkt i ON i.b = p.b AND i.vec_id <> p.query_id)
-  WHERE rank <= {k}
-),
-cent AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS list_id, embedding AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8)
-),
-it AS (
-  SELECT neighbor_id, iv, list_id FROM (
-    SELECT e.vec_id AS neighbor_id, e.embedding AS iv, c.list_id,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(c.cv AS DOUBLE[])), c.list_id) AS rn
-    FROM embeddings e CROSS JOIN cent c)
-  WHERE rn = 1
-),
-qiv AS (
-  SELECT query_id, qv, list_id FROM (
-    SELECT e.vec_id AS query_id, e.embedding AS qv, c.list_id,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(c.cv AS DOUBLE[])), c.list_id) AS rn
-    FROM embeddings e CROSS JOIN cent c WHERE e.vec_id % 100 = 0)
-  WHERE rn <= 2
-),
-ivf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, it.neighbor_id,
-           row_number() OVER (PARTITION BY q.query_id
-             ORDER BY list_cosine_similarity(CAST(q.qv AS DOUBLE[]),
-                                             CAST(it.iv AS DOUBLE[])) DESC,
-                      it.neighbor_id) AS rank
-    FROM qiv q JOIN it USING (list_id) WHERE it.neighbor_id <> q.query_id)
-  WHERE rank <= {k}
-),
-pairs AS (
-  SELECT 'rhp_lsh' AS method, CASE WHEN l.neighbor_id IS NULL THEN 0 ELSE 1 END AS hit
-  FROM exact e LEFT JOIN lsh l USING (query_id, neighbor_id)
-  UNION ALL
-  SELECT 'ivf' AS method, CASE WHEN i.neighbor_id IS NULL THEN 0 ELSE 1 END AS hit
-  FROM exact e LEFT JOIN ivf i USING (query_id, neighbor_id)
-)
-SELECT method, CAST(sum(hit) AS BIGINT) AS hits, CAST(count(*) AS BIGINT) AS total,
-       CAST(sum(hit) AS DOUBLE) / count(*) AS recall
-FROM pairs GROUP BY method
-"""
-
-
-@register("ann_recall_at_k", _ann_recall_oracle())
-def q_ann_recall_at_k(spark, sf_dir):
-    """recall@3 of the two approximate ANN paths (multi-probe RHP-LSH, IVF
-    nprobe=2) against exact brute-force cosine top-3 — DuckDB recomputes all
-    three pipelines and the recall arithmetic end-to-end. A deterministic
-    recall floor is asserted in tests/test_ann.py."""
-    from spanner_data_validator_spark.operators.ann import (
-        centroids_from_items,
-        cosine_topk,
-        ivf_index,
-        ivf_topk,
-        rhp_lsh_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
-    qs = emb.where(F.col("vec_id") % 100 == 0)
-    # exact feeds one join branch per method — pin it (multi-branch rescan
-    # trap, CLAUDE.md) so brute force runs once, not once per method
-    exact = (cosine_topk(emb, qs, 3)
-             .select("query_id", "neighbor_id").localCheckpoint())
-    lsh = rhp_lsh_topk(emb, qs, 3, dim=64, n_planes=8, seed=42,
-                       multi_probe=True).select("query_id", "neighbor_id")
-    cached = _IVF_CENT_CACHE.get(sf_dir)
-    if cached is None:
-        cents = centroids_from_items(emb, modulus=61, residue=3, n_lists=8)
-        idx = ivf_index(emb, cents).persist()
-        idx.count()
-        cached = (cents, idx)
-        _ivf_cache_put(sf_dir, cached)
-    cents, idx = cached
-    ivf = ivf_topk(None, qs, 3, nprobe=2, centroids=cents,
-                   index=idx).select("query_id", "neighbor_id")
-
-    def tally(method: str, approx: DataFrame) -> DataFrame:
-        hit = approx.withColumn("hit", F.lit(1))
-        joined = exact.join(hit, ["query_id", "neighbor_id"], "left")
-        return (joined.agg(
-                    F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"),
-                    F.count(F.lit(1)).alias("total"))
-                .select(F.lit(method).alias("method"), "hits", "total",
-                        (F.col("hits").cast("double") / F.col("total"))
-                        .alias("recall")))
-
-    return tally("rhp_lsh", lsh).unionByName(tally("ivf", ivf))
-
-
-# d=2 linkage (VERDICT r3 item 7): two-character drift, SymSpell blocking at
-# depth 2 — complete for levenshtein <= 2 (property-tested vs brute force in
-# tests/test_linkage.py)
-_DRIFT2_POS1 = f"CAST(p_partkey % length({_LK_KEY}) AS INT)"
-_D2_K1 = (f"substr({_LK_KEY}, 1, {_DRIFT2_POS1}) "
-          f"|| substr({_LK_KEY}, {_DRIFT2_POS1} + 2)")
-_DRIFT2_SQL = f"""
-lk2_src AS (SELECT p_partkey AS id, {_LK_KEY} AS key FROM part),
-lk2_k1 AS (
-  SELECT p_partkey AS id, p_partkey AS pk, {_D2_K1} AS k1 FROM part),
-lk2_tgt AS (
-  SELECT id,
-         CASE WHEN pk % 7 = 0 THEN
-                substr(k1, 1, CAST(pk % length(k1) AS INT))
-                || substr(k1, CAST(pk % length(k1) AS INT) + 2)
-              WHEN pk % 5 = 0 THEN k1
-              ELSE (SELECT key FROM lk2_src s WHERE s.id = lk2_k1.id) END AS key
-  FROM lk2_k1)
-"""
-
-
-@register("fuzzy_key_match_d2", f"""
-WITH {_DRIFT2_SQL},
-sv AS (SELECT id, key, unnest({_del_variants_sql("key", 2)}) AS v
-       FROM lk2_src),
-tv AS (SELECT id, key, unnest({_del_variants_sql("key", 2)}) AS v
-       FROM lk2_tgt),
-cand AS (SELECT DISTINCT s.id AS src_id, s.key AS src_key,
-                         t.id AS tgt_id, t.key AS tgt_key
-         FROM sv s JOIN tv t ON s.v = t.v),
-ver AS (SELECT *, levenshtein(src_key, tgt_key) AS dist FROM cand
-        WHERE levenshtein(src_key, tgt_key) <= 2),
-best AS (SELECT *, row_number() OVER (
-           PARTITION BY src_id ORDER BY dist, tgt_key, tgt_id) AS rn
-         FROM ver)
-SELECT dist,
-       CAST(count(*) AS BIGINT) AS n,
-       bit_xor({portable_hash60_sql("src_key || '|' || tgt_key", 13)})
-         AS pair_xor
-FROM best WHERE rn = 1 GROUP BY dist
-""")
-def q_fuzzy_key_match_d2(spark, sf_dir):
-    """Distance-2 record linkage: keys divisible by 7 lose TWO characters,
-    by 5 one — depth-2 deletion blocking recovers every pair within
-    levenshtein 2 through the same variant-hash equi-join (variant count
-    ~C(len,2) per key, still no cross product). Oracle replays the whole
-    depth-2 pipeline with string-valued variants."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.linkage import fuzzy_match_keys
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet") \
-        .withColumn("lk_key", F.concat_ws("#", "p_name",
-                                          F.col("p_partkey").cast("string")))
-    src = part.select(F.col("p_partkey").alias("id"),
-                      F.col("lk_key").alias("key"))
-    pos1 = (F.col("p_partkey") % F.length("lk_key")).cast("int")
-    k1 = F.concat(F.col("lk_key").substr(F.lit(1), pos1),
-                  F.col("lk_key").substr(pos1 + F.lit(2),
-                                         F.length("lk_key")))
-    with_k1 = part.withColumn("k1", k1)
-    pos2 = (F.col("p_partkey") % F.length("k1")).cast("int")
-    k2 = F.concat(F.col("k1").substr(F.lit(1), pos2),
-                  F.col("k1").substr(pos2 + F.lit(2), F.length("k1")))
-    tgt = with_k1.select(
-        F.col("p_partkey").alias("id"),
-        F.when(F.col("p_partkey") % 7 == 0, k2)
-         .when(F.col("p_partkey") % 5 == 0, F.col("k1"))
-         .otherwise(F.col("lk_key")).alias("key"))
-    best = fuzzy_match_keys(src, tgt, "key", "id", max_dist=2)
-    return (best.groupBy("dist")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.bit_xor(portable_hash60(
-                     F.concat_ws("|", "src_key", "tgt_key"), 13))
-                  .alias("pair_xor")))
-
-
-# PassJoin segment blocking (linkage.passjoin_candidates): q=3 even
-# partition of each target key; probes enumerate aligned substrings of the
-# source key for each candidate length n in +-2, segment i, shift in +-2.
-_PJ_IDX = """
-SELECT t.id AS tgt_id, t.key AS tgt_key,
-       length(t.key) AS n, si.i AS i,
-       substr(t.key,
-              1 + si.i * (length(t.key) // 3)
-                + greatest(0, si.i - (3 - (length(t.key) % 3))),
-              (length(t.key) // 3)
-                + CASE WHEN si.i >= 3 - (length(t.key) % 3) THEN 1 ELSE 0 END)
-         AS seg
-FROM (SELECT * FROM lk2_tgt WHERE id % 3 = 0) t, range(0, 3) AS si(i)
-WHERE length(t.key) >= 3
-"""
-
-_PJ_PROBE = """
-SELECT src_id, src_key, n, i, substr(src_key, start, seg_len) AS sub FROM (
-  SELECT *, 1 + i * m + greatest(0, i - (3 - r)) + sh AS start,
-         m + CASE WHEN i >= 3 - r THEN 1 ELSE 0 END AS seg_len
-  FROM (
-    SELECT s.id AS src_id, s.key AS src_key, length(s.key) AS slen,
-           length(s.key) + no.o AS n, si.i AS i, sh.s AS sh,
-           (length(s.key) + no.o) // 3 AS m,
-           (length(s.key) + no.o) % 3 AS r
-    FROM (SELECT * FROM lk2_src WHERE id % 3 = 0) s,
-         range(-2, 3) AS no(o), range(0, 3) AS si(i),
-         range(-2, 3) AS sh(s)
-  )
-) WHERE n >= 3 AND seg_len >= 1 AND start >= 1 AND start + seg_len - 1 <= slen
-"""
-
-
-@register("fuzzy_key_match_passjoin", f"""
-WITH {_DRIFT2_SQL},
-idx AS ({_PJ_IDX}),
-probe AS ({_PJ_PROBE}),
-cand AS (SELECT DISTINCT p.src_id, p.src_key, x.tgt_id, x.tgt_key
-         FROM probe p JOIN idx x
-           ON p.n = x.n AND p.i = x.i AND p.sub = x.seg),
-ver AS (SELECT *, levenshtein(src_key, tgt_key) AS dist FROM cand
-        WHERE levenshtein(src_key, tgt_key) <= 2),
-best AS (SELECT *, row_number() OVER (
-           PARTITION BY src_id ORDER BY dist, tgt_key, tgt_id) AS rn
-         FROM ver)
-SELECT dist,
-       CAST(count(*) AS BIGINT) AS n,
-       bit_xor({portable_hash60_sql("src_key || '|' || tgt_key", 13)})
-         AS pair_xor
-FROM best WHERE rn = 1 GROUP BY dist
-""")
-def q_fuzzy_key_match_passjoin(spark, sf_dir):
-    """The SAME distance-2 linkage as fuzzy_key_match_d2 solved by the
-    SECOND exact algorithm: PassJoin segment blocking
-    (linkage.passjoin_candidates — q=3 pigeonhole segments on the indexed
-    side, ~q*(2d+1)^2 aligned-substring probes on the source side, versus
-    ~C(len,2) deletion variants per key on BOTH sides). Two independent
-    algorithms, one answer: the per-distance counts and pair checksum must
-    equal fuzzy_key_match_d2's, and the oracle replays the segment scheme
-    itself. All expansion is flat post-explode codegen arithmetic (no
-    nested lambdas)."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60
-    from spanner_data_validator_spark.operators.linkage import fuzzy_match_keys
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet") \
-        .withColumn("lk_key", F.concat_ws("#", "p_name",
-                                          F.col("p_partkey").cast("string")))
-    src = part.select(F.col("p_partkey").alias("id"),
-                      F.col("lk_key").alias("key"))
-    pos1 = (F.col("p_partkey") % F.length("lk_key")).cast("int")
-    k1 = F.concat(F.col("lk_key").substr(F.lit(1), pos1),
-                  F.col("lk_key").substr(pos1 + F.lit(2),
-                                         F.length("lk_key")))
-    with_k1 = part.withColumn("k1", k1)
-    pos2 = (F.col("p_partkey") % F.length("k1")).cast("int")
-    k2 = F.concat(F.col("k1").substr(F.lit(1), pos2),
-                  F.col("k1").substr(pos2 + F.lit(2), F.length("k1")))
-    tgt = with_k1.select(
-        F.col("p_partkey").alias("id"),
-        F.when(F.col("p_partkey") % 7 == 0, k2)
-         .when(F.col("p_partkey") % 5 == 0, F.col("k1"))
-         .otherwise(F.col("lk_key")).alias("key"))
-    # every-3rd-key subset: vocabulary keys are PassJoin's worst case (see
-    # the operator's WHICH-ALGORITHM note — segment blocks collide), so the
-    # parity demo runs on a slice that keeps the bench honest about it
-    # without letting the 88M-pair fanout dominate the suite
-    src = src.where(F.col("id") % 3 == 0)
-    tgt = tgt.where(F.col("id") % 3 == 0)
-    best = fuzzy_match_keys(src, tgt, "key", "id", max_dist=2,
-                            algo="passjoin")
-    return (best.groupBy("dist")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.bit_xor(portable_hash60(
-                     F.concat_ws("|", "src_key", "tgt_key"), 13))
-                  .alias("pair_xor")))
-
-
-# ---------------------------------------------------------------------------
-# CEP: sequence-pattern + absence detection (operators/cep.py)
-# ---------------------------------------------------------------------------
-
-@register("cep_funnel_pattern", """
-WITH s AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN event_type = 'view' THEN 'v'
-              WHEN event_type = 'click' THEN 'c'
-              WHEN event_type = 'purchase' THEN 'p'
-              ELSE '-' END AS sym
-  FROM events
-),
-g AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         string_agg(sym, '' ORDER BY ts, event_id) AS syms
-  FROM s GROUP BY user_id
-)
-SELECT user_id, n_events,
-       CAST(len(regexp_extract_all(syms, 'vc+p')) AS BIGINT) AS n_matches,
-       CAST(CASE WHEN regexp_matches(syms, 'vc+p')
-                 THEN position(regexp_extract(syms, 'vc+p') IN syms)
-                 ELSE 0 END AS BIGINT) AS first_match
-FROM g
-""")
-def q_cep_funnel_pattern(spark, sf_dir):
-    """MATCH_RECOGNIZE-style CEP: per user, count non-overlapping
-    view→click+→purchase sequences (pattern ``vc+p`` over the per-user
-    event-ordered symbol string) and locate the first match. Shuffle carries
-    (user_id, ts, event_id, 1-char symbol); pattern evaluation is one JVM
-    regexp over a per-key string — no join, no Python."""
-    from spanner_data_validator_spark.operators.cep import (
-        match_recognize,
-        symbolize,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp")))
-    sym = symbolize([
-        ("v", F.col("event_type") == "view"),
-        ("c", F.col("event_type") == "click"),
-        ("p", F.col("event_type") == "purchase"),
-    ])
-    return match_recognize(ev, key="user_id", order=["ts", "event_id"],
-                           symbol=sym, pattern="vc+p")
-
-
-@register("cep_absence_alerts", """
-WITH c AS (
-  SELECT user_id, event_id, ts, event_type,
-         min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_p_us
-  FROM events
-)
-SELECT user_id, event_id, epoch_us(ts) AS click_us,
-       epoch_us(ts) + 1800000000 AS deadline_us
-FROM c
-WHERE event_type = 'click'
-  AND (next_p_us IS NULL OR next_p_us > epoch_us(ts) + 1800000000)
-""")
-def q_cep_absence_alerts(spark, sf_dir):
-    """Timeout CEP: clicks NOT followed by a purchase from the same user
-    within 30 minutes. Join-free — conditional min over the following window
-    frame replaces the naive events×events time-band self-join (which would
-    be quadratic in hot users at 10^12 events)."""
-    from spanner_data_validator_spark.operators.cep import absence_alerts
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp"))
-          .select("user_id", "event_id", "ts", "event_type"))
-    alerts = absence_alerts(
-        ev, key="user_id", ts="ts", order_tiebreak="event_id",
-        start=F.col("event_type") == "click",
-        end=F.col("event_type") == "purchase",
-        timeout_ms=30 * 60 * 1000)
-    return alerts.select("user_id", "event_id",
-                         F.unix_micros("ts").alias("click_us"),
-                         "deadline_us")
-
-
-@register("stream_cep_session_alerts", """
-WITH s AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN event_type = 'view' THEN 'v'
-              WHEN event_type = 'click' THEN 'c'
-              WHEN event_type = 'purchase' THEN 'p'
-              ELSE '-' END AS sym,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   >= INTERVAL 30 MINUTE OR
-                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-g AS (
-  SELECT user_id, ts, event_id, sym,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM s
-)
-SELECT user_id, epoch_ms(min(ts)) AS session_start_ms,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(len(regexp_extract_all(string_agg(sym, '' ORDER BY ts, event_id),
-                                   'vc+p')) AS BIGINT) AS n_matches
-FROM g GROUP BY user_id, session_id
-""")
-def q_stream_cep_session_alerts(spark, sf_dir):
-    """Streaming CEP: per-user session windows (gap 30 min) over a
-    watermarked event stream, each closed session scanned for the
-    view→click+→purchase pattern — sequence detection with watermark-bounded
-    state (one open session per active user; the symbol array is the only
-    per-session payload). A far-future sentinel advances the watermark so
-    every real session closes; its own session can never close, so it never
-    reaches the append sink (CLAUDE.md: never filter between source and
-    aggregation)."""
-    import tempfile
-
-    from spanner_data_validator_spark.operators.cep import symbolize
-
-    sym = symbolize([
-        ("v", F.col("event_type") == "view"),
-        ("c", F.col("event_type") == "click"),
-        ("p", F.col("event_type") == "purchase"),
-    ])
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .select(F.col("user_id"), F.col("ts").cast("timestamp").alias("ts"),
-                  F.col("event_id"), sym.alias("sym")))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_cep_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1).select(F.lit(-1).cast("long").alias("user_id"),
-                           F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(-1).cast("long").alias("event_id"),
-                           F.lit("-").alias("sym"))
-          .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 3).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
-    sess = (stream.groupBy(F.col("user_id"),
-                           F.session_window("ts", "30 minutes").alias("w"))
-                  .agg(F.array_sort(F.collect_list(
-                           F.struct("ts", "event_id", "sym"))).alias("evs")))
-    out = sess.select(
-        "user_id", F.col("w.start").alias("ws"),
-        F.size("evs").cast("long").alias("n_events"),
-        F.regexp_count(F.array_join(F.expr("transform(evs, e -> e.sym)"), ""),
-                       F.lit("vc+p")).cast("long").alias("n_matches"))
-    q = (out.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    return (spark.read.parquet(f"{work}/out")
-            .where(F.col("ws") < F.lit("2090-01-01").cast("timestamp"))
-            .select("user_id", F.unix_millis("ws").alias("session_start_ms"),
-                    "n_events", "n_matches"))
-
-
-# ---------------------------------------------------------------------------
-# anti-entropy repair: classification -> changeset -> provable convergence
-# ---------------------------------------------------------------------------
-
-_PAIR_CTE = _CLS_CTE.rstrip().rstrip(")") + """
-), pair AS (
-  SELECT s.key AS s_key, t.key AS t_key,
-         s.payload AS s_payload, t.payload AS t_payload
-  FROM src s FULL OUTER JOIN tgt t ON s.key = t.key
-)
-"""
-
-
-def _events_pair_classified(spark, sf_dir):
-    """Fingerprint both event streams carrying the raw payload (the repair
-    needs the source bytes, not just the hash)."""
-    from spanner_data_validator_spark.operators.comparator import classify_pair
-
-    src = events_source(spark, sf_dir)
-    tgt = events_target(events_source(spark, sf_dir))
-
-    def prep(df):
-        return df.select(
-            "key", fingerprint_expr(F.col("payload")).alias("fingerprint"),
-            "payload")
-
-    cls = classify_pair(prep(src), prep(tgt), ["key"], carry_cols=["payload"])
-    return src, tgt, cls
-
-
-@register("validation_repair_plan", _PAIR_CTE + """
-SELECT coalesce(s_key, t_key) AS key,
-       CASE WHEN t_payload IS NULL THEN 'INSERT'
-            WHEN s_payload IS NULL THEN 'DELETE'
-            ELSE 'UPDATE' END AS action,
-       CASE WHEN s_payload IS NOT NULL THEN s_payload END AS new_payload
-FROM pair
-WHERE s_payload IS NULL OR t_payload IS NULL OR s_payload <> t_payload
-""")
-def q_validation_repair_plan(spark, sf_dir):
-    """Anti-entropy changeset from the validator's classification: INSERT the
-    SOURCE_ONLY keys, DELETE the TARGET_ONLY keys, UPDATE the MISMATCH keys
-    with the source payload (operators/repair.py). Filter + projection over
-    the classify join — no exchange the validation didn't already pay; at
-    real divergence rates the changeset is <<1% of the keyspace. The
-    reference stops at reporting (JDBCToSpannerDVTWithHash.java:191-246);
-    this is the step an operator runs next."""
-    from spanner_data_validator_spark.operators.repair import repair_actions
-
-    _, _, cls = _events_pair_classified(spark, sf_dir)
-    return repair_actions(cls, ["key"]).select("key", "action", "new_payload")
-
-
-@register("repair_convergence", """
-WITH src AS (
-  SELECT event_id AS key FROM events
-)
-SELECT 'MATCH' AS status, CAST(count(*) AS BIGINT) AS n FROM src
-""")
-def q_repair_convergence(spark, sf_dir):
-    """Convergence proof executed in-engine: apply the repair changeset to
-    the divergent target snapshot, re-run the full classification, and
-    return the status tally — which must be exactly one row,
-    (MATCH, n_source_keys). The oracle is the trivial identity (repaired
-    target == source by construction), so any repair bug — missed DELETE,
-    wrong UPDATE payload, dropped INSERT — breaks the hash match."""
-    from spanner_data_validator_spark.operators.comparator import classify_pair
-    from spanner_data_validator_spark.operators.repair import (
-        apply_repairs,
-        repair_actions,
-    )
-
-    src, tgt, cls = _events_pair_classified(spark, sf_dir)
-    actions = repair_actions(cls, ["key"])
-    repaired = apply_repairs(
-        tgt.select("key", "payload"), actions, ["key"])
-
-    def prep(df):
-        return df.select(
-            "key", fingerprint_expr(F.col("payload")).alias("fingerprint"))
-
-    recls = classify_pair(prep(src), prep(repaired), ["key"])
-    return recls.groupBy("status").agg(F.count("*").cast("bigint").alias("n"))
-
-
-# ---------------------------------------------------------------------------
-# bloom-filter semi-join pre-filter (operators/bloom.py)
-# ---------------------------------------------------------------------------
-
-_BLOOM_POS = ("(('0x' || substr(md5({seed} || ':' || user_id), 1, 15))::BIGINT"
-              " % {m})")
-
-
-@register("bloom_prefilter_stats", f"""
-WITH seeds(s) AS (VALUES (0), (1)),
-build AS (
-  SELECT DISTINCT user_id FROM events
-  WHERE event_type = 'purchase' AND value > 280 AND user_id IS NOT NULL
-),
-bits AS (
-  SELECT DISTINCT {_BLOOM_POS.format(seed="s::VARCHAR", m=64)} AS p
-  FROM build CROSS JOIN seeds
-),
-probe AS (
-  SELECT e.event_id,
-         count(b.p) = 2 AS pass,
-         bool_or(e.user_id IN (SELECT user_id FROM build)) AS hit
-  FROM events e
-  CROSS JOIN seeds s
-  LEFT JOIN bits b
-    ON b.p = {_BLOOM_POS.format(seed="s.s::VARCHAR", m=64)}
-  WHERE e.user_id IS NOT NULL
-  GROUP BY e.event_id, e.user_id
-)
-SELECT b.n AS build_keys,
-       p.bp AS bloom_pass_rows,
-       p.xm AS exact_match_rows,
-       p.bp - p.xm AS false_positive_rows
-FROM (SELECT CAST(count(*) AS BIGINT) AS n FROM build) b
-CROSS JOIN (SELECT CAST(count(*) FILTER (WHERE pass) AS BIGINT) AS bp,
-                   CAST(count(*) FILTER (WHERE hit) AS BIGINT) AS xm
-            FROM probe) p
-""")
-def q_bloom_prefilter_stats(spark, sf_dir):
-    """False-positive accounting of the bloom pre-filter (operators/bloom.py):
-    build over the high-value-purchaser cohort, probe every event, count
-    bloom survivors vs exact matches. m=64/k=2 is DELIBERATELY undersized so
-    false positives are visible and the oracle proves the engine's bitmap
-    probe is bit-exact (a bitmap is the set of set positions, so membership
-    == "all k positions appear in the build side's position set" — which
-    DuckDB recomputes from the same seeded md5-prefix hash family). The
-    production path auto-sizes via bloom_parameters (see
-    bloom_semi_join_counts)."""
-    from spanner_data_validator_spark.operators.bloom import (
-        bloom_member,
-        build_bloom,
-    )
-
-    src = spark.read.parquet(f"{sf_dir}/events.parquet")
-    build = (src.where((F.col("event_type") == "purchase")
-                       & (F.col("value") > 280)
-                       & F.col("user_id").isNotNull())
-                .select("user_id").distinct())
-    bloom = build_bloom(build, "user_id", 64, 2)
-    probe = src.where(F.col("user_id").isNotNull())
-    # survivors are small by design — pin them once so the exact-verify join
-    # and the tally don't each rescan the probe (multi-branch rescan trap)
-    passed = probe.where(bloom_member("user_id", bloom)) \
-                  .select("event_id", "user_id").localCheckpoint(eager=False)
-    exact_n = (passed.join(build, "user_id", "left_semi")
-                     .agg(F.count("*").cast("bigint").alias("exact_match_rows")))
-    pass_n = passed.agg(F.count("*").cast("bigint").alias("bloom_pass_rows"))
-    return (pass_n.crossJoin(exact_n)
-            .select(F.lit(bloom.n_build_rows).cast("bigint").alias("build_keys"),
-                    "bloom_pass_rows", "exact_match_rows",
-                    (F.col("bloom_pass_rows") - F.col("exact_match_rows"))
-                    .cast("bigint").alias("false_positive_rows")))
-
-
-@register("bloom_semi_join_counts", """
-WITH build AS (
-  SELECT DISTINCT user_id FROM events
-  WHERE event_type = 'purchase' AND value > 280 AND user_id IS NOT NULL
-)
-SELECT e.event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(max(e.event_id) AS BIGINT) AS max_event_id
-FROM events e
-JOIN build b ON e.user_id = b.user_id
-GROUP BY e.event_type
-""")
-def q_bloom_semi_join_counts(spark, sf_dir):
-    """End-to-end bloom_semi_join (auto-sized filter, exact verify): the
-    oracle is a PLAIN semi-join — false positives may enlarge the verify
-    join's input but can never change the answer, which is the operator's
-    contract. Plan shape at 100 TB: probe scan -> narrow codegen'd bitmap
-    filter (no exchange) -> semi-join of the shrunken survivor set."""
-    from spanner_data_validator_spark.operators.bloom import bloom_semi_join
-
-    src = spark.read.parquet(f"{sf_dir}/events.parquet")
-    build = (src.where((F.col("event_type") == "purchase")
-                       & (F.col("value") > 280))
-                .select("user_id"))
-    probe = src.where(F.col("user_id").isNotNull())
-    return (bloom_semi_join(probe, build, "user_id", fpp=0.01)
-            .groupBy("event_type")
-            .agg(F.count("*").cast("bigint").alias("n_events"),
-                 F.max("event_id").cast("bigint").alias("max_event_id")))
-
-
-# ---------------------------------------------------------------------------
-# iterative clustering: fixed-point k-means (operators/cluster.py)
-# ---------------------------------------------------------------------------
-
-def _kmeans_oracle() -> str:
-    from spanner_data_validator_spark.operators.cluster import kmeans_sql
-
-    return "WITH " + kmeans_sql(
-        "SELECT vec_id, embedding FROM embeddings",
-        k=4, iterations=2, scale=1000, dim=64)
-
-
-@register("kmeans_lloyd", _kmeans_oracle())
-def q_kmeans_lloyd(spark, sf_dir):
-    """Trainable IVF quantizer: 2 Lloyd rounds over the embedding corpus in
-    FIXED POINT (operators/cluster.py) — quantize once to integer units,
-    exact BIGINT distances, argmin with cluster-id tie-break, centroid
-    update as exact integer floor-mean — so the iterations themselves are
-    bit-identical across partitionings AND engines (double k-means is
-    aggregation-order-dependent; ann.centroids_from_items exists precisely
-    to dodge that, and this removes the dodge). Centroids live on the
-    driver between rounds (k*dim ints, broadcast as literals), so the only
-    per-round shuffle is the k*dim-row update aggregate; the quantized
-    table is materialized once and rescanned, never the raw source. The
-    oracle unrolls the identical rounds as CTEs."""
-    from spanner_data_validator_spark.operators.cluster import (
-        kmeans_fixed_point,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return kmeans_fixed_point(emb, id_col="vec_id", vec_col="embedding",
-                              k=4, iterations=2, scale=1000)
-
-
-# ---------------------------------------------------------------------------
-# ranked keyword search: BM25 (operators/terms.py)
-# ---------------------------------------------------------------------------
-
-_BM25_TERMS = ["spark", "window", "merge"]
-
-
-def _bm25_oracle() -> str:
-    from spanner_data_validator_spark.operators.terms import bm25_sql
-
-    return "WITH " + bm25_sql("SELECT doc_id, text FROM documents",
-                              "doc_id", "text", _BM25_TERMS, k=10)
-
-
-@register("bm25_search", _bm25_oracle())
-def q_bm25_search(spark, sf_dir):
-    """Ranked keyword retrieval: BM25 top-10 for a fixed 3-term query with
-    the log-free rational idf ((N-df+0.5)/(df+0.5) — one division of exact
-    integers), exact-binary-fraction k1/b literals, and the per-doc score
-    summed in FIXED query-term order via a pivot — so every double is the
-    same correctly-rounded expression tree in both engines and the result
-    hash-matches bit-for-bit (a float sum across rows would be
-    aggregation-order-dependent). One corpus-sized shuffle total (the tf
-    agg, materialized once for its three consumers); df/stats ride as
-    broadcasts; the sort ranks only docs matching >=1 term."""
-    from spanner_data_validator_spark.operators.terms import bm25_topk
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=10)
-
-
-# ---------------------------------------------------------------------------
-# tokenizer training: one BPE merge round (operators/bpe.py)
-# ---------------------------------------------------------------------------
-
-def _bpe_oracle() -> str:
-    from spanner_data_validator_spark.operators.bpe import bpe_sql
-
-    return "WITH " + bpe_sql("SELECT doc_id, text FROM documents",
-                             "doc_id", "text", k=10)
-
-
-@register("bpe_pair_merge", _bpe_oracle())
-def q_bpe_pair_merge(spark, sf_dir):
-    """One BPE tokenizer-training round over the document corpus: count
-    adjacent character-pair frequencies weighted by word frequency, merge
-    the winner (ties to the lexically smallest pair), recount — output the
-    post-merge top-10 pairs (the next round's input). Pure integer counts,
-    so engine-exact by construction. The corpus collapses to its
-    VOCABULARY first (the one corpus-sized shuffle, map-side combined);
-    pair counting, the merge replace, and the recount all run over the
-    vocabulary-sized symbol table (operators/bpe.py)."""
-    from spanner_data_validator_spark.operators.bpe import bpe_one_merge
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bpe_one_merge(docs, "doc_id", "text", k=10)
-
-
-# ---------------------------------------------------------------------------
-# Unicode NFC normalization parity (functions/normalize.nfc_normalize_udf)
-# ---------------------------------------------------------------------------
-
-@register("unicode_nfc_dedup", """
-WITH forms AS (
-  SELECT string_split(lower(text), ' ')[1]
-         || CASE CAST(doc_id % 3 AS INT)
-              WHEN 0 THEN 'é' WHEN 1 THEN 'é' ELSE 'e' END AS raw
-  FROM documents
-)
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT raw) AS BIGINT) AS distinct_raw,
-       CAST(count(DISTINCT nfc_normalize(raw)) AS BIGINT) AS distinct_nfc,
-       CAST(count(DISTINCT raw) - count(DISTINCT nfc_normalize(raw))
-            AS BIGINT) AS collapsed_keys
-FROM forms
-""")
-def q_unicode_nfc_dedup(spark, sf_dir):
-    """Unicode-normalized dedup keys: composed U+00E9 and decomposed
-    e+U+0301 spellings (planted deterministically on the corpus's first
-    words) are distinct raw strings but one NFC key — the normalize-before-
-    fingerprint step any multilingual validation/dedup pipeline needs.
-    Spark side is an Arrow-batched pandas UDF (no built-in expression
-    exists); DuckDB recomputes with its native nfc_normalize. Distinct
-    counts shuffle hashed keys only — at 100 TB the UDF rides the scan
-    stage and the exchange carries one key per row, no document bodies."""
-    from spanner_data_validator_spark.functions.normalize import (
-        nfc_normalize_udf,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    suffix = (F.when(F.col("doc_id") % 3 == 0, F.lit("é"))
-              .when(F.col("doc_id") % 3 == 1, F.lit("é"))
-              .otherwise(F.lit("e")))
-    raw = F.concat(F.split(F.lower("text"), " ").getItem(0), suffix)
-    forms = docs.select(raw.alias("raw"))
-    return forms.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("raw").alias("distinct_raw"),
-        F.countDistinct(nfc_normalize_udf(F.col("raw"))).alias("distinct_nfc"),
-        (F.countDistinct("raw")
-         - F.countDistinct(nfc_normalize_udf(F.col("raw"))))
-        .alias("collapsed_keys"))
-
-
-# ---------------------------------------------------------------------------
-# time-series regularization: resample + forward-fill (operators/timeseries)
-# ---------------------------------------------------------------------------
-
-@register("resample_ffill_hourly", """
-WITH ev AS (
-  SELECT user_id, ts, value FROM events WHERE user_id % 29 = 3
-),
-hourly AS (
-  SELECT user_id, date_trunc('hour', ts) AS bucket,
-         CAST(count(*) AS BIGINT) AS c, max(value) AS hv
-  FROM ev GROUP BY user_id, date_trunc('hour', ts)
-),
-bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS lo, date_trunc('hour', max(ts)) AS hi
-  FROM ev
-),
-spine AS (
-  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS bucket FROM bounds
-),
-grid AS (
-  SELECT k.user_id, s.bucket
-  FROM (SELECT DISTINCT user_id FROM ev) k CROSS JOIN spine s
-)
-SELECT g.user_id, g.bucket,
-       CAST(coalesce(h.c, 0) AS BIGINT) AS n_events,
-       last_value(h.hv IGNORE NULLS) OVER (
-         PARTITION BY g.user_id ORDER BY g.bucket
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill
-FROM grid g LEFT JOIN hourly h
-  ON g.user_id = h.user_id AND g.bucket = h.bucket
-""")
-def q_resample_ffill_hourly(spark, sf_dir):
-    """Dense hourly resampling with forward-fill over a sparse event
-    stream (operators/timeseries.resample_ffill): gap hours materialize
-    with n_events=0 and carry the last observed hourly max — the
-    regularization step rolling analytics need. Carried floats are
-    untouched (the per-bucket reduce is max, aggregation-order-free), so
-    the result is engine-exact. One corpus shuffle (bucket agg) + a
-    broadcast bucket spine + one keyed window exchange."""
-    from spanner_data_validator_spark.operators.timeseries import (
-        resample_ffill,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .where(F.col("user_id") % 29 == 3))
-    return resample_ffill(ev, "user_id", "ts", "value", unit="hour")
-
-
-# ---------------------------------------------------------------------------
-# graph analytics: degree-oriented triangle counting (operators/graph.py)
-# ---------------------------------------------------------------------------
-
-_COPURCHASE_EDGES = """
-SELECT l1.l_partkey AS src, l2.l_partkey AS dst
-FROM lineitem l1 JOIN lineitem l2
-  ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey
-"""
-
-
-def _triangle_oracle() -> str:
-    from spanner_data_validator_spark.operators.graph import triangle_sql
-
-    return "WITH " + triangle_sql(_COPURCHASE_EDGES, k=10)
-
-
-@register("triangle_top_nodes", _triangle_oracle())
-def q_triangle_top_nodes(spark, sf_dir):
-    """Triangle participation over the part co-purchase graph (parts
-    sharing an order), top-10 nodes. Degree-ordered edge orientation
-    bounds every wedge fan-out by O(sqrt(E)) — the hub-proof way to count
-    triangles at scale (a hub of degree d otherwise spawns d^2 wedges).
-    Canonical edges and the oriented table are materialized once for
-    their 2/3 consuming branches (aliased self-join branches re-run the
-    subplan — CLAUDE.md). Integer counts: engine-exact."""
-    from spanner_data_validator_spark.operators.graph import (
-        triangle_participation,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    edges = (l1.join(l2, (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-                     & (F.col("l1.l_partkey") < F.col("l2.l_partkey")))
-             .select(F.col("l1.l_partkey").alias("src"),
-                     F.col("l2.l_partkey").alias("dst")))
-    return triangle_participation(edges, k=10)
-
-
-# ---------------------------------------------------------------------------
-# incremental view maintenance: CDC changelog -> maintained aggregate
-# ---------------------------------------------------------------------------
-
-@register("cdc_agg_maintenance", """
-WITH final AS (
-  SELECT event_type, CAST(floor(value) AS BIGINT) AS m FROM events
-  WHERE event_id % 5 = 0 OR event_id % 7 <> 0
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(m) AS BIGINT) AS m_sum
-FROM final GROUP BY event_type
-""")
-def q_cdc_agg_maintenance(spark, sf_dir):
-    """Incremental view maintenance (operators/ivm.py): a per-type COUNT/SUM
-    view materialized over the base rows, then refreshed by FOLDING IN a
-    CDC changelog (inserts = the held-out rows, deletes = every 7th base
-    row, plus a planted key whose rows are all deleted and must vanish) —
-    never rescanning the base. The oracle computes the final state directly
-    from the full table: incremental refresh == recomputation, exactly (the
-    measure is floor(value), integer — a float SUM maintained incrementally
-    would drift by aggregation order). At 100 TB the refresh costs one pass
-    over the (tiny) changelog + a keyed outer join against the view."""
-    from spanner_data_validator_spark.operators.ivm import (
-        apply_changes,
-        base_agg,
-    )
-
-    measure = F.floor("value").cast("bigint")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "value")
-    synth = spark.range(2).select(
-        F.lit(-1).alias("event_id"), F.lit("zz_synth").alias("event_type"),
-        (F.lit(10.0) + F.col("id")).alias("value"))
-    base_rows = ev.where(F.col("event_id") % 5 != 0).unionByName(synth)
-    view = base_agg(base_rows, ["event_type"], measure)
-    changes = (
-        ev.where(F.col("event_id") % 5 == 0).withColumn("op", F.lit("I"))
-        .unionByName(ev.where((F.col("event_id") % 5 != 0)
-                              & (F.col("event_id") % 7 == 0))
-                     .withColumn("op", F.lit("D")))
-        .unionByName(synth.withColumn("op", F.lit("D"))))
-    return apply_changes(view, changes, ["event_type"], measure)
-
-
-# ---------------------------------------------------------------------------
-# LLM data mixing: temperature-flattened domain sampling (operators/sampling)
-# ---------------------------------------------------------------------------
-
-@register("temperature_mix_sample", """
-WITH tm_counts AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM documents
-  GROUP BY source
-),
-tm_w AS (SELECT source, n_docs, sqrt(CAST(n_docs AS DOUBLE)) AS weight
-         FROM tm_counts),
-tm_tot AS (SELECT list_reduce(list(weight ORDER BY source),
-                              (acc, x) -> acc + x) AS w_total FROM tm_w),
-tm_r AS (
-  SELECT source, n_docs, weight,
-         weight / w_total AS mix_rate,
-         least(CAST(1 AS DOUBLE),
-               (CAST(200 AS DOUBLE) * (weight / w_total))
-               / CAST(n_docs AS DOUBLE)) AS doc_rate
-  FROM tm_w CROSS JOIN tm_tot
-),
-tm_th AS (SELECT *, CAST(floor(doc_rate * 1048576) AS BIGINT) AS thr
-          FROM tm_r),
-tm_s AS (
-  SELECT d.source, CAST(count(*) AS BIGINT) AS sampled_n
-  FROM documents d JOIN tm_th t ON d.source = t.source
-  WHERE (('0x' || substr(md5('0:' || CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT
-         % 1048576) < t.thr
-  GROUP BY d.source
-)
-SELECT t.source, t.n_docs, t.weight, t.mix_rate, t.doc_rate,
-       CAST(coalesce(s.sampled_n, 0) AS BIGINT) AS sampled_n
-FROM tm_th t LEFT JOIN tm_s s ON t.source = s.source
-""")
-def q_temperature_mix_sample(spark, sf_dir):
-    """Temperature-flattened (tau=0.5) domain mixture over the document
-    sources, realized as a deterministic portable-hash sample
-    (operators/sampling.temperature_mixture). sqrt weights are one
-    correctly-rounded op; the normalizer is a sorted FOLD over the domain
-    weights (a plain float SUM would be aggregation-order-dependent and
-    engine-divergent — the oracle replays the fold with list_reduce);
-    thresholds use explicit floor (CAST truncates in Spark, rounds in
-    DuckDB). Per-doc decisions are a codegen filter with a broadcast
-    threshold map — rates DERIVED in-plan, unlike stratified_sample's
-    user-supplied map."""
-    from spanner_data_validator_spark.functions.hashing import (
-        portable_hash60,
-    )
-    from spanner_data_validator_spark.operators.sampling import (
-        temperature_mixture,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return temperature_mixture(docs, "source", "doc_id", tau=0.5,
-                               k_total=200, hash_fn=portable_hash60)
-
-
-# ---------------------------------------------------------------------------
-# streaming IVM: changelog stream -> maintained aggregate (streaming/ivm_sink)
-# ---------------------------------------------------------------------------
-
-@register("stream_ivm_maintain", """
-WITH final AS (
-  SELECT event_type, CAST(floor(value) AS BIGINT) AS m FROM events
-  WHERE event_id % 5 = 0 OR event_id % 7 <> 0
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(m) AS BIGINT) AS m_sum
-FROM final GROUP BY event_type
-""")
-def q_stream_ivm_maintain(spark, sf_dir):
-    """REAL streaming run of incremental view maintenance: the CDC
-    changelog arrives as a stream (wave 1 = base inserts, wave 2 = held-out
-    inserts + every-7th deletes), and each micro-batch folds into the
-    materialized per-type COUNT/SUM view through the chain-of-immutable-
-    versions sink (streaming/ivm_sink.ViewMaintenanceSink — batch-id
-    fenced: a replay recomputes from the same committed predecessor and
-    overwrites the same target, so crashes can't double-apply). The final
-    view equals the direct aggregate of the final row set — the oracle
-    computes that directly; per-batch cost scales with the VIEW, not the
-    corpus."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.ivm_sink import (
-        ViewMaintenanceSink,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", F.floor("value").cast("bigint").alias("m"))
-    wave1 = (ev.where(F.col("event_id") % 5 != 0)
-             .withColumn("op", F.lit("I")))
-    wave2 = (ev.where(F.col("event_id") % 5 == 0).withColumn("op", F.lit("I"))
-             .unionByName(ev.where((F.col("event_id") % 5 != 0)
-                                   & (F.col("event_id") % 7 == 0))
-                          .withColumn("op", F.lit("D"))))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_ivm_")
-    in_dir = f"{work}/in"
-    wave1.coalesce(1).write.parquet(in_dir)
-    import glob
-    import os as _os
-    import time as _time
-    t0 = _time.time()
-    w1_files = set(glob.glob(f"{in_dir}/*.parquet"))
-    for p in w1_files:
-        _os.utime(p, (t0 - 10, t0 - 10))
-    wave2.coalesce(1).write.mode("append").parquet(in_dir)
-    # pin file order: the file source sorts by mtime, and a same-second tie
-    # would let the delete wave precede its inserts (apply_changes raises)
-    for p in set(glob.glob(f"{in_dir}/*.parquet")) - w1_files:
-        _os.utime(p, (t0, t0))
-
-    changelog = (spark.readStream.schema(wave1.schema)
-                 .option("maxFilesPerTrigger", 1).parquet(in_dir)
-                 .select("event_type", "m", "op"))
-    sink = ViewMaintenanceSink(spark, f"{work}/view", ["event_type"], "m",
-                               "event_type string")
-    with _shuffle_partitions(spark, 8):
-        q = (changelog.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", f"{work}/ckpt")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-    return sink.latest()
-
-
-# ---------------------------------------------------------------------------
-# mapInArrow surface: Arrow-native substring stats (functions/udx.py)
-# ---------------------------------------------------------------------------
-
-@register("arrow_substr_stats", """
-WITH s AS (
-  SELECT doc_id, source,
-         CAST(len(regexp_extract_all(text, 'spark')) AS BIGINT) AS hits,
-         CAST(length(text) AS BIGINT) AS chars
-  FROM documents
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(hits) AS BIGINT) AS total_hits,
-       CAST(sum(chars) AS BIGINT) AS total_chars
-FROM s GROUP BY source
-""")
-def q_arrow_substr_stats(spark, sf_dir):
-    """mapInArrow end to end: per-doc substring counts + lengths computed
-    by pyarrow C++ kernels on RecordBatches (no pandas, no per-row
-    Python — the Arrow-native third UDX surface beside the pandas UDAF and
-    the Python UDTF), then a per-source integer rollup. The oracle
-    recomputes occurrences with regexp_extract_all; both sides scan
-    non-overlapping, and integer sums are engine-exact."""
-    from spanner_data_validator_spark.functions.udx import (
-        arrow_substr_stats,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    joined = arrow_substr_stats(docs, "doc_id", "text", "spark").join(
-        docs.select("doc_id", "source"), "doc_id")
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("hits").cast("bigint").alias("total_hits"),
-        F.sum("chars").cast("bigint").alias("total_chars"))
-
-
-# ---------------------------------------------------------------------------
-# snapshot table: copy-on-write DELETE + ADD COLUMN evolution (sources/snapshots)
-# ---------------------------------------------------------------------------
-
-@register("snapshot_delete_scan", """
-WITH labeled AS (
-  SELECT 'before' AS at, event_type FROM events
-  UNION ALL
-  SELECT 'after' AS at, event_type FROM events WHERE user_id % 10 <> 3
-)
-SELECT at, event_type, CAST(count(*) AS BIGINT) AS n
-FROM labeled GROUP BY at, event_type
-""")
-def q_snapshot_delete_scan(spark, sf_dir):
-    """Copy-on-write DELETE on a snapshot table (snapshots.delete_where):
-    only files containing matches are rewritten (untouched files stay live
-    as-is — at 100 TB a targeted delete rewrites a handful of files, not
-    the table), the rewrite commits as a DELETE snapshot, time travel
-    still shows the rows at the pre-delete version, and incremental
-    append consumers crossing the delete fail loudly instead of acting on
-    vanished rows. Output compares per-type counts before (time travel)
-    and after (current)."""
-    import tempfile
-
-    from spanner_data_validator_spark.sources import snapshots as snap
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "user_id")
-    t = tempfile.mkdtemp(prefix="sdv_q_snap_del_") + "/t"
-    snap.commit(ev.where(F.col("event_id") % 2 == 0), t, files=2)
-    snap.commit(ev.where(F.col("event_id") % 2 != 0), t, files=2)
-    pre_version = snap.current_version(t)
-    snap.delete_where(spark, t, F.col("user_id") % 10 == 3)
-    before = (snap.read_snapshot(spark, t, pre_version)
-              .select(F.lit("before").alias("at"), "event_type"))
-    after = (snap.read_snapshot(spark, t)
-             .select(F.lit("after").alias("at"), "event_type"))
-    return (before.unionByName(after)
-            .groupBy("at", "event_type").agg(F.count(F.lit(1)).alias("n")))
-
-
-@register("snapshot_schema_evolution", """
-WITH rows_v AS (
-  SELECT event_type,
-         CASE WHEN event_id % 2 <> 0
-              THEN CAST(event_id % 7 AS BIGINT) END AS quality
-  FROM events
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(quality) AS BIGINT) AS n_quality,
-       CAST(sum(quality) AS BIGINT) AS q_sum
-FROM rows_v GROUP BY event_type
-""")
-def q_snapshot_schema_evolution(spark, sf_dir):
-    """ADD COLUMN schema evolution on the snapshot table: the second
-    commit carries a new ``quality`` column; the manifest scan merges file
-    schemas so pre-evolution rows read the added column as NULL (the
-    Iceberg evolution contract; type CHANGES still conflict loudly, and a
-    rename reads as drop+add — documented divergence from id-based
-    mapping). One current-snapshot read aggregates across both file
-    generations."""
-    import tempfile
-
-    from spanner_data_validator_spark.sources import snapshots as snap
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    t = tempfile.mkdtemp(prefix="sdv_q_snap_evo_") + "/t"
-    snap.commit(ev.where(F.col("event_id") % 2 == 0)
-                .select("event_id", "event_type"), t)
-    snap.commit(ev.where(F.col("event_id") % 2 != 0)
-                .select("event_id", "event_type",
-                        (F.col("event_id") % 7).cast("bigint")
-                        .alias("quality")), t)
-    cur = snap.read_snapshot(spark, t)
-    return cur.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("quality").alias("n_quality"),
-        F.sum("quality").cast("bigint").alias("q_sum"))
-
-
-# ---------------------------------------------------------------------------
-# text shape analytics: per-document character diversity
-# ---------------------------------------------------------------------------
-
-@register("char_diversity_extremes", """
-WITH chars AS (
-  SELECT doc_id AS id,
-         unnest(string_split_regex(
-           regexp_replace(lower(text), '[^a-z]', '', 'g'), '')) AS ch
-  FROM documents
-),
-per_char AS (
-  SELECT id, ch, CAST(count(*) AS BIGINT) AS c FROM chars
-  WHERE ch <> '' GROUP BY id, ch
-),
-per_doc AS (
-  SELECT id, CAST(sum(c) AS BIGINT) AS n_letters,
-         CAST(sum(c * c) AS BIGINT) AS ssq
-  FROM per_char GROUP BY id
-)
-SELECT id, n_letters, ssq,
-       CAST(1 AS DOUBLE) - (CAST(ssq AS DOUBLE)
-         / (CAST(n_letters AS DOUBLE) * CAST(n_letters AS DOUBLE)))
-         AS simpson
-FROM per_doc ORDER BY simpson ASC, id LIMIT 10
-""")
-def q_char_diversity_extremes(spark, sf_dir):
-    """The 10 least character-diverse documents by exact Simpson index
-    (operators/quality.char_diversity) — the gibberish/repetition screen
-    with entropy's ranking power but ZERO log calls, so both engines
-    compute bit-identical doubles from the same integer counts. Letter
-    histograms reduce map-side; both exchanges carry doc-keyed counts."""
-    from spanner_data_validator_spark.operators.quality import (
-        char_diversity,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (char_diversity(docs, "doc_id", "text")
-            .orderBy(F.asc("simpson"), F.asc("id")).limit(10))
-
-
-# ---------------------------------------------------------------------------
-# distribution-level statistical validation (operators/stats.py)
-# ---------------------------------------------------------------------------
-
-@register("ks_value_two_sample", """
-WITH d AS (
-  SELECT value AS v,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS ca,
-         CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-              AS BIGINT) AS cb
-  FROM events
-  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-  GROUP BY value
-),
-c AS (
-  SELECT v,
-         CAST(sum(ca) OVER (ORDER BY v) AS BIGINT) AS cum_a,
-         CAST(sum(cb) OVER (ORDER BY v) AS BIGINT) AS cum_b
-  FROM d
-),
-t AS (
-  SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-         CAST(sum(cb) AS BIGINT) AS n_b
-  FROM d
-),
-k AS (
-  SELECT v, ABS(cum_a * t.n_b - cum_b * t.n_a) AS dn FROM c, t
-)
-SELECT t.n_a, t.n_b,
-       (SELECT CAST(max(dn) AS BIGINT) FROM k) AS ks_num,
-       (SELECT min(v) FROM k
-        WHERE dn = (SELECT max(dn) FROM k)) AS ks_at_value,
-       CAST((SELECT max(dn) FROM k) AS DOUBLE)
-         / (CAST(t.n_a AS DOUBLE) * CAST(t.n_b AS DOUBLE)) AS ks_stat
-FROM t
-""")
-def q_ks_value_two_sample(spark, sf_dir):
-    """Exact two-sample KS statistic between the click and view
-    populations of ``events.value`` — the distribution-drift gate a
-    migration validator runs when row counts reconcile but a lossy cast
-    is suspected. Scaled-integer D (no per-row float ECDF), distributed
-    prefix sum over value-range buckets (operators/stats.ks_two_sample);
-    the single-partition window touches only 256 bucket subtotals."""
-    from spanner_data_validator_spark.operators.stats import ks_two_sample
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ks_two_sample(
-        ev, F.col("value"),
-        F.col("event_type") == "click", F.col("event_type") == "view")
-
-
-@register("mad_outlier_profile", """
-WITH base AS (
-  SELECT event_type AS g, value AS v FROM events WHERE value IS NOT NULL
-),
-r AS (
-  SELECT g, v,
-         row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-         CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n
-  FROM base
-),
-m AS (
-  SELECT *,
-         max(CASE WHEN rn = CAST(floor((n + 1) / 2) AS BIGINT) THEN v END)
-           OVER (PARTITION BY g) AS med
-  FROM r
-),
-a AS (
-  SELECT g, n, abs(v - med) AS ad, med,
-         row_number() OVER (PARTITION BY g ORDER BY abs(v - med)) AS rn2
-  FROM m
-),
-mm AS (
-  SELECT *,
-         max(CASE WHEN rn2 = CAST(floor((n + 1) / 2) AS BIGINT) THEN ad END)
-           OVER (PARTITION BY g) AS mad
-  FROM a
-)
-SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n,
-       max(med) AS med, max(mad) AS mad,
-       CAST(sum(CASE WHEN ad > 5 * mad THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_outliers
-FROM mm GROUP BY g
-""")
-def q_mad_outlier_profile(spark, sf_dir):
-    """Per-event-type robust outlier profile: exact lower median, exact
-    MAD, and the |x - med| > 5*MAD outlier count
-    (operators/stats.robust_outlier_profile). Rank-arithmetic medians are
-    values that exist in the data — bit-identical across engines, unlike
-    interpolated percentiles. One group-keyed exchange."""
-    from spanner_data_validator_spark.operators.stats import (
-        robust_outlier_profile,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return robust_outlier_profile(ev, "event_type", F.col("value"), k=5)
-
 
 def _benford_case() -> str:
     from spanner_data_validator_spark.operators.stats import benford_expected
@@ -7083,2159 +211,10 @@ def _benford_case() -> str:
     return f"CASE digit {arms} END"
 
 
-@register("benford_first_digit", f"""
-WITH cents AS (
-  SELECT CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS c
-  FROM orders WHERE o_totalprice IS NOT NULL
-),
-cnt AS (
-  SELECT substring(CAST(c AS VARCHAR), 1, 1) AS digit,
-         CAST(count(*) AS BIGINT) AS observed
-  FROM cents WHERE c >= 1 GROUP BY 1
-),
-wn AS (
-  SELECT digit, observed,
-         CAST(sum(observed) OVER () AS BIGINT) AS n_total
-  FROM cnt
-),
-e AS (
-  SELECT digit, observed, n_total,
-         CAST(n_total AS DOUBLE) * ({_benford_case()}) AS expected
-  FROM wn
+# the domain modules register their queries on import
+from spanner_data_validator_spark.plans import (  # noqa: E402,F401
+    analytics_queries,
+    curation_queries,
+    streaming_queries,
+    validator_queries,
 )
-SELECT digit, observed, n_total, expected,
-       (CAST(observed AS DOUBLE) - expected)
-         * (CAST(observed AS DOUBLE) - expected) / expected AS chi_term
-FROM e
-""")
-def q_benford_first_digit(spark, sf_dir):
-    """Benford first-significant-digit conformance of order totals — the
-    fabricated-data screen (operators/stats.benford_profile). The digit
-    is taken from integer cents rendered to string (double-to-string
-    diverges across engines; log10 diverges at powers of ten); Benford
-    probabilities are Python-computed literals injected into both
-    engines; per-digit chi-square terms avoid any cross-row float sum."""
-    from spanner_data_validator_spark.operators.stats import benford_profile
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return benford_profile(orders, F.col("o_totalprice"))
-
-
-def _fd_oracle() -> str:
-    cands = [("l_orderkey", "l_returnflag"), ("l_orderkey", "l_linestatus"),
-             ("l_partkey", "l_suppkey"), ("l_orderkey", "l_shipdate")]
-    parts = []
-    for lhs, rhs in cands:
-        parts.append(f"""
-SELECT '{lhs}' AS lhs, '{rhs}' AS rhs,
-       CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_violating,
-       CAST(max(nd) AS BIGINT) AS max_rhs_per_lhs,
-       CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) = 0 AS BOOLEAN) AS holds
-FROM (SELECT {lhs} AS l, CAST(count(DISTINCT {rhs}) AS BIGINT) AS nd
-      FROM lineitem GROUP BY 1)""")
-    return " UNION ALL ".join(parts)
-
-
-@register("fd_discovery", _fd_oracle())
-def q_fd_discovery(spark, sf_dir):
-    """Functional-dependency discovery over candidate column pairs of
-    ``lineitem`` (operators/stats.fd_profile) — the schema-semantics
-    probe a validator runs before trusting a natural key: does lhs
-    determine rhs, and if not, how many lhs groups violate? Pure integer
-    counting, one lhs-keyed exchange per candidate."""
-    from spanner_data_validator_spark.operators.stats import fd_profile
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return fd_profile(li, [
-        ("l_orderkey", "l_returnflag"), ("l_orderkey", "l_linestatus"),
-        ("l_partkey", "l_suppkey"), ("l_orderkey", "l_shipdate")])
-
-
-@register("trend_slope_by_type", """
-WITH base AS (
-  SELECT event_type AS g, epoch_us(ts) // 1000000 AS x,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS y
-  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-),
-c AS (
-  SELECT g, x - min(x) OVER (PARTITION BY g) AS xc,
-         min(x) OVER (PARTITION BY g) AS x0, y
-  FROM base
-),
-t AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS n, CAST(max(x0) AS BIGINT) AS x0,
-         sum(xc) AS sx, sum(y) AS sy, sum(xc * y) AS sxy,
-         sum(xc * xc) AS sxx
-  FROM c GROUP BY g
-),
-s AS (
-  SELECT g, n, x0, sx, sy,
-         CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-              ELSE CAST(n * sxy - sx * sy AS DOUBLE)
-                   / CAST(n * sxx - sx * sx AS DOUBLE) END AS slope
-  FROM t
-)
-SELECT g AS event_type, n, slope,
-       (CAST(sy AS DOUBLE) - slope * CAST(sx + n * x0 AS DOUBLE))
-         / CAST(n AS DOUBLE) AS intercept
-FROM s
-""")
-def q_trend_slope_by_type(spark, sf_dir):
-    """Exact per-event-type OLS trend of value (as integer cents) on
-    event time (epoch seconds) — the drift detector a validator points
-    at a metric column (operators/stats.trend_slope). Every sum is an
-    exact integer (per-group min-centering keeps products in int64; the
-    n*Sxy - Sx*Sy combination runs in DECIMAL(38,0) = DuckDB HUGEINT),
-    so slope/intercept are single double ops on exact ints —
-    bit-identical across engines. One group-keyed exchange."""
-    from spanner_data_validator_spark.operators.stats import trend_slope
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp")))
-    x = F.expr("unix_micros(ts) div 1000000")
-    y = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    return trend_slope(ev.where(F.col("ts").isNotNull()),
-                       "event_type", x, y)
-
-
-@register("acf1_by_type", """
-WITH base AS (
-  SELECT event_type AS g, ts, event_id,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS y
-  FROM events WHERE value IS NOT NULL
-),
-p AS (
-  SELECT g, lag(y) OVER (PARTITION BY g ORDER BY ts, event_id) AS a,
-         y AS b
-  FROM base
-),
-f AS (SELECT g, a, b FROM p WHERE a IS NOT NULL),
-c AS (SELECT g, a - min(a) OVER (PARTITION BY g) AS xc, b FROM f),
-t AS (
-  SELECT g, CAST(count(*) AS BIGINT) AS m,
-         sum(xc) AS sx, sum(b) AS sy, sum(xc * b) AS sxy,
-         sum(xc * xc) AS sxx, sum(b * b) AS syy
-  FROM c GROUP BY g
-)
-SELECT g AS event_type, m AS n_pairs,
-       CASE WHEN (m * sxx - sx * sx = 0) OR (m * syy - sy * sy = 0)
-            THEN NULL
-            ELSE CAST(m * sxy - sx * sy AS DOUBLE)
-                 / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)
-                        * CAST(m * syy - sy * sy AS DOUBLE)) END AS acf1
-FROM t
-""")
-def q_acf1_by_type(spark, sf_dir):
-    """Per-event-type lag-1 autocorrelation of the value series in event
-    order (operators/stats.lag1_autocorr) — the serial-dependence probe
-    (a near-1 ACF on a supposedly independent metric flags duplicated or
-    interpolated rows). Pearson over adjacent pairs in exact integer
-    sums; (ts, event_id) makes the pairing order total so both engines
-    pair identical rows. sqrt is IEEE correctly-rounded — engine-exact."""
-    from spanner_data_validator_spark.operators.stats import lag1_autocorr
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    y = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    return lag1_autocorr(ev, "event_type",
-                         [F.col("ts"), F.col("event_id")], y)
-
-
-@register("chi2_type_by_dow", """
-WITH cells AS (
-  SELECT event_type AS r, CAST(dayofweek(ts) + 1 AS INT) AS c,
-         CAST(count(*) AS BIGINT) AS observed
-  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-  GROUP BY 1, 2
-),
-t AS (
-  SELECT r, c, observed,
-         CAST(sum(observed) OVER (PARTITION BY r) AS BIGINT) AS row_total,
-         CAST(sum(observed) OVER (PARTITION BY c) AS BIGINT) AS col_total,
-         CAST(sum(observed) OVER () AS BIGINT) AS n
-  FROM cells
-)
-SELECT r, c, observed, row_total, col_total, n,
-       CAST(row_total AS DOUBLE) * CAST(col_total AS DOUBLE)
-         / CAST(n AS DOUBLE) AS expected,
-       (CAST(observed AS DOUBLE)
-          - CAST(row_total AS DOUBLE) * CAST(col_total AS DOUBLE)
-            / CAST(n AS DOUBLE))
-       * (CAST(observed AS DOUBLE)
-          - CAST(row_total AS DOUBLE) * CAST(col_total AS DOUBLE)
-            / CAST(n AS DOUBLE))
-       / (CAST(row_total AS DOUBLE) * CAST(col_total AS DOUBLE)
-          / CAST(n AS DOUBLE)) AS chi_term
-FROM t
-""")
-def q_chi2_type_by_dow(spark, sf_dir):
-    """Chi-square independence cells between event_type and day-of-week
-    (operators/stats.chi2_contingency_cells) — the segment-balance check
-    (a migration that drops a shard skews one margin). Per-cell double
-    terms on exact integer marginals avoid cross-row float sums; Spark's
-    dayofweek (1=Sunday) is DuckDB's dayofweek()+1. Marginals come from
-    windows over the 35-row cell table, never the input."""
-    from spanner_data_validator_spark.operators.stats import (
-        chi2_contingency_cells,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return chi2_contingency_cells(
-        ev.where(F.col("ts").isNotNull()),
-        F.col("event_type"), F.dayofweek("ts"))
-
-
-@register("heavy_hitters_tri", """
-WITH it AS (
-  SELECT CAST(floor(sqrt(CAST(event_id % 250000 AS DOUBLE))) AS BIGINT)
-           AS item
-  FROM events
-),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM it),
-c AS (SELECT item, CAST(count(*) AS BIGINT) AS cnt FROM it GROUP BY item)
-SELECT c.item, c.cnt, n.n_total
-FROM c, n WHERE c.cnt * 257 > n.n_total
-""")
-def q_heavy_hitters_tri(spark, sf_dir):
-    """Sketch-accelerated EXACT heavy hitters (count > n/257) via
-    Misra-Gries(256) candidate pruning + exact verification
-    (operators/sketch.heavy_hitters_exact). The item key is a planted
-    triangular distribution — floor(sqrt(event_id % 250000)) makes key v
-    appear ~2v+1 times — because the corpus's natural keys are uniform
-    by construction; at sf0.1 the ~317-key domain exceeds the 256
-    counters, so the sketch genuinely prunes. The exact re-count makes
-    the output independent of which extra candidates MG emitted, so the
-    oracle is plain SQL."""
-    from spanner_data_validator_spark.operators.sketch import (
-        heavy_hitters_exact,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    item = F.floor(F.sqrt((F.col("event_id") % 250000).cast("double")))
-    return heavy_hitters_exact(ev, item, 256)
-
-
-@register("ledger_first_divergence", """
-WITH src AS (
-  SELECT user_id, ts, event_id,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
-tgt AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN event_id % 50 = 0 THEN c + 7 ELSE c END AS c
-  FROM src WHERE event_id % 50 <> 1
-  UNION ALL
-  SELECT user_id, ts, event_id + 100000000 AS event_id, c
-  FROM src WHERE event_id % 50 = 2
-),
-sj AS (
-  SELECT user_id,
-         CAST(row_number() OVER w AS BIGINT) AS rn,
-         CAST(sum(c) OVER w AS BIGINT) AS src_cum
-  FROM src WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-tj AS (
-  SELECT user_id,
-         CAST(row_number() OVER w AS BIGINT) AS rn,
-         CAST(sum(c) OVER w AS BIGINT) AS tgt_cum
-  FROM tgt WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-j AS (
-  SELECT coalesce(sj.user_id, tj.user_id) AS u,
-         coalesce(sj.rn, tj.rn) AS rn, src_cum, tgt_cum
-  FROM sj FULL JOIN tj ON sj.user_id = tj.user_id AND sj.rn = tj.rn
-),
-d AS (SELECT * FROM j WHERE src_cum IS DISTINCT FROM tgt_cum),
-f AS (
-  SELECT u, CAST(min(rn) AS BIGINT) AS first_rn,
-         CAST(count(*) AS BIGINT) AS n_diverged
-  FROM d GROUP BY u
-)
-SELECT f.u AS user_id, f.first_rn, d.src_cum, d.tgt_cum, f.n_diverged
-FROM f JOIN d ON d.u = f.u AND d.rn = f.first_rn
-""")
-def q_ledger_first_divergence(spark, sf_dir):
-    """Running-balance reconciliation over the planted dual stream: per
-    user, the earliest row position where the source and target
-    cumulative cent sums diverge, plus how many positions disagree
-    (operators/diff.first_running_divergence). Totals-level validation
-    (summary_validation) misses dropped+compensating pairs; the running
-    sum pinpoints the first bad row. Integer cents only — float running
-    sums are accumulation-order-dependent. The planted rule mutates
-    value (+7 cents where key%50=0), drops key%50=1, inserts key%50=2."""
-    from spanner_data_validator_spark.operators.diff import (
-        first_running_divergence,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    src = (ev.where(F.col("value").isNotNull())
-           .select("user_id", F.col("ts").cast("timestamp").alias("ts"),
-                   "event_id", cents.alias("c")))
-    kept = src.where(F.col("event_id") % 50 != 1).withColumn(
-        "c", F.when(F.col("event_id") % 50 == 0, F.col("c") + 7)
-              .otherwise(F.col("c")))
-    ins = (src.where(F.col("event_id") % 50 == 2)
-           .withColumn("event_id", F.col("event_id") + F.lit(100_000_000)))
-    tgt = kept.unionByName(ins)
-    return first_running_divergence(
-        src, tgt, key="user_id", order=["ts", "event_id"],
-        amount=F.col("c"))
-
-
-@register("last_touch_attribution", """
-WITH t AS (
-  SELECT user_id, event_type,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-  FROM events
-)
-SELECT coalesce(touch, 'direct') AS attributed_type,
-       CAST(count(*) AS BIGINT) AS n_conversions,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM t WHERE event_type = 'purchase' GROUP BY 1
-""")
-def q_last_touch_attribution(spark, sf_dir):
-    """Last-touch conversion attribution: every purchase credited to the
-    user's nearest preceding non-purchase event
-    (operators/funnel.last_touch_attribution). The carry-forward is one
-    ignorenulls last() over a user-keyed window — no time-band self-join
-    (quadratic in hot users). (ts, event_id) totalizes the order so both
-    engines credit identical rows."""
-    from spanner_data_validator_spark.operators.funnel import (
-        last_touch_attribution,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("ts", F.col("ts").cast("timestamp")))
-    return last_touch_attribution(
-        ev, user="user_id", ts="ts", tiebreak="event_id",
-        etype="event_type", conversion="purchase")
-
-
-@register("rfm_segments", """
-WITH pu AS (
-  SELECT user_id,
-         CAST(max(epoch_us(ts) // 86400000000) AS BIGINT) AS last_day,
-         CAST(count(*) AS BIGINT) AS f,
-         CAST(sum(CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT)) AS BIGINT)
-           AS m
-  FROM events GROUP BY user_id
-),
-s AS (
-  SELECT user_id,
-         (SELECT max(last_day) FROM pu) - last_day AS r, f, m
-  FROM pu
-),
-q AS (
-  SELECT CAST(ntile(5) OVER (ORDER BY r, user_id) AS INT) AS r_q,
-         CAST(ntile(5) OVER (ORDER BY f DESC, user_id) AS INT) AS f_q,
-         CAST(ntile(5) OVER (ORDER BY m DESC, user_id) AS INT) AS m_q,
-         m
-  FROM s
-)
-SELECT r_q, f_q, m_q, CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(m) AS BIGINT) AS m_sum
-FROM q GROUP BY 1, 2, 3
-""")
-def q_rfm_segments(spark, sf_dir):
-    """RFM customer segmentation (operators/profile.rfm_segments):
-    per-user recency (integer days via epoch div), frequency, monetary
-    (integer cents) quintiled with (metric, user_id) tie-breaks so ntile
-    assigns identical buckets in both engines; reported as segment-cell
-    counts. Events reduce to |users| rows before any global window."""
-    from spanner_data_validator_spark.operators.profile import rfm_segments
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    return rfm_segments(ev, user="user_id", ts="ts", amount=cents)
-
-
-@register("ppjoin_jaccard_pairs", _JACCARD_SQL)
-def q_ppjoin_jaccard_pairs(spark, sf_dir):
-    """The SAME exact-Jaccard near-dup answer as ngram_jaccard_pairs,
-    computed by a THIRD candidate generator: PPJoin-style prefix
-    filtering (operators/dedup.prefix_filter_jaccard_pairs). Docs probe
-    only their |x|-ceil(t|x|)+1 rarest shingles against the inverted
-    index — complete by the overlap bound, no LSH false negatives, and
-    the rarity rank runs through the bucketed distributed row_number
-    (no single-partition vocabulary window). One oracle, three plans:
-    the judge can diff candidate strategies at fixed semantics."""
-    from spanner_data_validator_spark.operators.dedup import (
-        prefix_filter_jaccard_pairs,
-    )
-
-    corpus = _neardup_corpus(spark, sf_dir)
-    return prefix_filter_jaccard_pairs(
-        corpus, "doc_id", "text", n=3, threshold=0.7,
-        max_shingle_df=_MAX_SHINGLE_DF)
-
-
-@register("sorted_neighborhood_linkage", """
-WITH part_k AS (
-  SELECT p_partkey, p_name || '#' || CAST(p_partkey AS VARCHAR) AS lk_key
-  FROM part
-),
-keys AS (
-  SELECT p_partkey AS i, lk_key AS k FROM part_k
-  UNION ALL
-  SELECT p_partkey + 10000000 AS i,
-         substring(lk_key, 1, CAST(p_partkey % length(lk_key) AS INT))
-           || substring(lk_key,
-                        CAST(p_partkey % length(lk_key) AS INT) + 2,
-                        length(lk_key)) AS k
-  FROM part_k WHERE p_partkey % 5 = 0
-),
-r AS (
-  SELECT i, k, row_number() OVER (ORDER BY k, i) AS rn FROM keys
-)
-SELECT a.i AS id_a, b.i AS id_b, a.k AS key_a, b.k AS key_b,
-       CAST(levenshtein(a.k, b.k) AS INT) AS dist
-FROM r a JOIN r b ON b.rn >= a.rn + 1 AND b.rn <= a.rn + 3
-WHERE levenshtein(a.k, b.k) <= 1
-""")
-def q_sorted_neighborhood_linkage(spark, sf_dir):
-    """Sorted-neighborhood blocking over the same drifted-key corpus as
-    fuzzy_key_match (operators/linkage.sorted_neighborhood_pairs):
-    global key order via bucketed distributed row_number, each key
-    compared with its 3 successors, levenshtein<=1 verification. Finds
-    the late-position drifts (sort-adjacent) and — deterministically —
-    misses early-position ones: the classic ER trade, run as a third
-    blocker beside deletion and segment blocking."""
-    from spanner_data_validator_spark.operators.linkage import (
-        sorted_neighborhood_pairs,
-    )
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet") \
-        .withColumn("lk_key", F.concat_ws("#", "p_name",
-                                          F.col("p_partkey").cast("string")))
-    src = part.select(F.col("p_partkey").alias("id"),
-                      F.col("lk_key").alias("key"))
-    pos = (F.col("p_partkey") % F.length("lk_key")).cast("int")
-    drifted = F.concat(F.col("lk_key").substr(F.lit(1), pos),
-                       F.col("lk_key").substr(pos + F.lit(2),
-                                              F.length("lk_key")))
-    tgt = (part.where(F.col("p_partkey") % 5 == 0)
-           .select((F.col("p_partkey") + 10_000_000).alias("id"),
-                   drifted.alias("key")))
-    return sorted_neighborhood_pairs(
-        src.unionByName(tgt), "key", "id", window=4, max_distance=1)
-
-
-@register("basket_pair_lift", """
-WITH items AS (
-  SELECT DISTINCT l_orderkey AS grp, l_partkey AS it FROM lineitem
-),
-gsz AS (SELECT grp FROM items GROUP BY grp HAVING count(*) <= 64),
-it2 AS (SELECT items.* FROM items JOIN gsz USING (grp)),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_groups FROM gsz),
-pc AS (
-  SELECT a.it AS item_a, b.it AS item_b,
-         CAST(count(*) AS BIGINT) AS n_pair
-  FROM it2 a JOIN it2 b ON a.grp = b.grp AND a.it < b.it
-  GROUP BY 1, 2
-),
-ic AS (SELECT it, CAST(count(*) AS BIGINT) AS n_it FROM it2 GROUP BY it)
-SELECT item_a, item_b, n_pair,
-       na.n_it AS n_a, nb.n_it AS n_b, n_groups,
-       CAST(n_pair * n_groups AS DOUBLE)
-         / CAST(na.n_it * nb.n_it AS DOUBLE) AS lift
-FROM pc
-JOIN ic na ON pc.item_a = na.it
-JOIN ic nb ON pc.item_b = nb.it
-CROSS JOIN n
-ORDER BY n_pair DESC, lift DESC, item_a, item_b
-LIMIT 50
-""")
-def q_basket_pair_lift(spark, sf_dir):
-    """Market-basket mining (operators/basket.pair_lift): top-50 part
-    pairs co-occurring in orders, with supports and lift. The Spark plan
-    expands pairs INSIDE each basket array via chained Generates (no
-    self-join — one lineitem scan, one group shuffle, mega-basket cap
-    before the quadratic step); the oracle is the textbook self-join.
-    Lift is one IEEE division of exact BIGINT products, so the (n_pair
-    desc, lift desc, a, b) top-50 order is engine-identical."""
-    from spanner_data_validator_spark.operators.basket import pair_lift
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return pair_lift(li, "l_orderkey", "l_partkey",
-                     max_basket=64, min_pair_count=1, k=50)
-
-
-@register("hop_distance_levels", """
-WITH RECURSIVE e0 AS (
-  SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-  FROM lineitem
-),
-e AS (SELECT src, dst FROM e0 UNION SELECT dst AS src, src AS dst FROM e0),
-seeds AS (
-  SELECT DISTINCT l_partkey * 2 AS node FROM lineitem
-  WHERE l_partkey % 997 = 0
-),
-bfs AS (
-  SELECT node, 0 AS d FROM seeds
-  UNION
-  SELECT e.dst AS node, bfs.d + 1 AS d
-  FROM bfs JOIN e ON bfs.node = e.src WHERE bfs.d < 4
-),
-lv AS (SELECT node, min(d) AS hops FROM bfs GROUP BY node)
-SELECT CAST(hops AS INT) AS hops, CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(sum(node) AS BIGINT) AS node_sum,
-       CAST(min(node) AS BIGINT) AS node_min,
-       CAST(max(node) AS BIGINT) AS node_max
-FROM lv GROUP BY hops ORDER BY hops
-""")
-def q_hop_distance_levels(spark, sf_dir):
-    """BFS hop-distance levels (operators/graph.hop_distance) over the
-    bipartite part-supplier graph (nodes 2*part / 2*supp+1), seeded at
-    l_partkey % 997 == 0. Spark runs the frontier-expansion loop (per
-    round: frontier-edge equi-join + anti-join of the visited set,
-    lineage truncated); the oracle is the same reachability as a
-    WITH RECURSIVE UNION with a d<4 guard, re-expressed as a bounded
-    iterative DataFrame loop (Spark 4.1's native WITH RECURSIVE would
-    also run it; the loop keeps explicit per-round lineage truncation for
-    scale).
-    Levels are summarized per hop (count/sum/min/max of node ids)."""
-    from spanner_data_validator_spark.operators.graph import hop_distance
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = li.select((F.col("l_partkey") * 2).alias("src"),
-                      (F.col("l_suppkey") * 2 + 1).alias("dst"))
-    seeds = (li.where(F.col("l_partkey") % 997 == 0)
-             .select((F.col("l_partkey") * 2).alias("node")))
-    lv = hop_distance(edges, seeds, max_hops=4, undirected=True)
-    return (lv.groupBy(F.col("hops").cast("int").alias("hops"))
-            .agg(F.count(F.lit(1)).alias("n_nodes"),
-                 F.sum("node").alias("node_sum"),
-                 F.min("node").alias("node_min"),
-                 F.max("node").alias("node_max"))
-            .orderBy("hops"))
-
-
-@register("equidepth_hist_price", """
-WITH c AS (
-  SELECT CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS cents,
-         o_orderkey
-  FROM orders
-),
-t AS (
-  SELECT cents,
-         CAST(ntile(16) OVER (ORDER BY cents, o_orderkey) AS INT) AS bucket
-  FROM c
-)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n,
-       CAST(min(cents) AS BIGINT) AS lo,
-       CAST(max(cents) AS BIGINT) AS hi,
-       CAST(sum(cents) AS BIGINT) AS cents_sum
-FROM t GROUP BY bucket ORDER BY bucket
-""")
-def q_equidepth_hist_price(spark, sf_dir):
-    """Equi-depth (equal-height) 16-bucket histogram of order value —
-    the optimizer-statistics histogram form, built on
-    layout.distributed_ntile so the global quantile bucketing runs with
-    NO single-task window (value-range bins shard the rank; NTILE fill
-    rule closed-form from (rank, n)). Per bucket: count and exact cents
-    min/max/sum. The oracle is plain NTILE — same buckets bit-for-bit,
-    (cents, orderkey) total order making ties deterministic."""
-    from spanner_data_validator_spark.operators.layout import (
-        distributed_ntile,
-    )
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    c = o.select(cents.alias("cents"), "o_orderkey")
-    t = distributed_ntile(
-        c, F.col("cents"),
-        [F.col("cents").asc(), F.col("o_orderkey").asc()], 16,
-        out_col="bucket")
-    return (t.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min("cents").alias("lo"),
-                 F.max("cents").alias("hi"),
-                 F.sum("cents").alias("cents_sum"))
-            .orderBy("bucket"))
-
-
-@register("twap_by_type", """
-WITH e AS (
-  SELECT event_type, epoch_us(ts) AS us,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS v, event_id
-  FROM events
-),
-d AS (
-  SELECT event_type, v,
-         (lead(us) OVER (PARTITION BY event_type
-                         ORDER BY us, event_id) - us) // 1000000 AS dur
-  FROM e
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_intervals,
-       CAST(sum(dur) AS BIGINT) AS dur_s_sum,
-       CAST(sum(v * dur) AS BIGINT) AS weighted_sum,
-       CAST(sum(v * dur) AS DOUBLE) / CAST(sum(dur) AS DOUBLE)
-         AS twap_units
-FROM d WHERE dur IS NOT NULL GROUP BY event_type
-""")
-def q_twap_by_type(spark, sf_dir):
-    """Time-weighted average value per event type
-    (operators/stats.time_weighted_mean): each event's cents hold until
-    the type's next event, so bursty sampling can't bias the mean the
-    way plain AVG is biased. Hold durations are exact integer seconds
-    ((a - a%%b)/b, matching the oracle's // floor division), both sums
-    are BIGINT, and the single final division is IEEE-identical. One
-    group-keyed window + one aggregate — no global sort."""
-    from spanner_data_validator_spark.operators.stats import (
-        time_weighted_mean,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    return time_weighted_mean(ev, "event_type", F.col("ts"), cents,
-                              F.col("event_id"))
-
-
-@register("cusum_changepoint", """
-WITH daily AS (
-  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         CAST(sum(CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT))
-              AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-),
-c AS (
-  SELECT event_type, day, x,
-         sum(x) OVER (PARTITION BY event_type ORDER BY day) AS ck,
-         row_number() OVER (PARTITION BY event_type ORDER BY day) AS k,
-         sum(x) OVER (PARTITION BY event_type) AS t,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM daily
-),
-s AS (SELECT event_type, n, t, abs(n * ck - k * t) AS ad, day FROM c),
-m AS (SELECT event_type, max(ad) AS mad FROM s GROUP BY event_type)
-SELECT s.event_type,
-       CAST(max(s.n) AS BIGINT) AS n_points,
-       CAST(max(s.t) AS BIGINT) AS total_units,
-       CAST(max(s.ad) AS BIGINT) AS max_abs_d,
-       CAST(min(s.day) AS BIGINT) AS cp_order,
-       CAST(max(s.ad) AS DOUBLE)
-         / CAST(max(s.n) * max(s.n) AS DOUBLE) AS cusum_stat
-FROM s JOIN m ON s.event_type = m.event_type AND s.ad = m.mad
-GROUP BY s.event_type
-""")
-def q_cusum_changepoint(spark, sf_dir):
-    """CUSUM level-shift scan (operators/stats.cusum_changepoint) over
-    each type's daily cents series: D_k = n*cumsum_k - k*total is n
-    times the centered CUSUM, exact in BIGINT, so the peak |D_k| and its
-    argmax day are engine-identical (ties break to the earliest day —
-    max(struct(|D|, -day)) on the Spark side, a mad-equality join +
-    min(day) in the oracle). The statistic normalizes once at the end.
-    Series rows are per (type, day) — window work is group-keyed and
-    tiny relative to the event scan feeding the daily aggregate."""
-    from spanner_data_validator_spark.operators.stats import (
-        cusum_changepoint,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    daily = (ev.groupBy("event_type", day.alias("day"))
-             .agg(F.sum(cents).alias("x")))
-    return cusum_changepoint(daily, "event_type", F.col("day"),
-                             F.col("x"))
-
-
-@register("three_way_vote", """
-WITH src AS (
-  SELECT event_id AS key,
-         concat_ws('|', coalesce(event_type,''), coalesce(props,''),
-                   coalesce(CAST(user_id AS STRING),'')) AS payload
-  FROM events
-),
-tgt AS (
-  SELECT key,
-         CASE WHEN key % 50 = 0 THEN payload || '#mut' ELSE payload END
-           AS payload
-  FROM src WHERE key % 50 <> 1
-  UNION ALL
-  SELECT key + 100000000 AS key, payload FROM src WHERE key % 50 = 2
-),
-bak AS (
-  SELECT key,
-         CASE WHEN key % 49 = 0 THEN payload || '#mutb' ELSE payload END
-           AS payload
-  FROM src WHERE key % 50 <> 3
-  UNION ALL
-  SELECT key + 200000000 AS key, payload FROM src WHERE key % 50 = 4
-),
-j AS (
-  SELECT s.payload AS sp, t.payload AS tp, b.payload AS bp
-  FROM src s
-  FULL JOIN tgt t ON s.key = t.key
-  FULL JOIN bak b ON coalesce(s.key, t.key) = b.key
-),
-c AS (
-  SELECT
-    (CASE WHEN sp IS NOT NULL THEN 1 ELSE 0 END
-     + CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END
-     + CASE WHEN bp IS NOT NULL THEN 1 ELSE 0 END) AS n_present,
-    CASE WHEN sp = tp THEN TRUE ELSE FALSE END AS st_eq,
-    CASE WHEN sp = bp THEN TRUE ELSE FALSE END AS sb_eq,
-    CASE WHEN tp = bp THEN TRUE ELSE FALSE END AS tb_eq,
-    CASE WHEN sp = tp OR sp = bp THEN sp
-         WHEN tp = bp THEN tp END AS vote
-  FROM j
-),
-cls AS (
-  SELECT CASE
-    WHEN n_present = 3 AND st_eq AND sb_eq THEN 'ALL_MATCH'
-    WHEN n_present = 3 AND (st_eq OR sb_eq OR tb_eq) THEN 'MAJORITY'
-    WHEN n_present = 3 THEN 'ALL_DIFFER'
-    WHEN n_present = 2 AND (st_eq OR sb_eq OR tb_eq) THEN 'PAIR_MATCH'
-    WHEN n_present = 2 THEN 'PAIR_DIFFER'
-    ELSE 'SINGLETON' END AS status,
-    vote
-  FROM c
-)
-SELECT status, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN vote IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_votable
-FROM cls GROUP BY status
-""")
-def q_three_way_vote(spark, sf_dir):
-    """Three-replica majority vote (operators/comparator.
-    classify_three_way): the 2-side CoGBK classify extended to the
-    source/target/backup triple, with planted divergence cycles chosen
-    so every status occurs — co-prime mutation cycles (%50 target, %49
-    backup) collide at %2450 for ALL_DIFFER, intersect the %50==1
-    target-drop residue for PAIR_DIFFER (a %70 cycle would make that
-    combination CRT-infeasible: gcd(70,50)=10 divides no residue gap), per-side drop cycles give
-    PAIR_* and SINGLETON. Reports per-status key counts and how many
-    keys have a writable majority value (the auto-repair frontier).
-    Both extra joins stay keyed on `key` — one partitioning reused."""
-    from spanner_data_validator_spark.operators.comparator import (
-        classify_three_way,
-    )
-
-    # src fans out into 5 synth branches (itself + 2 per derived
-    # replica) — pin it or each branch re-scans events (multi-branch
-    # rescan trap; real deployments read 3 distinct tables instead)
-    src = events_source(spark, sf_dir).localCheckpoint(eager=True)
-    tgt = events_target(src)
-    kept = src.where(F.col("key") % 50 != 3)
-    mutated = kept.withColumn(
-        "payload",
-        F.when(F.col("key") % 49 == 0,
-               F.concat(F.col("payload"), F.lit("#mutb")))
-         .otherwise(F.col("payload")))
-    inserted = src.where(F.col("key") % 50 == 4).withColumn(
-        "key", F.col("key") + F.lit(200_000_000))
-    bak = mutated.unionByName(inserted)
-
-    def prep(df):
-        return df.select(
-            F.col("key"),
-            fingerprint_expr(F.col("payload")).alias("fingerprint"))
-
-    cls = classify_three_way(prep(src), prep(tgt), prep(bak), ["key"])
-    return (cls.groupBy("status")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.col("vote_fp").isNotNull().cast("long"))
-                  .alias("n_votable")))
-
-
-@register("theil_sen_daily", """
-WITH daily AS (
-  SELECT event_type AS g, epoch_us(ts) // 86400000000 AS x,
-         CAST(sum(CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT))
-              AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-),
-pr AS (
-  SELECT a.g, b.y - a.y AS dy, b.x - a.x AS dx
-  FROM daily a JOIN daily b ON a.g = b.g AND a.x < b.x
-),
-r AS (
-  SELECT g, CAST(dy AS DOUBLE) / CAST(dx AS DOUBLE) AS q,
-         row_number() OVER (PARTITION BY g ORDER BY
-           CAST(dy AS DOUBLE) / CAST(dx AS DOUBLE), dy, dx) AS rn,
-         count(*) OVER (PARTITION BY g) AS m
-  FROM pr
-)
-SELECT g AS event_type, CAST(m AS BIGINT) AS n_pairs, q AS med_slope
-FROM r WHERE rn = (m + 1 - (m + 1) % 2) // 2
-""")
-def q_theil_sen_daily(spark, sf_dir):
-    """Theil-Sen robust trend (operators/stats.theil_sen_trend) of each
-    type's daily cents series — the median pairwise slope, 29%-breakdown
-    where OLS (trend_slope) follows a single corrupted day. Spark
-    expands the pairs inside each group's sorted point array (chained
-    Generates, no self-join); the oracle is the textbook pairwise
-    self-join. Slopes are single IEEE divisions of exact integer
-    deltas, so the (slope, dy, dx) order and the lower-median pick are
-    engine-identical."""
-    from spanner_data_validator_spark.operators.stats import (
-        theil_sen_trend,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    daily = (ev.groupBy("event_type", day.alias("day"))
-             .agg(F.sum(cents).alias("y")))
-    return theil_sen_trend(daily, "event_type", F.col("day"),
-                           F.col("y"))
-
-
-@register("trimmed_mean_price", """
-WITH r AS (
-  SELECT o_orderpriority AS g,
-         CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS v,
-         row_number() OVER (PARTITION BY o_orderpriority ORDER BY
-           CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT)) AS rn,
-         count(*) OVER (PARTITION BY o_orderpriority) AS n
-  FROM orders
-),
-t AS (
-  SELECT g, v, rn, n,
-         CAST(floor(CAST(n AS DOUBLE) * CAST(0.1 AS DOUBLE))
-              AS BIGINT) AS tr
-  FROM r
-)
-SELECT g, CAST(max(n) AS BIGINT) AS n,
-       CAST(max(tr) AS BIGINT) AS n_trim_each,
-       CAST(sum(v) AS BIGINT) AS kept_sum,
-       CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         AS trimmed_mean
-FROM t WHERE rn > tr AND rn <= n - tr GROUP BY g
-""")
-def q_trimmed_mean_price(spark, sf_dir):
-    """10% two-sided trimmed mean of order value per priority
-    (operators/stats.trimmed_mean): rank-trim in exact cents, one final
-    division. Boundary ties share the same value so the kept multiset
-    is deterministic; the trim count multiplies n by a DOUBLE-cast
-    fraction in BOTH engines (a DECIMAL 0.1 floors differently at
-    representability edges — the oracle-fraction trap)."""
-    from spanner_data_validator_spark.operators.stats import trimmed_mean
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    out = trimmed_mean(o, "o_orderpriority", cents, 0.1)
-    return out.select(F.col("o_orderpriority").alias("g"), "n",
-                      "n_trim_each", "kept_sum", "trimmed_mean")
-
-
-@register("mann_whitney_value", """
-WITH s AS (
-  SELECT CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS v,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS ca,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS cb
-  FROM events
-  WHERE value IS NOT NULL AND event_type IN ('purchase', 'click')
-),
-g AS (
-  SELECT v, CAST(sum(ca) AS BIGINT) AS ca, CAST(sum(cb) AS BIGINT) AS cb
-  FROM s GROUP BY v
-),
-c AS (
-  SELECT v, ca, cb,
-         coalesce(sum(ca + cb) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS less
-  FROM g
-),
-a AS (
-  SELECT CAST((SELECT sum(ca) FROM g) AS BIGINT) AS n_a,
-         CAST((SELECT sum(cb) FROM g) AS BIGINT) AS n_b,
-         CAST(sum(ca * (2 * less + ca + cb + 1)) AS BIGINT) AS two_r1
-  FROM c
-)
-SELECT n_a, n_b, two_r1,
-       CAST(two_r1 - n_a * (n_a + 1) AS BIGINT) AS two_u1,
-       CAST(2 * n_a * n_b - (two_r1 - n_a * (n_a + 1)) AS BIGINT)
-         AS two_u2,
-       CAST(two_r1 - n_a * (n_a + 1) AS DOUBLE)
-         / CAST(2 * n_a * n_b AS DOUBLE) AS auc
-FROM a
-""")
-def q_mann_whitney_value(spark, sf_dir):
-    """Exact Mann-Whitney U (operators/stats.mann_whitney_u) comparing
-    purchase vs click value distributions: doubled rank sums stay
-    BIGINT under average-rank ties (2*avgrank = 2*less + eq + 1), so
-    U and the AUC effect size are engine-exact with one final division.
-    Spark runs the same bucketed distributed prefix sum as
-    ks_two_sample — no single-task sort; the oracle's window cumsum is
-    the reference formulation."""
-    from spanner_data_validator_spark.operators.stats import (
-        mann_whitney_u,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    base = ev.where(F.col("value").isNotNull()).select(
-        cents.alias("v"), F.col("event_type"))
-    return mann_whitney_u(base, F.col("v"),
-                          F.col("event_type") == "purchase",
-                          F.col("event_type") == "click")
-
-
-def _stream_benford_oracle() -> str:
-    return f"""
-WITH cents AS (
-  SELECT date_trunc('day', ts) AS wd,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
-cnt AS (
-  SELECT epoch_ms(wd) AS ws_ms,
-         substring(CAST(c AS VARCHAR), 1, 1) AS digit,
-         CAST(count(*) AS BIGINT) AS observed
-  FROM cents WHERE c >= 1 GROUP BY 1, 2
-),
-wn AS (
-  SELECT ws_ms, digit, observed,
-         CAST(sum(observed) OVER (PARTITION BY ws_ms) AS BIGINT) AS n_total
-  FROM cnt
-),
-e AS (
-  SELECT ws_ms, digit, observed, n_total,
-         CAST(n_total AS DOUBLE) * ({_benford_case()}) AS expected
-  FROM wn
-)
-SELECT ws_ms, digit, observed, n_total, expected,
-       (CAST(observed AS DOUBLE) - expected)
-         * (CAST(observed AS DOUBLE) - expected) / expected AS chi_term
-FROM e
-"""
-
-
-@register("stream_benford_monitor", _stream_benford_oracle())
-def q_stream_benford_monitor(spark, sf_dir):
-    """REAL streaming run of the Benford fabricated-data screen: per
-    1-day event-time window, first-digit counts accumulate in ONE
-    watermarked stateful aggregation (state = windows x 9 digit rows —
-    constant per window, the streaming budget Benford was born for);
-    closed windows land in an append sink and the tiny sink table gets
-    the expectation/chi math batch-side. Digits come from integer cents
-    (stream side and oracle share the extraction law of
-    benford_first_digit). The sentinel carries value=1.0 so the digit
-    filter cannot drop it below the watermark operator (CLAUDE.md
-    sentinel-filter trap)."""
-    import tempfile
-
-    from spanner_data_validator_spark.operators.stats import benford_expected
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("ts").cast("timestamp").alias("ts"), "value")
-    work = tempfile.mkdtemp(prefix="sdv_q_streambenford_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1)
-     .select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-             F.lit(1.0).alias("value"))
-     .write.mode("append").parquet(in_dir))
-
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes")
-              .select("ts", cents.alias("c"))
-              .where(F.col("c") >= 1)
-              .select("ts", F.substring(F.col("c").cast("string"), 1, 1)
-                      .alias("digit")))
-    counts = (stream
-              .groupBy(F.window("ts", "1 day").alias("w"), "digit")
-              .agg(F.count(F.lit(1)).alias("observed")))
-    out = counts.select(F.unix_millis(F.col("w.start")).alias("ws_ms"),
-                        "digit", "observed")
-    with _shuffle_partitions(spark, 8):
-        q = (out.writeStream.format("parquet")
-             .option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    exp = benford_expected()
-    sink = spark.read.parquet(f"{work}/out")
-    n = F.sum("observed").over(Window.partitionBy("ws_ms"))
-    p = F.element_at(F.array(*[F.lit(float(exp[i])) for i in range(1, 10)]),
-                     F.col("digit").cast("int"))
-    wn = sink.withColumn("n_total", n)
-    expected = F.col("n_total").cast("double") * p
-    dev = F.col("observed").cast("double") - expected
-    return wn.select("ws_ms", "digit", "observed", "n_total",
-                     expected.alias("expected"),
-                     (dev * dev / expected).alias("chi_term"))
-
-
-@register("grid_neighbor_pairs", """
-WITH p AS (
-  SELECT event_id AS id, CAST(user_id % 1000 AS BIGINT) AS x,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) % 1000 AS y
-  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-),
-dense AS (
-  SELECT x // 25 AS cx, y // 25 AS cy FROM p
-  GROUP BY 1, 2 HAVING count(*) > 256
-),
-p2 AS (
-  SELECT p.* FROM p
-  LEFT JOIN dense d ON p.x // 25 = d.cx AND p.y // 25 = d.cy
-  WHERE d.cx IS NULL
-),
-pr AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2
-  FROM p2 a JOIN p2 b ON a.id < b.id
-  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 625
-)
-SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(d2) AS BIGINT) AS d2_sum,
-       CAST(min(d2) AS BIGINT) AS d2_min,
-       CAST(max(d2) AS BIGINT) AS d2_max,
-       CAST(sum(id_a + id_b) AS BIGINT) AS id_checksum
-FROM pr
-""")
-def q_grid_neighbor_pairs(spark, sf_dir):
-    """Spatial proximity join (operators/spatial.grid_neighbor_pairs):
-    purchase events mapped to a 1000x1000 integer grid, all pairs
-    within L2 distance 25. Spark buckets points into radius-sized cells
-    and equi-joins each point's 3x3 neighborhood against the cell index
-    (candidates ~ local density, hot-cell cap, exact integer distance
-    verified on candidates only — the geohash/S2 proximity-join plan);
-    the oracle is the quadratic self-join. Squared distances keep
-    everything integer: no sqrt, no float order sensitivity."""
-    from spanner_data_validator_spark.operators.spatial import (
-        grid_neighbor_pairs,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    pts = (ev.where((F.col("event_type") == "purchase")
-                    & F.col("value").isNotNull())
-           .select(F.col("event_id").alias("id"),
-                   (F.col("user_id") % 1000).alias("x"),
-                   (cents % 1000).alias("y")))
-    pairs = grid_neighbor_pairs(pts, "id", "x", "y",
-                                radius=25, max_cell=256)
-    return pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("d2").alias("d2_sum"),
-        F.min("d2").alias("d2_min"),
-        F.max("d2").alias("d2_max"),
-        F.sum(F.col("id_a") + F.col("id_b")).alias("id_checksum"))
-
-
-@register("interval_coverage", """
-WITH iv AS (
-  SELECT user_id, epoch_us(ts) AS s,
-         epoch_us(ts)
-           + (1 + CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) % 7200)
-             * 1000000 AS e
-  FROM events WHERE value IS NOT NULL
-),
-m AS (
-  SELECT user_id, s, e,
-         max(e) OVER (PARTITION BY user_id ORDER BY s, e
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-  FROM iv
-),
-f AS (
-  SELECT user_id, s, e,
-         CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END AS nw
-  FROM m
-),
-il AS (
-  SELECT user_id, s, e,
-         sum(nw) OVER (PARTITION BY user_id ORDER BY s, e
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-  FROM f
-),
-g AS (
-  SELECT user_id, isl, min(s) AS st, max(e) AS en,
-         CAST(count(*) AS BIGINT) AS ni
-  FROM il GROUP BY 1, 2
-)
-SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(count(*) AS BIGINT) AS n_islands,
-       CAST(sum(en - st) AS BIGINT) AS covered_us,
-       CAST(max(ni) AS BIGINT) AS max_intervals
-FROM g
-""")
-def q_interval_coverage(spark, sf_dir):
-    """Gaps-and-islands (operators/sessionize.merge_intervals): each
-    event opens a value-derived activity interval; overlapping
-    intervals per user merge into maximal islands (running-max(end)
-    flag + running island count — the containment-safe formulation a
-    lag(end) version gets wrong), then total covered time rolls up.
-    The dual of sessionize: ranges merged on overlap, not points split
-    on gaps. All integer microseconds."""
-    from spanner_data_validator_spark.operators.sessionize import (
-        merge_intervals,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    iv = (ev.where(F.col("value").isNotNull())
-          .select(F.col("user_id"), us.alias("s"),
-                  (us + (F.lit(1) + cents % 7200) * F.lit(1_000_000))
-                  .alias("e")))
-    isl = merge_intervals(iv, "user_id", F.col("s"), F.col("e"))
-    return isl.agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_islands"),
-        F.sum(F.col("island_end") - F.col("island_start"))
-         .alias("covered_us"),
-        F.max("n_intervals").alias("max_intervals"))
-
-
-@register("gini_revenue_by_type", """
-WITH v AS (
-  SELECT event_type,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS v
-  FROM events WHERE value IS NOT NULL
-),
-r AS (
-  SELECT event_type, v,
-         row_number() OVER (PARTITION BY event_type ORDER BY v) AS i,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM v
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-       CAST(sum(v) AS BIGINT) AS total_units,
-       CAST(sum((2 * i - n - 1) * v) AS BIGINT) AS gini_num,
-       CAST(sum((2 * i - n - 1) * v) AS DOUBLE)
-         / CAST(max(n) * sum(v) AS DOUBLE) AS gini
-FROM r GROUP BY event_type
-""")
-def q_gini_revenue_by_type(spark, sf_dir):
-    """Exact Gini inequality of event value per type
-    (operators/stats.gini_coefficient): the rank identity
-    sum((2i-n-1)*x_(i)) / (n*sum x) keeps numerator and denominator in
-    BIGINT (the textbook pairwise-|difference| form is quadratic and
-    float-ordered); tied values sum the same coefficients under any
-    tie order, so the result is engine-identical with one division."""
-    from spanner_data_validator_spark.operators.stats import (
-        gini_coefficient,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)) \
-             .cast("long")
-    base = ev.where(F.col("value").isNotNull()).select(
-        "event_type", cents.alias("v"))
-    return gini_coefficient(base, "event_type", F.col("v"))
-
-
-# ---------------------------------------------------------------------------
-# transcript latency analytics
-# ---------------------------------------------------------------------------
-
-@register("turn_latency_quantiles", """
-WITH tr AS (
-  SELECT CAST(user_id AS STRING) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              - 1 AS INT) AS turn_idx,
-         coalesce(event_type, '') AS role, ts
-  FROM events
-),
-gaps AS (
-  SELECT lag(role) OVER w || '>' || role AS pair,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us,
-         conv_id, turn_idx
-  FROM tr WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-),
-g AS (SELECT * FROM gaps WHERE gap_us IS NOT NULL),
-r AS (
-  SELECT pair, gap_us,
-         row_number() OVER (PARTITION BY pair
-                            ORDER BY gap_us, conv_id, turn_idx) AS rn,
-         count(*) OVER (PARTITION BY pair) AS n
-  FROM g
-)
-SELECT pair, p, CAST(gap_us AS BIGINT) AS q_value
-FROM r CROSS JOIN (SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
-                                  CAST(0.99 AS DOUBLE)]) AS p)
-WHERE rn = CAST(ceil(p * n) AS BIGINT)
-""")
-def q_turn_latency_quantiles(spark, sf_dir):
-    """Conversation pacing analytics: exact p50/p90/p99 inter-turn
-    latency (integer microseconds) per role transition — the
-    'assistant slow after tool turns?' question over the transcript
-    corpus. lag() shares the conv-keyed exchange with turn numbering;
-    quantiles are rank-exact per pair (values that exist in the data,
-    profile.quantiles_by_rank) with a (conv, turn) tiebreak making the
-    order total in both engines."""
-    from spanner_data_validator_spark.operators.profile import (
-        quantiles_by_rank,
-    )
-
-    tr = transcripts_from_events(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    us = F.unix_micros(F.col("ts"))
-    gaps = (tr.select(
-                "conv_id", "turn_idx",
-                F.concat_ws(">", F.lag("role").over(w), F.col("role"))
-                 .alias("pair"),
-                (us - F.lag(us).over(w)).alias("gap_us"))
-            .where(F.col("gap_us").isNotNull()))
-    tb = F.concat_ws("#", F.col("conv_id"),
-                     F.col("turn_idx").cast("string"))
-    return quantiles_by_rank(gaps, "pair", F.col("gap_us"),
-                             [0.5, 0.9, 0.99], tb) \
-        .select("pair", "p", F.col("q_value").cast("long").alias("q_value"))
-
-
-@register("weighted_heavy_hitters_tri", """
-WITH it AS (
-  SELECT CAST(floor(sqrt(CAST(event_id % 250000 AS DOUBLE))) AS BIGINT)
-           AS item,
-         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS w
-  FROM events WHERE value IS NOT NULL
-),
-t AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM it),
-c AS (SELECT item, CAST(sum(w) AS BIGINT) AS w_sum FROM it GROUP BY item)
-SELECT c.item, c.w_sum, t.w_total
-FROM c, t WHERE c.w_sum * 257 > t.w_total
-""")
-def q_weighted_heavy_hitters_tri(spark, sf_dir):
-    """Weighted (revenue-share) exact heavy hitters: items carrying more
-    than 1/257 of total cents, via weighted Misra-Gries candidates +
-    exact re-aggregation (operators/sketch.weighted_heavy_hitters_exact).
-    Same planted triangular key domain as heavy_hitters_tri; the weight
-    generalization keeps the superset guarantee because MG's decrement
-    argument is weight-oblivious, and the exact second pass again erases
-    the sketch's partitioning order-dependence."""
-    from spanner_data_validator_spark.operators.sketch import (
-        weighted_heavy_hitters_exact,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .where(F.col("value").isNotNull())
-    item = F.floor(F.sqrt((F.col("event_id") % 250000).cast("double")))
-    w = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    return weighted_heavy_hitters_exact(ev, item, w, 256)
-
-
-@register("qq_shift_drift", """
-WITH src AS (
-  SELECT 'src' AS side, n_chars, doc_id FROM documents
-),
-tgt AS (
-  SELECT 'tgt' AS side, n_chars, doc_id FROM documents
-  WHERE doc_id % 10 <> 7
-),
-u AS (SELECT * FROM src UNION ALL SELECT * FROM tgt),
-r AS (
-  SELECT side, n_chars, doc_id,
-         row_number() OVER (PARTITION BY side ORDER BY n_chars, doc_id)
-           AS rn,
-         count(*) OVER (PARTITION BY side) AS n
-  FROM u
-),
-q AS (
-  SELECT side, p, n_chars AS qv
-  FROM r CROSS JOIN (SELECT unnest([CAST(0.1 AS DOUBLE), CAST(0.25 AS DOUBLE),
-                                    CAST(0.5 AS DOUBLE), CAST(0.75 AS DOUBLE),
-                                    CAST(0.9 AS DOUBLE), CAST(0.99 AS DOUBLE)])
-                     AS p)
-  WHERE rn = CAST(ceil(p * n) AS BIGINT)
-)
-SELECT s.p, CAST(s.qv AS BIGINT) AS q_src, CAST(t.qv AS BIGINT) AS q_tgt,
-       CAST(t.qv - s.qv AS BIGINT) AS shift
-FROM q s JOIN q t ON s.p = t.p AND s.side = 'src' AND t.side = 'tgt'
-""")
-def q_qq_shift_drift(spark, sf_dir):
-    """Quantile-quantile drift table: exact rank quantiles of doc length
-    on both sides of a deterministically degraded re-ingest (doc_id%10=7
-    dropped), per-p shift — the drift tier that localizes WHERE in the
-    distribution a migration bit (tails vs body), complementing the
-    per-bin counts of numeric_hist_drift. Both sides run through ONE
-    side-partitioned rank pass (union + partitionBy(side) — no second
-    sort), values are integers that exist in the data."""
-    from spanner_data_validator_spark.operators.profile import (
-        quantiles_by_rank,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    u = (docs.select(F.lit("src").alias("side"), "n_chars", "doc_id")
-         .unionByName(
-             docs.where(F.col("doc_id") % 10 != 7)
-             .select(F.lit("tgt").alias("side"), "n_chars", "doc_id")))
-    # the 12-row quantile table feeds both side-filter branches — pin it
-    # or the whole rank pass re-runs per branch (multi-branch rescan trap)
-    q = quantiles_by_rank(u, "side", F.col("n_chars"),
-                          [0.1, 0.25, 0.5, 0.75, 0.9, 0.99],
-                          F.col("doc_id")).localCheckpoint(eager=True)
-    s = (q.where(F.col("side") == "src")
-         .select("p", F.col("q_value").alias("q_src")))
-    t = (q.where(F.col("side") == "tgt")
-         .select("p", F.col("q_value").alias("q_tgt")))
-    return (s.join(t, "p")
-            .select("p", F.col("q_src").cast("long").alias("q_src"),
-                    F.col("q_tgt").cast("long").alias("q_tgt"),
-                    (F.col("q_tgt") - F.col("q_src")).cast("long")
-                    .alias("shift")))
-
-
-@register("weighted_median_price", """
-WITH base AS (
-  SELECT l_returnflag AS grp,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS v,
-         CAST(l_quantity AS BIGINT) AS w
-  FROM lineitem
-),
-c AS (
-  SELECT grp, v, w,
-         CAST(sum(w) OVER (PARTITION BY grp ORDER BY v) AS BIGINT) AS cum,
-         CAST(sum(w) OVER (PARTITION BY grp) AS BIGINT) AS tot
-  FROM base
-)
-SELECT grp AS l_returnflag, CAST(max(tot) AS BIGINT) AS w_total,
-       CAST(min(v) AS BIGINT) AS w_median
-FROM c WHERE 2 * cum >= tot GROUP BY grp
-""")
-def q_weighted_median_price(spark, sf_dir):
-    """Exact quantity-weighted median price (integer cents) per return
-    flag (operators/stats.weighted_median) — the 'median unit actually
-    shipped' number an unweighted median misrepresents when line sizes
-    vary. 2*cum >= W is pure integer arithmetic; the running weight sum
-    and the group total share one exchange. DuckDB's RANGE-framed
-    running sum over equal values matches the lower-median pick because
-    ties share the value."""
-    from spanner_data_validator_spark.operators.stats import weighted_median
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return weighted_median(
-        li.select(F.col("l_returnflag"),
-                  F.round(F.col("l_extendedprice") * 100).cast("long")
-                  .alias("cents"),
-                  F.col("l_quantity").cast("long").alias("qty")),
-        "l_returnflag", F.col("cents"), F.col("qty"))
-
-
-@register("mode_props_by_type", """
-WITH c AS (
-  SELECT event_type, props AS v, CAST(count(*) AS BIGINT) AS n
-  FROM events WHERE props IS NOT NULL GROUP BY 1, 2
-),
-r AS (
-  SELECT event_type, v, n,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY n DESC, v ASC) AS rk
-  FROM c
-)
-SELECT event_type, v AS mode_value, n AS mode_n FROM r WHERE rk = 1
-""")
-def q_mode_props_by_type(spark, sf_dir):
-    """Per-group mode with a DETERMINISTIC tie-break (highest count,
-    then smallest value; operators/stats.deterministic_mode) — Spark's
-    built-in mode() documents an arbitrary tie winner, which can never
-    be oracle-checked; this one can. Counts collapse map-side before the
-    tiny pick window."""
-    from spanner_data_validator_spark.operators.stats import (
-        deterministic_mode,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return deterministic_mode(ev, "event_type", F.col("props"))
-
-
-@register("shortest_path_weighted", """
-WITH RECURSIVE e0 AS (
-  SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
-         CAST(min(l_quantity) AS BIGINT) AS w
-  FROM lineitem GROUP BY 1, 2
-),
-e AS (SELECT src, dst, w FROM e0
-      UNION ALL SELECT dst AS src, src AS dst, w FROM e0),
-seeds AS (
-  SELECT DISTINCT l_partkey * 2 AS node FROM lineitem
-  WHERE l_partkey % 997 = 0
-),
-p AS (
-  SELECT node, CAST(0 AS BIGINT) AS cost, 0 AS d FROM seeds
-  UNION
-  SELECT e.dst AS node, p.cost + e.w AS cost, p.d + 1 AS d
-  FROM p JOIN e ON p.node = e.src WHERE p.d < 4
-),
-sp AS (SELECT node, min(cost) AS dist FROM p GROUP BY node)
-SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(sum(node) AS BIGINT) AS node_sum,
-       CAST(min(node) AS BIGINT) AS node_min,
-       CAST(max(node) AS BIGINT) AS node_max
-FROM sp GROUP BY dist ORDER BY dist
-""")
-def q_shortest_path_weighted(spark, sf_dir):
-    """Weighted shortest paths (operators/graph.bellman_ford) over the
-    part-supplier bipartite graph, edge weight = min lineitem quantity
-    on the link, seeded at l_partkey % 997 == 0, 4 relaxation rounds.
-    Per round: one equi-join + one BIGINT min-aggregate, lineage
-    truncated — distances can improve in later rounds (unlike BFS), so
-    the per-round min is the load-bearing step. The oracle enumerates
-    all <=4-edge path costs in a WITH RECURSIVE with UNION-distinct on
-    (node, cost, d) and takes min(cost); the bounded iterative loop is
-    the scale-tuned equivalent of that recursion. Summarized per
-    distance value (count/sum/min/max of node ids)."""
-    from spanner_data_validator_spark.operators.graph import bellman_ford
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = li.select((F.col("l_partkey") * 2).alias("src"),
-                      (F.col("l_suppkey") * 2 + 1).alias("dst"),
-                      F.col("l_quantity").cast("long").alias("w"))
-    seeds = (li.where(F.col("l_partkey") % 997 == 0)
-             .select((F.col("l_partkey") * 2).alias("node")))
-    sp = bellman_ford(edges, seeds, rounds=4, undirected=True)
-    return (sp.groupBy("dist")
-            .agg(F.count(F.lit(1)).alias("n_nodes"),
-                 F.sum("node").alias("node_sum"),
-                 F.min("node").alias("node_min"),
-                 F.max("node").alias("node_max"))
-            .orderBy("dist"))
-
-
-@register("pareto_front_parts", """
-WITH c AS (
-  SELECT CAST(p_size AS BIGINT) AS x,
-         CAST(floor(p_retailprice * 1.0e2 + 5.0e-1) AS BIGINT) AS y
-  FROM part
-),
-sky AS (
-  SELECT x, y FROM c c1 WHERE NOT EXISTS (
-    SELECT 1 FROM c c2
-    WHERE c2.x <= c1.x AND c2.y <= c1.y AND (c2.x < c1.x OR c2.y < c1.y)
-  )
-)
-SELECT x, y, CAST(count(*) AS BIGINT) AS n_points
-FROM sky GROUP BY x, y
-""")
-def q_pareto_front_parts(spark, sf_dir):
-    """Skyline / Pareto frontier (operators/skyline.pareto_frontier):
-    parts minimizing (p_size, price-cents) jointly — the non-dominated
-    set. Spark runs the two-phase distributed plan (hash-agg point
-    collapse + per-x min window, then a <=|distinct x|-row prefix-min
-    sweep); the oracle is the textbook quadratic NOT-EXISTS dominance
-    self-join, viable only at oracle scale — exactly the plan shape the
-    distributed rewrite exists to avoid."""
-    from spanner_data_validator_spark.operators.skyline import (
-        pareto_frontier,
-    )
-
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return pareto_frontier(
-        pt, F.col("p_size").cast("long"),
-        F.round(F.col("p_retailprice") * 100).cast("long"))
-
-
-@register("bom_rollup_parts", """
-WITH RECURSIVE n AS (
-  SELECT p_partkey AS node,
-         CASE WHEN p_partkey >= 8 THEN p_partkey // 8 END AS parent,
-         CAST(p_partkey % 5 + 1 AS BIGINT) AS qty
-  FROM part
-),
-r AS (
-  SELECT node, node AS root, CAST(1 AS BIGINT) AS prod
-  FROM n WHERE parent IS NULL
-  UNION ALL
-  SELECT n.node, r.root, r.prod * n.qty FROM r JOIN n ON n.parent = r.node
-),
-pl AS (SELECT DISTINCT parent FROM n WHERE parent IS NOT NULL),
-lf AS (SELECT r.root, r.prod FROM r
-       WHERE NOT EXISTS (SELECT 1 FROM pl WHERE pl.parent = r.node))
-SELECT r.root, CAST(count(*) AS BIGINT) AS n_nodes,
-       (SELECT CAST(count(*) AS BIGINT) FROM lf WHERE lf.root = r.root)
-         AS n_leaves,
-       (SELECT CAST(sum(prod) AS BIGINT) FROM lf WHERE lf.root = r.root)
-         AS leaf_qty_sum
-FROM r GROUP BY r.root
-""")
-def q_bom_rollup_parts(spark, sf_dir):
-    """Bill-of-materials rollup (operators/hierarchy.bom_rollup) over a
-    deterministic forest on part ids (parent = node div 8, roots < 8,
-    edge qty = node % 5 + 1): per root assembly, the node count, leaf
-    count, and total leaf units required (sum over leaves of the
-    multiplier PRODUCT along the root path — BIGINT-exact). Spark
-    resolves root paths by POINTER DOUBLING (ceil(log2 depth)+1
-    self-joins, lineage truncated) instead of the depth-many dependent
-    joins of the oracle's recursive CTE; dangling parents would drop
-    their subtree in both engines (none here — ids are contiguous)."""
-    from spanner_data_validator_spark.operators.hierarchy import bom_rollup
-
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
-    nodes = pt.select(
-        F.col("p_partkey").alias("node"),
-        F.when(F.col("p_partkey") >= 8,
-               F.expr("p_partkey div 8")).alias("parent"),
-        (F.col("p_partkey") % 5 + 1).alias("qty"))
-    return bom_rollup(nodes, max_depth=8)
-
-
-@register("state_store_inspect", """
-WITH dk AS (
-  SELECT DISTINCT event_type, user_id FROM events
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_state_keys,
-       CAST(min(user_id) AS BIGINT) AS user_min,
-       CAST(max(user_id) AS BIGINT) AS user_max,
-       CAST(sum(user_id) AS BIGINT) AS user_sum
-FROM dk GROUP BY event_type
-""")
-def q_state_store_inspect(spark, sf_dir):
-    """State-store introspection (streaming/state_inspect.read_state,
-    Spark 4 `statestore` reader): run a REAL streaming dropDuplicates
-    over the events table (two micro-batches), then read the query's
-    OWN checkpoint state back as a batch DataFrame and validate it
-    against the law the operator promises — dedup state holds exactly
-    the distinct (event_type, user_id) keys of the input. State is
-    data: the same oracle machinery that validates rows validates the
-    engine's internal state. The reader parallelizes per state-store
-    partition; nothing touches the (stopped) query."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.state_inspect import (
-        read_state,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .select("event_type", "user_id"))
-    work = tempfile.mkdtemp(prefix="sdv_q_state_inspect_")
-    in_dir = f"{work}/in"
-    ev.repartition(2).write.parquet(in_dir)
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = (stream.dropDuplicates(["event_type", "user_id"])
-         .writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    st = read_state(spark, f"{work}/ckpt")
-    return (st.select(F.col("key.event_type").alias("event_type"),
-                      F.col("key.user_id").alias("user_id"))
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_state_keys"),
-                 F.min("user_id").alias("user_min"),
-                 F.max("user_id").alias("user_max"),
-                 F.sum("user_id").alias("user_sum")))
-
-
-@register("stream_pareto_frontier", """
-WITH c AS (
-  SELECT CAST(p_size AS BIGINT) AS x,
-         CAST(floor(p_retailprice * 1.0e2 + 5.0e-1) AS BIGINT) AS y
-  FROM part
-),
-sky AS (
-  SELECT x, y FROM c c1 WHERE NOT EXISTS (
-    SELECT 1 FROM c c2
-    WHERE c2.x <= c1.x AND c2.y <= c1.y AND (c2.x < c1.x OR c2.y < c1.y)
-  )
-)
-SELECT x, y, CAST(count(*) AS BIGINT) AS n_points
-FROM sky GROUP BY x, y
-""")
-def q_stream_pareto_frontier(spark, sf_dir):
-    """Streaming skyline maintenance (streaming/frontier_sink): parts
-    arrive in three micro-batches; each batch folds its local skyline
-    into the stored running frontier (skyline is a mergeable monotone
-    summary — skyline(A∪B) = skyline(skyline(A)∪skyline(B)), so no
-    watermark or per-key state is needed and the stored object is
-    frontier-sized, never corpus-sized). Exactly-once by the
-    chain-of-immutable-versions fencing; the oracle is the batch skyline
-    of ALL input — which the monotone merge must equal exactly,
-    multiplicities included."""
-    import tempfile
-
-    from spanner_data_validator_spark.streaming.frontier_sink import (
-        FrontierMaintenanceSink,
-    )
-
-    pt = (spark.read.parquet(f"{sf_dir}/part.parquet")
-          .select(F.col("p_size").cast("long").alias("x"),
-                  F.round(F.col("p_retailprice") * 100).cast("long")
-                  .alias("y")))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_pareto_")
-    pt.repartition(3).write.parquet(f"{work}/in")
-
-    stream = (spark.readStream.schema(pt.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{work}/in"))
-    sink = FrontierMaintenanceSink(spark, f"{work}/frontier", "x", "y")
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return sink.latest()
-
-
-@register("pq_quantize_stats", """
-WITH v AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5e0) AS BIGINT)) AS vi
-  FROM embeddings
-),
-cb AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5e0) AS BIGINT)) AS ci
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8)
-),
-ve0 AS (
-  SELECT vec_id, unnest(vi) AS x, generate_subscripts(vi, 1) AS i FROM v
-),
-ve AS (SELECT vec_id, CAST((i - 1) // 16 AS INT) AS subspace, i, x FROM ve0),
-ce0 AS (
-  SELECT code, unnest(ci) AS x, generate_subscripts(ci, 1) AS i FROM cb
-),
-ce AS (SELECT code, CAST((i - 1) // 16 AS INT) AS subspace, i, x FROM ce0),
-d AS (
-  SELECT ve.vec_id, ve.subspace, ce.code,
-         CAST(sum((ve.x - ce.x) * (ve.x - ce.x)) AS BIGINT) AS err
-  FROM ve JOIN ce ON ve.i = ce.i AND ve.subspace = ce.subspace
-  GROUP BY 1, 2, 3
-),
-a AS (
-  SELECT vec_id, subspace, code, err,
-         row_number() OVER (PARTITION BY vec_id, subspace
-                            ORDER BY err, code) AS rn
-  FROM d
-)
-SELECT subspace, code, CAST(count(*) AS BIGINT) AS n_assigned,
-       CAST(sum(err) AS BIGINT) AS err_sum,
-       CAST(min(vec_id) AS BIGINT) AS first_vec
-FROM a WHERE rn = 1 GROUP BY subspace, code
-""")
-def q_pq_quantize_stats(spark, sf_dir):
-    """Product quantization (operators/quantize.pq_assign): 64-dim
-    embeddings split into 4 subspaces of 16, each subvector snapped to
-    the nearest of 8 data-derived codes (rows vec_id % 61 = 3 — the
-    IVF-oracle trick: codebooks as data, no literal injection). All
-    elements fixed-point (x1000) BIGINTs, so squared distances, argmin
-    tie-breaks, and error sums are EXACT and engine-identical — the
-    float-sum trap never opens. Spark assigns via broadcast codebook +
-    zip_with/aggregate over array slices (no explode of the corpus);
-    the oracle recomputes by full UNNEST + equi-join, viable only at
-    oracle scale. Output: per (subspace, code) occupancy, exact
-    reconstruction-error sum, first assigned vector."""
-    from spanner_data_validator_spark.operators.quantize import pq_assign
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # floor(double(x)+0.5), NOT round(): Spark HALF_UP rounds negative
-    # halves away from zero, oracle floor doesn't. The DOUBLE cast is
-    # load-bearing on BOTH sides: DuckDB FLOAT*INT multiplies in FLOAT
-    # precision (2 divergent elements at sf0.1), Spark widens to double.
-    fx = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"))
-    vecs = emb.select("vec_id", fx.alias("vi"))
-    from pyspark.sql import Window
-    cb = (emb.where(F.col("vec_id") % 61 == 3)
-          .orderBy("vec_id").limit(8)
-          .select((F.row_number().over(Window.orderBy("vec_id")) - 1)
-                  .cast("int").alias("code"), fx.alias("ci")))
-    assigned = pq_assign(vecs, cb, m=4, sub_dim=16)
-    return (assigned.groupBy("subspace", "code")
-            .agg(F.count(F.lit(1)).alias("n_assigned"),
-                 F.sum("err").alias("err_sum"),
-                 F.min("vec_id").alias("first_vec")))
-
-
-@register("pareto_front_continuous", """
-WITH c AS (
-  SELECT CAST(floor(p_retailprice * 1.0e2 + 5.0e-1) AS BIGINT) AS x,
-         CAST(p_size AS BIGINT) AS y
-  FROM part
-),
-sky AS (
-  SELECT x, y FROM c c1 WHERE NOT EXISTS (
-    SELECT 1 FROM c c2
-    WHERE c2.x <= c1.x AND c2.y <= c1.y AND (c2.x < c1.x OR c2.y < c1.y)
-  )
-)
-SELECT x, y, CAST(count(*) AS BIGINT) AS n_points
-FROM sky GROUP BY x, y
-""")
-def q_pareto_front_continuous(spark, sf_dir):
-    """Skyline with a CONTINUOUS first objective (price cents — ~as many
-    distinct values as rows, so the per-x collapse of pareto_frontier
-    would prune nothing): operators/skyline.pareto_frontier_wide computes
-    per-partition local skylines in Arrow-batched pandas (valid for ANY
-    partitioning: skyline(∪Ai) ⊆ ∪skyline(Ai); memory bounded by batch +
-    running frontier) and sweeps only the union of local frontiers. The
-    objectives are flipped vs pareto_front_parts (cheapest-then-smallest
-    instead of smallest-then-cheapest) so the two entries pin different
-    frontiers."""
-    from spanner_data_validator_spark.operators.skyline import (
-        pareto_frontier_wide,
-    )
-
-    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return pareto_frontier_wide(
-        pt, F.round(F.col("p_retailprice") * 100).cast("long"),
-        F.col("p_size").cast("long"))
-
-
-# ---------------------------------------------------------------------------
-# Watermark recommendation (operators/lateness.py): the out-of-orderness
-# profile that turns the streaming tier's most consequential knob — the
-# watermark delay — into a measurement (distributed prefix max, exact
-# integer percentile ranks; see the module docstring for the 10^12-row plan)
-# ---------------------------------------------------------------------------
-
-# deterministic late-arrival model, identical arithmetic in both engines:
-# 10% of events arrive 30 min late, 1% arrive 4 h late, the rest in event
-# order. arrival = (ms + delay_ms) * 2^20 + event_id % 2^20 is UNIQUE
-# (event_id < 2^20 at every test sf) and monotone in delayed-arrival time.
-_ARRIVAL_SQL = ("(epoch_us(ts) // 1000 + CASE WHEN event_id % 10 = 0 "
-                "THEN 1800000 WHEN event_id % 100 = 7 THEN 14400000 "
-                "ELSE 0 END) * 1048576 + event_id % 1048576")
-_ARRIVAL_SPARK = ("(unix_micros(cast(ts as timestamp)) div 1000 + CASE WHEN event_id % 10 = 0 "
-                  "THEN 1800000 WHEN event_id % 100 = 7 THEN 14400000 "
-                  "ELSE 0 END) * 1048576 + event_id % 1048576")
-
-
-def _watermark_recommend_oracle() -> str:
-    from spanner_data_validator_spark.operators.lateness import (
-        watermark_recommendation_sql,
-    )
-
-    return watermark_recommendation_sql(
-        f"SELECT {_ARRIVAL_SQL} AS arrival, ts FROM events",
-        "arrival", "ts")
-
-
-@register("watermark_recommend", _watermark_recommend_oracle())
-def q_watermark_recommend(spark, sf_dir):
-    """Watermark auto-tuning: per-row event-time lag behind the arrival-order
-    high-water mark (operators/lateness.arrival_lag — a distributed PREFIX
-    MAX: arrival-range bucket maxima + tiny exclusive scan + per-bucket
-    window; no single-task pass over row-scale data), reduced to an exact
-    ceil-second histogram, answering "the smallest watermark delay that
-    retains >= 50/95/99/100% of rows" in pure BIGINT rank arithmetic. The
-    oracle replays it with one running-max window over the same planted
-    late-arrival pattern. This is the measurement that sizes the streaming
-    validator's state (BENCH.md: state = rate x (watermark + band))."""
-    from spanner_data_validator_spark.operators.lateness import (
-        watermark_recommendation,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .select(F.expr(_ARRIVAL_SPARK).alias("arrival"), "ts"))
-    return watermark_recommendation(
-        ev, F.col("arrival"), F.col("ts"), pcts=(50, 95, 99, 100))
-
-
-# ---------------------------------------------------------------------------
-# Golden-record survivorship (operators/survivorship.py): the merge step
-# downstream of near-dup clustering — one deterministic best record per
-# entity cluster (longest-text winner, consensus lang, source fan-in)
-# ---------------------------------------------------------------------------
-
-_GOLDEN_CORPUS = """
-corpus AS (
-  SELECT doc_id, text, lang, source, n_chars FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, 'XX ' || text AS text, lang,
-         'mirror' AS source, n_chars + 3 AS n_chars
-  FROM documents WHERE doc_id % 20 = 0
-)
-"""
-
-_GOLDEN_SQL = ("WITH RECURSIVE "
-               + _JACCARD_CTES.replace(_NEARDUP_CORPUS, _GOLDEN_CORPUS)
-               + f""",
-pairs AS ({_JACCARD_SELECT}),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-walk(node, label) AS (
-  SELECT doc_id, doc_id FROM corpus
-  UNION
-  SELECT e.v, w.label FROM walk w JOIN edges e ON e.u = w.node WHERE w.label < e.v
-),
-comp AS (SELECT node AS doc_id, MIN(label) AS component FROM walk GROUP BY node),
-labeled AS (
-  SELECT c.*, comp.component FROM corpus c JOIN comp USING (doc_id)
-),
-ranked AS (
-  SELECT labeled.*, row_number() OVER (
-    PARTITION BY component ORDER BY n_chars DESC, doc_id ASC) AS rk
-  FROM labeled
-),
-g AS (
-  SELECT component,
-         max(CASE WHEN rk = 1 THEN doc_id END) AS rep_id,
-         max(CASE WHEN rk = 1 THEN n_chars END) AS text_len,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(count(DISTINCT source) AS BIGINT) AS n_source
-  FROM ranked GROUP BY component
-),
-lm AS (
-  SELECT component, lang AS lang_mode FROM (
-    SELECT component, lang, row_number() OVER (
-      PARTITION BY component ORDER BY count(*) DESC, lang ASC) AS rk
-    FROM labeled WHERE lang IS NOT NULL GROUP BY component, lang
-  ) WHERE rk = 1
-)
-SELECT g.component, g.rep_id, g.text_len, g.n_rows, g.n_source, lm.lang_mode
-FROM g LEFT JOIN lm USING (component)
-""")
-
-
-@register("golden_record_merge", _GOLDEN_SQL)
-def q_golden_record_merge(spark, sf_dir):
-    """Survivorship merge over near-dup clusters: exact-Jaccard pairs ->
-    connected components -> one golden record per cluster via deterministic
-    total-order rules (operators/survivorship.golden_records): longest-text
-    winner carries rep_id + text_len (ties to the smallest doc_id), lang by
-    frequency mode (ties to the smallest value — NOT arrival order, the
-    dedup_text_stream trap), plus row and distinct-source counts. Single
-    cluster-keyed shuffle for the extrema; the mode is a two-level agg whose
-    first level splits hot clusters across value groups map-side."""
-    from spanner_data_validator_spark.operators.dedup import assign_components
-    from spanner_data_validator_spark.operators.survivorship import (
-        golden_records,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang", "source", "n_chars")
-    corpus = docs.unionByName(
-        docs.where(F.col("doc_id") % 20 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"),
-            F.concat(F.lit("XX "), F.col("text")).alias("text"),
-            "lang", F.lit("mirror").alias("source"),
-            (F.col("n_chars") + 3).alias("n_chars")))
-    par = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < par:
-        corpus = corpus.repartition(par)
-    pairs = jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.7,
-                          max_shingle_df=_MAX_SHINGLE_DF)
-    labeled = assign_components(corpus, pairs, "doc_id")
-    return golden_records(
-        labeled, "component", "doc_id",
-        rules={"text_len": ("longest", "n_chars", "n_chars"),
-               "lang_mode": ("mode", "lang")},
-        count_distinct=["source"])
-
-
-# ---------------------------------------------------------------------------
-# Streaming drop-risk monitor (streaming/lag_monitor.py): the in-stream twin
-# of watermark_recommend — per-wave delivery-lag tallies with exactly-once
-# partials, published as the corpus retention curve
-# ---------------------------------------------------------------------------
-
-_LAG_MONITOR_WAVES = 16
-
-_LAG_MONITOR_SQL = f"""
-WITH e AS (SELECT {_ARRIVAL_SQL} AS arrival, epoch_us(ts) AS us FROM events),
-b AS (SELECT min(arrival) AS amin,
-             (max(arrival) - min(arrival)) // {_LAG_MONITOR_WAVES} + 1 AS step
-      FROM e),
-w AS (SELECT (arrival - amin) // step AS wave, us FROM e, b),
-m AS (SELECT wave, max(us) AS mx FROM w GROUP BY wave),
-c AS (SELECT wave, max(mx) OVER (ORDER BY wave
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hw_prev FROM m),
-l AS (SELECT CASE WHEN c.hw_prev IS NULL OR c.hw_prev <= w.us THEN 0
-                  ELSE (c.hw_prev - w.us + 999999) // 1000000 END AS lag_s
-      FROM w JOIN c USING (wave))
-SELECT CAST(lag_s AS BIGINT) AS lag_s, CAST(count(*) AS BIGINT) AS n
-FROM l GROUP BY lag_s
-"""
-
-
-@register("stream_lag_monitor", _LAG_MONITOR_SQL)
-def q_stream_lag_monitor(spark, sf_dir):
-    """In-stream watermark drop-risk monitor: events under the planted
-    late-arrival model are split into 16 delivery waves by arrival range and
-    streamed two wave-files per micro-batch (multi-wave batches exercise
-    the sink's in-batch carry scan); streaming/lag_monitor.LagMonitorSink
-    tallies each row's ceil-second lag behind the carried-over delivery
-    high-water mark into exactly-once partials; the published histogram is
-    the read-side sum. The oracle replays wave maxima + exclusive prefix max
-    in SQL. Result rows: how many rows need at least a lag_s-second
-    watermark — the curve an operator reads BEFORE the stream-stream join
-    starts dropping late rows."""
-    import os
-    import tempfile
-    import time as _time
-
-    from spanner_data_validator_spark.streaming.lag_monitor import (
-        LagMonitorSink,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .select(F.expr(_ARRIVAL_SPARK).alias("arrival"), "ts"))
-    bounds = ev.agg(
-        F.min("arrival").alias("amin"),
-        (F.expr(f"(max(arrival) - min(arrival)) div {_LAG_MONITOR_WAVES}")
-         + F.lit(1)).alias("step"))
-    waved = (ev.crossJoin(F.broadcast(bounds))
-             .select(F.expr("(arrival - amin) div step").alias("wave"), "ts"))
-
-    work = tempfile.mkdtemp(prefix="sdv_q_lagmon_")
-    in_dir = f"{work}/in"
-    # ONE staging write job (16 filter-passes over the corpus was 3x the
-    # whole query's cost): partitionBy strips the partition column, so a
-    # doubled column keeps `wave` in the data files; moves into the flat
-    # watch dir get explicit ascending mtimes — the file source's
-    # admission order — so waves deliver in order.
-    tmp = f"{work}/stage"
-    (waved.withColumn("wp", F.col("wave")).repartition("wp")
-     .write.partitionBy("wp").parquet(tmp))
-    os.makedirs(in_dir, exist_ok=True)
-    base = _time.time() - 3600
-    for k in range(_LAG_MONITOR_WAVES):
-        part = f"{tmp}/wp={k}"
-        for i, name in enumerate(sorted(os.listdir(part))):
-            if not name.endswith(".parquet"):
-                continue
-            dst = f"{in_dir}/w{k:04d}_{i}.parquet"
-            os.rename(f"{part}/{name}", dst)
-            os.utime(dst, (base + k, base + k))
-
-    monitor = LagMonitorSink(f"{work}/mon")
-    stream = (spark.readStream.schema(waved.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir))
-    q = (stream.writeStream.foreachBatch(monitor)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return monitor.histogram(spark)
-
-
-# ---------------------------------------------------------------------------
-# File-level quarantine (sources/files.scan_parquet_health): whole-file
-# corruption made a first-class result — the split ignoreCorruptFiles
-# performs silently
-# ---------------------------------------------------------------------------
-
-@register("parquet_health_quarantine", """
-SELECT CAST(3 AS BIGINT) AS n_files_ok,
-       CAST(2 AS BIGINT) AS n_files_bad,
-       CAST(3 * count(*) AS BIGINT) AS rows_ok,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM documents
-""")
-def q_parquet_health_quarantine(spark, sf_dir):
-    """Read a drop directory containing three intact copies of the
-    documents table, one TRUNCATED parquet (torn upload — footer gone)
-    and one non-parquet stray: sources/files.read_with_quarantine
-    footer-validates every file distributedly (metadata-only reads via
-    mapInPandas over the path list), reads only the healthy ones, and
-    reports the quarantine split explicitly. One row:
-    (files ok/bad, rows read, distinct docs)."""
-    import shutil
-    import tempfile
-
-    from spanner_data_validator_spark.sources.files import (
-        read_with_quarantine,
-    )
-
-    src = f"{sf_dir}/documents.parquet"
-    work = tempfile.mkdtemp(prefix="sdv_q_health_")
-    for i in range(3):
-        shutil.copy(src, f"{work}/c{i}.parquet")
-    with open(src, "rb") as f:
-        head = f.read(4096)
-    with open(f"{work}/torn.parquet", "wb") as f:
-        f.write(head)  # magic bytes present, footer missing
-    with open(f"{work}/stray.parquet", "w") as f:
-        f.write("not parquet at all\n")
-
-    good, health = read_with_quarantine(spark, work)
-    h = health.agg(
-        F.sum(F.col("ok").cast("long")).alias("n_files_ok"),
-        F.sum((~F.col("ok")).cast("long")).alias("n_files_bad"))
-    g = good.agg(F.count(F.lit(1)).alias("rows_ok"),
-                 F.countDistinct("doc_id").alias("n_docs"))
-    return h.crossJoin(g)
-
-
-# ---------------------------------------------------------------------------
-# Adaptive salted join (operators/skew.hot_keys + adaptive_salted_join):
-# salt ONLY detected hot keys — the uniform-salting upgrade for build sides
-# too large to replicate wholesale
-# ---------------------------------------------------------------------------
-
-@register("adaptive_salted_join_agg", """
-WITH big AS (
-  SELECT CASE WHEN user_id % 10 < 4 THEN -1 ELSE user_id END AS k, user_id
-  FROM events
-),
-dim AS (SELECT DISTINCT k, k % 7 AS seg FROM big)
-SELECT seg,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(user_id) AS BIGINT) AS uid_sum
-FROM big JOIN dim USING (k)
-GROUP BY seg
-""")
-def q_adaptive_salted_join_agg(spark, sf_dir):
-    """Hot-key-adaptive salted join: ~40% of events collapse onto one join
-    key; hot_keys (exact two-level count, BIGINT-exact fraction threshold)
-    detects it, and adaptive_salted_join fans ONLY that key across 16
-    salts — the cold tail's shuffle stays byte-identical to the unsalted
-    plan and the dimension side replicates just the hot rows (uniform
-    salting would 16x the whole dimension). Output equals the plain join
-    bit-for-bit; the oracle IS the plain join."""
-    from spanner_data_validator_spark.operators.skew import (
-        adaptive_salted_join,
-        hot_keys,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.expr("CASE WHEN user_id % 10 < 4 THEN -1 ELSE user_id END")
-        .alias("k"), "user_id", "event_id")
-    dim = ev.select("k").distinct().withColumn("seg", F.expr("k % 7"))
-    hot = hot_keys(ev, "k", min_frac=0.01)
-    joined = adaptive_salted_join(ev, dim, "k", hot, 16,
-                                  big_salt_source=F.col("event_id"))
-    return joined.groupBy("seg").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("user_id").alias("uid_sum"))
-
-
-# ---------------------------------------------------------------------------
-# Conversation branch detection (operators/rollup.branch_points): shared-
-# prefix families — the dup class of regenerated agent rollouts, which
-# whole-document near-dup (MinHash) misses when the shared prefix is a
-# small fraction of both transcripts
-# ---------------------------------------------------------------------------
-
-_BRANCH_TURN_HASH = ("substr(md5(concat_ws(chr(31), "
-                     "coalesce(CAST(role AS VARCHAR), ''), "
-                     "coalesce(CAST(text AS VARCHAR), ''))), 1, 15)")
-
-_BRANCH_SQL = f"""
-WITH base AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              - 1 AS INT) AS turn_idx,
-         coalesce(event_type, '') AS role,
-         coalesce(props, '') AS text
-  FROM events
-),
-mx AS (SELECT conv_id, max(turn_idx) AS m FROM base GROUP BY conv_id),
-branch AS (
-  SELECT b.conv_id || 'b' AS conv_id, b.turn_idx, b.role,
-         CASE WHEN b.turn_idx * 2 <= mx.m THEN b.text
-              ELSE b.text || '#alt' END AS text
-  FROM base b JOIN mx USING (conv_id)
-  WHERE CAST(b.conv_id AS BIGINT) % 7 = 0
-),
-corpus AS (SELECT * FROM base UNION ALL SELECT * FROM branch),
-sig AS (
-  SELECT conv_id, turn_idx,
-         string_agg({_BRANCH_TURN_HASH}, '|') OVER (
-           PARTITION BY conv_id ORDER BY turn_idx
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix_sig
-  FROM corpus
-),
-sh AS (
-  SELECT turn_idx, prefix_sig FROM sig
-  GROUP BY turn_idx, prefix_sig HAVING count(*) > 1
-),
-per AS (
-  SELECT s.conv_id, CAST(max(s.turn_idx + 1) AS BIGINT) AS shared
-  FROM sig s JOIN sh USING (turn_idx, prefix_sig)
-  GROUP BY s.conv_id
-)
-SELECT c.conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(coalesce(max(p.shared), 0) AS BIGINT) AS shared_prefix_turns
-FROM corpus c LEFT JOIN per p USING (conv_id)
-GROUP BY c.conv_id
-"""
-
-
-@register("conv_branch_detect", _BRANCH_SQL)
-def q_conv_branch_detect(spark, sf_dir):
-    """Regenerated-rollout detection: every 7th conversation gets a planted
-    branch twin sharing the first half of its turns then diverging;
-    rollup.branch_points labels each conversation with the deepest prefix
-    it shares with any other (prefix signatures under conversation-
-    partitioned windows, shared-(depth, sig) semi-join). The oracle replays
-    the identical windowed string_agg construction."""
-    from spanner_data_validator_spark.operators.rollup import branch_points
-
-    base = transcripts_from_events(spark, sf_dir).select(
-        "conv_id", "turn_idx", "role", "text")
-    mx = base.groupBy("conv_id").agg(F.max("turn_idx").alias("m"))
-    branch = (base.join(mx, "conv_id")
-              .where(F.col("conv_id").cast("long") % 7 == 0)
-              .select(F.concat(F.col("conv_id"), F.lit("b")).alias("conv_id"),
-                      "turn_idx", "role",
-                      F.when(F.col("turn_idx") * 2 <= F.col("m"),
-                             F.col("text"))
-                      .otherwise(F.concat(F.col("text"), F.lit("#alt")))
-                      .alias("text")))
-    corpus = base.unionByName(branch)
-    return branch_points(corpus, "conv_id", "turn_idx", ["role", "text"])
-
-
-@register("watermark_recommend_by_type", f"""
-WITH src AS (
-  SELECT coalesce(event_type, '') AS event_type, {_ARRIVAL_SQL} AS arrival, ts
-  FROM events
-),
-lag AS (
-  SELECT event_type, epoch_us(ts) AS us,
-         max(epoch_us(ts)) OVER (
-           PARTITION BY event_type ORDER BY arrival
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_us
-  FROM src
-),
-h AS (
-  SELECT event_type, (run_us - us + 999999) // 1000000 AS lag_s,
-         count(*) AS n
-  FROM lag GROUP BY 1, 2
-),
-cum AS (
-  SELECT event_type, lag_s, sum(n) OVER (
-           PARTITION BY event_type ORDER BY lag_s
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n
-  FROM h
-),
-tot AS (SELECT event_type, sum(n) AS n_total FROM h GROUP BY event_type),
-p(pct) AS (VALUES (50), (95), (99), (100)),
-hit AS (
-  SELECT c.event_type, p.pct, c.lag_s, c.cum_n,
-         row_number() OVER (PARTITION BY c.event_type, p.pct
-                            ORDER BY c.lag_s) AS rk
-  FROM p CROSS JOIN cum c JOIN tot t ON t.event_type = c.event_type
-  WHERE c.cum_n >= (p.pct * t.n_total + 99) // 100
-)
-SELECT event_type, CAST(pct AS INT) AS pct,
-       CAST(lag_s AS BIGINT) AS watermark_s,
-       CAST(cum_n AS BIGINT) AS rows_within
-FROM hit WHERE rk = 1
-""")
-def q_watermark_recommend_by_type(spark, sf_dir):
-    """Per-SOURCE watermark tuning (operators/lateness
-    .watermark_recommendation_by): each event_type stream gets its own
-    arrival order, frontier, lag histogram and recommendation — the
-    multi-tenant form (Spark applies the max watermark across a union, so
-    per-group numbers say which source to fix, not which global delay to
-    swallow). Every stage partitions by the group: the grouped profiler
-    has NO single-task window at all."""
-    from spanner_data_validator_spark.operators.lateness import (
-        watermark_recommendation_by,
-    )
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .select(F.coalesce(F.col("event_type"), F.lit(""))
-                  .alias("event_type"),
-                  F.expr(_ARRIVAL_SPARK).alias("arrival"), "ts"))
-    return watermark_recommendation_by(
-        ev, "event_type", F.col("arrival"), F.col("ts"),
-        pcts=(50, 95, 99, 100))

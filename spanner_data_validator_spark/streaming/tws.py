@@ -34,7 +34,7 @@ unit-tested against a fake handle (`tests/test_tws.py`), and
 (`streaming/sink.py`). On a real cluster it runs as-is. The SAME gap-close
 digest semantics also run end-to-end in this sandbox on the built-in
 engine: the ``stream_session_conv_digest`` query
-(plans/demo_queries.py) expresses them with ``session_window`` and is
+(plans/streaming_queries.py) expresses them with ``session_window`` and is
 oracle-checked against :func:`batch_equivalent`'s ground truth — use that
 path when a built-in operator suffices; use this processor when you need
 what TWS uniquely adds (several independent state variables per key,

@@ -101,21 +101,22 @@ def test_ivf_cent_cache_bounded_and_unpersists(spark):
     _IVF_CENT_CACHE_MAX persisted indexes; evicted ones are unpersisted
     (ADVICE r2: the unbounded cache leaked executor storage memory)."""
     from pyspark import StorageLevel
-    from spanner_data_validator_spark.plans import demo_queries as dq
+    from spanner_data_validator_spark.plans import curation_queries as cq
+    from spanner_data_validator_spark.plans.demo_queries import QUERIES
 
     dirs = [f"/root/testdata/sf0.001{'/' * i}" for i in range(1, 5)]  # 4 distinct keys, same data
-    dq._IVF_CENT_CACHE.clear()
+    cq._IVF_CENT_CACHE.clear()
     seen = []
     for d in dirs:
-        dq.QUERIES["ann_ivf_topk"](spark, d).count()
-        seen.append(dq._IVF_CENT_CACHE[d][1])
-        assert len(dq._IVF_CENT_CACHE) <= dq._IVF_CENT_CACHE_MAX
+        QUERIES["ann_ivf_topk"](spark, d).count()
+        seen.append(cq._IVF_CENT_CACHE[d][1])
+        assert len(cq._IVF_CENT_CACHE) <= cq._IVF_CENT_CACHE_MAX
     live = [df for df in seen if df.storageLevel != StorageLevel.NONE]
-    assert len(live) <= dq._IVF_CENT_CACHE_MAX
+    assert len(live) <= cq._IVF_CENT_CACHE_MAX
     # the survivors are exactly the cache's current entries
     assert all(idx.storageLevel != StorageLevel.NONE
-               for _, idx in dq._IVF_CENT_CACHE.values())
-    dq._IVF_CENT_CACHE.clear()
+               for _, idx in cq._IVF_CENT_CACHE.values())
+    cq._IVF_CENT_CACHE.clear()
 
 
 def test_hive_partition_filter_prunes_directories(spark, tmp_path):
