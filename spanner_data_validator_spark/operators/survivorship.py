@@ -34,6 +34,7 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 _RULES = ("longest", "mode", "min", "max")
 
@@ -51,7 +52,14 @@ def golden_records(df: DataFrame, cluster: str, id_col: str,
       ``("mode", value_col)`` — most frequent value, ties to the
       smallest value; NULLs don't vote.
       ``("min", value_col)`` / ``("max", value_col)`` — extrema.
+
+    ``id_col`` must be numeric: the tie order negates it. A non-numeric
+    ``id_col`` (e.g. a string id) raises ``ValueError``.
     """
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, NumericType):
+        raise ValueError(
+            f"id_col {id_col!r} must be numeric, got {id_type.simpleString()}")
     aggs: list[Column] = []
     rep_done = False
     mode_cols: list[tuple[str, str]] = []

@@ -25,7 +25,9 @@ expressions) — one text scan, zero Python in the row path.
 
 from __future__ import annotations
 
+import os
 import re
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -126,6 +128,20 @@ def split_quarantine(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
 # the split a first-class result instead.
 # ---------------------------------------------------------------------------
 
+def _local_path(path: str) -> str:
+    """Filesystem path of a plain path or ``file://`` URI; any other scheme
+    (``s3a://``, ``hdfs://``, ...) raises ``ValueError``."""
+    url = urlparse(path)
+    if not url.scheme:
+        return path
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        return url.path
+    raise ValueError(
+        f"{path!r}: only local paths and file:// URIs are supported "
+        f"(scheme {url.scheme!r}); the footer scan opens files with local "
+        f"filesystem calls")
+
+
 def scan_parquet_health(spark: SparkSession, paths: list[str],
                         *, slices: int | None = None) -> DataFrame:
     """(path, ok, n_rows, error): footer-validate every file, distributed.
@@ -135,7 +151,13 @@ def scan_parquet_health(spark: SparkSession, paths: list[str],
     one metadata round-trip per file, parallelized over the cluster via
     ``mapInPandas`` on the path list. ``n_rows`` is the footer's row count
     for readable files (0 with ``ok=false`` otherwise).
+
+    Paths must be plain paths or ``file://`` URIs on a filesystem every
+    executor mounts (local, or shared such as NFS): tasks open them with
+    local filesystem calls. Any other scheme raises ``ValueError`` before
+    a Spark job runs. ``path`` is the plain filesystem path.
     """
+    paths = [_local_path(p) for p in paths]
     if not paths:
         return spark.createDataFrame(
             [], "path string, ok boolean, n_rows long, error string")
@@ -175,11 +197,15 @@ def read_with_quarantine(spark: SparkSession, directory: str, *,
     listings are the caller's snapshot-discipline problem, as with any
     non-transactional directory read (``sources/snapshots`` is the
     versioned answer).
-    """
-    import os
 
+    ``directory`` must be a plain path or a ``file://`` URI on a local or
+    shared filesystem: it is listed with ``os.listdir``. Any other scheme
+    raises ``ValueError`` before a Spark job runs. The report and the read
+    use plain paths.
+    """
+    local_dir = _local_path(directory)
     paths = sorted(
-        os.path.join(directory, f) for f in os.listdir(directory)
+        os.path.join(local_dir, f) for f in os.listdir(local_dir)
         if f.endswith(suffix) and not f.startswith("_"))
     health = scan_parquet_health(spark, paths).localCheckpoint(eager=True)
     good_paths = [r["path"] for r in

@@ -67,5 +67,31 @@ def test_no_readable_files_raises(spark, tmp_path):
         read_with_quarantine(spark, d)
 
 
+def test_file_uris_accepted(spark, tmp_path):
+    d = _stage(tmp_path)
+    paths = sorted(f"file://{d}/{f}" for f in os.listdir(d))
+    ok = {os.path.basename(r["path"]) for r in
+          scan_parquet_health(spark, paths).where(F.col("ok")).collect()}
+    assert ok == {"c0.parquet", "c1.parquet"}
+    good, health = read_with_quarantine(spark, f"file://{d}")
+    assert good.count() == 2 * spark.read.parquet(SRC).count()
+    assert health.where(~F.col("ok")).count() == 2
+
+
+@pytest.mark.parametrize("uri", ["s3a://bucket/drop", "hdfs://nn:8020/drop",
+                                 "file://otherhost/drop"])
+def test_non_local_paths_rejected_before_any_job(spark, uri):
+    sc = spark.sparkContext
+    sc.setJobGroup("non-local-path", "no job may run")
+    try:
+        with pytest.raises(ValueError, match="only local paths"):
+            scan_parquet_health(spark, ["/tmp/a.parquet", f"{uri}/a.parquet"])
+        with pytest.raises(ValueError, match="only local paths"):
+            read_with_quarantine(spark, uri)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("non-local-path") == []
+
+
 def test_empty_path_list(spark):
     assert scan_parquet_health(spark, []).count() == 0

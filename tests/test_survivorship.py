@@ -74,6 +74,15 @@ def test_rep_id_without_longest_rule(spark):
     assert got == {1: 10, 2: 20, 3: 30}  # min id fallback
 
 
+def test_string_id_rejected(spark):
+    """The tie order negates id_col; a string id must fail up front, not
+    silently order by a null negation."""
+    df = _df(spark, BASE).withColumn("id", F.col("id").cast("string"))
+    with pytest.raises(ValueError, match="must be numeric"):
+        golden_records(df, "cl", "id",
+                       rules={"best_text": ("longest", "text", "n_chars")})
+
+
 def test_unknown_rule_rejected(spark):
     df = _df(spark, BASE)
     with pytest.raises(ValueError):
