@@ -296,7 +296,7 @@ def q_stratified_sample_mix(spark, sf_dir):
 # hamming <= 3 -> C(6,3)=20 combination probes keyed on 30 bits. The LIBRARY
 # default is the 128-bit/8-block xxhash64 config (operators/dedup.py) — this
 # query pins the md5-derived portable family so DuckDB computes the identical
-# signature end-to-end (verdict r2 item 2: zero no_oracle rows).
+# signature end-to-end (no rows-only query without an oracle).
 _SIMHASH_BITS, _SIMHASH_BLOCKS, _SIMHASH_H = 60, 6, 3
 
 
@@ -1922,7 +1922,7 @@ def q_priority_sample_docs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# ANN recall@k, oracle-checked (VERDICT r3 item 6)
+# ANN recall@k, oracle-checked
 # ---------------------------------------------------------------------------
 
 def _ann_recall_oracle(k: int = 3, n_planes: int = 8, dim: int = 64,

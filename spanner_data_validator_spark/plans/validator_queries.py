@@ -1262,7 +1262,7 @@ def q_fuzzy_key_match(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Byte-compatible reference fingerprint (VERDICT r3 item 4)
+# Byte-compatible reference fingerprint
 # ---------------------------------------------------------------------------
 
 @register("reference_hash_parity", """
@@ -1301,7 +1301,7 @@ def q_reference_hash_parity(spark, sf_dir):
 # fuzzy key linkage at edit distance 2: deletion blocking + PassJoin
 # ---------------------------------------------------------------------------
 
-# d=2 linkage (VERDICT r3 item 7): two-character drift, SymSpell blocking at
+# d=2 linkage: two-character drift, SymSpell blocking at
 # depth 2 — complete for levenshtein <= 2 (property-tested vs brute force in
 # tests/test_linkage.py)
 _DRIFT2_POS1 = f"CAST(p_partkey % length({_LK_KEY}) AS INT)"

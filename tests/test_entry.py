@@ -14,7 +14,7 @@ import __spark_entry__ as e  # noqa: E402
 _REPO = pathlib.Path(__file__).resolve().parents[1]
 _PKG = "spanner_data_validator_spark"
 _PLANS = f"{_PKG}.plans"
-# driver-checked rows whose whole computation is Spark built-ins
+# CORRECTNESS_r05.json rows whose whole computation is Spark built-ins
 _BUILTIN_ONLY_OK = {"summary_validation", "session_windows"}
 
 
@@ -34,7 +34,7 @@ def test_registry_consistency():
     for name in ["validate_classify", "validate_totals", "validate_report",
                  "ngram_jaccard_pairs", "ann_cosine_topk"]:
         assert name in oracles
-    # every driver-checked row is still registered
+    # every CORRECTNESS_r05.json row is still registered
     driver_rows = json.loads((_REPO / "CORRECTNESS_r05.json").read_text())
     assert len(driver_rows) == 50
     assert sorted(set(driver_rows) - set(qs)) == []
