@@ -8,8 +8,8 @@ dto/session/SourceTable.java:104-106 / SpannerTable.java:116-118) to form the
 subquery hull, the per-range bounds become Spark JDBC ``predicates`` — one
 scan partition per range, each executor issuing its own bound query (the
 JdbcIO.readAll fan-out, JDBCToSpannerDVTWithHash.java:580-604) — and both
-sides flow through the standard fingerprint → full-outer classify → tally
-plan.
+sides flow through the one table plan, ``comparator.validate_batch``
+(fingerprint → full-outer classify → threshold window → tally).
 
 Row hashing follows HashResult.fromJDBCResultSet (dto/HashResult.java:173-326):
 EVERY selected column contributes its normalized serialization to the
@@ -24,11 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spanner_data_validator_spark.operators.comparator import (
-    classify_pair,
-    tally_report,
-)
-from spanner_data_validator_spark.functions.fingerprint import fingerprint_turns
+from spanner_data_validator_spark.operators.comparator import COUNT_COLS, validate_batch
 from spanner_data_validator_spark.operators.ranges import (
     PartitionRange,
     fetch_ranges,
@@ -147,8 +143,8 @@ def validate_query_spec(
 
     When the spec carries a timestampThreshold config, classified rows are
     filtered to the reference's threshold window (CountMatchesDoFn.java:47-65)
-    using the column at ``timestamp_threshold_col_index`` — previously the
-    parsed config was silently ignored (ADVICE r2).
+    using the column at ``timestamp_threshold_col_index`` (TIMESTAMP, DATE or
+    numeric epoch millis).
     """
     ranges = spec_ranges(spec)
     src = read_spec_side(spark, source_url, spec, dialect="source",
@@ -177,46 +173,21 @@ def validate_query_spec(
         raise ValueError(
             "spec sets timestampThresholdValue but no timestampThresholdColIndex "
             "— cannot locate the timestamp column to apply the window to")
-    use_threshold = threshold_ms > 0 and ts_idx >= 0
-    if use_threshold:
-        ts_name = f"c{ts_idx}"
-        if ts_name not in payload_cols:
+    ts_col = None
+    if threshold_ms > 0:
+        if f"c{ts_idx}" not in payload_cols:
             raise ValueError(
                 f"timestampThresholdColIndex={ts_idx} is outside the "
                 f"{n_cols}-column SELECT list")
+        # carried under its own name: the column may also be the match key
+        ts_col = "__threshold_ts"
+        src, tgt = (df.withColumn(ts_col, F.col(f"c{ts_idx}"))
+                    for df in (src, tgt))
 
-        def with_millis(df: DataFrame) -> DataFrame:
-            dt = dict(df.dtypes)[ts_name]
-            ts = F.col(ts_name)
-            millis = ((ts.cast("double") * 1000).cast("long")
-                      if dt.startswith("timestamp") or dt == "date"
-                      else ts.cast("long"))
-            return df.withColumn("__ts_millis", millis)
-
-        src, tgt = with_millis(src), with_millis(tgt)
-
-    fp = dict(algo=algo, ts_col="__ts_millis" if use_threshold else None)
-    s = fingerprint_turns(src, [key], payload_cols, **fp)
-    t = fingerprint_turns(tgt, [key], payload_cols, **fp)
-    classified = classify_pair(
-        s, t, [key], carry_cols=["__ts_millis"] if use_threshold else None)
-    if use_threshold:
-        from spanner_data_validator_spark.operators.comparator import (
-            apply_timestamp_threshold,
-        )
-        classified = apply_timestamp_threshold(
-            classified,
-            threshold_millis=threshold_ms,
-            delta_mins=spec.timestamp_threshold_delta_mins,
-            src_ts_col="src___ts_millis",
-            tgt_ts_col="tgt___ts_millis",
-        )
-    report = tally_report(
-        classified,
-        F.pmod(F.xxhash64(F.col(key)), F.lit(max(1, spec.partition_count))),
-        run_name=run_name,
-    )
-    return report.select(
-        "run_name", F.lit(spec.table_name).alias("table_or_query"),
-        "range", "match_count", "source_count", "target_count",
-        "source_conflict_count", "target_conflict_count")
+    _, report, _ = validate_batch(
+        src, tgt, [key], payload_cols, algo=algo,
+        num_ranges=max(1, spec.partition_count), run_name=run_name,
+        ts_col=ts_col, threshold_millis=threshold_ms,
+        delta_mins=spec.timestamp_threshold_delta_mins)
+    return report.select("run_name", F.lit(spec.table_name).alias("table_or_query"),
+                         "range", *COUNT_COLS)

@@ -122,20 +122,16 @@ def range_files(d: str, ranges: set[int]) -> list[str]:
 
 def revalidate_ranges(spark: SparkSession, src_dir: str, tgt_dir: str,
                       ranges: set[int], *, algo: str = "xxhash64",
-                      band: str = "2 hours",
-                      dedup_keys: bool = False) -> DataFrame:
+                      band: str = "2 hours") -> DataFrame:
     """Batch-classify ONLY the changed ranges: the reads list exactly the
     ``r<range>_*`` files of those ranges (old + new — a range revalidates
     whole, keys may move between files), so the scan provably touches no
-    unchanged range. Same fingerprint + classify expressions as the
-    streaming validator."""
+    unchanged range. The plan is ``validate_transcripts.classify_transcripts``,
+    the one a full ``run_batch_validation`` runs (first row per key)."""
     from spanner_data_validator_spark.jobs.validate_transcripts import (
-        sentinel_filter)
-    from spanner_data_validator_spark.operators.comparator import dedup_first
+        classify_transcripts)
     from spanner_data_validator_spark.sources.transcript_source import (
         TRANSCRIPT_SCHEMA)
-    from spanner_data_validator_spark.streaming.validate_stream import (
-        classify_stream, fingerprint_stream)
 
     def side(d: str) -> DataFrame:
         files = range_files(d, ranges)
@@ -143,12 +139,8 @@ def revalidate_ranges(spark: SparkSession, src_dir: str, tgt_dir: str,
             return spark.createDataFrame([], TRANSCRIPT_SCHEMA)
         return spark.read.schema(TRANSCRIPT_SCHEMA).parquet(*files)
 
-    src = fingerprint_stream(side(src_dir), algo=algo)
-    tgt = fingerprint_stream(side(tgt_dir), algo=algo)
-    if dedup_keys:
-        src = dedup_first(src, ["conv_id", "turn_idx"], carry_cols=["ts"])
-        tgt = dedup_first(tgt, ["conv_id", "turn_idx"], carry_cols=["ts"])
-    return classify_stream(src, tgt, band=band).where(sentinel_filter())
+    return classify_transcripts(side(src_dir), side(tgt_dir),
+                                algo=algo, band=band)
 
 
 def revalidate_delta_report(spark: SparkSession, sink, checkpoint: str,

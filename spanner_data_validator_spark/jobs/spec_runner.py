@@ -66,20 +66,15 @@ def load_specs(path: str) -> list[TableSpec]:
 
 
 def _validate_one(spark: SparkSession, spec: TableSpec, run_name: str):
+    """One table through ``comparator.validate_batch``: read both sides,
+    apply the spec's custom source transform, keep the report columns."""
     from pyspark.sql import functions as F
 
-    from spanner_data_validator_spark.operators.comparator import (
-        apply_timestamp_threshold,
-        classify_pair,
-        tally_report,
-    )
-    from spanner_data_validator_spark.functions.fingerprint import fingerprint_turns
+    from spanner_data_validator_spark.operators.comparator import COUNT_COLS, validate_batch
 
     def read(p):
-        df = spark.read.format(spec.fmt).load(p)
-        return df
+        return spark.read.format(spec.fmt).load(p)
 
-    kwargs = dict(algo=spec.algo, json_cols=frozenset(spec.json_cols))
     source_df = read(spec.source_path)
     if spec.transformation:
         from spanner_data_validator_spark.operators.transform import (
@@ -90,34 +85,14 @@ def _validate_one(spark: SparkSession, spec: TableSpec, run_name: str):
         fn = load_custom_transformation(spec.transformation,
                                         spec.transformation_params)
         source_df = apply_custom_transformation(source_df, fn)
-    src = fingerprint_turns(source_df, spec.key_cols,
-                            spec.payload_cols, ts_col=spec.ts_col, **kwargs)
-    tgt = fingerprint_turns(read(spec.target_path), spec.key_cols,
-                            spec.payload_cols, ts_col=spec.ts_col, **kwargs)
-    carry = [spec.ts_col] if spec.ts_col else []
-    classified = classify_pair(src, tgt, spec.key_cols, carry_cols=carry)
-    if spec.timestamp_threshold_millis and spec.ts_col:
-        classified = classified.withColumn(
-            f"src_{spec.ts_col}_ms", F.unix_millis(F.col(f"src_{spec.ts_col}"))
-        ).withColumn(
-            f"tgt_{spec.ts_col}_ms", F.unix_millis(F.col(f"tgt_{spec.ts_col}"))
-        )
-        classified = apply_timestamp_threshold(
-            classified,
-            threshold_millis=spec.timestamp_threshold_millis,
-            delta_mins=spec.timestamp_delta_mins,
-            src_ts_col=f"src_{spec.ts_col}_ms",
-            tgt_ts_col=f"tgt_{spec.ts_col}_ms",
-        )
-    range_expr = F.pmod(F.xxhash64(*[F.col(k) for k in spec.key_cols[:1]]),
-                        F.lit(spec.num_ranges))
-    report = tally_report(classified, range_expr, run_name=run_name)
-    return report.select(
-        "run_name",
-        F.lit(spec.table_name).alias("table_or_query"),
-        "range", "match_count", "source_count", "target_count",
-        "source_conflict_count", "target_conflict_count",
-    )
+    _, report, _ = validate_batch(
+        source_df, read(spec.target_path), spec.key_cols, spec.payload_cols,
+        algo=spec.algo, json_cols=frozenset(spec.json_cols),
+        num_ranges=spec.num_ranges, run_name=run_name, ts_col=spec.ts_col,
+        threshold_millis=spec.timestamp_threshold_millis,
+        delta_mins=spec.timestamp_delta_mins)
+    return report.select("run_name", F.lit(spec.table_name).alias("table_or_query"),
+                         "range", *COUNT_COLS)
 
 
 def run_specs(

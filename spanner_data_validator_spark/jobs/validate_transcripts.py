@@ -13,7 +13,8 @@ The streaming sink (``streaming/sink.TallyForeachBatch``) stages each
 micro-batch as ``<out>/{classified,tallies,mismatches}/batch=<id>`` and
 publishes all three with the one marker ``<out>/_commits/<id>``.
 
-Batch mode runs the identical classify expression on static DataFrames —
+Batch mode (``classify_transcripts``; also behind ``jobs/revalidate``) runs
+the identical classify expression on static DataFrames, first row per key —
 used by tests to prove stream/batch count equality on the same input.
 
 Usage (cluster; spark-submit takes the job's script path):
@@ -45,7 +46,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spanner_data_validator_spark.operators.comparator import dedup_first
 from spanner_data_validator_spark.sources.transcript_source import (
+    KEY_COLS,
     read_transcripts,
     stream_transcripts,
     write_transcripts,
@@ -80,6 +83,29 @@ def append_sentinel(spark: SparkSession, *dirs: str, ts: str = "2100-01-01") -> 
         write_transcripts(pdf, spark, d, n_files=1, subdir=f"sentinel_{int(time.time()*1000)}")
 
 
+def classify_transcripts(
+    src_df: DataFrame,
+    tgt_df: DataFrame,
+    *,
+    algo: str = "xxhash64",
+    band: str = "2 hours",
+) -> DataFrame:
+    """The one batch transcript plan: fingerprint → first row per key →
+    the streaming join's classify expression → sentinel filter.
+
+    Duplicate (conv_id, turn_idx) rows collapse per side to the min-
+    (fingerprint, ts) row — the reference inspects only the first element
+    per key (CountMatchesDoFn.java:73-80); without it each dup key fans out
+    k_src×k_tgt rows. The dedup aggregate hashes on the join keys, so
+    Catalyst reuses the exchange — still one shuffle per side.
+    """
+    src = dedup_first(fingerprint_stream(src_df, algo=algo), KEY_COLS,
+                      carry_cols=["ts"])
+    tgt = dedup_first(fingerprint_stream(tgt_df, algo=algo), KEY_COLS,
+                      carry_cols=["ts"])
+    return classify_stream(src, tgt, band=band).where(sentinel_filter())
+
+
 def run_batch_validation(
     spark: SparkSession,
     src_path: str,
@@ -87,25 +113,11 @@ def run_batch_validation(
     *,
     algo: str = "xxhash64",
     band: str = "2 hours",
-    dedup_keys: bool = True,
 ) -> DataFrame:
-    """Batch classification through the SAME join expression as streaming.
-
-    ``dedup_keys`` (default on — the reference inspects only the first element
-    per key, CountMatchesDoFn.java:73-80) collapses duplicate (conv_id,
-    turn_idx) rows per side to the deterministic min-(fingerprint, ts) row
-    before the join; without it each dup key would fan out k_src×k_tgt joined
-    rows and inflate the tallies. The dedup aggregate hashes on the same keys
-    as the join, so Catalyst reuses the exchange — still one shuffle per side.
-    """
-    from spanner_data_validator_spark.operators.comparator import dedup_first
-
-    src = fingerprint_stream(read_transcripts(spark, src_path), algo=algo)
-    tgt = fingerprint_stream(read_transcripts(spark, tgt_path), algo=algo)
-    if dedup_keys:
-        src = dedup_first(src, ["conv_id", "turn_idx"], carry_cols=["ts"])
-        tgt = dedup_first(tgt, ["conv_id", "turn_idx"], carry_cols=["ts"])
-    return classify_stream(src, tgt, band=band).where(sentinel_filter())
+    """:func:`classify_transcripts` over two transcript tables."""
+    return classify_transcripts(read_transcripts(spark, src_path),
+                                read_transcripts(spark, tgt_path),
+                                algo=algo, band=band)
 
 
 def run_streaming_validation(
@@ -247,12 +259,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="drain all available input then stop (default); "
                     "--no-available-now runs a continuous processing-time "
                     "trigger instead")
-    ap.add_argument("--dedup-keys", action=argparse.BooleanOptionalAction,
-                    default=True,
-                    help="collapse duplicate (conv_id, turn_idx) rows per "
-                    "side before the join (the reference's first-element "
-                    "rule, CountMatchesDoFn.java:73-80); --no-dedup-keys "
-                    "skips the extra stage when upstream keys are unique")
     args = ap.parse_args(argv)
 
     from spanner_data_validator_spark.session import get_spark
@@ -266,9 +272,7 @@ def main(argv: list[str] | None = None) -> None:
 
     if args.mode == "batch":
         classified = run_batch_validation(
-            spark, args.source, args.target, algo=args.algo, band=args.band,
-            dedup_keys=args.dedup_keys,
-        )
+            spark, args.source, args.target, algo=args.algo, band=args.band)
         classified.write.mode("overwrite").parquet(os.path.join(args.out, "classified"))
     else:
         sink = run_streaming_validation(
@@ -283,7 +287,7 @@ def main(argv: list[str] | None = None) -> None:
             engine=args.engine,
             window_duration=args.window,
             available_now=args.available_now,
-            dedup_keys=args.dedup_keys and args.engine == "join",
+            dedup_keys=args.engine == "join",
         )
         if args.available_now:
             report = sink.report(spark)

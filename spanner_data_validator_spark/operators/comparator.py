@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MATCH = "MATCH"
 MISMATCH = "MISMATCH"
@@ -48,6 +49,8 @@ SOURCE_ONLY = "SOURCE_ONLY"
 TARGET_ONLY = "TARGET_ONLY"
 
 STATUSES = [MATCH, MISMATCH, SOURCE_ONLY, TARGET_ONLY]
+COUNT_COLS = ["match_count", "source_count", "target_count",
+              "source_conflict_count", "target_conflict_count"]
 
 
 def dedup_first(
@@ -70,6 +73,18 @@ def dedup_first(
     cols.append(F.col(f"__pick.{fingerprint_col}").alias(fingerprint_col))
     cols.extend(F.col(f"__pick.{c}").alias(c) for c in carry)
     return out.select(*cols)
+
+
+def classify_status(src_fp: str, tgt_fp: str) -> Column:
+    """Four-way status of a full-outer-joined row from its two fingerprint
+    columns (CountMatchesDoFn.java:67-122) — the one copy of this rule."""
+    s, t = F.col(src_fp), F.col(tgt_fp)
+    return (
+        F.when(s.isNotNull() & t.isNotNull(),
+               F.when(s == t, MATCH).otherwise(MISMATCH))
+        .when(t.isNull(), SOURCE_ONLY)
+        .otherwise(TARGET_ONLY)
+    )
 
 
 def classify_pair(
@@ -101,13 +116,7 @@ def classify_pair(
         *[F.col(c).alias(f"tgt_{c}") for c in carry],
     )
     joined = s.join(t, on=key_cols, how="full_outer")
-    status = (
-        F.when(F.col("src_fp").isNotNull() & F.col("tgt_fp").isNotNull(),
-               F.when(F.col("src_fp") == F.col("tgt_fp"), MATCH).otherwise(MISMATCH))
-        .when(F.col("tgt_fp").isNull(), SOURCE_ONLY)
-        .otherwise(TARGET_ONLY)
-    )
-    return joined.withColumn("status", status)
+    return joined.withColumn("status", classify_status("src_fp", "tgt_fp"))
 
 
 def latest_per_key(
@@ -157,14 +166,28 @@ def apply_timestamp_threshold(
     Window: Δ≠0 → [min(th+Δ·60000, th), max(th+Δ·60000, th)]; Δ=0 → [th, th+10000 days].
     Applied to whichever side is present (the reference checks the spanner/target
     record when both are present — we follow that: target first, else source).
+
+    The columns are compared as epoch millis, converted here by type: TIMESTAMP
+    and DATE (midnight, session time zone) → ``unix_millis``; numeric as is.
     """
     if threshold_millis <= 0:
         return classified
     shifted = threshold_millis + delta_mins * 60_000
     start = min(shifted, threshold_millis)
     end = max(shifted, threshold_millis) if delta_mins != 0 else start + 10_000 * 86_400_000
-    ts = F.coalesce(F.col(tgt_ts_col), F.col(src_ts_col))
+    ts = F.coalesce(_epoch_millis(classified, tgt_ts_col),
+                    _epoch_millis(classified, src_ts_col))
     return classified.where((ts >= F.lit(start)) & (ts <= F.lit(end)))
+
+
+def _epoch_millis(df: DataFrame, col: str) -> Column:
+    dtype = df.schema[col].dataType
+    if isinstance(dtype, T.NumericType):  # already epoch millis
+        return F.col(col).cast("long")
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        return F.unix_millis(F.col(col).cast("timestamp"))
+    raise TypeError(f"threshold column {col!r} has type {dtype.simpleString()}; "
+                    "expected a timestamp, date or numeric epoch-millis column")
 
 
 def tally_report(
@@ -205,10 +228,7 @@ def tally_report(
         salt = F.pmod(F.crc32(F.concat_ws("\x1f", *classified.columns[:1])), F.lit(salt_buckets))
         partial = df.withColumn("__salt", salt).groupBy("range", "__salt").agg(*counts())
         report = partial.groupBy("range").agg(
-            *[F.sum(c).alias(c) for c in [
-                "match_count", "source_count", "target_count",
-                "source_conflict_count", "target_conflict_count"]]
-        )
+            *[F.sum(c).alias(c) for c in COUNT_COLS])
     else:
         report = df.groupBy("range").agg(*counts())
 
@@ -228,8 +248,14 @@ def validate_batch(
     keep_values: bool = False,
     num_ranges: int = 64,
     run_name: str = "run",
+    ts_col: str | None = None,
+    threshold_millis: int = 0,
+    delta_mins: int = 0,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """End-to-end batch validation (SURVEY.md §7.0 slice).
+    """End-to-end batch validation (SURVEY.md §7.0 slice) — the one table plan,
+    also behind ``jobs/spec_runner`` and ``jobs/query_spec_runner``. An
+    optional ``ts_col`` is carried as ``src_/tgt_<ts_col>`` and, when
+    ``threshold_millis > 0``, windowed by :func:`apply_timestamp_threshold`.
 
     Returns ``(classified, report, mismatch_rows)``:
 
@@ -241,12 +267,15 @@ def validate_batch(
     """
     from spanner_data_validator_spark.functions.fingerprint import fingerprint_turns
 
-    src_fp = fingerprint_turns(source, key_cols, payload_cols, algo=algo,
-                               json_cols=json_cols, keep_payload=keep_values)
-    tgt_fp = fingerprint_turns(target, key_cols, payload_cols, algo=algo,
-                               json_cols=json_cols, keep_payload=keep_values)
-    carry = ["payload"] if keep_values else []
+    fp = dict(algo=algo, json_cols=json_cols, keep_payload=keep_values, ts_col=ts_col)
+    src_fp = fingerprint_turns(source, key_cols, payload_cols, **fp)
+    tgt_fp = fingerprint_turns(target, key_cols, payload_cols, **fp)
+    carry = (["payload"] if keep_values else []) + ([ts_col] if ts_col else [])
     classified = classify_pair(src_fp, tgt_fp, key_cols, carry_cols=carry)
+    if ts_col:
+        classified = apply_timestamp_threshold(
+            classified, threshold_millis=threshold_millis, delta_mins=delta_mins,
+            src_ts_col=f"src_{ts_col}", tgt_ts_col=f"tgt_{ts_col}")
 
     # reporting range: deterministic hash bucket of the first key column
     # (replaces the reference's driver-computed PartitionRange list +

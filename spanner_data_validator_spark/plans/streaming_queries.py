@@ -551,7 +551,8 @@ FROM events
 def q_stream_into_snapshot_table(spark, sf_dir):
     """STREAMING writes into the table format: every micro-batch commits
     as one atomic snapshot through the Python DataSource stream writer
-    (sources/snapshot_sink.py), exactly-once via the batch-id fence file —
+    (sources/snapshot_sink.py), exactly-once via the batch id recorded in
+    the snapshot metadata —
     a replayed micro-batch recognizes its own id and drops its fresh files
     as invisible orphans. Two micro-batches (maxFilesPerTrigger=2 over 4
     input files) -> snapshot versions 1 and 2; the digest of the final

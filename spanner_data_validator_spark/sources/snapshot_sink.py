@@ -13,7 +13,9 @@ real two-phase commit protocol a production sink needs:
 * ``abort`` deletes the pending files; and because readers resolve scans
   through manifests only, files from failed/zombie tasks are invisible
   even if abort never runs — the same orphan-tolerance Iceberg gets from
-  its metadata tree.
+  its metadata tree;
+* a streaming commit records its micro-batch id in that same snapshot
+  metadata, so a replay of a published batch finds it there and skips.
 
 Reference analogue: the BigQuery conflicting-record sinks
 (`JDBCToSpannerDVTWithHash.java:191-246`) — there the warehouse provides
@@ -87,9 +89,12 @@ class _SnapshotStreamCommitWriter(DataSourceStreamArrowWriter,
     """Streaming sink: one micro-batch = one snapshot commit, EXACTLY ONCE.
 
     The engine replays a logged-but-uncommitted micro-batch after recovery
-    under the SAME batch id; the fence file (``metadata/stream-commits.txt``,
-    appended only after the snapshot commit) lets the replayed commit
-    recognize itself and skip — the same batch-id fencing discipline as
+    under the SAME batch id. Each commit records its batch id in the
+    snapshot metadata (``stream_batch_id``), written by the same atomic
+    rename that publishes the snapshot, so there is no window in which the
+    data is visible but the batch is not recorded. A commit whose id is not
+    above the current snapshot's ``stream_batch_id`` is a replay and skips —
+    the same batch-id fencing discipline as
     ``streaming/sink.TallyForeachBatch``, implemented at the table-format
     layer. The replay's fresh pending files become orphans, which readers
     never see (manifest-resolved scans).
@@ -100,35 +105,19 @@ class _SnapshotStreamCommitWriter(DataSourceStreamArrowWriter,
     def write(self, iterator):
         return _SnapshotCommitWriter.write(self, iterator)
 
-    def _fence_path(self) -> str:
-        return os.path.join(self.table_dir, "metadata", "stream-commits.txt")
-
-    def _committed_batches(self) -> set[int]:
-        try:
-            with open(self._fence_path()) as f:
-                return {int(line.split("\t")[0])
-                        for line in f if line.strip()}
-        except FileNotFoundError:
-            return set()
-
     def commit(self, messages, batchId: int) -> None:
         from spanner_data_validator_spark.sources import snapshots as snap
 
-        if batchId in self._committed_batches():
+        last = snap.stream_batch_id(self.table_dir)
+        if last is not None and batchId <= last:
             self.abort(messages, batchId)  # replay: drop the fresh files
             return
         files = [m.path for m in messages if m is not None and m.path]
-        version = snap.commit_files(self.table_dir, files) if files else None
-        os.makedirs(os.path.dirname(self._fence_path()), exist_ok=True)
-        with open(self._fence_path(), "a") as f:
-            f.write(f"{batchId}\t{version}\n")
+        if files:
+            snap.commit_files(self.table_dir, files, stream_batch_id=batchId)
 
     def abort(self, messages, batchId: int) -> None:
-        import shutil
-
-        for m in messages:
-            if m is not None and m.path:
-                shutil.rmtree(os.path.dirname(m.path), ignore_errors=True)
+        _SnapshotCommitWriter.abort(self, messages)
 
 
 class SnapshotCommitDataSource(DataSource):

@@ -65,7 +65,8 @@ def _load_meta(table_dir: str, version: int) -> dict:
 
 def commit_files(table_dir: str, new_files: list[str], *,
                  operation: str = "append",
-                 removed: list[str] | None = None) -> int:
+                 removed: list[str] | None = None,
+                 stream_batch_id: int | None = None) -> int:
     """Register an already-written immutable file set as snapshot N+1.
 
     The atomic step of every commit path (the DataFrame writer below and
@@ -80,12 +81,16 @@ def commit_files(table_dir: str, new_files: list[str], *,
     ``added_files`` feed incremental scans), ``replace`` rewrites existing
     rows into new files (compaction — live file set changes, logical
     content does not, and incremental scans SKIP it entirely).
+
+    ``stream_batch_id`` (``snapshot_sink``'s replay fence) lands in the same
+    atomic metadata rename; later commits carry the parent's value forward.
     """
     if operation not in ("append", "replace", "delete"):
         raise ValueError(f"unknown snapshot operation {operation!r}")
     os.makedirs(_meta_dir(table_dir), exist_ok=True)
     parent = current_version(table_dir)
-    prev = _load_meta(table_dir, parent)["files"] if parent else []
+    parent_meta = _load_meta(table_dir, parent) if parent else {}
+    prev = parent_meta.get("files", [])
     if operation in ("replace", "delete"):
         gone = set(removed or [])
         unknown = gone - set(prev)
@@ -99,7 +104,9 @@ def commit_files(table_dir: str, new_files: list[str], *,
     meta = {"version": version, "parent": parent,
             "operation": operation,
             "files": live,
-            "added_files": sorted(new_files)}
+            "added_files": sorted(new_files),
+            "stream_batch_id": parent_meta.get("stream_batch_id")
+            if stream_batch_id is None else stream_batch_id}
     tmp = os.path.join(_meta_dir(table_dir), f".v{version}.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
@@ -107,6 +114,12 @@ def commit_files(table_dir: str, new_files: list[str], *,
     with open(_hint_path(table_dir), "w") as f:
         f.write(str(version))
     return version
+
+
+def stream_batch_id(table_dir: str) -> int | None:
+    """The stream micro-batch id on the current snapshot, or None."""
+    v = current_version(table_dir)
+    return _load_meta(table_dir, v).get("stream_batch_id") if v else None
 
 
 def commit(df: DataFrame, table_dir: str, *, files: int = 1) -> int:

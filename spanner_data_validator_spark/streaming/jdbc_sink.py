@@ -28,6 +28,9 @@ per partition); only the tiny promote/fence statements run on the driver
 over java.sql via the py4j gateway. Works against any JDBC database with
 transactions + INSERT..SELECT; tested live on embedded Derby, including
 torn-write and dirty-staging replay convergence.
+
+:class:`JdbcExactlyOnceSink` is the one-table case of
+:class:`JdbcAtomicMultiSink` (N tables, one fence row).
 """
 
 from __future__ import annotations
@@ -38,18 +41,31 @@ from pyspark.sql import functions as F
 _DERBY_TABLE_EXISTS = "X0Y32"
 
 
-class JdbcExactlyOnceSink:
-    """``foreachBatch`` callable writing batch-fenced rows to a JDBC table.
+class JdbcAtomicMultiSink:
+    """One fence row covers N JDBC tables.
 
-    ``table`` must exist with the DataFrame's columns plus
-    ``batch_id BIGINT``; the fence table is created on first use.
+    The reference writes its report and conflicting-rows feeds as two
+    independent sinks (JDBCToSpannerDVTWithHash.java:393-415, 468-469);
+    fencing each separately leaves a crash window where the report is
+    visible but its conflict rows are not. Here each table's batch is
+    staged by the executors (parallel JDBC append; task retries may dirty
+    staging), then one java.sql connection promotes EVERY table + inserts
+    the single fence row in ONE transaction — commit is the only publication point,
+    so a crash anywhere before it publishes nothing to any table, and the
+    replay re-stages and commits everything. ``tables`` must exist with
+    their frames' columns plus ``batch_id BIGINT``. Staging tables are
+    ``{table}_stage_{id}``; the fence table (default
+    ``{tables[0]}_commits``) is created on first use.
     """
 
-    def __init__(self, url: str, table: str, *,
+    def __init__(self, url: str, tables: list[str], *,
                  fence_table: str | None = None):
+        if not tables:
+            raise ValueError("at least one table is required")
         self.url = url
-        self.table = table
-        self.fence_table = fence_table or f"{table}_commits"
+        self.tables = list(tables)
+        # fences are per-SINK, not per-table: one ledger, one truth
+        self.fence_table = fence_table or f"{tables[0]}_commits"
         self._fence_ready = False
 
     # -- tiny driver-side statements over java.sql ------------------------
@@ -100,10 +116,12 @@ class JdbcExactlyOnceSink:
         finally:
             conn.close()
 
-    def _stage_name(self, batch_id: int) -> str:
-        return f"{self.table}_stage_{batch_id}"
+    @staticmethod
+    def _stage_name(table: str, batch_id: int) -> str:
+        return f"{table}_stage_{batch_id}"
 
-    def _drop_if_exists(self, conn, table: str) -> None:
+    @staticmethod
+    def _drop_if_exists(conn, table: str) -> None:
         st = conn.createStatement()
         try:
             st.execute(f"DROP TABLE {table}")
@@ -112,116 +130,13 @@ class JdbcExactlyOnceSink:
         finally:
             st.close()
 
-    # -- the foreachBatch protocol ----------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        stage = self._stage_name(batch_id)
-        if self.is_committed(spark, batch_id):
-            # replay of a committed batch: clean any leftover staging table
-            conn = self._conn(spark)
-            try:
-                self._drop_if_exists(conn, stage)
-            finally:
-                conn.close()
-            return
-        conn = self._conn(spark)
-        try:
-            self._drop_if_exists(conn, stage)  # dirty staging from a crash
-            st = conn.createStatement()
-            st.execute(f"CREATE TABLE {stage} AS SELECT * FROM {self.table} "
-                       "WITH NO DATA")
-            st.close()
-        finally:
-            conn.close()
-        # executors: parallel append to STAGING (task retries may duplicate
-        # rows here — promote collapses them)
-        (batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-         .write.mode("append")
-         .format("jdbc").option("url", self.url)
-         .option("dbtable", stage).save())
-        # driver: atomic promote — cleanup + dedup-insert + fence, ONE commit
-        conn = self._conn(spark)
-        try:
-            conn.setAutoCommit(False)
-            ps = conn.prepareStatement(
-                f"DELETE FROM {self.table} WHERE batch_id = ?")
-            ps.setLong(1, batch_id)
-            ps.executeUpdate()
-            ps.close()
-            st = conn.createStatement()
-            st.execute(f"INSERT INTO {self.table} "
-                       f"SELECT DISTINCT * FROM {stage}")
-            st.close()
-            ps = conn.prepareStatement(
-                f"INSERT INTO {self.fence_table} VALUES (?)")
-            ps.setLong(1, batch_id)
-            ps.executeUpdate()
-            ps.close()
-            conn.commit()
-            conn.setAutoCommit(True)
-            self._drop_if_exists(conn, stage)
-        finally:
-            conn.close()
-
-    def read_committed(self, spark: SparkSession) -> DataFrame:
-        """Exactly the fenced rows: data semi-joined to the fence table
-        (promote is atomic, but the semi-join also hides rows written by a
-        foreign/legacy producer that never fenced)."""
-        def rd(table: str) -> DataFrame:
-            df = (spark.read.format("jdbc").option("url", self.url)
-                  .option("dbtable", table).load())
-            # databases that fold unquoted identifiers to upper case (Derby,
-            # Oracle, DB2) would hand back K/STATUS/BATCH_ID — normalize so
-            # readers see the columns they wrote
-            return df.toDF(*[c.lower() for c in df.columns])
-        self._ensure_fence(spark)
-        return rd(self.table).join(
-            rd(self.fence_table), on="batch_id", how="left_semi")
-
-
-class JdbcAtomicMultiSink:
-    """One fence row covers N JDBC tables — the single-transaction
-    two-table upgrade of :class:`JdbcExactlyOnceSink` (VERDICT r4 #5).
-
-    The reference writes its report and conflicting-rows feeds as two
-    independent sinks (JDBCToSpannerDVTWithHash.java:393-415, 468-469);
-    fencing each separately leaves a crash window where the report is
-    visible but its conflict rows are not. Here each table's batch is
-    staged by the executors (parallel JDBC append; task retries may dirty
-    staging), then the driver promotes EVERY table + inserts the single
-    fence row in ONE transaction — commit is the only publication point,
-    so a crash anywhere before it publishes nothing to any table, and the
-    replay re-stages and commits everything. ``tables`` must exist with
-    their frames' columns plus ``batch_id BIGINT``.
-    """
-
-    def __init__(self, url: str, tables: list[str], *,
-                 fence_table: str | None = None):
-        if not tables:
-            raise ValueError("at least one table is required")
-        self.url = url
-        self.tables = list(tables)
-        # fences are per-SINK here, not per-table: one ledger, one truth
-        self._fence = JdbcExactlyOnceSink(
-            url, tables[0], fence_table=fence_table or f"{tables[0]}_commits")
-
-    @property
-    def fence_table(self) -> str:
-        return self._fence.fence_table
-
-    def is_committed(self, spark: SparkSession, batch_id: int) -> bool:
-        return self._fence.is_committed(spark, batch_id)
-
-    def _stage_name(self, table: str, batch_id: int) -> str:
-        return f"{table}_stage_{batch_id}"
-
     def _stage(self, spark: SparkSession, batch_id: int,
                frames: dict[str, DataFrame]) -> None:
-        conn = self._fence._conn(spark)
+        conn = self._conn(spark)
         try:
             for table in frames:
                 stage = self._stage_name(table, batch_id)
-                self._fence._drop_if_exists(conn, stage)  # crash leftovers
+                self._drop_if_exists(conn, stage)  # crash leftovers
                 st = conn.createStatement()
                 st.execute(f"CREATE TABLE {stage} AS SELECT * FROM {table} "
                            "WITH NO DATA")
@@ -237,7 +152,7 @@ class JdbcAtomicMultiSink:
     def _promote(self, spark: SparkSession, batch_id: int,
                  tables: list[str]) -> None:
         """ALL tables' promotes + the fence insert under one commit."""
-        conn = self._fence._conn(spark)
+        conn = self._conn(spark)
         try:
             conn.setAutoCommit(False)
             for table in tables:
@@ -258,8 +173,7 @@ class JdbcAtomicMultiSink:
             conn.commit()  # the ONE atomic publication point, all tables
             conn.setAutoCommit(True)
             for table in tables:
-                self._fence._drop_if_exists(
-                    conn, self._stage_name(table, batch_id))
+                self._drop_if_exists(conn, self._stage_name(table, batch_id))
         finally:
             conn.close()
 
@@ -269,10 +183,11 @@ class JdbcAtomicMultiSink:
         if unknown:
             raise ValueError(f"unknown tables: {sorted(unknown)}")
         if self.is_committed(spark, batch_id):
-            conn = self._fence._conn(spark)
+            # replay of a committed batch: clean any leftover staging
+            conn = self._conn(spark)
             try:
                 for table in self.tables:
-                    self._fence._drop_if_exists(
+                    self._drop_if_exists(
                         conn, self._stage_name(table, batch_id))
             finally:
                 conn.close()
@@ -281,11 +196,45 @@ class JdbcAtomicMultiSink:
         self._promote(spark, batch_id, sorted(frames))
 
     def read_committed(self, spark: SparkSession, table: str) -> DataFrame:
+        """Exactly the fenced rows of one table: data semi-joined to the
+        fence table (promote is atomic, but the semi-join also hides rows
+        written by a foreign/legacy producer that never fenced)."""
         if table not in self.tables:
             raise ValueError(f"unknown table: {table}")
-        reader = JdbcExactlyOnceSink(self.url, table,
-                                     fence_table=self.fence_table)
-        return reader.read_committed(spark)
+
+        def rd(name: str) -> DataFrame:
+            df = (spark.read.format("jdbc").option("url", self.url)
+                  .option("dbtable", name).load())
+            # databases that fold unquoted identifiers to upper case (Derby,
+            # Oracle, DB2) would hand back K/STATUS/BATCH_ID — normalize so
+            # readers see the columns they wrote
+            return df.toDF(*[c.lower() for c in df.columns])
+        self._ensure_fence(spark)
+        return rd(table).join(
+            rd(self.fence_table), on="batch_id", how="left_semi")
+
+
+class JdbcExactlyOnceSink(JdbcAtomicMultiSink):
+    """``foreachBatch`` callable writing batch-fenced rows to one JDBC
+    table — the one-table case of :class:`JdbcAtomicMultiSink`.
+
+    ``table`` must exist with the DataFrame's columns plus
+    ``batch_id BIGINT``; the fence table (default ``{table}_commits``) is
+    created on first use.
+    """
+
+    def __init__(self, url: str, table: str, *,
+                 fence_table: str | None = None):
+        super().__init__(url, [table], fence_table=fence_table)
+        self.table = table
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        self.write_batch(batch_df.sparkSession, batch_id,
+                         {self.table: batch_df})
+
+    def read_committed(self, spark: SparkSession,
+                       table: str | None = None) -> DataFrame:
+        return super().read_committed(spark, table or self.table)
 
 
 def shutdown_embedded_derby(spark: SparkSession, url: str) -> None:

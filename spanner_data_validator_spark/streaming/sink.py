@@ -44,6 +44,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spanner_data_validator_spark.operators.comparator import MATCH
+from spanner_data_validator_spark.streaming.validate_stream import (
+    windowed_status_counts,
+)
+
 
 class CommitLedger:
     """The ``<out>/_commits/`` marker directory of one exactly-once sink.
@@ -195,7 +200,8 @@ class TallyForeachBatch(AtomicMultiParquetSink):
     derive tallies/mismatches from the just-written columnar batch, which is
     readable before the commit because staging is by directory and
     publication by marker — far cheaper than persist() + three more passes
-    through the stateful plan.
+    through the stateful plan. The per-window partials are
+    ``validate_stream.windowed_status_counts`` of that batch.
 
     Because the append-mode outer join emits each (conv_id, turn_idx) exactly
     once across the query's lifetime, summing per-batch partial tallies over
@@ -218,14 +224,12 @@ class TallyForeachBatch(AtomicMultiParquetSink):
         else:
             stored = batch_df.sparkSession.read.parquet(
                 self.data_path("classified", batch_id))
-            tallies = (
-                stored.groupBy(F.window("ts", self.window_duration).alias("w"),
-                               "status")
-                .agg(F.count("*").alias("n"))
-                .select(F.col("w.start").alias("window_start"), "status", "n"))
+            tallies = windowed_status_counts(
+                stored, window_duration=self.window_duration
+            ).select("window_start", "status", "n")
             rows.update(self._write_data(
                 batch_id, {"tallies": tallies,
-                           "mismatches": stored.where(F.col("status") != "MATCH")}))
+                           "mismatches": stored.where(F.col("status") != MATCH)}))
         self.ledger.commit(batch_id, {"rows": rows})
 
     def read_rows(self, spark: SparkSession) -> DataFrame | None:

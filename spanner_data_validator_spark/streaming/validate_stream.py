@@ -27,15 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spanner_data_validator_spark.functions.fingerprint import (
-    fingerprint_expr,
-    normalized_payload,
-)
+from spanner_data_validator_spark.functions.fingerprint import fingerprint_turns
 from spanner_data_validator_spark.operators.comparator import (
     MATCH,
     MISMATCH,
-    SOURCE_ONLY,
-    TARGET_ONLY,
+    classify_status,
 )
 from spanner_data_validator_spark.sources.transcript_source import (
     KEY_COLS,
@@ -55,17 +51,12 @@ def fingerprint_stream(
 
     Watermarks survive projections, so applying this after
     ``stream_transcripts(..., watermark=...)`` keeps the event-time watermark
-    attached to ``ts``.
+    attached to ``ts``. The projection is ``fingerprint_turns``; ``side``
+    tags each row for the stateful engine's unioned input.
     """
-    payload = normalized_payload(df, PAYLOAD_COLS, json_cols=json_cols)
-    cols = [
-        *[F.col(k) for k in KEY_COLS],
-        fingerprint_expr(payload, algo).alias("fingerprint"),
-        F.col("ts"),
-    ]
-    if side is not None:
-        cols.append(F.lit(side).alias("side"))
-    return df.select(*cols)
+    fp = fingerprint_turns(df, KEY_COLS, PAYLOAD_COLS, algo=algo,
+                           json_cols=json_cols, ts_col="ts")
+    return fp if side is None else fp.withColumn("side", F.lit(side))
 
 
 def classify_stream(
@@ -103,18 +94,10 @@ def classify_stream(
         f"AND tgt_ts <= src_ts + INTERVAL {band}"
     )
     joined = s.join(t, cond, "full_outer")
-    status = (
-        F.when(
-            F.col("src_fp").isNotNull() & F.col("tgt_fp").isNotNull(),
-            F.when(F.col("src_fp") == F.col("tgt_fp"), MATCH).otherwise(MISMATCH),
-        )
-        .when(F.col("tgt_fp").isNull(), SOURCE_ONLY)
-        .otherwise(TARGET_ONLY)
-    )
     return joined.select(
         F.coalesce(F.col("s_conv_id"), F.col("t_conv_id")).alias("conv_id"),
         F.coalesce(F.col("s_turn_idx"), F.col("t_turn_idx")).alias("turn_idx"),
-        status.alias("status"),
+        classify_status("src_fp", "tgt_fp").alias("status"),
         F.col("src_fp"),
         F.col("tgt_fp"),
         F.col("src_ts"),
@@ -138,19 +121,14 @@ def windowed_status_counts(
     classified stream's event time is ``coalesce(tgt_ts, src_ts)`` (either
     side may be null after a full outer join), which loses watermark
     attribution — and re-calling withWatermark after a stateful operator is
-    disallowed. The production streaming tally therefore runs as per-batch
-    partial aggregates inside the exactly-once sink, summed on read
-    (sink.TallyForeachBatch — proven equal to this batch expression in
+    disallowed. The production streaming tally therefore runs this function
+    on each micro-batch inside the exactly-once sink, summing the partials
+    on read (sink.TallyForeachBatch — proven equal to the batch expression in
     tests/test_streaming.py::test_windowed_tallies_match_batch). Windowing a
     SINGLE watermarked stream with this function works natively.
     """
-    win = (
-        F.window("ts", window_duration, slide)
-        if slide
-        else F.window("ts", window_duration)
-    )
     return (
-        classified.groupBy(win.alias("w"), "status")
+        classified.groupBy(F.window("ts", window_duration, slide).alias("w"), "status")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w.start").alias("window_start"),

@@ -122,8 +122,9 @@ def test_a_stateless_projection_added_is_accepted(spark, upgrade_env):
 
 
 def test_b_added_stateful_operator_is_rejected(spark, upgrade_env):
-    """Adding dropDuplicatesWithinWatermark upstream of the join (the
-    dedup_keys option) inserts new stateful operators and shifts operator
+    """Adding dropDuplicatesWithinWatermark upstream of the join (what
+    ``run_streaming_validation(dedup_keys=True)`` does, and so the job CLI's
+    join engine) inserts new stateful operators and shifts operator
     ids — Spark's state-metadata validation must refuse the restart. (A
     DOWNSTREAM windowed agg never gets this far: it fails analysis first
     because the join's coalesced ts has no watermark attribution — the

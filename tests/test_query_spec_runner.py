@@ -200,6 +200,41 @@ def test_validate_query_spec_applies_timestamp_threshold(spark, derby_ts_pair):
     assert sum(r["match_count"] for r in rows_all) == 18
 
 
+def test_validate_query_spec_date_threshold_column(spark, derby_ts_pair):
+    """A DATE column at timestamp_threshold_col_index is windowed on its
+    UTC-midnight epoch millis, with the same tallies as the TIMESTAMP case."""
+    import datetime as dt
+
+    src_url, tgt_url = derby_ts_pair
+    day = dt.datetime.fromtimestamp(NEW_MS / 1000, dt.timezone.utc).date()
+    th = int(dt.datetime(day.year, day.month, day.day,
+                         tzinfo=dt.timezone.utc).timestamp() * 1000)
+    spec = _ts_spec(
+        source_query="select id, code, CAST(updated AS DATE) AS updated_day "
+                     "from member_events where id >= ? and id <= ?",
+        dest_query="select id, code, CAST(updated AS DATE) AS updated_day "
+                   "from member_events where id >= @p1 and id <= @p2",
+        timestamp_threshold_col_index=2, timestamp_threshold_value_ms=th)
+    rows = validate_query_spec(spark, spec, src_url, tgt_url).collect()
+    tot = {k: sum(r[k] for r in rows) for k in
+           ("match_count", "source_count", "target_count")}
+    assert (tot["source_count"], tot["target_count"],
+            tot["match_count"]) == (10, 10, 9)
+
+
+def test_validate_query_spec_threshold_on_key_column(spark, derby_ts_pair):
+    """The threshold column may be the match key itself; a numeric column
+    is taken as epoch millis as is (ids 10..19 fall in [10, 10+10000d])."""
+    src_url, tgt_url = derby_ts_pair
+    spec = _ts_spec(timestamp_threshold_col_index=0,
+                    timestamp_threshold_value_ms=10)
+    rows = validate_query_spec(spark, spec, src_url, tgt_url).collect()
+    tot = {k: sum(r[k] for r in rows) for k in
+           ("match_count", "source_count", "target_count")}
+    assert (tot["source_count"], tot["target_count"],
+            tot["match_count"]) == (10, 10, 9)
+
+
 def test_validate_query_spec_threshold_value_without_col_index(spark, derby_ts_pair):
     src_url, tgt_url = derby_ts_pair
     spec = _ts_spec(timestamp_threshold_value_ms=NEW_MS)

@@ -121,3 +121,28 @@ def test_merged_report_equals_full_revalidation(spark, tmp_path):
     assert as_map[(5, "TARGET_ONLY")] == 4
     assert as_map[(5, "MISMATCH")] == 1
     assert as_map[(3, "MATCH")] == 4 + 4 + 4  # convs 3, 11, 19
+
+
+def test_dirty_range_duplicate_keys_counted_once(spark, tmp_path):
+    """An exact duplicate (conv_id, turn_idx) row on both sides of the
+    dirty range must tally once, as the full batch validation counts it
+    (first row per key, CountMatchesDoFn.java:73-80) — not k_src x k_tgt
+    times."""
+    src, tgt = _corpus(spark, range(16), drift_on=[2])
+    src_dir, tgt_dir, sink = _run_initial(spark, tmp_path, src, tgt)
+    d_src, d_tgt = _corpus(spark, [19])  # range 19 % 8 = 3
+    dup = F.col("turn_idx") == 0
+    write_ranged_transcripts(d_src.unionByName(d_src.where(dup)), spark,
+                             src_dir, tag="dup")
+    write_ranged_transcripts(d_tgt.unionByName(d_tgt.where(dup)), spark,
+                             tgt_dir, tag="dup")
+    ckpt = str(tmp_path / "ckpt")
+    assert delta_ranges(spark, ckpt, src_dir, tgt_dir) == {3}
+    merged = revalidate_delta_report(spark, sink, ckpt, src_dir, tgt_dir)
+    full = (run_batch_validation(spark, src_dir, tgt_dir)
+            .withColumn("range_id",
+                        (F.col("conv_id").cast("long") % 8).cast("int"))
+            .groupBy("range_id", "status").agg(F.count("*").alias("n")))
+    got = {(r[0], r[1]): r[2] for r in merged.collect()}
+    assert got == {(r[0], r[1]): r[2] for r in full.collect()}
+    assert got[(3, "MATCH")] == 4 + 4 + 4  # convs 3, 11, 19, one row per key

@@ -160,11 +160,46 @@ class TestSnapshotStreamWriter:
         assert snap.current_version(t) == v  # fenced: no new snapshot
 
     def test_fence_records_batch_to_version(self, spark):
+        import json
         import os
         t = self._stream_in(spark)
-        lines = open(os.path.join(t, "metadata",
-                                  "stream-commits.txt")).read().splitlines()
-        assert lines == ["0\t1", "1\t2"]
+        batch_ids = [json.load(open(os.path.join(t, "metadata", f"v{v}.json")))
+                     ["stream_batch_id"] for v in (1, 2)]
+        assert batch_ids == [0, 1]
+
+    def test_replay_after_torn_commit_is_noop(self, monkeypatch):
+        """The first commit of batch 0 dies right after its snapshot is
+        published; the engine's replay of batch 0 must publish nothing."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from spanner_data_validator_spark.sources.snapshot_sink import (
+            _SnapshotStreamCommitWriter)
+        t = tempfile.mkdtemp(prefix="sdv_t_ssink_torn_") + "/t"
+
+        def attempt():
+            w = _SnapshotStreamCommitWriter({"table_dir": t})
+            msg = w.write(iter([pa.record_batch({"k": [1, 2, 3]})]))
+            return w, [msg]
+
+        publish = snap.commit_files
+
+        def publish_then_die(*args, **kwargs):
+            publish(*args, **kwargs)
+            raise RuntimeError("killed after the snapshot was published")
+
+        w, msgs = attempt()
+        monkeypatch.setattr(snap, "commit_files", publish_then_die)
+        with pytest.raises(RuntimeError):
+            w.commit(msgs, 0)
+        monkeypatch.undo()
+        assert snap.current_version(t) == 1
+        w, msgs = attempt()  # recovery: a fresh writer replays batch 0
+        w.commit(msgs, 0)
+        assert snap.current_version(t) == 1
+        rows = sorted(k for f in snap.snapshot_files(t, 1)
+                      for k in pq.read_table(f).column("k").to_pylist())
+        assert rows == [1, 2, 3]
 
 
 class TestCompactionAndExpiry:
