@@ -2,10 +2,10 @@
 
 Streaming dataflow (the north-star pipeline):
 
-    source stream ─ fingerprint ─┐
-                                 ├─ watermarked full-outer join ─ classify ─┐
-    target stream ─ fingerprint ─┘                (or applyInPandasWithState)│
-                                                                            ▼
+    source stream ─ fingerprint ─ first per key ─┐
+                                                 ├─ watermarked full-outer join ─ classify ─┐
+    target stream ─ fingerprint ─ first per key ─┘                (or applyInPandasWithState)│
+                                                                                            ▼
                      exactly-once foreachBatch sink (classified rows,
                      per-window tallies, mismatch rows — one commit marker)
 
@@ -13,9 +13,9 @@ The streaming sink (``streaming/sink.TallyForeachBatch``) stages each
 micro-batch as ``<out>/{classified,tallies,mismatches}/batch=<id>`` and
 publishes all three with the one marker ``<out>/_commits/<id>``.
 
-Batch mode (``classify_transcripts``; also behind ``jobs/revalidate``) runs
-the identical classify expression on static DataFrames, first row per key —
-used by tests to prove stream/batch count equality on the same input.
+Batch mode, ``jobs/revalidate`` and the streaming join engine all run the
+one plan ``classify_transcripts`` — which is how tests prove stream/batch
+count equality on the same input.
 
 Usage (cluster; spark-submit takes the job's script path):
     spark-submit --py-files sdv.zip \
@@ -33,7 +33,7 @@ Watermark note: an idle file stream never advances its watermark past
 until more data arrives — correct streaming semantics, not a bug. Finite
 test/bench runs append a far-future **sentinel** row to both streams
 (``append_sentinel``) to push the watermark past all real data; sentinel keys
-are filtered out of the classified output by ``SENTINEL_FILTER``.
+are filtered out of the classified output by ``sentinel_filter``.
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ import argparse
 import os
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,20 +66,25 @@ def sentinel_filter():
     return F.col("conv_id") != SENTINEL_CONV
 
 
+def sentinel_frame(spark: SparkSession, *, ts: str = "2100-01-01") -> DataFrame:
+    """The one far-future sentinel transcript row (watermark punctuation)."""
+    return spark.range(1).select(
+        F.lit(SENTINEL_CONV).alias("conv_id"), F.lit(0).cast("int").alias("turn_idx"),
+        F.lit("system").alias("role"), F.lit("sentinel").alias("text"),
+        F.lit(None).cast("string").alias("tool"), F.lit(ts).cast("timestamp").alias("ts"))
+
+
 def append_sentinel(spark: SparkSession, *dirs: str, ts: str = "2100-01-01") -> None:
-    """Append one far-future matching row to each stream dir (watermark punctuation)."""
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [SENTINEL_CONV],
-            "turn_idx": pd.array([0], dtype="int32"),
-            "role": ["system"],
-            "text": ["sentinel"],
-            "tool": [None],
-            "ts": [pd.Timestamp(ts)],
-        }
-    )
+    """Append :func:`sentinel_frame` to each stream dir."""
+    sent = sentinel_frame(spark, ts=ts)
     for d in dirs:
-        write_transcripts(pdf, spark, d, n_files=1, subdir=f"sentinel_{int(time.time()*1000)}")
+        write_transcripts(sent, spark, d, n_files=1, subdir=f"sentinel_{int(time.time()*1000)}")
+
+
+def _one_row_per_key(fp: DataFrame) -> DataFrame:
+    if fp.isStreaming:
+        return fp.dropDuplicatesWithinWatermark(KEY_COLS)
+    return dedup_first(fp, KEY_COLS, carry_cols=["ts"])
 
 
 def classify_transcripts(
@@ -89,20 +93,24 @@ def classify_transcripts(
     *,
     algo: str = "xxhash64",
     band: str = "2 hours",
+    json_cols: frozenset[str] = frozenset({"tool"}),
 ) -> DataFrame:
-    """The one batch transcript plan: fingerprint → first row per key →
-    the streaming join's classify expression → sentinel filter.
+    """The one transcript plan, static or streaming: fingerprint → one row
+    per key per side → band-bounded full-outer classify → sentinel filter.
 
-    Duplicate (conv_id, turn_idx) rows collapse per side to the min-
-    (fingerprint, ts) row — the reference inspects only the first element
-    per key (CountMatchesDoFn.java:73-80); without it each dup key fans out
-    k_src×k_tgt rows. The dedup aggregate hashes on the join keys, so
-    Catalyst reuses the exchange — still one shuffle per side.
+    The reference inspects only the first element per key
+    (CountMatchesDoFn.java:73-80); without the collapse each dup key fans
+    out k_src×k_tgt rows. Each side picks the rule from its ``isStreaming``:
+    a static frame keeps its min-(fingerprint, ts) row (``dedup_first``, an
+    aggregate on the join keys: the join reuses its exchange, or the
+    bucketing of tables bucketed by the key); a stream keeps the first
+    arrival within its watermark (``dropDuplicatesWithinWatermark``). Exact
+    duplicates give both rules the same row; duplicates whose payloads
+    differ may classify differently in a stream and a batch run.
+    ``json_cols``: pass an empty set for JSON normalized at write time.
     """
-    src = dedup_first(fingerprint_stream(src_df, algo=algo), KEY_COLS,
-                      carry_cols=["ts"])
-    tgt = dedup_first(fingerprint_stream(tgt_df, algo=algo), KEY_COLS,
-                      carry_cols=["ts"])
+    src, tgt = (_one_row_per_key(fingerprint_stream(df, algo=algo, json_cols=json_cols))
+                for df in (src_df, tgt_df))
     return classify_stream(src, tgt, band=band).where(sentinel_filter())
 
 
@@ -136,21 +144,21 @@ def run_streaming_validation(
     window_duration: str = "1 hour",
     max_files_per_trigger: int | None = None,
     timeout_s: float = 300.0,
-    dedup_keys: bool = False,
+    dedup_keys: bool = True,
     state_store: str | None = None,
     projected_state_keys: int | None = None,
 ) -> TallyForeachBatch:
     """Run the streaming pipeline; returns the sink for result readback.
 
-    ``engine='join'`` → built-in StreamingSymmetricHashJoin full-outer;
-    ``engine='stateful'`` → applyInPandasWithState classifier (lower MATCH
-    latency, reference-exact emission control).
+    ``engine='join'`` → :func:`classify_transcripts` on the two streams: a
+    per-side ``dropDuplicatesWithinWatermark`` (the reference's first element
+    per key; watermark-bounded state) feeding the built-in
+    StreamingSymmetricHashJoin full-outer; ``engine='stateful'`` →
+    applyInPandasWithState classifier (lower MATCH latency, reference-exact
+    emission control, duplicate-key collapse in its own state).
 
-    ``dedup_keys`` gives the JOIN engine the reference's duplicate-key
-    collapse (first element per key, CoGBK-iterable semantics the stateful
-    engine has natively): a ``dropDuplicatesWithinWatermark`` per side before
-    the join. Costs one extra stateful stage whose state is watermark-bounded
-    (key + ts per in-flight key); leave off when upstream keys are unique.
+    ``dedup_keys`` has one legal value, True; it is kept only so callers
+    that still pass it keep working.
 
     ``state_store``: ``'rocksdb'`` / ``'hdfs'`` pin the provider for this
     query; ``'auto'`` picks via :func:`session.select_state_store` from
@@ -161,6 +169,8 @@ def run_streaming_validation(
     so benches can report it. Only valid for a FRESH checkpoint — Spark pins
     the provider in checkpoint metadata on first start.
     """
+    if dedup_keys is not True:
+        raise ValueError("dedup_keys must be True: both engines keep one row per key")
     from spanner_data_validator_spark.session import (
         STATE_STORE_CLASSES,
         select_state_store,
@@ -181,19 +191,12 @@ def run_streaming_validation(
     )
 
     if engine == "stateful":
-        s = fingerprint_stream(src, algo=algo, side="source")
-        t = fingerprint_stream(tgt, algo=algo, side="target")
         classified = classify_stateful(
-            s.unionByName(t), band_ms=_interval_ms(band)
-        )
+            fingerprint_stream(src, algo=algo), fingerprint_stream(tgt, algo=algo),
+            band_ms=_interval_ms(band),
+        ).where(sentinel_filter())
     else:
-        s = fingerprint_stream(src, algo=algo)
-        t = fingerprint_stream(tgt, algo=algo)
-        if dedup_keys:
-            s = s.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-            t = t.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-        classified = classify_stream(s, t, band=band)
-    classified = classified.where(sentinel_filter())
+        classified = classify_transcripts(src, tgt, algo=algo, band=band)
 
     sink = TallyForeachBatch(out_dir, window_duration=window_duration)
     sink.state_store = next(
@@ -287,7 +290,6 @@ def main(argv: list[str] | None = None) -> None:
             engine=args.engine,
             window_duration=args.window,
             available_now=args.available_now,
-            dedup_keys=args.engine == "join",
         )
         if args.available_now:
             report = sink.report(spark)

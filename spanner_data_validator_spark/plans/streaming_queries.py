@@ -237,23 +237,19 @@ def q_stream_snapshot_validate(spark, sf_dir):
     snapshots.py), each arriving in three commits plus a sentinel commit;
     two incremental-scan STREAMS tail them by snapshot version (sources/
     snapshot_stream.py — offsets are durable manifest versions, batches
-    are file-set differences), feed the vectorized fingerprint reduction,
-    and meet in the watermarked stateful full-outer join classifier.
-    Totals equal the batch full-outer oracle exactly — the same validation
-    the file-stream flagship runs, now over the table format the north
-    star names."""
+    are file-set differences) and feed ``classify_transcripts``: the
+    vectorized fingerprint reduction, one row per key per side, and the
+    watermarked stateful full-outer join classifier. Totals equal the batch
+    full-outer oracle exactly — the same plan the file-stream flagship
+    runs, now over the table format the north star names."""
     import tempfile
 
     from spanner_data_validator_spark.jobs.validate_transcripts import (
-        SENTINEL_CONV,
-        sentinel_filter,
+        classify_transcripts,
+        sentinel_frame,
     )
     from spanner_data_validator_spark.sources import snapshot_stream as st
     from spanner_data_validator_spark.sources import snapshots as snap
-    from spanner_data_validator_spark.streaming.validate_stream import (
-        classify_stream,
-        fingerprint_stream,
-    )
 
     src = transcripts_from_events(spark, sf_dir, user_mod=5).persist()
     tgt = _events_transcript_target(src)
@@ -271,12 +267,7 @@ def q_stream_snapshot_validate(spark, sf_dir):
             snap.commit(tgt.where(wave == m), tgt_t)
     finally:
         src.unpersist()
-    sent = spark.range(1).select(
-        F.lit(SENTINEL_CONV).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("system").alias("role"), F.lit("sentinel").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2100-01-01").cast("timestamp").alias("ts"))
+    sent = sentinel_frame(spark)
     snap.commit(sent, src_t)
     snap.commit(sent, tgt_t)
 
@@ -293,10 +284,7 @@ def q_stream_snapshot_validate(spark, sf_dir):
                 .option("cursor_file", f"{table}.cursor").load()
                 .withWatermark("ts", "10 minutes"))
 
-    out = (classify_stream(fingerprint_stream(tail(src_t)),
-                           fingerprint_stream(tail(tgt_t)),
-                           band="2 hours")
-           .where(sentinel_filter()))
+    out = classify_transcripts(tail(src_t), tail(tgt_t))
     with _shuffle_partitions(spark, 8):
         q = (out.select("status")
              .writeStream.format("parquet").option("path", f"{work}/out")
@@ -305,27 +293,7 @@ def q_stream_snapshot_validate(spark, sf_dir):
              .trigger(processingTime="200 milliseconds").start())
     # drain: BOTH sources at v4 and a no-data trigger after (so the
     # sentinel-advanced watermark has emitted the outer-join timeouts)
-    import ast as _ast
-    import time as _time
-    deadline = _time.time() + 300
-    while _time.time() < deadline:
-        if q.exception():
-            raise q.exception()
-        p = q.lastProgress
-        if p is not None and (p["numInputRows"] or 0) == 0:
-            ends = []
-            for s in p["sources"]:
-                e = s.get("endOffset")
-                ends.append(int(_ast.literal_eval(e)["v"])
-                            if isinstance(e, str) else
-                            (int(e["v"]) if e else 0))
-            if ends and min(ends) >= 4:
-                break
-        _time.sleep(0.25)
-    else:
-        q.stop()
-        raise TimeoutError("snapshot validate stream did not drain")
-    q.stop()
+    st.drain_to_version(q, 4)
     return (spark.read.parquet(f"{work}/out")
             .groupBy("status").agg(F.count(F.lit(1)).alias("n")))
 

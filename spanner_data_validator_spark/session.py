@@ -33,6 +33,17 @@ def _parse_mem_bytes(s: str) -> int:
     return int(s)
 
 
+def driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for and ``select_state_store``
+    sizes against: ``SDV_DRIVER_MEM``, else half of physical memory — the
+    rest is left to Python workers, off-heap (RocksDB) state and the OS."""
+    env = os.environ.get("SDV_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(phys // 2 >> 20, 1024)}m"
+
+
 def select_state_store(
     projected_keys: int | None,
     *,
@@ -44,9 +55,10 @@ def select_state_store(
     ``SDV_STATE_STORE=rocksdb|hdfs`` still wins (explicit operator choice).
     Otherwise: the heap-backed (HDFS) provider is ~2x faster per row
     (BENCH.md) but OOMs when state outgrows the heap, so choose it only when
-    ``projected_keys * HEAP_BYTES_PER_KEY`` fits ``heap_fraction`` of the
-    driver/executor heap; RocksDB (off-heap + disk, scale-safe at 10^9+
-    in-flight keys) otherwise — including when the projection is unknown.
+    ``projected_keys * HEAP_BYTES_PER_KEY`` fits ``heap_fraction`` of
+    ``heap_mem`` (default :func:`driver_memory`); RocksDB (off-heap + disk,
+    scale-safe at 10^9+ in-flight keys) otherwise — including when the
+    projection is unknown.
 
     Callers must NOT flip providers on an existing checkpoint (Spark pins the
     provider in the checkpoint metadata); this is for new query starts.
@@ -58,7 +70,7 @@ def select_state_store(
         return forced
     if projected_keys is None:
         return "rocksdb"
-    heap = _parse_mem_bytes(heap_mem or os.environ.get("SDV_DRIVER_MEM", "48g"))
+    heap = _parse_mem_bytes(heap_mem or driver_memory())
     if projected_keys * HEAP_BYTES_PER_KEY <= heap * heap_fraction:
         return "hdfs"
     return "rocksdb"
@@ -85,8 +97,8 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         # local mode hosts all executor threads in the driver JVM — size the
-        # heap for the whole node (cluster deployments override per-executor)
-        .config("spark.driver.memory", os.environ.get("SDV_DRIVER_MEM", "48g"))
+        # heap from the node (cluster deployments override per-executor)
+        .config("spark.driver.memory", driver_memory())
         # State store provider (SDV_STATE_STORE=rocksdb|hdfs, default rocksdb):
         # RocksDB keeps streaming join/agg state off-heap + on disk — required
         # when per-partition state outgrows the heap (unbounded watermarks,

@@ -18,11 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# NOTE: streaming.validate_stream imports sources.transcript_source, and this
-# module is re-exported from sources/__init__ — importing validate_stream at
-# module level would make the package graph circular (it breaks exactly when
-# a foreachBatch callback thread re-imports the package mid-initialization),
-# so the validation imports live inside validate_bucketed.
+# NOTE: jobs.validate_transcripts imports sources.transcript_source, and this
+# module is re-exported from sources/__init__ — importing the job at module
+# level would make the package graph circular (it breaks exactly when a
+# foreachBatch callback thread re-imports the package mid-initialization),
+# so the validation import lives inside validate_bucketed.
 
 
 def write_bucketed(
@@ -71,17 +71,15 @@ def validate_bucketed(
     algo: str = "xxhash64",
     band: str = "2 hours",
 ) -> DataFrame:
-    """The standard fingerprint → full-outer classify plan over two bucketed
-    tables. JSON columns were normalized at write time, so the whole plan is
-    JVM expressions over the bucketed scans and contains no Exchange
-    (asserted in tests/test_bucketed.py)."""
-    from spanner_data_validator_spark.streaming.validate_stream import (
-        classify_stream,
-        fingerprint_stream,
+    """``classify_transcripts`` over two bucketed tables: one row per key,
+    then the full-outer classify. JSON columns were normalized at write
+    time, so the whole plan is JVM expressions over the bucketed scans; the
+    per-side aggregate and the join both reuse the bucketing and the plan
+    contains no Exchange (asserted in tests/test_bucketed.py)."""
+    from spanner_data_validator_spark.jobs.validate_transcripts import (
+        classify_transcripts,
     )
 
-    src = fingerprint_stream(spark.table(source_table), algo=algo,
-                             json_cols=frozenset())
-    tgt = fingerprint_stream(spark.table(target_table), algo=algo,
-                             json_cols=frozenset())
-    return classify_stream(src, tgt, band=band)
+    return classify_transcripts(spark.table(source_table),
+                                spark.table(target_table),
+                                algo=algo, band=band, json_cols=frozenset())

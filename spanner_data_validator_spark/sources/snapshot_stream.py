@@ -169,29 +169,33 @@ def register(spark) -> None:
 
 def drain_to_version(query, target_version: int, *,
                      timeout_s: float = 300.0, poll_s: float = 0.25) -> None:
-    """Run a processingTime query until the source end offset reaches
+    """Run a processingTime query until EVERY source's end offset reaches
     ``target_version`` and a no-data trigger followed, then stop.
 
-    Same rationale as ``pyds.drain_stream``: Trigger.AvailableNow admits
-    only the first latestOffset poll for Python streaming sources
-    (measured, Spark 4.1), so finite runs drain explicitly.
+    The no-data trigger is what lets a watermark advanced by the last data
+    emit its outer-join timeouts. Same rationale as ``pyds.drain_stream``:
+    Trigger.AvailableNow admits only the first latestOffset poll for Python
+    streaming sources (measured, Spark 4.1), so finite runs drain
+    explicitly.
     """
     import ast
     import time
+
+    def version(src) -> int:
+        end = src.get("endOffset")
+        if isinstance(end, str):
+            end = ast.literal_eval(end)
+        return int(end["v"]) if end else 0
 
     deadline = time.time() + timeout_s
     while time.time() < deadline:
         if query.exception():
             raise query.exception()
         p = query.lastProgress
-        if p is not None:
-            end = p["sources"][0].get("endOffset")
-            if isinstance(end, str):
-                end = ast.literal_eval(end)
-            if (end is not None and int(end["v"]) >= target_version
-                    and (p["numInputRows"] or 0) == 0):
-                query.stop()
-                return
+        if (p is not None and (p["numInputRows"] or 0) == 0 and p["sources"]
+                and all(version(s) >= target_version for s in p["sources"])):
+            query.stop()
+            return
         time.sleep(poll_s)
     query.stop()
     raise TimeoutError(

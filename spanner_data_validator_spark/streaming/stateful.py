@@ -7,10 +7,10 @@ the reference-exact semantics of CountMatchesDoFn (dofns/CountMatchesDoFn
 declared one-sided when the range read completes; here "read completes"
 becomes "event-time watermark passes ts + band" (SURVEY.md §7.1 milestone 5).
 
-Input: the UNION of the two fingerprinted streams with a ``side`` column
-('source' | 'target'), watermarked on ``ts``. Grouping key: (conv_id,
-turn_idx) — the state store shards by the same hash partitioning as the
-join-based variant, so hot conversations spread across turn_idx.
+Input: the two fingerprinted streams, watermarked on ``ts``, tagged with a
+``side`` column ('source' | 'target') and unioned here. Grouping key:
+(conv_id, turn_idx) — the state store shards by the same hash partitioning
+as the join-based variant, so hot conversations spread across turn_idx.
 
 State per key (GroupStateTimeout.EventTimeTimeout):
     (src_fp, tgt_fp, done, max_ts_ms)
@@ -34,6 +34,7 @@ from typing import Any, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -119,12 +120,16 @@ def make_classifier(band_ms: int = 7_200_000):
 
 
 def classify_stateful(
-    sided_stream: DataFrame,
+    src_fp: DataFrame,
+    tgt_fp: DataFrame,
     *,
     band_ms: int = 7_200_000,
 ) -> DataFrame:
-    """Apply the stateful classifier to a unioned, watermarked, fingerprinted
-    dual stream with columns (conv_id, turn_idx, fingerprint, ts, side)."""
+    """Apply the stateful classifier to two watermarked, fingerprinted
+    streams of (conv_id, turn_idx, fingerprint, ts), tagged with ``side``
+    and unioned here."""
+    sided_stream = src_fp.withColumn("side", F.lit("source")).unionByName(
+        tgt_fp.withColumn("side", F.lit("target")))
     return sided_stream.groupBy("conv_id", "turn_idx").applyInPandasWithState(
         make_classifier(band_ms),
         outputStructType=OUTPUT_SCHEMA,

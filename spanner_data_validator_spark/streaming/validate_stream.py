@@ -44,19 +44,16 @@ def fingerprint_stream(
     *,
     algo: str = "xxhash64",
     json_cols: frozenset[str] = frozenset({"tool"}),
-    side: str | None = None,
 ) -> DataFrame:
     """Map-side reduction of a (possibly streaming) transcript DF to
-    ``(conv_id, turn_idx, fingerprint, ts [, side])``.
+    ``(conv_id, turn_idx, fingerprint, ts)``.
 
     Watermarks survive projections, so applying this after
     ``stream_transcripts(..., watermark=...)`` keeps the event-time watermark
-    attached to ``ts``. The projection is ``fingerprint_turns``; ``side``
-    tags each row for the stateful engine's unioned input.
+    attached to ``ts``. The projection is ``fingerprint_turns``.
     """
-    fp = fingerprint_turns(df, KEY_COLS, PAYLOAD_COLS, algo=algo,
-                           json_cols=json_cols, ts_col="ts")
-    return fp if side is None else fp.withColumn("side", F.lit(side))
+    return fingerprint_turns(df, KEY_COLS, PAYLOAD_COLS, algo=algo,
+                             json_cols=json_cols, ts_col="ts")
 
 
 def classify_stream(

@@ -10,7 +10,7 @@ must fail with Spark's state-metadata check, not silently corrupt.
 
 Laws (also documented in README "Checkpoint upgrade compatibility"):
   A. adding a downstream STATELESS projection — ACCEPTED
-  B. adding a second STATEFUL operator (windowed agg after the join) —
+  B. adding STATEFUL operators (the per-side dedup before the join) —
      REJECTED (operator-id/state-metadata mismatch at restart)
   C. changing spark.sql.shuffle.partitions — ACCEPTED and IGNORED for
      state: the operator keeps its checkpoint-pinned partition count
@@ -29,6 +29,7 @@ from spanner_data_validator_spark.datagen.transcripts import (
 )
 from spanner_data_validator_spark.jobs.validate_transcripts import (
     append_sentinel,
+    classify_transcripts,
     sentinel_filter,
 )
 from spanner_data_validator_spark.sources.transcript_source import (
@@ -122,19 +123,19 @@ def test_a_stateless_projection_added_is_accepted(spark, upgrade_env):
 
 
 def test_b_added_stateful_operator_is_rejected(spark, upgrade_env):
-    """Adding dropDuplicatesWithinWatermark upstream of the join (what
-    ``run_streaming_validation(dedup_keys=True)`` does, and so the job CLI's
-    join engine) inserts new stateful operators and shifts operator
-    ids — Spark's state-metadata validation must refuse the restart. (A
-    DOWNSTREAM windowed agg never gets this far: it fails analysis first
-    because the join's coalesced ts has no watermark attribution — the
-    chained-agg law in CLAUDE.md.)"""
+    """Adding dropDuplicatesWithinWatermark upstream of the join inserts
+    new stateful operators and shifts operator ids — Spark's state-metadata
+    validation must refuse the restart. The checkpoint here comes from the
+    join-only plan; restarting it with ``classify_transcripts``, which
+    every join-engine ``run_streaming_validation`` builds (one
+    dropDuplicatesWithinWatermark per side), is that change: a join-engine
+    checkpoint written without the per-side dedup cannot be resumed by
+    ``run_streaming_validation``. (A DOWNSTREAM windowed agg never gets this far: it fails
+    analysis first because the join's coalesced ts has no watermark
+    attribution — the chained-agg law.)"""
     e = upgrade_env
-    src = fingerprint_stream(stream_transcripts(spark, e["src"])) \
-        .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    tgt = fingerprint_stream(stream_transcripts(spark, e["tgt"])) \
-        .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    df = classify_stream(src, tgt, band="2 hours").where(sentinel_filter())
+    df = classify_transcripts(stream_transcripts(spark, e["src"]),
+                              stream_transcripts(spark, e["tgt"]))
     sink = ExactlyOnceParquetSink(str(e["tmp"] / "out_b"))
     q = (df.writeStream.outputMode("append")
          .option("checkpointLocation", str(e["tmp"] / "ckpt_b"))

@@ -55,6 +55,15 @@ def _run_initial(spark, tmp_path, src, tgt):
     return src_dir, tgt_dir, sink
 
 
+def _full_by_range(spark, src_dir, tgt_dir):
+    """A full batch validation's counts by (range_id, status)."""
+    full = (run_batch_validation(spark, src_dir, tgt_dir)
+            .withColumn("range_id",
+                        (F.col("conv_id").cast("long") % 8).cast("int"))
+            .groupBy("range_id", "status").agg(F.count("*").alias("n")))
+    return {(r[0], r[1]): r[2] for r in full.collect()}
+
+
 def test_lineage_diff_finds_only_dirty_range(spark, tmp_path):
     src, tgt = _corpus(spark, range(16), drift_on=[2])
     src_dir, tgt_dir, sink = _run_initial(spark, tmp_path, src, tgt)
@@ -139,10 +148,26 @@ def test_dirty_range_duplicate_keys_counted_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     assert delta_ranges(spark, ckpt, src_dir, tgt_dir) == {3}
     merged = revalidate_delta_report(spark, sink, ckpt, src_dir, tgt_dir)
-    full = (run_batch_validation(spark, src_dir, tgt_dir)
-            .withColumn("range_id",
-                        (F.col("conv_id").cast("long") % 8).cast("int"))
-            .groupBy("range_id", "status").agg(F.count("*").alias("n")))
     got = {(r[0], r[1]): r[2] for r in merged.collect()}
-    assert got == {(r[0], r[1]): r[2] for r in full.collect()}
+    assert got == _full_by_range(spark, src_dir, tgt_dir)
     assert got[(3, "MATCH")] == 4 + 4 + 4  # convs 3, 11, 19, one row per key
+
+
+def test_clean_range_duplicate_key_matches_full_revalidation(spark, tmp_path):
+    """An exact duplicate key in a range the delta leaves clean is counted
+    once by the initial stream run, so the merged report still equals a
+    full batch validation (the stream plan keeps one row per key, like the
+    batch plan)."""
+    src, tgt = _corpus(spark, range(16), drift_on=[2])
+    dup = (F.col("conv_id") == "4") & (F.col("turn_idx") == 0)  # range 4
+    src, tgt = src.unionByName(src.where(dup)), tgt.unionByName(tgt.where(dup))
+    src_dir, tgt_dir, sink = _run_initial(spark, tmp_path, src, tgt)
+    d_src, d_tgt = _corpus(spark, [19])  # range 19 % 8 = 3
+    write_ranged_transcripts(d_src, spark, src_dir, tag="d1")
+    write_ranged_transcripts(d_tgt, spark, tgt_dir, tag="d1")
+    ckpt = str(tmp_path / "ckpt")
+    assert delta_ranges(spark, ckpt, src_dir, tgt_dir) == {3}
+    merged = revalidate_delta_report(spark, sink, ckpt, src_dir, tgt_dir)
+    got = {(r[0], r[1]): r[2] for r in merged.collect()}
+    assert got == _full_by_range(spark, src_dir, tgt_dir)
+    assert got[(4, "MATCH")] == 4 + 4  # convs 4, 12, one row per key

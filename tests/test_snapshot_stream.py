@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.sources import snapshot_stream as st
@@ -89,3 +90,28 @@ def test_versions_per_trigger_batching(spark):
     data_batches = [p.numInputRows for p in q.recentProgress
                     if p.numInputRows]
     assert data_batches == [20, 20]  # two snapshots absorbed per batch
+
+
+class _LaggingQuery:
+    """A stopped-at-the-no-data-trigger query whose second source is still
+    one version behind the first."""
+
+    lastProgress = {"numInputRows": 0,
+                    "sources": [{"endOffset": "{'v': 4}"},
+                                {"endOffset": {"v": 3}}]}
+    stopped = False
+
+    def exception(self):
+        return None
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_drain_waits_for_every_source():
+    q = _LaggingQuery()
+    with pytest.raises(TimeoutError):
+        st.drain_to_version(q, 4, timeout_s=0.3, poll_s=0.05)
+    assert q.stopped
+    # the same progress passes once the target is the lagging source's
+    st.drain_to_version(q, 3, timeout_s=0.3, poll_s=0.05)

@@ -10,9 +10,7 @@ store was recovered, not rebuilt.
 
 from __future__ import annotations
 
-import ast
 import tempfile
-import time
 
 from pyspark.sql import functions as F
 
@@ -21,41 +19,14 @@ from spanner_data_validator_spark.datagen.transcripts import (
     gen_transcript_pair,
 )
 from spanner_data_validator_spark.jobs.validate_transcripts import (
-    SENTINEL_CONV,
-    sentinel_filter,
+    classify_transcripts,
+    sentinel_frame,
 )
 from spanner_data_validator_spark.sources import snapshot_stream as st
 from spanner_data_validator_spark.sources import snapshots as snap
-from spanner_data_validator_spark.streaming.validate_stream import (
-    classify_stream,
-    fingerprint_stream,
-)
 
 _DDL = ("conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")
-
-
-def _drain_two(q, target_v, timeout_s=300.0):
-    """Stop once BOTH sources reached target_v and a no-data trigger ran
-    (drain_to_version checks sources[0] only)."""
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        if q.exception():
-            raise q.exception()
-        p = q.lastProgress
-        if p is not None and (p["numInputRows"] or 0) == 0:
-            ends = []
-            for s in p["sources"]:
-                e = s.get("endOffset")
-                if isinstance(e, str):
-                    e = ast.literal_eval(e)
-                ends.append(int(e["v"]) if e else 0)
-            if ends and min(ends) >= target_v:
-                q.stop()
-                return
-        time.sleep(0.25)
-    q.stop()
-    raise TimeoutError(f"streams did not reach v{target_v}")
 
 
 def _start(spark, src_t, tgt_t, work):
@@ -67,10 +38,7 @@ def _start(spark, src_t, tgt_t, work):
                 .option("cursor_file", f"{table}.cursor").load()
                 .withWatermark("ts", "10 minutes"))
 
-    out = (classify_stream(fingerprint_stream(tail(src_t)),
-                           fingerprint_stream(tail(tgt_t)),
-                           band="2 hours")
-           .where(sentinel_filter()))
+    out = classify_transcripts(tail(src_t), tail(tgt_t))
     return (out.select("status")
             .writeStream.format("parquet").option("path", f"{work}/out")
             .option("checkpointLocation", f"{work}/ckpt")
@@ -94,7 +62,7 @@ def test_validator_resumes_from_checkpoint_with_held_state(spark):
     snap.commit(tgt.where(F.col("ts") < cut), tgt_t)
 
     q = _start(spark, src_t, tgt_t, work)
-    _drain_two(q, 1)
+    st.drain_to_version(q, 1)
 
     # run 1 must have emitted only prompt matches — outer results for
     # wave-1 singles are still held in the recovered state store
@@ -106,26 +74,20 @@ def test_validator_resumes_from_checkpoint_with_held_state(spark):
     # wave 2 + far-future sentinel arrive AFTER the stop
     snap.commit(src.where(F.col("ts") >= cut), src_t)
     snap.commit(tgt.where(F.col("ts") >= cut), tgt_t)
-    sent = spark.range(1).select(
-        F.lit(SENTINEL_CONV).alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("system").alias("role"), F.lit("sentinel").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2100-01-01").cast("timestamp").alias("ts"))
+    sent = sentinel_frame(spark)
     snap.commit(sent, src_t)
     snap.commit(sent, tgt_t)
 
     q = _start(spark, src_t, tgt_t, work)
-    _drain_two(q, 3)
+    st.drain_to_version(q, 3)
 
     got = {r["status"]: r["n"] for r in
            spark.read.parquet(f"{work}/out")
            .groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()}
 
-    # batch ground truth: the same classify on the same (static) frames
+    # batch ground truth: the same plan on the same (static) frames
     want = {r["status"]: r["n"] for r in
-            classify_stream(fingerprint_stream(src),
-                            fingerprint_stream(tgt), band="2 hours")
+            classify_transcripts(src, tgt)
             .groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert got == want
     assert got.get("SOURCE_ONLY", 0) > 0 and got.get("MISMATCH", 0) > 0

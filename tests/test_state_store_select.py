@@ -50,3 +50,47 @@ def test_parse_mem_bytes():
     assert _parse_mem_bytes("48g") == 48 << 30
     assert _parse_mem_bytes("512m") == 512 << 20
     assert _parse_mem_bytes("1024") == 1024
+
+
+def test_driver_memory_from_host_feeds_both_callers(monkeypatch):
+    """With no override, the heap ``get_spark`` asks for and the heap the
+    state-store choice is sized against are one host-derived value: half
+    of physical memory (here a fake 16 GiB host)."""
+    from types import SimpleNamespace
+
+    from spanner_data_validator_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (16 << 30) // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    monkeypatch.delenv("SDV_DRIVER_MEM", raising=False)
+    monkeypatch.delenv("SDV_STATE_STORE", raising=False)
+    assert session.driver_memory() == "8192m"
+
+    conf = {}
+
+    class Builder:
+        def master(self, _):
+            return self
+
+        def appName(self, _):
+            return self
+
+        def config(self, k, v):
+            conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(
+                setLogLevel=lambda _: None))
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    session.get_spark(master="local[2]")
+    assert conf["spark.driver.memory"] == "8192m"
+    fit = ((8 << 30) // 4) // HEAP_BYTES_PER_KEY
+    assert select_state_store(fit) == "hdfs"
+    assert select_state_store(fit + 1) == "rocksdb"
+
+    monkeypatch.setenv("SDV_DRIVER_MEM", "2g")  # the override still wins
+    session.get_spark(master="local[2]")
+    assert conf["spark.driver.memory"] == "2g"
+    assert select_state_store(((2 << 30) // 4) // HEAP_BYTES_PER_KEY + 1) == "rocksdb"

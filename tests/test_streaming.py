@@ -51,9 +51,9 @@ def _stage_pair(spark, tmp, *, dup_rows=0, n_convs=30, seed=7, sentinel=True, **
 
 @pytest.mark.parametrize("engine", ["join", "stateful"])
 def test_stream_counts_match_expected_and_batch(spark, tmp_path, engine):
-    """Stream (both engines) == planted expected counts == batch plan."""
-    dup = 5 if engine == "stateful" else 0
-    pair, src_dir, tgt_dir = _stage_pair(spark, tmp_path, dup_rows=dup)
+    """Stream (both engines) == planted expected counts == batch plan, with
+    planted duplicate keys collapsing to one row per key."""
+    pair, src_dir, tgt_dir = _stage_pair(spark, tmp_path, dup_rows=5)
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
         watermark="10 minutes", band="2 hours", engine=engine)
@@ -64,19 +64,6 @@ def test_stream_counts_match_expected_and_batch(spark, tmp_path, engine):
     if engine == "join":
         batch = run_batch_validation(spark, src_dir, tgt_dir)
         assert _status_counts(batch) == pair.expected
-
-
-def test_join_engine_dedup_keys_collapses_duplicates(spark, tmp_path):
-    """dedup_keys gives the throughput join engine the reference's
-    first-element-per-key collapse: with planted duplicate keys the stream
-    totals still equal the generator's per-key expected counts."""
-    pair, src_dir, tgt_dir = _stage_pair(spark, tmp_path, dup_rows=5)
-    sink = run_streaming_validation(
-        spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
-        watermark="10 minutes", band="2 hours", engine="join", dedup_keys=True)
-    res = sink.read_rows(spark)
-    assert _status_counts(res) == pair.expected
-    assert res.count() == res.select("conv_id", "turn_idx").distinct().count()
 
 
 def test_continuous_trigger_path_commits_batches(spark, tmp_path):
@@ -779,3 +766,12 @@ def test_merge_semantics_double_apply_converges_duckdb():
     apply([(1, 1, 99), (3, 3, 30)])
     assert state() == canon(
         [(1, 1, 99), (1, None, 11), (2, 2, 20), (3, 3, 30)])
+
+
+def test_dedup_keys_has_one_legal_value():
+    """Both engines always keep one row per key; ``dedup_keys`` is kept for
+    callers that still pass True and refuses anything else before touching
+    Spark."""
+    with pytest.raises(ValueError):
+        run_streaming_validation(None, "src", "tgt", "out", "ckpt",
+                                 dedup_keys=False)
