@@ -20,4 +20,13 @@ jobs        spark-submit entry points
 
 __version__ = "0.1.0"
 
-from spanner_data_validator_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # get_spark resolves on first use (PEP 562): importing the package must not
+    # import pyspark, because ``python -m spanner_data_validator_spark.worker_daemon``
+    # imports it before the daemon takes Spark's archives off sys.path
+    if name == "get_spark":
+        from spanner_data_validator_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -157,22 +158,24 @@ def normalize_json_string(raw: str | None, *, java_compat: bool = False) -> str 
     return "".join(sorted(leaves))
 
 
+def _normalize_distinct(s: pd.Series, *, java_compat: bool = False) -> pd.Series:
+    """Normalize each distinct value of one Arrow batch once and map the
+    results back by position; nulls stay null (``factorize`` codes them -1,
+    which picks the trailing None)."""
+    codes, uniques = pd.factorize(s)
+    normalized = [normalize_json_string(v, java_compat=java_compat) for v in uniques]
+    return pd.Series(np.array([*normalized, None], dtype=object)[codes], index=s.index)
+
+
 @F.pandas_udf(T.StringType())
 def normalize_json_ref_udf(s: pd.Series) -> pd.Series:
     """Byte-compatible (java_compat) JSON normalizer — reference-parity mode."""
-    return s.map(lambda v: normalize_json_string(v, java_compat=True),
-                 na_action="ignore")
+    return _normalize_distinct(s, java_compat=True)
 
 
 @F.pandas_udf(T.StringType())
 def normalize_json_udf(s: pd.Series) -> pd.Series:
-    # plain map, nulls skipped. A vectorized "doesn't start with {/[" prefilter
-    # was tried and REVERTED: on transcript tool columns every non-null value
-    # is JSON, so the regex pass + series copy was pure overhead on the
-    # fingerprint hot path (measured as a batch-throughput regression in the
-    # 16-core scaling run); the exception fallback only triggers for non-JSON
-    # strings, which are rare by construction
-    return s.map(normalize_json_string, na_action="ignore")
+    return _normalize_distinct(s)
 
 
 # ---------------------------------------------------------------------------

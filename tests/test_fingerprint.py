@@ -5,13 +5,16 @@ from __future__ import annotations
 import datetime
 from decimal import Decimal
 
+import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spanner_data_validator_spark.functions.fingerprint import (
     FIELD_SEP,
     fingerprint_turns,
+    normalize_json_ref_udf,
     normalize_json_string,
+    normalize_json_udf,
     normalized_payload,
 )
 from spanner_data_validator_spark.functions.normalize import normalize_column
@@ -216,3 +219,17 @@ def test_java_double_str_layouts():
     for v, want in cases:
         assert java_double_str(v) == want, (v, java_double_str(v), want)
     assert java_double_str(float("nan")) == "NaN"
+
+
+def test_json_udfs_normalize_each_distinct_value_once_per_batch():
+    # the UDFs' Python functions on one batch (no Spark): nulls, repeats,
+    # invalid JSON and non-container JSON must come out row for row as
+    # normalize_json_string gives them
+    rows = ['{"b": 2, "a": [1, null]}', None, "not json {", '{"b": 2, "a": [1, null]}',
+            "42", '"str"', None, '[{"x": 1e30}, 0.5]', "not json {", "null", '{"k": null}']
+    batch = pd.Series(rows, index=range(10, 10 + len(rows)), dtype=object)
+    for udf, java_compat in ((normalize_json_udf, False), (normalize_json_ref_udf, True)):
+        got = udf.func(batch)
+        assert list(got.index) == list(batch.index)
+        want = [normalize_json_string(v, java_compat=java_compat) for v in rows]
+        assert got.tolist() == want, (java_compat, got.tolist(), want)
