@@ -7,11 +7,13 @@ Streaming dataflow (the north-star pipeline):
     target stream ─ fingerprint ─ first per key ─┘                (or applyInPandasWithState)│
                                                                                             ▼
                      exactly-once foreachBatch sink (classified rows,
-                     per-window tallies, mismatch rows — one commit marker)
+                     one commit marker per micro-batch)
 
 The streaming sink (``streaming/sink.TallyForeachBatch``) stages each
-micro-batch as ``<out>/{classified,tallies,mismatches}/batch=<id>`` and
-publishes all three with the one marker ``<out>/_commits/<id>``.
+micro-batch as ``<out>/classified/batch=<id>`` in one Spark job and
+publishes it with the marker ``<out>/_commits/<id>``, which records the
+batch's row and per-status counts; the per-window report and the mismatch
+rows are derived from the committed rows on read.
 
 Batch mode, ``jobs/revalidate`` and the streaming join engine all run the
 one plan ``classify_transcripts`` — which is how tests prove stream/batch

@@ -151,11 +151,10 @@ def q_validate_stream_totals(spark, sf_dir):
 @register("validate_stream_atomic_totals", _ev_transcript_cte())
 def q_validate_stream_atomic_totals(spark, sf_dir):
     """Registry twin of validate_stream_totals: the same streaming run
-    through the same sink (streaming/sink.TallyForeachBatch, one commit
-    marker over classified rows, per-window tallies and mismatch rows —
-    both-or-neither, pinned in tests/test_atomic_sink.py). Kept registered
-    because CORRECTNESS_r05.json names it; totals must equal the batch
-    full-outer oracle exactly."""
+    through the same sink (streaming/sink.TallyForeachBatch: classified rows
+    published by one commit marker — nothing visible before it, pinned in
+    tests/test_atomic_sink.py). Kept registered because CORRECTNESS_r05.json
+    names it; totals must equal the batch full-outer oracle exactly."""
     return _run_stream_totals(spark, sf_dir, "join")
 
 

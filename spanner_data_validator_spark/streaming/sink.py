@@ -21,13 +21,16 @@ disk::
   marker-backed batches, so a crash anywhere before the marker leaves
   every table of the batch invisible, and a replay of a committed id is a
   no-op.
+* **one Spark job per table** — each write counts its own rows with a
+  ``pyspark.sql.Observation`` on the write job; nothing is read back.
 * the directory layout doubles as the MERGE key space: one row per
   (conv_id, turn_idx) ever reaches the sink in append mode (the outer join
   emits each key's final classification exactly once), so key-level merge
   reduces to batch-level idempotent append.
 
-:class:`TallyForeachBatch` is the validation stream's sink (classified
-rows, per-window tallies and mismatch rows under one marker);
+:class:`TallyForeachBatch` is the validation stream's sink: it stages only
+the classified rows, with per-status counts in the marker, and derives the
+per-window report and the mismatch rows from them on read;
 :class:`ExactlyOnceParquetSink` is the one-table case. The reference
 writes its report and conflicting rows as two independent sinks
 (JDBCToSpannerDVTWithHash.java:393-415, 468-469) with no such atomicity.
@@ -41,10 +44,10 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from spanner_data_validator_spark.operators.comparator import MATCH
+from spanner_data_validator_spark.operators.comparator import MATCH, STATUSES
 from spanner_data_validator_spark.streaming.validate_stream import (
     windowed_status_counts,
 )
@@ -123,30 +126,30 @@ class AtomicMultiParquetSink:
         meta = self.ledger.meta(batch_id)
         return None if meta is None else meta["rows"]
 
-    # stage/commit split so callers can derive tables from staged ones and
-    # tests can prove both-or-neither by crashing between the two steps
+    @staticmethod
+    def _write(df: DataFrame, target: str, **metrics: Column) -> dict:
+        """Write ``df`` to ``target`` in ONE Spark job. Returns the row count
+        (``rows``) and each of ``metrics``, all observed on that job; an
+        empty write leaves no directory."""
+        obs = Observation()
+        (df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                    *(c.alias(k) for k, c in metrics.items()))
+           .write.mode("overwrite").parquet(target))
+        got = obs.get
+        if got["rows"] == 0:
+            shutil.rmtree(target, ignore_errors=True)
+        return got
+
+    # stage/commit split so tests can prove both-or-neither by crashing
+    # between the two steps
     def _write_data(self, batch_id: int,
                     frames: dict[str, DataFrame | None]) -> dict[str, int]:
         unknown = set(frames) - set(self.tables)
         if unknown:
             raise ValueError(f"unknown tables: {sorted(unknown)}")
-        rows: dict[str, int] = {}
-        for table in self.tables:
-            if table not in frames:
-                continue  # absent tables are the CALLER's to count (or 0)
-            df = frames[table]
-            n = 0
-            target = self.data_path(table, batch_id)
-            if df is not None:
-                # single pass: write, then count from the written parquet
-                # footers (metadata-cheap) instead of a second pass through
-                # the plan
-                df.write.mode("overwrite").parquet(target)
-                n = df.sparkSession.read.parquet(target).count()
-                if n == 0:
-                    shutil.rmtree(target, ignore_errors=True)
-            rows[table] = n
-        return rows
+        return {table: 0 if df is None
+                else self._write(df, self.data_path(table, batch_id))["rows"]
+                for table, df in frames.items()}
 
     def write_batch(self, batch_id: int,
                     frames: dict[str, DataFrame | None]) -> dict[str, int] | None:
@@ -192,59 +195,54 @@ class ExactlyOnceParquetSink(AtomicMultiParquetSink):
 
 
 class TallyForeachBatch(AtomicMultiParquetSink):
-    """The validation stream's ``foreachBatch`` sink: classified rows,
-    per-window tallies and mismatch rows of a micro-batch under ONE commit
-    marker, visible together or not at all.
+    """The validation stream's ``foreachBatch`` sink: each micro-batch's
+    classified rows staged as ``classified/batch=<id>`` and published by ONE
+    commit marker, in ONE Spark job.
 
-    ONE pass over the (expensive) streamed join output: write the rows, then
-    derive tallies/mismatches from the just-written columnar batch, which is
-    readable before the commit because staging is by directory and
-    publication by marker — far cheaper than persist() + three more passes
-    through the stateful plan. The per-window partials are
-    ``validate_stream.windowed_status_counts`` of that batch.
+    The marker records the batch's row count and its per-status counts
+    (``{"rows": {"classified": n}, "status": {"MATCH": n, ...}}``), observed
+    on the write job itself. The per-window report and the mismatch rows are
+    derived from the committed classified rows on read. Because the
+    append-mode outer join emits each (conv_id, turn_idx) exactly once across
+    the query's lifetime, the committed rows are the whole classified
+    output, so the report equals the batch report on the same input.
 
-    Because the append-mode outer join emits each (conv_id, turn_idx) exactly
-    once across the query's lifetime, summing per-batch partial tallies over
-    committed batches yields the global ComparerResult counts — a two-phase
-    (per-batch partial → read-side final) aggregation that never holds global
-    state on the driver.
+    Directories written with the older three-table layout (``tallies`` and
+    ``mismatches`` staged next to ``classified`` under the same marker) read
+    the same: only ``classified`` is read.
     """
 
     def __init__(self, out_dir: str, *, window_duration: str = "1 hour"):
-        super().__init__(out_dir, ["classified", "tallies", "mismatches"])
+        super().__init__(out_dir, ["classified"])
         self.window_duration = window_duration
         self.state_store: str | None = None  # set by run_streaming_validation
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
             return  # replay of a committed batch: exactly-once no-op
-        rows = self._write_data(batch_id, {"classified": batch_df})
-        if rows["classified"] == 0:
-            rows.update(tallies=0, mismatches=0)
-        else:
-            stored = batch_df.sparkSession.read.parquet(
-                self.data_path("classified", batch_id))
-            tallies = windowed_status_counts(
-                stored, window_duration=self.window_duration
-            ).select("window_start", "status", "n")
-            rows.update(self._write_data(
-                batch_id, {"tallies": tallies,
-                           "mismatches": stored.where(F.col("status") != MATCH)}))
-        self.ledger.commit(batch_id, {"rows": rows})
+        status = self._write(
+            batch_df, self.data_path("classified", batch_id),
+            **{s: F.count_if(F.col("status") == s) for s in STATUSES})
+        rows = status.pop("rows")
+        self.ledger.commit(batch_id, {"rows": {"classified": rows},
+                                      "status": status})
 
     def read_rows(self, spark: SparkSession) -> DataFrame | None:
         return self.read_committed(spark, "classified")
 
     def read_mismatches(self, spark: SparkSession) -> DataFrame | None:
-        return self.read_committed(spark, "mismatches")
+        rows = self.read_rows(spark)
+        return None if rows is None else rows.where(F.col("status") != MATCH)
 
     def report(self, spark: SparkSession) -> DataFrame | None:
-        """Final per-window tallies = sum of committed partials."""
-        partials = self.read_committed(spark, "tallies")
-        if partials is None:
+        """Per-window status counts ``(window_start, status, n)`` over the
+        committed classified rows."""
+        rows = self.read_rows(spark)
+        if rows is None:
             return None
-        return partials.groupBy("window_start", "status").agg(
-            F.sum("n").alias("n"))
+        return windowed_status_counts(
+            rows, window_duration=self.window_duration
+        ).select("window_start", "status", "n")
 
 
 def build_merge_sql(table: str, view: str, key_cols: list[str]) -> str:

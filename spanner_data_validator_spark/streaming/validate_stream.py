@@ -119,8 +119,8 @@ def windowed_status_counts(
     side may be null after a full outer join), which loses watermark
     attribution — and re-calling withWatermark after a stateful operator is
     disallowed. The production streaming tally therefore runs this function
-    on each micro-batch inside the exactly-once sink, summing the partials
-    on read (sink.TallyForeachBatch — proven equal to the batch expression in
+    on read over the classified rows the exactly-once sink committed
+    (sink.TallyForeachBatch.report — proven equal to the batch expression in
     tests/test_streaming.py::test_windowed_tallies_match_batch). Windowing a
     SINGLE watermarked stream with this function works natively.
     """

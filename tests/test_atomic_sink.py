@@ -12,10 +12,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spanner_data_validator_spark.operators.comparator import MATCH
 from spanner_data_validator_spark.streaming.jdbc_sink import (
     JdbcAtomicMultiSink)
 from spanner_data_validator_spark.streaming.sink import (
-    AtomicMultiParquetSink, TallyForeachBatch)
+    AtomicMultiParquetSink, ExactlyOnceParquetSink, TallyForeachBatch)
+from spanner_data_validator_spark.streaming.validate_stream import (
+    windowed_status_counts)
 
 
 def _batch(spark):
@@ -35,7 +38,7 @@ def test_parquet_crash_between_writes_publishes_nothing(spark, tmp_path,
     def crash(batch_id, meta=None):
         raise RuntimeError("simulated crash before the single commit")
 
-    # crash AFTER all three tables' data dirs are staged, BEFORE the marker
+    # crash AFTER the classified rows are staged, BEFORE the marker
     monkeypatch.setattr(sink.ledger, "commit", crash)
     with pytest.raises(RuntimeError):
         sink(_batch(spark), 0)
@@ -62,8 +65,10 @@ def test_parquet_replay_of_committed_batch_is_noop(spark, tmp_path):
     # empty batch commits all-zero but still fences the id
     sink(_batch(spark).where(F.lit(False)), 1)
     assert sink.is_committed(1)
-    assert sink.committed_rows(1) == {
-        "classified": 0, "tallies": 0, "mismatches": 0}
+    assert sink.ledger.meta(1) == {
+        "batch_id": 1, "rows": {"classified": 0},
+        "status": {"MATCH": 0, "MISMATCH": 0, "SOURCE_ONLY": 0,
+                   "TARGET_ONLY": 0}}
     assert sink.read_rows(spark).count() == 3
 
 
@@ -81,6 +86,67 @@ def test_multi_parquet_marker_gates_every_table(spark, tmp_path):
     assert ms.read_committed(spark, "b").count() == 2
     with pytest.raises(ValueError):
         ms.write_batch(1, {"zz": da})
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["3rows", "empty"])
+@pytest.mark.parametrize("make", [TallyForeachBatch, ExactlyOnceParquetSink],
+                         ids=["tally", "exactly_once"])
+def test_one_spark_job_per_sink_call(spark, tmp_path, make, empty):
+    """A sink call is ONE Spark job: the write counts its own rows (and the
+    tally sink its per-status counts) instead of reading them back."""
+    df = _batch(spark).where(F.lit(not empty))
+    sink = make(str(tmp_path / "out"))
+    sc = spark.sparkContext
+    group = f"sink-call-{make.__name__}-{empty}"
+    sc.setJobGroup(group, "one sink call")
+    try:
+        sink(df, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sink.is_committed(0)
+
+
+def _second_batch(spark):
+    return spark.createDataFrame(
+        [(3, 301, "MATCH", "2024-01-01 10:20:00"),
+         (4, 401, "TARGET_ONLY", "2024-01-01 12:00:00")],
+        "conv_id long, turn_idx long, status string, ts_s string",
+    ).select("conv_id", "turn_idx", "status",
+             F.col("ts_s").cast("timestamp").alias("ts"))
+
+
+def test_three_table_layout_reads_the_same(spark, tmp_path):
+    """A directory written in the older layout (classified, tallies and
+    mismatches staged under one marker) reads through TallyForeachBatch
+    exactly like one the sink writes today from the same frames."""
+    frames = [_batch(spark), _second_batch(spark),
+              _batch(spark).where(F.lit(False))]
+    old = AtomicMultiParquetSink(str(tmp_path / "old"),
+                                 ["classified", "tallies", "mismatches"])
+    new = TallyForeachBatch(str(tmp_path / "new"))
+    for i, df in enumerate(frames):
+        old.write_batch(i, {
+            "classified": df,
+            "tallies": windowed_status_counts(df).select(
+                "window_start", "status", "n"),
+            "mismatches": df.where(F.col("status") != MATCH)})
+        new(df, i)
+    assert old.committed_rows(1) == {
+        "classified": 2, "tallies": 2, "mismatches": 1}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    prior = TallyForeachBatch(str(tmp_path / "old"))
+    for read in ("read_rows", "read_mismatches", "report"):
+        assert rows(getattr(prior, read)(spark)) \
+            == rows(getattr(new, read)(spark)), read
+    # both MATCH rows fall in the 10:00 window, one from each batch
+    assert rows(new.report(spark).select("status", "n")) == [
+        ("MATCH", 2), ("MISMATCH", 1), ("SOURCE_ONLY", 1), ("TARGET_ONLY", 1)]
 
 
 @pytest.fixture()

@@ -11,6 +11,7 @@ deterministically (see jobs/validate_transcripts.py docstring).
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from datetime import datetime
 
@@ -205,8 +206,8 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
 
 
 def test_windowed_tallies_match_batch(spark, tmp_path):
-    """Per-window tally report (sum of per-batch partials across the resume
-    boundary) == batch windowed aggregation on the same classified rows."""
+    """Per-window tally report over the committed classified rows == batch
+    windowed aggregation on the same classified rows."""
     pair, src_dir, tgt_dir = _stage_pair(spark, tmp_path, seed=17)
     sink = run_streaming_validation(
         spark, src_dir, tgt_dir, f"{tmp_path}/out", f"{tmp_path}/ckpt",
@@ -219,6 +220,15 @@ def test_windowed_tallies_match_batch(spark, tmp_path):
     got = {(r["window_start"], r["status"]): r["n"] for r in report.collect()}
     want = {(r["window_start"], r["status"]): r["n"] for r in expect.collect()}
     assert got == want
+    # the per-status counts each marker records, observed on its batch's
+    # write, sum to the report
+    marked = Counter()
+    for i in sink.ledger.committed_ids():
+        marked.update(sink.ledger.meta(i)["status"])
+    reported = Counter()
+    for (_, status), n in got.items():
+        reported[status] += n
+    assert marked == reported and marked.total() == sink.read_rows(spark).count()
     # mismatch sink carries exactly the non-MATCH rows
     mm = sink.read_mismatches(spark)
     assert mm.count() == sum(v for k, v in pair.expected.items() if k != "MATCH")
