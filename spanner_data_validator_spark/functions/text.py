@@ -38,12 +38,6 @@ def substr_hits(text: Column | str, needle: str) -> Column:
             / F.lit(len(needle))).cast("long")
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str]) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    hits = sum(substr_hits(c, w) for w in stopwords)  # type: ignore[arg-type]
-    return hits.cast("double") / F.greatest(token_count_ws(c), F.lit(1))
-
-
 def quality_score(text: Column | str, n_chars: Column | str | None = None) -> Column:
     """Simple length/density quality heuristic: tokens per char (word density),
     penalized for very short docs."""

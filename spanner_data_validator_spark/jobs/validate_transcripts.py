@@ -204,7 +204,6 @@ def run_streaming_validation(
     sink.state_store = next(
         (name for name, cls in STATE_STORE_CLASSES.items()
          if cls == spark.conf.get(provider_key, "")), None)
-    sink.projected_state_keys = projected_state_keys
     writer = (
         classified.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)

@@ -36,10 +36,6 @@ def _norm(a: Column) -> Column:
         F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def topk_per_query(scored: DataFrame, k: int,
                    *, key_col: str = "query_id", order_col: str = "sim",
                    tie_col: str = "neighbor_id",

@@ -35,9 +35,21 @@ RANGE_CHANGED = "RANGE_CHANGED"
 RANGE_SOURCE_ONLY = "RANGE_SOURCE_ONLY"
 RANGE_TARGET_ONLY = "RANGE_TARGET_ONLY"
 
-_DIGEST_COLS = ["n_rows", "xor_fp", "sum_lo", "sum_hi"]
+DIGEST_COLS = ["n_rows", "xor_fp", "sum_lo", "sum_hi"]
 
 _LO_MASK = (1 << 32) - 1
+
+
+def digest_aggs(fp: Column) -> list[Column]:
+    """The digest's four aggregates over a BIGINT fingerprint column, named
+    as :data:`DIGEST_COLS`: row count, xor fold, and the sums of the low and
+    the high 32-bit halves."""
+    return [
+        F.count("*").alias("n_rows"),
+        F.bit_xor(fp).alias("xor_fp"),
+        F.sum(fp.bitwiseAND(F.lit(_LO_MASK))).alias("sum_lo"),
+        F.sum(F.shiftrightunsigned(fp, 32)).alias("sum_hi"),
+    ]
 
 
 def range_digest(
@@ -58,12 +70,7 @@ def range_digest(
     return (
         df.select(range_id.alias(range_col), fp.alias("__fp"))
         .groupBy(range_col)
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.bit_xor("__fp").alias("xor_fp"),
-            F.sum(F.col("__fp").bitwiseAND(F.lit(_LO_MASK))).alias("sum_lo"),
-            F.sum(F.shiftrightunsigned("__fp", 32)).alias("sum_hi"),
-        )
+        .agg(*digest_aggs(F.col("__fp")))
     )
 
 
@@ -83,15 +90,15 @@ def digest_drift(
     keys = [range_col] if isinstance(range_col, str) else list(range_col)
     s = src_digest.select(
         *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"s_{c}") for c in _DIGEST_COLS],
+        *[F.col(c).alias(f"s_{c}") for c in DIGEST_COLS],
     )
     t = tgt_digest.select(
         *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"t_{c}") for c in _DIGEST_COLS],
+        *[F.col(c).alias(f"t_{c}") for c in DIGEST_COLS],
     )
     j = s.join(t, on=keys, how="full_outer")
     same = F.lit(True)
-    for c in _DIGEST_COLS:
+    for c in DIGEST_COLS:
         same = same & (F.col(f"s_{c}") == F.col(f"t_{c}"))
     status = (
         F.when(F.col("s_n_rows").isNull(), RANGE_TARGET_ONLY)

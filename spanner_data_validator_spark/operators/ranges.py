@@ -173,15 +173,6 @@ def fetch_ranges(range_field_type: str, start: str, end: str, count: int,
 # Spark-side range machinery
 # ---------------------------------------------------------------------------
 
-def ranges_df(spark: SparkSession, ranges: list[PartitionRange]) -> DataFrame:
-    """Materialize ranges as a (broadcastable) DataFrame — Create.of analogue
-    (JDBCToSpannerDVTWithHash.java:277-283)."""
-    return spark.createDataFrame(
-        [(i, r.start, r.end) for i, r in enumerate(ranges)],
-        "partition_id INT, start_range STRING, end_range STRING",
-    )
-
-
 def long_ranges_df(spark: SparkSession, start: int, end: int, count: int) -> DataFrame:
     """Distributed range generation: sequence + posexplode, no driver loop —
     for partition counts in the millions (sample-tablespec.json uses 10^6)."""

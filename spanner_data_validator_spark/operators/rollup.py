@@ -81,32 +81,6 @@ def conv_digest(
     )
 
 
-def conv_digest_sql(
-    source_sql: str,
-    key_col: str,
-    order_col: str,
-    hash_cols: list[str],
-    *,
-    digest_col: str = "digest",
-    count_col: str = "n_turns",
-) -> str:
-    """DuckDB rendering of :func:`conv_digest` over ``source_sql``."""
-    from spanner_data_validator_spark.functions.hashing import portable_hash60_sql
-
-    tuple_sql = ", ".join(
-        f"coalesce(CAST({c} AS VARCHAR), '')" for c in hash_cols)
-    agg = f"string_agg(h, ',' ORDER BY {order_col})"
-    return f"""
-SELECT {key_col},
-       CAST(count(*) AS BIGINT) AS {count_col},
-       {portable_hash60_sql(agg)} AS {digest_col}
-FROM (SELECT {key_col}, {order_col},
-             substr(md5(concat_ws(chr(31), {tuple_sql})), 1, 15) AS h
-      FROM ({source_sql}))
-GROUP BY {key_col}
-"""
-
-
 def rollup_validate(
     source: DataFrame,
     target: DataFrame,

@@ -129,14 +129,10 @@ def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
     append_sentinel(spark, src_dir, tgt_dir)
 
     # keep state partitioning sane even under a foreign session's defaults
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with _shuffle_partitions(spark, 16):
         sink = run_streaming_validation(
             spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
             watermark="10 minutes", band="2 hours", engine=engine)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return sink.read_rows(spark).groupBy("status").agg(F.count("*").alias("n"))
 
 

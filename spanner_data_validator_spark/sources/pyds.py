@@ -342,9 +342,11 @@ pyds_rows AS (
 )"""
 
 
-def source_offset(progress: dict | None, source_idx: int = 0) -> int | None:
+def source_offset(progress: dict | None, source_idx: int = 0,
+                  key: str = "i") -> int | None:
     """Parse a StreamingQueryProgress source endOffset (the engine renders
-    the reader's offset dict with Python repr, not strict JSON)."""
+    the reader's offset dict with Python repr, not strict JSON); ``key`` is
+    the offset dict's field."""
     if not progress:
         return None
     end = progress["sources"][source_idx].get("endOffset")
@@ -352,32 +354,41 @@ def source_offset(progress: dict | None, source_idx: int = 0) -> int | None:
         return None
     if isinstance(end, str):
         end = ast.literal_eval(end)
-    return int(end["i"])
+    return int(end[key])
 
 
-def drain_stream(query, target_offset: int, *, timeout_s: float = 300.0,
-                 poll_s: float = 0.25) -> None:
-    """Run a processingTime-triggered query until the source has admitted
-    ``target_offset`` AND a no-data trigger ran after it (so event-time
-    windows closed by the final batch's watermark have been emitted), then
-    stop it.
+def drain_to_offset(query, target: int, key: str, *,
+                    timeout_s: float = 300.0, poll_s: float = 0.25) -> None:
+    """Run a processingTime-triggered query until EVERY source's end offset
+    field ``key`` has reached ``target`` AND a no-data trigger ran after it
+    (so event-time windows and outer-join timeouts closed by the final
+    batch's watermark have been emitted), then stop it.
 
     Needed because Trigger.AvailableNow with a Python streaming source
     executes exactly ONE micro-batch bounded by the first ``latestOffset()``
     poll (measured on Spark 4.1: remaining offsets are never admitted) —
-    so finite runs over this source use processingTime + explicit drain.
-    Raises TimeoutError rather than returning a partial result.
+    so finite runs over such sources use processingTime + explicit drain.
+    Re-raises the query's exception; raises TimeoutError rather than
+    returning a partial result.
     """
     deadline = time.time() + timeout_s
     while time.time() < deadline:
         if query.exception():
             raise query.exception()
         p = query.lastProgress
-        if (p is not None and source_offset(p) == target_offset
-                and (p["numInputRows"] or 0) == 0):
+        if (p is not None and (p["numInputRows"] or 0) == 0 and p["sources"]
+                and all((source_offset(p, i, key) or 0) >= target
+                        for i in range(len(p["sources"])))):
             query.stop()
             return
         time.sleep(poll_s)
     query.stop()
     raise TimeoutError(
-        f"stream did not reach offset {target_offset} within {timeout_s}s")
+        f"stream did not reach offset {key}={target} within {timeout_s}s")
+
+
+def drain_stream(query, target_offset: int, *, timeout_s: float = 300.0,
+                 poll_s: float = 0.25) -> None:
+    """:func:`drain_to_offset` on this source's row offset ``i``."""
+    drain_to_offset(query, target_offset, "i",
+                    timeout_s=timeout_s, poll_s=poll_s)

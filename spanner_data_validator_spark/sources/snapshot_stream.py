@@ -34,6 +34,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from spanner_data_validator_spark.sources.pyds import drain_to_offset
+
 SOURCE_NAME = "sdv_snapshot_tail"
 
 
@@ -169,34 +171,7 @@ def register(spark) -> None:
 
 def drain_to_version(query, target_version: int, *,
                      timeout_s: float = 300.0, poll_s: float = 0.25) -> None:
-    """Run a processingTime query until EVERY source's end offset reaches
-    ``target_version`` and a no-data trigger followed, then stop.
-
-    The no-data trigger is what lets a watermark advanced by the last data
-    emit its outer-join timeouts. Same rationale as ``pyds.drain_stream``:
-    Trigger.AvailableNow admits only the first latestOffset poll for Python
-    streaming sources (measured, Spark 4.1), so finite runs drain
-    explicitly.
-    """
-    import ast
-    import time
-
-    def version(src) -> int:
-        end = src.get("endOffset")
-        if isinstance(end, str):
-            end = ast.literal_eval(end)
-        return int(end["v"]) if end else 0
-
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        if query.exception():
-            raise query.exception()
-        p = query.lastProgress
-        if (p is not None and (p["numInputRows"] or 0) == 0 and p["sources"]
-                and all(version(s) >= target_version for s in p["sources"])):
-            query.stop()
-            return
-        time.sleep(poll_s)
-    query.stop()
-    raise TimeoutError(
-        f"snapshot stream did not reach v{target_version} in {timeout_s}s")
+    """:func:`pyds.drain_to_offset` on the snapshot version ``v``: stop once
+    EVERY source reached ``target_version`` and a no-data trigger followed."""
+    drain_to_offset(query, target_version, "v",
+                    timeout_s=timeout_s, poll_s=poll_s)

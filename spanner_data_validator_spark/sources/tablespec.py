@@ -18,7 +18,7 @@ jobs/query_spec_runner executes these query-shaped specs end-to-end over JDBC
 from __future__ import annotations
 
 import json
-from dataclasses import asdict, dataclass
+from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 DEFAULT_PARTITION_COUNT = 100
@@ -163,11 +163,6 @@ def generate_table_specs(
     if from_session is not None:
         return from_session
     raise ValueError("no tablespec JSON or session file provided")
-
-
-def spec_dict(spec: QueryTableSpec) -> dict:
-    """Plain-dict view (stable field names) for logging / dataframes."""
-    return asdict(spec)
 
 
 def with_last_updated_cutoff(spec: QueryTableSpec, col_index: int, *,

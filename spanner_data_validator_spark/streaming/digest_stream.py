@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_LO_MASK = (1 << 32) - 1
+from spanner_data_validator_spark.operators.digest import DIGEST_COLS, digest_aggs
 
 
 def windowed_digest(
@@ -60,21 +60,9 @@ def windowed_digest(
             fp.alias("__fp"),
         )
         .groupBy("w", range_col, *extra)
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.bit_xor("__fp").alias("xor_fp"),
-            F.sum(F.col("__fp").bitwiseAND(F.lit(_LO_MASK))).alias("sum_lo"),
-            F.sum(F.shiftrightunsigned("__fp", 32)).alias("sum_hi"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            range_col,
-            *extra,
-            "n_rows",
-            "xor_fp",
-            "sum_lo",
-            "sum_hi",
-        )
+        .agg(*digest_aggs(F.col("__fp")))
+        .select(F.col("w.start").alias("window_start"), range_col, *extra,
+                *DIGEST_COLS)
     )
 
 

@@ -31,7 +31,10 @@ disk::
 :class:`TallyForeachBatch` is the validation stream's sink: it stages only
 the classified rows, with per-status counts in the marker, and derives the
 per-window report and the mismatch rows from them on read;
-:class:`ExactlyOnceParquetSink` is the one-table case. The reference
+:class:`ExactlyOnceParquetSink` is the one-table case;
+:class:`FoldingParquetSink` keeps replaced state instead of appended rows
+(batch N commits ``fold(state N-1, batch N)``) — the streaming frontier
+and view maintenance sinks are its folds. The reference
 writes its report and conflicting rows as two independent sinks
 (JDBCToSpannerDVTWithHash.java:393-415, 468-469) with no such atomicity.
 ``merge_into_iceberg`` is the real-cluster path, exercised when an Iceberg
@@ -43,6 +46,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -243,6 +247,65 @@ class TallyForeachBatch(AtomicMultiParquetSink):
         return windowed_status_counts(
             rows, window_duration=self.window_duration
         ).select("window_start", "status", "n")
+
+
+class FoldingParquetSink(AtomicMultiParquetSink):
+    """``foreachBatch`` callable maintaining REPLACED state rather than
+    appended rows: committed batch N holds ``fold(prev, batch N)``, where
+    ``prev`` is the state at the newest committed id below N. ONE table of
+    :class:`AtomicMultiParquetSink`, so each state is written in one Spark
+    job and published by the one ``_commits/<id>`` marker.
+
+    * Structured Streaming replays a failed batch under the SAME batch id;
+      the replay folds onto the same committed predecessor (read by
+      committed id, never by directory listing) and overwrites the same
+      staged directory, so a half-written attempt is invisible and a
+      double-apply is impossible — a fold that adds counts would otherwise
+      double them.
+    * :meth:`latest` is the newest committed state: what a downstream
+      reader sees and what the next batch after a restart folds onto, so
+      the checkpoint and the chain of states advance together.
+    * ``batch_df=None`` carries ``prev`` forward. An empty state leaves no
+      directory (the marker records ``rows`` 0) and reads back as an empty
+      frame of ``schema``; states are always read with the declared DDL
+      ``schema``, so reading one runs no schema-inference job.
+
+    Each batch rewrites the whole STATE, so its cost scales with the state
+    (a frontier, a grouping's cardinality), never with the corpus. For
+    states too large to rewrite per batch, the same fencing drives a
+    MERGE INTO an Iceberg table instead (:func:`merge_into_iceberg`).
+    """
+
+    def __init__(self, spark: SparkSession, out_dir: str, table: str,
+                 schema: str,
+                 fold: Callable[[DataFrame, DataFrame], DataFrame]):
+        super().__init__(out_dir, [table])
+        self.spark = spark
+        self.table = table
+        self.schema = schema
+        self.fold = fold
+
+    def _state(self, batch_id: int | None) -> DataFrame:
+        """The committed state at ``batch_id`` (empty for None)."""
+        if batch_id is not None:
+            rows = self.ledger.meta(batch_id).get("rows")
+            # markers without row counts (the older layout, one state
+            # directory for every committed id) are read like nonzero ones
+            if rows is None or rows[self.table] > 0:
+                return (self.spark.read.schema(self.schema)
+                        .parquet(self.data_path(self.table, batch_id)))
+        return self.spark.createDataFrame([], self.schema)
+
+    def latest(self) -> DataFrame:
+        """The newest committed state (empty before the first commit)."""
+        return self._state(self.ledger.latest_before())
+
+    def __call__(self, batch_df: DataFrame | None, batch_id: int) -> None:
+        if self.is_committed(batch_id):
+            return  # replay of a committed batch: exactly-once no-op
+        prev = self._state(self.ledger.latest_before(batch_id))
+        new = prev if batch_df is None else self.fold(prev, batch_df)
+        self.write_batch(batch_id, {self.table: new})
 
 
 def build_merge_sql(table: str, view: str, key_cols: list[str]) -> str:

@@ -49,7 +49,7 @@ def test_crash_between_write_and_marker_recomputes_cleanly(spark, tmp_path):
     sink = FrontierMaintenanceSink(spark, str(tmp_path / "f"), "x", "y")
     sink(_pts(spark, [(4, 4), (4, 4)]), 0)
     # simulate a failed attempt of batch 1: data written, marker missing
-    target = sink._path(1)
+    target = sink.data_path("frontier", 1)
     _pts(spark, [(9, 9)]).write.mode("overwrite").parquet(target)
     assert not sink.ledger.is_committed(1)
     assert _frontier(sink) == {(4, 4, 2)}  # debris invisible (committed id)
