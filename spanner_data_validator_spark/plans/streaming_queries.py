@@ -103,6 +103,56 @@ def _shuffle_partitions(spark, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+# a finite availableNow run over a few staged files ends in seconds; past this
+# the query is stuck, and a silent partial sink would pass for an answer
+_DRAIN_TIMEOUT_S = 600
+
+
+def _file_stream(spark, df, work, *, files, per_trigger, sentinel=None,
+                 watermark=None):
+    """Stage ``df`` as ``files`` parquet files in ``<work>/in`` and return
+    the file stream over them, ``per_trigger`` files per micro-batch.
+
+    ``sentinel`` (column -> value) appends one more file holding one row at
+    ``ts`` 2100-01-01, those values and NULL elsewhere, each cast to its
+    column's type: the newest file, so it arrives last and its far-future
+    event time advances the watermark past every real window. Let it flow
+    through the aggregation (CLAUDE.md sentinel-filter trap); its own window
+    never closes, so it never reaches an append sink."""
+    in_dir = f"{work}/in"
+    df.repartition(files).write.parquet(in_dir)
+    if sentinel is not None:
+        row = {"ts": "2100-01-01", **sentinel}
+        (spark.range(1)
+         .select(*[F.lit(row.get(f.name)).cast(f.dataType).alias(f.name)
+                   for f in df.schema])
+         .write.mode("append").parquet(in_dir))
+    stream = (spark.readStream.schema(df.schema)
+              .option("maxFilesPerTrigger", per_trigger).parquet(in_dir))
+    return stream if watermark is None else stream.withWatermark("ts", watermark)
+
+
+def _drain(writer, work):
+    """Run ``writer`` to the end of its input (checkpoint ``<work>/ckpt``,
+    ``availableNow``) and return the finished query. A query still running
+    after ``_DRAIN_TIMEOUT_S`` is stopped and raises ``TimeoutError``."""
+    q = (writer.option("checkpointLocation", f"{work}/ckpt")
+         .trigger(availableNow=True).start())
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream over {work} still running after {_DRAIN_TIMEOUT_S} s")
+    return q
+
+
+def _drain_parquet(spark, stream, work):
+    """Drain ``stream`` into an append parquet sink at ``<work>/out`` and
+    return the rows it holds."""
+    _drain(stream.writeStream.format("parquet").option("path", f"{work}/out")
+           .outputMode("append"), work)
+    return spark.read.parquet(f"{work}/out")
+
+
 def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
     import tempfile
 
@@ -329,21 +379,10 @@ def q_stream_dedup_lang_counts(spark, sf_dir):
         "ts", (F.lit(1_600_000_000) + F.col("doc_id") % 600).cast("timestamp"))
 
     work = tempfile.mkdtemp(prefix="sdv_q_stream_dedup_")
-    in_dir = f"{work}/in"
-    corpus.repartition(4).write.parquet(in_dir)
-
-    stream = (spark.readStream.schema(corpus.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
+    stream = _file_stream(spark, corpus, work, files=4, per_trigger=1)
     deduped = dedup_text_stream(stream, "text", ts_col="ts", delay="2 hours",
                                 scope_cols=["lang"])
-    q = (deduped.select("lang", "text_fp")
-         .writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    return (spark.read.parquet(f"{work}/out")
+    return (_drain_parquet(spark, deduped.select("lang", "text_fp"), work)
             .groupBy("lang").agg(F.count("*").alias("n_docs")))
 
 
@@ -530,15 +569,10 @@ def q_stream_into_snapshot_table(spark, sf_dir):
     sk.register(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
     work = tempfile.mkdtemp(prefix="sdv_q_streamsink_")
-    ev.repartition(4).write.parquet(f"{work}/in")
     table = f"{work}/t"
-    stream = (spark.readStream.schema("event_id long")
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
-    q = (stream.writeStream.format(sk.SINK_NAME)
-         .option("table_dir", table)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream = _file_stream(spark, ev, work, files=4, per_trigger=2)
+    _drain(stream.writeStream.format(sk.SINK_NAME).option("table_dir", table),
+           work)
     t = snap.read_snapshot(spark, table)
     return (t.agg(F.count(F.lit(1)).cast("long").alias("total_rows"),
                   F.bit_xor(portable_hash60(
@@ -645,17 +679,9 @@ def q_stream_hll_window_users(spark, sf_dir):
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("user_id").cast("string").alias("u"))
     work = tempfile.mkdtemp(prefix="sdv_q_streamhll_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1)
-     .select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-             F.lit("sentinel").alias("u"))
-     .write.mode("append").parquet(in_dir))
-
     reg, rho = hll_reg_rho(F.col("u"))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes")
+    stream = (_file_stream(spark, ev, work, files=4, per_trigger=2,
+                           sentinel={"u": "sentinel"}, watermark="10 minutes")
               .select("ts", reg.alias("reg"), rho.alias("rho")))
     regs = (stream
             .groupBy(F.window("ts", "6 hours").alias("w"), "reg")
@@ -670,15 +696,10 @@ def q_stream_hll_window_users(spark, sf_dir):
                    F.col("nonempty").cast("long").alias("nonempty"),
                    hll_estimate_expr(F.col("nonempty"), F.col("s_num"))
                     .alias("hll_estimate")))
-    with _shuffle_partitions(spark, 8):
-        q = (est.writeStream.format("parquet")
-             .option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
     # the sentinel's own far-future window never closes, so the sink holds
     # exactly the real windows
-    return spark.read.parquet(f"{work}/out")
+    with _shuffle_partitions(spark, 8):
+        return _drain_parquet(spark, est, work)
 
 
 # ---------------------------------------------------------------------------
@@ -780,15 +801,9 @@ def q_stream_digest_drift(spark, sf_dir):
     # try_cast: the sentinel's conv_id is non-numeric (ANSI cast would throw);
     # it maps to a NULL range that never leaves the open far-future window
     rid = F.pmod(F.col("conv_id").try_cast("long"), F.lit(64))
-    q = (dual_windowed_digest(s, t, rid, fp, window="1 hour")
-         .writeStream.format("parquet")
-         .option("path", f"{work}/digests")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    dig = spark.read.parquet(f"{work}/digests") \
-        .where(F.col("range_id").isNotNull())
+    dig = (_drain_parquet(spark, dual_windowed_digest(s, t, rid, fp,
+                                                      window="1 hour"), work)
+           .where(F.col("range_id").isNotNull()))
     sd = dig.where(F.col("side") == "source").drop("side")
     td = dig.where(F.col("side") == "target").drop("side")
     out = digest_drift(sd, td, range_col=["window_start", "range_id"])
@@ -832,15 +847,8 @@ def q_stream_trending_terms(spark, sf_dir):
         F.col("ts").cast("timestamp").alias("ts"),
         F.coalesce(F.col("props"), F.lit("")).alias("text"))
     work = tempfile.mkdtemp(prefix="sdv_q_trending_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit("").alias("text"))
-          .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
+    stream = _file_stream(spark, ev, work, files=4, per_trigger=2,
+                          sentinel={"text": ""}, watermark="10 minutes")
     terms = stream.select(
         "ts",
         F.explode(F.filter(F.split(F.col("text"), " "),
@@ -848,13 +856,7 @@ def q_stream_trending_terms(spark, sf_dir):
     agg = (terms.groupBy(F.window("ts", "1 hour").alias("w"), "term")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .select(F.col("w.start").alias("ws"), "term", "n"))
-    q = (agg.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    sink = (spark.read.parquet(f"{work}/out")
+    sink = (_drain_parquet(spark, agg, work)
             .where(F.col("ws") < F.lit("2090-01-01").cast("timestamp")))
     top = topk_per_query(sink, 3, key_col="ws", order_col="n",
                          tie_col="term", two_phase=False)
@@ -892,20 +894,16 @@ def q_stream_observed_quality(spark, sf_dir):
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     work = tempfile.mkdtemp(prefix="sdv_q_observe_")
-    ev.repartition(4).write.parquet(f"{work}/in")
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{work}/in"))
+    stream = _file_stream(spark, ev, work, files=4, per_trigger=1)
     obs = stream.observe(
         "quality",
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((F.col("event_type") == "error").cast("long")).alias("n_error"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
         F.max("event_id").alias("max_event_id"))
-    q = (obs.select("event_id", "event_type")
-         .writeStream.format("parquet").option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    q = _drain(obs.select("event_id", "event_type")
+               .writeStream.format("parquet").option("path", f"{work}/out"),
+               work)
     m = fold_observed(q, "quality",
                       sum_cols=["n_rows", "n_error", "value_cents"],
                       max_cols=["max_event_id"])
@@ -949,18 +947,13 @@ def q_stream_constraint_monitor(spark, sf_dir):
     )
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     work = tempfile.mkdtemp(prefix="sdv_q_cmon_")
-    ev.repartition(4).write.parquet(f"{work}/in")
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{work}/in"))
+    stream = _file_stream(spark, ev, work, files=4, per_trigger=1)
     mon = ConstraintMonitor(f"{work}/out", [
         C.not_null("user_id"),
         C.in_range("value", 0, 250),
         C.max_length("props", 9),
     ])
-    q = (stream.writeStream.foreachBatch(mon)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(mon), work)
     return mon.totals(spark)
 
 
@@ -994,14 +987,9 @@ def q_stream_conflicts_to_jdbc(spark, sf_dir):
     conflicts = (classified_events(spark, sf_dir)
                  .where(F.col("status") != MATCH)
                  .select(F.col("key").alias("k"), "status"))
-    conflicts.repartition(4).write.parquet(f"{work}/in")
     sink = JdbcExactlyOnceSink(url, "conflicts")
-    stream = (spark.readStream.schema(conflicts.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream = _file_stream(spark, conflicts, work, files=4, per_trigger=2)
+    _drain(stream.writeStream.foreachBatch(sink), work)
     tally = (sink.read_committed(spark)
              .groupBy("status").agg(F.count(F.lit(1)).alias("n")))
     # materialize, then shut this Derby DB down — embedded Derby keeps every
@@ -1156,30 +1144,17 @@ def q_stream_cms_window_counts(spark, sf_dir):
           .where(F.col("user_id").isNotNull())
           .select(F.col("ts").cast("timestamp").alias("ts"), "user_id"))
     work = tempfile.mkdtemp(prefix="sdv_q_cms_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
     # sentinel carries a dummy NON-NULL user: filtering it pre-aggregation
     # would push the predicate below EventTimeWatermark (the digest-drift
     # trap) — instead it flows, and its far-future window can never close
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(-1).cast("long").alias("user_id"))
-          .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
+    stream = _file_stream(spark, ev, work, files=4, per_trigger=2,
+                          sentinel={"user_id": -1}, watermark="10 minutes")
     windowed = stream.select(F.window("ts", "1 hour").alias("w"),
                              F.col("user_id"))
     cms_stream = cms_build(
         windowed, F.col("user_id"),
         depth=_CMS_D, width=_CMS_W, seed=_CMS_SEED, extra_group_cols=["w"])
-    q = (cms_stream.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    cms = (spark.read.parquet(f"{work}/out")
+    cms = (_drain_parquet(spark, cms_stream, work)
            .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
                    "d", "bucket", "n"))
     cand = (ev.where(F.col("user_id") % 13 == 0)
@@ -1259,18 +1234,11 @@ def q_stream_neardup_guard(spark, sf_dir):
                                     num_perm=32, bands=16, materialize=True)
 
     work = tempfile.mkdtemp(prefix="sdv_q_neardup_guard_")
-    incoming.repartition(4).write.parquet(f"{work}/in")
-    stream = (spark.readStream.schema(incoming.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in"))
+    stream = _file_stream(spark, incoming, work, files=4, per_trigger=2)
     flagged = neardup_guard(stream, buckets, sets, "doc_id", "text",
                             ts_col="ts", num_perm=32, bands=16,
                             threshold=0.7)
-    q = (flagged.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.read.parquet(f"{work}/out")
+    return (_drain_parquet(spark, flagged, work)
             .select(F.col("in_id").cast("long").alias("in_id"),
                     F.col("hist_id").cast("long").alias("hist_id"),
                     "jaccard"))
@@ -1336,24 +1304,12 @@ def q_stream_psi_drift(spark, sf_dir):
 
     work = tempfile.mkdtemp(prefix="sdv_q_psi_stream_")
     live = ev.where(F.col("user_id") % 2 == 1).drop("user_id")
-    live.repartition(4).write.parquet(f"{work}/in")
-    (spark.range(1).select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(0.0).alias("value"))
-          .write.mode("append").parquet(f"{work}/in"))
-
-    stream = (spark.readStream.schema(live.schema)
-              .option("maxFilesPerTrigger", 2).parquet(f"{work}/in")
-              .withWatermark("ts", "10 minutes"))
+    stream = _file_stream(spark, live, work, files=4, per_trigger=2,
+                          sentinel={"value": 0.0}, watermark="10 minutes")
     hist = (stream.groupBy(F.window("ts", "1 hour").alias("w"),
                            bin_expr(F.col("value"), 0, 200, 16).alias("bin"))
             .agg(F.count(F.lit(1)).alias("n")))
-    q = (hist.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    sink = (spark.read.parquet(f"{work}/out")
+    sink = (_drain_parquet(spark, hist, work)
             .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
                     "bin", "n"))
     wt = F.sum("n").over(W.partitionBy("window_start_ms"))
@@ -1471,17 +1427,9 @@ def q_stream_cep_session_alerts(spark, sf_dir):
           .select(F.col("user_id"), F.col("ts").cast("timestamp").alias("ts"),
                   F.col("event_id"), sym.alias("sym")))
     work = tempfile.mkdtemp(prefix="sdv_q_stream_cep_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1).select(F.lit(-1).cast("long").alias("user_id"),
-                           F.lit("2100-01-01").cast("timestamp").alias("ts"),
-                           F.lit(-1).cast("long").alias("event_id"),
-                           F.lit("-").alias("sym"))
-          .write.mode("append").parquet(in_dir))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 3).parquet(in_dir)
-              .withWatermark("ts", "10 minutes"))
+    stream = _file_stream(
+        spark, ev, work, files=4, per_trigger=3, watermark="10 minutes",
+        sentinel={"user_id": -1, "event_id": -1, "sym": "-"})
     sess = (stream.groupBy(F.col("user_id"),
                            F.session_window("ts", "30 minutes").alias("w"))
                   .agg(F.array_sort(F.collect_list(
@@ -1491,13 +1439,7 @@ def q_stream_cep_session_alerts(spark, sf_dir):
         F.size("evs").cast("long").alias("n_events"),
         F.regexp_count(F.array_join(F.expr("transform(evs, e -> e.sym)"), ""),
                        F.lit("vc+p")).cast("long").alias("n_matches"))
-    q = (out.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    return (spark.read.parquet(f"{work}/out")
+    return (_drain_parquet(spark, out, work)
             .where(F.col("ws") < F.lit("2090-01-01").cast("timestamp"))
             .select("user_id", F.unix_millis("ws").alias("session_start_ms"),
                     "n_events", "n_matches"))
@@ -1563,10 +1505,7 @@ def q_stream_ivm_maintain(spark, sf_dir):
     sink = ViewMaintenanceSink(spark, f"{work}/view", ["event_type"], "m",
                                "event_type string")
     with _shuffle_partitions(spark, 8):
-        q = (changelog.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", f"{work}/ckpt")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
+        _drain(changelog.writeStream.foreachBatch(sink), work)
     return sink.latest()
 
 
@@ -1703,17 +1642,9 @@ def q_stream_benford_monitor(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "value")
     work = tempfile.mkdtemp(prefix="sdv_q_streambenford_")
-    in_dir = f"{work}/in"
-    ev.repartition(4).write.parquet(in_dir)
-    (spark.range(1)
-     .select(F.lit("2100-01-01").cast("timestamp").alias("ts"),
-             F.lit(1.0).alias("value"))
-     .write.mode("append").parquet(in_dir))
-
     cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(in_dir)
-              .withWatermark("ts", "10 minutes")
+    stream = (_file_stream(spark, ev, work, files=4, per_trigger=2,
+                           sentinel={"value": 1.0}, watermark="10 minutes")
               .select("ts", cents.alias("c"))
               .where(F.col("c") >= 1)
               .select("ts", F.substring(F.col("c").cast("string"), 1, 1)
@@ -1724,14 +1655,9 @@ def q_stream_benford_monitor(spark, sf_dir):
     out = counts.select(F.unix_millis(F.col("w.start")).alias("ws_ms"),
                         "digit", "observed")
     with _shuffle_partitions(spark, 8):
-        q = (out.writeStream.format("parquet")
-             .option("path", f"{work}/out")
-             .option("checkpointLocation", f"{work}/ckpt")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+        sink = _drain_parquet(spark, out, work)
 
     exp = benford_expected()
-    sink = spark.read.parquet(f"{work}/out")
     n = F.sum("observed").over(Window.partitionBy("ws_ms"))
     p = F.element_at(F.array(*[F.lit(float(exp[i])) for i in range(1, 10)]),
                      F.col("digit").cast("int"))
@@ -1777,17 +1703,9 @@ def q_state_store_inspect(spark, sf_dir):
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .select("event_type", "user_id"))
     work = tempfile.mkdtemp(prefix="sdv_q_state_inspect_")
-    in_dir = f"{work}/in"
-    ev.repartition(2).write.parquet(in_dir)
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = (stream.dropDuplicates(["event_type", "user_id"])
-         .writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
+    stream = _file_stream(spark, ev, work, files=2, per_trigger=1)
+    _drain_parquet(spark, stream.dropDuplicates(["event_type", "user_id"]),
+                   work)
 
     st = read_state(spark, f"{work}/ckpt")
     return (st.select(F.col("key.event_type").alias("event_type"),
@@ -1835,15 +1753,9 @@ def q_stream_pareto_frontier(spark, sf_dir):
                   F.round(F.col("p_retailprice") * 100).cast("long")
                   .alias("y")))
     work = tempfile.mkdtemp(prefix="sdv_q_stream_pareto_")
-    pt.repartition(3).write.parquet(f"{work}/in")
-
-    stream = (spark.readStream.schema(pt.schema)
-              .option("maxFilesPerTrigger", 1).parquet(f"{work}/in"))
+    stream = _file_stream(spark, pt, work, files=3, per_trigger=1)
     sink = FrontierMaintenanceSink(spark, f"{work}/frontier", "x", "y")
-    q = (stream.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(sink), work)
     return sink.latest()
 
 
@@ -1975,10 +1887,7 @@ def q_stream_lag_monitor(spark, sf_dir):
     monitor = LagMonitorSink(f"{work}/mon")
     stream = (spark.readStream.schema(waved.schema)
               .option("maxFilesPerTrigger", 2).parquet(in_dir))
-    q = (stream.writeStream.foreachBatch(monitor)
-         .option("checkpointLocation", f"{work}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(monitor), work)
     return monitor.histogram(spark)
 
 

@@ -40,7 +40,6 @@ from spanner_data_validator_spark.sources.shard_config import (  # noqa: F401
     ShardSpec,
     read_sharded_union,
     read_sharding_config,
-    shard_specs_from_json_file,
 )
 from spanner_data_validator_spark.sources.tablespec import (  # noqa: F401
     QueryTableSpec,

@@ -48,6 +48,7 @@ swaps ``_gen_batch`` for real scan tasks; the planning surface is identical.
 from __future__ import annotations
 
 import ast
+import os
 import time
 from dataclasses import dataclass
 
@@ -115,6 +116,24 @@ def _split(start: int, end: int, parts: int) -> list[_Range]:
         return []
     step = max(1, (end - start + parts - 1) // parts)
     return [_Range(s, min(s + step, end)) for s in range(start, end, step)]
+
+
+def load_offset_file(path: str) -> int:
+    """The offset durably stored at ``path``; a missing or empty file is 0."""
+    try:
+        with open(path) as f:
+            return int(f.read().strip() or 0)
+    except FileNotFoundError:
+        return 0
+
+
+def store_offset_file(path: str, v: int) -> None:
+    """Store offset ``v`` at ``path`` atomically: a reader sees the old value
+    or the new one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(str(v))
+    os.replace(tmp, path)
 
 
 class _Opts:
@@ -219,43 +238,22 @@ class _StreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self.o = _Opts(options)
         self._cur = 0   # admission cursor (how far latestOffset has offered)
-        self._hw = self._load_hw()  # delivery high water (never re-emit below)
-
-    def _load_hw(self) -> int:
-        if self.o.hw_file:
-            try:
-                with open(self.o.hw_file) as f:
-                    return int(f.read().strip() or 0)
-            except FileNotFoundError:
-                pass
-        return 0
+        # delivery high water (never re-emit below)
+        self._hw = load_offset_file(self.o.hw_file) if self.o.hw_file else 0
 
     def _advance_hw(self, v: int) -> None:
         if v <= self._hw:
             return
         self._hw = v
         if self.o.hw_file:
-            tmp = self.o.hw_file + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(v))
-            import os
-            os.replace(tmp, self.o.hw_file)
-
-    def _trace(self, msg: str) -> None:
-        import os
-        path = os.environ.get("SDV_PYDS_TRACE")
-        if path:
-            with open(path, "a") as f:
-                f.write(f"pid={os.getpid()} id={id(self) % 100000} {msg}\n")
+            store_offset_file(self.o.hw_file, v)
 
     def initialOffset(self) -> dict:
-        self._trace("initialOffset")
         return {"i": 0}
 
     def latestOffset(self) -> dict:
         self._cur = min(max(self._cur, self._hw) + self.o.batch_rows,
                         self.o.total)
-        self._trace(f"latestOffset -> {self._cur} (hw={self._hw})")
         return {"i": self._cur}
 
     def partitions(self, start: dict, end: dict):
@@ -266,7 +264,6 @@ class _StreamReader(DataSourceStreamReader):
             # batch — that offset may never have been delivered, so it
             # must NOT advance the high water (measured: advancing here
             # emptied the subsequent replay and lost the batch)
-            self._trace(f"partitions({s},{e}) probe hw={self._hw}")
             return []
         if e < s:
             # strictly backward batch: the engine's start is its last
@@ -275,12 +272,10 @@ class _StreamReader(DataSourceStreamReader):
             # below s was delivered; record it, emit nothing
             self._advance_hw(s)
             self._cur = max(self._cur, self._hw)
-            self._trace(f"partitions({s},{e}) backward hw={self._hw}")
             return []
         lo = max(s, self._hw)
         self._advance_hw(s)
         self._cur = max(self._cur, self._hw)
-        self._trace(f"partitions({s},{e}) lo={lo} hw={self._hw}")
         return _split(lo, e, self.o.parts)
 
     def read(self, part: _Range):

@@ -154,11 +154,6 @@ def shard_specs_from_def(d: dict) -> list[ShardSpec]:
     return out
 
 
-def shard_specs_from_json_file(path: str) -> list[ShardSpec]:
-    with open(path, encoding="utf-8") as f:
-        return shard_specs_from_def(json.load(f))
-
-
 def read_sharded_union(
     spark: SparkSession,
     shards: list[ShardSpec],

@@ -34,7 +34,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from spanner_data_validator_spark.sources.pyds import drain_to_offset
+from spanner_data_validator_spark.sources.pyds import (
+    drain_to_offset,
+    load_offset_file,
+    store_offset_file,
+)
 
 SOURCE_NAME = "sdv_snapshot_tail"
 
@@ -66,16 +70,9 @@ class _SnapshotTailReader(DataSourceStreamReader):
         self.table_dir = options["table_dir"]
         self.vpt = int(options.get("versions_per_trigger", "1"))
         self.cursor_file = options.get("cursor_file")
-        self._last = self._load_cursor()
-
-    def _load_cursor(self) -> int | None:
-        if self.cursor_file:
-            try:
-                with open(self.cursor_file) as f:
-                    return int(f.read().strip() or 0)
-            except FileNotFoundError:
-                return 0
-        return None  # None = unknown position (fresh process, no file)
+        # None = unknown position (fresh process, no file)
+        self._last = (load_offset_file(self.cursor_file)
+                      if self.cursor_file else None)
 
     def initialOffset(self) -> dict:
         return {"v": 0}
@@ -133,15 +130,10 @@ class _SnapshotTailReader(DataSourceStreamReader):
         # the cursor file only preserves versions_per_trigger pacing (and
         # forward-only admission) across reader restarts
         if self.cursor_file:
-            import os
-
             v = int(end["v"])
             if self._last is None or v > self._last:
                 self._last = max(self._last or 0, v)
-            tmp = self.cursor_file + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(v))
-            os.replace(tmp, self.cursor_file)
+            store_offset_file(self.cursor_file, v)
 
 
 class SnapshotTailDataSource(DataSource):

@@ -111,8 +111,13 @@ def commit_files(table_dir: str, new_files: list[str], *,
     with open(tmp, "w") as f:
         json.dump(meta, f)
     os.rename(tmp, os.path.join(_meta_dir(table_dir), f"v{version}.json"))
-    with open(_hint_path(table_dir), "w") as f:
+    # the hint flips by rename too: rewriting it in place would show a
+    # concurrent (or post-crash) reader an empty file between the truncate
+    # and the write
+    hint_tmp = _hint_path(table_dir) + ".tmp"
+    with open(hint_tmp, "w") as f:
         f.write(str(version))
+    os.replace(hint_tmp, _hint_path(table_dir))
     return version
 
 

@@ -48,8 +48,9 @@ def _repo_imports(nodes) -> dict[str, tuple[str, str]]:
             for a in n.names}
 
 
-def _repo_code_use() -> dict[str, bool]:
-    """Registered query name -> whether its function reaches package code
+def _plans_reachability():
+    """The top-level functions of ``plans/`` keyed (module, name), and the
+    rule ``reaches(module, fn, seen)``: whether ``fn`` reaches package code
     outside ``plans/``, directly or through helpers defined in ``plans/``."""
     trees = {f"{_PLANS}.{p.stem}": ast.parse(p.read_text())
              for p in sorted((_REPO / _PKG / "plans").glob("*.py"))}
@@ -73,6 +74,13 @@ def _repo_code_use() -> dict[str, bool]:
                 return True
         return False
 
+    return defs, reaches
+
+
+def _repo_code_use() -> dict[str, bool]:
+    """Registered query name -> whether its function reaches package code
+    outside ``plans/`` (``_plans_reachability``'s rule)."""
+    defs, reaches = _plans_reachability()
     out = {}
     for (mod, _), fn in defs.items():
         for d in fn.decorator_list:
@@ -90,6 +98,16 @@ def test_every_query_exercises_repo_code():
     stray = sorted(builtin_only - _BUILTIN_ONLY_OK)
     assert not stray, f"{len(stray)} queries call no package code: {stray}"
     assert builtin_only == _BUILTIN_ONLY_OK
+
+
+def test_stream_helpers_call_no_package_code():
+    """The shared staging-and-drain helpers call only Spark and the
+    standard library: were they to reach package code, every query built on
+    them would pass the guard above without calling any operator."""
+    defs, reaches = _plans_reachability()
+    mod = f"{_PLANS}.streaming_queries"
+    for name in ("_file_stream", "_drain", "_drain_parquet"):
+        assert not reaches(mod, defs[(mod, name)], set()), name
 
 
 def test_flagship_tally_identity(spark):

@@ -58,6 +58,34 @@ def test_commits_are_immutable_appends(spark):
     assert len(f3) == 3
 
 
+def test_failed_hint_write_keeps_previous_version(tmp_path, monkeypatch):
+    """A crash while the version hint is being written leaves the previous
+    hint readable, and the next commit lands as that version + 1."""
+    import builtins
+    import os
+
+    t = str(tmp_path / "t")
+    assert snap.commit_files(t, [f"{t}/data/a.parquet"]) == 1
+    real_open = builtins.open
+
+    def crash_on_hint(path, mode="r", *args, **kwargs):
+        f = real_open(path, mode, *args, **kwargs)
+        if "w" in mode and os.path.basename(path).startswith("version-hint"):
+            f.close()  # opened (and truncated), then the process dies
+            raise OSError("crash while writing the version hint")
+        return f
+
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", crash_on_hint)
+        with pytest.raises(OSError, match="version hint"):
+            snap.commit_files(t, [f"{t}/data/b.parquet"])
+    assert snap.current_version(t) == 1
+    assert snap.commit_files(t, [f"{t}/data/c.parquet"]) == 2
+    assert snap.current_version(t) == 2
+    assert snap.snapshot_files(t, 2) == [f"{t}/data/a.parquet",
+                                         f"{t}/data/c.parquet"]
+
+
 class TestSnapshotCommitWriter:
     """Python DataSource sink with atomic snapshot commit
     (sources/snapshot_sink.py)."""

@@ -785,3 +785,18 @@ def test_dedup_keys_has_one_legal_value():
     with pytest.raises(ValueError):
         run_streaming_validation(None, "src", "tgt", "out", "ckpt",
                                  dedup_keys=False)
+
+
+def test_drain_stops_and_raises_past_its_timeout(spark, tmp_path,
+                                                 monkeypatch):
+    """A registry stream run still going when the drain timeout passes is
+    stopped and fails loudly instead of leaving a partial sink to be read."""
+    from spanner_data_validator_spark.plans import streaming_queries as sq
+
+    monkeypatch.setattr(sq, "_DRAIN_TIMEOUT_S", 0.01)
+    df = spark.range(40).select("id", F.col("id").cast("timestamp").alias("ts"))
+    stream = sq._file_stream(spark, df, str(tmp_path), files=4, per_trigger=1)
+    with pytest.raises(TimeoutError):
+        sq._drain(stream.writeStream.format("noop").queryName("drain_timeout"),
+                  str(tmp_path))
+    assert "drain_timeout" not in {q.name for q in spark.streams.active}
