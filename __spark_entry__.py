@@ -25,9 +25,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from spanner_data_validator_spark.plans.demo_queries import QUERIES
+    """Every registered query; one that stages files returns its result
+    materialised, with its work dirs already removed."""
+    from spanner_data_validator_spark.plans.demo_queries import QUERIES, materialised
 
-    return dict(QUERIES)
+    return {name: materialised(q) for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

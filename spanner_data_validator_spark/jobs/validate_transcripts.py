@@ -41,6 +41,7 @@ are filtered out of the classified output by ``sentinel_filter``.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import time
 
@@ -48,8 +49,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.operators.comparator import dedup_first
+from spanner_data_validator_spark.session import (
+    PARTITIONS_CONF,
+    PROVIDER_CONF,
+    STATE_STORE_CLASSES,
+    StateLayout,
+    scoped_conf,
+    state_layout,
+)
 from spanner_data_validator_spark.sources.transcript_source import (
     KEY_COLS,
+    hadoop_path,
+    parquet_rows,
     read_transcripts,
     stream_transcripts,
     write_transcripts,
@@ -147,8 +158,6 @@ def run_streaming_validation(
     max_files_per_trigger: int | None = None,
     timeout_s: float = 300.0,
     dedup_keys: bool = True,
-    state_store: str | None = None,
-    projected_state_keys: int | None = None,
 ) -> TallyForeachBatch:
     """Run the streaming pipeline; returns the sink for result readback.
 
@@ -162,29 +171,49 @@ def run_streaming_validation(
     ``dedup_keys`` has one legal value, True; it is kept only so callers
     that still pass it keep working.
 
-    ``state_store``: ``'rocksdb'`` / ``'hdfs'`` pin the provider for this
-    query; ``'auto'`` picks via :func:`session.select_state_store` from
-    ``projected_state_keys`` (worst-case in-flight keys ≈ rate × (watermark +
-    band), or total turns for a finite sentinel-punctuated drain, since the
-    watermark only advances at the end). ``None`` keeps the session default.
-    The chosen provider is recorded on the returned sink (``.state_store``)
-    so benches can report it. Only valid for a FRESH checkpoint — Spark pins
-    the provider in checkpoint metadata on first start.
+    **State layout.** The state-store provider and the state partition
+    count come from :func:`session.state_layout` over the projected keys.
+    An ``availableNow`` run holds every key until the sentinel advances the
+    watermark, so its projection is the rows of both inputs present at
+    query start, read from parquet footers (:func:`parquet_rows`); a
+    continuous (``processingTime``) run has unbounded input, so its
+    projection is unknown: RocksDB with the session's partition count. The
+    heap store gets one partition per ``KEYS_PER_STATE_PARTITION`` (150 k)
+    keys, up to ``spark.sql.shuffle.partitions``, while it fits a quarter
+    of the driver heap. Measured on 4 cores, stream pass plus ``report()``,
+    median of 3 (seconds):
+
+    ==========  ============  ======  ======  ======
+    turns       RocksDB / 4   heap 4  heap 2  heap 1
+    ==========  ============  ======  ======  ======
+    67 k        9.44          6.75    6.10    6.02
+    264 k       16.9          10.6    9.54    10.8
+    661 k       21.8          9.34    9.96    12.8
+    1.65 M      47.6          17.1    22.4    31.1
+    ==========  ============  ======  ======  ======
+
+    The best partition count flips from 1 to 2 near 150 k keys and to 4
+    (all cores here) near 600 k. A checkpoint keeps the layout it was sized
+    with at its first start: Spark restores both from the offset log, so a
+    restart runs with the checkpoint's layout, whatever the rule says now.
+    The layout the query runs with is on the returned sink
+    (``state_store``, ``state_partitions``, ``projected_keys``).
+
+    The caller's session keeps its own conf: the layout is set only while
+    ``start()`` builds the query. Spark 4.1 clones the session into the
+    query in that call (the StreamExecution constructor's
+    ``cloneSession()``), and the first batch writes the clone's layout to
+    the offset log.
     """
     if dedup_keys is not True:
         raise ValueError("dedup_keys must be True: both engines keep one row per key")
-    from spanner_data_validator_spark.session import (
-        STATE_STORE_CLASSES,
-        select_state_store,
-    )
+    pinned = _checkpoint_layout(spark, checkpoint_dir)
+    projected = None
+    if pinned is None and available_now:
+        rows = [parquet_rows(spark, p) for p in (src_path, tgt_path)]
+        projected = None if None in rows else sum(rows)
+    layout = pinned or state_layout(projected, int(spark.conf.get(PARTITIONS_CONF)))
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    chosen = state_store
-    if chosen == "auto":
-        chosen = select_state_store(projected_state_keys)
-    prev_provider = spark.conf.get(provider_key, None)
-    if chosen is not None:
-        spark.conf.set(provider_key, STATE_STORE_CLASSES[chosen])
     src = stream_transcripts(
         spark, src_path, watermark=watermark, max_files_per_trigger=max_files_per_trigger
     )
@@ -201,38 +230,54 @@ def run_streaming_validation(
         classified = classify_transcripts(src, tgt, algo=algo, band=band)
 
     sink = TallyForeachBatch(out_dir, window_duration=window_duration)
-    sink.state_store = next(
-        (name for name, cls in STATE_STORE_CLASSES.items()
-         if cls == spark.conf.get(provider_key, "")), None)
+    sink.state_store, sink.state_partitions = layout
+    sink.projected_keys = projected
     writer = (
         classified.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(sink)
     )
     if available_now:
-        q = writer.trigger(availableNow=True).start()
-        try:
-            q.awaitTermination(timeout_s)
-            if q.isActive:
-                # an availableNow query still running at the deadline means
-                # the sink holds PARTIAL commits — surface it instead of
-                # returning silently-incomplete totals (callers would report
-                # undercounts)
-                q.stop()
-                raise TimeoutError(
-                    f"availableNow streaming validation did not drain within "
-                    f"{timeout_s}s; sink at {out_dir} holds partial commits")
-        finally:
-            # the provider is captured in the query's checkpoint metadata at
-            # first-batch start, so it is safe to restore the session default
-            # once the query has terminated
-            if chosen is not None and prev_provider is not None:
-                spark.conf.set(provider_key, prev_provider)
+        writer = writer.trigger(availableNow=True)
     else:
-        writer.trigger(processingTime=trigger_interval).start()
-        # continuous path: the conf must stay set until the first batch plans
-        # its state stores — the caller owns the session default from here
+        # continuous path: the query runs on; the caller owns it from here
+        writer = writer.trigger(processingTime=trigger_interval)
+    with scoped_conf(spark, {} if pinned else layout.conf()):
+        q = writer.start()
+    if available_now:
+        q.awaitTermination(timeout_s)
+        if q.isActive:
+            # an availableNow query still running at the deadline means
+            # the sink holds PARTIAL commits — surface it instead of
+            # returning silently-incomplete totals (callers would report
+            # undercounts)
+            q.stop()
+            raise TimeoutError(
+                f"availableNow streaming validation did not drain within "
+                f"{timeout_s}s; sink at {out_dir} holds partial commits")
     return sink
+
+
+def _checkpoint_layout(spark: SparkSession, checkpoint_dir: str) -> StateLayout | None:
+    """The state layout pinned in an existing checkpoint (its newest
+    offset log entry), or None when the checkpoint has not started yet."""
+    fs, offsets = hadoop_path(spark, f"{checkpoint_dir}/offsets")
+    if not fs.exists(offsets):
+        return None
+    ids = [int(n) for st in fs.listStatus(offsets)
+           if (n := st.getPath().getName()).isdecimal()]
+    if not ids:
+        return None
+    stream = fs.open(spark._jvm.org.apache.hadoop.fs.Path(offsets, str(max(ids))))
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    # line 1 is the log version, line 2 the batch metadata with its conf
+    conf = json.loads(text.splitlines()[1])["conf"]
+    cls = conf[PROVIDER_CONF]
+    provider = next((k for k, v in STATE_STORE_CLASSES.items() if v == cls), cls)
+    return StateLayout(provider, int(conf[PARTITIONS_CONF]))
 
 
 def _interval_ms(band: str) -> int:
@@ -292,6 +337,12 @@ def main(argv: list[str] | None = None) -> None:
             window_duration=args.window,
             available_now=args.available_now,
         )
+        lineage = os.path.join(args.out, "lineage")
+        os.makedirs(lineage, exist_ok=True)
+        with open(os.path.join(lineage, "state_layout.json"), "w") as f:
+            json.dump({"state_store": sink.state_store,
+                       "state_partitions": sink.state_partitions,
+                       "projected_keys": sink.projected_keys}, f)
         if args.available_now:
             report = sink.report(spark)
             if report is not None:

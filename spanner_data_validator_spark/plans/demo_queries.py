@@ -30,6 +30,11 @@ importing it fills the registry.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -48,6 +53,45 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+# the run root every query's work dirs stage under; made on first use
+_work_root: str | None = None
+
+
+def work_dir(prefix: str) -> str:
+    """A fresh directory for one query's staged inputs, checkpoints and
+    outputs, under the run root. :func:`remove_work_root` removes them all,
+    at the latest when the process exits."""
+    global _work_root
+    if _work_root is None:
+        _work_root = tempfile.mkdtemp(prefix="sdv_run_")
+    return tempfile.mkdtemp(prefix=prefix, dir=_work_root)
+
+
+@atexit.register
+def remove_work_root() -> None:
+    global _work_root
+    if _work_root is not None:
+        shutil.rmtree(_work_root, ignore_errors=True)
+        _work_root = None
+
+
+def materialised(query):
+    """``query`` that leaves no work dir behind: a result that may still
+    read its staged files (a lazy read of ``<work>/out``) is materialised
+    first, with an eager local checkpoint, then the run root is removed."""
+    @functools.wraps(query)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        try:
+            df = query(spark, sf_dir)
+            if _work_root is not None:  # the query staged files
+                df = df.localCheckpoint(eager=True)
+            return df
+        finally:
+            remove_work_root()
+
+    return run
 
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from spanner_data_validator_spark.plans.demo_queries import (
     classified_events,
     register,
     transcripts_from_events,
+    work_dir,
 )
 from spanner_data_validator_spark.sources import pyds as _pyds
 
@@ -93,8 +94,8 @@ def _shuffle_partitions(spark, n: int):
     every micro-batch commits one state store PER PARTITION per stateful
     operator, so a 20k-row demo at 32 partitions pays 32x(ops) store
     commits per trigger for empty partitions (measured: the snapshot
-    validate demo dropped 51.5 s -> much less at 8). Production sizes this
-    to rate x state, not to the session default."""
+    validate demo dropped 51.5 s -> much less at 8). The validation stream
+    sizes its own (``session.state_layout``)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -154,8 +155,6 @@ def _drain_parquet(spark, stream, work):
 
 
 def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
-    import tempfile
-
     from spanner_data_validator_spark.jobs.validate_transcripts import (
         append_sentinel,
         run_streaming_validation,
@@ -169,7 +168,7 @@ def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
     # derived source so the events scan + rank window run once, not three times
     src = transcripts_from_events(spark, sf_dir, user_mod=user_mod).persist()
     tgt = _events_transcript_target(src)
-    work = tempfile.mkdtemp(prefix=f"sdv_q_stream_{engine}_")
+    work = work_dir(f"sdv_q_stream_{engine}_")
     src_dir, tgt_dir = f"{work}/src", f"{work}/tgt"
     try:
         write_transcripts(src, spark, src_dir, n_files=4)
@@ -177,12 +176,9 @@ def _run_stream_totals(spark, sf_dir, engine, *, user_mod: int | None = None):
     finally:
         src.unpersist()
     append_sentinel(spark, src_dir, tgt_dir)
-
-    # keep state partitioning sane even under a foreign session's defaults
-    with _shuffle_partitions(spark, 16):
-        sink = run_streaming_validation(
-            spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
-            watermark="10 minutes", band="2 hours", engine=engine)
+    sink = run_streaming_validation(
+        spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
+        watermark="10 minutes", band="2 hours", engine=engine)
     return sink.read_rows(spark).groupBy("status").agg(F.count("*").alias("n"))
 
 
@@ -233,8 +229,6 @@ def q_revalidate_delta(spark, sf_dir):
     law pinned in tests/test_revalidate.py); unchanged ranges reuse the
     sink's committed results. The merged per-(range, status) report must
     equal a FULL revalidation of the final corpus — which is the oracle."""
-    import tempfile
-
     from spanner_data_validator_spark.jobs.revalidate import (
         revalidate_delta_report, write_ranged_transcripts)
     from spanner_data_validator_spark.jobs.validate_transcripts import (
@@ -243,7 +237,7 @@ def q_revalidate_delta(spark, sf_dir):
     src = transcripts_from_events(spark, sf_dir).persist()
     tgt = _events_transcript_target(src)
     is_delta = F.col("conv_id").cast("long") % 40 == 5
-    work = tempfile.mkdtemp(prefix="sdv_q_revalidate_")
+    work = work_dir("sdv_q_revalidate_")
     src_dir, tgt_dir = f"{work}/src", f"{work}/tgt"
     try:
         write_ranged_transcripts(src.where(~is_delta), spark, src_dir,
@@ -251,10 +245,9 @@ def q_revalidate_delta(spark, sf_dir):
         write_ranged_transcripts(tgt.where(~is_delta), spark, tgt_dir,
                                  tag="init")
         append_sentinel(spark, src_dir, tgt_dir)
-        with _shuffle_partitions(spark, 16):
-            sink = run_streaming_validation(
-                spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
-                watermark="10 minutes", band="2 hours")
+        sink = run_streaming_validation(
+            spark, src_dir, tgt_dir, f"{work}/out", f"{work}/ckpt",
+            watermark="10 minutes", band="2 hours")
         # the nightly drop: whole new conversations, all in range 5
         write_ranged_transcripts(src.where(is_delta), spark, src_dir,
                                  tag="delta")
@@ -287,8 +280,6 @@ def q_stream_snapshot_validate(spark, sf_dir):
     watermarked stateful full-outer join classifier. Totals equal the batch
     full-outer oracle exactly — the same plan the file-stream flagship
     runs, now over the table format the north star names."""
-    import tempfile
-
     from spanner_data_validator_spark.jobs.validate_transcripts import (
         classify_transcripts,
         sentinel_frame,
@@ -298,7 +289,7 @@ def q_stream_snapshot_validate(spark, sf_dir):
 
     src = transcripts_from_events(spark, sf_dir, user_mod=5).persist()
     tgt = _events_transcript_target(src)
-    work = tempfile.mkdtemp(prefix="sdv_q_snapstream_")
+    work = work_dir("sdv_q_snapstream_")
     src_t, tgt_t = f"{work}/src_t", f"{work}/tgt_t"
     # commits must be EVENT-TIME-ordered (like real incremental ingest):
     # conv-keyed waves each span the whole month, so the watermark races to
@@ -363,8 +354,6 @@ def q_stream_dedup_lang_counts(spark, sf_dir):
     key would let arrival order pick which language keeps a text that
     appears under several (7 such texts at sf0.1), which no batch oracle
     can replay."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.dedup_stream import (
         dedup_text_stream,
     )
@@ -378,7 +367,7 @@ def q_stream_dedup_lang_counts(spark, sf_dir):
     corpus = corpus.withColumn(
         "ts", (F.lit(1_600_000_000) + F.col("doc_id") % 600).cast("timestamp"))
 
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_dedup_")
+    work = work_dir("sdv_q_stream_dedup_")
     stream = _file_stream(spark, corpus, work, files=4, per_trigger=1)
     deduped = dedup_text_stream(stream, "text", ts_col="ts", delay="2 hours",
                                 scope_cols=["lang"])
@@ -441,8 +430,6 @@ def q_snapshot_writer_roundtrip(spark, sf_dir):
     resolve scans through manifests only). Two multi-partition writes,
     then time-travel / current / incremental digests — the same numbers
     the oracle reconstructs from the slices."""
-    import tempfile
-
     from spanner_data_validator_spark.functions.hashing import portable_hash60
     from spanner_data_validator_spark.sources import snapshot_sink as sk
     from spanner_data_validator_spark.sources import snapshots as snap
@@ -450,7 +437,7 @@ def q_snapshot_writer_roundtrip(spark, sf_dir):
     sk.register(spark)
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
         .select(F.col("o_orderkey").alias("k"))
-    table = tempfile.mkdtemp(prefix="sdv_q_snapsink_") + "/t"
+    table = work_dir("sdv_q_snapsink_") + "/t"
     for m in (0, 1):
         (orders.where(F.col("k") % 2 == m).repartition(4)
          .write.format(sk.SINK_NAME).option("table_dir", table)
@@ -504,14 +491,12 @@ def q_snapshot_compaction_scan(spark, sf_dir):
     rewrite, where a bare manifest set-difference would have re-emitted
     all compacted rows (the bug class Iceberg's snapshot operations
     exist to prevent)."""
-    import tempfile
-
     from spanner_data_validator_spark.functions.hashing import portable_hash60
     from spanner_data_validator_spark.sources import snapshots as snap
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
         .select(F.col("o_orderkey").alias("k"))
-    table = tempfile.mkdtemp(prefix="sdv_q_compact_") + "/t"
+    table = work_dir("sdv_q_compact_") + "/t"
     snap.commit(orders.where(F.col("k") % 3 == 0), table, files=4)
     snap.commit(orders.where(F.col("k") % 3 == 1), table, files=4)
     files_before = len(snap.snapshot_files(table, 2))
@@ -560,15 +545,13 @@ def q_stream_into_snapshot_table(spark, sf_dir):
     input files) -> snapshot versions 1 and 2; the digest of the final
     table must equal the batch input exactly, and the version count proves
     one-commit-per-batch."""
-    import tempfile
-
     from spanner_data_validator_spark.functions.hashing import portable_hash60
     from spanner_data_validator_spark.sources import snapshot_sink as sk
     from spanner_data_validator_spark.sources import snapshots as snap
 
     sk.register(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
-    work = tempfile.mkdtemp(prefix="sdv_q_streamsink_")
+    work = work_dir("sdv_q_streamsink_")
     table = f"{work}/t"
     stream = _file_stream(spark, ev, work, files=4, per_trigger=2)
     _drain(stream.writeStream.format(sk.SINK_NAME).option("table_dir", table),
@@ -617,14 +600,12 @@ def q_snapshot_incremental_scan(spark, sf_dir):
     data (the property that makes continuous validation affordable: each
     round touches only new files). Counts + key checksums per mode,
     oracle-reconstructed from the same slices."""
-    import tempfile
-
     from spanner_data_validator_spark.functions.hashing import portable_hash60
     from spanner_data_validator_spark.sources import snapshots as snap
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
         .select(F.col("o_orderkey").alias("k"))
-    table = tempfile.mkdtemp(prefix="sdv_q_snap_") + "/orders_t"
+    table = work_dir("sdv_q_snap_") + "/orders_t"
     for m in (0, 1, 2):
         snap.commit(orders.where(F.col("k") % 3 == m), table)
 
@@ -668,8 +649,6 @@ def q_stream_hll_window_users(spark, sf_dir):
     estimate. The oracle recomputes the identical register math per window
     in batch; estimator accuracy itself is characterized by
     hll_distinct_by_type."""
-    import tempfile
-
     from spanner_data_validator_spark.operators.sketch import (
         hll_estimate_expr,
         hll_reg_rho,
@@ -678,7 +657,7 @@ def q_stream_hll_window_users(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("user_id").cast("string").alias("u"))
-    work = tempfile.mkdtemp(prefix="sdv_q_streamhll_")
+    work = work_dir("sdv_q_streamhll_")
     reg, rho = hll_reg_rho(F.col("u"))
     stream = (_file_stream(spark, ev, work, files=4, per_trigger=2,
                            sentinel={"u": "sentinel"}, watermark="10 minutes")
@@ -764,8 +743,6 @@ def q_stream_digest_drift(spark, sf_dir):
     ranges × 2 rows (~40 B each) instead of per-key join state. Closed
     windows land in an append sink; the batch compare names the drifted
     (window, range) cells. Oracle replicates digests + drift in SQL."""
-    import tempfile
-
     from spanner_data_validator_spark.functions.hashing import portable_hash60
     from spanner_data_validator_spark.jobs.validate_transcripts import (
         append_sentinel,
@@ -781,7 +758,7 @@ def q_stream_digest_drift(spark, sf_dir):
 
     src = transcripts_from_events(spark, sf_dir).persist()
     tgt = _events_transcript_target(src)
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_digest_")
+    work = work_dir("sdv_q_stream_digest_")
     try:
         write_transcripts(src, spark, f"{work}/src", n_files=4)
         write_transcripts(tgt, spark, f"{work}/tgt", n_files=4)
@@ -839,14 +816,12 @@ def q_stream_trending_terms(spark, sf_dir):
     keyed — heavy-hitter queries at 10^12 turns cap state by pre-filtering
     terms to a candidate set (e.g. a KMV/CMS-derived hot list); here the term
     vocabulary is bounded, so the full count is the honest plan."""
-    import tempfile
-
     from spanner_data_validator_spark.operators.ann import topk_per_query
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"),
         F.coalesce(F.col("props"), F.lit("")).alias("text"))
-    work = tempfile.mkdtemp(prefix="sdv_q_trending_")
+    work = work_dir("sdv_q_trending_")
     stream = _file_stream(spark, ev, work, files=4, per_trigger=2,
                           sentinel={"text": ""}, watermark="10 minutes")
     terms = stream.select(
@@ -888,12 +863,10 @@ def q_stream_observed_quality(spark, sf_dir):
     maxes-of-maxes are micro-batch-boundary-invariant, which is what the
     oracle recomputes. The sink row count proves the observed stream and
     the delivered stream are the same pass."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.observe import fold_observed
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_observe_")
+    work = work_dir("sdv_q_observe_")
     stream = _file_stream(spark, ev, work, files=4, per_trigger=1)
     obs = stream.observe(
         "quality",
@@ -940,13 +913,11 @@ def q_stream_constraint_monitor(spark, sf_dir):
     answer — which must equal the one-shot batch suite the oracle computes.
     Stateless streaming: no watermark, per-batch cost is one aggregate
     scan, sink holds batches x rules tiny rows."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.constraint_monitor import (
         ConstraintMonitor,
     )
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_cmon_")
+    work = work_dir("sdv_q_cmon_")
     stream = _file_stream(spark, ev, work, files=4, per_trigger=1)
     mon = ConstraintMonitor(f"{work}/out", [
         C.not_null("user_id"),
@@ -969,12 +940,10 @@ def q_stream_conflicts_to_jdbc(spark, sf_dir):
     cleaned on replay), then the committed rows are read back and tallied —
     which must equal the batch classification the oracle computes. The
     portable stand-in for the reference's BigQuery conflict writers."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.jdbc_sink import (
         JdbcExactlyOnceSink,
     )
-    work = tempfile.mkdtemp(prefix="sdv_q_jdbc_sink_")
+    work = work_dir("sdv_q_jdbc_sink_")
     url = f"jdbc:derby:{work}/db;create=true"
     jvm = spark.sparkContext._jvm
     conn = jvm.java.sql.DriverManager.getConnection(url)
@@ -1060,10 +1029,8 @@ def q_pyds_stream_incremental(spark, sf_dir):
     Python streaming source, so the run uses processingTime + drain_stream
     (see sources/pyds.py). Every closed window is hash-matched against the
     oracle's arithmetic recomputation."""
-    import tempfile
-
     _pyds.register(spark)
-    work = tempfile.mkdtemp(prefix="sdv_q_pyds_stream_")
+    work = work_dir("sdv_q_pyds_stream_")
     stream = (spark.readStream.format(_pyds.SOURCE_NAME)
               .option("convs", _PYDS_CONVS).option("turns", _PYDS_TURNS)
               .option("batch_rows", 3400).option("parts", 8)
@@ -1133,8 +1100,6 @@ def q_stream_cms_window_counts(spark, sf_dir):
     non-null user and simply flows through the aggregation (its own window
     can never close), because filtering it pre-aggregation would push the
     predicate below EventTimeWatermark — the stream_digest_drift trap."""
-    import tempfile
-
     from spanner_data_validator_spark.operators.sketch import (
         cms_build,
         cms_lookup,
@@ -1143,7 +1108,7 @@ def q_stream_cms_window_counts(spark, sf_dir):
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .where(F.col("user_id").isNotNull())
           .select(F.col("ts").cast("timestamp").alias("ts"), "user_id"))
-    work = tempfile.mkdtemp(prefix="sdv_q_cms_")
+    work = work_dir("sdv_q_cms_")
     # sentinel carries a dummy NON-NULL user: filtering it pre-aggregation
     # would push the predicate below EventTimeWatermark (the digest-drift
     # trap) — instead it flows, and its far-future window can never close
@@ -1209,8 +1174,6 @@ def q_stream_neardup_guard(spark, sf_dir):
     (a pair can match through several bands). At (32 perms, 16 bands) recall
     on >=0.7 pairs is total on this corpus, so the oracle is the exact
     cross-side Jaccard join — hash-matched row for row."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.neardup_stream import (
         build_lsh_index,
         neardup_guard,
@@ -1233,7 +1196,7 @@ def q_stream_neardup_guard(spark, sf_dir):
     buckets, sets = build_lsh_index(hist, "doc_id", "text",
                                     num_perm=32, bands=16, materialize=True)
 
-    work = tempfile.mkdtemp(prefix="sdv_q_neardup_guard_")
+    work = work_dir("sdv_q_neardup_guard_")
     stream = _file_stream(spark, incoming, work, files=4, per_trigger=2)
     flagged = neardup_guard(stream, buckets, sets, "doc_id", "text",
                             ts_col="ts", num_perm=32, bands=16,
@@ -1285,8 +1248,6 @@ def q_stream_psi_drift(spark, sf_dir):
     is smoothed; bins with no live mass contribute nothing — the window's
     live histogram IS the distribution under test). Sentinel flows through
     the aggregation as always."""
-    import tempfile
-
     from pyspark.sql import Window as W
 
     from spanner_data_validator_spark.operators.profile import bin_expr
@@ -1302,7 +1263,7 @@ def q_stream_psi_drift(spark, sf_dir):
                 .agg(F.count(F.lit(1)).alias("base_n"))
                 .localCheckpoint())
 
-    work = tempfile.mkdtemp(prefix="sdv_q_psi_stream_")
+    work = work_dir("sdv_q_psi_stream_")
     live = ev.where(F.col("user_id") % 2 == 1).drop("user_id")
     stream = _file_stream(spark, live, work, files=4, per_trigger=2,
                           sentinel={"value": 0.0}, watermark="10 minutes")
@@ -1346,13 +1307,11 @@ def q_stream_session_conv_digest(spark, sf_dir):
     computes). Turns are 60 s apart within a conversation, so each
     conversation is exactly one session; the source's far-future sentinel
     flushes every real session and its own can never close."""
-    import tempfile
-
     from spanner_data_validator_spark.functions.hashing import portable_hash60
 
     _pyds.register(spark)
     convs, turns = 300, 20
-    work = tempfile.mkdtemp(prefix="sdv_q_sess_digest_")
+    work = work_dir("sdv_q_sess_digest_")
     stream = (spark.readStream.format(_pyds.SOURCE_NAME)
               .option("convs", convs).option("turns", turns)
               .option("batch_rows", 2200).option("parts", 8)
@@ -1414,8 +1373,6 @@ def q_stream_cep_session_alerts(spark, sf_dir):
     every real session closes; its own session can never close, so it never
     reaches the append sink (CLAUDE.md: never filter between source and
     aggregation)."""
-    import tempfile
-
     from spanner_data_validator_spark.operators.cep import symbolize
 
     sym = symbolize([
@@ -1426,7 +1383,7 @@ def q_stream_cep_session_alerts(spark, sf_dir):
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .select(F.col("user_id"), F.col("ts").cast("timestamp").alias("ts"),
                   F.col("event_id"), sym.alias("sym")))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_cep_")
+    work = work_dir("sdv_q_stream_cep_")
     stream = _file_stream(
         spark, ev, work, files=4, per_trigger=3, watermark="10 minutes",
         sentinel={"user_id": -1, "event_id": -1, "sym": "-"})
@@ -1469,8 +1426,6 @@ def q_stream_ivm_maintain(spark, sf_dir):
     view equals the direct aggregate of the final row set — the oracle
     computes that directly; per-batch cost scales with the VIEW, not the
     corpus."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.ivm_sink import (
         ViewMaintenanceSink,
     )
@@ -1483,7 +1438,7 @@ def q_stream_ivm_maintain(spark, sf_dir):
              .unionByName(ev.where((F.col("event_id") % 5 != 0)
                                    & (F.col("event_id") % 7 == 0))
                           .withColumn("op", F.lit("D"))))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_ivm_")
+    work = work_dir("sdv_q_stream_ivm_")
     in_dir = f"{work}/in"
     wave1.coalesce(1).write.parquet(in_dir)
     import glob
@@ -1531,13 +1486,11 @@ def q_snapshot_delete_scan(spark, sf_dir):
     append consumers crossing the delete fail loudly instead of acting on
     vanished rows. Output compares per-type counts before (time travel)
     and after (current)."""
-    import tempfile
-
     from spanner_data_validator_spark.sources import snapshots as snap
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "event_type", "user_id")
-    t = tempfile.mkdtemp(prefix="sdv_q_snap_del_") + "/t"
+    t = work_dir("sdv_q_snap_del_") + "/t"
     snap.commit(ev.where(F.col("event_id") % 2 == 0), t, files=2)
     snap.commit(ev.where(F.col("event_id") % 2 != 0), t, files=2)
     pre_version = snap.current_version(t)
@@ -1570,12 +1523,10 @@ def q_snapshot_schema_evolution(spark, sf_dir):
     rename reads as drop+add — documented divergence from id-based
     mapping). One current-snapshot read aggregates across both file
     generations."""
-    import tempfile
-
     from spanner_data_validator_spark.sources import snapshots as snap
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    t = tempfile.mkdtemp(prefix="sdv_q_snap_evo_") + "/t"
+    t = work_dir("sdv_q_snap_evo_") + "/t"
     snap.commit(ev.where(F.col("event_id") % 2 == 0)
                 .select("event_id", "event_type"), t)
     snap.commit(ev.where(F.col("event_id") % 2 != 0)
@@ -1635,13 +1586,11 @@ def q_stream_benford_monitor(spark, sf_dir):
     benford_first_digit). The sentinel carries value=1.0 so the digit
     filter cannot drop it below the watermark operator (CLAUDE.md
     sentinel-filter trap)."""
-    import tempfile
-
     from spanner_data_validator_spark.operators.stats import benford_expected
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "value")
-    work = tempfile.mkdtemp(prefix="sdv_q_streambenford_")
+    work = work_dir("sdv_q_streambenford_")
     cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
     stream = (_file_stream(spark, ev, work, files=4, per_trigger=2,
                            sentinel={"value": 1.0}, watermark="10 minutes")
@@ -1694,15 +1643,13 @@ def q_state_store_inspect(spark, sf_dir):
     data: the same oracle machinery that validates rows validates the
     engine's internal state. The reader parallelizes per state-store
     partition; nothing touches the (stopped) query."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.state_inspect import (
         read_state,
     )
 
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .select("event_type", "user_id"))
-    work = tempfile.mkdtemp(prefix="sdv_q_state_inspect_")
+    work = work_dir("sdv_q_state_inspect_")
     stream = _file_stream(spark, ev, work, files=2, per_trigger=1)
     _drain_parquet(spark, stream.dropDuplicates(["event_type", "user_id"]),
                    work)
@@ -1742,8 +1689,6 @@ def q_stream_pareto_frontier(spark, sf_dir):
     chain-of-immutable-versions fencing; the oracle is the batch skyline
     of ALL input — which the monotone merge must equal exactly,
     multiplicities included."""
-    import tempfile
-
     from spanner_data_validator_spark.streaming.frontier_sink import (
         FrontierMaintenanceSink,
     )
@@ -1752,7 +1697,7 @@ def q_stream_pareto_frontier(spark, sf_dir):
           .select(F.col("p_size").cast("long").alias("x"),
                   F.round(F.col("p_retailprice") * 100).cast("long")
                   .alias("y")))
-    work = tempfile.mkdtemp(prefix="sdv_q_stream_pareto_")
+    work = work_dir("sdv_q_stream_pareto_")
     stream = _file_stream(spark, pt, work, files=3, per_trigger=1)
     sink = FrontierMaintenanceSink(spark, f"{work}/frontier", "x", "y")
     _drain(stream.writeStream.foreachBatch(sink), work)
@@ -1847,7 +1792,6 @@ def q_stream_lag_monitor(spark, sf_dir):
     watermark — the curve an operator reads BEFORE the stream-stream join
     starts dropping late rows."""
     import os
-    import tempfile
     import time as _time
 
     from spanner_data_validator_spark.streaming.lag_monitor import (
@@ -1863,7 +1807,7 @@ def q_stream_lag_monitor(spark, sf_dir):
     waved = (ev.crossJoin(F.broadcast(bounds))
              .select(F.expr("(arrival - amin) div step").alias("wave"), "ts"))
 
-    work = tempfile.mkdtemp(prefix="sdv_q_lagmon_")
+    work = work_dir("sdv_q_lagmon_")
     in_dir = f"{work}/in"
     # ONE staging write job (16 filter-passes over the corpus was 3x the
     # whole query's cost): partitionBy strips the partition column, so a

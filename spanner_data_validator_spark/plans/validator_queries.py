@@ -40,6 +40,7 @@ from spanner_data_validator_spark.plans.demo_queries import (
     events_target,
     register,
     transcripts_from_events,
+    work_dir,
 )
 
 
@@ -1029,14 +1030,12 @@ def q_jsonl_ingest_parity(spark, sf_dir):
     defaults hide. Doubles survive exactly (Spark writes shortest-roundtrip
     JSON numbers); sums stay integer for cross-engine exactness."""
     import os
-    import tempfile
-
     from spanner_data_validator_spark.sources.files import (
         read_jsonl_strict,
         split_quarantine,
     )
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sdv_q_jsonl_")
+    work = work_dir("sdv_q_jsonl_")
     jdir = os.path.join(work, "events_jsonl")
     ev.write.mode("overwrite").json(jdir)
     with open(os.path.join(jdir, "zz_bad_lines.json"), "w") as f:
@@ -1909,14 +1908,12 @@ def q_parquet_health_quarantine(spark, sf_dir):
     reports the quarantine split explicitly. One row:
     (files ok/bad, rows read, distinct docs)."""
     import shutil
-    import tempfile
-
     from spanner_data_validator_spark.sources.files import (
         read_with_quarantine,
     )
 
     src = f"{sf_dir}/documents.parquet"
-    work = tempfile.mkdtemp(prefix="sdv_q_health_")
+    work = work_dir("sdv_q_health_")
     for i in range(3):
         shutil.copy(src, f"{work}/c{i}.parquet")
     with open(src, "rb") as f:

@@ -8,11 +8,15 @@ caller passes ``shuffle_partitions`` ~ 2-3x total cores).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import site
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 STATE_STORE_CLASSES = {
     "rocksdb": "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "hdfs": "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
@@ -24,6 +28,14 @@ STATE_STORE_CLASSES = {
 # snapshots hold several copies — 500 B/key absorbs that with margin
 # (measured: 2.1 M keys ≈ 0.9 GB heap delta on this box).
 HEAP_BYTES_PER_KEY = 500
+# the share of the driver heap the heap store may fill; the rest is the
+# working memory of the plan, the sink and the Python bridge
+HEAP_STATE_FRACTION = 0.25
+
+# Keys per heap-store state partition. Stream pass plus report() on 4 cores,
+# heap store, median of 3: the fastest count was 1 partition at 67 k keys,
+# 2 at 264 k and 4 from about 600 k on (RocksDB with 4: 1.6-2.8x slower).
+KEYS_PER_STATE_PARTITION = 150_000
 
 # The directory this package sits in, where Python workers must find it
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -38,7 +50,7 @@ def _parse_mem_bytes(s: str) -> int:
 
 
 def driver_memory() -> str:
-    """The driver heap ``get_spark`` asks for and ``select_state_store``
+    """The driver heap ``get_spark`` asks for and ``state_layout``
     sizes against: ``SDV_DRIVER_MEM``, else half of physical memory — the
     rest is left to Python workers, off-heap (RocksDB) state and the OS."""
     env = os.environ.get("SDV_DRIVER_MEM")
@@ -48,36 +60,74 @@ def driver_memory() -> str:
     return f"{max(phys // 2 >> 20, 1024)}m"
 
 
-def select_state_store(
+class StateLayout(NamedTuple):
+    """How a streaming query keeps its state: the provider (a
+    :data:`STATE_STORE_CLASSES` key) and the state partition count, which
+    is the query's ``spark.sql.shuffle.partitions``."""
+
+    provider: str
+    partitions: int
+
+    def conf(self) -> dict[str, str]:
+        return {PROVIDER_CONF: STATE_STORE_CLASSES[self.provider],
+                PARTITIONS_CONF: str(self.partitions)}
+
+
+def state_layout(
     projected_keys: int | None,
+    max_partitions: int,
     *,
     heap_mem: str | None = None,
-    heap_fraction: float = 0.25,
-) -> str:
-    """Pick the streaming state-store provider for a FRESH checkpoint.
+) -> StateLayout:
+    """The state layout of a FRESH streaming checkpoint holding up to
+    ``projected_keys`` keys at once, in a session of ``max_partitions``
+    shuffle partitions.
 
-    ``SDV_STATE_STORE=rocksdb|hdfs`` still wins (explicit operator choice).
-    Otherwise: the heap-backed (HDFS) provider is ~2x faster per row
-    (BENCH.md) but OOMs when state outgrows the heap, so choose it only when
-    ``projected_keys * HEAP_BYTES_PER_KEY`` fits ``heap_fraction`` of
-    ``heap_mem`` (default :func:`driver_memory`); RocksDB (off-heap + disk,
-    scale-safe at 10^9+ in-flight keys) otherwise — including when the
-    projection is unknown.
+    * **Provider**: the heap (HDFS-backed) store when
+      ``projected_keys * HEAP_BYTES_PER_KEY`` fits ``HEAP_STATE_FRACTION``
+      of ``heap_mem`` (default :func:`driver_memory`); RocksDB (off-heap and
+      on disk, scale-safe at 10^9+ keys) otherwise. ``SDV_STATE_STORE=
+      rocksdb|hdfs`` wins over this choice.
+    * **Partitions**: each partition of each stateful operator loads and
+      commits its own store on every micro-batch, data or not, so the heap
+      store gets ``ceil(projected_keys / KEYS_PER_STATE_PARTITION)``
+      partitions, clamped to ``[1, max_partitions]``. RocksDB keeps
+      ``max_partitions``: with it, one partition was slower than four
+      even at 67 k keys.
+    * **Unknown projection** (``None``): RocksDB with ``max_partitions``.
 
-    Callers must NOT flip providers on an existing checkpoint (Spark pins the
-    provider in the checkpoint metadata); this is for new query starts.
+    Spark pins both in the checkpoint at its first start; a restart keeps
+    them whatever this returns.
     """
     forced = os.environ.get("SDV_STATE_STORE")
-    if forced:
-        if forced not in STATE_STORE_CLASSES:
-            raise ValueError(f"SDV_STATE_STORE must be one of {sorted(STATE_STORE_CLASSES)}")
-        return forced
+    if forced and forced not in STATE_STORE_CLASSES:
+        raise ValueError(f"SDV_STATE_STORE must be one of {sorted(STATE_STORE_CLASSES)}")
     if projected_keys is None:
-        return "rocksdb"
+        return StateLayout(forced or "rocksdb", max_partitions)
     heap = _parse_mem_bytes(heap_mem or driver_memory())
-    if projected_keys * HEAP_BYTES_PER_KEY <= heap * heap_fraction:
-        return "hdfs"
-    return "rocksdb"
+    fits = projected_keys * HEAP_BYTES_PER_KEY <= heap * HEAP_STATE_FRACTION
+    provider = forced or ("hdfs" if fits else "rocksdb")
+    if provider == "rocksdb":
+        return StateLayout(provider, max_partitions)
+    wanted = -(-projected_keys // KEYS_PER_STATE_PARTITION)
+    return StateLayout(provider, min(max(wanted, 1), max_partitions))
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on ``spark`` for the ``with`` body, then put back what
+    was there (unset keys are unset again)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _workers_import_package() -> bool:
@@ -127,22 +177,16 @@ def get_spark(
         # local mode hosts all executor threads in the driver JVM — size the
         # heap from the node (cluster deployments override per-executor)
         .config("spark.driver.memory", driver_memory())
-        # State store provider (SDV_STATE_STORE=rocksdb|hdfs, default rocksdb):
-        # RocksDB keeps streaming join/agg state off-heap + on disk — required
-        # when per-partition state outgrows the heap (unbounded watermarks,
-        # 10^9+ in-flight keys). The heap-backed HDFS provider is ~2x faster
-        # per row (measured) and is the right choice when state is band/
-        # watermark-bounded and sized for memory, but OOMs a default 1g heap
-        # at ~10^6 keys/partition.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            STATE_STORE_CLASSES[os.environ.get("SDV_STATE_STORE", "rocksdb")],
-        )
+        # the session's state store: RocksDB unless SDV_STATE_STORE says
+        # otherwise (state_layout with no projection). The validation stream
+        # sizes its own per query (jobs/validate_transcripts).
+        .config(PROVIDER_CONF,
+                STATE_STORE_CLASSES[state_layout(None, shuffle_partitions).provider])
         .config(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
             "true",
         )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(PARTITIONS_CONF, str(shuffle_partitions))
         # stateful-operator RDDs advertise preferred locations (the executor
         # that last held each state partition); the default 3s-per-level
         # locality wait stalls every streaming stage on a single-executor

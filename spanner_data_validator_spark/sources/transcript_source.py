@@ -81,6 +81,55 @@ def stream_transcripts(
     return df
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` on the JVM side: any scheme the
+    session can read (local, HDFS, object stores)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+# footers one projection reads at most; the files past it count by bytes
+_MAX_FOOTERS = 256
+
+
+def parquet_rows(spark: SparkSession, path: str) -> int | None:
+    """Rows that a parquet file stream over ``path`` would read now, from
+    file metadata only (a listing and the parquet footers; no Spark job).
+
+    Names starting with ``_`` or ``.`` are skipped at every level, as Spark's
+    file index skips them. Past ``_MAX_FOOTERS`` files, the rest count at
+    the footers' rows per byte. None when ``path`` cannot be listed or a
+    footer cannot be read.
+    """
+    from py4j.protocol import Py4JError
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    try:
+        fs, root = hadoop_path(spark, path)
+        prefix = len(fs.makeQualified(root).toString().rstrip("/"))
+        files, it = [], fs.listFiles(root, True)
+        while it.hasNext():
+            st = it.next()
+            rel = st.getPath().toString()[prefix:]
+            if not any(part[:1] in ("_", ".") for part in rel.split("/")):
+                files.append(st)
+        rows = footer_bytes = 0
+        for st in files[:_MAX_FOOTERS]:
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+            try:
+                rows += reader.getRecordCount()
+            finally:
+                reader.close()
+            footer_bytes += st.getLen()
+        if len(files) <= _MAX_FOOTERS:
+            return rows
+        return round(rows * sum(st.getLen() for st in files) / max(footer_bytes, 1))
+    except Py4JError:
+        return None
+
+
 def write_transcripts(
     df_or_pdf, spark: SparkSession, path: str, *, n_files: int = 4, subdir: str | None = None
 ) -> str:

@@ -165,10 +165,11 @@ class AtomicMultiParquetSink:
         self.ledger.commit(batch_id, {"rows": rows})
         return rows
 
-    def read_committed(self, spark: SparkSession,
-                       table: str) -> DataFrame | None:
+    def read_committed(self, spark: SparkSession, table: str,
+                       schema: str | None = None) -> DataFrame | None:
         """Exactly the marker-backed batches of one table — a batch whose
-        marker is missing is invisible for EVERY table."""
+        marker is missing is invisible for EVERY table. With a DDL
+        ``schema`` the read runs no schema-inference job."""
         if table not in self.tables:
             raise ValueError(f"unknown table: {table}")
         paths = [self.data_path(table, i)
@@ -176,7 +177,8 @@ class AtomicMultiParquetSink:
                  if self.committed_rows(i).get(table, 0) > 0]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
 
 
 class ExactlyOnceParquetSink(AtomicMultiParquetSink):
@@ -203,13 +205,17 @@ class TallyForeachBatch(AtomicMultiParquetSink):
     classified rows staged as ``classified/batch=<id>`` and published by ONE
     commit marker, in ONE Spark job.
 
-    The marker records the batch's row count and its per-status counts
-    (``{"rows": {"classified": n}, "status": {"MATCH": n, ...}}``), observed
-    on the write job itself. The per-window report and the mismatch rows are
-    derived from the committed classified rows on read. Because the
-    append-mode outer join emits each (conv_id, turn_idx) exactly once across
-    the query's lifetime, the committed rows are the whole classified
-    output, so the report equals the batch report on the same input.
+    The marker records the batch's row count, its per-status counts and
+    the classified schema as DDL (``{"rows": {"classified": n}, "status":
+    {"MATCH": n, ...}, "schema": "conv_id STRING, ..."}``), the counts
+    observed on the write job itself. The committed rows are read with that
+    schema, so reading them runs no schema-inference job; markers without
+    one (older layouts) are read by inference. The per-window report and
+    the mismatch rows are derived from the committed classified rows on
+    read. Because the append-mode outer join emits each (conv_id, turn_idx)
+    exactly once across the query's lifetime, the committed rows are the
+    whole classified output, so the report equals the batch report on the
+    same input.
 
     Directories written with the older three-table layout (``tallies`` and
     ``mismatches`` staged next to ``classified`` under the same marker) read
@@ -219,7 +225,11 @@ class TallyForeachBatch(AtomicMultiParquetSink):
     def __init__(self, out_dir: str, *, window_duration: str = "1 hour"):
         super().__init__(out_dir, ["classified"])
         self.window_duration = window_duration
-        self.state_store: str | None = None  # set by run_streaming_validation
+        # the state layout of the query feeding the sink, as
+        # run_streaming_validation ran it
+        self.state_store: str | None = None
+        self.state_partitions: int | None = None
+        self.projected_keys: int | None = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
@@ -229,10 +239,14 @@ class TallyForeachBatch(AtomicMultiParquetSink):
             **{s: F.count_if(F.col("status") == s) for s in STATUSES})
         rows = status.pop("rows")
         self.ledger.commit(batch_id, {"rows": {"classified": rows},
-                                      "status": status})
+                                      "status": status,
+                                      "schema": batch_df.schema.toDDL()})
 
     def read_rows(self, spark: SparkSession) -> DataFrame | None:
-        return self.read_committed(spark, "classified")
+        schemas = {self.ledger.meta(i).get("schema")
+                   for i in self.ledger.committed_ids()}
+        schema = schemas.pop() if len(schemas) == 1 else None
+        return self.read_committed(spark, "classified", schema)
 
     def read_mismatches(self, spark: SparkSession) -> DataFrame | None:
         rows = self.read_rows(spark)

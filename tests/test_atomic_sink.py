@@ -68,7 +68,8 @@ def test_parquet_replay_of_committed_batch_is_noop(spark, tmp_path):
     assert sink.ledger.meta(1) == {
         "batch_id": 1, "rows": {"classified": 0},
         "status": {"MATCH": 0, "MISMATCH": 0, "SOURCE_ONLY": 0,
-                   "TARGET_ONLY": 0}}
+                   "TARGET_ONLY": 0},
+        "schema": _batch(spark).schema.toDDL()}
     assert sink.read_rows(spark).count() == 3
 
 
@@ -147,6 +148,56 @@ def test_three_table_layout_reads_the_same(spark, tmp_path):
     # both MATCH rows fall in the 10:00 window, one from each batch
     assert rows(new.report(spark).select("status", "n")) == [
         ("MATCH", 2), ("MISMATCH", 1), ("SOURCE_ONLY", 1), ("TARGET_ONLY", 1)]
+
+
+def _jobs(spark, group, action) -> int:
+    """Spark jobs that ``action()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_report_reads_with_the_marker_schema(spark, tmp_path):
+    """The markers carry the classified schema, so building the report runs
+    no schema-inference job, and the status totals over ``report()``
+    collected, as the bench reads them, run 3 jobs (4 when the read infers
+    the schema first)."""
+    sink = TallyForeachBatch(str(tmp_path / "out"))
+    sink(_batch(spark), 0)
+    sink(_second_batch(spark), 1)
+    assert sink.ledger.meta(0)["schema"] == _batch(spark).schema.toDDL()
+    assert _jobs(spark, "report-frame", lambda: sink.report(spark)) == 0
+    assert _jobs(spark, "report-totals", lambda: (
+        sink.report(spark).groupBy("status").agg(F.sum("n")).collect())) == 3
+
+
+def test_markers_without_schema_read_by_inference(spark, tmp_path):
+    """Markers written before the schema was recorded (and a mix of old and
+    new markers) read the same rows, by schema inference."""
+    import json
+
+    sink = TallyForeachBatch(str(tmp_path / "out"))
+    sink(_batch(spark), 0)
+    sink(_second_batch(spark), 1)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows(sink.read_rows(spark)), rows(sink.report(spark))
+    for old in (0, 1):  # first a mix, then only older markers
+        meta = sink.ledger.meta(old)
+        del meta["schema"]
+        with open(sink.ledger._marker(old), "w") as f:
+            json.dump(meta, f)
+        assert (rows(sink.read_rows(spark)), rows(sink.report(spark))) == want
+        # building the frame runs the inference job
+        assert _jobs(spark, f"infer-{old}", lambda: sink.read_rows(spark)) == 1
 
 
 @pytest.fixture()

@@ -15,6 +15,8 @@ Laws (also documented in README "Checkpoint upgrade compatibility"):
   C. changing spark.sql.shuffle.partitions — ACCEPTED and IGNORED for
      state: the operator keeps its checkpoint-pinned partition count
   D. changing the watermark delay and the trigger — ACCEPTED
+  E. restarting where the state layout rule picks another provider and
+     partition count — ACCEPTED, and the checkpoint's own layout is kept
 """
 from __future__ import annotations
 
@@ -30,9 +32,17 @@ from spanner_data_validator_spark.datagen.transcripts import (
 from spanner_data_validator_spark.jobs.validate_transcripts import (
     append_sentinel,
     classify_transcripts,
+    run_streaming_validation,
     sentinel_filter,
 )
+from spanner_data_validator_spark.session import (
+    PARTITIONS_CONF,
+    StateLayout,
+    scoped_conf,
+    state_layout,
+)
 from spanner_data_validator_spark.sources.transcript_source import (
+    parquet_rows,
     stream_transcripts,
     write_transcripts,
 )
@@ -178,3 +188,49 @@ def test_d_watermark_and_trigger_change_accepted(spark, upgrade_env):
                  _classified(spark, e["src"], e["tgt"],
                              watermark="5 minutes"))
     assert _totals(spark, e["sink1"], sink2) == e["pair"].expected
+
+
+def test_e_layout_rule_does_not_resize_a_started_checkpoint(spark, tmp_path):
+    """A checkpoint started under RocksDB with 8 partitions and no sentinel
+    is restarted through ``run_streaming_validation``, whose layout rule
+    picks the heap store with one partition for this corpus. Spark restores
+    the provider and the partition count from the offset log: the held
+    state is recovered, and the checkpoint keeps RocksDB and 8 partitions."""
+    from spanner_data_validator_spark.streaming.state_inspect import (
+        read_state_metadata)
+
+    pair = gen_transcript_pair(n_convs=40, seed=13, hot_convs=0, dup_rows=0,
+                               late_fraction=0.0, mismatch_rate=0.05,
+                               source_only_rate=0.05, target_only_rate=0.05)
+    src_dir, tgt_dir = str(tmp_path / "src"), str(tmp_path / "tgt")
+    ckpt = str(tmp_path / "ckpt")
+    write_transcripts(pair.source, spark, src_dir, n_files=2)
+    write_transcripts(pair.target, spark, tgt_dir, n_files=2)
+    with scoped_conf(spark, StateLayout("rocksdb", 8).conf()):
+        sink1 = _run(spark, str(tmp_path / "out1"), ckpt,
+                     classify_transcripts(stream_transcripts(spark, src_dir),
+                                          stream_transcripts(spark, tgt_dir)))
+    run1 = _totals(spark, sink1)
+    assert run1.get("SOURCE_ONLY", 0) < pair.expected["SOURCE_ONLY"]
+    append_sentinel(spark, src_dir, tgt_dir)
+    keys = parquet_rows(spark, src_dir) + parquet_rows(spark, tgt_dir)
+    sessions = int(spark.conf.get(PARTITIONS_CONF))
+    assert state_layout(keys, sessions) == StateLayout("hdfs", 1)
+
+    sink2 = run_streaming_validation(spark, src_dir, tgt_dir,
+                                     str(tmp_path / "out2"), ckpt)
+    out2 = {r["status"]: r["n"] for r in sink2.read_rows(spark)
+            .groupBy("status").agg(F.count("*").alias("n")).collect()}
+    held_so = pair.expected["SOURCE_ONLY"] - run1.get("SOURCE_ONLY", 0)
+    assert held_so > 0
+    assert out2["SOURCE_ONLY"] == held_so
+    assert {s: run1.get(s, 0) + out2.get(s, 0) for s in pair.expected} \
+        == pair.expected
+    assert (sink2.state_store, sink2.state_partitions) == ("rocksdb", 8)
+    meta = read_state_metadata(spark, ckpt)
+    assert {r["numPartitions"] for r in meta.collect()} == {8}
+    # every state version the restart wrote is a RocksDB changelog; the
+    # heap store would have written .delta files
+    files = [f.name for f in (tmp_path / "ckpt" / "state").rglob("*")]
+    assert any(f.endswith(".changelog") for f in files)
+    assert not any(f.endswith(".delta") for f in files)

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import ast
 import json
+import os
 import pathlib
+import subprocess
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -38,6 +40,21 @@ def test_registry_consistency():
     driver_rows = json.loads((_REPO / "CORRECTNESS_r05.json").read_text())
     assert len(driver_rows) == 50
     assert sorted(set(driver_rows) - set(qs)) == []
+
+
+def test_oracle_run_leaves_no_work_dirs(tmp_path):
+    """An oracle ``--only`` run over two queries that stage files, one of
+    them returning a lazy read of its work dir, matches both oracles and
+    leaves no registry work dir in the temp dir."""
+    names = ["stream_hll_window_users", "jsonl_ingest_parity"]
+    res = subprocess.run(
+        [sys.executable, "tools/check_oracle.py", "--only", ",".join(names)],
+        cwd=_REPO, env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stdout[-2000:] + res.stderr[-2000:]
+    assert [line.split()[1] for line in res.stdout.splitlines()
+            if line.startswith("ok ")] == [f"{n}:" for n in names]
+    assert sorted(p.name for p in tmp_path.rglob("sdv_*")) == []
 
 
 def _repo_imports(nodes) -> dict[str, tuple[str, str]]:

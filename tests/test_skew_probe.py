@@ -10,10 +10,14 @@ from pyspark.sql import functions as F
 from spanner_data_validator_spark.datagen.transcripts import gen_transcript_pair
 from spanner_data_validator_spark.jobs.validate_transcripts import (
     append_sentinel,
-    run_streaming_validation,
+    classify_transcripts,
 )
+from spanner_data_validator_spark.session import StateLayout, scoped_conf
 from spanner_data_validator_spark.sources.transcript_source import (
-    write_transcripts)
+    stream_transcripts,
+    write_transcripts,
+)
+from spanner_data_validator_spark.streaming.sink import TallyForeachBatch
 from spanner_data_validator_spark.streaming.state_inspect import read_state
 
 
@@ -58,15 +62,20 @@ def test_join_state_store_balanced_under_hot_conv(spark, tmp_path):
     write_transcripts(pair.source, spark, src_dir, n_files=4)
     write_transcripts(pair.target, spark, tgt_dir, n_files=4)
     append_sentinel(spark, src_dir, tgt_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_streaming_validation(
-            spark, src_dir, tgt_dir, str(tmp_path / "out"),
-            str(tmp_path / "ckpt"), watermark="10 minutes", band="2 hours",
-            max_files_per_trigger=2)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # a pinned layout (RocksDB, 8 partitions): the state layout rule gives
+    # a corpus this small one partition, where no spread can show
+    classified = classify_transcripts(
+        *(stream_transcripts(spark, d, watermark="10 minutes",
+                             max_files_per_trigger=2)
+          for d in (src_dir, tgt_dir)),
+        band="2 hours")
+    with scoped_conf(spark, StateLayout("rocksdb", 8).conf()):
+        q = (classified.writeStream.outputMode("append")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .foreachBatch(TallyForeachBatch(str(tmp_path / "out")))
+             .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    assert not q.isActive
     st = read_state(spark, str(tmp_path / "ckpt"), operator_id=0,
                     join_side="left", batch_id=0)
     rows = st.groupBy("partition_id").agg(F.count("*").alias("n")).collect()

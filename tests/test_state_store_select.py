@@ -1,18 +1,29 @@
-"""State-store auto-selection (VERDICT r3 item 8): heap store when projected
-state fits a heap fraction, RocksDB otherwise; explicit env always wins."""
+"""The state layout rule (``session.state_layout``): heap store when the
+projected state fits a heap fraction, RocksDB otherwise, and an explicit
+env provider always wins; the heap store's partition count grows with the
+projected keys up to the session's shuffle partitions."""
 
 import pytest
 
 from spanner_data_validator_spark.session import (
     HEAP_BYTES_PER_KEY,
-    select_state_store,
+    KEYS_PER_STATE_PARTITION,
+    StateLayout,
     _parse_mem_bytes,
+    state_layout,
 )
+
+
+def select_state_store(projected_keys, **kw):
+    """The provider ``state_layout`` picks in an 8-partition session."""
+    return state_layout(projected_keys, 8, **kw).provider
 
 
 def test_unknown_projection_is_rocksdb(monkeypatch):
     monkeypatch.delenv("SDV_STATE_STORE", raising=False)
     assert select_state_store(None) == "rocksdb"
+    # ... with the session's partition count, as without the rule
+    assert state_layout(None, 8) == StateLayout("rocksdb", 8)
 
 
 def test_small_state_picks_heap(monkeypatch):
@@ -44,6 +55,33 @@ def test_env_override_validated(monkeypatch):
     monkeypatch.setenv("SDV_STATE_STORE", "bogus")
     with pytest.raises(ValueError):
         select_state_store(10)
+    with pytest.raises(ValueError):
+        select_state_store(None)
+
+
+def test_partition_clamp_boundary(monkeypatch):
+    """Heap store: one partition per KEYS_PER_STATE_PARTITION keys, at
+    least 1, at most the session's shuffle partitions; RocksDB keeps the
+    session's count."""
+    monkeypatch.delenv("SDV_STATE_STORE", raising=False)
+    k = KEYS_PER_STATE_PARTITION
+
+    def parts(keys, max_partitions=4):
+        return state_layout(keys, max_partitions, heap_mem="48g").partitions
+
+    assert parts(0) == 1
+    assert parts(k) == 1
+    assert parts(k + 1) == 2
+    assert parts(2 * k) == 2
+    assert parts(2 * k + 1) == 3
+    assert parts(4 * k) == 4
+    assert parts(4 * k + 1) == 4      # clamped to the session's 4
+    assert parts(k + 1, max_partitions=1) == 1
+    assert state_layout(10**12, 4, heap_mem="48g") == StateLayout("rocksdb", 4)
+    monkeypatch.setenv("SDV_STATE_STORE", "rocksdb")
+    assert state_layout(10, 4, heap_mem="48g") == StateLayout("rocksdb", 4)
+    monkeypatch.setenv("SDV_STATE_STORE", "hdfs")
+    assert state_layout(k + 1, 4, heap_mem="48g") == StateLayout("hdfs", 2)
 
 
 def test_parse_mem_bytes():

@@ -22,12 +22,20 @@ from pyspark.sql import functions as F
 from spanner_data_validator_spark.datagen.transcripts import gen_transcript_pair
 from spanner_data_validator_spark.jobs.validate_transcripts import (
     append_sentinel,
+    classify_transcripts,
     run_batch_validation,
     run_streaming_validation,
     sentinel_filter,
 )
-from spanner_data_validator_spark.sources.transcript_source import write_transcripts
-from spanner_data_validator_spark.streaming.sink import ExactlyOnceParquetSink
+from spanner_data_validator_spark.session import StateLayout, scoped_conf
+from spanner_data_validator_spark.sources.transcript_source import (
+    stream_transcripts,
+    write_transcripts,
+)
+from spanner_data_validator_spark.streaming.sink import (
+    ExactlyOnceParquetSink,
+    TallyForeachBatch,
+)
 from spanner_data_validator_spark.streaming.validate_stream import (
     session_mismatch_windows,
     windowed_status_counts,
@@ -468,10 +476,20 @@ def test_skewed_conversation_state_distribution(spark, tmp_path):
     src_dir, tgt_dir = str(tmp_path / "src"), str(tmp_path / "tgt")
     write_transcripts(pair.source, spark, src_dir, n_files=3)
     write_transcripts(pair.target, spark, tgt_dir, n_files=3)
-    # no sentinel: we want state resident, not flushed
-    run_streaming_validation(
-        spark, src_dir, tgt_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        watermark="3650 days", band="2 hours", engine="join")
+    # no sentinel: we want state resident, not flushed. The query runs on a
+    # pinned layout: RocksDB, 8 partitions. The state layout rule gives a
+    # corpus this small one partition, where no spread can show.
+    classified = classify_transcripts(
+        stream_transcripts(spark, src_dir, watermark="3650 days"),
+        stream_transcripts(spark, tgt_dir, watermark="3650 days"),
+        band="2 hours")
+    with scoped_conf(spark, StateLayout("rocksdb", 8).conf()):
+        q = (classified.writeStream.outputMode("append")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .foreachBatch(TallyForeachBatch(str(tmp_path / "out")))
+             .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    assert not q.isActive
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for side, expect_rows in (("left", len(pair.source)),

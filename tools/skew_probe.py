@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -139,6 +140,10 @@ def main() -> None:
         gen_transcript_pair)
     from spanner_data_validator_spark.session import get_spark
 
+    # the probe measures state spread over --partitions partitions: under
+    # RocksDB the flagship keeps the session's count, where the state
+    # layout rule would give a corpus this small a single heap partition
+    os.environ.setdefault("SDV_STATE_STORE", "rocksdb")
     spark = get_spark(app_name="sdv-skew-probe")
     spark.conf.set("spark.sql.shuffle.partitions", str(args.partitions))
 
