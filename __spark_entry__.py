@@ -25,11 +25,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every registered query; one that stages files returns its result
-    materialised, with its work dirs already removed."""
-    from spanner_data_validator_spark.plans.demo_queries import QUERIES, materialised
+    from spanner_data_validator_spark.plans.demo_queries import QUERIES
 
-    return {name: materialised(q) for name, q in QUERIES.items()}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -122,6 +122,7 @@ def run_default() -> None:
                       shuffle_partitions=CPUS)
 
     import __spark_entry__ as entry
+    from spanner_data_validator_spark.plans.demo_queries import remove_work_root
 
     queries = entry.queries()
 
@@ -141,6 +142,8 @@ def run_default() -> None:
                 _noop_write(fn(spark, warm_dir))
             except Exception:  # noqa: BLE001 — a warm-up miss only costs heat
                 warm_failures.append(name)
+            finally:
+                remove_work_root()
         warmup_sec = round(time.time() - t0, 3)
         if warm_failures:
             print(f"warmup failures (queries still timed cold): {warm_failures}",
@@ -152,6 +155,7 @@ def run_default() -> None:
         t0 = time.time()
         _noop_write(fn(spark, SF_DIR))
         dt = time.time() - t0
+        remove_work_root()  # untimed: the result is written, drop staged files
         times[name] = round(dt, 3)
         total += dt
 

@@ -55,6 +55,7 @@ from spanner_data_validator_spark.session import (
     STATE_STORE_CLASSES,
     StateLayout,
     scoped_conf,
+    state_heap,
     state_layout,
 )
 from spanner_data_validator_spark.sources.transcript_source import (
@@ -180,8 +181,8 @@ def run_streaming_validation(
     projection is unknown: RocksDB with the session's partition count. The
     heap store gets one partition per ``KEYS_PER_STATE_PARTITION`` (150 k)
     keys, up to ``spark.sql.shuffle.partitions``, while it fits a quarter
-    of the driver heap. Measured on 4 cores, stream pass plus ``report()``,
-    median of 3 (seconds):
+    of the heap the session has (:func:`session.state_heap`). Measured on
+    4 cores, stream pass plus ``report()``, median of 3 (seconds):
 
     ==========  ============  ======  ======  ======
     turns       RocksDB / 4   heap 4  heap 2  heap 1
@@ -193,7 +194,9 @@ def run_streaming_validation(
     ==========  ============  ======  ======  ======
 
     The best partition count flips from 1 to 2 near 150 k keys and to 4
-    (all cores here) near 600 k. A checkpoint keeps the layout it was sized
+    (all cores here) near 600 k. These flip sizes hold for 4 cores; on more
+    (``PROBED_CORES``) the heap store keeps the session's partition count.
+    A checkpoint keeps the layout it was sized
     with at its first start: Spark restores both from the offset log, so a
     restart runs with the checkpoint's layout, whatever the rule says now.
     The layout the query runs with is on the returned sink
@@ -212,7 +215,9 @@ def run_streaming_validation(
     if pinned is None and available_now:
         rows = [parquet_rows(spark, p) for p in (src_path, tgt_path)]
         projected = None if None in rows else sum(rows)
-    layout = pinned or state_layout(projected, int(spark.conf.get(PARTITIONS_CONF)))
+    layout = pinned or state_layout(
+        projected, int(spark.conf.get(PARTITIONS_CONF)),
+        heap_mem=state_heap(spark), cores=spark.sparkContext.defaultParallelism)
 
     src = stream_transcripts(
         spark, src_path, watermark=watermark, max_files_per_trigger=max_files_per_trigger

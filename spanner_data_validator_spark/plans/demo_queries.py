@@ -31,7 +31,6 @@ importing it fills the registry.
 from __future__ import annotations
 
 import atexit
-import functools
 import shutil
 import tempfile
 
@@ -75,23 +74,6 @@ def remove_work_root() -> None:
     if _work_root is not None:
         shutil.rmtree(_work_root, ignore_errors=True)
         _work_root = None
-
-
-def materialised(query):
-    """``query`` that leaves no work dir behind: a result that may still
-    read its staged files (a lazy read of ``<work>/out``) is materialised
-    first, with an eager local checkpoint, then the run root is removed."""
-    @functools.wraps(query)
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            df = query(spark, sf_dir)
-            if _work_root is not None:  # the query staged files
-                df = df.localCheckpoint(eager=True)
-            return df
-        finally:
-            remove_work_root()
-
-    return run
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,6 @@ batch-equivalent window aggregations. Registered into
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -26,6 +24,7 @@ from spanner_data_validator_spark.plans.demo_queries import (
     transcripts_from_events,
     work_dir,
 )
+from spanner_data_validator_spark.session import PARTITIONS_CONF, scoped_conf
 from spanner_data_validator_spark.sources import pyds as _pyds
 
 
@@ -88,20 +87,13 @@ def q_session_windows(spark, sf_dir):
 _STATEFUL_USER_MOD = 10
 
 
-@contextlib.contextmanager
-def _shuffle_partitions(spark, n: int):
-    """Scope the state/shuffle partition count for small streaming demos:
-    every micro-batch commits one state store PER PARTITION per stateful
-    operator, so a 20k-row demo at 32 partitions pays 32x(ops) store
-    commits per trigger for empty partitions (measured: the snapshot
-    validate demo dropped 51.5 s -> much less at 8). The validation stream
-    sizes its own (``session.state_layout``)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+# the state/shuffle partition count small streaming demos run under: every
+# micro-batch commits one state store PER PARTITION per stateful operator, so
+# a 20k-row demo at 32 partitions pays 32x(ops) store commits per trigger for
+# empty partitions (measured: the snapshot validate demo dropped 51.5 s ->
+# much less at 8). The validation stream sizes its own
+# (``session.state_layout``).
+_DEMO_PARTITIONS = {PARTITIONS_CONF: "8"}
 
 
 # a finite availableNow run over a few staged files ends in seconds; past this
@@ -321,7 +313,7 @@ def q_stream_snapshot_validate(spark, sf_dir):
                 .withWatermark("ts", "10 minutes"))
 
     out = classify_transcripts(tail(src_t), tail(tgt_t))
-    with _shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _DEMO_PARTITIONS):
         q = (out.select("status")
              .writeStream.format("parquet").option("path", f"{work}/out")
              .option("checkpointLocation", f"{work}/ckpt")
@@ -677,7 +669,7 @@ def q_stream_hll_window_users(spark, sf_dir):
                     .alias("hll_estimate")))
     # the sentinel's own far-future window never closes, so the sink holds
     # exactly the real windows
-    with _shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _DEMO_PARTITIONS):
         return _drain_parquet(spark, est, work)
 
 
@@ -1459,7 +1451,7 @@ def q_stream_ivm_maintain(spark, sf_dir):
                  .select("event_type", "m", "op"))
     sink = ViewMaintenanceSink(spark, f"{work}/view", ["event_type"], "m",
                                "event_type string")
-    with _shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _DEMO_PARTITIONS):
         _drain(changelog.writeStream.foreachBatch(sink), work)
     return sink.latest()
 
@@ -1603,7 +1595,7 @@ def q_stream_benford_monitor(spark, sf_dir):
               .agg(F.count(F.lit(1)).alias("observed")))
     out = counts.select(F.unix_millis(F.col("w.start")).alias("ws_ms"),
                         "digit", "observed")
-    with _shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _DEMO_PARTITIONS):
         sink = _drain_parquet(spark, out, work)
 
     exp = benford_expected()

@@ -35,7 +35,10 @@ HEAP_STATE_FRACTION = 0.25
 # Keys per heap-store state partition. Stream pass plus report() on 4 cores,
 # heap store, median of 3: the fastest count was 1 partition at 67 k keys,
 # 2 at 264 k and 4 from about 600 k on (RocksDB with 4: 1.6-2.8x slower).
+# These flip sizes hold for PROBED_CORES cores; on more, how the best count
+# moves was not measured, so there the heap store keeps the session's count.
 KEYS_PER_STATE_PARTITION = 150_000
+PROBED_CORES = 4
 
 # The directory this package sits in, where Python workers must find it
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -51,13 +54,27 @@ def _parse_mem_bytes(s: str) -> int:
 
 def driver_memory() -> str:
     """The driver heap ``get_spark`` asks for and ``state_layout``
-    sizes against: ``SDV_DRIVER_MEM``, else half of physical memory — the
-    rest is left to Python workers, off-heap (RocksDB) state and the OS."""
+    sizes against by default: ``SDV_DRIVER_MEM``, else half of physical
+    memory — the rest is left to Python workers, off-heap (RocksDB) state
+    and the OS."""
     env = os.environ.get("SDV_DRIVER_MEM")
     if env:
         return env
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(phys // 2 >> 20, 1024)}m"
+
+
+def state_heap(spark: SparkSession) -> str:
+    """The heap a heap state store would live in, read from the running
+    session (``spark.driver.memory`` can differ from it: spark-submit's
+    ``--driver-memory``, a session built elsewhere). In local mode the
+    executors are driver threads, so it is the driver JVM's max heap; on a
+    cluster it is one executor's ``spark.executor.memory`` (Spark's default
+    1g), though the state spreads over all of them."""
+    sc = spark.sparkContext
+    if sc.master == "local" or sc.master.startswith("local["):
+        return str(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
+    return sc.getConf().get("spark.executor.memory", "1g")
 
 
 class StateLayout(NamedTuple):
@@ -78,20 +95,24 @@ def state_layout(
     max_partitions: int,
     *,
     heap_mem: str | None = None,
+    cores: int | None = None,
 ) -> StateLayout:
     """The state layout of a FRESH streaming checkpoint holding up to
     ``projected_keys`` keys at once, in a session of ``max_partitions``
-    shuffle partitions.
+    shuffle partitions and ``cores`` cores.
 
     * **Provider**: the heap (HDFS-backed) store when
       ``projected_keys * HEAP_BYTES_PER_KEY`` fits ``HEAP_STATE_FRACTION``
-      of ``heap_mem`` (default :func:`driver_memory`); RocksDB (off-heap and
-      on disk, scale-safe at 10^9+ keys) otherwise. ``SDV_STATE_STORE=
-      rocksdb|hdfs`` wins over this choice.
+      of ``heap_mem`` (the streaming job passes :func:`state_heap`; default
+      :func:`driver_memory`); RocksDB (off-heap and on disk, scale-safe at
+      10^9+ keys) otherwise. ``SDV_STATE_STORE=rocksdb|hdfs`` wins over
+      this choice.
     * **Partitions**: each partition of each stateful operator loads and
       commits its own store on every micro-batch, data or not, so the heap
       store gets ``ceil(projected_keys / KEYS_PER_STATE_PARTITION)``
-      partitions, clamped to ``[1, max_partitions]``. RocksDB keeps
+      partitions, clamped to ``[1, max_partitions]``, on up to
+      ``PROBED_CORES`` cores (the measured range; ``None`` counts as in it).
+      On more cores it keeps ``max_partitions``. RocksDB keeps
       ``max_partitions``: with it, one partition was slower than four
       even at 67 k keys.
     * **Unknown projection** (``None``): RocksDB with ``max_partitions``.
@@ -107,7 +128,7 @@ def state_layout(
     heap = _parse_mem_bytes(heap_mem or driver_memory())
     fits = projected_keys * HEAP_BYTES_PER_KEY <= heap * HEAP_STATE_FRACTION
     provider = forced or ("hdfs" if fits else "rocksdb")
-    if provider == "rocksdb":
+    if provider == "rocksdb" or (cores or 0) > PROBED_CORES:
         return StateLayout(provider, max_partitions)
     wanted = -(-projected_keys // KEYS_PER_STATE_PARTITION)
     return StateLayout(provider, min(max(wanted, 1), max_partitions))

@@ -88,7 +88,11 @@ def hadoop_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-# footers one projection reads at most; the files past it count by bytes
+# Footers one projection reads at most; the files past it count at the read
+# footers' rows per byte. Each footer read and each listed file is a few py4j
+# round trips: on 4 cores, 1,000 transcript files of 45 rows each took 22.1 s
+# with every footer read and 9.5 s with this cap (about 17 ms per footer, 5 ms
+# per listed file), and the capped estimate was 44,982 rows for 44,991.
 _MAX_FOOTERS = 256
 
 
@@ -114,10 +118,12 @@ def parquet_rows(spark: SparkSession, path: str) -> int | None:
             rel = st.getPath().toString()[prefix:]
             if not any(part[:1] in ("_", ".") for part in rel.split("/")):
                 files.append(st)
+        # each JVM name lookup is a py4j round trip: resolve them once
+        open_file = jvm.org.apache.parquet.hadoop.ParquetFileReader.open
+        input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus
         rows = footer_bytes = 0
         for st in files[:_MAX_FOOTERS]:
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+            reader = open_file(input_file(st, conf))
             try:
                 rows += reader.getRecordCount()
             finally:

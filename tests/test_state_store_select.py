@@ -3,13 +3,17 @@ projected state fits a heap fraction, RocksDB otherwise, and an explicit
 env provider always wins; the heap store's partition count grows with the
 projected keys up to the session's shuffle partitions."""
 
+from types import SimpleNamespace
+
 import pytest
 
 from spanner_data_validator_spark.session import (
     HEAP_BYTES_PER_KEY,
     KEYS_PER_STATE_PARTITION,
+    PROBED_CORES,
     StateLayout,
     _parse_mem_bytes,
+    state_heap,
     state_layout,
 )
 
@@ -82,6 +86,33 @@ def test_partition_clamp_boundary(monkeypatch):
     assert state_layout(10, 4, heap_mem="48g") == StateLayout("rocksdb", 4)
     monkeypatch.setenv("SDV_STATE_STORE", "hdfs")
     assert state_layout(k + 1, 4, heap_mem="48g") == StateLayout("hdfs", 2)
+
+
+def test_partition_count_past_the_probed_cores(monkeypatch):
+    """The key-based count holds up to the cores it was measured on; a
+    session with more cores keeps its own count for the heap store."""
+    monkeypatch.delenv("SDV_STATE_STORE", raising=False)
+    k = KEYS_PER_STATE_PARTITION
+    assert state_layout(k + 1, 16, heap_mem="48g", cores=PROBED_CORES) == \
+        StateLayout("hdfs", 2)
+    assert state_layout(k + 1, 16, heap_mem="48g", cores=PROBED_CORES + 1) == \
+        StateLayout("hdfs", 16)
+    assert state_layout(10**12, 16, heap_mem="48g", cores=PROBED_CORES + 1) == \
+        StateLayout("rocksdb", 16)
+
+
+def test_state_heap_is_read_from_the_session(spark):
+    """Local mode: the driver JVM's own max heap. A cluster: one executor's
+    memory, Spark's 1g when unset."""
+    runtime = spark._jvm.java.lang.Runtime.getRuntime()
+    assert int(state_heap(spark)) == runtime.maxMemory()
+
+    def cluster(conf):
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            master="yarn", getConf=lambda: conf))
+
+    assert state_heap(cluster({"spark.executor.memory": "3g"})) == "3g"
+    assert state_heap(cluster({})) == "1g"
 
 
 def test_parse_mem_bytes():

@@ -11,14 +11,17 @@ import time
 import pytest
 
 from spanner_data_validator_spark.datagen.transcripts import gen_transcript_pair
+from spanner_data_validator_spark.jobs import validate_transcripts
 from spanner_data_validator_spark.jobs.validate_transcripts import (
     append_sentinel,
     run_streaming_validation,
 )
 from spanner_data_validator_spark.session import (
+    HEAP_BYTES_PER_KEY,
     PARTITIONS_CONF,
     PROVIDER_CONF,
     STATE_STORE_CLASSES,
+    state_layout,
 )
 from spanner_data_validator_spark.sources import transcript_source
 from spanner_data_validator_spark.sources.transcript_source import (
@@ -93,6 +96,29 @@ def test_layout_sized_from_input_and_caller_conf_kept(spark, tmp_path):
     assert conf[PROVIDER_CONF] == STATE_STORE_CLASSES["hdfs"]
     assert conf[PARTITIONS_CONF] == "1"
     assert {r["numPartitions"] for r in read_state_metadata(spark, ckpt).collect()} == {1}
+
+
+def test_heap_store_sized_against_the_session_heap(spark, tmp_path,
+                                                   monkeypatch):
+    """The heap the rule sizes against is the running JVM's, not what
+    ``driver_memory()`` says: with ``SDV_DRIVER_MEM`` far above the real
+    heap, a projection past a quarter of the real heap gets RocksDB."""
+    monkeypatch.delenv("SDV_STATE_STORE", raising=False)
+    monkeypatch.setenv("SDV_DRIVER_MEM", "100000g")
+    heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    side = heap // 4 // HEAP_BYTES_PER_KEY // 2 + 1
+    assert state_layout(2 * side, 8).provider == "hdfs"  # by driver_memory()
+    monkeypatch.setattr(validate_transcripts, "parquet_rows",
+                        lambda spark, path: side)
+    pair, src_dir, tgt_dir = _stage(spark, tmp_path)
+    sink = run_streaming_validation(spark, src_dir, tgt_dir,
+                                    str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert sink.projected_keys == 2 * side
+    assert (sink.state_store, sink.state_partitions) == \
+        ("rocksdb", int(spark.conf.get(PARTITIONS_CONF)))
+    totals = {r["status"]: r["count"]
+              for r in sink.read_rows(spark).groupBy("status").count().collect()}
+    assert totals == {k: v for k, v in pair.expected.items() if v}
 
 
 def test_continuous_run_keeps_caller_conf(spark, tmp_path, monkeypatch):

@@ -52,6 +52,7 @@ def main():
     args = ap.parse_args()
 
     import __spark_entry__ as e
+    from spanner_data_validator_spark.plans.demo_queries import remove_work_root
     from spanner_data_validator_spark.session import get_spark
 
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
@@ -77,6 +78,8 @@ def main():
             print(f"FAIL  {name}: spark error: {ex}")
             failures += 1
             continue
+        finally:
+            remove_work_root()  # the rows are collected; drop staged files
         if name not in oracles:
             rec.update(rows_match=True, schema_match=True, hash_match=None,
                        err="no oracle — rows-only check")

@@ -51,6 +51,7 @@ def main() -> int:
     sys.path.insert(0, ".")
     import __spark_entry__ as entry
     from spanner_data_validator_spark import get_spark
+    from spanner_data_validator_spark.plans.demo_queries import remove_work_root
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     qs = entry.queries()
@@ -67,6 +68,8 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — report, keep auditing
             failed.append((name, str(exc).splitlines()[0][:100]))
             continue
+        finally:
+            remove_work_root()  # the plan is read; drop staged files
         flag = " <-- scans" if c["scans"] > args.max_scans else ""
         print(f"{name:32s} scans={c['scans']:2d} shuffles={c['shuffles']:2d}"
               f" bcast={c['bcast']:2d} single={c['single']:2d}{flag}")
