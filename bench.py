@@ -15,12 +15,11 @@ sized to the scale factor, then print ONE JSON line::
 Scaling mode (north_rule evidence — two parallelism levels on the SAME
 input, no real cluster in the sandbox)::
 
-    python bench.py --scaling [N_LO N_HI]      # default 8 32
+    python bench.py --scaling [N_LO N_HI]      # default 4 16
 
 spawns one subprocess per parallelism level (a JVM's master conf is fixed at
 startup), each timing the identical streaming validation job, and prints the
-two throughputs + scaling efficiency (T_hi/T_lo)/(hi/lo); results are also
-appended by tools/bench_scaling into BENCH.md.
+two throughputs + scaling efficiency (T_hi/T_lo)/(hi/lo).
 """
 
 from __future__ import annotations
@@ -182,14 +181,6 @@ def run_default() -> None:
     times["transcript_stream"] = tr["stream_sec"]
     total += tr["batch_sec"] + tr["stream_sec"]
 
-    # same-run host-weather context: this VM's parallel ceiling moves
-    # 0.77-1.00 across the day (see BENCH.md) and inflates one-shot totals
-    # ~2x when degraded — record it so the number is interpretable.
-    # Settle first: the transcript child's JVM teardown threads spread over
-    # all cores and, landing disproportionately on the probe's 4-proc
-    # baseline phase, once produced an impossible 1.441 reading.
-    time.sleep(3.0)
-    ceiling = cpu_parallel_ceiling(4, 16, dur=5.0)["ceiling_efficiency"]
     result = {
         "metric": "total_bench_sec",
         "value": round(total, 3),
@@ -198,7 +189,6 @@ def run_default() -> None:
         "sf": sf,
         "cpus": CPUS,
         "warmup_sec": warmup_sec,
-        "cpu_ceiling_4_16": ceiling,
         "transcript": tr,
     }
     print(json.dumps(result))
@@ -296,150 +286,6 @@ def run_child(cpus: int) -> None:
         spark.stop()
 
 
-def run_batch_child(cpus: int) -> None:
-    """Batch-only timed reps for the stable scaling protocol (BENCH.md):
-    the full-harness child interleaves streaming, whose state pressure
-    perturbs the batch reps; this child times ONLY the batch validation plan
-    — 2 untimed warm-ups then SPARK_GRAFT_SCALING_REPS (default 5) reps."""
-    from spanner_data_validator_spark.session import get_spark
-    from spanner_data_validator_spark.jobs.validate_transcripts import (
-        run_batch_validation,
-    )
-
-    spark = get_spark(app_name=f"sdv-bscale-{cpus}", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
-    corpus = os.environ["SPARK_GRAFT_SCALING_CORPUS"]
-    src_dir, tgt_dir = os.path.join(corpus, "src"), os.path.join(corpus, "tgt")
-    turns = int(open(os.path.join(corpus, "turns.txt")).read())
-    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "5"))
-
-    def one_pass() -> float:
-        t0 = time.time()
-        run_batch_validation(spark, src_dir, tgt_dir).write.format("noop") \
-            .mode("overwrite").save()
-        return time.time() - t0
-
-    for _ in range(2):  # JIT/codegen + page-cache warmup, untimed
-        one_pass()
-    times = sorted(round(one_pass(), 3) for _ in range(reps))
-    med = times[len(times) // 2]
-    print("CHILD_RESULT " + json.dumps({
-        "cpus": cpus, "turns": turns, "batch_secs": times,
-        "median_sec": med, "min_sec": times[0],
-        "median_turns_per_sec": round(turns / med, 1),
-    }))
-    spark.stop()
-
-
-def _burn_worker(q, dur: float) -> None:
-    end = time.time() + dur
-    n = 0
-    while time.time() < end:
-        x = 0
-        for i in range(100_000):
-            x += i * i
-        n += 1
-    q.put(n)
-
-
-def cpu_parallel_ceiling(lo: int, hi: int, dur: float = 20.0) -> dict:
-    """Same-day pure-CPU parallel-scaling ceiling: total throughput of a
-    trivial Python loop at ``lo`` vs ``hi`` pinned processes.
-
-    This VM's lo->hi ceiling is NOT stable across days (host co-tenancy /
-    SMT sharing of physical cores): measured 0.94-0.97 on the round's
-    original quiet day and 0.86-0.89 on a later day with nothing running in
-    the VM (pure-python burn, zero steal, 122 GB free). No Spark job can
-    scale better than the machine does that day, so the scaling summary
-    reports this ceiling next to the raw efficiency — the honest split of
-    "software plan scaling" from "today's hardware".
-    """
-    import multiprocessing as mp
-
-    def one_level(procs: int) -> int:
-        q = mp.Queue()
-        ps = [mp.Process(target=_burn_worker, args=(q, dur))
-              for _ in range(procs)]
-        for i, p in enumerate(ps):
-            p.start()
-            if shutil.which("taskset"):
-                subprocess.run(["taskset", "-cp", str(i % procs), str(p.pid)],
-                               capture_output=True)
-        for p in ps:
-            p.join()
-        return sum(q.get() for _ in range(procs))
-
-    # Three interleaved reps per level, max per level: transient
-    # interference (e.g. a JVM teardown thread) depresses whichever phase
-    # it lands on — a disturbed lo baseline read impossible efficiencies of
-    # 1.441 and 1.069 with two reps. The max over reps is the
-    # least-disturbed estimate of each level's capacity under TODAY's
-    # persistent weather (co-tenancy depresses every rep equally, so it
-    # still shows through); any residual >1 reading means the lo phase was
-    # disturbed in EVERY rep and should be re-probed, not believed.
-    res = {lo: 0, hi: 0}
-    for _ in range(3):
-        for procs in (lo, hi):
-            res[procs] = max(res[procs], one_level(procs))
-    return {
-        "lo_total": res[lo], "hi_total": res[hi],
-        "ceiling_efficiency": round((res[hi] / res[lo]) / (hi / lo), 3),
-    }
-
-
-def run_batch_scaling(lo: int, hi: int) -> dict:
-    """The stable batch-scaling protocol: one staged corpus (own exiting
-    subprocess — see run_scaling for why), then one CPU-pinned batch-only
-    child per level, 5 timed reps each; efficiency from the medians (min
-    also reported), plus the same-day pure-CPU ceiling and the
-    ceiling-normalized efficiencies."""
-    corpus = tempfile.mkdtemp(prefix="sdv_bscaling_corpus_")
-    try:
-        sf = _sf_from_dir(SF_DIR)
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--stage", corpus],
-            capture_output=True, text=True, timeout=1800, cwd=REPO)
-        turns_file = os.path.join(corpus, "turns.txt")
-        if not os.path.exists(turns_file):
-            raise RuntimeError(f"staging failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-        results = {}
-        for cpus in (lo, hi):
-            env = dict(os.environ, SPARK_GRAFT_SCALING_CORPUS=corpus)
-            out = subprocess.run(
-                [*_taskset_prefix(cpus), sys.executable,
-                 os.path.abspath(__file__), "--batch-child", str(cpus)],
-                capture_output=True, text=True, env=env, timeout=3600, cwd=REPO)
-            line = [l for l in out.stdout.splitlines()
-                    if l.startswith("CHILD_RESULT ")]
-            if not line:
-                raise RuntimeError(
-                    f"batch child {cpus} failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-            results[cpus] = json.loads(line[-1][len("CHILD_RESULT "):])
-        ceiling = cpu_parallel_ceiling(lo, hi)
-        eff_median = round(
-            (results[hi]["median_turns_per_sec"]
-             / results[lo]["median_turns_per_sec"]) / (hi / lo), 3)
-        eff_min = round(
-            ((results[lo]["turns"] / results[hi]["min_sec"])
-             / (results[lo]["turns"] / results[lo]["min_sec"])) / (hi / lo), 3)
-        summary = {
-            "sf": sf,
-            "turns": results[lo]["turns"],
-            "levels": results,
-            "batch_scaling_efficiency_median": eff_median,
-            "batch_scaling_efficiency_min": eff_min,
-            "cpu_ceiling": ceiling,
-            "ceiling_normalized_median": round(
-                eff_median / ceiling["ceiling_efficiency"], 3),
-            "ceiling_normalized_min": round(
-                eff_min / ceiling["ceiling_efficiency"], 3),
-        }
-        print(json.dumps(summary))
-        return summary
-    finally:
-        shutil.rmtree(corpus, ignore_errors=True)
-
-
 def _taskset_prefix(cpus: int) -> list[str]:
     if shutil.which("taskset"):
         return ["taskset", "-c", f"0-{cpus - 1}"]
@@ -502,98 +348,6 @@ def run_scaling(lo: int, hi: int) -> dict:
         shutil.rmtree(corpus, ignore_errors=True)
 
 
-def stage_rate_chunks(sf: float, base_dir: str, n_chunks: int = 32) -> tuple[str, str, int]:
-    """Time-sorted chunked corpus for the rate harness (one dir per drop)."""
-    from spanner_data_validator_spark.session import get_spark
-    from spanner_data_validator_spark.datagen import gen_transcript_pair
-    from spanner_data_validator_spark.sources.transcript_source import (
-        write_transcripts,
-    )
-
-    spark = get_spark(app_name="sdv-rate-stage", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
-    target_turns = max(100_000, int(TURNS_PER_SF * sf))
-    n_convs = max(10, target_turns // 11)
-    pair = gen_transcript_pair(n_convs, seed=42, hot_convs=max(2, n_convs // 1000),
-                               hot_size=400)
-    src = pair.source.sort_values("ts", kind="stable").reset_index(drop=True)
-    tgt = pair.target.sort_values("ts", kind="stable").reset_index(drop=True)
-    staged_src = os.path.join(base_dir, "chunks_src")
-    staged_tgt = os.path.join(base_dir, "chunks_tgt")
-    for j in range(n_chunks):
-        a, b = len(src) * j // n_chunks, len(src) * (j + 1) // n_chunks
-        write_transcripts(src.iloc[a:b], spark,
-                          os.path.join(staged_src, f"t{j:04d}"), n_files=4)
-        a, b = len(tgt) * j // n_chunks, len(tgt) * (j + 1) // n_chunks
-        write_transcripts(tgt.iloc[a:b], spark,
-                          os.path.join(staged_tgt, f"t{j:04d}"), n_files=4)
-    spark.stop()
-    return staged_src, staged_tgt, len(src) // n_chunks
-
-
-def run_rate_child(cpus: int, rate: float) -> None:
-    from spanner_data_validator_spark.session import get_spark
-    from spanner_data_validator_spark.streaming.rate_harness import run_rate_test
-
-    corpus = os.environ["SPARK_GRAFT_RATE_CORPUS"]
-    turns_per_chunk = int(open(os.path.join(corpus, "turns_per_chunk.txt")).read())
-    spark = get_spark(app_name=f"sdv-rate-{cpus}", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
-    work = tempfile.mkdtemp(prefix=f"sdv_rate_{cpus}_")
-    try:
-        res = run_rate_test(
-            spark, os.path.join(corpus, "chunks_src"),
-            os.path.join(corpus, "chunks_tgt"), work,
-            turns_per_chunk=turns_per_chunk, target_rate=rate)
-        res["cpus"] = cpus
-        print("RATE_RESULT " + json.dumps(res))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        spark.stop()
-
-
-def run_rate(lo: int, hi: int) -> dict:
-    """Rate-scaling evidence: each size fed turns/sec proportional to cores;
-    both must keep up (bounded backlog) — 4x resources sustaining 4x rate."""
-    per_core = float(os.environ.get("SPARK_GRAFT_RATE_PER_CORE", "20000"))
-    corpus = tempfile.mkdtemp(prefix="sdv_rate_corpus_")
-    try:
-        sf = _sf_from_dir(SF_DIR)
-        # subprocess staging for the same reason as run_scaling: keep the
-        # parent JVM-free so its RES doesn't squeeze the children's page cache
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--rate-stage", corpus],
-            capture_output=True, text=True, timeout=1800, cwd=REPO)
-        tpc_file = os.path.join(corpus, "turns_per_chunk.txt")
-        if not os.path.exists(tpc_file):
-            raise RuntimeError(f"rate staging failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-        results = {}
-        for cpus in (lo, hi):
-            env = dict(os.environ, SPARK_GRAFT_RATE_CORPUS=corpus)
-            out = subprocess.run(
-                [*_taskset_prefix(cpus), sys.executable, os.path.abspath(__file__),
-                 "--rate-child", str(cpus), str(per_core * cpus)],
-                capture_output=True, text=True, env=env, timeout=3600, cwd=REPO)
-            line = [l for l in out.stdout.splitlines() if l.startswith("RATE_RESULT ")]
-            if not line:
-                raise RuntimeError(
-                    f"rate child {cpus} failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-            results[cpus] = json.loads(line[-1][len("RATE_RESULT "):])
-        summary = {
-            "sf": sf,
-            "rate_per_core": per_core,
-            "state_store": os.environ.get("SDV_STATE_STORE", "rocksdb"),
-            "levels": results,
-            "both_kept_up": all(r["kept_up"] for r in results.values()),
-            "rate_ratio_sustained": round(
-                results[hi]["achieved_rate"] / results[lo]["achieved_rate"], 2),
-        }
-        print(json.dumps(summary))
-        return summary
-    finally:
-        shutil.rmtree(corpus, ignore_errors=True)
-
-
 def run_stage(corpus_dir: str) -> None:
     """Corpus staging as its own process (see run_scaling for why)."""
     from spanner_data_validator_spark.session import get_spark
@@ -607,34 +361,13 @@ def run_stage(corpus_dir: str) -> None:
     spark.stop()
 
 
-def run_rate_stage(corpus_dir: str) -> None:
-    sf = _sf_from_dir(SF_DIR)
-    _, _, turns_per_chunk = stage_rate_chunks(sf, corpus_dir)
-    with open(os.path.join(corpus_dir, "turns_per_chunk.txt"), "w") as f:
-        f.write(str(turns_per_chunk))
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--transcript-bench":
         run_transcript_bench()
     elif len(sys.argv) > 1 and sys.argv[1] == "--stage":
         run_stage(sys.argv[2])
-    elif len(sys.argv) > 1 and sys.argv[1] == "--rate-stage":
-        run_rate_stage(sys.argv[2])
     elif len(sys.argv) > 1 and sys.argv[1] == "--child":
         run_child(int(sys.argv[2]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--batch-child":
-        run_batch_child(int(sys.argv[2]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--batch-scaling":
-        lo = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-        hi = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-        run_batch_scaling(lo, hi)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--rate-child":
-        run_rate_child(int(sys.argv[2]), float(sys.argv[3]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--rate":
-        lo = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-        hi = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-        run_rate(lo, hi)
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
         lo = int(sys.argv[2]) if len(sys.argv) > 2 else 4
         hi = int(sys.argv[3]) if len(sys.argv) > 3 else 16

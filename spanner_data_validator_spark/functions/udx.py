@@ -1,60 +1,22 @@
-"""User-defined aggregate (UDAF) and table (UDTF) surface.
+"""User-defined table function (UDTF) and Arrow batch surface.
 
 The reference's only UDF surface is the custom-transformation JAR (SURVEY
 §2 P6 / §2.10); Spark adds two more extension points this module covers
 with honest, Arrow-era implementations:
 
-* ``grouped_median`` / ``grouped_mad`` — pandas GROUPED_AGG UDAFs (whole
-  group arrives as one Arrow batch; the result is one scalar). Median /
-  median-absolute-deviation are the classic aggregates Spark has no exact
-  built-in for (percentile_approx is a sketch). Deterministic: pandas sorts
-  internally, so partition order can't change the answer.
 * ``CharChunks`` — a Python UDTF (one input row → N output rows) emitting
   fixed-width character chunks with exact integer geometry.
+* ``arrow_substr_stats`` — a ``mapInArrow`` batch function whose kernels run
+  in Arrow's C++ compute layer.
 
-Both are THE SLOW PATH by design — per-group/per-row Python with Arrow
-transfer. They exist to cover the extension surface; hot paths use the
-pure-codegen equivalents (``profile.quantiles_by_rank`` for exact
-distributed quantiles, ``packing.chunk_tokens`` for chunking). Scale
-caveat for GROUPED_AGG: the whole group must fit one Arrow batch — fine
-for per-category aggregates (groups = categories), wrong for
-per-user groups with 10^6 rows.
+The UDTF is THE SLOW PATH by design — per-row Python. It exists to cover
+the extension surface; hot paths use the pure-codegen equivalent
+(``packing.chunk_tokens``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-@F.pandas_udf(T.LongType())
-def grouped_count(v: pd.Series) -> int:
-    """Group size as a GROUPED_AGG UDF — Spark refuses to mix pandas and
-    non-pandas aggregates in one agg() (INVALID_PANDAS_UDF_PLACEMENT), so a
-    UDAF query needs its count from the same family."""
-    return int(len(v))
-
-
-@F.pandas_udf(T.DoubleType())
-def grouped_median(v: pd.Series) -> float | None:
-    """Exact median (mean-of-middle-two on even counts — the same rule
-    DuckDB's ``median`` applies to DOUBLE, so results are oracle-exact).
-    An all-NULL group yields SQL NULL, matching the oracle (pandas would
-    hand back NaN, which is a different double)."""
-    m = v.median()
-    return None if pd.isna(m) else float(m)
-
-
-@F.pandas_udf(T.DoubleType())
-def grouped_mad(v: pd.Series) -> float | None:
-    """Median absolute deviation: median(|x - median(x)|) — the robust
-    dispersion measure a drift monitor wants where stddev would chase one
-    outlier."""
-    med = v.median()
-    mad = (v - med).abs().median()
-    return None if pd.isna(mad) else float(mad)
 
 
 class CharChunks:
@@ -86,8 +48,8 @@ def char_chunks_udtf():
 
 
 def arrow_substr_stats(df, key_col: str, text_col: str, needle: str):
-    """Arrow-native per-row text stats via ``mapInArrow`` — the third UDX
-    surface next to the pandas UDAFs and the UDTF above: batches stay
+    """Arrow-native per-row text stats via ``mapInArrow`` — the second UDX
+    surface next to the UDTF above: batches stay
     pyarrow RecordBatches end to end (no pandas materialization, no per-row
     Python), and the kernel work (`count_substring`, `utf8_length`) runs in
     Arrow's C++ compute layer. This is the seam for vectorized logic the

@@ -1,22 +1,20 @@
-"""Complex-event-processing operators: MATCH_RECOGNIZE-style sequence
-patterns and absence (timeout) detection over keyed event streams.
+"""Complex-event-processing operators: event symbolization and absence
+(timeout) detection over keyed event streams.
 
 The reference validator (GoogleCloudPlatform/spanner-data-validator) compares
 rows pairwise and has no sequence operators; CEP is part of THIS engine's
 streaming tier per the north rule ("structured-streaming / CEP engine ...
 over multi-turn conversation / agent transcripts"). The operators here give
-the classic CEP trio — ordered-pattern match, quantified repetition, and
-A-not-followed-by-B timeout — as pure DataFrame expressions.
+a one-character event symbolizer (the input to a session-window pattern
+aggregation) and the A-not-followed-by-B timeout, as pure DataFrame
+expressions.
 
 Scale design (10^12 events, 1000 executors):
 
-* ``match_recognize`` shuffles ``(key, order cols, 1-char symbol)`` only —
-  payloads are dropped map-side by the symbolizer projection. Per-key state
-  is the symbol string (one char per event), bounded by the key's own event
-  count exactly like a session-window aggregation; there is no cross-key
-  state and no join.
-* Pattern evaluation is a single JVM ``regexp_count`` / ``regexp_instr``
-  over that string — whole-stage codegen, no Python in the path.
+* ``symbolize`` is one codegen ``CASE WHEN`` per event: a pattern
+  aggregation shuffles ``(key, order cols, 1-char symbol)`` only, payloads
+  dropped map-side, and evaluates the pattern as a JVM regexp over the
+  per-key symbol string — no Python in the path.
 * ``absence_alerts`` is join-free: one shuffle on the key, then a single
   window-function pass (conditional min over the following frame). The
   naive formulation is a time-band self-join (events × events); this one
@@ -31,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["symbolize", "match_recognize", "absence_alerts"]
+__all__ = ["symbolize", "absence_alerts"]
 
 
 def symbolize(symbols: list[tuple[str, Column]], *, default: str = "-") -> Column:
@@ -51,61 +49,6 @@ def symbolize(symbols: list[tuple[str, Column]], *, default: str = "-") -> Colum
     for ch, cond in symbols:
         expr = F.when(cond, ch) if expr is None else expr.when(cond, ch)
     return expr.otherwise(default)
-
-
-def match_recognize(
-    df: DataFrame,
-    *,
-    key: str | list[str],
-    order: list[str],
-    symbol: Column,
-    pattern: str,
-) -> DataFrame:
-    """Per-key ordered sequence-pattern match (MATCH_RECOGNIZE core).
-
-    Orders each key's events by ``order`` (must be a deterministic total
-    order — include a tiebreaker column), folds them into a symbol string,
-    and counts non-overlapping left-to-right ``pattern`` matches (Java regex
-    on the Spark side; keep patterns to literal symbols + ``+ * ? | ()``
-    quantifiers so any regex dialect agrees).
-
-    Returns one row per key: ``<key...>, n_events, n_matches, first_match``
-    (1-based position of the first match in event order, 0 = no match).
-
-    Equivalent SQL (the oracle shape)::
-
-        SELECT key, count(*) AS n_events,
-               len(regexp_extract_all(string_agg(sym, '' ORDER BY o1, o2),
-                                      pattern)) AS n_matches,
-               regexp_instr(...) AS first_match
-        FROM symbolized GROUP BY key
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    sym_rows = df.select(
-        *keys, *order, symbol.cast("string").alias("sym")
-    )
-    # array_sort on structs orders by fields left-to-right → (order..., sym)
-    per_key = sym_rows.groupBy(*keys).agg(
-        F.array_sort(
-            F.collect_list(F.struct(*[F.col(c) for c in order], F.col("sym")))
-        ).alias("evs")
-    )
-    syms = F.array_join(F.expr("transform(evs, e -> e.sym)"), "")
-    # Generate barrier: evaluate the concatenated symbol string ONCE per key
-    # (CollapseProject would otherwise inline `syms` into every downstream
-    # expression — n_matches, first_match — re-running the array transform
-    # per use; see CLAUDE.md Catalyst re-evaluation trap).
-    with_syms = per_key.select(
-        *keys,
-        F.size("evs").cast("long").alias("n_events"),
-        F.explode(F.array(syms)).alias("syms"),
-    )
-    return with_syms.select(
-        *keys,
-        "n_events",
-        F.regexp_count(F.col("syms"), F.lit(pattern)).cast("long").alias("n_matches"),
-        F.regexp_instr(F.col("syms"), F.lit(pattern)).cast("long").alias("first_match"),
-    )
 
 
 def absence_alerts(

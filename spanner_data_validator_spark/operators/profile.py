@@ -238,55 +238,3 @@ def schema_drift(src: DataFrame, tgt: DataFrame) -> list[dict]:
             out.append({"column": name, "kind": "missing_in_src",
                         "src": None, "tgt": t[name].dataType.simpleString()})
     return out
-
-
-def rfm_segments(events: DataFrame, *, user: str, ts: str,
-                 amount: Column, n_tiles: int = 5) -> DataFrame:
-    """RFM (recency / frequency / monetary) segmentation: per-user
-    aggregates quintiled into ``n_tiles`` buckets, reported as segment
-    counts ``(r_q, f_q, m_q, n_users, m_sum)``.
-
-    Exactness: recency is integer days (epoch_us // 86400e6) from the
-    corpus max day; ntile is the SQL-standard equal-fill bucketing, made
-    deterministic by a (metric, user_id) total order — recency ascending
-    (recent = bucket 1), frequency and monetary descending (heavy =
-    bucket 1). Amount must be integer (cents).
-
-    Shape: one user-keyed aggregation reduces events to |users| rows;
-    each quintile is then a :func:`operators.layout.distributed_ntile`
-    (value-range bins shard the global rank; NTILE closed-form from
-    (rank, n)) — no single-partition window anywhere, so the plan holds
-    at 1e9+ users.
-    """
-    from spanner_data_validator_spark.operators.layout import (
-        distributed_ntile,
-    )
-    # integer division (div), NOT double '/' + cast: a float quotient that
-    # rounds up to an exact integer would truncate differently than
-    # DuckDB's // floor division (epoch_us values exceed 2^53 / 86400e6
-    # headroom only in pathological cases, but div costs nothing).
-    day = F.expr(
-        f"unix_micros(cast({ts} as timestamp)) div 86400000000")
-    per_user = (events.groupBy(user)
-                .agg(F.max(day).alias("last_day"),
-                     F.count(F.lit(1)).alias("f"),
-                     F.sum(amount).alias("m")))
-    # per_user feeds both the global-max aggregate and the scoring branch —
-    # pin it (multi-branch rescan trap) so events is scanned once.
-    per_user = per_user.localCheckpoint(eager=True)
-    per_user = per_user.crossJoin(
-        F.broadcast(per_user.agg(F.max("last_day").alias("g"))))
-    r = (F.col("g") - F.col("last_day")).alias("r")
-    scored = per_user.select(F.col(user), r, "f", "m")
-    q = distributed_ntile(
-        scored, F.col("r"), [F.col("r").asc(), F.col(user).asc()],
-        n_tiles, ascending=True, out_col="r_q")
-    q = distributed_ntile(
-        q, F.col("f"), [F.col("f").desc(), F.col(user).asc()],
-        n_tiles, ascending=False, out_col="f_q")
-    q = distributed_ntile(
-        q, F.col("m"), [F.col("m").desc(), F.col(user).asc()],
-        n_tiles, ascending=False, out_col="m_q")
-    return (q.groupBy("r_q", "f_q", "m_q")
-            .agg(F.count(F.lit(1)).alias("n_users"),
-                 F.sum("m").alias("m_sum")))

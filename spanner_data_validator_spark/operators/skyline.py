@@ -18,13 +18,10 @@ This implementation is the two-phase distributed plan:
    which for skyline-shaped workloads (discrete first objective: size,
    tier, bucketed score) is tiny.
 
-For a CONTINUOUS / high-cardinality x, per-x minima prune nothing —
-use :func:`pareto_frontier_wide` instead: per-PARTITION local skylines
-(valid for ANY partitioning, since skyline(∪Ai) ⊆ ∪skyline(Ai)) feed
-the same global sweep, so the sweep sees only the union of local
-frontiers. NOTE the tempting shortcut — bucket x and keep per-bucket
-min-y — is WRONG: within one bucket, (x=1,y=9) and (x=9,y=1) can both
-be on the global skyline, but the bucket keeps only the min-y one.
+For a CONTINUOUS / high-cardinality x, per-x minima prune nothing and
+the sweep sees every row. NOTE the tempting shortcut — bucket x and keep
+per-bucket min-y — is WRONG: within one bucket, (x=1,y=9) and (x=9,y=1)
+can both be on the global skyline, but the bucket keeps only the min-y one.
 
 Minimization on both axes; negate a column to maximize. Duplicate
 frontier points are preserved with their multiplicity (``n_points``) —
@@ -73,41 +70,3 @@ def sweep_collapsed(pts: DataFrame) -> DataFrame:
     return (swept.where(F.col("_prefix_min").isNull()
                         | (F.col("y") < F.col("_prefix_min")))
             .select("x", "y", "n_points"))
-
-
-def pareto_frontier_wide(df: DataFrame, x: Column, y: Column) -> DataFrame:
-    """Skyline for CONTINUOUS / high-cardinality x: per-partition local
-    skylines (Arrow-batched pandas; memory bounded by batch + running
-    frontier because dominated points are discarded as batches fold in),
-    then the global sweep over the union of local frontiers. Correct for
-    ANY partitioning — no repartition, no per-x collapse shuffle; the
-    only exchange is the final sweep over the (small) frontier union.
-    Returns (x, y, n_points), identical to :func:`pareto_frontier`.
-    """
-    import pandas as pd
-
-    pts = (df.select(x.cast("long").alias("x"), y.cast("long").alias("y"))
-           .where(F.col("x").isNotNull() & F.col("y").isNotNull()))
-
-    def local_sky(batches):
-        cur = None  # running collapsed frontier of this partition
-        for pdf in batches:
-            g = pdf.groupby(["x", "y"], as_index=False).size()
-            g = g.rename(columns={"size": "n_points"})
-            if cur is not None:
-                g = (pd.concat([cur, g])
-                     .groupby(["x", "y"], as_index=False)["n_points"].sum())
-            g = g.sort_values(["x", "y"]).reset_index(drop=True)
-            ymin = g.groupby("x")["y"].transform("min")
-            g = g[g["y"] == ymin]
-            prefix = g["y"].cummin().shift(1)
-            cur = g[prefix.isna() | (g["y"] < prefix)].reset_index(drop=True)
-        if cur is not None and len(cur):
-            yield cur.astype({"x": "int64", "y": "int64",
-                              "n_points": "int64"})
-
-    locals_ = pts.mapInPandas(
-        local_sky, "x long, y long, n_points long")
-    merged = (locals_.groupBy("x", "y")
-              .agg(F.sum("n_points").alias("n_points")))
-    return sweep_collapsed(merged)

@@ -239,217 +239,6 @@ def fd_profile(df: DataFrame,
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def _ols_terms(df: DataFrame, group: str, x: Column, y: Column) -> DataFrame:
-    """Exact per-group second-order sums for OLS / Pearson on INTEGER
-    series: n, sx, sy, sxy, sxx, syy — plus the centering offset x0 =
-    per-group min(x) (centering keeps every per-row product inside
-    int64; the final n*sxy - sx*sy combination runs in DECIMAL(38,0),
-    Spark's exact 128-bit integer arithmetic, matching DuckDB's
-    HUGEINT). One group-keyed exchange: the min(x) window shares the
-    aggregation's partitioning.
-    """
-    wg = Window.partitionBy(group)
-    base = (df.where(x.isNotNull() & y.isNotNull())
-            .select(F.col(group), x.alias("__x"), y.alias("__y")))
-    c = (base.withColumn("__x0", F.min("__x").over(wg))
-         .withColumn("__xc", F.col("__x") - F.col("__x0")))
-    return (c.groupBy(group)
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.max("__x0").alias("x0"),
-                 F.sum("__xc").alias("sx"),
-                 F.sum("__y").alias("sy"),
-                 F.sum(F.col("__xc") * F.col("__y")).alias("sxy"),
-                 F.sum(F.col("__xc") * F.col("__xc")).alias("sxx"),
-                 F.sum(F.col("__y") * F.col("__y")).alias("syy")))
-
-
-_D38 = "decimal(38,0)"
-
-
-def trend_slope(df: DataFrame, group: str, x: Column, y: Column) -> DataFrame:
-    """Per-group exact simple linear regression of integer ``y`` on
-    integer ``x`` (e.g. cents on epoch-seconds): one row per group with
-    ``(group, n, slope, intercept)``.
-
-    slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2) with every sum an exact
-    integer (see ``_ols_terms``); the two divisions are single double
-    ops on exactly-represented integers — bit-identical in any engine.
-    The intercept is reported at the UNCENTERED origin:
-    (Sy - slope*(Sx + n*x0)) / n.
-    """
-    t = _ols_terms(df, group, x, y)
-    num = (F.col("n").cast(_D38) * F.col("sxy").cast(_D38)
-           - F.col("sx").cast(_D38) * F.col("sy").cast(_D38))
-    den = (F.col("n").cast(_D38) * F.col("sxx").cast(_D38)
-           - F.col("sx").cast(_D38) * F.col("sx").cast(_D38))
-    slope = F.when(den == 0, F.lit(None).cast("double")).otherwise(
-        num.cast("double") / den.cast("double"))
-    sx_full = (F.col("sx").cast(_D38)
-               + F.col("n").cast(_D38) * F.col("x0").cast(_D38))
-    intercept = ((F.col("sy").cast("double")
-                  - slope * sx_full.cast("double"))
-                 / F.col("n").cast("double"))
-    return t.select(group, "n", slope.alias("slope"),
-                    intercept.alias("intercept"))
-
-
-def lag1_autocorr(df: DataFrame, group: str, order: Sequence[Column],
-                  y: Column) -> DataFrame:
-    """Per-group lag-1 autocorrelation of an integer series: the Pearson
-    correlation of (y_t, y_{t+1}) pairs in the total order given by
-    ``order`` (include a unique tiebreak column — equal timestamps
-    otherwise pair nondeterministically and diverge per engine). One
-    row per group: ``(group, n_pairs, acf1)``.
-
-    r = (m*Sxy - Sx*Sy) / sqrt((m*Sxx - Sx^2) * (m*Syy - Sy^2)) over the
-    m = n-1 adjacent pairs; every sum is an exact integer and sqrt is
-    IEEE correctly-rounded, so the double is engine-exact. Same one
-    group-keyed exchange as ``_ols_terms`` (the lag window shares it).
-    """
-    w = Window.partitionBy(group).orderBy(*order)
-    pairs = (df.where(y.isNotNull())
-             .select(F.col(group), *order, y.alias("__b"))
-             .withColumn("__a", F.lag("__b").over(w))
-             .where(F.col("__a").isNotNull()))
-    t = _ols_terms(pairs, group, F.col("__a"), F.col("__b"))
-    m = F.col("n").cast(_D38)
-    cov = m * F.col("sxy").cast(_D38) - F.col("sx").cast(_D38) * F.col("sy").cast(_D38)
-    vx = m * F.col("sxx").cast(_D38) - F.col("sx").cast(_D38) * F.col("sx").cast(_D38)
-    vy = m * F.col("syy").cast(_D38) - F.col("sy").cast(_D38) * F.col("sy").cast(_D38)
-    r = F.when((vx == 0) | (vy == 0), F.lit(None).cast("double")).otherwise(
-        cov.cast("double")
-        / F.sqrt(vx.cast("double") * vy.cast("double")))
-    return t.select(group, F.col("n").alias("n_pairs"), r.alias("acf1"))
-
-
-def chi2_contingency_cells(df: DataFrame, row_col: Column,
-                           col_col: Column) -> DataFrame:
-    """Chi-square contingency table between two categoricals, reported
-    PER CELL: ``(r, c, observed, row_total, col_total, n, expected,
-    chi_term)``. Per-cell double terms (expected = row*col/n on exact
-    integers) avoid the cross-row float sum that diverges per engine;
-    the caller sums chi_term driver-side if a scalar is wanted.
-
-    Shape: one groupBy(r, c) exchange; the marginals come from two
-    windows over the (tiny) cell table, never the input.
-    """
-    cells = (df.where(row_col.isNotNull() & col_col.isNotNull())
-             .groupBy(row_col.alias("r"), col_col.alias("c"))
-             .agg(F.count(F.lit(1)).alias("observed")))
-    wr = Window.partitionBy("r").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    wc = Window.partitionBy("c").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    wn = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    t = (cells
-         .withColumn("row_total", F.sum("observed").over(wr))
-         .withColumn("col_total", F.sum("observed").over(wc))
-         .withColumn("n", F.sum("observed").over(wn)))
-    expected = (F.col("row_total").cast("double")
-                * F.col("col_total").cast("double")
-                / F.col("n").cast("double"))
-    dev = F.col("observed").cast("double") - expected
-    return t.select("r", "c", "observed", "row_total", "col_total", "n",
-                    expected.alias("expected"),
-                    (dev * dev / expected).alias("chi_term"))
-
-
-def weighted_median(df: DataFrame, group: str, value: Column,
-                    weight: Column) -> DataFrame:
-    """Per-group exact weighted (lower) median: the smallest value v such
-    that the cumulative weight of rows <= v reaches half the group's
-    total weight (2*cum >= W). One row per group:
-    ``(group, w_total, w_median)``.
-
-    Weights must be positive integers so the cumulative comparison
-    2*cum >= W is exact integer arithmetic in every engine. The running
-    weight sum and the group total share ONE group-keyed exchange; the
-    pick is the first ordered row crossing the half-weight line, made
-    total by ordering on value alone (ties share v, so the picked VALUE
-    is deterministic even though the crossing row may differ).
-    """
-    wg = Window.partitionBy(group)
-    wo = wg.orderBy(F.col("__v").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    base = (df.where(value.isNotNull() & weight.isNotNull())
-            .select(F.col(group), value.alias("__v"),
-                    weight.alias("__w")))
-    c = (base.withColumn("__cum", F.sum("__w").over(wo))
-         .withColumn("__tot", F.sum("__w").over(wg)))
-    hit = c.where(F.lit(2) * F.col("__cum") >= F.col("__tot"))
-    return (hit.groupBy(group)
-            .agg(F.max("__tot").alias("w_total"),
-                 F.min("__v").alias("w_median")))
-
-
-def deterministic_mode(df: DataFrame, group: str,
-                       value: Column) -> DataFrame:
-    """Per-group mode with a deterministic tie-break (highest count,
-    then SMALLEST value) — Spark's built-in ``mode()`` documents an
-    arbitrary tie winner, which can never be oracle-checked. One row per
-    group: ``(group, mode_value, mode_n)``.
-
-    Two aggregations under the same key prefix: (group, value) counts,
-    then a (count desc, value asc) row_number pick — the second window
-    repartitions only the already-collapsed count table.
-    """
-    counts = (df.where(value.isNotNull())
-              .groupBy(F.col(group), value.alias("__v"))
-              .agg(F.count(F.lit(1)).alias("__n")))
-    w = Window.partitionBy(group).orderBy(F.col("__n").desc(),
-                                          F.col("__v").asc())
-    return (counts.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") == 1)
-            .select(F.col(group), F.col("__v").alias("mode_value"),
-                    F.col("__n").alias("mode_n")))
-
-
-def time_weighted_mean(df: DataFrame, group: str, ts: Column,
-                       value_units: Column,
-                       tiebreak: Column) -> DataFrame:
-    """Per-group time-weighted average: each observation holds until the
-    next one, so TWAP = sum(value * hold_seconds) / sum(hold_seconds) —
-    the financial-series mean a plain AVG misstates whenever sampling is
-    irregular (burst-heavy event streams always are).
-
-    ``value_units`` must be an exact integer column (cents); both sums
-    are BIGINT-exact and divided ONCE, so the result is bit-identical in
-    any engine. The per-group ordering (ts, tiebreak) is total, so lead()
-    is deterministic under ties. The last observation of a group has no
-    successor and carries zero weight (the half-open convention).
-
-    Shape: one window keyed BY GROUP (sharded, no global sort) + one
-    group aggregate. Overflow headroom: cents × seconds per interval must
-    stay < 2^63 / rows-per-group — true by orders of magnitude for any
-    real corpus; pre-scale to coarser units if not.
-
-    Output: (group, n_intervals, dur_s_sum, weighted_sum, twap_units).
-    """
-    w = (Window.partitionBy(group)
-         .orderBy(ts.asc(), tiebreak.asc()))
-    # parquet timestamps load as TIMESTAMP_NTZ, which unix_micros
-    # rejects — the cast is a no-op re-tag for already-UTC data
-    sec = F.unix_micros(ts.cast("timestamp"))
-    us = F.lead(sec).over(w) - sec
-    # exact integer division (a - a%b)/b: a plain '/'+cast truncates a
-    # double quotient, which disagrees with an engine that floors at
-    # representability edges (the CAST(double AS BIGINT) trap)
-    dur = ((us - us % F.lit(1_000_000)) / F.lit(1_000_000)).cast("long")
-    rows = df.select(F.col(group), value_units.alias("__v"),
-                     dur.alias("__dur"))
-    kept = rows.where(F.col("__dur").isNotNull())
-    return (kept.groupBy(group)
-            .agg(F.count(F.lit(1)).alias("n_intervals"),
-                 F.sum("__dur").alias("dur_s_sum"),
-                 F.sum(F.col("__v") * F.col("__dur"))
-                  .alias("weighted_sum"))
-            .withColumn(
-                "twap_units",
-                F.col("weighted_sum").cast("double")
-                / F.col("dur_s_sum").cast("double")))
-
-
 def cusum_changepoint(series: DataFrame, group: str, order: Column,
                       value_units: Column) -> DataFrame:
     """Exact CUSUM change-point scan per group: over the ordered series
@@ -497,85 +286,6 @@ def cusum_changepoint(series: DataFrame, group: str, order: Column,
         (F.col("m.ad").cast("double")
          / (F.col("n_points") * F.col("n_points")).cast("double"))
         .alias("cusum_stat"))
-
-
-def theil_sen_trend(series: DataFrame, group: str, x: Column, y: Column,
-                    *, max_points: int = 512) -> DataFrame:
-    """Per-group Theil-Sen robust trend: the median of all pairwise
-    slopes (y_j - y_i)/(x_j - x_i), x_i < x_j — breakdown point 29%,
-    where one corrupted day drags OLS (``trend_slope``) arbitrarily.
-
-    Meant for ALREADY-AGGREGATED series (daily/hourly rollups): each
-    group collapses to one sorted point array (``max_points`` guards the
-    quadratic step, same cap discipline as operators/basket), pairs
-    expand via chained Generates — no self-join, one input scan. Slopes
-    are single IEEE divisions of exact integer deltas, so every engine
-    computes the identical double; the (slope, dy, dx) order is then
-    engine-identical too, and the LOWER median at rank floor((m+1)/2)
-    needs no float rank arithmetic.
-
-    Output: (group, n_pairs, med_slope).
-    """
-    pts = (series.where(x.isNotNull() & y.isNotNull())
-           .select(F.col(group), F.struct(x.alias("x"), y.alias("y"))
-                   .alias("p")))
-    arrs = (pts.groupBy(group)
-            .agg(F.sort_array(F.collect_list("p")).alias("pts"))
-            .where(F.size("pts") <= max_points)
-            .localCheckpoint(eager=True))
-    pairs = (arrs.select(F.col(group),
-                         F.posexplode("pts").alias("i", "a"),
-                         F.col("pts"))
-             .select(F.col(group), F.col("a"),
-                     F.explode(F.expr(
-                         "slice(pts, i + 2, size(pts) - i - 1)"))
-                     .alias("b"))
-             .where(F.col("b.x") != F.col("a.x"))
-             .select(F.col(group),
-                     (F.col("b.y") - F.col("a.y")).alias("dy"),
-                     (F.col("b.x") - F.col("a.x")).alias("dx")))
-    slope = F.col("dy").cast("double") / F.col("dx").cast("double")
-    wg = Window.partitionBy(group)
-    wr = wg.orderBy(slope.asc(), F.col("dy").asc(), F.col("dx").asc())
-    r = (pairs.withColumn("q", slope)
-         .withColumn("rn", F.row_number().over(wr))
-         .withColumn("m", F.count(F.lit(1)).over(wg)))
-    med = (F.col("m") + 1 - (F.col("m") + 1) % 2) / F.lit(2)
-    return (r.where(F.col("rn") == med.cast("long"))
-            .select(F.col(group), F.col("m").alias("n_pairs"),
-                    F.col("q").alias("med_slope")))
-
-
-def trimmed_mean(df: DataFrame, group: str, value_units: Column,
-                 trim_frac: float) -> DataFrame:
-    """Per-group trimmed mean: drop the lowest and highest
-    floor(n * trim_frac) observations by rank, average the rest in
-    exact integer units with ONE final division. Rank ties at the cut
-    boundary share the same value, so the kept multiset — hence the
-    mean — is order-independent. The trim count multiplies n by the
-    DOUBLE literal (both engines must cast the fraction to DOUBLE —
-    a DECIMAL-parsed 0.1 floors differently at representability edges,
-    the CLAUDE.md oracle-fraction trap).
-
-    Output: (group, n, n_trim_each, kept_sum, trimmed_mean).
-    """
-    wg = Window.partitionBy(group)
-    r = (df.where(value_units.isNotNull())
-         .select(F.col(group), value_units.alias("__v"))
-         .withColumn("rn", F.row_number().over(
-             wg.orderBy(F.col("__v").asc())))
-         .withColumn("n", F.count(F.lit(1)).over(wg)))
-    t = F.floor(F.col("n").cast("double") * F.lit(float(trim_frac)))
-    kept = r.where((F.col("rn") > t) & (F.col("rn") <= F.col("n") - t))
-    return (kept.groupBy(group)
-            .agg(F.max("n").alias("n"),
-                 F.max(t).alias("n_trim_each"),
-                 F.sum("__v").alias("kept_sum"),
-                 F.count(F.lit(1)).alias("n_kept"))
-            .select(F.col(group), "n", "n_trim_each", "kept_sum",
-                    (F.col("kept_sum").cast("double")
-                     / F.col("n_kept").cast("double"))
-                    .alias("trimmed_mean")))
 
 
 def mann_whitney_u(df: DataFrame, value: Column, is_a: Column,
@@ -641,40 +351,3 @@ def mann_whitney_u(df: DataFrame, value: Column, is_a: Column,
                     / (F.lit(2) * F.col("n_a") * F.col("n_b"))
                     .cast("double"))
         .alias("auc"))
-
-
-def gini_coefficient(df: DataFrame, group: str,
-                     value_units: Column) -> DataFrame:
-    """Per-group exact Gini coefficient of non-negative integer values
-    via the rank identity: with x_(1) <= ... <= x_(n),
-
-        G = sum_i (2i - n - 1) * x_(i)  /  (n * sum(x))
-
-    — numerator and denominator both BIGINT-exact (the pairwise
-    |x_i - x_j| double sum this equals would be quadratic AND
-    float-ordered), one final division. Ties take arbitrary rank order
-    but the numerator is invariant under permuting equal values (the
-    coefficient (2i-n-1) sums the same over any tied run). One
-    group-keyed sort window + one aggregate.
-
-    Output: (group, n, total_units, gini_num, gini).
-    """
-    wg = Window.partitionBy(group)
-    r = (df.where(value_units.isNotNull())
-         .select(F.col(group), value_units.alias("__v"))
-         .withColumn("__i", F.row_number().over(
-             wg.orderBy(F.col("__v").asc())))
-         .withColumn("__n", F.count(F.lit(1)).over(wg)))
-    term = (F.lit(2) * F.col("__i") - F.col("__n") - 1) * F.col("__v")
-    return (r.groupBy(group)
-            .agg(F.max("__n").alias("n"),
-                 F.sum("__v").alias("total_units"),
-                 F.sum(term).alias("gini_num"))
-            .withColumn(
-                "gini",
-                F.when(F.col("total_units") == 0,
-                       F.lit(None).cast("double"))
-                 .otherwise(
-                     F.col("gini_num").cast("double")
-                     / (F.col("n") * F.col("total_units"))
-                     .cast("double"))))

@@ -1,4 +1,4 @@
-"""Last-touch attribution, running-balance divergence, RFM segments."""
+"""Running-balance divergence."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
@@ -6,28 +6,6 @@ from pyspark.sql import functions as F
 from spanner_data_validator_spark.operators.diff import (
     first_running_divergence,
 )
-from spanner_data_validator_spark.operators.funnel import (
-    last_touch_attribution,
-)
-from spanner_data_validator_spark.operators.profile import rfm_segments
-
-
-def test_last_touch_credits_nearest_preceding(spark):
-    rows = [
-        (1, 1, "view"), (1, 2, "click"), (1, 3, "purchase"),   # -> click
-        (1, 4, "purchase"),                                    # -> click
-        (2, 1, "purchase"),                                    # -> direct
-        (2, 2, "error"), (2, 3, "purchase"),                   # -> error
-    ]
-    df = spark.createDataFrame(rows, "user_id long, t long, et string") \
-        .withColumn("ts", F.col("t"))
-    out = {r["attributed_type"]: r for r in last_touch_attribution(
-        df, user="user_id", ts="ts", tiebreak="t", etype="et",
-        conversion="purchase").collect()}
-    assert out["click"]["n_conversions"] == 2
-    assert out["click"]["n_users"] == 1
-    assert out["direct"]["n_conversions"] == 1
-    assert out["error"]["n_conversions"] == 1
 
 
 def test_first_running_divergence_pinpoints_first_bad_row(spark):
@@ -64,26 +42,3 @@ def test_first_running_divergence_compensating_pair_caught(spark):
     out = first_running_divergence(
         src, tgt, key="k", order=["pos"], amount=F.col("amt")).collect()
     assert len(out) == 1 and out[0]["first_rn"] == 2
-
-
-def test_rfm_segments_quintiles_and_counts(spark):
-    # 10 users; user u has f = u+1 events of amount 100*(u+1); recency by
-    # construction: user u's last day = day u
-    rows = []
-    for u in range(10):
-        for i in range(u + 1):
-            # day u for the last event, earlier days before
-            rows.append((u, (u * 86_400_000_000) + i, 100 * (u + 1)))
-    df = spark.createDataFrame(rows, "user_id long, us long, amt long") \
-        .withColumn("ts", F.expr("timestamp_micros(us)"))
-    out = rfm_segments(df, user="user_id", ts="ts", amount=F.col("amt"))
-    rowsc = out.collect()
-    assert sum(r["n_users"] for r in rowsc) == 10
-    # user 9: most recent (r_q=1), most frequent (f_q=1), highest m (m_q=1)
-    top = [r for r in rowsc
-           if r["r_q"] == 1 and r["f_q"] == 1 and r["m_q"] == 1]
-    assert len(top) == 1 and top[0]["n_users"] == 2
-    # user 0: oldest, least frequent, lowest monetary -> all q = 5
-    bot = [r for r in rowsc
-           if r["r_q"] == 5 and r["f_q"] == 5 and r["m_q"] == 5]
-    assert len(bot) == 1 and bot[0]["n_users"] == 2

@@ -1,4 +1,4 @@
-"""CEP operators: MATCH_RECOGNIZE-style patterns + absence detection."""
+"""CEP operators: symbolization + absence detection."""
 
 import datetime as dt
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.operators.cep import (
     absence_alerts,
-    match_recognize,
     symbolize,
 )
 
@@ -31,35 +30,6 @@ def _sym():
     return symbolize(
         [("a", F.col("typ") == "A"), ("b", F.col("typ") == "B")]
     )
-
-
-def test_match_recognize_counts_and_position(spark):
-    # k=1: symbols a b b a b  → 'ab+' matches [abb] and [ab] → 2, first at 1
-    # k=2: symbols b a a      → no 'ab+' match → 0 matches, first_match 0
-    df = _events(
-        spark,
-        [
-            (1, 0, 0, "A"), (1, 1, 1, "B"), (1, 2, 2, "B"),
-            (1, 3, 3, "A"), (1, 4, 4, "B"),
-            (2, 0, 0, "B"), (2, 1, 1, "A"), (2, 2, 2, "A"),
-        ],
-    )
-    got = {
-        r["k"]: (r["n_events"], r["n_matches"], r["first_match"])
-        for r in match_recognize(
-            df, key="k", order=["ts", "seq"], symbol=_sym(), pattern="ab+"
-        ).collect()
-    }
-    assert got == {1: (5, 2, 1), 2: (3, 0, 0)}
-
-
-def test_match_recognize_orders_by_ts_then_tiebreak(spark):
-    # same ts for every row — order must fall back to seq: a(0) b(1) → match
-    df = _events(spark, [(1, 0, 1, "B"), (1, 0, 0, "A")])
-    [row] = match_recognize(
-        df, key="k", order=["ts", "seq"], symbol=_sym(), pattern="ab"
-    ).collect()
-    assert (row["n_matches"], row["first_match"]) == (1, 1)
 
 
 def test_symbolize_first_hit_wins_and_default(spark):

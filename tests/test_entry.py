@@ -127,6 +127,27 @@ def test_stream_helpers_call_no_package_code():
         assert not reaches(mod, defs[(mod, name)], set()), name
 
 
+def test_every_operator_module_has_a_package_caller():
+    """Every module under ``operators/`` is imported by another package
+    module (the registry's queries included). Tests do not count, and
+    neither does ``operators/__init__.py``: a module only its own tests
+    import is dead code."""
+    ops = f"{_PKG}.operators"
+    callers = set()
+    for p in (_REPO / _PKG).rglob("*.py"):
+        src = ".".join(p.relative_to(_REPO).with_suffix("").parts)
+        if src == f"{ops}.__init__":
+            continue
+        for m, a in _repo_imports(ast.walk(ast.parse(p.read_text()))).values():
+            target = f"{m}.{a}" if m == ops else m
+            if target.startswith(f"{ops}.") and target != src:
+                callers.add(target)
+    modules = {f"{ops}.{p.stem}" for p in (_REPO / _PKG / "operators").glob("*.py")
+               if p.stem != "__init__"}
+    orphans = sorted(modules - callers)
+    assert not orphans, f"operator modules with no package caller: {orphans}"
+
+
 def test_flagship_tally_identity(spark):
     from pyspark.sql import functions as F
 

@@ -87,15 +87,3 @@ def test_jdbc_sink_task_retry_duplicates_collapsed(spark, derby_sink):
     got = derby_sink.read_committed(spark).where("batch_id = 5").collect()
     assert sorted((r.k, r.status) for r in got) == [
         (20, "MISMATCH"), (21, "SOURCE_ONLY")]
-
-
-def test_udaf_all_null_group_yields_sql_null(spark):
-    from pyspark.sql import functions as F
-
-    from spanner_data_validator_spark.functions.udx import grouped_median
-    df = spark.createDataFrame([("a", None), ("a", None), ("b", 2.0)],
-                               "g string, v double")
-    out = {r.g: r.m for r in df.groupBy("g").agg(
-        grouped_median(F.col("v")).alias("m")).collect()}
-    assert out["a"] is None          # NULL, not NaN
-    assert out["b"] == 2.0

@@ -4,9 +4,12 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.streaming.observe import fold_observed
+
+pytestmark = pytest.mark.usefixtures("temp_dirs_in_tmp_path")
 
 
 def _run(spark, in_dir, files_per_trigger):

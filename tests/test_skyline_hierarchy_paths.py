@@ -1,17 +1,11 @@
-"""Round-4 session-5 operators: skyline, BOM rollup, Bellman-Ford."""
+"""Round-4 session-5 operators: skyline and product quantization."""
 
 from __future__ import annotations
 
-import itertools
 import random
 
 from pyspark.sql import functions as F
 
-from spanner_data_validator_spark.operators.graph import bellman_ford
-from spanner_data_validator_spark.operators.hierarchy import (
-    bom_rollup,
-    resolve_roots,
-)
 from spanner_data_validator_spark.operators.skyline import pareto_frontier
 
 
@@ -62,128 +56,6 @@ def test_skyline_random_vs_brute(spark):
         _run_skyline(spark, pts)
 
 
-# --- BOM rollup --------------------------------------------------------
-
-def _forest_df(spark, rows):
-    return spark.createDataFrame(rows, "node long, parent long, qty long")
-
-
-def test_resolve_roots_two_level_products(spark):
-    #   1 -(2)-> 10 -(3)-> 100 ; 1 -(5)-> 11 ; 2 lone root
-    rows = [(1, None, None), (2, None, None),
-            (10, 1, 2), (11, 1, 5), (100, 10, 3)]
-    got = {r["node"]: (r["root"], r["prod"])
-           for r in resolve_roots(_forest_df(spark, rows),
-                                  max_depth=4).collect()}
-    assert got == {1: (1, 1), 2: (2, 1), 10: (1, 2), 11: (1, 5),
-                   100: (1, 6)}
-
-
-def test_bom_rollup_hand_case(spark):
-    rows = [(1, None, None), (2, None, None),
-            (10, 1, 2), (11, 1, 5), (100, 10, 3)]
-    got = {r["root"]: (r["n_nodes"], r["n_leaves"], r["leaf_qty_sum"])
-           for r in bom_rollup(_forest_df(spark, rows),
-                               max_depth=4).collect()}
-    # root 1: nodes {1,10,11,100}, leaves {11 (prod 5), 100 (prod 6)}
-    assert got == {1: (4, 2, 11), 2: (1, 1, 1)}
-
-
-def test_bom_rollup_deep_chain_exceeding_one_doubling(spark):
-    # depth-9 chain, qty 2 each: leaf prod = 2^9; needs >3 doubling rounds
-    rows = [(0, None, None)] + [(i, i - 1, 2) for i in range(1, 10)]
-    got = {r["root"]: (r["n_nodes"], r["n_leaves"], r["leaf_qty_sum"])
-           for r in bom_rollup(_forest_df(spark, rows),
-                               max_depth=9).collect()}
-    assert got == {0: (10, 1, 512)}
-
-
-def test_bom_rollup_random_vs_brute(spark):
-    rng = random.Random(42)
-    n = 80
-    rows = [(0, None, None)]
-    for i in range(1, n):
-        rows.append((i, rng.randrange(0, i), rng.randrange(1, 4)))
-    # brute force
-    parent = {r[0]: r[1] for r in rows}
-    qty = {r[0]: r[2] for r in rows}
-    children = set(r[1] for r in rows if r[1] is not None)
-
-    def prod(i):
-        p = 1
-        while parent[i] is not None:
-            p *= qty[i]
-            i = parent[i]
-        return p
-
-    leaves = [i for i in range(n) if i not in children]
-    expect = {0: (n, len(leaves), sum(prod(i) for i in leaves))}
-    got = {r["root"]: (r["n_nodes"], r["n_leaves"], r["leaf_qty_sum"])
-           for r in bom_rollup(_forest_df(spark, rows),
-                               max_depth=n).collect()}
-    assert got == expect
-
-
-# --- Bellman-Ford ------------------------------------------------------
-
-def _wedges(spark, triples):
-    return spark.createDataFrame(triples, "src long, dst long, w long")
-
-
-def _seeds(spark, nodes):
-    return spark.createDataFrame([(n,) for n in nodes], "node long")
-
-
-def test_bf_later_round_improves_distance(spark):
-    # direct hop 0->2 costs 10; two-hop via 1 costs 3: min wins
-    e = _wedges(spark, [(0, 2, 10), (0, 1, 1), (1, 2, 2)])
-    got = {r["node"]: r["dist"]
-           for r in bellman_ford(e, _seeds(spark, [0]), rounds=3,
-                                 undirected=False).collect()}
-    assert got == {0: 0, 1: 1, 2: 3}
-
-
-def test_bf_round_bound_limits_path_length(spark):
-    e = _wedges(spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1)])
-    got = {r["node"]: r["dist"]
-           for r in bellman_ford(e, _seeds(spark, [0]), rounds=2,
-                                 undirected=False).collect()}
-    assert got == {0: 0, 1: 1, 2: 2}  # node 3 is 3 hops away
-
-
-def test_bf_undirected_and_parallel_edge_min(spark):
-    e = _wedges(spark, [(0, 1, 7), (0, 1, 4), (1, 2, 1)])
-    got = {r["node"]: r["dist"]
-           for r in bellman_ford(e, _seeds(spark, [2]), rounds=4,
-                                 undirected=True).collect()}
-    assert got == {2: 0, 1: 1, 0: 5}
-
-
-def test_bf_random_vs_floyd_warshall(spark):
-    rng = random.Random(7)
-    n, m, rounds = 12, 30, 11
-    triples = [(rng.randrange(n), rng.randrange(n), rng.randrange(1, 9))
-               for _ in range(m)]
-    inf = float("inf")
-    d = [[inf] * n for _ in range(n)]
-    for i in range(n):
-        d[i][i] = 0
-    for s, t, w in triples:
-        d[s][t] = min(d[s][t], w)
-        d[t][s] = min(d[t][s], w)
-    for k, i, j in itertools.product(range(n), repeat=3):
-        if d[i][k] + d[k][j] < d[i][j]:
-            d[i][j] = d[i][k] + d[k][j]
-    seeds = [0, 5]
-    expect = {v: int(min(d[s][v] for s in seeds)) for v in range(n)
-              if min(d[s][v] for s in seeds) < inf}
-    got = {r["node"]: r["dist"]
-           for r in bellman_ford(_wedges(spark, triples),
-                                 _seeds(spark, seeds), rounds=rounds,
-                                 undirected=True).collect()}
-    assert got == expect
-
-
 # --- product quantization -----------------------------------------------
 
 def test_pq_assign_exact_and_tiebreak(spark):
@@ -211,18 +83,3 @@ def test_skyline_null_objectives_excluded(spark):
     got = {(r["x"], r["y"], r["n_points"])
            for r in pareto_frontier(df, FF.col("x"), FF.col("y")).collect()}
     assert got == {(1, 5, 1), (2, 3, 1)}
-
-
-def test_wide_skyline_matches_narrow_on_random_partitions(spark):
-    from spanner_data_validator_spark.operators.skyline import (
-        pareto_frontier_wide,
-    )
-
-    rng = random.Random(99)
-    pts = [(rng.randrange(1000), rng.randrange(1000)) for _ in range(500)]
-    pts += [pts[0], pts[1]]  # planted duplicates
-    df = spark.createDataFrame(pts, "x long, y long").repartition(7)
-    wide = {(r["x"], r["y"], r["n_points"])
-            for r in pareto_frontier_wide(
-                df, F.col("x"), F.col("y")).collect()}
-    assert wide == _brute_skyline(pts)

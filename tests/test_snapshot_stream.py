@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from spanner_data_validator_spark.sources import snapshot_stream as st
 from spanner_data_validator_spark.sources import snapshots as snap
 
+pytestmark = pytest.mark.usefixtures("temp_dirs_in_tmp_path")
+
 
 def _mk_table(spark, slices):
     d = tempfile.mkdtemp(prefix="sdv_t_snapst_") + "/t"

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.datagen.transcripts import (
@@ -24,6 +25,8 @@ from spanner_data_validator_spark.jobs.validate_transcripts import (
 )
 from spanner_data_validator_spark.sources import snapshot_stream as st
 from spanner_data_validator_spark.sources import snapshots as snap
+
+pytestmark = pytest.mark.usefixtures("temp_dirs_in_tmp_path")
 
 _DDL = ("conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.sources import snapshots as snap
 
+pytestmark = pytest.mark.usefixtures("temp_dirs_in_tmp_path")
+
 
 def _table(spark):
     d = tempfile.mkdtemp(prefix="sdv_t_snap_") + "/t"

@@ -7,7 +7,6 @@ Spark-per-example cost off the hot path.
 from __future__ import annotations
 
 import math
-from itertools import combinations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -15,9 +14,7 @@ from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.operators.stats import (
     ks_two_sample,
-    lag1_autocorr,
     robust_outlier_profile,
-    trend_slope,
 )
 
 
@@ -45,53 +42,6 @@ def test_mad_profile_matches_bruteforce(spark, groups):
         assert r["n"] == len(vs) and r["med"] == med and r["mad"] == mad
         assert r["n_outliers"] == sum(
             1 for v in s if abs(v - med) > 3.0 * mad)
-
-
-@given(grouped_series(min_len=2))
-@settings(max_examples=20, deadline=None)
-def test_trend_slope_matches_bruteforce(spark, groups):
-    rows = [(g, i, v) for g, vs in groups.items()
-            for i, v in enumerate(vs)]
-    df = spark.createDataFrame(rows, "grp string, x long, y long")
-    out = {r["grp"]: r for r in
-           trend_slope(df, "grp", F.col("x"), F.col("y")).collect()}
-    for g, vs in groups.items():
-        n = len(vs)
-        sx = sum(range(n)); sy = sum(vs)
-        sxy = sum(i * v for i, v in enumerate(vs))
-        sxx = sum(i * i for i in range(n))
-        num, den = n * sxy - sx * sy, n * sxx - sx * sx
-        r = out[g]
-        if den == 0:
-            assert r["slope"] is None
-        else:
-            assert math.isclose(r["slope"], num / den,
-                                rel_tol=1e-12, abs_tol=1e-12)
-
-
-@given(grouped_series(min_len=2))
-@settings(max_examples=20, deadline=None)
-def test_lag1_autocorr_matches_bruteforce(spark, groups):
-    rows = [(g, i, v) for g, vs in groups.items()
-            for i, v in enumerate(vs)]
-    df = spark.createDataFrame(rows, "grp string, t long, y long")
-    out = {r["grp"]: r for r in
-           lag1_autocorr(df, "grp", [F.col("t")], F.col("y")).collect()}
-    for g, vs in groups.items():
-        a, b = vs[:-1], vs[1:]
-        m = len(a)
-        sx, sy = sum(a), sum(b)
-        sxy = sum(x * y for x, y in zip(a, b))
-        vx = m * sum(x * x for x in a) - sx * sx
-        vy = m * sum(y * y for y in b) - sy * sy
-        r = out[g]
-        assert r["n_pairs"] == m
-        if vx == 0 or vy == 0:
-            assert r["acf1"] is None
-        else:
-            expect = (m * sxy - sx * sy) / math.sqrt(vx * vy)
-            assert math.isclose(r["acf1"], expect,
-                                rel_tol=1e-12, abs_tol=1e-12)
 
 
 @given(st.lists(st.integers(0, 20), min_size=1, max_size=25),
@@ -139,73 +89,6 @@ def test_cusum_changepoint_matches_bruteforce(spark, cases):
                             abs_tol=0)
 
 
-@given(grouped_series(min_len=1, max_len=10, lo=0, hi=500))
-@settings(max_examples=10, deadline=None)
-def test_time_weighted_mean_matches_bruteforce(spark, cases):
-    from datetime import datetime, timedelta
-    from spanner_data_validator_spark.operators.stats import (
-        time_weighted_mean,
-    )
-    # irregular gaps: i*i seconds + sub-second noise exercises the floor
-    t0 = datetime(2025, 1, 1)
-    rows = [(g, t0 + timedelta(seconds=i * i, milliseconds=137 * i), v, i)
-            for g, xs in cases.items() for i, v in enumerate(xs)]
-    df = spark.createDataFrame(rows, "g string, ts timestamp, v long, i long")
-    out = {r.g: r for r in time_weighted_mean(
-        df, "g", F.col("ts"), F.col("v"), F.col("i")).collect()}
-    for g, xs in cases.items():
-        if len(xs) < 2:
-            assert g not in out  # single point: no interval survives
-            continue
-        us = [i * i * 1_000_000 + 137_000 * i for i in range(len(xs))]
-        durs = [(us[i + 1] - us[i]) // 1_000_000 for i in range(len(xs) - 1)]
-        ws = sum(v * d for v, d in zip(xs, durs))
-        r = out[g]
-        assert r.n_intervals == len(xs) - 1
-        assert r.dur_s_sum == sum(durs)
-        assert r.weighted_sum == ws
-        assert r.twap_units == ws / sum(durs)
-
-
-@given(grouped_series(min_len=2, max_len=10, lo=-20, hi=20))
-@settings(max_examples=10, deadline=None)
-def test_theil_sen_matches_bruteforce(spark, cases):
-    from spanner_data_validator_spark.operators.stats import (
-        theil_sen_trend,
-    )
-    rows = [(g, i * 3, v) for g, xs in cases.items()
-            for i, v in enumerate(xs)]
-    df = spark.createDataFrame(rows, "g string, x long, y long")
-    out = {r.g: r for r in theil_sen_trend(
-        df, "g", F.col("x"), F.col("y")).collect()}
-    for g, xs in cases.items():
-        pts = [(i * 3, v) for i, v in enumerate(xs)]
-        pr = sorted(
-            ((b[1] - a[1]) / (b[0] - a[0]), b[1] - a[1], b[0] - a[0])
-            for a, b in combinations(pts, 2))
-        r = out[g]
-        assert r.n_pairs == len(pr)
-        assert r.med_slope == pr[(len(pr) + 1) // 2 - 1][0]
-
-
-@given(grouped_series(min_len=1, max_len=14, lo=0, hi=50),
-       st.sampled_from([0.0, 0.1, 0.25]))
-@settings(max_examples=10, deadline=None)
-def test_trimmed_mean_matches_bruteforce(spark, cases, frac):
-    from spanner_data_validator_spark.operators.stats import trimmed_mean
-    rows = [(g, v) for g, xs in cases.items() for v in xs]
-    df = spark.createDataFrame(rows, "g string, v long")
-    out = {r.g: r for r in trimmed_mean(
-        df, "g", F.col("v"), frac).collect()}
-    for g, xs in cases.items():
-        n = len(xs)
-        t = math.floor(float(n) * float(frac))
-        kept = sorted(xs)[t:n - t]
-        r = out[g]
-        assert (r.n, r.n_trim_each, r.kept_sum) == (n, t, sum(kept))
-        assert r.trimmed_mean == sum(kept) / len(kept)
-
-
 @given(st.lists(st.integers(0, 15), min_size=1, max_size=30),
        st.lists(st.integers(0, 15), min_size=1, max_size=30))
 @settings(max_examples=10, deadline=None)
@@ -224,27 +107,3 @@ def test_mann_whitney_matches_pair_counting(spark, a, b):
     assert r.two_u1 == two_u1
     assert r.two_u2 == 2 * len(a) * len(b) - two_u1
     assert r.auc == two_u1 / (2 * len(a) * len(b))
-
-
-@given(grouped_series(min_len=1, max_len=16, lo=0, hi=100))
-@settings(max_examples=10, deadline=None)
-def test_gini_matches_pairwise_definition(spark, cases):
-    from spanner_data_validator_spark.operators.stats import (
-        gini_coefficient,
-    )
-    rows = [(g, v) for g, xs in cases.items() for v in xs]
-    df = spark.createDataFrame(rows, "g string, v long")
-    out = {r.g: r for r in gini_coefficient(
-        df, "g", F.col("v")).collect()}
-    for g, xs in cases.items():
-        n, tot = len(xs), sum(xs)
-        num = sum((2 * i - n - 1) * v
-                  for i, v in enumerate(sorted(xs), start=1))
-        # rank identity: 2*num == sum over all ORDERED pairs |xi - xj|
-        assert 2 * num == sum(abs(a - b) for a in xs for b in xs)
-        r = out[g]
-        assert (r.n, r.total_units, r.gini_num) == (n, tot, num)
-        if tot > 0:
-            assert r.gini == num / (n * tot)
-        else:
-            assert r.gini is None or math.isnan(r.gini)

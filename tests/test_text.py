@@ -129,22 +129,6 @@ def test_char_ngrams_short_and_normalized(spark):
     assert got == [["a b"], [], []]
 
 
-def test_udaf_median_mad_exact(spark):
-    from spanner_data_validator_spark.functions.udx import (
-        grouped_mad,
-        grouped_median,
-    )
-    from pyspark.sql import functions as F
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("a", 100.0),
-         ("b", 2.0), ("b", 4.0)], "g string, v double")
-    out = {r.g: r for r in df.groupBy("g").agg(
-        grouped_median(F.col("v")).alias("med"),
-        grouped_mad(F.col("v")).alias("mad")).collect()}
-    assert out["a"].med == 3.0 and out["a"].mad == 2.0   # |1-3|,|3-3|,|100-3| -> med 2
-    assert out["b"].med == 3.0 and out["b"].mad == 1.0   # even count: mean of middle two
-
-
 def test_udtf_char_chunks_geometry(spark):
     from spanner_data_validator_spark.functions.udx import char_chunks_udtf
     spark.udtf.register("t_char_chunks", char_chunks_udtf())

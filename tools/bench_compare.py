@@ -4,8 +4,6 @@ Per BENCH.md's rule, one-shot per-query walls are smoke-numbers: single
 entries spike 5-10x under co-tenant load with zero code change. This tool
 makes the comparison honest mechanically:
 
-* reports the ceiling recorded IN each artifact (a run under a worse
-  ceiling is expected to read uniformly slower);
 * separates NEW entries from REGRESSED ones;
 * flags a regression only above --threshold (default 1.5x) AND > 1 s
   absolute (micro-entries jitter);
@@ -37,10 +35,8 @@ def main() -> int:
     qo, qn = old.get("queries", {}), new.get("queries", {})
 
     print(f"old: total={old.get('value')}s entries={len(qo)} "
-          f"ceiling={old.get('cpu_ceiling_4_16')} "
           f"stream={old.get('transcript', {}).get('stream_sec')}s")
     print(f"new: total={new.get('value')}s entries={len(qn)} "
-          f"ceiling={new.get('cpu_ceiling_4_16')} "
           f"stream={new.get('transcript', {}).get('stream_sec')}s")
 
     common = sorted(set(qo) & set(qn))
