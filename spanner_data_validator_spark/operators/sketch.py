@@ -501,3 +501,97 @@ SELECT k_used,
              END, 2) AS inter_est
 FROM st
 """
+
+
+# ---------------------------------------------------------------------------
+# Misra-Gries heavy hitters: sketch-pruned candidates, EXACT final counts
+# ---------------------------------------------------------------------------
+
+def misra_gries_candidates(df: DataFrame, item: str, k: int,
+                           weight: str | None = None) -> DataFrame:
+    """Per-partition Misra-Gries(k) summaries, unioned: a candidate set
+    that PROVABLY contains every item with global count > n/(k+1) —
+    or, with ``weight``, total weight > W/(k+1) (weights must be
+    positive; the decrement argument is weight-oblivious).
+
+    Proof sketch: partition p's MG(k) undercounts any item by at most
+    n_p/(k+1) (mergeable-summaries bound — merging batch value_counts and
+    subtracting the (k+1)-th largest preserves it), so an item absent
+    from EVERY partition summary has total count <= sum_p n_p/(k+1)
+    = n/(k+1). The output is order-dependent (which EXTRA low-count
+    items survive varies with partitioning) — callers must re-count
+    exactly (:func:`heavy_hitters_exact`); never report MG estimates.
+
+    Vectorized: each Arrow batch collapses to ``value_counts`` (or a
+    groupby weight sum — C speed) before touching the Python dict, so
+    per-item work is per *distinct* item per batch, not per row. State
+    is <= k counters per partition.
+    """
+    import pandas as pd
+
+    cols = [item] if weight is None else [item, weight]
+
+    def mg(batches):
+        from collections import Counter
+        import heapq
+
+        counters: Counter = Counter()
+        for pdf in batches:
+            if weight is None:
+                counters.update(pdf[item].value_counts().to_dict())
+            else:
+                counters.update(pdf.groupby(item)[weight].sum().to_dict())
+            if len(counters) > k:
+                kth = heapq.nlargest(k + 1, counters.values())[-1]
+                counters = Counter({key: v - kth
+                                    for key, v in counters.items()
+                                    if v - kth > 0})
+        yield pd.DataFrame({item: list(counters.keys())})
+
+    return df.select(*cols).mapInPandas(
+        mg, schema=df.select(item).schema)
+
+
+def heavy_hitters_exact(df: DataFrame, item: Column, k: int) -> DataFrame:
+    """All items with exact count > n/(k+1), found WITHOUT shuffling the
+    full distinct-item domain: a Misra-Gries candidate pass prunes the
+    domain to <= k*partitions items, then one semi-join + count verifies
+    candidates exactly. Output ``(item, cnt, n_total)`` is deterministic
+    (the exact-count filter kills the sketch's order-dependence: final =
+    {items: cnt*(k+1) > n} regardless of which extras MG emitted).
+
+    At 10^12 rows this is the standard two-pass shape: pass 1 is narrow
+    (map-side sketches, tiny exchange of candidates), pass 2 shuffles
+    only rows matching the broadcast candidate set. The exact groupBy
+    over ALL items — the naive plan — shuffles the full domain instead.
+    """
+    items = df.select(item.alias("it"))
+    # items feeds three branches (sketch, total count, verify join) — pin.
+    items = items.localCheckpoint(eager=True)
+    cand = misra_gries_candidates(items, "it", k).distinct()
+    total = items.agg(F.count(F.lit(1)).alias("n_total"))
+    counted = (items.join(F.broadcast(cand), "it")
+               .groupBy("it").agg(F.count(F.lit(1)).alias("cnt"))
+               .crossJoin(F.broadcast(total)))
+    return (counted.where(F.col("cnt") * F.lit(k + 1) > F.col("n_total"))
+            .select(F.col("it").alias("item"), "cnt", "n_total"))
+
+
+def weighted_heavy_hitters_exact(df: DataFrame, item: Column,
+                                 weight: Column, k: int) -> DataFrame:
+    """All items whose exact total ``weight`` exceeds W/(k+1) (W = global
+    weight sum) — the revenue/traffic-share twin of
+    :func:`heavy_hitters_exact`, same two-pass shape: weighted MG
+    candidates (provable superset), then one broadcast-gated exact
+    re-aggregation. Weights must be positive integers (cents, bytes,
+    rows) so sums are engine-exact. Output: (item, w_sum, w_total).
+    """
+    items = df.select(item.alias("it"), weight.alias("w"))
+    items = items.localCheckpoint(eager=True)
+    cand = misra_gries_candidates(items, "it", k, weight="w").distinct()
+    total = items.agg(F.sum("w").alias("w_total"))
+    counted = (items.join(F.broadcast(cand), "it")
+               .groupBy("it").agg(F.sum("w").alias("w_sum"))
+               .crossJoin(F.broadcast(total)))
+    return (counted.where(F.col("w_sum") * F.lit(k + 1) > F.col("w_total"))
+            .select(F.col("it").alias("item"), "w_sum", "w_total"))

@@ -1,20 +1,25 @@
-"""Key-skew pre-flight checks for a join.
+"""Skew-mitigated equi-join: salting for hot keys.
 
-Before an unfamiliar join at scale, two aggregates say whether it is safe:
-``key_skew_profile`` ranks the hottest keys by their share of the rows
-(one keyed aggregation and a top-N, never a global sort), and
-``join_cardinality`` computes the exact output row count of an equi-join
-from the two (key, count) tables without materializing the join. Both are
-profiling only; AQE's skew-join splitting (on in ``session.get_spark``)
-and ``comparator.tally_report``'s salting are what mitigate skew at run
-time.
+AQE's skew-join splitting (on by default in `session.get_spark`) handles
+sort-merge-join skew at runtime, but only between stages it can re-plan;
+salting is the static-plan mitigation that also works for streaming
+micro-batches and grouped aggregations (`comparator.tally_report` already
+salts aggregation). ``salted_join`` is the join-side primitive: the big
+(skewed) side scatters each row into one of ``salt_buckets`` sub-keys; the
+small side replicates each row ``salt_buckets`` times; the join key becomes
+(key, salt), splitting a hot key's rows across ``salt_buckets`` partitions.
+
+Cost model: small side grows x``salt_buckets`` (still tiny by assumption —
+if it weren't, broadcast wouldn't have been the alternative either); the
+big side never grows. Exactly-once pairing holds because each big row
+carries ONE salt and the small side covers every salt once.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -22,8 +27,8 @@ def key_skew_profile(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
     """Heavy-hitter profile of a join/aggregation key: the ``top_n`` most
     frequent values with their count, share of all rows, and skew factor
     (count / mean-count-per-key). Run this BEFORE choosing a join strategy —
-    a large skew_factor means the join needs AQE's skew split or salting;
-    share ~ 1/n_keys means plain hash partitioning is fine.
+    skew_factor >> salt_buckets means `salted_join` (or AQE skew split)
+    is required; share ~ 1/n_keys means plain hash partitioning is fine.
 
     Plan shape: one hash aggregation on ``key`` (map-side partial, the only
     full shuffle), a 1-row global aggregate broadcast back via crossJoin,
@@ -77,3 +82,109 @@ def join_cardinality(left: DataFrame, right: DataFrame,
         F.count(F.lit(1)).cast("long").alias("n_shared_keys"),
         F.coalesce(F.max("__rows"), F.lit(0)).cast("long")
          .alias("max_key_rows"))
+
+
+def salted_join(big: DataFrame, small: DataFrame, on: Sequence[str],
+                salt_buckets: int, *, big_salt_source: Column,
+                how: str = "inner") -> DataFrame:
+    """Join ``big`` to ``small`` on ``on`` with a salted key.
+
+    ``big_salt_source`` must be a deterministic per-row column on the big
+    side (a unique id, a timestamp) — the salt is a hash of it, so reruns
+    produce identical partition assignment (never rand(): a task retry
+    would re-roll and double/drop rows).
+
+    ``how`` may be ``inner`` or ``left``: an unmatched big row appears once
+    either way. ``right``/``full`` are rejected — the small side is
+    replicated per salt BEFORE the join, so each unmatched small row would
+    emit ``salt_buckets`` null-extended copies instead of one.
+    """
+    if how not in ("inner", "left"):
+        raise ValueError(
+            f"how={how!r} unsupported: the salt-replicated small side would "
+            "emit one null-extended row per salt for unmatched keys; use "
+            "'inner' or 'left'")
+    keys = list(on)
+    b = big.withColumn(
+        "__salt", F.pmod(F.xxhash64(big_salt_source), F.lit(salt_buckets)))
+    s = small.withColumn(
+        "__salt",
+        F.explode(F.sequence(F.lit(0).cast("long"),
+                             F.lit(salt_buckets - 1).cast("long"))))
+    return b.join(s, on=[*keys, "__salt"], how=how).drop("__salt")
+
+
+def hot_keys(df: DataFrame, key: str | Sequence[str], *,
+             min_count: int | None = None,
+             min_frac: float | None = None) -> DataFrame:
+    """The keys that deserve mitigation: exact per-key counts (two-level
+    hash agg — partial map-side, the exchange carries distinct keys, not
+    rows) filtered to ``count >= min_count`` and/or
+    ``count >= min_frac * total``. Output: key column(s) + ``key_n``.
+
+    The threshold comparison is BIGINT-exact: ``min_frac`` is applied as
+    ``key_n * DENOM >= round(min_frac*DENOM) * total`` so an oracle can
+    replay it without float representability edges.
+    """
+    if min_count is None and min_frac is None:
+        raise ValueError("give min_count and/or min_frac")
+    keys = [key] if isinstance(key, str) else list(key)
+    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("key_n"))
+    cond = None
+    if min_count is not None:
+        cond = F.col("key_n") >= F.lit(int(min_count))
+    if min_frac is not None:
+        denom = 1_000_000
+        scaled = int(round(min_frac * denom))
+        total = df.groupBy().agg(F.count(F.lit(1)).alias("__total"))
+        counts = counts.crossJoin(F.broadcast(total))
+        frac_cond = (F.col("key_n") * F.lit(denom)
+                     >= F.lit(scaled) * F.col("__total"))
+        cond = frac_cond if cond is None else (cond & frac_cond)
+    return counts.where(cond).drop("__total")
+
+
+def adaptive_salted_join(big: DataFrame, small: DataFrame, on: str,
+                         hot: DataFrame, salt_buckets: int, *,
+                         big_salt_source: Column,
+                         how: str = "inner") -> DataFrame:
+    """:func:`salted_join`, but the small side replicates ONLY the hot
+    keys — the form that survives when the build side is too large to
+    replicate wholesale.
+
+    Uniform salting multiplies the entire small side by ``salt_buckets``;
+    at 100 TB the "small" side of a validator join is often merely
+    *smaller* (a dimension in the millions), and x16 of that is real
+    money. Here ``hot`` (from :func:`hot_keys`, or any tiny key list —
+    broadcast both times it is touched) marks the keys whose rows fan
+    out; every cold key keeps salt 0 on both sides, so the join's shuffle
+    is byte-identical to the unsalted plan for the cold 99.99% and the
+    hot keys split across ``salt_buckets`` partitions. Output rows equal
+    the plain join's exactly (each big row carries one salt; the small
+    side covers that salt exactly once, hot or cold).
+    """
+    if how not in ("inner", "left"):
+        raise ValueError(
+            f"how={how!r} unsupported: the salt-replicated small side would "
+            "emit one null-extended row per salt for unmatched hot keys; "
+            "use 'inner' or 'left'")
+    hot_marked = F.broadcast(
+        hot.select(F.col(on)).distinct().withColumn("__hot", F.lit(True)))
+    b = (big.join(hot_marked, on, "left")
+         .withColumn(
+             "__salt",
+             F.when(F.col("__hot").isNotNull(),
+                    F.pmod(F.xxhash64(big_salt_source),
+                           F.lit(salt_buckets)))
+             .otherwise(F.lit(0).cast("long")))
+         .drop("__hot"))
+    s = (small.join(hot_marked, on, "left")
+         .withColumn(
+             "__salt",
+             F.explode(
+                 F.when(F.col("__hot").isNotNull(),
+                        F.sequence(F.lit(0).cast("long"),
+                                   F.lit(salt_buckets - 1).cast("long")))
+                 .otherwise(F.array(F.lit(0).cast("long")))))
+         .drop("__hot"))
+    return b.join(s, on=[on, "__salt"], how=how).drop("__salt")

@@ -239,6 +239,117 @@ def fd_profile(df: DataFrame,
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
+def _ols_terms(df: DataFrame, group: str, x: Column, y: Column) -> DataFrame:
+    """Exact per-group second-order sums for OLS / Pearson on INTEGER
+    series: n, sx, sy, sxy, sxx, syy — plus the centering offset x0 =
+    per-group min(x) (centering keeps every per-row product inside
+    int64; the final n*sxy - sx*sy combination runs in DECIMAL(38,0),
+    Spark's exact 128-bit integer arithmetic, matching DuckDB's
+    HUGEINT). One group-keyed exchange: the min(x) window shares the
+    aggregation's partitioning.
+    """
+    wg = Window.partitionBy(group)
+    base = (df.where(x.isNotNull() & y.isNotNull())
+            .select(F.col(group), x.alias("__x"), y.alias("__y")))
+    c = (base.withColumn("__x0", F.min("__x").over(wg))
+         .withColumn("__xc", F.col("__x") - F.col("__x0")))
+    return (c.groupBy(group)
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.max("__x0").alias("x0"),
+                 F.sum("__xc").alias("sx"),
+                 F.sum("__y").alias("sy"),
+                 F.sum(F.col("__xc") * F.col("__y")).alias("sxy"),
+                 F.sum(F.col("__xc") * F.col("__xc")).alias("sxx"),
+                 F.sum(F.col("__y") * F.col("__y")).alias("syy")))
+
+
+_D38 = "decimal(38,0)"
+
+
+def trend_slope(df: DataFrame, group: str, x: Column, y: Column) -> DataFrame:
+    """Per-group exact simple linear regression of integer ``y`` on
+    integer ``x`` (e.g. cents on epoch-seconds): one row per group with
+    ``(group, n, slope, intercept)``.
+
+    slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2) with every sum an exact
+    integer (see ``_ols_terms``); the two divisions are single double
+    ops on exactly-represented integers — bit-identical in any engine.
+    The intercept is reported at the UNCENTERED origin:
+    (Sy - slope*(Sx + n*x0)) / n.
+    """
+    t = _ols_terms(df, group, x, y)
+    num = (F.col("n").cast(_D38) * F.col("sxy").cast(_D38)
+           - F.col("sx").cast(_D38) * F.col("sy").cast(_D38))
+    den = (F.col("n").cast(_D38) * F.col("sxx").cast(_D38)
+           - F.col("sx").cast(_D38) * F.col("sx").cast(_D38))
+    slope = F.when(den == 0, F.lit(None).cast("double")).otherwise(
+        num.cast("double") / den.cast("double"))
+    sx_full = (F.col("sx").cast(_D38)
+               + F.col("n").cast(_D38) * F.col("x0").cast(_D38))
+    intercept = ((F.col("sy").cast("double")
+                  - slope * sx_full.cast("double"))
+                 / F.col("n").cast("double"))
+    return t.select(group, "n", slope.alias("slope"),
+                    intercept.alias("intercept"))
+
+
+def lag1_autocorr(df: DataFrame, group: str, order: Sequence[Column],
+                  y: Column) -> DataFrame:
+    """Per-group lag-1 autocorrelation of an integer series: the Pearson
+    correlation of (y_t, y_{t+1}) pairs in the total order given by
+    ``order`` (include a unique tiebreak column — equal timestamps
+    otherwise pair nondeterministically and diverge per engine). One
+    row per group: ``(group, n_pairs, acf1)``.
+
+    r = (m*Sxy - Sx*Sy) / sqrt((m*Sxx - Sx^2) * (m*Syy - Sy^2)) over the
+    m = n-1 adjacent pairs; every sum is an exact integer and sqrt is
+    IEEE correctly-rounded, so the double is engine-exact. Same one
+    group-keyed exchange as ``_ols_terms`` (the lag window shares it).
+    """
+    w = Window.partitionBy(group).orderBy(*order)
+    pairs = (df.where(y.isNotNull())
+             .select(F.col(group), *order, y.alias("__b"))
+             .withColumn("__a", F.lag("__b").over(w))
+             .where(F.col("__a").isNotNull()))
+    t = _ols_terms(pairs, group, F.col("__a"), F.col("__b"))
+    m = F.col("n").cast(_D38)
+    cov = m * F.col("sxy").cast(_D38) - F.col("sx").cast(_D38) * F.col("sy").cast(_D38)
+    vx = m * F.col("sxx").cast(_D38) - F.col("sx").cast(_D38) * F.col("sx").cast(_D38)
+    vy = m * F.col("syy").cast(_D38) - F.col("sy").cast(_D38) * F.col("sy").cast(_D38)
+    r = F.when((vx == 0) | (vy == 0), F.lit(None).cast("double")).otherwise(
+        cov.cast("double")
+        / F.sqrt(vx.cast("double") * vy.cast("double")))
+    return t.select(group, F.col("n").alias("n_pairs"), r.alias("acf1"))
+
+
+def weighted_median(df: DataFrame, group: str, value: Column,
+                    weight: Column) -> DataFrame:
+    """Per-group exact weighted (lower) median: the smallest value v such
+    that the cumulative weight of rows <= v reaches half the group's
+    total weight (2*cum >= W). One row per group:
+    ``(group, w_total, w_median)``.
+
+    Weights must be positive integers so the cumulative comparison
+    2*cum >= W is exact integer arithmetic in every engine. The running
+    weight sum and the group total share ONE group-keyed exchange; the
+    pick is the first ordered row crossing the half-weight line, made
+    total by ordering on value alone (ties share v, so the picked VALUE
+    is deterministic even though the crossing row may differ).
+    """
+    wg = Window.partitionBy(group)
+    wo = wg.orderBy(F.col("__v").asc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    base = (df.where(value.isNotNull() & weight.isNotNull())
+            .select(F.col(group), value.alias("__v"),
+                    weight.alias("__w")))
+    c = (base.withColumn("__cum", F.sum("__w").over(wo))
+         .withColumn("__tot", F.sum("__w").over(wg)))
+    hit = c.where(F.lit(2) * F.col("__cum") >= F.col("__tot"))
+    return (hit.groupBy(group)
+            .agg(F.max("__tot").alias("w_total"),
+                 F.min("__v").alias("w_median")))
+
+
 def cusum_changepoint(series: DataFrame, group: str, order: Column,
                       value_units: Column) -> DataFrame:
     """Exact CUSUM change-point scan per group: over the ordered series

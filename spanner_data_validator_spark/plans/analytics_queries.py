@@ -1,10 +1,13 @@
 """Data-quality analytics of the oracle-paired registry.
 
 The checks and monitors a validation run leans on besides the key-by-key
-compare: distinct-count sketches (KMV, HLL), column profiles, distribution
-drift and quantiles, key-skew and join-cardinality pre-flights, CEP
-absence alerts and the statistical monitors (KS, Mann-Whitney U, robust
-outliers, Benford, functional dependencies, CUSUM). Registered into
+compare: distinct-count sketches (KMV, HLL), exact heavy hitters, column
+profiles and the equi-depth histogram, distribution drift and quantiles,
+key-skew and join-cardinality pre-flights, CEP absence alerts and the
+statistical monitors (KS, Mann-Whitney U, robust outliers, Benford,
+functional dependencies, CUSUM, trend slope, lag-1 autocorrelation,
+weighted median). Also still here: the salted-join and Z-order layout
+queries, general analytics that no validator path reaches. Registered into
 ``demo_queries.QUERIES`` / ``ORACLES`` on import.
 """
 
@@ -13,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from spanner_data_validator_spark.operators.layout import zorder_key, zorder_sql_expr
 from spanner_data_validator_spark.operators.skew import key_skew_profile
 from spanner_data_validator_spark.plans.demo_queries import (
     _benford_case,
@@ -380,6 +384,71 @@ def q_kmv_distinct_by_type(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
+# exact heavy hitters via Misra-Gries candidates (operators/sketch.py)
+# ---------------------------------------------------------------------------
+
+@register("heavy_hitters_tri", """
+WITH it AS (
+  SELECT CAST(floor(sqrt(CAST(event_id % 250000 AS DOUBLE))) AS BIGINT)
+           AS item
+  FROM events
+),
+n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM it),
+c AS (SELECT item, CAST(count(*) AS BIGINT) AS cnt FROM it GROUP BY item)
+SELECT c.item, c.cnt, n.n_total
+FROM c, n WHERE c.cnt * 257 > n.n_total
+""")
+def q_heavy_hitters_tri(spark, sf_dir):
+    """Sketch-accelerated EXACT heavy hitters (count > n/257) via
+    Misra-Gries(256) candidate pruning + exact verification
+    (operators/sketch.heavy_hitters_exact). The item key is a planted
+    triangular distribution — floor(sqrt(event_id % 250000)) makes key v
+    appear ~2v+1 times — because the corpus's natural keys are uniform
+    by construction; at sf0.1 the ~317-key domain exceeds the 256
+    counters, so the sketch genuinely prunes. The exact re-count makes
+    the output independent of which extra candidates MG emitted, so the
+    oracle is plain SQL."""
+    from spanner_data_validator_spark.operators.sketch import (
+        heavy_hitters_exact,
+    )
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    item = F.floor(F.sqrt((F.col("event_id") % 250000).cast("double")))
+    return heavy_hitters_exact(ev, item, 256)
+
+
+@register("weighted_heavy_hitters_tri", """
+WITH it AS (
+  SELECT CAST(floor(sqrt(CAST(event_id % 250000 AS DOUBLE))) AS BIGINT)
+           AS item,
+         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS w
+  FROM events WHERE value IS NOT NULL
+),
+t AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM it),
+c AS (SELECT item, CAST(sum(w) AS BIGINT) AS w_sum FROM it GROUP BY item)
+SELECT c.item, c.w_sum, t.w_total
+FROM c, t WHERE c.w_sum * 257 > t.w_total
+""")
+def q_weighted_heavy_hitters_tri(spark, sf_dir):
+    """Weighted (revenue-share) exact heavy hitters: items carrying more
+    than 1/257 of total cents, via weighted Misra-Gries candidates +
+    exact re-aggregation (operators/sketch.weighted_heavy_hitters_exact).
+    Same planted triangular key domain as heavy_hitters_tri; the weight
+    generalization keeps the superset guarantee because MG's decrement
+    argument is weight-oblivious, and the exact second pass again erases
+    the sketch's partitioning order-dependence."""
+    from spanner_data_validator_spark.operators.sketch import (
+        weighted_heavy_hitters_exact,
+    )
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
+        .where(F.col("value").isNotNull())
+    item = F.floor(F.sqrt((F.col("event_id") % 250000).cast("double")))
+    w = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+    return weighted_heavy_hitters_exact(ev, item, w, 256)
+
+
+# ---------------------------------------------------------------------------
 # join key skew profile (operators/skew.py)
 # ---------------------------------------------------------------------------
 
@@ -429,6 +498,158 @@ def q_join_cardinality_estimate(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return join_cardinality(
         ev, ev.where(F.col("event_type") != "error"), ["user_id"])
+
+
+# ---------------------------------------------------------------------------
+# salted joins (operators/skew.py): uniform and hot-key-only salting
+# ---------------------------------------------------------------------------
+
+@register("salted_join_totals", """
+WITH dim AS (
+  SELECT DISTINCT event_type,
+         CAST(length(event_type) AS BIGINT) AS weight
+  FROM events
+)
+SELECT e.event_type, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(weight) AS BIGINT) AS total_weight
+FROM events e JOIN dim USING (event_type)
+GROUP BY e.event_type
+""")
+def q_salted_join_totals(spark, sf_dir):
+    """Skew-salted dimension join (skew.salted_join): the fact side scatters
+    each row into 8 hash-of-event_id salt buckets, the 5-row dim replicates
+    x8, and the hot join key ('event_type' has only 5 values — every key is
+    a hot key) spreads across 40 sub-keys instead of 5 partitions. Results
+    are identical to the plain join — asserted by the oracle, which runs
+    the unsalted equivalent."""
+    from spanner_data_validator_spark.operators.skew import salted_join
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_type", "event_id")
+    dim = (ev.select("event_type").distinct()
+             .withColumn("weight", F.length("event_type").cast("long")))
+    joined = salted_join(ev, dim, ["event_type"], 8,
+                         big_salt_source=F.col("event_id"))
+    return joined.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("weight").cast("long").alias("total_weight"))
+
+
+@register("adaptive_salted_join_agg", """
+WITH big AS (
+  SELECT CASE WHEN user_id % 10 < 4 THEN -1 ELSE user_id END AS k, user_id
+  FROM events
+),
+dim AS (SELECT DISTINCT k, k % 7 AS seg FROM big)
+SELECT seg,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(user_id) AS BIGINT) AS uid_sum
+FROM big JOIN dim USING (k)
+GROUP BY seg
+""")
+def q_adaptive_salted_join_agg(spark, sf_dir):
+    """Hot-key-adaptive salted join: ~40% of events collapse onto one join
+    key; hot_keys (exact two-level count, BIGINT-exact fraction threshold)
+    detects it, and adaptive_salted_join fans ONLY that key across 16
+    salts — the cold tail's shuffle stays byte-identical to the unsalted
+    plan and the dimension side replicates just the hot rows (uniform
+    salting would 16x the whole dimension). Output equals the plain join
+    bit-for-bit; the oracle IS the plain join."""
+    from spanner_data_validator_spark.operators.skew import (
+        adaptive_salted_join,
+        hot_keys,
+    )
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        F.expr("CASE WHEN user_id % 10 < 4 THEN -1 ELSE user_id END")
+        .alias("k"), "user_id", "event_id")
+    dim = ev.select("k").distinct().withColumn("seg", F.expr("k % 7"))
+    hot = hot_keys(ev, "k", min_frac=0.01)
+    joined = adaptive_salted_join(ev, dim, "k", hot, 16,
+                                  big_salt_source=F.col("event_id"))
+    return joined.groupBy("seg").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("user_id").alias("uid_sum"))
+
+
+# ---------------------------------------------------------------------------
+# data layout (operators/layout.py): Z-order key, equi-depth buckets
+# ---------------------------------------------------------------------------
+
+_ZORDER_ORACLE_EXPR = zorder_sql_expr(
+    ["(user_id % 256)", "EXTRACT(hour FROM ts)"], bits=8)
+
+
+
+@register("zorder_layout_buckets", f"""
+WITH z AS (SELECT {_ZORDER_ORACLE_EXPR} AS zkey, user_id FROM events)
+SELECT (zkey >> 6) AS z_bucket,
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+FROM z GROUP BY z_bucket
+""")
+def q_zorder_layout_buckets(spark, sf_dir):
+    """Morton (Z-order) key over two dimensions — (user_id mod 256,
+    hour-of-day) — bucketed to show the multi-dim clustering a zordered
+    write gives parquet min/max pruning. The key is bits*k pure-codegen ALU
+    ops per row (layout.zorder_key); the oracle computes the bit-identical
+    interleave via layout.zorder_sql_expr — one generator renders both
+    engines' arithmetic. At 100 TB this key feeds
+    layout.write_zordered's repartitionByRange so every interleaved
+    dimension keeps ~1/k of its pruning power."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    z = ev.select(
+        zorder_key([F.pmod(F.col("user_id"), F.lit(256)),
+                    F.hour("ts").cast("long")], bits=8).alias("zkey"),
+        "user_id")
+    return (z.groupBy(F.shiftright(F.col("zkey"), 6).alias("z_bucket"))
+             .agg(F.count(F.lit(1)).alias("n_events"),
+                  F.countDistinct("user_id").alias("n_users")))
+
+
+@register("equidepth_hist_price", """
+WITH c AS (
+  SELECT CAST(floor(o_totalprice * 1.0e2 + 5.0e-1) AS BIGINT) AS cents,
+         o_orderkey
+  FROM orders
+),
+t AS (
+  SELECT cents,
+         CAST(ntile(16) OVER (ORDER BY cents, o_orderkey) AS INT) AS bucket
+  FROM c
+)
+SELECT bucket, CAST(count(*) AS BIGINT) AS n,
+       CAST(min(cents) AS BIGINT) AS lo,
+       CAST(max(cents) AS BIGINT) AS hi,
+       CAST(sum(cents) AS BIGINT) AS cents_sum
+FROM t GROUP BY bucket ORDER BY bucket
+""")
+def q_equidepth_hist_price(spark, sf_dir):
+    """Equi-depth (equal-height) 16-bucket histogram of order value —
+    the optimizer-statistics histogram form, built on
+    layout.distributed_ntile so the global quantile bucketing runs with
+    NO single-task window (value-range bins shard the rank; NTILE fill
+    rule closed-form from (rank, n)). Per bucket: count and exact cents
+    min/max/sum. The oracle is plain NTILE — same buckets bit-for-bit,
+    (cents, orderkey) total order making ties deterministic."""
+    from spanner_data_validator_spark.operators.layout import (
+        distributed_ntile,
+    )
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cents = F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)) \
+             .cast("long")
+    c = o.select(cents.alias("cents"), "o_orderkey")
+    t = distributed_ntile(
+        c, F.col("cents"),
+        [F.col("cents").asc(), F.col("o_orderkey").asc()], 16,
+        out_col="bucket")
+    return (t.groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.min("cents").alias("lo"),
+                 F.max("cents").alias("hi"),
+                 F.sum("cents").alias("cents_sum"))
+            .orderBy("bucket"))
 
 
 # ---------------------------------------------------------------------------
@@ -873,6 +1094,131 @@ def q_mann_whitney_value(spark, sf_dir):
     return mann_whitney_u(base, F.col("v"),
                           F.col("event_type") == "purchase",
                           F.col("event_type") == "click")
+
+
+@register("trend_slope_by_type", """
+WITH base AS (
+  SELECT event_type AS g, epoch_us(ts) // 1000000 AS x,
+         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS y
+  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+),
+c AS (
+  SELECT g, x - min(x) OVER (PARTITION BY g) AS xc,
+         min(x) OVER (PARTITION BY g) AS x0, y
+  FROM base
+),
+t AS (
+  SELECT g, CAST(count(*) AS BIGINT) AS n, CAST(max(x0) AS BIGINT) AS x0,
+         sum(xc) AS sx, sum(y) AS sy, sum(xc * y) AS sxy,
+         sum(xc * xc) AS sxx
+  FROM c GROUP BY g
+),
+s AS (
+  SELECT g, n, x0, sx, sy,
+         CASE WHEN n * sxx - sx * sx = 0 THEN NULL
+              ELSE CAST(n * sxy - sx * sy AS DOUBLE)
+                   / CAST(n * sxx - sx * sx AS DOUBLE) END AS slope
+  FROM t
+)
+SELECT g AS event_type, n, slope,
+       (CAST(sy AS DOUBLE) - slope * CAST(sx + n * x0 AS DOUBLE))
+         / CAST(n AS DOUBLE) AS intercept
+FROM s
+""")
+def q_trend_slope_by_type(spark, sf_dir):
+    """Exact per-event-type OLS trend of value (as integer cents) on
+    event time (epoch seconds) — the drift detector a validator points
+    at a metric column (operators/stats.trend_slope). Every sum is an
+    exact integer (per-group min-centering keeps products in int64; the
+    n*Sxy - Sx*Sy combination runs in DECIMAL(38,0) = DuckDB HUGEINT),
+    so slope/intercept are single double ops on exact ints —
+    bit-identical across engines. One group-keyed exchange."""
+    from spanner_data_validator_spark.operators.stats import trend_slope
+
+    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
+          .withColumn("ts", F.col("ts").cast("timestamp")))
+    x = F.expr("unix_micros(ts) div 1000000")
+    y = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+    return trend_slope(ev.where(F.col("ts").isNotNull()),
+                       "event_type", x, y)
+
+
+@register("acf1_by_type", """
+WITH base AS (
+  SELECT event_type AS g, ts, event_id,
+         CAST(floor(value * 1.0e2 + 5.0e-1) AS BIGINT) AS y
+  FROM events WHERE value IS NOT NULL
+),
+p AS (
+  SELECT g, lag(y) OVER (PARTITION BY g ORDER BY ts, event_id) AS a,
+         y AS b
+  FROM base
+),
+f AS (SELECT g, a, b FROM p WHERE a IS NOT NULL),
+c AS (SELECT g, a - min(a) OVER (PARTITION BY g) AS xc, b FROM f),
+t AS (
+  SELECT g, CAST(count(*) AS BIGINT) AS m,
+         sum(xc) AS sx, sum(b) AS sy, sum(xc * b) AS sxy,
+         sum(xc * xc) AS sxx, sum(b * b) AS syy
+  FROM c GROUP BY g
+)
+SELECT g AS event_type, m AS n_pairs,
+       CASE WHEN (m * sxx - sx * sx = 0) OR (m * syy - sy * sy = 0)
+            THEN NULL
+            ELSE CAST(m * sxy - sx * sy AS DOUBLE)
+                 / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)
+                        * CAST(m * syy - sy * sy AS DOUBLE)) END AS acf1
+FROM t
+""")
+def q_acf1_by_type(spark, sf_dir):
+    """Per-event-type lag-1 autocorrelation of the value series in event
+    order (operators/stats.lag1_autocorr) — the serial-dependence probe
+    (a near-1 ACF on a supposedly independent metric flags duplicated or
+    interpolated rows). Pearson over adjacent pairs in exact integer
+    sums; (ts, event_id) makes the pairing order total so both engines
+    pair identical rows. sqrt is IEEE correctly-rounded — engine-exact."""
+    from spanner_data_validator_spark.operators.stats import lag1_autocorr
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    y = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+    return lag1_autocorr(ev, "event_type",
+                         [F.col("ts"), F.col("event_id")], y)
+
+
+@register("weighted_median_price", """
+WITH base AS (
+  SELECT l_returnflag AS grp,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS v,
+         CAST(l_quantity AS BIGINT) AS w
+  FROM lineitem
+),
+c AS (
+  SELECT grp, v, w,
+         CAST(sum(w) OVER (PARTITION BY grp ORDER BY v) AS BIGINT) AS cum,
+         CAST(sum(w) OVER (PARTITION BY grp) AS BIGINT) AS tot
+  FROM base
+)
+SELECT grp AS l_returnflag, CAST(max(tot) AS BIGINT) AS w_total,
+       CAST(min(v) AS BIGINT) AS w_median
+FROM c WHERE 2 * cum >= tot GROUP BY grp
+""")
+def q_weighted_median_price(spark, sf_dir):
+    """Exact quantity-weighted median price (integer cents) per return
+    flag (operators/stats.weighted_median) — the 'median unit actually
+    shipped' number an unweighted median misrepresents when line sizes
+    vary. 2*cum >= W is pure integer arithmetic; the running weight sum
+    and the group total share one exchange. DuckDB's RANGE-framed
+    running sum over equal values matches the lower-median pick because
+    ties share the value."""
+    from spanner_data_validator_spark.operators.stats import weighted_median
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return weighted_median(
+        li.select(F.col("l_returnflag"),
+                  F.round(F.col("l_extendedprice") * 100).cast("long")
+                  .alias("cents"),
+                  F.col("l_quantity").cast("long").alias("qty")),
+        "l_returnflag", F.col("cents"), F.col("qty"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Property-based tests for the integrity and quantize operators.
+"""Property-based tests for the integrity / quantize / layout operators.
 
 Each property pits the distributed implementation against a brute-force
 Python reference on small random inputs (hypothesis generates the corpus,
@@ -8,6 +8,16 @@ from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+
+from spanner_data_validator_spark.operators.layout import zorder_key  # noqa: F401  (spark fixture needed)
+
+
+def _morton(vals: list[int], bits: int) -> int:
+    z = 0
+    for i, v in enumerate(vals):
+        for b in range(bits):
+            z |= ((v >> b) & 1) << (b * len(vals) + i)
+    return z
 
 
 # ---- sequence_contiguity vs brute force -----------------------------------
@@ -65,3 +75,20 @@ def test_quantize_roundtrip_error_bound(spark, vecs):
         step = m / 127.0
         for x, q in zip(orig, row.q):
             assert abs(x - q / row.scale) <= step / 2 + 1e-9 * m
+
+
+# ---- zorder bijectivity + reference parity ---------------------------------
+
+@given(st.lists(st.tuples(st.integers(0, 255), st.integers(0, 255)),
+                min_size=1, max_size=40, unique=True))
+@settings(max_examples=15, deadline=None)
+def test_zorder_key_bijective_and_matches_reference(spark, pts):
+    from pyspark.sql import functions as F
+    df = spark.createDataFrame(pts, "x long, y long")
+    got = [(r.x, r.y, r.z) for r in df.select(
+        "x", "y", zorder_key([F.col("x"), F.col("y")], bits=8).alias("z"))
+        .collect()]
+    zs = [z for _, _, z in got]
+    assert len(set(zs)) == len(pts)            # injective on the domain
+    for x, y, z in got:
+        assert z == _morton([x, y], 8)

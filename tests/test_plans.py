@@ -135,6 +135,18 @@ def test_hive_partition_filter_prunes_directories(spark, tmp_path):
     assert m and "p" in m.group(1)
 
 
+def test_heavy_hitters_verify_join_broadcasts_candidates(spark):
+    from spanner_data_validator_spark.operators.sketch import (
+        heavy_hitters_exact,
+    )
+    df = spark.createDataFrame([(i % 7,) for i in range(500)], "it long")
+    out = heavy_hitters_exact(df, F.col("it"), 3)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # pass 2 must join rows against the (tiny) candidate set broadcast-side
+    assert "BroadcastHashJoin" in plan
+
+
 def test_ks_prefix_sum_reads_input_once(spark):
     from spanner_data_validator_spark.operators.stats import ks_two_sample
     df = spark.createDataFrame(

@@ -6,6 +6,8 @@ import math
 from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.operators.stats import (
+    lag1_autocorr,
+    trend_slope,
     benford_expected,
     benford_profile,
     fd_profile,
@@ -135,3 +137,76 @@ def test_fd_profile_pure_dependency(spark):
     row = r[("code", "label")]
     assert row["holds"] and row["n_groups"] == 3
     assert row["max_rhs_per_lhs"] == 1
+
+
+def test_trend_slope_matches_closed_form(spark):
+    # y = 3x + 7 with an integer disturbance pattern; exact OLS is checkable
+    # in Python integer arithmetic
+    pts = [(i, 3 * i + 7 + ((-1) ** i) * (i % 5)) for i in range(200)]
+    df = spark.createDataFrame([("g", x, y) for x, y in pts],
+                               "grp string, x long, y long")
+    out = trend_slope(df, "grp", F.col("x"), F.col("y")).collect()[0]
+    n = len(pts)
+    sx = sum(x for x, _ in pts); sy = sum(y for _, y in pts)
+    sxy = sum(x * y for x, y in pts); sxx = sum(x * x for x, _ in pts)
+    num, den = n * sxy - sx * sy, n * sxx - sx * sx
+    assert out["n"] == n
+    assert math.isclose(out["slope"], num / den, rel_tol=1e-12)
+    assert math.isclose(out["intercept"],
+                        (sy - (num / den) * sx) / n, rel_tol=1e-9)
+
+
+def test_trend_slope_degenerate_x(spark):
+    df = spark.createDataFrame([("g", 5, i) for i in range(10)],
+                               "grp string, x long, y long")
+    out = trend_slope(df, "grp", F.col("x"), F.col("y")).collect()[0]
+    assert out["slope"] is None
+
+
+def test_lag1_autocorr_alternating_and_constant(spark):
+    # strictly alternating series -> acf1 == -1; constant -> NULL (0 var)
+    rows = [("alt", i, 10 if i % 2 == 0 else 20) for i in range(50)]
+    rows += [("const", i, 7) for i in range(10)]
+    df = spark.createDataFrame(rows, "grp string, t long, y long")
+    out = {r["grp"]: r for r in
+           lag1_autocorr(df, "grp", [F.col("t")], F.col("y")).collect()}
+    assert math.isclose(out["alt"]["acf1"], -1.0, rel_tol=1e-12)
+    assert out["alt"]["n_pairs"] == 49
+    assert out["const"]["acf1"] is None
+
+
+def test_lag1_autocorr_matches_numpy(spark):
+    import numpy as np
+
+    ys = [(i * 17) % 23 + (i % 3) for i in range(80)]
+    df = spark.createDataFrame([("g", i, y) for i, y in enumerate(ys)],
+                               "grp string, t long, y long")
+    out = lag1_autocorr(df, "grp", [F.col("t")], F.col("y")).collect()[0]
+    a, b = np.array(ys[:-1], float), np.array(ys[1:], float)
+    assert math.isclose(out["acf1"], np.corrcoef(a, b)[0, 1],
+                        rel_tol=1e-10)
+
+
+def test_weighted_median_crosses_half_weight(spark):
+    from spanner_data_validator_spark.operators.stats import weighted_median
+    # weights: value 1 w=1, value 2 w=2, value 3 w=5 -> W=8, half=4,
+    # cum(1)=1, cum(2)=3, cum(3)=8 -> weighted median 3; unweighted is 2
+    df = spark.createDataFrame(
+        [("g", 1, 1), ("g", 2, 2), ("g", 3, 5)],
+        "grp string, v long, w long")
+    out = weighted_median(df, "grp", F.col("v"), F.col("w")).collect()[0]
+    assert out["w_total"] == 8 and out["w_median"] == 3
+
+
+def test_weighted_median_ties_and_exact_half(spark):
+    from spanner_data_validator_spark.operators.stats import weighted_median
+    # exact half crossing: v=1 w=2, v=2 w=2 -> 2*cum(1)=4 >= 4 -> median 1
+    # (lower weighted median); tie values share cum at group end
+    df = spark.createDataFrame(
+        [("a", 1, 2), ("a", 2, 2),
+         ("b", 5, 1), ("b", 5, 1), ("b", 9, 1)],
+        "grp string, v long, w long")
+    out = {r["grp"]: r for r in weighted_median(
+        df, "grp", F.col("v"), F.col("w")).collect()}
+    assert out["a"]["w_median"] == 1
+    assert out["b"]["w_median"] == 5

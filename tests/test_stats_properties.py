@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 
 from spanner_data_validator_spark.operators.stats import (
     ks_two_sample,
+    lag1_autocorr,
     robust_outlier_profile,
+    trend_slope,
 )
 
 
@@ -42,6 +44,53 @@ def test_mad_profile_matches_bruteforce(spark, groups):
         assert r["n"] == len(vs) and r["med"] == med and r["mad"] == mad
         assert r["n_outliers"] == sum(
             1 for v in s if abs(v - med) > 3.0 * mad)
+
+
+@given(grouped_series(min_len=2))
+@settings(max_examples=20, deadline=None)
+def test_trend_slope_matches_bruteforce(spark, groups):
+    rows = [(g, i, v) for g, vs in groups.items()
+            for i, v in enumerate(vs)]
+    df = spark.createDataFrame(rows, "grp string, x long, y long")
+    out = {r["grp"]: r for r in
+           trend_slope(df, "grp", F.col("x"), F.col("y")).collect()}
+    for g, vs in groups.items():
+        n = len(vs)
+        sx = sum(range(n)); sy = sum(vs)
+        sxy = sum(i * v for i, v in enumerate(vs))
+        sxx = sum(i * i for i in range(n))
+        num, den = n * sxy - sx * sy, n * sxx - sx * sx
+        r = out[g]
+        if den == 0:
+            assert r["slope"] is None
+        else:
+            assert math.isclose(r["slope"], num / den,
+                                rel_tol=1e-12, abs_tol=1e-12)
+
+
+@given(grouped_series(min_len=2))
+@settings(max_examples=20, deadline=None)
+def test_lag1_autocorr_matches_bruteforce(spark, groups):
+    rows = [(g, i, v) for g, vs in groups.items()
+            for i, v in enumerate(vs)]
+    df = spark.createDataFrame(rows, "grp string, t long, y long")
+    out = {r["grp"]: r for r in
+           lag1_autocorr(df, "grp", [F.col("t")], F.col("y")).collect()}
+    for g, vs in groups.items():
+        a, b = vs[:-1], vs[1:]
+        m = len(a)
+        sx, sy = sum(a), sum(b)
+        sxy = sum(x * y for x, y in zip(a, b))
+        vx = m * sum(x * x for x in a) - sx * sx
+        vy = m * sum(y * y for y in b) - sy * sy
+        r = out[g]
+        assert r["n_pairs"] == m
+        if vx == 0 or vy == 0:
+            assert r["acf1"] is None
+        else:
+            expect = (m * sxy - sx * sy) / math.sqrt(vx * vy)
+            assert math.isclose(r["acf1"], expect,
+                                rel_tol=1e-12, abs_tol=1e-12)
 
 
 @given(st.lists(st.integers(0, 20), min_size=1, max_size=25),
