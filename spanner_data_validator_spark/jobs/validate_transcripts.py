@@ -54,6 +54,7 @@ from spanner_data_validator_spark.session import (
     PROVIDER_CONF,
     STATE_STORE_CLASSES,
     StateLayout,
+    checkpoint_conf,
     scoped_conf,
     state_heap,
     state_layout,
@@ -182,31 +183,48 @@ def run_streaming_validation(
     heap store gets one partition per ``KEYS_PER_STATE_PARTITION`` (150 k)
     keys, up to ``spark.sql.shuffle.partitions``, while it fits a quarter
     of the heap the session has (:func:`session.state_heap`). Measured on
-    4 cores, stream pass plus ``report()``, median of 3 (seconds):
+    4 cores, stream pass plus ``report()``, median of 3 (seconds); the
+    67 k and 264 k rows with local checkpoints on the FileSystem-API
+    manager (below), the 661 k and 1.65 M rows before it, on Spark's
+    default manager and a busier host:
 
     ==========  ============  ======  ======  ======
     turns       RocksDB / 4   heap 4  heap 2  heap 1
     ==========  ============  ======  ======  ======
-    67 k        9.44          6.75    6.10    6.02
-    264 k       16.9          10.6    9.54    10.8
+    67 k        4.05          3.06    2.92    3.22
+    264 k       8.41          3.98    3.74    4.94
     661 k       21.8          9.34    9.96    12.8
     1.65 M      47.6          17.1    22.4    31.1
     ==========  ============  ======  ======  ======
 
-    The best partition count flips from 1 to 2 near 150 k keys and to 4
-    (all cores here) near 600 k. These flip sizes hold for 4 cores; on more
-    (``PROBED_CORES``) the heap store keeps the session's partition count.
+    The best partition count is 2 at 264 k keys and 4 (all cores here)
+    from about 600 k. At 67 k, 1 and 2 partitions are within a few
+    percent (over 8 alternating reps, medians 3.08 and 3.01 s): the flip
+    from 1 to 2 now lies near or below 67 k keys, and moving it gains
+    little there, so the rule keeps ``KEYS_PER_STATE_PARTITION``. These
+    flip sizes hold for 4 cores; on
+    more (``PROBED_CORES``) the heap store keeps the session's count.
     A checkpoint keeps the layout it was sized
     with at its first start: Spark restores both from the offset log, so a
     restart runs with the checkpoint's layout, whatever the rule says now.
     The layout the query runs with is on the returned sink
     (``state_store``, ``state_partitions``, ``projected_keys``).
 
-    The caller's session keeps its own conf: the layout is set only while
-    ``start()`` builds the query. Spark 4.1 clones the session into the
-    query in that call (the StreamExecution constructor's
-    ``cloneSession()``), and the first batch writes the clone's layout to
-    the offset log.
+    **Checkpoint file manager.** A checkpoint on the local file system is
+    written through Spark's FileSystem-API manager
+    (:func:`session.checkpoint_conf`), which spawns no ``readlink`` per
+    file call as the default FileContext one does without libhadoop.
+
+    The caller's session keeps its own conf: the layout and the manager
+    are set only while the query is built. Spark 4.1 clones the session
+    into the query in ``start()`` (the StreamExecution constructor's
+    ``cloneSession()``), and the offset and commit logs and the state
+    stores take their conf from that call; the first batch writes the
+    clone's layout to the offset log. The file sources build their
+    metadata logs later, in the stream thread, from the caller's session,
+    so an ``availableNow`` run holds the conf until the run ends; a
+    continuous run hands the caller its conf back when ``start()``
+    returns, and its source logs use Spark's default manager.
     """
     if dedup_keys is not True:
         raise ValueError("dedup_keys must be True: both engines keep one row per key")
@@ -247,19 +265,22 @@ def run_streaming_validation(
     else:
         # continuous path: the query runs on; the caller owns it from here
         writer = writer.trigger(processingTime=trigger_interval)
-    with scoped_conf(spark, {} if pinned else layout.conf()):
+    conf = {**({} if pinned else layout.conf()), **checkpoint_conf(spark, checkpoint_dir)}
+    with scoped_conf(spark, conf):
         q = writer.start()
-    if available_now:
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            # an availableNow query still running at the deadline means
-            # the sink holds PARTIAL commits — surface it instead of
-            # returning silently-incomplete totals (callers would report
-            # undercounts)
-            q.stop()
-            raise TimeoutError(
-                f"availableNow streaming validation did not drain within "
-                f"{timeout_s}s; sink at {out_dir} holds partial commits")
+        if available_now:
+            # the file sources build their metadata logs from this session
+            # in the stream thread, after start() has returned
+            q.awaitTermination(timeout_s)
+    if available_now and q.isActive:
+        # an availableNow query still running at the deadline means
+        # the sink holds PARTIAL commits — surface it instead of
+        # returning silently-incomplete totals (callers would report
+        # undercounts)
+        q.stop()
+        raise TimeoutError(
+            f"availableNow streaming validation did not drain within "
+            f"{timeout_s}s; sink at {out_dir} holds partial commits")
     return sink
 
 

@@ -24,7 +24,11 @@ from spanner_data_validator_spark.plans.demo_queries import (
     transcripts_from_events,
     work_dir,
 )
-from spanner_data_validator_spark.session import PARTITIONS_CONF, scoped_conf
+from spanner_data_validator_spark.session import (
+    PARTITIONS_CONF,
+    checkpoint_conf,
+    scoped_conf,
+)
 from spanner_data_validator_spark.sources import pyds as _pyds
 
 
@@ -313,7 +317,8 @@ def q_stream_snapshot_validate(spark, sf_dir):
                 .withWatermark("ts", "10 minutes"))
 
     out = classify_transcripts(tail(src_t), tail(tgt_t))
-    with scoped_conf(spark, _DEMO_PARTITIONS):
+    with scoped_conf(spark, {**_DEMO_PARTITIONS,
+                             **checkpoint_conf(spark, f"{work}/ckpt")}):
         q = (out.select("status")
              .writeStream.format("parquet").option("path", f"{work}/out")
              .option("checkpointLocation", f"{work}/ckpt")
@@ -1033,10 +1038,11 @@ def q_pyds_stream_incremental(spark, sf_dir):
            .agg(F.count(F.lit(1)).alias("n"))
            .select(F.unix_millis(F.col("w.start")).alias("window_start_ms"),
                    "role", "n"))
-    q = (agg.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(processingTime="0 seconds").start())
+    with scoped_conf(spark, checkpoint_conf(spark, f"{work}/ckpt")):
+        q = (agg.writeStream.format("parquet")
+             .option("path", f"{work}/out")
+             .option("checkpointLocation", f"{work}/ckpt")
+             .outputMode("append").trigger(processingTime="0 seconds").start())
     _pyds.drain_stream(q, _PYDS_CONVS * _PYDS_TURNS + 1)
     return spark.read.parquet(f"{work}/out")
 
@@ -1319,10 +1325,11 @@ def q_stream_session_conv_digest(spark, sf_dir):
                 F.min(F.unix_millis("ts")).alias("first_ms"),
                 F.max(F.unix_millis("ts")).alias("last_ms"))
            .select("conv_id", "n_turns", "fp_xor", "first_ms", "last_ms"))
-    q = (agg.writeStream.format("parquet")
-         .option("path", f"{work}/out")
-         .option("checkpointLocation", f"{work}/ckpt")
-         .outputMode("append").trigger(processingTime="0 seconds").start())
+    with scoped_conf(spark, checkpoint_conf(spark, f"{work}/ckpt")):
+        q = (agg.writeStream.format("parquet")
+             .option("path", f"{work}/out")
+             .option("checkpointLocation", f"{work}/ckpt")
+             .outputMode("append").trigger(processingTime="0 seconds").start())
     _pyds.drain_stream(q, convs * turns + 1)
     return spark.read.parquet(f"{work}/out")
 

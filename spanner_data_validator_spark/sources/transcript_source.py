@@ -104,11 +104,14 @@ def parquet_rows(spark: SparkSession, path: str) -> int | None:
     """Rows that a parquet file stream over ``path`` would read now, from
     file metadata only (a listing and the parquet footers).
 
-    Spark's file index lists ``path`` recursively in the JVM, skipping names
-    that start with ``_`` or ``.`` at every level, and hands back every file
-    and the bytes of them all in a constant number of calls. Past
-    ``_MAX_FOOTERS`` files, the rest count at the footers' rows per byte.
-    None when ``path`` cannot be listed or a footer cannot be read.
+    Spark's file index lists ``path`` in the JVM as the file-stream source
+    of :func:`stream_transcripts` does: the files directly under it, or under
+    ``k=v`` partition directories; other subdirectories are not read, and
+    names that start with ``_`` or ``.`` are skipped at every level. It
+    hands back every file and the bytes of them all in a constant number of
+    calls. Past ``_MAX_FOOTERS`` files, the rest count at the footers' rows
+    per byte. None when ``path`` cannot be listed or a footer cannot be
+    read.
     """
     from py4j.protocol import Py4JError
     from pyspark.errors import PySparkException
@@ -117,8 +120,7 @@ def parquet_rows(spark: SparkSession, path: str) -> int | None:
     conf = spark._jsc.hadoopConfiguration()
     try:
         # a given schema keeps Spark from reading a footer to infer one
-        relation = (spark.read.schema(TRANSCRIPT_SCHEMA)
-                    .option("recursiveFileLookup", "true").parquet(path))
+        relation = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)
         index = relation._jdf.queryExecution().analyzed().relation().location()
         listed = jvm.org.apache.hadoop.util.StringUtils.join(
             "\n", index.inputFiles())

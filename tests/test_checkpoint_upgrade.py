@@ -17,6 +17,9 @@ Laws (also documented in README "Checkpoint upgrade compatibility"):
   D. changing the watermark delay and the trigger — ACCEPTED
   E. restarting where the state layout rule picks another provider and
      partition count — ACCEPTED, and the checkpoint's own layout is kept
+  F. restarting under another checkpoint file manager (Spark's default
+     FileContext one ⇄ the FileSystem-API one the validation stream picks
+     for a local checkpoint) — ACCEPTED
 """
 from __future__ import annotations
 
@@ -36,6 +39,7 @@ from spanner_data_validator_spark.jobs.validate_transcripts import (
     sentinel_filter,
 )
 from spanner_data_validator_spark.session import (
+    CHECKPOINT_MANAGER_CONF,
     PARTITIONS_CONF,
     StateLayout,
     scoped_conf,
@@ -234,3 +238,59 @@ def test_e_layout_rule_does_not_resize_a_started_checkpoint(spark, tmp_path):
     files = [f.name for f in (tmp_path / "ckpt" / "state").rglob("*")]
     assert any(f.endswith(".changelog") for f in files)
     assert not any(f.endswith(".delta") for f in files)
+
+
+FILE_CONTEXT_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                        "FileContextBasedCheckpointFileManager")
+
+
+@pytest.mark.parametrize("first", ["file_context", "rule"])
+def test_f_checkpoint_manager_change_is_accepted(spark, tmp_path, first):
+    """A checkpoint holding join state, started under Spark's default
+    FileContext manager, restarts through ``run_streaming_validation``,
+    whose rule picks the FileSystem-API manager for a local checkpoint; a
+    checkpoint that rule started restarts under the FileContext manager.
+    Either way the held outer rows emit: the files on disk are the same and
+    the offset log does not pin the manager."""
+    pair = gen_transcript_pair(n_convs=40, seed=13, hot_convs=0, dup_rows=0,
+                               late_fraction=0.0, mismatch_rate=0.05,
+                               source_only_rate=0.05, target_only_rate=0.05)
+    src_dir, tgt_dir = str(tmp_path / "src"), str(tmp_path / "tgt")
+    ckpt = str(tmp_path / "ckpt")
+    write_transcripts(pair.source, spark, src_dir, n_files=2)
+    write_transcripts(pair.target, spark, tgt_dir, n_files=2)
+
+    def under_file_context(out):
+        df = classify_transcripts(stream_transcripts(spark, src_dir),
+                                  stream_transcripts(spark, tgt_dir))
+        sink = ExactlyOnceParquetSink(out)
+        with scoped_conf(spark, {CHECKPOINT_MANAGER_CONF: FILE_CONTEXT_MANAGER}):
+            q = (df.writeStream.outputMode("append")
+                 .option("checkpointLocation", ckpt)
+                 .foreachBatch(sink).trigger(availableNow=True).start())
+            q.awaitTermination(300)
+        assert not q.isActive
+        manager = q._jsq.streamingQuery().offsetLog().fileManager()
+        assert manager.getClass().getName() == FILE_CONTEXT_MANAGER
+        return sink.read_committed(spark)
+
+    def under_rule(out):
+        return run_streaming_validation(spark, src_dir, tgt_dir, out, ckpt
+                                        ).read_rows(spark)
+
+    def counts(df):
+        return {r["status"]: r["n"] for r in
+                df.groupBy("status").agg(F.count("*").alias("n")).collect()}
+
+    runs = [under_file_context, under_rule]
+    if first == "rule":
+        runs.reverse()
+    run1 = counts(runs[0](str(tmp_path / "out1")))
+    assert run1.get("SOURCE_ONLY", 0) < pair.expected["SOURCE_ONLY"]
+    append_sentinel(spark, src_dir, tgt_dir)
+    out2 = counts(runs[1](str(tmp_path / "out2")))
+    held_so = pair.expected["SOURCE_ONLY"] - run1.get("SOURCE_ONLY", 0)
+    assert held_so > 0
+    assert out2["SOURCE_ONLY"] == held_so
+    assert {s: run1.get(s, 0) + out2.get(s, 0) for s in pair.expected} \
+        == pair.expected

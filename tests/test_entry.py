@@ -9,11 +9,11 @@ import pathlib
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(_REPO))
 
 import __spark_entry__ as e  # noqa: E402
 
-_REPO = pathlib.Path(__file__).resolve().parents[1]
 _PKG = "spanner_data_validator_spark"
 _PLANS = f"{_PKG}.plans"
 # CORRECTNESS_r05.json rows whose whole computation is Spark built-ins
